@@ -666,7 +666,8 @@ object Quality {
             java.nio.file.Files.delete(feed)
           }
           val summary = graft.streaming.StreamingOps
-            .remediateDocumentQuarantine(s, base,
+            .remediateQuarantine(s,
+              graft.streaming.IndexGroup.documents(base),
               fix = df => df.withColumn("lang",
                 when(col("lang").isin("en", "fr", "es", "de"),
                   col("lang")).otherwise(lit("en"))),

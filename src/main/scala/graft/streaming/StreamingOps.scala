@@ -1,6 +1,8 @@
 package graft.streaming
 
 import graft.Tables
+import graft.operators.TextOps
+import graft.operators.TextOps.{FoldGuard, MaintenancePolicy}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -648,7 +650,7 @@ object StreamingOps {
     * record. Contrast the DELETE contract, where keeping the hash row
     * is the point (a redelivered copy of deleted content must not
     * re-index). Filtered against BOTH member registries; stamp them
-    * together with [[holdDocuments]].
+    * together with [[hold]].
     * Atomicity caveat scales with the table count (the
     * streamingAnnIngest note): a crash mid-batch can leave a partial
     * family until the ledger replays; a transactional format closes
@@ -662,7 +664,7 @@ object StreamingOps {
       maxQuarantineRate: Double = 1.0): Unit = {
     require(maxQuarantineRate >= 0.0 && maxQuarantineRate <= 1.0,
       "streamingDocumentIngest: maxQuarantineRate must be in [0, 1]")
-    import org.apache.spark.sql.expressions.Window
+    val g = IndexGroup.documents(base)
     val bandT = s"${base}_band"
     val bm25T = s"${base}_bm25"
     val statsT = s"${base}_bm25_stats"
@@ -672,13 +674,10 @@ object StreamingOps {
     // AUDIT sink must never reset the family (they are re-derivable;
     // their caller-session caches refresh explicitly below)
     ledgeredIngest(spark, s"$sfDir/documents.parquet", base,
-      refresh = Seq(bandT, bm25T, statsT, hashT),
+      refresh = g.ingestTables,
       append = (batch, _, bid) => {
         val s = batch.sparkSession
-        val unheld = graft.operators.TextOps.exceptHeld(
-          graft.operators.TextOps.exceptHeld(batch.toDF(), s,
-            bm25T + "_hold", "doc_id"),
-          s, bandT + "_hold", "doc_id")
+        val unheld = exceptHeld(s, g, batch.toDF())
         // EXPLICIT admission gate (r17): the declared Quality rules run
         // before the built-in curate gate — every rejected row lands in
         // `<base>_quarantine` NAMED with the rules it failed, and the
@@ -728,135 +727,79 @@ object StreamingOps {
       // would crash the batch, and nobody is there to answer it —
       // anchoring keeps both the stream AND any pinned manifest
       // snapshots serving (the operator-facing verbs keep Refuse)
-      afterBatch = s => maintain.foreach { p =>
-        graft.operators.TextOps.maintainBm25(s, bm25T, p,
-          graft.operators.TextOps.FoldGuard.Anchor)
-        graft.operators.TextOps.maintainBand(s, bandT, p,
-          graft.operators.TextOps.FoldGuard.Anchor)
-        ()
-      })
+      afterBatch = s => maintain.foreach(p =>
+        g.members.foreach(_.maintainBatch(s, p))))
     // the hook may have compacted/vacuumed the tombstone lists in the
     // batch session — refresh the caller's view of them too, and of
     // the admission audit sinks (a replay dynamically OVERWRITES their
     // batch partitions; a stale caller listing would read dropped
     // part files)
-    (Seq(s"${bm25T}_del", s"${bandT}_del") ++
-        (if (admission.nonEmpty)
-          Seq(s"${base}_quarantine", s"${base}_admission") else Nil))
-      .foreach(t => if (spark.catalog.tableExists(t))
-        spark.catalog.refreshTable(t))
+    refreshMembers(spark, g, if (admission.nonEmpty) sinkPair(base) else Nil)
   }
 
-  /** ONE-CALL DOCUMENT DELETE — the removal twin of
-    * [[streamingDocumentIngest]]: one call tombstones the ids across
-    * the family it maintains (band index + BM25 postings, with the
-    * exact stats subtraction). The `_hashes` dedup rows are KEPT
-    * deliberately: deletion is terminal per id/content (the ingest
-    * contract), so a redelivered copy of a deleted document must
-    * still be recognized and skipped, not re-indexed.
-    */
+  /** ONE-CALL DOCUMENT DELETE: [[delete]] on the document group at
+    * `base` — the entry point the document store's callers use. */
   def deleteDocuments(spark: SparkSession, base: String,
-      ids: org.apache.spark.sql.DataFrame): Unit = {
-    graft.operators.TextOps.deleteBandDocs(spark, s"${base}_band", ids)
-    graft.operators.TextOps.deleteBm25Docs(spark, s"${base}_bm25",
-      s"${base}_bm25_stats", ids)
-  }
+      ids: org.apache.spark.sql.DataFrame): Unit =
+    delete(spark, IndexGroup.documents(base), ids)
 
-  /** ONE-CALL DOCUMENT HOLD — the legal-hold twin of
-    * [[deleteDocuments]]: stamp the id set into BOTH member
-    * registries (`<base>_band_hold`, `<base>_bm25_hold`) so the
-    * unified ingest's top-of-loop gate and every member-level
-    * append/upsert entry agree. Holds gate INGEST; pair with
-    * [[deleteDocuments]] to remove already-indexed content, then
-    * vacuum freely — the hold survives the fold. */
-  def holdDocuments(spark: SparkSession, base: String,
+  // ---- group verbs: one definition per verb over an IndexGroup ----
+  // ---- (IndexGroup.documents / IndexGroup.vectors)             ----
+
+  /** ONE-CALL GROUP DELETE — the removal twin of the unified ingest:
+    * one call tombstones the ids across every member family (the BM25
+    * member with the exact stats subtraction). A document group's
+    * `_hashes` dedup rows are KEPT deliberately: deletion is terminal
+    * per id/content (the ingest contract), so a redelivered copy of a
+    * deleted document must still be recognized and skipped, not
+    * re-indexed.
+    */
+  def delete(spark: SparkSession, g: IndexGroup,
+      ids: org.apache.spark.sql.DataFrame): Unit =
+    g.members.foreach(_.delete(spark, ids))
+
+  /** ONE-CALL LEGAL HOLD — the hold twin of [[delete]]: stamp the id
+    * set into EVERY member registry (`<member>_hold`) so the unified
+    * ingest's top-of-loop gate and every member-level append/upsert
+    * entry agree. Holds gate INGEST; pair with [[delete]] to remove
+    * already-indexed content, then vacuum freely — the hold survives
+    * the fold.
+    */
+  def hold(spark: SparkSession, g: IndexGroup,
       ids: org.apache.spark.sql.DataFrame): Unit = {
-    graft.operators.TextOps.holdBandDocs(spark, s"${base}_band", ids)
-    graft.operators.TextOps.holdBm25Docs(spark, s"${base}_bm25", ids)
+    g.members.foreach(_.hold(spark, ids))
     // the hold contract is NO TRACE — and the quarantine audit sinks
-    // hold rejected rows' FULL CONTENT. A document quarantined on
-    // arrival and legally held afterwards would otherwise keep its
-    // text in `<base>_quarantine` for the sink's whole retention
-    // (r18). Scrub the held ids from both document-side sinks; the
+    // hold rejected rows' FULL CONTENT. A row quarantined on arrival
+    // and legally held afterwards would otherwise keep its content in
+    // `<base>_quarantine` for the sink's whole retention (r18). Scrub
+    // the held ids from the group's ingest and CDC sinks; the
     // `_admission` METRICS keep their counts (numbers, not content —
     // history stays truthful). Replays stay scrubbed: every gated
     // write path hold-filters BEFORE the gate, so a re-derived slice
     // can never re-admit held content into the audit trail.
-    Seq(s"${base}_quarantine", s"${base}_ups_quarantine").foreach { t =>
-      scrubQuarantine(spark, t, ids, "doc_id"); ()
+    g.sinkPrefixes.foreach { p =>
+      scrubQuarantine(spark, s"${p}_quarantine", ids, g.idCol); ()
     }
   }
 
-  /** Fold both document-index tombstone lists into the stored files. */
-  def vacuumDocuments(spark: SparkSession, base: String,
-      guard: graft.operators.TextOps.FoldGuard =
-        graft.operators.TextOps.FoldGuard.Refuse): Unit = {
-    graft.operators.TextOps.vacuumBandIndex(spark, s"${base}_band",
-      guard)
-    graft.operators.TextOps.vacuumIndex(spark, s"${base}_bm25_del",
-      Seq(s"${base}_bm25"), "doc_id", guard)
-  }
+  /** Fold every member family's tombstones into its stored files. */
+  def vacuum(spark: SparkSession, g: IndexGroup,
+      guard: FoldGuard = FoldGuard.Refuse): Unit =
+    g.members.foreach(_.vacuum(spark, guard))
 
-  /** ONE-CALL VECTOR DELETE — the removal twin of
-    * [[streamingAllIndexIngest]]: tombstone the vec_ids across every
-    * family the unified ingest maintains. */
-  def deleteVectors(spark: SparkSession, base: String,
-      ids: org.apache.spark.sql.DataFrame): Unit = {
-    graft.operators.AnnIndex.delete(spark, s"${base}_ann", ids)
-    graft.operators.BqIndex.delete(spark, s"${base}_bq", ids)
-    graft.operators.SqIndex.delete(spark, s"${base}_sq", ids)
-    graft.operators.PqIndex.delete(spark, s"${base}_pq", ids)
-    graft.operators.IvfIndex.delete(spark, s"${base}_ivf", ids)
-  }
-
-  /** ONE-CALL VECTOR HOLD — the legal-hold twin of [[deleteVectors]]:
-    * stamp the id set into every family's registry so a held vec_id
-    * can never (re-)enter any of the five indexes the unified ingest
-    * maintains. */
-  def holdVectors(spark: SparkSession, base: String,
-      ids: org.apache.spark.sql.DataFrame): Unit = {
-    graft.operators.AnnIndex.hold(spark, s"${base}_ann", ids)
-    graft.operators.BqIndex.hold(spark, s"${base}_bq", ids)
-    graft.operators.SqIndex.hold(spark, s"${base}_sq", ids)
-    graft.operators.PqIndex.hold(spark, s"${base}_pq", ids)
-    graft.operators.IvfIndex.hold(spark, s"${base}_ivf", ids)
-    // no-trace scrub of the vector-side quarantine sinks — the
-    // holdDocuments rationale: a quarantined embedding is content too
-    Seq(s"${base}_quarantine", s"${base}_vups_quarantine").foreach { t =>
-      scrubQuarantine(spark, t, ids, "vec_id"); ()
-    }
-  }
-
-  /** Fold every vector family's tombstones into the stored files. */
-  def vacuumVectors(spark: SparkSession, base: String,
-      guard: graft.operators.TextOps.FoldGuard =
-        graft.operators.TextOps.FoldGuard.Refuse): Unit = {
-    graft.operators.AnnIndex.vacuum(spark, s"${base}_ann", guard)
-    graft.operators.BqIndex.vacuum(spark, s"${base}_bq", guard)
-    graft.operators.SqIndex.vacuum(spark, s"${base}_sq", guard)
-    graft.operators.PqIndex.vacuum(spark, s"${base}_pq", guard)
-    graft.operators.IvfIndex.vacuum(spark, s"${base}_ivf", guard)
-  }
-
-  // ---- point-in-time backup/restore for stream-fed families (r15) --
-
-  /** The three replay streams a unified DOCUMENT family owes state
-    * to: the corpus ingest itself, its CDC upsert twin, its CDC
-    * delete twin. Each owns `<name>_ledger` + the `<name>_ck`
-    * checkpoint directory. */
-  private def docStreams(base: String): Seq[String] =
-    Seq(base, s"${base}_ups", s"${base}_dels")
-
-  /** Vector twin of [[docStreams]]. */
-  private def vecStreams(base: String): Seq[String] =
-    Seq(base, s"${base}_vups", s"${base}_vdels")
-
-  private val vecFamilies = Seq("_ann", "_bq", "_sq", "_pq", "_ivf")
+  // ---- point-in-time backup/restore for stream-fed groups (r15) --
 
   private def ckDir(spark: SparkSession, name: String) =
     new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"),
       name.toLowerCase + "_ck")
+
+  /** A stream checkpoint's backup directory `<ck>_bak_<tag>`. */
+  private def ckBak(spark: SparkSession, name: String,
+      tag: String): org.apache.hadoop.fs.Path = {
+    val d = ckDir(spark, name)
+    new org.apache.hadoop.fs.Path(d.getParent, s"${d.getName}_bak_$tag")
+  }
 
   /** Snapshot a stream's checkpoint DIRECTORY to `<ck>_bak_<tag>` —
     * the piece TableOps-level backup can't cover. Checkpoint and
@@ -867,8 +810,7 @@ object StreamingOps {
     val src = ckDir(spark, name)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = src.getFileSystem(conf)
-    val dst = new org.apache.hadoop.fs.Path(src.getParent,
-      s"${src.getName}_bak_$tag")
+    val dst = ckBak(spark, name, tag)
     if (fs.exists(src)) {
       // stage the copy, promote by rename (ADVICE r15 #3 applied to
       // the backup side too): a crash mid-copy must never leave a
@@ -899,8 +841,7 @@ object StreamingOps {
     val live = ckDir(spark, name)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = live.getFileSystem(conf)
-    val bak = new org.apache.hadoop.fs.Path(live.getParent,
-      s"${live.getName}_bak_$tag")
+    val bak = ckBak(spark, name, tag)
     val hadLive = fs.exists(live)
     if (fs.exists(bak)) {
       // stage the copy NEXT TO the live directory, then promote by
@@ -926,239 +867,259 @@ object StreamingOps {
     } else None
   }
 
-  /** POINT-IN-TIME BACKUP of a unified document family — the
-    * stream-aware composition of [[graft.operators.TextOps.backupIndex]]:
-    * both member families (band + BM25, every existing sibling), the
-    * shared `_hashes` exact-dedup store, and each replay stream's
-    * ledger TABLE + checkpoint DIRECTORY as a pair. With the
-    * checkpoints inside the snapshot, [[restoreDocuments]] +
+  /** POINT-IN-TIME BACKUP of a unified group — the stream-aware
+    * composition of [[TextOps.backupIndex]]: every existing member
+    * family (every existing sibling; [[TextOps.BackupSiblings]] covers
+    * the trained PQ codebook / IVF centroids), the group's state tables
+    * (the `_hashes` store, each replay stream's ledger) and each
+    * stream's checkpoint DIRECTORY, ledger and checkpoint as a pair.
+    * With the checkpoints inside the snapshot, [[restore]] +
     * re-invoking the three streams replays EXACTLY the files that
     * arrived after the snapshot — no duplicate appends (pre-snapshot
     * files stay consumed in the restored checkpoint), no lost CDC
     * (post-snapshot upserts/deletes re-deliver) — converging to the
-    * state a never-crashed family would hold. Run it like fsck:
-    * between stream invocations (AvailableNow streams terminate per
-    * call, so "quiesced" is the natural state) under the build lock.
-    * The `_hold` registries stay OUTSIDE ([[graft.operators.TextOps.BackupSiblings]]).
+    * state a never-crashed group would hold. For vectors this is what
+    * makes restore SAFE at all: vector appends have no content-hash
+    * dedup, so a full replay against restored members would duplicate
+    * rows. Run it like fsck: between stream invocations (AvailableNow
+    * streams terminate per call, so "quiesced" is the natural state)
+    * under the build lock. The `_hold` registries stay OUTSIDE.
+    *
+    * DIFFERENTIAL (r17, `baseTag`): each member family diffs against
+    * its own family marker under the base group tag; the tiny state
+    * tables and checkpoint trees always copy in full (they ARE the
+    * deltas). A family present now but absent from the base group
+    * takes a full copy.
     */
-  def backupDocuments(spark: SparkSession, base: String,
-      tag: String = "bak", baseTag: Option[String] = None)
-      : Seq[String] =
-    graft.operators.TextOps.withBuildLock(spark) {
-      graft.operators.TextOps.requireTag("backupDocuments", tag)
-      require(spark.catalog.tableExists(s"${base}_bm25") ||
-        spark.catalog.tableExists(s"${base}_band"),
-        s"backupDocuments: no document family at base $base")
-      // DIFFERENTIAL group take (r17): each member family diffs
-      // against its own family marker under the base group tag; the
-      // tiny state tables and checkpoint trees always copy in full
-      // (they ARE the deltas). A family present now but absent from
-      // the base group takes a full copy.
+  def backup(spark: SparkSession, g: IndexGroup, tag: String = "bak",
+      baseTag: Option[String] = None): Seq[String] =
+    TextOps.withBuildLock(spark) {
+      TextOps.requireTag("backup", tag)
+      val fams = g.families.filter(spark.catalog.tableExists)
+      require(fams.nonEmpty,
+        s"backup: no ${g.kind} family at base ${g.base}")
       baseTag.foreach { b =>
-        graft.operators.TextOps.requireTag("backupDocuments(baseTag)",
-          b)
-        require(spark.catalog.tableExists(s"${base}_dbakok_$b"),
-          s"backupDocuments: no committed base group $base/$b to " +
-            "diff against")
+        TextOps.requireTag("backup(baseTag)", b)
+        require(spark.catalog.tableExists(g.marker(b)),
+          s"backup: no committed base group ${g.base}/$b to diff " +
+            "against")
       }
       // group commit marker (r16, the backupIndex discipline one
-      // level up): retired FIRST, written LAST, required by
-      // restoreDocuments — a crash anywhere in between leaves a
-      // marker-less group restore refuses, never a mix of this
-      // tag's fresh copies and a previous take's stale ones
-      val marker = s"${base}_dbakok_$tag"
-      dropGroupMarker(spark, marker)
-      val famBases = Seq(s"${base}_band", s"${base}_bm25")
-        .filter(spark.catalog.tableExists)
-      val fams = famBases
-        .flatMap(f => graft.operators.TextOps.backupIndex(spark, f,
-          tag, baseTag.filter(b =>
-            spark.catalog.tableExists(s"${f}_bakok_$b"))))
-      val state = (s"${base}_hashes" +:
-          docStreams(base).map(_ + "_ledger"))
-        .flatMap(graft.operators.TextOps.backupTable(spark, _, tag))
-      val cks = docStreams(base).flatMap(backupCk(spark, _, tag))
-      writeGroupMarker(spark, marker, famBases, tag, state, cks)
-      fams ++ state ++ cks :+ marker
+      // level up): retired FIRST, written LAST, required by [[restore]]
+      // — a crash anywhere in between leaves a marker-less group
+      // restore refuses, never a mix of this tag's fresh copies and a
+      // previous take's stale ones
+      val marker = g.marker(tag)
+      dropTableClean(spark, marker)
+      val members = fams.flatMap(f => TextOps.backupIndex(spark, f, tag,
+        baseTag.filter(b => spark.catalog.tableExists(s"${f}_bakok_$b"))))
+      val state = g.stateTables.flatMap(TextOps.backupTable(spark, _, tag))
+      val cks = g.streams.flatMap(backupCk(spark, _, tag))
+      writeGroupMarker(spark, marker, fams, tag, state, cks)
+      members ++ state ++ cks :+ marker
     }
 
-  private def dropGroupMarker(spark: SparkSession,
+  private def dropTableClean(spark: SparkSession,
       marker: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $marker")
-    graft.operators.TextOps.clearOrphanLocation(spark, marker)
+    TextOps.clearOrphanLocation(spark, marker)
   }
 
-  // ---- stream-level retention (r16): the unified twins of      --
-  // ---- listBackups/dropBackup/listSnapshots/dropSnapshot/      --
-  // ---- pruneSnapshots — without these, every snapshot cadence  --
-  // ---- tag accumulates group markers, member manifests, meta   --
-  // ---- copies, ledger copies, and checkpoint backup trees      --
-  // ---- FOREVER at the unified level                            --
+  // ---- stream-level retention (r16): without these, every      --
+  // ---- snapshot cadence tag accumulates group markers, member  --
+  // ---- manifests, meta copies, ledger copies, and checkpoint   --
+  // ---- backup trees FOREVER at the unified level               --
 
-  /** Drop a unified family's `<tag>` COPY backup group: group marker
-    * FIRST (a half-dropped group is a set restore already refuses),
-    * then per-family copy sets, state-table copies, and checkpoint
-    * backup directories. */
-  private def dropStreamBackup(spark: SparkSession, base: String,
-      marker: String, fams: Seq[String], tables: Seq[String],
-      streams: Seq[String], tag: String): Unit =
-    graft.operators.TextOps.withBuildLock(spark) {
-      graft.operators.TextOps.requireTag("dropStreamBackup", tag)
+  /** Live tags whose member-family copies borrow from `tag`. */
+  private def dependents(spark: SparkSession, g: IndexGroup,
+      tag: String): Seq[String] =
+    g.families.flatMap(TextOps.dependentBackups(spark, _, tag))
+      .distinct.sorted
+
+  /** Drop a group's `<tag>` COPY backup: group marker FIRST (a
+    * half-dropped group is a set restore already refuses), then
+    * per-family copy sets, state-table copies, and checkpoint backup
+    * directories. */
+  def dropBackup(spark: SparkSession, g: IndexGroup,
+      tag: String = "bak"): Unit =
+    TextOps.withBuildLock(spark) {
+      TextOps.requireTag("dropBackup", tag)
       // differential dependents refuse BEFORE the marker drop (r17):
       // the family-level dropBackup would refuse anyway, but after
       // the group marker was gone — leaving a crashed-group state a
       // re-take must clean up. Check first, mutate after.
-      val deps = fams.flatMap(f =>
-        graft.operators.TextOps.dependentBackups(spark, f, tag))
-        .distinct.sorted
+      val deps = dependents(spark, g, tag)
       require(deps.isEmpty,
-        s"dropStreamBackup: $base/$tag is the differential base of " +
+        s"dropBackup: ${g.base}/$tag is the differential base of " +
           s"live tag(s) ${deps.mkString(", ")} — drop the " +
           "dependents first")
-      dropGroupMarker(spark, marker)
-      fams.foreach(graft.operators.TextOps.dropBackup(spark, _, tag))
-      tables.foreach { t =>
-        spark.sql(s"DROP TABLE IF EXISTS ${t}_bak_$tag")
-        graft.operators.TextOps.clearOrphanLocation(spark,
-          s"${t}_bak_$tag")
-      }
-      streams.foreach { n =>
-        val d = ckDir(spark, n)
-        val fs = d.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
+      dropTableClean(spark, g.marker(tag))
+      g.families.foreach(TextOps.dropBackup(spark, _, tag))
+      g.stateTables.foreach(t => dropTableClean(spark, s"${t}_bak_$tag"))
+      g.streams.foreach { n =>
+        val bak = ckBak(spark, n, tag)
+        val fs = bak.getFileSystem(spark.sparkContext.hadoopConfiguration)
         // the `_staging` tree too (ADVICE r16 #2): a backupCk that
         // crashed mid-copy leaves it, and only the next backupCk
         // under the SAME tag would sweep it — retiring the tag after
         // a crash must not leak the staging tree forever
-        Seq(s"${d.getName}_bak_$tag", s"${d.getName}_bak_${tag}_staging")
-          .foreach { name =>
-            val p = new org.apache.hadoop.fs.Path(d.getParent, name)
-            if (fs.exists(p)) { fs.delete(p, true); () }
-          }
+        Seq(bak, bak.suffix("_staging")).foreach { p =>
+          if (fs.exists(p)) { fs.delete(p, true); () }
+        }
       }
     }
 
-  /** [[dropStreamBackup]] for a document base. */
-  def dropDocumentsBackup(spark: SparkSession, base: String,
-      tag: String = "bak"): Unit =
-    dropStreamBackup(spark, base, s"${base}_dbakok_$tag",
-      Seq(s"${base}_band", s"${base}_bm25"),
-      s"${base}_hashes" +: docStreams(base).map(_ + "_ledger"),
-      docStreams(base), tag)
-
-  /** [[dropStreamBackup]] for a vector base. */
-  def dropVectorsBackup(spark: SparkSession, base: String,
-      tag: String = "bak"): Unit =
-    dropStreamBackup(spark, base, s"${base}_vbakok_$tag",
-      vecFamilies.map(base + _),
-      vecStreams(base).map(_ + "_ledger"),
-      vecStreams(base), tag)
-
-  /** COMMITTED copy-backup tags of a unified family, by its group
-    * markers (the listBackups convention one level up: a listed tag
-    * is restorable; a crashed group's marker-less copies do not
+  /** COMMITTED copy-backup tags of a group, by its group markers, in
+    * name order (the listBackups convention one level up: a listed
+    * tag is restorable; a crashed group's marker-less copies do not
     * list). */
-  private def listStreamBackups(spark: SparkSession,
-      markerPrefix: String): Seq[String] = {
-    val p = markerPrefix.toLowerCase
-    spark.sessionState.catalog
-      .listTables("default", s"$p*").map(_.table)
-      .map(_.stripPrefix(p)).sorted
+  def listBackups(spark: SparkSession, g: IndexGroup): Seq[String] = {
+    val p = g.markerPrefix.toLowerCase
+    spark.sessionState.catalog.listTables("default", s"$p*")
+      .map(_.table.stripPrefix(p)).sorted
   }
 
-  def listDocumentsBackups(spark: SparkSession,
-      base: String): Seq[String] =
-    listStreamBackups(spark, s"${base}_dbakok_")
+  /** [[listBackups]] with group-marker mtimes, newest first. */
+  def listBackupsWithAge(spark: SparkSession,
+      g: IndexGroup): Seq[(String, Long)] = {
+    val p = g.markerPrefix.toLowerCase
+    spark.sessionState.catalog.listTables("default", s"$p*")
+      .map(_.table)
+      .map { n =>
+        val loc = TextOps.tableLocation(spark, n)
+        val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        (n.stripPrefix(p), fs.getFileStatus(loc).getModificationTime)
+      }
+      .sortBy(-_._2)
+  }
 
-  def listVectorsBackups(spark: SparkSession,
-      base: String): Seq[String] =
-    listStreamBackups(spark, s"${base}_vbakok_")
+  /** RETENTION for group copy backups: keep the newest `keep`
+    * committed group tags. */
+  def pruneBackups(spark: SparkSession, g: IndexGroup,
+      keep: Int): Seq[String] = {
+    require(keep >= 1, "pruneBackups: keep must be >= 1")
+    dropBackupTags(spark, g, _.drop(keep))
+  }
 
-  /** Drop a unified family's `<tag>` MANIFEST snapshot: the stream
-    * manifest (the group's commit marker) FIRST, then each member
-    * family's manifest + meta copies. */
-  private def dropStreamSnapshot(spark: SparkSession, base: String,
-      fams: Seq[String], tag: String): Unit =
-    graft.operators.TextOps.withBuildLock(spark) {
-      dropGroupMarker(spark, s"${base}_mf_$tag")
-      fams.foreach(
-        graft.operators.TextOps.dropSnapshot(spark, _, tag))
+  /** AGE-BASED retention (r17, VERDICT item 6) — the group sibling of
+    * [[TextOps.pruneBackupsOlderThan]]. Ages come from the group
+    * marker mtimes (the commit-time clock — it is written last);
+    * `nowMs` is injectable for determinism. */
+  def pruneBackupsOlderThan(spark: SparkSession, g: IndexGroup,
+      olderThanMs: Long,
+      nowMs: Long = System.currentTimeMillis()): Seq[String] = {
+    require(olderThanMs >= 0,
+      "pruneBackupsOlderThan: olderThanMs must be >= 0")
+    dropBackupTags(spark, g,
+      _.filter { case (_, mtime) => mtime < nowMs - olderThanMs })
+  }
+
+  /** Drop each picked group tag — EXCEPT a tag whose family copies
+    * other live tags still borrow from (a differential base outliving
+    * its window is kept with a note; newest-first order clears a fully
+    * retired chain in one pass — the family-level pruneBackupTags
+    * contract one level up). */
+  private def dropBackupTags(spark: SparkSession, g: IndexGroup,
+      pick: Seq[(String, Long)] => Seq[(String, Long)]): Seq[String] =
+    TextOps.withBuildLock(spark) {
+      pick(listBackupsWithAge(spark, g)).map { case (tag, _) =>
+        val deps = dependents(spark, g, tag)
+        if (deps.nonEmpty)
+          s"kept backup $tag: differential base of live tag(s) " +
+            deps.mkString(",")
+        else {
+          dropBackup(spark, g, tag)
+          s"dropped backup $tag"
+        }
+      }
     }
 
-  def dropDocumentsSnapshot(spark: SparkSession, base: String,
+  /** Drop a group's `<tag>` MANIFEST snapshot: the stream manifest
+    * (the group's commit marker) FIRST, then each member family's
+    * manifest + meta copies. */
+  def dropSnapshot(spark: SparkSession, g: IndexGroup,
       tag: String = "snap"): Unit =
-    dropStreamSnapshot(spark, base,
-      Seq(s"${base}_band", s"${base}_bm25"), tag)
+    TextOps.withBuildLock(spark) {
+      dropTableClean(spark, s"${g.base}_mf_$tag")
+      g.families.foreach(TextOps.dropSnapshot(spark, _, tag))
+    }
 
-  def dropVectorsSnapshot(spark: SparkSession, base: String,
-      tag: String = "snap"): Unit =
-    dropStreamSnapshot(spark, base, vecFamilies.map(base + _), tag)
+  /** A group's manifest snapshots, NEWEST FIRST — the stream manifest
+    * IS the group's tag record, so this is [[TextOps.listSnapshots]]
+    * on the base name. */
+  def listSnapshots(spark: SparkSession,
+      g: IndexGroup): Seq[(String, Long)] =
+    TextOps.listSnapshots(spark, g.base)
 
-  /** Repeatable-read serving epoch over a unified DOCUMENT group —
-    * [[graft.operators.TextOps.withIndexEpoch]] lifted to the group:
-    * one O(metadata) group snapshot pins EVERY member family (band +
-    * bm25) at the same instant, `f` serves any number of as-of probes
-    * against the tag, the tag retires on the way out. This is the
-    * cross-FAMILY consistency a retrieval stack needs: a RAG request
-    * that scores bm25 AND near-dups AND rerank must see one corpus
-    * state, not whatever each family's last micro-batch left — and
-    * the per-batch self-maintenance hooks fold under Anchor, so an
-    * epoch taken mid-stream keeps serving across them.
-    */
-  def withDocumentsEpoch[T](spark: SparkSession, base: String)
-      (f: String => T): T = {
-    val tag = graft.operators.TextOps.epochTag()
-    snapshotDocuments(spark, base, tag)
-    try graft.operators.TextOps.withEpochLease(spark, tag)(f(tag))
-    finally dropDocumentsSnapshot(spark, base, tag)
+  /** RETENTION for a group's manifest snapshots: keep the newest
+    * `keep`, drop the rest (group manifest, member manifests, meta
+    * copies). */
+  def pruneSnapshots(spark: SparkSession, g: IndexGroup,
+      keep: Int): Seq[String] = {
+    require(keep >= 1, "pruneSnapshots: keep must be >= 1")
+    dropSnapshotTags(spark, g, _.drop(keep))
   }
 
-  /** [[withDocumentsEpoch]] for a unified vector base: pins every
-    * existing compression rung (ann/ivf/pq/bq/sq) under one tag, so a
-    * multi-rung probe (IVF route → PQ rerank → exact payload) reads
-    * one corpus state end-to-end.
-    */
-  def withVectorsEpoch[T](spark: SparkSession, base: String)
-      (f: String => T): T = {
-    val tag = graft.operators.TextOps.epochTag()
-    snapshotVectors(spark, base, tag)
-    try graft.operators.TextOps.withEpochLease(spark, tag)(f(tag))
-    finally dropVectorsSnapshot(spark, base, tag)
+  /** AGE-BASED snapshot retention (r17) — the group sibling of
+    * [[TextOps.pruneSnapshotsOlderThan]]; ages are group-manifest
+    * mtimes (written last). */
+  def pruneSnapshotsOlderThan(spark: SparkSession, g: IndexGroup,
+      olderThanMs: Long,
+      nowMs: Long = System.currentTimeMillis()): Seq[String] = {
+    require(olderThanMs >= 0,
+      "pruneSnapshotsOlderThan: olderThanMs must be >= 0")
+    dropSnapshotTags(spark, g,
+      _.filter { case (_, mtime) => mtime < nowMs - olderThanMs })
   }
 
-  /** [[graft.operators.TextOps.storageBreakdown]] lifted to a unified
-    * DOCUMENT group: every member family's full breakdown, plus the
-    * group-only storage the family gauge cannot see — live state
-    * tables (hash store, ledgers), live checkpoint trees, their
-    * per-committed-tag backup copies, the tiny group markers/stream
+  private def dropSnapshotTags(spark: SparkSession, g: IndexGroup,
+      pick: Seq[(String, Long)] => Seq[(String, Long)]): Seq[String] =
+    TextOps.withBuildLock(spark) {
+      pick(listSnapshots(spark, g)).map { case (tag, _) =>
+        dropSnapshot(spark, g, tag)
+        s"dropped snapshot $tag"
+      }
+    }
+
+  /** Repeatable-read serving epoch over a group —
+    * [[TextOps.withIndexEpoch]] lifted to the group: one O(metadata)
+    * group snapshot pins EVERY member family at the same instant, `f`
+    * serves any number of as-of probes against the tag, the tag
+    * retires on the way out. This is the cross-FAMILY consistency a
+    * retrieval stack needs: a RAG request that scores bm25 AND
+    * near-dups AND rerank (or a multi-rung vector probe: IVF route →
+    * PQ rerank → exact payload) must see one corpus state, not
+    * whatever each family's last micro-batch left — and the per-batch
+    * self-maintenance hooks fold under Anchor, so an epoch taken
+    * mid-stream keeps serving across them.
+    */
+  def withEpoch[T](spark: SparkSession, g: IndexGroup)
+      (f: String => T): T = {
+    val tag = TextOps.epochTag()
+    snapshot(spark, g, tag)
+    try TextOps.withEpochLease(spark, tag)(f(tag))
+    finally dropSnapshot(spark, g, tag)
+  }
+
+  /** The six admission audit sinks a base can own: the ingest's, the
+    * document CDC stream's and the vector CDC stream's. */
+  private def auditSinks(base: String): Seq[String] =
+    Seq(base, s"${base}_ups", s"${base}_vups").flatMap(sinkPair)
+
+  private def sinkPair(prefix: String): Seq[String] =
+    Seq(s"${prefix}_quarantine", s"${prefix}_admission")
+
+  /** [[TextOps.storageBreakdown]] lifted to a group: every member
+    * family's full breakdown, plus the group-only storage the family
+    * gauge cannot see — live state tables (hash store, ledgers), live
+    * checkpoint trees, their per-committed-tag backup copies, the
+    * admission audit sinks (`audit`), the tiny group markers/stream
     * manifests (`group-meta`), and `debris` for marker-less or
     * crashed-staging copies. One frame answers "what is this group
     * costing, and which verb reclaims what".
     */
-  def storageBreakdownDocuments(spark: SparkSession,
-      base: String): org.apache.spark.sql.DataFrame =
-    groupStorageBreakdown(spark, base,
-      fams = Seq(s"${base}_band", s"${base}_bm25"),
-      tables = s"${base}_hashes" +: docStreams(base).map(_ + "_ledger"),
-      streams = docStreams(base),
-      committed = listDocumentsBackups(spark, base),
-      markerPrefix = s"${base}_dbakok_")
-
-  /** [[storageBreakdownDocuments]] for a unified vector base. */
-  def storageBreakdownVectors(spark: SparkSession,
-      base: String): org.apache.spark.sql.DataFrame =
-    groupStorageBreakdown(spark, base,
-      fams = vecFamilies.map(base + _),
-      tables = vecStreams(base).map(_ + "_ledger"),
-      streams = vecStreams(base),
-      committed = listVectorsBackups(spark, base),
-      markerPrefix = s"${base}_vbakok_")
-
-  private def groupStorageBreakdown(spark: SparkSession, base: String,
-      fams: Seq[String], tables: Seq[String], streams: Seq[String],
-      committed: Seq[String], markerPrefix: String)
-      : org.apache.spark.sql.DataFrame = {
-    import graft.operators.TextOps
+  def storageBreakdown(spark: SparkSession,
+      g: IndexGroup): org.apache.spark.sql.DataFrame = {
     val rows = scala.collection.mutable.ArrayBuffer
       .empty[(String, String, String, Long, Long)]
     def add(component: String, tag: String, member: String,
@@ -1167,11 +1128,12 @@ object StreamingOps {
         rows += ((component, tag, member, files.size.toLong,
           files.map(_._2).sum))
     // live state tables + their committed copies + marker-less debris
+    val committed = listBackups(spark, g)
     val committedSet = committed.toSet
-    tables.filter(spark.catalog.tableExists).foreach { t =>
+    g.stateTables.filter(spark.catalog.tableExists).foreach { t =>
       add("state", "", t, TextOps.listDataFiles(spark, t))
     }
-    tables.foreach { t =>
+    g.stateTables.foreach { t =>
       val prefix = s"${t.toLowerCase}_bak_"
       spark.sessionState.catalog.listTables("default", s"$prefix*")
         .map(_.table).sorted.foreach { c =>
@@ -1182,7 +1144,7 @@ object StreamingOps {
         }
     }
     // live checkpoint trees + their backup/staging dirs
-    streams.foreach { n =>
+    g.streams.foreach { n =>
       val ck = ckDir(spark, n)
       add("checkpoint", "", ck.getName,
         TextOps.listFilesUnder(spark, ck))
@@ -1202,20 +1164,17 @@ object StreamingOps {
           }
       }
     }
-    // admission audit sinks (documents groups): re-derivable trails,
-    // outside backups by design — but they are bytes the group owns,
-    // so the gauge names them with their own reclaim verb
-    Seq(s"${base}_quarantine", s"${base}_admission",
-      s"${base}_ups_quarantine", s"${base}_ups_admission",
-      s"${base}_vups_quarantine", s"${base}_vups_admission")
-      .filter(spark.catalog.tableExists)
+    // admission audit sinks: re-derivable trails, outside backups by
+    // design — but they are bytes the group owns, so the gauge names
+    // them with their own reclaim verb
+    auditSinks(g.base).filter(spark.catalog.tableExists)
       .foreach(t => add("audit", "", t,
         TextOps.listDataFiles(spark, t)))
     // the tiny group-level meta: commit markers + stream manifests
     val metaTables =
-      committed.map(t => s"$markerPrefix$t".toLowerCase) ++
+      committed.map(t => g.marker(t).toLowerCase) ++
         spark.sessionState.catalog
-          .listTables("default", s"${base.toLowerCase}_mf_*")
+          .listTables("default", s"${g.base.toLowerCase}_mf_*")
           .map(_.table)
     metaTables.filter(spark.catalog.tableExists).foreach(t =>
       add("group-meta", "", t, TextOps.listDataFiles(spark, t)))
@@ -1223,187 +1182,22 @@ object StreamingOps {
     import sp.implicits._
     val groupRows = rows.toSeq
       .toDF("component", "tag", "member", "files", "bytes")
-    fams.filter(spark.catalog.tableExists)
+    g.families.filter(spark.catalog.tableExists)
       .map(TextOps.storageBreakdown(spark, _))
       .foldLeft(groupRows)(_ unionAll _)
       .orderBy("component", "tag", "member")
   }
 
-  /** A unified family's manifest snapshots, NEWEST FIRST — the
-    * stream manifest IS the group's tag record, so this is
-    * [[graft.operators.TextOps.listSnapshots]] on the base name. */
-  def listDocumentsSnapshots(spark: SparkSession,
-      base: String): Seq[(String, Long)] =
-    graft.operators.TextOps.listSnapshots(spark, base)
-
-  def listVectorsSnapshots(spark: SparkSession,
-      base: String): Seq[(String, Long)] =
-    graft.operators.TextOps.listSnapshots(spark, base)
-
-  /** RETENTION for a unified family's manifest snapshots: keep the
-    * newest `keep`, drop the rest (group manifest, member manifests,
-    * meta copies). */
-  def pruneDocumentsSnapshots(spark: SparkSession, base: String,
-      keep: Int): Seq[String] =
-    pruneStreamSnapshots(spark, base,
-      Seq(s"${base}_band", s"${base}_bm25"), keep)
-
-  def pruneVectorsSnapshots(spark: SparkSession, base: String,
-      keep: Int): Seq[String] =
-    pruneStreamSnapshots(spark, base, vecFamilies.map(base + _), keep)
-
-  private def pruneStreamSnapshots(spark: SparkSession, base: String,
-      fams: Seq[String], keep: Int): Seq[String] =
-    graft.operators.TextOps.withBuildLock(spark) {
-      require(keep >= 1, "pruneStreamSnapshots: keep must be >= 1")
-      graft.operators.TextOps.listSnapshots(spark, base)
-        .drop(keep).map { case (tag, _) =>
-          dropStreamSnapshot(spark, base, fams, tag)
-          s"dropped snapshot $tag"
-        }
-    }
-
-  /** AGE-BASED retention twins (r17, VERDICT item 6) — the
-    * stream-level siblings of
-    * [[graft.operators.TextOps.pruneSnapshotsOlderThan]] /
-    * [[graft.operators.TextOps.pruneBackupsOlderThan]]. Ages come
-    * from the group manifest / group marker mtimes (the commit-time
-    * clock — both are written last); `nowMs` is injectable for
-    * determinism. Group backups are always FULL per-family sets, so
-    * no differential-dependent check applies at this level — but the
-    * per-family [[graft.operators.TextOps.dropBackup]] underneath
-    * still refuses if an out-of-band differential borrows from a
-    * group tag. */
-  def pruneDocumentsSnapshotsOlderThan(spark: SparkSession,
-      base: String, olderThanMs: Long,
-      nowMs: Long = System.currentTimeMillis()): Seq[String] =
-    pruneStreamSnapshotsOlderThan(spark, base,
-      Seq(s"${base}_band", s"${base}_bm25"), olderThanMs, nowMs)
-
-  def pruneVectorsSnapshotsOlderThan(spark: SparkSession,
-      base: String, olderThanMs: Long,
-      nowMs: Long = System.currentTimeMillis()): Seq[String] =
-    pruneStreamSnapshotsOlderThan(spark, base,
-      vecFamilies.map(base + _), olderThanMs, nowMs)
-
-  private def pruneStreamSnapshotsOlderThan(spark: SparkSession,
-      base: String, fams: Seq[String], olderThanMs: Long,
-      nowMs: Long): Seq[String] =
-    graft.operators.TextOps.withBuildLock(spark) {
-      require(olderThanMs >= 0,
-        "pruneStreamSnapshotsOlderThan: olderThanMs must be >= 0")
-      graft.operators.TextOps.listSnapshots(spark, base)
-        .filter { case (_, mtime) => mtime < nowMs - olderThanMs }
-        .map { case (tag, _) =>
-          dropStreamSnapshot(spark, base, fams, tag)
-          s"dropped snapshot $tag"
-        }
-    }
-
-  /** COMMITTED stream-level backup tags with group-marker mtimes,
-    * newest first. */
-  private def streamBackupsWithAge(spark: SparkSession,
-      markerPrefix: String): Seq[(String, Long)] = {
-    val p = markerPrefix.toLowerCase
-    spark.sessionState.catalog
-      .listTables("default", s"$p*").map(_.table)
-      .map { n =>
-        val loc = graft.operators.TextOps.tableLocation(spark, n)
-        val fs = loc.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        (n.stripPrefix(p), fs.getFileStatus(loc).getModificationTime)
-      }
-      .sortBy(-_._2)
-  }
-
-  def listDocumentsBackupsWithAge(spark: SparkSession,
-      base: String): Seq[(String, Long)] =
-    streamBackupsWithAge(spark, s"${base}_dbakok_")
-
-  def listVectorsBackupsWithAge(spark: SparkSession,
-      base: String): Seq[(String, Long)] =
-    streamBackupsWithAge(spark, s"${base}_vbakok_")
-
-  /** Drop each stream-level group tag — EXCEPT a tag whose family
-    * copies other live tags still borrow from (a differential base
-    * outliving its window is kept with a note; newest-first order
-    * clears a fully retired chain in one pass — the family-level
-    * pruneBackupTags contract one level up). */
-  private def pruneStreamBackupTags(spark: SparkSession,
-      fams: Seq[String], tags: Seq[String],
-      dropOne: String => Unit): Seq[String] =
-    tags.map { tag =>
-      val deps = fams.flatMap(f =>
-        graft.operators.TextOps.dependentBackups(spark, f, tag))
-        .distinct.sorted
-      if (deps.nonEmpty)
-        s"kept backup $tag: differential base of live tag(s) " +
-          deps.mkString(",")
-      else {
-        dropOne(tag)
-        s"dropped backup $tag"
-      }
-    }
-
-  /** RETENTION for stream-level copy backups: keep the newest
-    * `keep` committed group tags. */
-  def pruneDocumentsBackups(spark: SparkSession, base: String,
-      keep: Int): Seq[String] =
-    graft.operators.TextOps.withBuildLock(spark) {
-      require(keep >= 1, "pruneDocumentsBackups: keep must be >= 1")
-      pruneStreamBackupTags(spark,
-        Seq(s"${base}_band", s"${base}_bm25"),
-        listDocumentsBackupsWithAge(spark, base).drop(keep).map(_._1),
-        dropDocumentsBackup(spark, base, _))
-    }
-
-  def pruneVectorsBackups(spark: SparkSession, base: String,
-      keep: Int): Seq[String] =
-    graft.operators.TextOps.withBuildLock(spark) {
-      require(keep >= 1, "pruneVectorsBackups: keep must be >= 1")
-      pruneStreamBackupTags(spark, vecFamilies.map(base + _),
-        listVectorsBackupsWithAge(spark, base).drop(keep).map(_._1),
-        dropVectorsBackup(spark, base, _))
-    }
-
-  def pruneDocumentsBackupsOlderThan(spark: SparkSession,
-      base: String, olderThanMs: Long,
-      nowMs: Long = System.currentTimeMillis()): Seq[String] =
-    graft.operators.TextOps.withBuildLock(spark) {
-      require(olderThanMs >= 0,
-        "pruneDocumentsBackupsOlderThan: olderThanMs must be >= 0")
-      pruneStreamBackupTags(spark,
-        Seq(s"${base}_band", s"${base}_bm25"),
-        listDocumentsBackupsWithAge(spark, base)
-          .filter { case (_, mtime) => mtime < nowMs - olderThanMs }
-          .map(_._1),
-        dropDocumentsBackup(spark, base, _))
-    }
-
-  def pruneVectorsBackupsOlderThan(spark: SparkSession,
-      base: String, olderThanMs: Long,
-      nowMs: Long = System.currentTimeMillis()): Seq[String] =
-    graft.operators.TextOps.withBuildLock(spark) {
-      require(olderThanMs >= 0,
-        "pruneVectorsBackupsOlderThan: olderThanMs must be >= 0")
-      pruneStreamBackupTags(spark, vecFamilies.map(base + _),
-        listVectorsBackupsWithAge(spark, base)
-          .filter { case (_, mtime) => mtime < nowMs - olderThanMs }
-          .map(_._1),
-        dropVectorsBackup(spark, base, _))
-    }
-
   /** The src-INSENSITIVE content fingerprint of a family's backup
     * commit marker: sha-256 over its sorted (member, path, len) rows.
-    * Invariant under [[graft.operators.TextOps.promoteBackup]] (which
-    * only clears the src column), changed by any out-of-band family
-    * re-take under the same tag — exactly the drift the GROUP marker
-    * must catch (a family restore point newer than the ledgers and
-    * checkpoints taken with it would replay the wrong window). */
+    * Invariant under [[TextOps.promoteBackup]] (which only clears the
+    * src column), changed by any out-of-band family re-take under the
+    * same tag — exactly the drift the GROUP marker must catch (a
+    * family restore point newer than the ledgers and checkpoints
+    * taken with it would replay the wrong window). */
   private def famFingerprint(spark: SparkSession,
       familyMarker: String): (String, Long) = {
-    val rows = graft.operators.TextOps
-      .readBackupMarker(spark, familyMarker)
+    val rows = TextOps.readBackupMarker(spark, familyMarker)
       .map { case (m, p, l, _, _) => s"$m|${p.getOrElse("")}|$l" }
       .sorted
     val md = java.security.MessageDigest.getInstance("SHA-256")
@@ -1415,7 +1209,7 @@ object StreamingOps {
 
   /** Commit a stream-level backup group, LAST: one row per DATA FILE
     * of every state-table copy and checkpoint backup directory
-    * ((kind, name, path, len); null-path sentinel for an empty
+    * ((kind, name, path, len, sha); null-path sentinel for an empty
     * entry), so the marker doubles as the group's integrity
     * manifest — the checkpoint trees especially are many small
     * loss-prone files, and a restore from a damaged copy would
@@ -1425,8 +1219,7 @@ object StreamingOps {
     * identity belongs to the family-level audit (which understands
     * differential borrows and promote materialization); the
     * fingerprint pins the family marker's restore-point CONTENT
-    * while staying invariant under
-    * [[graft.operators.TextOps.promoteBackup]]. */
+    * while staying invariant under [[TextOps.promoteBackup]]. */
   private def writeGroupMarker(spark: SparkSession, marker: String,
       famBases: Seq[String], tag: String,
       tables: Seq[String], cks: Seq[String]): Unit = {
@@ -1441,19 +1234,17 @@ object StreamingOps {
       if (files.isEmpty)
         Seq((kind, name, null: String, 0L, null: String))
       else files.map { case (p, l) => (kind, name, p, l,
-        graft.operators.TextOps.hashDataFile(spark, loc, p)) }
+        TextOps.hashDataFile(spark, loc, p)) }
     val rows =
       famBases.map { f =>
         val (hex, n) = famFingerprint(spark, s"${f}_bakok_$tag")
         ("fam", f, hex, n, null: String)
       } ++
       tables.flatMap(t => fileRows("table", t,
-        graft.operators.TextOps.tableLocation(spark, t),
-        graft.operators.TextOps.listDataFiles(spark, t))) ++
+        TextOps.tableLocation(spark, t), TextOps.listDataFiles(spark, t))) ++
       cks.flatMap { p =>
         val root = new org.apache.hadoop.fs.Path(p)
-        fileRows("ck", p, root,
-          graft.operators.TextOps.listFilesUnder(spark, root))
+        fileRows("ck", p, root, TextOps.listFilesUnder(spark, root))
       }
     val sp = spark
     import sp.implicits._
@@ -1461,41 +1252,45 @@ object StreamingOps {
       .write.mode("overwrite").saveAsTable(marker)
   }
 
-  /** READ-ONLY audit of a stream-level copy backup group: the group
-    * marker must exist, every state-table copy / checkpoint backup
-    * directory it records must still hold EXACTLY the files it
-    * committed with ((name, len) identity), every member family it
-    * records must still carry a family marker whose
-    * [[famFingerprint]] matches the committed one (src-insensitive,
-    * so a promote keeps the group green while an out-of-band family
-    * re-take under the tag is named), and no unrecorded copy may sit
-    * under the tag among the expected names — the ones the restore
-    * verbs would resurrect as live members (ADVICE r16 #1). Legacy
-    * (pre-fingerprint) group markers that recorded family copies as
-    * raw `table` rows keep auditing on raw file identity. All
-    * O(metadata). Nil = the group restores as taken. */
-  private def checkGroupBackup(spark: SparkSession, marker: String,
-      anyCopy: Boolean, tag: String,
-      expectedFams: Seq[String] = Nil,
-      expectedTables: Seq[String] = Nil,
-      expectedCks: Seq[String] = Nil,
-      deep: Boolean = false): Seq[String] = {
+  /** Where a group-marker entry lives now: a `table` row's table
+    * location, a `ck` row's directory; None when it is gone. */
+  private def entryRoot(spark: SparkSession, kind: String,
+      name: String): Option[org.apache.hadoop.fs.Path] =
+    if (kind == "table")
+      Some(name).filter(spark.catalog.tableExists)
+        .map(TextOps.tableLocation(spark, _))
+    else {
+      val path = new org.apache.hadoop.fs.Path(name)
+      Some(path).filter(_.getFileSystem(
+        spark.sparkContext.hadoopConfiguration).exists(path))
+    }
+
+  /** READ-ONLY audit of a group copy backup: the group marker must
+    * exist, every state-table copy / checkpoint backup directory it
+    * records must still hold EXACTLY the files it committed with
+    * ((name, len) identity), every member family it records must
+    * still carry a family marker whose [[famFingerprint]] matches the
+    * committed one (src-insensitive, so a promote keeps the group
+    * green while an out-of-band family re-take under the tag is
+    * named), and no unrecorded copy may sit under the tag among the
+    * names the restore would resurrect as live members (ADVICE r16
+    * #1). All O(metadata), unless `deep`. Nil = restores as taken. */
+  private def checkGroupBackup(spark: SparkSession, g: IndexGroup,
+      tag: String, deep: Boolean): Seq[String] = {
+    val marker = g.marker(tag)
     if (!spark.catalog.tableExists(marker))
       return Seq(
-        if (anyCopy) s"copies exist but no group marker $marker — " +
-          "the backup crashed mid-group (or predates the marker, " +
-          "r16); re-take it"
+        if (g.families.exists(f =>
+            spark.catalog.tableExists(s"${f}_bak_$tag")))
+          s"copies exist but no group marker $marker — the backup " +
+            "crashed mid-group; re-take it"
         else s"no backup (no group marker $marker)")
-    val mdf = spark.table(marker)
-    val hasSha = mdf.columns.contains("sha")
-    val rawSha = mdf.collect()
+    val rawSha = spark.table(marker).collect()
       .map(r => ((r.getString(0), r.getString(1)),
-        Option(r.getString(2)), r.getLong(3),
-        if (hasSha) Option(r.getString(4)) else None))
-    val raw = rawSha.map { case (k, p, l, _) => (k, p, l) }
-    val fams = raw.collect { case (("fam", f), Some(hex), n) =>
+        Option(r.getString(2)), r.getLong(3), r.getString(4)))
+    val fams = rawSha.collect { case (("fam", f), Some(hex), n, _) =>
       (f, hex, n) }.toSeq
-    val recorded = raw.filterNot(_._1._1 == "fam")
+    val recorded = rawSha.filterNot(_._1._1 == "fam")
       .groupBy(_._1)
       .map { case (k, rows) =>
         k -> rows.flatMap(r => r._2.map(p => (p, r._3))).toSet
@@ -1503,11 +1298,6 @@ object StreamingOps {
     val recordedNames = recorded.keySet
       .map { case (kind, n) => (kind, n.toLowerCase) } ++
       fams.map { case (f, _, _) => ("fam", f.toLowerCase) }
-    // a family is covered when recorded as a fingerprint row (new) or
-    // when its base copy appears as a raw table row (legacy marker)
-    def famCovered(f: String): Boolean =
-      recordedNames(("fam", f.toLowerCase)) ||
-        recordedNames(("table", s"${f}_bak_$tag".toLowerCase))
     val famProblems = fams.sortBy(_._1).flatMap { case (f, hex, n) =>
       val fm = s"${f}_bakok_$tag"
       if (!spark.catalog.tableExists(fm))
@@ -1523,33 +1313,34 @@ object StreamingOps {
           "the group")
       }
     }
-    val famExtras = expectedFams.filterNot(famCovered).flatMap { f =>
-      (f +: graft.operators.TextOps.BackupSiblings.map(f + _))
-        .map(m => s"${m}_bak_$tag")
-        .filter(spark.catalog.tableExists)
-        .map(c => s"$c: copy exists but its family is not in the " +
-          "group marker (restore would resurrect it as a member) — " +
-          "re-take the backup")
-    }
-    val tableExtras = expectedTables
+    val famExtras = g.families
+      .filterNot(f => recordedNames(("fam", f.toLowerCase)))
+      .flatMap { f =>
+        (f +: TextOps.BackupSiblings.map(f + _))
+          .map(m => s"${m}_bak_$tag")
+          .filter(spark.catalog.tableExists)
+          .map(c => s"$c: copy exists but its family is not in the " +
+            "group marker (restore would resurrect it as a member) — " +
+            "re-take the backup")
+      }
+    val tableExtras = g.stateTables.map(t => s"${t}_bak_$tag")
       .filter(t => spark.catalog.tableExists(t) &&
         !recordedNames(("table", t.toLowerCase)))
       .map(t => s"$t: copy exists but is not in the group marker " +
         "(restore would resurrect it as a member) — re-take the " +
         "backup")
-    val ckExtras = expectedCks.filter { p =>
-      val path = new org.apache.hadoop.fs.Path(p)
-      path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(path) && !recordedNames(("ck", p.toLowerCase))
-    }.map(p => s"$p: checkpoint backup exists but is not in the " +
-      "group marker (restore would resurrect it) — re-take the " +
-      "backup")
+    val ckExtras = g.streams.map(ckBak(spark, _, tag).toString)
+      .filter(p => entryRoot(spark, "ck", p).nonEmpty &&
+        !recordedNames(("ck", p.toLowerCase)))
+      .map(p => s"$p: checkpoint backup exists but is not in the " +
+        "group marker (restore would resurrect it) — re-take the " +
+        "backup")
     // DEEP pass (opt-in, r17): re-hash every recorded state-table /
     // checkpoint file against its take-time md5 — same-length bit
     // rot inside a committed copy is invisible to the (name, len)
     // identity above. Family members deep-audit via the per-family
-    // chain audit the public twins append; a pre-hash (legacy) row
-    // is NAMED unverifiable, never silently skipped.
+    // chain audit [[checkBackup]] appends. One distributed re-hash job
+    // ([[TextOps.hashFilesDistributed]] — the at-scale deep-read path).
     val deepProblems =
       if (!deep) Nil
       else {
@@ -1558,65 +1349,27 @@ object StreamingOps {
             (kind, n, p, sha) }
           .sortBy(r => (r._2, r._3))
           .flatMap { case (kind, n, p, sha) =>
-            val root: Option[org.apache.hadoop.fs.Path] = kind match {
-              case "table" =>
-                if (spark.catalog.tableExists(n))
-                  Some(graft.operators.TextOps
-                    .tableLocation(spark, n))
-                else None
-              case _ =>
-                val path = new org.apache.hadoop.fs.Path(n)
-                if (path.getFileSystem(
-                    spark.sparkContext.hadoopConfiguration)
-                    .exists(path))
-                  Some(path)
-                else None
-            }
-            root.toSeq.flatMap { loc =>
-              sha match {
-                case None => Seq(Left(s"$n: $p has no recorded " +
-                  "content hash (pre-hash group marker) — deep " +
-                  "audit cannot verify it; re-take the backup"))
-                case Some(h) =>
-                  val fs = loc.getFileSystem(
-                    spark.sparkContext.hadoopConfiguration)
-                  if (!fs.exists(
-                      new org.apache.hadoop.fs.Path(loc, p)))
-                    Nil // missing = the shallow pass's finding
-                  else Seq(Right((n, p, loc.toString, h)))
-              }
-            }
+            entryRoot(spark, kind, n).toSeq
+              .filter(loc => loc.getFileSystem(
+                spark.sparkContext.hadoopConfiguration)
+                .exists(new org.apache.hadoop.fs.Path(loc, p)))
+              .map(loc => (n, p, loc.toString, sha))
           }
-        // one distributed re-hash job ([[graft.operators.TextOps
-        // .hashFilesDistributed]] — the at-scale deep-read path)
-        val got = graft.operators.TextOps.hashFilesDistributed(spark,
-          gathered.collect { case Right((_, p, loc, _)) => (loc, p) })
-        gathered.flatMap {
-          case Left(msg) => Seq(msg)
-          case Right((n, p, loc, h)) =>
-            if (got((loc, p)) == h) Nil
-            else Seq(s"$n: $p content mismatch (recorded md5 $h, " +
-              s"found ${got((loc, p))} — bit rot or tamper at " +
-              "unchanged length); re-take the backup")
+        val got = TextOps.hashFilesDistributed(spark,
+          gathered.map { case (_, p, loc, _) => (loc, p) })
+        gathered.flatMap { case (n, p, loc, h) =>
+          if (got((loc, p)) == h) Nil
+          else Seq(s"$n: $p content mismatch (recorded md5 $h, " +
+            s"found ${got((loc, p))} — bit rot or tamper at " +
+            "unchanged length); re-take the backup")
         }
       }
     deepProblems ++ famProblems ++
     recorded.toSeq.sortBy(_._1).flatMap { case ((kind, n), files) =>
-      val now: Option[Set[(String, Long)]] = kind match {
-        case "table" =>
-          if (spark.catalog.tableExists(n))
-            Some(graft.operators.TextOps.listDataFiles(spark, n).toSet)
-          else None
-        case _ =>
-          val path = new org.apache.hadoop.fs.Path(n)
-          val fs = path.getFileSystem(
-            spark.sparkContext.hadoopConfiguration)
-          if (fs.exists(path))
-            Some(graft.operators.TextOps
-              .listFilesUnder(spark, path).toSet)
-          else None
-      }
-      now match {
+      entryRoot(spark, kind, n).map { loc =>
+        if (kind == "table") TextOps.listDataFiles(spark, n).toSet
+        else TextOps.listFilesUnder(spark, loc).toSet
+      } match {
         case None =>
           Seq(s"$n: recorded in the group marker but missing")
         case Some(cur) =>
@@ -1632,94 +1385,45 @@ object StreamingOps {
     } ++ famExtras ++ tableExtras ++ ckExtras
   }
 
-  /** The copy names a document-group restore would resurrect —
-    * [[checkGroupBackup]]'s extras universe: the state-table copies
-    * and the checkpoint backup dirs (member-family copies are
-    * checked via their `fam` rows + the family-level audit). */
-  private def expectedGroupCopies(spark: SparkSession,
-      tables: Seq[String], streams: Seq[String],
-      tag: String): (Seq[String], Seq[String]) = {
-    val tbls = tables.map(t => s"${t}_bak_$tag")
-    val cks = streams.map { n =>
-      val d = ckDir(spark, n)
-      new org.apache.hadoop.fs.Path(d.getParent,
-        s"${d.getName}_bak_$tag").toString
-    }
-    (tbls, cks)
-  }
-
-  /** [[checkGroupBackup]] for a unified document base. `deep` adds
-    * the opt-in O(bytes) content re-hash, group rows AND member
-    * families (the family-level `checkBackup(deep)` contract). */
-  def checkDocumentsBackup(spark: SparkSession, base: String,
+  /** READ-ONLY audit of a group's `<tag>` copy backup
+    * ([[checkGroupBackup]]) plus each member family's chain audit
+    * (r17): a differential family copy's BORROWED files live in base
+    * tags' copies the group marker never recorded — the family-level
+    * [[TextOps.checkBackup]] covers them. `deep` adds the opt-in
+    * O(bytes) content re-hash, group rows AND member families. */
+  def checkBackup(spark: SparkSession, g: IndexGroup,
       tag: String = "bak", deep: Boolean = false): Seq[String] = {
-    graft.operators.TextOps.requireTag("checkDocumentsBackup", tag)
-    val (tbls, cks) = expectedGroupCopies(spark,
-      s"${base}_hashes" +: docStreams(base).map(_ + "_ledger"),
-      docStreams(base), tag)
-    checkGroupBackup(spark, s"${base}_dbakok_$tag",
-      anyCopy = Seq(s"${base}_bm25", s"${base}_band")
-        .exists(f => spark.catalog.tableExists(s"${f}_bak_$tag")),
-      tag = tag,
-      expectedFams = Seq(s"${base}_band", s"${base}_bm25"),
-      expectedTables = tbls, expectedCks = cks, deep = deep) ++
-      // per-family chain audit (r17): a differential family copy's
-      // BORROWED files live in base tags' copies the group marker
-      // never recorded — the family-level audit covers them
-      Seq(s"${base}_band", s"${base}_bm25")
+    TextOps.requireTag("checkBackup", tag)
+    checkGroupBackup(spark, g, tag, deep) ++
+      g.families
         .filter(f => spark.catalog.tableExists(s"${f}_bakok_$tag"))
-        .flatMap(f => graft.operators.TextOps.checkBackup(spark, f,
-          tag, deep))
+        .flatMap(f => TextOps.checkBackup(spark, f, tag, deep))
   }
 
-  /** [[checkGroupBackup]] for a unified vector base (`deep` as in
-    * [[checkDocumentsBackup]]). */
-  def checkVectorsBackup(spark: SparkSession, base: String,
-      tag: String = "bak", deep: Boolean = false): Seq[String] = {
-    graft.operators.TextOps.requireTag("checkVectorsBackup", tag)
-    val (tbls, cks) = expectedGroupCopies(spark,
-      vecStreams(base).map(_ + "_ledger"),
-      vecStreams(base), tag)
-    checkGroupBackup(spark, s"${base}_vbakok_$tag",
-      anyCopy = vecFamilies.exists(f =>
-        spark.catalog.tableExists(s"$base${f}_bak_$tag")),
-      tag = tag,
-      expectedFams = vecFamilies.map(base + _),
-      expectedTables = tbls, expectedCks = cks, deep = deep) ++
-      // per-family chain audit (r17): see checkDocumentsBackup
-      vecFamilies.map(base + _)
-        .filter(f => spark.catalog.tableExists(s"${f}_bakok_$tag"))
-        .flatMap(f => graft.operators.TextOps.checkBackup(spark, f,
-          tag, deep))
-  }
-
-  /** RESTORE a unified document family to its `<tag>` snapshot —
-    * members, hash store, ledgers and checkpoints together (see
-    * [[backupDocuments]] for why re-invoking the streams afterwards
-    * converges on the never-crashed state). Members, ledgers or
-    * checkpoints created AFTER the snapshot are dropped; the `_hold`
-    * registries are never touched. Refuses before mutating anything
-    * without the snapshot. */
-  def restoreDocuments(spark: SparkSession, base: String,
+  /** RESTORE a group to its `<tag>` backup — members, state tables
+    * and checkpoints together (see [[backup]] for why re-invoking the
+    * streams afterwards converges on the never-crashed state).
+    * Members, ledgers or checkpoints created AFTER the backup are
+    * dropped; the `_hold` registries are never touched. Refuses
+    * before mutating anything without the backup, or when its full
+    * audit (incl. the extras pass: an out-of-band copy under the tag
+    * would be resurrected as a member by the restoreTable sweep)
+    * finds a problem. */
+  def restore(spark: SparkSession, g: IndexGroup,
       tag: String = "bak"): Seq[String] =
-    graft.operators.TextOps.withBuildLock(spark) {
-      val anyCopy = spark.catalog.tableExists(s"${base}_bm25_bak_$tag") ||
-        spark.catalog.tableExists(s"${base}_band_bak_$tag")
-      require(spark.catalog.tableExists(s"${base}_dbakok_$tag") ||
-          !anyCopy,
-        s"restoreDocuments: backup $base/$tag has copies but no " +
-          "group marker — the backup crashed mid-group (or predates " +
-          "the marker, r16); re-take it")
+    TextOps.withBuildLock(spark) {
+      val anyCopy = g.families.exists(f =>
+        spark.catalog.tableExists(s"${f}_bak_$tag"))
+      require(spark.catalog.tableExists(g.marker(tag)) || !anyCopy,
+        s"restore: backup ${g.base}/$tag has copies but no group " +
+          "marker — the backup crashed mid-group; re-take it")
       require(anyCopy,
-        s"restoreDocuments: no backup for base $base tag $tag — " +
-          "refusing to touch the live family without its snapshot")
-      // the full audit incl. the extras pass: an out-of-band copy
-      // under the tag would be resurrected as a member by the
-      // restoreTable sweep below
-      val audit = checkDocumentsBackup(spark, base, tag)
+        s"restore: no backup for base ${g.base} tag $tag — refusing " +
+          "to touch the live family without its snapshot")
+      val audit = checkBackup(spark, g, tag)
       require(audit.isEmpty,
-        s"restoreDocuments: backup $base/$tag failed its integrity " +
-          s"audit — ${audit.take(5).mkString("; ")}" +
+        s"restore: backup ${g.base}/$tag failed its integrity audit " +
+          s"— ${audit.take(5).mkString("; ")}" +
           (if (audit.size > 5) s" (+${audit.size - 5} more)" else "") +
           " — re-take the backup")
       // family members restore through the marker-aware family verb
@@ -1727,186 +1431,73 @@ object StreamingOps {
       // files across the base tags' copies; a family with no marker
       // under the tag did not exist at snapshot — its live members
       // drop (the restoreTable absence contract, kept verbatim)
-      val members = Seq(s"${base}_band", s"${base}_bm25").flatMap { f =>
+      val members = g.families.flatMap { f =>
         if (spark.catalog.tableExists(s"${f}_bakok_$tag"))
-          graft.operators.TextOps.restoreIndex(spark, f, tag)
+          TextOps.restoreIndex(spark, f, tag)
         else
-          (f +: graft.operators.TextOps.BackupSiblings.map(f + _))
-            .flatMap(graft.operators.TextOps
-              .restoreTable(spark, _, tag))
+          (f +: TextOps.BackupSiblings.map(f + _))
+            .flatMap(TextOps.restoreTable(spark, _, tag))
       }
-      val state = (s"${base}_hashes" +:
-          docStreams(base).map(_ + "_ledger"))
-        .flatMap(graft.operators.TextOps.restoreTable(spark, _, tag))
-      val cks = docStreams(base).flatMap(restoreCk(spark, _, tag))
+      val state = g.stateTables.flatMap(TextOps.restoreTable(spark, _, tag))
+      val cks = g.streams.flatMap(restoreCk(spark, _, tag))
       members ++ state ++ cks
     }
 
-  /** POINT-IN-TIME BACKUP of a unified vector family: every existing
-    * member family (ANN band+payload, BQ, SQ8, PQ incl. codebook, IVF
-    * incl. centroids — [[graft.operators.TextOps.BackupSiblings]]
-    * covers the trained artifacts) plus the ingest/CDC ledgers and
-    * checkpoints as pairs. Same replay-convergence contract as
-    * [[backupDocuments]] — and for vectors the checkpoint-in-snapshot
-    * design is what makes restore SAFE at all: vector appends have no
-    * content-hash dedup, so a full replay against restored members
-    * would duplicate rows; the restored checkpoint replays only
-    * post-snapshot files. */
-  def backupVectors(spark: SparkSession, base: String,
-      tag: String = "bak", baseTag: Option[String] = None)
-      : Seq[String] =
-    graft.operators.TextOps.withBuildLock(spark) {
-      graft.operators.TextOps.requireTag("backupVectors", tag)
-      val fams = vecFamilies.map(base + _)
-        .filter(spark.catalog.tableExists)
-      require(fams.nonEmpty,
-        s"backupVectors: no vector family at base $base")
-      // differential group take (r17): see backupDocuments
-      baseTag.foreach { b =>
-        graft.operators.TextOps.requireTag("backupVectors(baseTag)", b)
-        require(spark.catalog.tableExists(s"${base}_vbakok_$b"),
-          s"backupVectors: no committed base group $base/$b to " +
-            "diff against")
-      }
-      // group marker: retired first, written last (see
-      // backupDocuments)
-      val marker = s"${base}_vbakok_$tag"
-      dropGroupMarker(spark, marker)
-      val members =
-        fams.flatMap(f => graft.operators.TextOps.backupIndex(spark,
-          f, tag, baseTag.filter(b =>
-            spark.catalog.tableExists(s"${f}_bakok_$b"))))
-      val state = vecStreams(base).map(_ + "_ledger")
-        .flatMap(graft.operators.TextOps.backupTable(spark, _, tag))
-      val cks = vecStreams(base).flatMap(backupCk(spark, _, tag))
-      writeGroupMarker(spark, marker, fams, tag, state, cks)
-      members ++ state ++ cks :+ marker
+  /** PROMOTE a group's differential backup to self-contained:
+    * [[TextOps.promoteBackup]] for every member family committed
+    * under the tag. State-table copies and checkpoint trees were
+    * already taken in full (they ARE the deltas), so nothing else
+    * moves; the group marker's family rows are src-insensitive
+    * fingerprints ([[famFingerprint]]), so it stays valid as-is — no
+    * group rewrite, no crash window at this level, and the group
+    * audit is green at EVERY point of a promote (finished or crashed
+    * mid-way). Afterwards the group's base tag drops clean
+    * ([[dropBackup]] stops refusing) and the group pruners stop
+    * holding it back. */
+  def promote(spark: SparkSession, g: IndexGroup,
+      tag: String = "bak"): Seq[String] =
+    TextOps.withBuildLock(spark) {
+      TextOps.requireTag("promote", tag)
+      require(spark.catalog.tableExists(g.marker(tag)),
+        s"promote: no committed backup group marker ${g.marker(tag)} " +
+          "— a crashed group re-takes, it does not promote")
+      g.families.filter(f => spark.catalog.tableExists(s"${f}_bakok_$tag"))
+        .flatMap(TextOps.promoteBackup(spark, _, tag))
     }
 
-  /** RESTORE a unified vector family to its `<tag>` snapshot; the
-    * vector twin of [[restoreDocuments]]. */
-  def restoreVectors(spark: SparkSession, base: String,
-      tag: String = "bak"): Seq[String] =
-    graft.operators.TextOps.withBuildLock(spark) {
-      val anyCopy = vecFamilies.exists(f =>
-        spark.catalog.tableExists(s"$base${f}_bak_$tag"))
-      require(spark.catalog.tableExists(s"${base}_vbakok_$tag") ||
-          !anyCopy,
-        s"restoreVectors: backup $base/$tag has copies but no group " +
-          "marker — the backup crashed mid-group (or predates the " +
-          "marker, r16); re-take it")
-      require(anyCopy,
-        s"restoreVectors: no backup for base $base tag $tag — " +
-          "refusing to touch the live family without its snapshot")
-      // full audit incl. the extras pass (see restoreDocuments)
-      val audit = checkVectorsBackup(spark, base, tag)
-      require(audit.isEmpty,
-        s"restoreVectors: backup $base/$tag failed its integrity " +
-          s"audit — ${audit.take(5).mkString("; ")}" +
-          (if (audit.size > 5) s" (+${audit.size - 5} more)" else "") +
-          " — re-take the backup")
-      // marker-aware family restore (r17): see restoreDocuments
-      val members = vecFamilies.map(base + _).flatMap { f =>
-        if (spark.catalog.tableExists(s"${f}_bakok_$tag"))
-          graft.operators.TextOps.restoreIndex(spark, f, tag)
-        else
-          (f +: graft.operators.TextOps.BackupSiblings.map(f + _))
-            .flatMap(graft.operators.TextOps
-              .restoreTable(spark, _, tag))
-      }
-      val state = vecStreams(base).map(_ + "_ledger")
-        .flatMap(graft.operators.TextOps.restoreTable(spark, _, tag))
-      val cks = vecStreams(base).flatMap(restoreCk(spark, _, tag))
-      members ++ state ++ cks
-    }
-
-  /** PROMOTE a unified family's differential group to self-contained:
-    * [[graft.operators.TextOps.promoteBackup]] for every member
-    * family committed under the tag. State-table copies and
-    * checkpoint trees were already taken in full (they ARE the
-    * deltas), so nothing else moves; the group marker's family rows
-    * are src-insensitive fingerprints ([[famFingerprint]]), so it
-    * stays valid as-is — no group rewrite, no crash window at this
-    * level, and the group audit is green at EVERY point of a promote
-    * (finished or crashed mid-way). Afterwards the
-    * group's base tag drops clean ([[dropDocumentsBackup]] /
-    * [[dropVectorsBackup]] stop refusing) and the stream-level
-    * pruners stop holding it back. */
-  private def promoteStreamBackup(spark: SparkSession, verb: String,
-      marker: String, fams: Seq[String], tag: String): Seq[String] =
-    graft.operators.TextOps.withBuildLock(spark) {
-      graft.operators.TextOps.requireTag(verb, tag)
-      require(spark.catalog.tableExists(marker),
-        s"$verb: no committed backup group marker $marker — " +
-          "a crashed group re-takes, it does not promote")
-      fams.filter(f =>
-          spark.catalog.tableExists(s"${f}_bakok_$tag"))
-        .flatMap(f =>
-          graft.operators.TextOps.promoteBackup(spark, f, tag))
-    }
-
-  /** [[promoteStreamBackup]] for a document base. */
-  def promoteDocuments(spark: SparkSession, base: String,
-      tag: String = "bak"): Seq[String] =
-    promoteStreamBackup(spark, "promoteDocuments",
-      s"${base}_dbakok_$tag", Seq(s"${base}_band", s"${base}_bm25"),
-      tag)
-
-  /** [[promoteStreamBackup]] for a vector base. */
-  def promoteVectors(spark: SparkSession, base: String,
-      tag: String = "bak"): Seq[String] =
-    promoteStreamBackup(spark, "promoteVectors",
-      s"${base}_vbakok_$tag", vecFamilies.map(base + _), tag)
-
-  /** [[graft.operators.TextOps.restoreIndexAs]] lifted to a unified
-    * group — the drill / branch twin of the in-place group restore:
-    * build SCRATCH member families at `asBase` from the committed
-    * `<tag>` group backup, live group and backup untouched. SERVING
-    * side only, by design: the member families restore (differential
-    * chains resolved, per-family integrity audited, clobber refused
-    * per member by the family verb); the hash store, replay ledgers,
-    * and checkpoint trees do NOT ride along — a branch serves
-    * probes, it does not ingest, and resuming streams under a
-    * different base is not a meaningful operation
-    * ([[restoreDocuments]] is the recovery verb). Group-committed
+  /** [[TextOps.restoreIndexAs]] lifted to a group — the drill / branch
+    * twin of the in-place [[restore]]: build SCRATCH member families
+    * at `asBase` from the committed `<tag>` group backup, live group
+    * and backup untouched. SERVING side only, by design: the member
+    * families restore (differential chains resolved, per-family
+    * integrity audited, clobber refused per member by the family
+    * verb); the hash store, replay ledgers, and checkpoint trees do
+    * NOT ride along — a branch serves probes, it does not ingest, and
+    * resuming streams under a different base is not a meaningful
+    * operation ([[restore]] is the recovery verb). Group-committed
     * sets only: the group marker is required, so a crashed group
     * take cannot be drilled into a frankenstein branch. */
-  private def restoreStreamFamilyAs(spark: SparkSession, base: String,
-      tag: String, asBase: String, sufs: Seq[String], marker: String,
-      what: String): Seq[String] =
-    graft.operators.TextOps.withBuildLock(spark) {
-      graft.operators.TextOps.requireTag(what, tag)
-      require(asBase != base,
-        s"$what: asBase must differ from the live base (use the " +
+  def restoreAs(spark: SparkSession, g: IndexGroup, tag: String,
+      asBase: String): Seq[String] =
+    TextOps.withBuildLock(spark) {
+      TextOps.requireTag("restoreAs", tag)
+      require(asBase != g.base,
+        "restoreAs: asBase must differ from the live base (use the " +
           "in-place group restore to converge)")
-      require(spark.catalog.tableExists(marker),
-        s"$what: no committed group backup $base/$tag (marker " +
-          s"$marker absent) — nothing to drill")
-      val present = sufs.map(base + _).filter(f =>
+      require(spark.catalog.tableExists(g.marker(tag)),
+        s"restoreAs: no committed group backup ${g.base}/$tag (marker " +
+          s"${g.marker(tag)} absent) — nothing to drill")
+      val present = g.families.filter(f =>
         spark.catalog.tableExists(s"${f}_bakok_$tag"))
       require(present.nonEmpty,
-        s"$what: group $base/$tag records no member-family backups")
-      present.flatMap { f =>
-        graft.operators.TextOps.restoreIndexAs(spark, f, tag,
-          asBase + f.stripPrefix(base))
-      }
+        s"restoreAs: group ${g.base}/$tag records no member-family " +
+          "backups")
+      present.flatMap(f => TextOps.restoreIndexAs(spark, f, tag,
+        asBase + f.stripPrefix(g.base)))
     }
 
-  /** [[restoreStreamFamilyAs]] for a document base. */
-  def restoreDocumentsAs(spark: SparkSession, base: String,
-      tag: String, asBase: String): Seq[String] =
-    restoreStreamFamilyAs(spark, base, tag, asBase,
-      Seq("_band", "_bm25"), s"${base}_dbakok_$tag",
-      "restoreDocumentsAs")
-
-  /** [[restoreStreamFamilyAs]] for a vector base. */
-  def restoreVectorsAs(spark: SparkSession, base: String,
-      tag: String, asBase: String): Seq[String] =
-    restoreStreamFamilyAs(spark, base, tag, asBase, vecFamilies,
-      s"${base}_vbakok_$tag", "restoreVectorsAs")
-
   // ---- O(metadata) stream-level snapshots (r15): manifest twins --
-  // ---- of backupDocuments/backupVectors for append windows      --
+  // ---- of backup/restore for append windows                     --
 
   /** The stream-state manifest rows for a set of append-only tables
     * (hash store, replay ledgers) and checkpoint DIRECTORIES: entry
@@ -1915,7 +1506,7 @@ object StreamingOps {
   private def writeStreamManifest(spark: SparkSession, mf: String,
       tables: Seq[String], streams: Seq[String]): Seq[String] = {
     val tblRows = tables.filter(spark.catalog.tableExists).flatMap { m =>
-      val files = graft.operators.TextOps.listDataFiles(spark, m)
+      val files = TextOps.listDataFiles(spark, m)
       if (files.isEmpty) Seq((m, null: String, 0L))
       else files.map { case (p, l) => (m, p, l) }
     }
@@ -1924,14 +1515,13 @@ object StreamingOps {
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(dir)) Seq.empty
       else {
-        val files = graft.operators.TextOps.listFilesUnder(spark, dir)
+        val files = TextOps.listFilesUnder(spark, dir)
         if (files.isEmpty) Seq((dir.getName, null: String, 0L))
         else files.map { case (p, l) => (dir.getName, p, l) }
       }
     }
     val rows = tblRows ++ ckRows
-    spark.sql(s"DROP TABLE IF EXISTS $mf")
-    graft.operators.TextOps.clearOrphanLocation(spark, mf)
+    dropTableClean(spark, mf)
     val sp = spark
     import sp.implicits._
     rows.toDF("member", "path", "len").coalesce(1).write.saveAsTable(mf)
@@ -1946,58 +1536,69 @@ object StreamingOps {
       : String => Option[org.apache.hadoop.fs.Path] = {
     val cks = streams.map(n => ckDir(spark, n).getName -> n).toMap
     m => cks.get(m) match {
-      case Some(n) =>
-        val d = ckDir(spark, n)
-        val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(d)) Some(d) else None
-      case None => graft.operators.TextOps.locateTable(spark)(m)
+      case Some(n) => entryRoot(spark, "ck", ckDir(spark, n).toString)
+      case None => TextOps.locateTable(spark)(m)
     }
   }
 
-  private def snapshotStreamFamily(spark: SparkSession, base: String,
-      tag: String, fams: Seq[String], tables: Seq[String],
-      streams: Seq[String], what: String): Seq[String] =
-    graft.operators.TextOps.withBuildLock(spark) {
-      graft.operators.TextOps.requireTag(what, tag)
-      val present = fams.filter(spark.catalog.tableExists)
-      require(present.nonEmpty, s"$what: no family at base $base")
+  /** O(METADATA) SNAPSHOT of a group — the manifest twin of [[backup]]
+    * for append-dominated windows: member families via
+    * [[TextOps.snapshotIndex]] (file manifests + O(1) copies of the
+    * rewritten-in-place stats/config members), PLUS a stream-state
+    * manifest over the state tables (hash store, replay ledgers) and
+    * the checkpoint DIRECTORIES — ledger and checkpoint snapshot as a
+    * pair, so [[restoreSnapshot]] keeps the replay-exactness contract
+    * the copy-based pair proves (StreamRestoreSpec): re-invoking the
+    * streams after a restore replays exactly the post-snapshot files.
+    * Checkpoint logs are write-once per batch, so they manifest like
+    * data files; a stream-log compaction (like a member compaction)
+    * makes the manifest unrestorable and the restore refuses to the
+    * copy-based pair. */
+  def snapshot(spark: SparkSession, g: IndexGroup,
+      tag: String = "snap"): Seq[String] =
+    TextOps.withBuildLock(spark) {
+      TextOps.requireTag("snapshot", tag)
+      val present = g.families.filter(spark.catalog.tableExists)
+      require(present.nonEmpty, s"snapshot: no family at base ${g.base}")
       // the stream manifest is the GROUP's commit marker (required by
       // the restore, written last) — retire it before re-snapshotting
       // the member families, so a crashed re-take never leaves the
       // previous group manifest over fresh member snapshots (r16)
-      dropGroupMarker(spark, s"${base}_mf_$tag")
-      present.flatMap(
-        graft.operators.TextOps.snapshotIndex(spark, _, tag)) ++
-        writeStreamManifest(spark, s"${base}_mf_$tag", tables, streams)
+      dropTableClean(spark, s"${g.base}_mf_$tag")
+      present.flatMap(TextOps.snapshotIndex(spark, _, tag)) ++
+        writeStreamManifest(spark, s"${g.base}_mf_$tag", g.stateTables,
+          g.streams)
     }
 
-  private def restoreStreamFamilySnapshot(spark: SparkSession,
-      base: String, tag: String, fams: Seq[String],
-      tables: Seq[String], streams: Seq[String],
-      what: String): Seq[String] =
-    graft.operators.TextOps.withBuildLock(spark) {
-      graft.operators.TextOps.requireTag(what, tag)
-      val mfT = s"${base}_mf_$tag"
+  /** Converge a group to its `<tag>` manifest snapshot — all member
+    * families and the stream state validate BEFORE anything mutates
+    * (no half-restored groups), then prune. Refuses to the copy-based
+    * pair when history was rewritten. */
+  def restoreSnapshot(spark: SparkSession, g: IndexGroup,
+      tag: String = "snap"): Seq[String] =
+    TextOps.withBuildLock(spark) {
+      TextOps.requireTag("restoreSnapshot", tag)
+      val mfT = s"${g.base}_mf_$tag"
       require(spark.catalog.tableExists(mfT),
-        s"$what: no stream manifest $mfT — refusing to touch the " +
-          "live family without its snapshot")
-      val snapped = fams.filter(f =>
+        s"restoreSnapshot: no stream manifest $mfT — refusing to " +
+          "touch the live family without its snapshot")
+      val snapped = g.families.filter(f =>
         spark.catalog.tableExists(s"${f}_mf_$tag"))
       require(snapped.nonEmpty,
-        s"$what: no member-family manifests under tag $tag")
+        s"restoreSnapshot: no member-family manifests under tag $tag")
       // GLOBAL phase 1 — every member family AND the stream state
       // validate before anything mutates, so a refusal can never
       // leave a half-restored group (family A pruned, family B's
       // compaction refused)
-      val loc = streamLocate(spark, streams)
-      val sm = graft.operators.TextOps.readManifest(spark, mfT)
+      val loc = streamLocate(spark, g.streams)
+      val sm = TextOps.readManifest(spark, mfT)
       val problems = snapped.flatMap(f =>
-        graft.operators.TextOps.manifestProblems(spark,
-          graft.operators.TextOps.readManifest(spark, s"${f}_mf_$tag"),
-          graft.operators.TextOps.locateTable(spark))) ++
-        graft.operators.TextOps.manifestProblems(spark, sm, loc)
+        TextOps.manifestProblems(spark,
+          TextOps.readManifest(spark, s"${f}_mf_$tag"),
+          TextOps.locateTable(spark))) ++
+        TextOps.manifestProblems(spark, sm, loc)
       require(problems.isEmpty,
-        s"$what: history was rewritten since the snapshot — " +
+        "restoreSnapshot: history was rewritten since the snapshot — " +
           s"${problems.take(5).mkString("; ")}" +
           (if (problems.size > 5) s" (+${problems.size - 5} more)"
           else "") + " — file pruning cannot converge; use the " +
@@ -2006,17 +1607,16 @@ object StreamingOps {
       // then the stream state: prune manifest entries, remove
       // entries born after the snapshot (ledger + checkpoint rewind
       // as a PAIR, the ledgeredIngest contract)
-      val famOut = snapped.flatMap(
-        graft.operators.TextOps.restoreSnapshot(spark, _, tag))
-      val pruned = graft.operators.TextOps.pruneToManifest(spark, sm,
+      val famOut = snapped.flatMap(TextOps.restoreSnapshot(spark, _, tag))
+      val pruned = TextOps.pruneToManifest(spark, sm,
         loc, m => if (spark.catalog.tableExists(m))
           spark.catalog.refreshTable(m))
-      val droppedT = tables.filterNot(sm.contains)
+      val droppedT = g.stateTables.filterNot(sm.contains)
         .filter(spark.catalog.tableExists).map { m =>
           spark.sql(s"DROP TABLE $m")
           s"dropped $m (absent at snapshot)"
         }
-      val droppedCk = streams.map(n => ckDir(spark, n))
+      val droppedCk = g.streams.map(n => ckDir(spark, n))
         .filter(d => !sm.contains(d.getName))
         .filter(d => d.getFileSystem(
           spark.sparkContext.hadoopConfiguration).exists(d))
@@ -2028,8 +1628,8 @@ object StreamingOps {
       // a whole member FAMILY born after the snapshot (no manifest
       // under this tag) converges by dropping — same absence
       // contract as a member table, one level up
-      val droppedFams = fams.filterNot(snapped.contains).flatMap(f =>
-        (f +: graft.operators.TextOps.BackupSiblings.map(f + _))
+      val droppedFams = g.families.filterNot(snapped.contains).flatMap(f =>
+        (f +: TextOps.BackupSiblings.map(f + _))
           .filter(spark.catalog.tableExists)
           .map { m =>
             spark.sql(s"DROP TABLE $m")
@@ -2038,141 +1638,64 @@ object StreamingOps {
       famOut ++ pruned ++ droppedT ++ droppedCk ++ droppedFams
     }
 
-  /** O(METADATA) SNAPSHOT of a unified document family — the
-    * manifest twin of [[backupDocuments]] for append-dominated
-    * windows: member families via
-    * [[graft.operators.TextOps.snapshotIndex]] (file manifests +
-    * O(1) copies of the rewritten-in-place stats/config members),
-    * PLUS a stream-state manifest over the hash store, the replay
-    * ledgers, and the checkpoint DIRECTORIES — ledger and checkpoint
-    * snapshot as a pair, so [[restoreDocumentsSnapshot]] keeps the
-    * replay-exactness contract the copy-based twins prove
-    * (StreamRestoreSpec): re-invoking the streams after a restore
-    * replays exactly the post-snapshot files. Checkpoint logs are
-    * write-once per batch, so they manifest like data files; a
-    * stream-log compaction (like a member compaction) makes the
-    * manifest unrestorable and the restore refuses to the copy-based
-    * pair. */
-  def snapshotDocuments(spark: SparkSession, base: String,
-      tag: String = "snap"): Seq[String] =
-    snapshotStreamFamily(spark, base, tag,
-      fams = Seq(s"${base}_band", s"${base}_bm25"),
-      tables = s"${base}_hashes" +: docStreams(base).map(_ + "_ledger"),
-      streams = docStreams(base), what = "snapshotDocuments")
-
-  /** Converge a unified document family to its `<tag>` manifest
-    * snapshot — all member families and the stream state validate
-    * BEFORE anything mutates (no half-restored groups), then prune.
-    * Refuses to the copy-based pair when history was rewritten. */
-  def restoreDocumentsSnapshot(spark: SparkSession, base: String,
-      tag: String = "snap"): Seq[String] =
-    restoreStreamFamilySnapshot(spark, base, tag,
-      fams = Seq(s"${base}_band", s"${base}_bm25"),
-      tables = s"${base}_hashes" +: docStreams(base).map(_ + "_ledger"),
-      streams = docStreams(base), what = "restoreDocumentsSnapshot")
-
-  /** READ-ONLY restorability audit of a stream-level snapshot — the
-    * unified twin of [[graft.operators.TextOps.checkSnapshot]]: every
-    * member family's file manifest + meta copies, plus the
-    * stream-state manifest (hash store, ledgers, checkpoints). Run it
-    * on the snapshot cadence; a maintenance fold or a stream-log
-    * compaction flips a family to non-restorable, which should be
-    * discovered NOW, not on recovery day. Nil = restores clean. */
-  def checkDocumentsSnapshot(spark: SparkSession, base: String,
-      tag: String = "snap"): Seq[String] =
-    streamSnapshotProblems(spark, base, tag,
-      Seq(s"${base}_band", s"${base}_bm25"), docStreams(base))
-
-  /** [[checkDocumentsSnapshot]] for a unified vector base. */
-  def checkVectorsSnapshot(spark: SparkSession, base: String,
-      tag: String = "snap"): Seq[String] =
-    streamSnapshotProblems(spark, base, tag,
-      vecFamilies.map(base + _), vecStreams(base))
-
-  private def streamSnapshotProblems(spark: SparkSession, base: String,
-      tag: String, fams: Seq[String],
-      streams: Seq[String]): Seq[String] = {
-    val mfT = s"${base}_mf_$tag"
+  /** READ-ONLY restorability audit of a group snapshot — the group
+    * twin of [[TextOps.checkSnapshot]]: every member family's file
+    * manifest + meta copies, plus the stream-state manifest (state
+    * tables, checkpoints). Run it on the snapshot cadence; a
+    * maintenance fold or a stream-log compaction flips a family to
+    * non-restorable, which should be discovered NOW, not on recovery
+    * day. Nil = restores clean. */
+  def checkSnapshot(spark: SparkSession, g: IndexGroup,
+      tag: String = "snap"): Seq[String] = {
+    val mfT = s"${g.base}_mf_$tag"
     if (!spark.catalog.tableExists(mfT))
       return Seq(s"no stream manifest $mfT")
-    val snapped = fams.filter(f =>
+    val snapped = g.families.filter(f =>
       spark.catalog.tableExists(s"${f}_mf_$tag"))
-    val header =
-      if (snapped.isEmpty)
-        Seq(s"no member-family manifests under tag $tag")
-      else Seq.empty[String]
-    header ++
-      snapped.flatMap(f =>
-        graft.operators.TextOps.checkSnapshot(spark, f, tag)) ++
-      graft.operators.TextOps.manifestProblems(spark,
-        graft.operators.TextOps.readManifest(spark, mfT),
-        streamLocate(spark, streams))
+    (if (snapped.isEmpty) Seq(s"no member-family manifests under tag $tag")
+      else Nil) ++
+      snapped.flatMap(TextOps.checkSnapshot(spark, _, tag)) ++
+      TextOps.manifestProblems(spark, TextOps.readManifest(spark, mfT),
+        streamLocate(spark, g.streams))
   }
 
-  /** [[snapshotDocuments]] for a unified vector base: every existing
-    * member family + the vector streams' ledgers and checkpoints. */
-  def snapshotVectors(spark: SparkSession, base: String,
-      tag: String = "snap"): Seq[String] =
-    snapshotStreamFamily(spark, base, tag,
-      fams = vecFamilies.map(base + _),
-      tables = vecStreams(base).map(_ + "_ledger"),
-      streams = vecStreams(base), what = "snapshotVectors")
+  // ---- one-call observe/audit/heal (r15) --------------------------
 
-  /** [[restoreDocumentsSnapshot]] for a unified vector base. */
-  def restoreVectorsSnapshot(spark: SparkSession, base: String,
-      tag: String = "snap"): Seq[String] =
-    restoreStreamFamilySnapshot(spark, base, tag,
-      fams = vecFamilies.map(base + _),
-      tables = vecStreams(base).map(_ + "_ledger"),
-      streams = vecStreams(base), what = "restoreVectorsSnapshot")
+  /** The members the observe/heal verbs visit: every member of a
+    * document group, the STORED members of a vector group (a family
+    * absent from this deployment is skipped, matching the backup
+    * verbs). */
+  private def visited(spark: SparkSession,
+      g: IndexGroup): Seq[GroupMember] =
+    if (g.skipAbsent)
+      g.members.filter(m => spark.catalog.tableExists(m.table))
+    else g.members
 
-  // ---- one-call observe/audit/heal twins (r15): the unified verb --
-  // ---- table is TOTAL - ingest/upsert/delete/vacuum/hold/backup/ --
-  // ---- restore all had one-call twins; these close the last rows --
+  /** One-call `describe`: member-family name → status. Drift gauges
+    * stay off — they are O(index); ask the per-family describe when
+    * needed. */
+  def describe(spark: SparkSession,
+      g: IndexGroup): Map[String, TextOps.IndexStatus] =
+    visited(spark, g).map(m => m.table -> m.describe(spark)).toMap
 
-  /** One-call [[graft.operators.TextOps.describeBm25]]/`describeBand`
-    * over a unified document family: member-family name → status. */
-  def describeDocuments(spark: SparkSession,
-      base: String): Map[String, graft.operators.TextOps.IndexStatus] =
-    Map(
-      s"${base}_band" ->
-        graft.operators.TextOps.describeBand(spark, s"${base}_band"),
-      s"${base}_bm25" ->
-        graft.operators.TextOps.describeBm25(spark, s"${base}_bm25"))
-
-  /** One-call cadence advisory over a unified document family: each
-    * member's `due()` prefixed with its family, PLUS the
-    * admission-drift advisory — a rule whose latest-batch violation
-    * rate broke out of its own trailing baseline ([[admissionDrift]])
-    * is upstream trouble the maintenance cadence should surface
-    * without a separate dashboard, and it belongs HERE because the
-    * response is operational (inspect the quarantine, fix the feed)
-    * before the poisoned-feed valve ever trips. Nil = nothing due.
+  /** One-call cadence advisory: each member's `due()` prefixed with
+    * its family, PLUS the admission-drift advisory for the ingest and
+    * CDC histories (separate ledgers keep separate batch-id spaces and
+    * therefore separate baselines) — a rule whose latest-batch
+    * violation rate broke out of its own trailing baseline
+    * ([[admissionDrift]]) is upstream trouble the maintenance cadence
+    * should surface without a separate dashboard, and it belongs HERE
+    * because the response is operational (inspect the quarantine, fix
+    * the feed) before the poisoned-feed valve ever trips — PLUS the
+    * quarantine backlog. Nil = nothing due.
     */
-  def dueDocuments(spark: SparkSession, base: String,
-      policy: graft.operators.TextOps.MaintenancePolicy =
-        graft.operators.TextOps.MaintenancePolicy()): Seq[String] = {
-    val members = describeDocuments(spark, base).toSeq.sortBy(_._1)
-      .flatMap { case (m, st) => st.due(policy).map(v => s"$m: $v") }
-    members ++ driftAdvisories(spark, base,
-      Seq(s"${base}_admission" -> s"${base}_quarantine",
-        s"${base}_ups_admission" -> s"${base}_ups_quarantine")) ++
-      backlogAdvisories(spark,
-        Seq(s"${base}_quarantine", s"${base}_ups_quarantine"))
-  }
-
-  /** [[dueDocuments]] for a unified vector base — the vector gate's
-    * histories (unified ingest + the `_vups` CDC stream). */
-  def dueVectors(spark: SparkSession, base: String,
-      policy: graft.operators.TextOps.MaintenancePolicy =
-        graft.operators.TextOps.MaintenancePolicy()): Seq[String] =
-    describeVectors(spark, base).toSeq.sortBy(_._1)
+  def due(spark: SparkSession, g: IndexGroup,
+      policy: MaintenancePolicy = MaintenancePolicy()): Seq[String] =
+    describe(spark, g).toSeq.sortBy(_._1)
       .flatMap { case (m, st) => st.due(policy).map(v => s"$m: $v") } ++
-      driftAdvisories(spark, base,
-        Seq(s"${base}_admission" -> s"${base}_quarantine",
-          s"${base}_vups_admission" -> s"${base}_vups_quarantine")) ++
-      backlogAdvisories(spark,
-        Seq(s"${base}_quarantine", s"${base}_vups_quarantine"))
+      driftAdvisories(spark, g.base, g.sinkPrefixes.map(p =>
+        s"${p}_admission" -> s"${p}_quarantine")) ++
+      backlogAdvisories(spark, g.sinkPrefixes.map(_ + "_quarantine"))
 
   /** Quarantine-backlog advisories for the due() cadence (r18):
     * quarantined rows are evidence, but rows that SIT there are also
@@ -2190,8 +1713,7 @@ object StreamingOps {
     }
 
   /** The admission-drift advisories for a set of (admission sink,
-    * quarantine sink) histories — separate ledgers keep separate
-    * batch-id spaces and therefore separate baselines. */
+    * quarantine sink) histories. */
   private def driftAdvisories(spark: SparkSession, base: String,
       sinks: Seq[(String, String)]): Seq[String] =
     sinks.filter { case (a, _) => spark.catalog.tableExists(a) }
@@ -2207,205 +1729,117 @@ object StreamingOps {
             s"trailing baseline; inspect $q before the valve trips")
       }
 
-  /** One-call structural audit over a unified document family —
-    * violations prefixed with the member family, Nil = healthy. */
-  def fsckDocuments(spark: SparkSession, base: String): Seq[String] =
-    graft.operators.TextOps.fsckBand(spark, s"${base}_band")
-      .map(v => s"${base}_band: $v") ++
-      graft.operators.TextOps.fsckBm25(spark, s"${base}_bm25",
-        s"${base}_bm25_stats").map(v => s"${base}_bm25: $v")
+  /** One-call structural audit — violations prefixed with the member
+    * family, Nil = healthy. */
+  def fsck(spark: SparkSession, g: IndexGroup): Seq[String] =
+    visited(spark, g).flatMap(m => m.fsck(spark).map(v => s"${m.table}: $v"))
 
-  /** One-call repair over a unified document family: each member
-    * family's idempotent fsck-mapped heal pass, in the ingest loop's
-    * member order. Same contract as the per-family verbs — a clean
-    * family is a no-op, an unhealable violation refuses loudly. */
-  def repairDocuments(spark: SparkSession, base: String): Seq[String] =
-    graft.operators.TextOps.repairBand(spark, s"${base}_band")
-      .map(v => s"${base}_band: $v") ++
-      graft.operators.TextOps.repairBm25(spark, s"${base}_bm25",
-        s"${base}_bm25_stats").map(v => s"${base}_bm25: $v")
+  /** One-call repair: each member family's idempotent fsck-mapped
+    * heal pass, in the ingest loop's member order. Same contract as
+    * the per-family verbs — a clean family is a no-op, an unhealable
+    * violation refuses loudly. */
+  def repair(spark: SparkSession, g: IndexGroup): Seq[String] =
+    visited(spark, g).flatMap(m =>
+      m.repair(spark).map(v => s"${m.table}: $v"))
 
-  /** One-call maintenance pass over a unified document family. */
-  def maintainDocuments(spark: SparkSession, base: String,
-      policy: graft.operators.TextOps.MaintenancePolicy =
-        graft.operators.TextOps.MaintenancePolicy(),
-      guard: graft.operators.TextOps.FoldGuard =
-        graft.operators.TextOps.FoldGuard.Refuse): Seq[String] =
-    graft.operators.TextOps.maintainBand(spark, s"${base}_band",
-        policy, guard)
-      .map(v => s"${base}_band: $v") ++
-      graft.operators.TextOps.maintainBm25(spark, s"${base}_bm25",
-        policy, guard).map(v => s"${base}_bm25: $v")
-
-  /** One-call `describe` over every EXISTING member family of a
-    * unified vector base (a family absent from this deployment is
-    * skipped, matching the backup verbs). Drift gauges stay off —
-    * they are O(index); ask the per-family describe when needed. */
-  def describeVectors(spark: SparkSession,
-      base: String): Map[String, graft.operators.TextOps.IndexStatus] = {
-    val fams: Seq[(String, () => graft.operators.TextOps.IndexStatus)] =
-      Seq(
-        s"${base}_ann" -> (() =>
-          graft.operators.AnnIndex.describe(spark, s"${base}_ann")),
-        s"${base}_bq" -> (() =>
-          graft.operators.BqIndex.describe(spark, s"${base}_bq")),
-        s"${base}_sq" -> (() =>
-          graft.operators.SqIndex.describe(spark, s"${base}_sq")),
-        s"${base}_pq" -> (() =>
-          graft.operators.PqIndex.describe(spark, s"${base}_pq")),
-        s"${base}_ivf" -> (() =>
-          graft.operators.IvfIndex.describe(spark, s"${base}_ivf")))
-    fams.filter(f => spark.catalog.tableExists(f._1))
-      .map { case (t, d) => t -> d() }.toMap
+  /** One-call maintenance pass over the group's members.
+    * `refreshWith` supplies the corpus for a vector group's quantizer
+    * families' opt-in drift leg (the runbook's scheduling note:
+    * without it, drift is never gauged — by design); a document group
+    * has no quantizer and refuses one. */
+  def maintain(spark: SparkSession, g: IndexGroup,
+      policy: MaintenancePolicy = MaintenancePolicy(),
+      refreshWith: Option[org.apache.spark.sql.DataFrame] = None,
+      guard: FoldGuard = FoldGuard.Refuse): Seq[String] = {
+    require(refreshWith.isEmpty || g.quantized,
+      s"maintain: a ${g.kind} group has no quantizer family to refresh")
+    visited(spark, g).flatMap(m => m.maintain(spark, policy, refreshWith,
+      guard).map(v => s"${m.table}: $v"))
   }
 
-  /** One-call structural audit over every existing member family of
-    * a unified vector base — prefixed violations, Nil = healthy. */
-  def fsckVectors(spark: SparkSession, base: String): Seq[String] =
-    Seq(
-      s"${base}_ann" -> (() =>
-        graft.operators.AnnIndex.fsck(spark, s"${base}_ann")),
-      s"${base}_bq" -> (() =>
-        graft.operators.BqIndex.fsck(spark, s"${base}_bq")),
-      s"${base}_sq" -> (() =>
-        graft.operators.SqIndex.fsck(spark, s"${base}_sq")),
-      s"${base}_pq" -> (() =>
-        graft.operators.PqIndex.fsck(spark, s"${base}_pq")),
-      s"${base}_ivf" -> (() =>
-        graft.operators.IvfIndex.fsck(spark, s"${base}_ivf")))
-      .filter(f => spark.catalog.tableExists(f._1))
-      .flatMap { case (t, f) => f().map(v => s"$t: $v") }
+  /** Refresh the caller session's view of every member table, the hash
+    * store and `extra`: the stream batches and the heal wrote them in
+    * another session, whose relation cache is separate — a stale
+    * listing would miss appended files (or fail on an overwritten
+    * stats table's vanished part file). */
+  private def refreshMembers(spark: SparkSession, g: IndexGroup,
+      extra: Seq[String] = Nil): Unit =
+    (g.members.flatMap(m => m.ingestTables :+ m.delTable) ++
+        g.hashStore ++ extra)
+      .foreach(t => if (spark.catalog.tableExists(t))
+        spark.catalog.refreshTable(t))
 
-  /** One-call repair over every existing member family of a unified
-    * vector base. */
-  def repairVectors(spark: SparkSession, base: String): Seq[String] =
-    Seq(
-      s"${base}_ann" -> (() =>
-        graft.operators.AnnIndex.repair(spark, s"${base}_ann")),
-      s"${base}_bq" -> (() =>
-        graft.operators.BqIndex.repair(spark, s"${base}_bq")),
-      s"${base}_sq" -> (() =>
-        graft.operators.SqIndex.repair(spark, s"${base}_sq")),
-      s"${base}_pq" -> (() =>
-        graft.operators.PqIndex.repair(spark, s"${base}_pq")),
-      s"${base}_ivf" -> (() =>
-        graft.operators.IvfIndex.repair(spark, s"${base}_ivf")))
-      .filter(f => spark.catalog.tableExists(f._1))
-      .flatMap { case (t, f) => f().map(v => s"$t: $v") }
-
-  /** One-call maintenance pass over every existing member family of
-    * a unified vector base. `refreshWith` supplies the corpus for the
-    * quantizer families' opt-in drift leg (the runbook's scheduling
-    * note: without it, drift is never gauged — by design). */
-  def maintainVectors(spark: SparkSession, base: String,
-      policy: graft.operators.TextOps.MaintenancePolicy =
-        graft.operators.TextOps.MaintenancePolicy(),
-      refreshWith: Option[org.apache.spark.sql.DataFrame] = None,
-      guard: graft.operators.TextOps.FoldGuard =
-        graft.operators.TextOps.FoldGuard.Refuse)
-      : Seq[String] =
-    Seq(
-      s"${base}_ann" -> (() => graft.operators.AnnIndex.maintain(
-        spark, s"${base}_ann", policy, guard)),
-      s"${base}_bq" -> (() => graft.operators.BqIndex.maintain(
-        spark, s"${base}_bq", policy, guard)),
-      s"${base}_sq" -> (() => graft.operators.SqIndex.maintain(
-        spark, s"${base}_sq", policy, guard)),
-      s"${base}_pq" -> (() => graft.operators.PqIndex.maintain(
-        spark, s"${base}_pq", policy, refreshWith, guard)),
-      s"${base}_ivf" -> (() => graft.operators.IvfIndex.maintain(
-        spark, s"${base}_ivf", policy, refreshWith, guard)))
-      .filter(f => spark.catalog.tableExists(f._1))
-      .flatMap { case (t, f) => f().map(v => s"$t: $v") }
+  /** Subtract every member's hold registry from an incoming batch. */
+  private def exceptHeld(s: SparkSession, g: IndexGroup,
+      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    g.members.foldLeft(df)((d, m) =>
+      TextOps.exceptHeld(d, s, m.holdTable, g.idCol))
 
   /** STREAMING DELETES — the CDC shape: deletion requests arrive as a
-    * file stream of (doc_id) rows and each micro-batch drives
-    * [[deleteDocuments]] behind the shared replay ledger (its own
-    * `<base>_dels` ledger/checkpoint, untouched by ingests and
+    * file stream of id rows and each micro-batch drives [[delete]]
+    * behind the shared replay ledger (the group's own delete stream
+    * `<base>_dels` / `<base>_vdels`, untouched by ingests and
     * vacuums, so a vacuum dropping the tombstone lists never resets
     * this stream into replaying old deletions). Tombstoning is
     * idempotent and intersects the live index, so even a replayed
     * batch cannot double-subtract stats. The caller-session relation
     * caches of the touched lists refresh on return.
     */
-  def streamingDocumentDeletes(spark: SparkSession, path: String,
-      base: String): Unit = {
-    resetDeleteLedgerIfCheckpointLost(spark, s"${base}_dels")
-    ledgeredIngest(spark, path, s"${base}_dels", refresh = Seq(),
-      (batch, _, _) => deleteDocuments(batch.sparkSession, base,
-        batch.toDF()))
-    Seq(s"${base}_band_del", s"${base}_bm25_del", s"${base}_bm25_stats")
-      .foreach(t => if (spark.catalog.tableExists(t))
-        spark.catalog.refreshTable(t))
-  }
-
-  /** [[streamingDocumentDeletes]] for the vector families: a file
-    * stream of (vec_id) rows drives [[deleteVectors]] per batch. */
-  def streamingVectorDeletes(spark: SparkSession, path: String,
-      base: String): Unit = {
-    resetDeleteLedgerIfCheckpointLost(spark, s"${base}_vdels")
-    ledgeredIngest(spark, path, s"${base}_vdels", refresh = Seq(),
-      (batch, _, _) => deleteVectors(batch.sparkSession, base,
-        batch.toDF()))
-    Seq("_ann_del", "_bq_del", "_sq_del", "_pq_del", "_ivf_del")
-      .map(base + _)
-      .foreach(t => if (spark.catalog.tableExists(t))
-        spark.catalog.refreshTable(t))
+  def streamingDeletes(spark: SparkSession, path: String,
+      g: IndexGroup): Unit = {
+    resetDeleteLedgerIfCheckpointLost(spark, g.deleteStream)
+    ledgeredIngest(spark, path, g.deleteStream, refresh = Seq(),
+      (batch, _, _) => delete(batch.sparkSession, g, batch.toDF()))
+    refreshMembers(spark, g)
   }
 
   /** STREAMING UPSERTS — the CDC refresh shape (VERDICT r13 #1's
-    * streaming twin): re-crawled documents arrive as a file stream of
-    * full document rows and each micro-batch drives
-    * [[graft.operators.TextOps.upsertBm25Docs]] +
-    * [[graft.operators.TextOps.upsertBandDocs]] behind its own replay
-    * ledger (`<base>_ups`) — ONE upsert definition with batch, so
-    * CDC-refreshed and batch-refreshed indexes cannot drift
-    * (UpsertSpec gates probe parity). maxFilesPerTrigger=1 makes each
-    * arriving file its own batch in listing order, so a later file's
-    * version of an id supersedes an earlier file's (each batch takes
-    * a fresh generation barrier); WITHIN one file the CDC-compacted
-    * contract applies — at most one version per id. On a checkpoint
-    * loss the ledger resets and everything replays: upserts converge
-    * by content (each replayed batch re-supersedes at a higher
-    * barrier), the delete-stream recovery argument in generation
-    * form. The dedup `_hashes` table is deliberately untouched — ids,
-    * not content hashes, drive an upsert, and hash-recognition of
-    * previously seen content must survive the refresh.
+    * streaming twin): re-crawled documents (or re-embedded vectors)
+    * arrive as a file stream of full rows and each micro-batch drives
+    * every member's upsert ([[TextOps.upsertBm25Docs]],
+    * [[TextOps.upsertBandDocs]], the vector families' `upsert`) behind
+    * the group's own replay ledger (`<base>_ups` / `<base>_vups`) —
+    * ONE upsert definition with batch, so CDC-refreshed and
+    * batch-refreshed indexes cannot drift (UpsertSpec gates probe
+    * parity). maxFilesPerTrigger=1 makes each arriving file its own
+    * batch in listing order, so a later file's version of an id
+    * supersedes an earlier file's (each batch takes a fresh
+    * generation barrier); WITHIN one file the CDC-compacted contract
+    * applies — at most one version per id. On a checkpoint loss the
+    * ledger resets and everything replays: upserts converge by
+    * content (each replayed batch re-supersedes at a higher barrier),
+    * the delete-stream recovery argument in generation form. A
+    * document group's `_hashes` store is deliberately untouched —
+    * ids, not content hashes, drive an upsert, and hash-recognition
+    * of previously seen content must survive the refresh.
     */
-  def streamingDocumentUpserts(spark: SparkSession, path: String,
-      base: String,
-      maintain: Option[graft.operators.TextOps.MaintenancePolicy] =
-        None,
+  def streamingUpserts(spark: SparkSession, path: String,
+      g: IndexGroup,
+      maintain: Option[MaintenancePolicy] = None,
       admission: Seq[graft.operators.Quality.Rule] = Nil,
       maxQuarantineRate: Double = 1.0): Unit = {
     require(maxQuarantineRate >= 0.0 && maxQuarantineRate <= 1.0,
-      "streamingDocumentUpserts: maxQuarantineRate must be in [0, 1]")
-    resetDeleteLedgerIfCheckpointLost(spark, s"${base}_ups")
-    ledgeredIngest(spark, path, s"${base}_ups", refresh = Seq(),
+      "streamingUpserts: maxQuarantineRate must be in [0, 1]")
+    resetDeleteLedgerIfCheckpointLost(spark, g.upsertStream)
+    ledgeredIngest(spark, path, g.upsertStream, refresh = Seq(),
       (batch, _, bid) => {
         val s = batch.sparkSession
         // holds gate BEFORE the admission gate (r18): the member
-        // upserts re-filter held ids as a backstop, but a held doc
-        // that VIOLATES a rule would land its full text in the
+        // upserts re-filter held ids as a backstop, but a held row
+        // that VIOLATES a rule would land its full content in the
         // quarantine sink — a trace the hold contract forbids
-        val unheld = graft.operators.TextOps.exceptHeld(
-          graft.operators.TextOps.exceptHeld(batch.toDF(), s,
-            s"${base}_bm25_hold", "doc_id"),
-          s, s"${base}_band_hold", "doc_id")
+        val unheld = exceptHeld(s, g, batch.toDF())
         // the CDC stream takes the SAME admission gate as ingest — an
         // upsert rewrites content, so gating ingest alone leaves a
-        // side door for unvetted text; sinks are stream-scoped
+        // side door for unvetted content; sinks are stream-scoped
         // (`<base>_ups_quarantine`) because upsert batch ids live in
         // their own ledger and must not collide with ingest slices
         val (vetted, annOpt) = admitBatch(s, unheld, admission,
-          maxQuarantineRate, s"${base}_ups", bid,
-          "streamingDocumentUpserts", source = Some(batch.toDF()))
+          maxQuarantineRate, g.upsertStream, bid, "streamingUpserts",
+          source = Some(batch.toDF()))
         val b = vetted.persist()
-        try {
-          graft.operators.TextOps.upsertBm25Docs(s, s"${base}_bm25",
-            s"${base}_bm25_stats", b)
-          graft.operators.TextOps.upsertBandDocs(s, s"${base}_band", b)
-        } finally {
+        try g.members.foreach(_.upsert(b))
+        finally {
           b.unpersist()
           annOpt.foreach(_.unpersist())
           ()
@@ -2416,86 +1850,10 @@ object StreamingOps {
       // barrier entry and one `_del` file per batch) — the long-running
       // CDC stream self-maintains exactly like the ingest loops
       // (FoldGuard.Anchor: unattended, see the ingest hook)
-      afterBatch = s => maintain.foreach { p =>
-        graft.operators.TextOps.maintainBm25(s, s"${base}_bm25", p,
-          graft.operators.TextOps.FoldGuard.Anchor)
-        graft.operators.TextOps.maintainBand(s, s"${base}_band", p,
-          graft.operators.TextOps.FoldGuard.Anchor)
-        ()
-      })
-    (Seq(s"${base}_band", s"${base}_band_del", s"${base}_bm25",
-      s"${base}_bm25_del", s"${base}_bm25_stats") ++
-        (if (admission.nonEmpty)
-          Seq(s"${base}_ups_quarantine", s"${base}_ups_admission")
-        else Nil))
-      .foreach(t => if (spark.catalog.tableExists(t))
-        spark.catalog.refreshTable(t))
-  }
-
-  /** [[streamingDocumentUpserts]] for the vector families: a file
-    * stream of (vec_id, embedding) rows re-embeds across every index
-    * the unified ingest maintains, per batch, behind one ledger. */
-  def streamingVectorUpserts(spark: SparkSession, path: String,
-      base: String,
-      nBands: Int = graft.operators.AnnIndex.NBands,
-      bits: Int = graft.operators.AnnIndex.Bits,
-      dim: Int = graft.operators.AnnIndex.Dim,
-      maintain: Option[graft.operators.TextOps.MaintenancePolicy] =
-        None,
-      admission: Seq[graft.operators.Quality.Rule] = Nil,
-      maxQuarantineRate: Double = 1.0): Unit = {
-    require(maxQuarantineRate >= 0.0 && maxQuarantineRate <= 1.0,
-      "streamingVectorUpserts: maxQuarantineRate must be in [0, 1]")
-    resetDeleteLedgerIfCheckpointLost(spark, s"${base}_vups")
-    ledgeredIngest(spark, path, s"${base}_vups", refresh = Seq(),
-      (batch, _, bid) => {
-        val s = batch.sparkSession
-        // holds gate BEFORE the admission gate (r18, the
-        // streamingDocumentUpserts rationale) — any family registry
-        // vetoes (holdVectors stamps all five together)
-        val unheld = vecFamilies.foldLeft(batch.toDF())((d, fam) =>
-          graft.operators.TextOps.exceptHeld(d, s,
-            s"$base${fam}_hold", "vec_id"))
-        // the vector CDC side of the gate (stream-scoped sinks — see
-        // streamingDocumentUpserts)
-        val (vetted, annOpt) = admitBatch(s, unheld, admission,
-          maxQuarantineRate, s"${base}_vups", bid,
-          "streamingVectorUpserts", source = Some(batch.toDF()))
-        val b = vetted.persist()
-        try {
-          graft.operators.AnnIndex.upsert(b, s"${base}_ann", nBands,
-            bits, dim)
-          graft.operators.BqIndex.upsert(b, s"${base}_bq", dim)
-          graft.operators.SqIndex.upsert(b, s"${base}_sq", dim)
-          graft.operators.PqIndex.upsert(b, s"${base}_pq")
-          graft.operators.IvfIndex.upsert(b, s"${base}_ivf")
-        } finally {
-          b.unpersist()
-          annOpt.foreach(_.unpersist())
-          ()
-        }
-      },
-      maxFilesPerTrigger = Some(1),
-      // metadata-cheap self-maintenance per batch, the ingest-loop
-      // hook's vector side (drift gauges stay in operator passes;
-      // FoldGuard.Anchor: unattended, see the document ingest hook)
-      afterBatch = s => maintain.foreach { p =>
-        val anchor = graft.operators.TextOps.FoldGuard.Anchor
-        graft.operators.AnnIndex.maintain(s, s"${base}_ann", p,
-          anchor)
-        graft.operators.BqIndex.maintain(s, s"${base}_bq", p, anchor)
-        graft.operators.SqIndex.maintain(s, s"${base}_sq", p, anchor)
-        graft.operators.TextOps.maintainIndex(s, Seq(s"${base}_pq"),
-          s"${base}_pq_del", "vec_id", p, guard = anchor)
-        graft.operators.TextOps.maintainIndex(s, Seq(s"${base}_ivf"),
-          s"${base}_ivf_del", "vec_id", p, guard = anchor)
-        ()
-      })
-    Seq("_ann", "_ann_vec", "_ann_del", "_bq", "_bq_del", "_sq",
-      "_sq_del", "_pq", "_pq_del", "_ivf", "_ivf_del")
-      .map(base + _)
-      .foreach(t => if (spark.catalog.tableExists(t))
-        spark.catalog.refreshTable(t))
+      afterBatch = s => maintain.foreach(p =>
+        g.members.foreach(_.maintainBatch(s, p))))
+    refreshMembers(spark, g,
+      if (admission.nonEmpty) sinkPair(g.upsertStream) else Nil)
   }
 
   /** Checkpoint/ledger PAIRING for the delete streams (review r13):
@@ -2512,13 +1870,11 @@ object StreamingOps {
     */
   private def resetDeleteLedgerIfCheckpointLost(spark: SparkSession,
       table: String): Unit = {
-    val ck = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase + "_ck")
+    val ck = ckDir(spark, table)
     val fs = ck.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ledger = table + "_ledger"
     if (!fs.exists(ck) && spark.catalog.tableExists(ledger)) {
-      spark.sql(s"DROP TABLE $ledger")
-      graft.operators.TextOps.clearOrphanLocation(spark, ledger)
+      dropTableClean(spark, ledger)
       dropAdmissionSinks(spark, table)
     }
   }
@@ -2529,10 +1885,7 @@ object StreamingOps {
     * Re-derivable by design. */
   private def dropAdmissionSinks(spark: SparkSession,
       prefix: String): Unit =
-    Seq(s"${prefix}_quarantine", s"${prefix}_admission").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      graft.operators.TextOps.clearOrphanLocation(spark, t)
-    }
+    sinkPair(prefix).foreach(dropTableClean(spark, _))
 
   /** Drop a SIBLING CDC stream's ledger + checkpoint so its files
     * replay on the next invocation (ADVICE r14): when an ingest
@@ -2551,13 +1904,10 @@ object StreamingOps {
     */
   private def resetSiblingCdcStream(spark: SparkSession,
       table: String): Unit = {
-    val ck = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase + "_ck")
+    val ck = ckDir(spark, table)
     val fs = ck.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(ck)) { fs.delete(ck, true); () }
-    val ledger = table + "_ledger"
-    spark.sql(s"DROP TABLE IF EXISTS $ledger")
-    graft.operators.TextOps.clearOrphanLocation(spark, ledger)
+    dropTableClean(spark, table + "_ledger")
     dropAdmissionSinks(spark, table)
   }
 
@@ -2583,6 +1933,7 @@ object StreamingOps {
       maxQuarantineRate: Double = 1.0): Unit = {
     require(maxQuarantineRate >= 0.0 && maxQuarantineRate <= 1.0,
       "streamingAllIndexIngest: maxQuarantineRate must be in [0, 1]")
+    val g = IndexGroup.vectors(base)
     val annT = s"${base}_ann"
     val bqT = s"${base}_bq"
     val sqT = s"${base}_sq"
@@ -2595,16 +1946,13 @@ object StreamingOps {
       s"streamingAllIndexIngest: no stored quantizer ${ivfT}_cent — " +
         "build with IvfIndex.write first (ingest never retrains)")
     ledgeredIngest(spark, s"$sfDir/embeddings.parquet", base,
-      refresh = Seq(annT, annT + "_vec", annT + "_cfg",
-        bqT, bqT + "_cfg", sqT, sqT + "_cfg", pqT, ivfT),
+      refresh = g.ingestTables,
       append = (batch, _, bid) => {
         val s = batch.sparkSession
         // holds gate BEFORE the admission gate (r18) — the member
         // appends re-filter as a backstop, but a held vec_id failing
         // a rule must not leave its embedding in the quarantine sink
-        val unheld = vecFamilies.foldLeft(batch.toDF())((d, fam) =>
-          graft.operators.TextOps.exceptHeld(d, s,
-            s"$base${fam}_hold", "vec_id"))
+        val unheld = exceptHeld(s, g, batch.toDF())
         // the vector gate: a single NaN/Inf or zero-norm embedding
         // poisons every cosine/ADC score it touches — admission rules
         // (FiniteArray / NormInRange / custom) quarantine it with the
@@ -2640,21 +1988,10 @@ object StreamingOps {
       // (IvfIndex/PqIndex.maintain with refreshWith), not to every
       // arriving micro-batch. FoldGuard.Anchor: unattended (see the
       // document ingest hook).
-      afterBatch = s => maintain.foreach { p =>
-        val anchor = graft.operators.TextOps.FoldGuard.Anchor
-        graft.operators.AnnIndex.maintain(s, annT, p, anchor)
-        graft.operators.BqIndex.maintain(s, bqT, p, anchor)
-        graft.operators.SqIndex.maintain(s, sqT, p, anchor)
-        graft.operators.TextOps.maintainIndex(s, Seq(pqT),
-          pqT + "_del", "vec_id", p, guard = anchor)
-        graft.operators.TextOps.maintainIndex(s, Seq(ivfT),
-          ivfT + "_del", "vec_id", p, guard = anchor)
-        ()
-      })
+      afterBatch = s => maintain.foreach(p =>
+        g.members.foreach(_.maintainBatch(s, p))))
     // refresh the caller's view of lists the hook may have rewritten
-    Seq(annT, bqT, sqT, pqT, ivfT).map(_ + "_del")
-      .foreach(t => if (spark.catalog.tableExists(t))
-        spark.catalog.refreshTable(t))
+    refreshMembers(spark, g, if (admission.nonEmpty) sinkPair(base) else Nil)
   }
 
   /** The shared vector-ingest loop (ANN bands, PQ codes): file-stream
@@ -2684,10 +2021,7 @@ object StreamingOps {
     require(keepBatches >= 1,
       "pruneAdmissionAudit: keepBatches must be >= 1")
     graft.operators.TextOps.withBuildLock(spark) {
-    Seq(s"${base}_quarantine", s"${base}_admission",
-      s"${base}_ups_quarantine", s"${base}_ups_admission",
-      s"${base}_vups_quarantine", s"${base}_vups_admission")
-      .filter(spark.catalog.tableExists).flatMap { t =>
+    auditSinks(base).filter(spark.catalog.tableExists).flatMap { t =>
         val loc = graft.operators.TextOps.tableLocation(spark, t)
         val fs = loc.getFileSystem(
           spark.sparkContext.hadoopConfiguration)
@@ -2722,10 +2056,7 @@ object StreamingOps {
     require(maxAgeMs >= 0L,
       "pruneAdmissionAuditOlderThan: maxAgeMs must be >= 0")
     graft.operators.TextOps.withBuildLock(spark) {
-    Seq(s"${base}_quarantine", s"${base}_admission",
-      s"${base}_ups_quarantine", s"${base}_ups_admission",
-      s"${base}_vups_quarantine", s"${base}_vups_admission")
-      .filter(spark.catalog.tableExists).flatMap { t =>
+    auditSinks(base).filter(spark.catalog.tableExists).flatMap { t =>
         val loc = graft.operators.TextOps.tableLocation(spark, t)
         val fs = loc.getFileSystem(
           spark.sparkContext.hadoopConfiguration)
@@ -2828,7 +2159,7 @@ object StreamingOps {
 
   /** The document ingest door's own TRIMMINGS — ONE definition shared
     * by [[streamingDocumentIngest]]'s batch body and the ingest-side
-    * heal in [[remediateDocumentQuarantine]] (late r18, review: two
+    * heal in [[remediateQuarantine]] (late r18, review: two
     * near-verbatim copies would silently desync exactly the parity
     * the remediation contract promises). Curation gate, in-batch
     * keep-lowest exact dedup on content hash, and the `hashT`
@@ -3009,102 +2340,50 @@ object StreamingOps {
     summary(rows)
   }
 
-  /** [[remediateCore]] for a unified DOCUMENT family: heal the ingest
-    * sink (`cdc = false`, `<base>_quarantine`) or the CDC upsert sink
-    * (`cdc = true`, `<base>_ups_quarantine`). Healed rows enter
-    * through [[graft.operators.TextOps.upsertBm25Docs]] /
-    * [[graft.operators.TextOps.upsertBandDocs]] — supersede-by-id, so
-    * the heal is safe even when the id later entered by another door
-    * (plain append would double-index it), and a terminal tombstone
-    * still outranks it. INGEST-side heals additionally take the
-    * ingest door's own trimmings, for parity with what a clean
-    * delivery would have faced: the curation gate, the in-batch
-    * keep-lowest exact dedup, the `<base>_hashes` anti-join (content
-    * already indexed under another id stays deduped), and the healed
-    * novelty's hash rows land so a future redelivery of the SAME
-    * fixed content is recognized, not re-indexed. A curation- or
-    * dedup-dropped heal still LEAVES quarantine — exactly as a clean
-    * delivery of it would never have entered. CDC-side heals take the
-    * row as-is (that stream never curates: an upsert is an
-    * operator-directed rewrite) and leave `_hashes` alone (ids, not
-    * hashes, drive an upsert).
+  /** [[remediateCore]] for a group: heal the ingest sink
+    * (`cdc = false`, `<base>_quarantine`) or the CDC upsert sink
+    * (`cdc = true`, `<base>_ups_quarantine` / `<base>_vups_quarantine`).
+    * Healed rows enter through every member's own upsert
+    * ([[streamingUpserts]]' fan-out) — supersede-by-id, so the heal is
+    * safe even when the id later entered by another door (plain append
+    * would double-index it), all members agree on the healed content at
+    * their own barriers, and a terminal tombstone still outranks it.
+    * INGEST-side heals of a document group additionally take the
+    * ingest door's own trimmings, for parity with what a clean delivery
+    * would have faced: the curation gate, the in-batch keep-lowest
+    * exact dedup, the `<base>_hashes` anti-join (content already
+    * indexed under another id stays deduped), and the healed novelty's
+    * hash rows land so a future redelivery of the SAME fixed content is
+    * recognized, not re-indexed. A curation- or dedup-dropped heal
+    * still LEAVES quarantine — exactly as a clean delivery of it would
+    * never have entered. CDC-side heals take the row as-is (that stream
+    * never curates: an upsert is an operator-directed rewrite) and
+    * leave `_hashes` alone (ids, not hashes, drive an upsert).
     */
-  def remediateDocumentQuarantine(spark: SparkSession, base: String,
+  def remediateQuarantine(spark: SparkSession, g: IndexGroup,
       fix: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
       admission: Seq[graft.operators.Quality.Rule],
       cdc: Boolean = false,
       batches: Option[Seq[Long]] = None)
       : org.apache.spark.sql.DataFrame = {
-    val bandT = s"${base}_band"
-    val bm25T = s"${base}_bm25"
-    val statsT = s"${base}_bm25_stats"
-    val hashT = s"${base}_hashes"
-    val sink = if (cdc) s"${base}_ups" else base
-    val out = remediateCore(spark, sink, "doc_id",
-      Seq(s"${bm25T}_hold", s"${bandT}_hold"), fix, admission, batches,
+    val out = remediateCore(spark, if (cdc) g.upsertStream else g.base,
+      g.idCol, g.members.map(_.holdTable), fix, admission, batches,
       healed => {
         val s = healed.sparkSession
         // ONE definition of the ingest door's trimmings (shared with
         // streamingDocumentIngest, late r18 review) — what a healed
         // row faces can never drift from what a clean delivery faces
-        val entry =
-          if (cdc) healed.persist()
-          else ingestDoorTrim(s, healed, hashT)
+        val door = if (cdc) None else g.hashStore
+        val entry = door.fold(healed.persist())(ingestDoorTrim(s, healed, _))
         try {
-          graft.operators.TextOps.upsertBm25Docs(s, bm25T, statsT,
-            entry.drop("content_hash"))
-          graft.operators.TextOps.upsertBandDocs(s, bandT,
-            entry.drop("content_hash"))
-          if (!cdc) appendHashRows(s, entry, hashT)
+          g.members.foreach(_.upsert(entry.drop("content_hash")))
+          door.foreach(appendHashRows(s, entry, _))
         } finally {
           entry.unpersist()
           ()
         }
       })
-    Seq(bandT, s"${bandT}_del", bm25T, s"${bm25T}_del", statsT, hashT)
-      .foreach(t => if (spark.catalog.tableExists(t))
-        spark.catalog.refreshTable(t))
-    out
-  }
-
-  /** [[remediateCore]] for a unified VECTOR group: heal the unified
-    * ingest sink (`cdc = false`, `<base>_quarantine`) or the vector
-    * CDC sink (`cdc = true`, `<base>_vups_quarantine`). Healed
-    * embeddings re-enter through every family's own upsert — the
-    * [[streamingVectorUpserts]] fan-out — so all five indexes agree
-    * on the healed content at their own barriers.
-    */
-  def remediateVectorQuarantine(spark: SparkSession, base: String,
-      fix: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-      admission: Seq[graft.operators.Quality.Rule],
-      cdc: Boolean = false,
-      nBands: Int = graft.operators.AnnIndex.NBands,
-      bits: Int = graft.operators.AnnIndex.Bits,
-      dim: Int = graft.operators.AnnIndex.Dim,
-      batches: Option[Seq[Long]] = None)
-      : org.apache.spark.sql.DataFrame = {
-    val sink = if (cdc) s"${base}_vups" else base
-    val out = remediateCore(spark, sink, "vec_id",
-      vecFamilies.map(f => s"$base${f}_hold"), fix, admission, batches,
-      healed => {
-        val s = healed.sparkSession
-        val b = healed.persist()
-        try {
-          graft.operators.AnnIndex.upsert(b, s"${base}_ann", nBands,
-            bits, dim)
-          graft.operators.BqIndex.upsert(b, s"${base}_bq", dim)
-          graft.operators.SqIndex.upsert(b, s"${base}_sq", dim)
-          graft.operators.PqIndex.upsert(b, s"${base}_pq")
-          graft.operators.IvfIndex.upsert(b, s"${base}_ivf")
-        } finally {
-          b.unpersist()
-          ()
-        }
-      })
-    (Seq("_ann", "_ann_vec", "_ann_del", "_bq", "_bq_del", "_sq",
-      "_sq_del", "_pq", "_pq_del", "_ivf", "_ivf_del").map(base + _))
-      .foreach(t => if (spark.catalog.tableExists(t))
-        spark.catalog.refreshTable(t))
+    refreshMembers(spark, g)
     out
   }
 
@@ -3354,8 +2633,7 @@ object StreamingOps {
     val schema = spark.read.parquet(path).schema
     val ledger = table + "_ledger"
     graft.operators.TextOps.clearOrphanLocation(spark, ledger)
-    val ck = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase + "_ck")
+    val ck = ckDir(spark, table)
     val fs = ck.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // reset keys on ANY member table missing, not just the primary
     // (ADVICE r12): for a multi-table ingest (bm25's stats twin, ANN's

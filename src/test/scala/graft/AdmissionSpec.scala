@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Quality.Rule._
-import graft.streaming.StreamingOps
+import graft.streaming.{IndexGroup, StreamingOps}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -219,14 +219,14 @@ class AdmissionSpec extends AnyFunSuite with SparkSuite {
       ((0L to 4L).map(b => ("r_flat", 100L, 10L, b)))
         .toDF("rule", "total", "violations", "_batch")
         .write.partitionBy("_batch").saveAsTable(t)
-      assert(!StreamingOps.dueDocuments(spark, base)
+      assert(!StreamingOps.due(spark, IndexGroup.documents(base))
         .exists(_.startsWith("admission-drift")))
       // breakout in the newest batch: advisory names the rule
       Seq(("r_flat", 100L, 60L, 5L))
         .toDF("rule", "total", "violations", "_batch")
         .write.mode("append").insertInto(t)
       spark.catalog.refreshTable(t)
-      val due = StreamingOps.dueDocuments(spark, base)
+      val due = StreamingOps.due(spark, IndexGroup.documents(base))
       assert(due.exists(v => v.startsWith("admission-drift:r_flat")),
         due.mkString("; "))
     } finally drop(fam: _*)
@@ -265,7 +265,7 @@ class AdmissionSpec extends AnyFunSuite with SparkSuite {
         (target + 1000L, "tiny", "en", "cdc", 4L))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("append").parquet(upsDir)
-      StreamingOps.streamingDocumentUpserts(spark, upsDir, base,
+      StreamingOps.streamingUpserts(spark, upsDir, IndexGroup.documents(base),
         admission = Seq(InRange("n_chars", 60.0, 500.0)))
       // the bad rewrite is in the STREAM-SCOPED quarantine...
       val q = spark.table(s"${base}_ups_quarantine")

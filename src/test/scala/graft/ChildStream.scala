@@ -75,7 +75,7 @@ object ChildStream {
       require(q == (fixable ++ unfixable),
         s"quarantine reconciliation: got $q")
       val summary = graft.streaming.StreamingOps
-        .remediateDocumentQuarantine(spark, base,
+        .remediateQuarantine(spark, graft.streaming.IndexGroup.documents(base),
           fix = df => df.withColumn("lang",
             when(col("lang").isin("en", "fr", "de"), col("lang"))
               .otherwise(lit("en"))),

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{AnnIndex, TextOps}
-import graft.streaming.StreamingOps
+import graft.streaming.{IndexGroup, StreamingOps}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -118,23 +118,24 @@ class CommitMarkerSpec extends AnyFunSuite with SparkSuite {
         Seq(1L -> "spark join window", 2L -> "hash scan merge")
           .toDF("doc_id", "text"), t, s"${t}_stats")
       val e0 = intercept[IllegalArgumentException] {
-        StreamingOps.restoreDocuments(spark, base)
+        StreamingOps.restore(spark, IndexGroup.documents(base))
       }
       assert(e0.getMessage.contains("no backup"), e0.getMessage)
-      val written = StreamingOps.backupDocuments(spark, base)
+      val written = StreamingOps.backup(spark, IndexGroup.documents(base))
       assert(written.contains(s"${base}_dbakok_bak"), written.toString)
-      assert(StreamingOps.checkDocumentsBackup(spark, base) === Nil)
+      assert(StreamingOps.checkBackup(spark,
+        IndexGroup.documents(base)) === Nil)
       // crashed-group state
       spark.sql(s"DROP TABLE ${base}_dbakok_bak")
       val e = intercept[IllegalArgumentException] {
-        StreamingOps.restoreDocuments(spark, base)
+        StreamingOps.restore(spark, IndexGroup.documents(base))
       }
       assert(e.getMessage.contains("no group marker"), e.getMessage)
-      assert(StreamingOps.checkDocumentsBackup(spark, base)
+      assert(StreamingOps.checkBackup(spark, IndexGroup.documents(base))
         .exists(_.contains("no group marker")))
       // re-take converges
-      StreamingOps.backupDocuments(spark, base)
-      assert(StreamingOps.restoreDocuments(spark, base)
+      StreamingOps.backup(spark, IndexGroup.documents(base))
+      assert(StreamingOps.restore(spark, IndexGroup.documents(base))
         .exists(_.startsWith("restored ")))
     } finally drop(all: _*)
   }
@@ -188,18 +189,18 @@ class CommitMarkerSpec extends AnyFunSuite with SparkSuite {
     try {
       AnnIndex.write(Tables(spark, sf, "embeddings"), t,
         nBands = 4, bits = 2)
-      val written = StreamingOps.backupVectors(spark, base)
+      val written = StreamingOps.backup(spark, IndexGroup.vectors(base))
       assert(written.contains(s"${base}_vbakok_bak"), written.toString)
-      assert(StreamingOps.checkVectorsBackup(spark, base) === Nil)
+      assert(StreamingOps.checkBackup(spark, IndexGroup.vectors(base)) === Nil)
       spark.sql(s"DROP TABLE ${base}_vbakok_bak")
       val e = intercept[IllegalArgumentException] {
-        StreamingOps.restoreVectors(spark, base)
+        StreamingOps.restore(spark, IndexGroup.vectors(base))
       }
       assert(e.getMessage.contains("no group marker"), e.getMessage)
-      StreamingOps.backupVectors(spark, base)
-      assert(StreamingOps.restoreVectors(spark, base)
+      StreamingOps.backup(spark, IndexGroup.vectors(base))
+      assert(StreamingOps.restore(spark, IndexGroup.vectors(base))
         .exists(_.startsWith("restored ")))
-      assert(StreamingOps.checkVectorsBackup(spark, base) === Nil)
+      assert(StreamingOps.checkBackup(spark, IndexGroup.vectors(base)) === Nil)
       // group-level file integrity: damage one committed copy file
       val loc = new org.apache.hadoop.fs.Path(
         spark.conf.get("spark.sql.warehouse.dir"),
@@ -211,10 +212,10 @@ class CommitMarkerSpec extends AnyFunSuite with SparkSuite {
           p.getName.startsWith("."))
         .head
       fs.delete(part, false)
-      assert(StreamingOps.checkVectorsBackup(spark, base)
+      assert(StreamingOps.checkBackup(spark, IndexGroup.vectors(base))
         .exists(_.contains("lost or changed")))
       val e2 = intercept[IllegalArgumentException] {
-        StreamingOps.restoreVectors(spark, base)
+        StreamingOps.restore(spark, IndexGroup.vectors(base))
       }
       assert(e2.getMessage.contains("integrity audit"), e2.getMessage)
     } finally drop(all: _*)

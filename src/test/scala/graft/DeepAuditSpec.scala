@@ -207,10 +207,13 @@ class DeepAuditSpec extends AnyFunSuite with SparkSuite {
           .toDF("doc_id", "text"), s"${base}_band")
       Seq((1L, "h1"), (2L, "h2")).toDF("doc_id", "h")
         .write.saveAsTable(s"${base}_hashes")
-      streaming.StreamingOps.backupDocuments(spark, base, "b0")
-      assert(streaming.StreamingOps.checkDocumentsBackup(spark, base,
+      streaming.StreamingOps.backup(spark,
+        streaming.IndexGroup.documents(base), "b0")
+      assert(streaming.StreamingOps.checkBackup(spark,
+        streaming.IndexGroup.documents(base),
         "b0") === Nil)
-      assert(streaming.StreamingOps.checkDocumentsBackup(spark, base,
+      assert(streaming.StreamingOps.checkBackup(spark,
+        streaming.IndexGroup.documents(base),
         "b0", deep = true) === Nil)
       // bit rot in the STATE copy (group-marker rows) and in a
       // FAMILY copy (family-marker rows) — both same-length
@@ -218,10 +221,11 @@ class DeepAuditSpec extends AnyFunSuite with SparkSuite {
       flipByte(stCopy, TextOps.listDataFiles(spark, stCopy).head._1)
       val famCopy = s"${base}_bm25_bak_b0"
       flipByte(famCopy, TextOps.listDataFiles(spark, famCopy).head._1)
-      assert(streaming.StreamingOps.checkDocumentsBackup(spark, base,
+      assert(streaming.StreamingOps.checkBackup(spark,
+        streaming.IndexGroup.documents(base),
         "b0") === Nil, "shallow group check saw a same-length flip")
-      val deepV = streaming.StreamingOps.checkDocumentsBackup(spark,
-        base, "b0", deep = true)
+      val deepV = streaming.StreamingOps.checkBackup(spark,
+        streaming.IndexGroup.documents(base), "b0", deep = true)
       assert(deepV.exists(v => v.contains(stCopy) &&
         v.contains("content mismatch")), deepV.toString)
       assert(deepV.exists(v => v.contains(famCopy) &&

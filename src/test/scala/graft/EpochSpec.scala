@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.TextOps
 import graft.operators.TextOps.FoldGuard
-import graft.streaming.StreamingOps
+import graft.streaming.{IndexGroup, StreamingOps}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -123,7 +123,7 @@ class EpochSpec extends AnyFunSuite with SparkSuite {
         s"${base}_band", tag, probe).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       var seen: String = null
-      StreamingOps.withDocumentsEpoch(spark, base) { tag =>
+      StreamingOps.withEpoch(spark, IndexGroup.documents(base)) { tag =>
         seen = tag
         val (b1, n1) = (bm(tag), nd(tag))
         assert(b1.nonEmpty && n1.nonEmpty)

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{AnnIndex, TextOps}
-import graft.streaming.StreamingOps
+import graft.streaming.{IndexGroup, StreamingOps}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -45,23 +45,25 @@ class GroupAuditSpec extends AnyFunSuite with SparkSuite {
       TextOps.appendBm25Postings(
         Seq(1L -> "spark join window", 2L -> "hash scan merge")
           .toDF("doc_id", "text"), t, s"${t}_stats")
-      StreamingOps.backupDocuments(spark, base)
-      assert(StreamingOps.checkDocumentsBackup(spark, base) === Nil)
+      StreamingOps.backup(spark, IndexGroup.documents(base))
+      assert(StreamingOps.checkBackup(spark,
+        IndexGroup.documents(base)) === Nil)
       // out-of-band copy of a STATE table the group marker never
       // recorded (`_hashes` did not exist at take time): restore's
       // restoreTable sweep would resurrect it as the live hash store
       Seq(123L).toDF("content_hash")
         .write.saveAsTable(s"${base}_hashes_bak_bak")
-      val v = StreamingOps.checkDocumentsBackup(spark, base)
+      val v = StreamingOps.checkBackup(spark, IndexGroup.documents(base))
       assert(v.exists(m => m.contains("not in the group marker") &&
         m.contains(s"${base}_hashes_bak_bak")), v.toString)
       val e = intercept[IllegalArgumentException] {
-        StreamingOps.restoreDocuments(spark, base)
+        StreamingOps.restore(spark, IndexGroup.documents(base))
       }
       assert(e.getMessage.contains("integrity audit"), e.getMessage)
       drop(s"${base}_hashes_bak_bak")
-      assert(StreamingOps.checkDocumentsBackup(spark, base) === Nil)
-      assert(StreamingOps.restoreDocuments(spark, base)
+      assert(StreamingOps.checkBackup(spark,
+        IndexGroup.documents(base)) === Nil)
+      assert(StreamingOps.restore(spark, IndexGroup.documents(base))
         .exists(_.startsWith("restored ")))
     } finally drop(all: _*)
   }
@@ -83,10 +85,10 @@ class GroupAuditSpec extends AnyFunSuite with SparkSuite {
       TextOps.appendBm25Postings(
         Seq(1L -> "spark join window").toDF("doc_id", "text"),
         t, s"${t}_stats")
-      StreamingOps.backupDocuments(spark, base)
+      StreamingOps.backup(spark, IndexGroup.documents(base))
       // the crashed-backupCk residue: a staging tree under the tag
       fs.mkdirs(staging)
-      StreamingOps.dropDocumentsBackup(spark, base)
+      StreamingOps.dropBackup(spark, IndexGroup.documents(base))
       assert(!fs.exists(staging),
         "dropDocumentsBackup left the crashed staging tree behind")
       assert(!spark.catalog.tableExists(s"${base}_dbakok_bak"))
@@ -109,14 +111,14 @@ class GroupAuditSpec extends AnyFunSuite with SparkSuite {
     refuses(TextOps.restoreIndex(spark, t, "a_b"))
     refuses(TextOps.restoreSnapshot(spark, t, "a_b"))
     refuses(TextOps.dropSnapshot(spark, t, "a_b"))
-    refuses(StreamingOps.backupDocuments(spark, t, "a_b"))
-    refuses(StreamingOps.backupVectors(spark, t, "a_b"))
-    refuses(StreamingOps.dropDocumentsBackup(spark, t, "a_b"))
-    refuses(StreamingOps.dropVectorsBackup(spark, t, "a_b"))
-    refuses(StreamingOps.checkDocumentsBackup(spark, t, "a_b"))
-    refuses(StreamingOps.checkVectorsBackup(spark, t, "a_b"))
-    refuses(StreamingOps.snapshotDocuments(spark, t, "a_b"))
-    refuses(StreamingOps.restoreDocumentsSnapshot(spark, t, "a_b"))
+    refuses(StreamingOps.backup(spark, IndexGroup.documents(t), "a_b"))
+    refuses(StreamingOps.backup(spark, IndexGroup.vectors(t), "a_b"))
+    refuses(StreamingOps.dropBackup(spark, IndexGroup.documents(t), "a_b"))
+    refuses(StreamingOps.dropBackup(spark, IndexGroup.vectors(t), "a_b"))
+    refuses(StreamingOps.checkBackup(spark, IndexGroup.documents(t), "a_b"))
+    refuses(StreamingOps.checkBackup(spark, IndexGroup.vectors(t), "a_b"))
+    refuses(StreamingOps.snapshot(spark, IndexGroup.documents(t), "a_b"))
+    refuses(StreamingOps.restoreSnapshot(spark, IndexGroup.documents(t), "a_b"))
   }
 
   test("ANN: simultaneous band-row and planemod violations converge " +

@@ -210,7 +210,7 @@ class HoldSpec extends AnyFunSuite with SparkSuite {
       assert(hashUniq.length >= 3, "fixture: need hash-unique gated docs")
       val held = hashUniq.take(2)
       // ONE call stamps both member registries — before any ingest
-      streaming.StreamingOps.holdDocuments(spark, base,
+      streaming.StreamingOps.hold(spark, streaming.IndexGroup.documents(base),
         held.toDF("doc_id"))
       sub.write.mode("append").parquet(s"$dir/documents.parquet")
       streaming.StreamingOps.streamingDocumentIngest(spark, dir, base)
@@ -238,8 +238,8 @@ class HoldSpec extends AnyFunSuite with SparkSuite {
         hashUniq(2) -> "zzzctrltok data merge window spark")
         .toDF("doc_id", "text")
         .coalesce(1).write.mode("append").parquet(upsDir)
-      streaming.StreamingOps.streamingDocumentUpserts(spark, upsDir,
-        base)
+      streaming.StreamingOps.streamingUpserts(spark, upsDir,
+        streaming.IndexGroup.documents(base))
       val toks = spark.table(s"${base}_bm25").select("token")
         .distinct().collect().map(_.getString(0)).toSet
       assert(toks.contains("zzzctrltok"), "control upsert did not land")
@@ -269,7 +269,8 @@ class HoldSpec extends AnyFunSuite with SparkSuite {
       val held = Seq(3L, 7L)
       // the one-call twin stamps all five family registries; this
       // stream maintains only the ANN member, which reads its own
-      streaming.StreamingOps.holdVectors(spark, vb, held.toDF("vec_id"))
+      streaming.StreamingOps.hold(spark,
+        streaming.IndexGroup.vectors(vb), held.toDF("vec_id"))
       emb.filter(col("vec_id") < 30).select("vec_id", "embedding")
         .write.mode("append").parquet(s"$dir/embeddings.parquet")
       streaming.StreamingOps.streamingAnnIngest(spark, dir, t)

@@ -113,8 +113,8 @@ class LifecycleSpec extends AnyFunSuite with SparkSuite {
       // 2. CDC upsert: 3 re-crawled with new text, 7 pure insert
       docs(Seq(3L -> 103, 7L -> 7))
         .coalesce(1).write.mode("append").parquet(upsDir)
-      streaming.StreamingOps.streamingDocumentUpserts(spark, upsDir,
-        base)
+      streaming.StreamingOps.streamingUpserts(spark, upsDir,
+        streaming.IndexGroup.documents(base))
       val v2 = docs(Seq(1L -> 1, 2L -> 2, 3L -> 103, 4L -> 4, 5L -> 5,
         6L -> 6, 7L -> 7))
       assertParity(v2, "post-upsert")
@@ -129,8 +129,8 @@ class LifecycleSpec extends AnyFunSuite with SparkSuite {
       // 3. CDC delete: 5 (never touched) and 7 (the upserted insert)
       Seq(5L, 7L).toDF("doc_id")
         .coalesce(1).write.mode("append").parquet(delDir)
-      streaming.StreamingOps.streamingDocumentDeletes(spark, delDir,
-        base)
+      streaming.StreamingOps.streamingDeletes(spark, delDir,
+        streaming.IndexGroup.documents(base))
       val v3 = docs(Seq(1L -> 1, 2L -> 2, 3L -> 103, 4L -> 4, 6L -> 6))
       assertParity(v3, "post-delete")
 
@@ -138,8 +138,8 @@ class LifecycleSpec extends AnyFunSuite with SparkSuite {
       // re-supersedes 3 at a higher barrier and re-attempts 7 — which
       // is TERMINALLY deleted and must stay dead, rows AND stats
       fs.delete(ckOf(s"${base}_ups"), true)
-      streaming.StreamingOps.streamingDocumentUpserts(spark, upsDir,
-        base)
+      streaming.StreamingOps.streamingUpserts(spark, upsDir,
+        streaming.IndexGroup.documents(base))
       assertParity(v3, "post-replay")
 
       // 5. the maintenance pass (forced vacuum folds every barrier

@@ -259,7 +259,8 @@ class MaintainSpec extends AnyFunSuite with SparkSuite {
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("append").parquet(dir)
       // a Refuse default would kill this batch; the hook anchors
-      streaming.StreamingOps.streamingDocumentUpserts(spark, dir, base,
+      streaming.StreamingOps.streamingUpserts(spark, dir,
+        streaming.IndexGroup.documents(base),
         maintain = Some(TextOps.MaintenancePolicy(delFilesMax = 2L)))
       assert(filesIn(s"${bm25T}_del") <= 1L,
         "hook did not fold under the pinned snapshot")
@@ -307,7 +308,8 @@ class MaintainSpec extends AnyFunSuite with SparkSuite {
       Seq((1L, "spark window rewrite", "en", "s0", 20L))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("append").parquet(dir)
-      streaming.StreamingOps.streamingDocumentUpserts(spark, dir, base,
+      streaming.StreamingOps.streamingUpserts(spark, dir,
+        streaming.IndexGroup.documents(base),
         maintain = Some(TextOps.MaintenancePolicy(delFilesMax = 2L)))
       assert(filesIn(s"${bm25T}_del") <= 1L)
     } finally {

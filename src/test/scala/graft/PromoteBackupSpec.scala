@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.TextOps
-import graft.streaming.StreamingOps
+import graft.streaming.{IndexGroup, StreamingOps}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** PROMOTE A DIFFERENTIAL BACKUP TO SELF-CONTAINED (r17): the last
@@ -227,33 +227,35 @@ class PromoteBackupSpec extends AnyFunSuite with SparkSuite {
           (i, s"spark shuffle join token$i data", "en", "s0", 25L))
           .toDF("doc_id", "text", "lang", "source", "n_chars"),
         bandT)
-      StreamingOps.backupDocuments(spark, base, "b0")
+      StreamingOps.backup(spark, IndexGroup.documents(base), "b0")
       TextOps.appendBm25Postings(
         (21L to 22L).map(i => i -> s"spark shuffle join token$i data")
           .toDF("doc_id", "text"), bm25T, s"${bm25T}_stats")
-      StreamingOps.backupDocuments(spark, base, "d1",
+      StreamingOps.backup(spark, IndexGroup.documents(base), "d1",
         baseTag = Some("b0"))
       val asOfD1 = postings(bm25T)
       // before promote: retention protects the borrowed-from base
-      val kept = StreamingOps.pruneDocumentsBackups(spark, base, 1)
+      val kept = StreamingOps.pruneBackups(spark, IndexGroup.documents(base), 1)
       assert(kept.exists(_.startsWith("kept backup b0")),
         kept.toString)
       // promote the group, then the same prune retires b0
-      val notes = StreamingOps.promoteDocuments(spark, base, "d1")
+      val notes = StreamingOps.promote(spark, IndexGroup.documents(base), "d1")
       assert(notes.exists(_.contains("materialized")), notes.toString)
-      assert(StreamingOps.checkDocumentsBackup(spark, base, "d1") ===
+      assert(StreamingOps.checkBackup(spark,
+        IndexGroup.documents(base), "d1") ===
         Nil)
-      val pruned = StreamingOps.pruneDocumentsBackups(spark, base, 1)
+      val pruned = StreamingOps.pruneBackups(spark,
+        IndexGroup.documents(base), 1)
       assert(pruned.exists(_.contains("b0")) &&
         !pruned.exists(_.startsWith("kept backup b0")),
         pruned.toString)
-      assert(StreamingOps.listDocumentsBackups(spark, base) ===
+      assert(StreamingOps.listBackups(spark, IndexGroup.documents(base)) ===
         Seq("d1"))
       // the promoted group restores with its base gone
       TextOps.appendBm25Postings(
         Seq(99L -> "post mutation").toDF("doc_id", "text"),
         bm25T, s"${bm25T}_stats")
-      StreamingOps.restoreDocuments(spark, base, "d1")
+      StreamingOps.restore(spark, IndexGroup.documents(base), "d1")
       assert(postings(bm25T) === asOfD1)
     } finally drop(tables: _*)
   }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.TextOps
-import graft.streaming.StreamingOps
+import graft.streaming.{IndexGroup, StreamingOps}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -78,7 +78,7 @@ class RemediationScaleSpec extends AnyFunSuite with SparkSuite {
         assert(spark.table(s"${base}_quarantine").count() === 600L)
 
         val (summary, remS) = timed {
-          StreamingOps.remediateDocumentQuarantine(spark, base,
+          StreamingOps.remediateQuarantine(spark, IndexGroup.documents(base),
             fix = df => df.withColumn("lang", lit("en")),
             admission = rules).collect()
         }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Quality.Rule._
-import graft.streaming.StreamingOps
+import graft.streaming.{IndexGroup, StreamingOps}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -106,12 +106,12 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
       assert(qBefore === Set(11L, 12L, 31L, 21L))
 
       // the cadence check names the backlog with its clearing verb
-      assert(StreamingOps.dueDocuments(spark, base).exists(_ ==
+      assert(StreamingOps.due(spark, IndexGroup.documents(base)).exists(_ ==
         s"remediate-quarantine:${base}_quarantine rows=4 batches=1"),
-        StreamingOps.dueDocuments(spark, base).mkString("; "))
+        StreamingOps.due(spark, IndexGroup.documents(base)).mkString("; "))
 
-      val summary = StreamingOps.remediateDocumentQuarantine(spark,
-        base, langFix, rules)
+      val summary = StreamingOps.remediateQuarantine(spark,
+        IndexGroup.documents(base), langFix, rules)
       val rows = summary
         .select("quarantined", "healed", "remaining").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -146,8 +146,8 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
       // convergence: the same remediation again heals nothing, the
       // index doesn't grow, the leftover stays
       val postings = spark.table(s"${base}_bm25").count()
-      val again = StreamingOps.remediateDocumentQuarantine(spark,
-        base, langFix, rules)
+      val again = StreamingOps.remediateQuarantine(spark,
+        IndexGroup.documents(base), langFix, rules)
         .select("quarantined", "healed", "remaining").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       assert(again.toSeq === Seq((1L, 0L, 1L)))
@@ -188,15 +188,15 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
       Seq((1L, enText("rewrite zinnia"), "yy", "cdc", 120L))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("append").parquet(upsDir)
-      StreamingOps.streamingDocumentUpserts(spark, upsDir, base,
+      StreamingOps.streamingUpserts(spark, upsDir, IndexGroup.documents(base),
         admission = rules)
       val qBatches = spark.table(s"${base}_ups_quarantine")
         .select("_batch").as[Long].collect().sorted.toSeq
       assert(qBatches.size === 2 && qBatches.distinct.size === 2,
         s"fixture must quarantine two batches, got $qBatches")
 
-      val summary = StreamingOps.remediateDocumentQuarantine(spark,
-        base, langFix, rules, cdc = true)
+      val summary = StreamingOps.remediateQuarantine(spark,
+        IndexGroup.documents(base), langFix, rules, cdc = true)
       val rows = summary
         .select("batch", "quarantined", "healed", "remaining")
         .collect()
@@ -219,9 +219,9 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
       // both partitions scrubbed empty — and GONE as directories;
       // the cadence advisory clears with them
       assert(spark.table(s"${base}_ups_quarantine").count() === 0L)
-      assert(!StreamingOps.dueDocuments(spark, base)
+      assert(!StreamingOps.due(spark, IndexGroup.documents(base))
         .exists(_.startsWith("remediate-quarantine")),
-        StreamingOps.dueDocuments(spark, base).mkString("; "))
+        StreamingOps.due(spark, IndexGroup.documents(base)).mkString("; "))
       val loc = graft.operators.TextOps.tableLocation(spark,
         s"${base}_ups_quarantine")
       val fs = loc.getFileSystem(
@@ -264,7 +264,8 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
       val metricsBefore = spark.table(s"${base}_admission")
         .collect().map(_.toString).sorted.toSeq
 
-      StreamingOps.holdDocuments(spark, base, Seq(11L).toDF("doc_id"))
+      StreamingOps.hold(spark,
+        IndexGroup.documents(base), Seq(11L).toDF("doc_id"))
 
       // the held id's CONTENT left the sink; the loose one stays; the
       // per-rule metrics history is untouched (counts, not content)
@@ -275,7 +276,8 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
 
       // remediation heals the loose doc but can never re-enter the
       // held one (it is gone from the sink AND hold-filtered)
-      StreamingOps.remediateDocumentQuarantine(spark, base, langFix,
+      StreamingOps.remediateQuarantine(spark,
+        IndexGroup.documents(base), langFix,
         rules)
       val indexed = spark.table(s"${base}_bm25")
         .select("doc_id").distinct().as[Long].collect().toSet
@@ -305,7 +307,8 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
         .coalesce(1).write.mode("append")
         .parquet(s"$dir/documents.parquet")
       StreamingOps.streamingDocumentIngest(spark, dir, base)
-      StreamingOps.holdDocuments(spark, base, Seq(1L).toDF("doc_id"))
+      StreamingOps.hold(spark,
+        IndexGroup.documents(base), Seq(1L).toDF("doc_id"))
 
       // one CDC batch: a violating rewrite of the HELD doc and a
       // violating rewrite of a loose one
@@ -314,7 +317,7 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
         (2L, enText("loose rewrite"), "xx", "cdc", 120L))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("append").parquet(upsDir)
-      StreamingOps.streamingDocumentUpserts(spark, upsDir, base,
+      StreamingOps.streamingUpserts(spark, upsDir, IndexGroup.documents(base),
         admission = rules)
 
       // the held doc's rewrite is NOWHERE: not quarantined (no trace),
@@ -360,13 +363,14 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
       Seq((12L, enText("batchtwo sorrel"), "yy", "cdc", 120L))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("append").parquet(upsDir)
-      StreamingOps.streamingDocumentUpserts(spark, upsDir, base,
+      StreamingOps.streamingUpserts(spark, upsDir, IndexGroup.documents(base),
         admission = rules)
       val batches = spark.table(s"${base}_ups_quarantine")
         .select("_batch").as[Long].collect().sorted.toSeq
       assert(batches.size === 2)
 
-      val rows = StreamingOps.remediateDocumentQuarantine(spark, base,
+      val rows = StreamingOps.remediateQuarantine(spark,
+        IndexGroup.documents(base),
         langFix, rules, cdc = true,
         batches = Some(Seq(batches.head)))
         .select("batch", "quarantined", "healed", "remaining")
@@ -415,13 +419,14 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
       Seq((21L, enText("tokennewword"), "yy", "cdc", 150L))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("append").parquet(upsDir)
-      StreamingOps.streamingDocumentUpserts(spark, upsDir, base,
+      StreamingOps.streamingUpserts(spark, upsDir, IndexGroup.documents(base),
         admission = rules)
       val batches = spark.table(s"${base}_ups_quarantine")
         .select("_batch").as[Long].collect().sorted.toSeq
       assert(batches.size === 2)
 
-      val rows = StreamingOps.remediateDocumentQuarantine(spark, base,
+      val rows = StreamingOps.remediateQuarantine(spark,
+        IndexGroup.documents(base),
         langFix, rules, cdc = true,
         batches = Some(Seq(batches.head)))
         .collect()
@@ -462,7 +467,7 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
         Seq(OneOf("lang", Seq("en"))), 1.0, base, 0L, "spec")
       annOpt.foreach(_.unpersist())
       val e = intercept[IllegalArgumentException] {
-        StreamingOps.remediateDocumentQuarantine(spark, base,
+        StreamingOps.remediateQuarantine(spark, IndexGroup.documents(base),
           fix = df => df.drop("doc_id"),
           admission = Seq(OneOf("lang", Seq("en"))))
       }
@@ -488,7 +493,7 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
       // of id 99 (tombstone and append share the batch generation,
       // so neither supersedes the other; scores double-count)
       val e = intercept[IllegalArgumentException] {
-        StreamingOps.remediateDocumentQuarantine(spark, base,
+        StreamingOps.remediateQuarantine(spark, IndexGroup.documents(base),
           fix = df => df.withColumn("doc_id", lit(99L))
             .withColumn("lang", lit("en")),
           admission = Seq(OneOf("lang", Seq("en"))))
@@ -521,7 +526,8 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
         .parquet(s"$dir/documents.parquet")
       StreamingOps.streamingDocumentIngest(spark, dir, base,
         admission = rules)
-      StreamingOps.remediateDocumentQuarantine(spark, base, langFix,
+      StreamingOps.remediateQuarantine(spark,
+        IndexGroup.documents(base), langFix,
         rules)
       assert(spark.table(s"${base}_quarantine")
         .select("doc_id").as[Long].collect().toSet === Set(21L))
@@ -543,8 +549,8 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
 
       // re-remediation converges: 11 heals again as a re-supersede
       // (same content), not a second copy
-      val again = StreamingOps.remediateDocumentQuarantine(spark,
-        base, langFix, rules)
+      val again = StreamingOps.remediateQuarantine(spark,
+        IndexGroup.documents(base), langFix, rules)
         .select("quarantined", "healed", "remaining").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       assert(again.toSeq === Seq((2L, 1L, 1L)))
@@ -624,7 +630,8 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
 
       // the re-run heals the same row again — upsert semantics make
       // that a re-supersede, not a second copy
-      val rows = StreamingOps.remediateDocumentQuarantine(spark, base,
+      val rows = StreamingOps.remediateQuarantine(spark,
+        IndexGroup.documents(base),
         langFix, rules)
         .select("quarantined", "healed", "remaining").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -687,13 +694,13 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
       Seq(9002L -> Array.fill(dim)(0.0f))
         .toDF("vec_id", "embedding")
         .coalesce(1).write.mode("append").parquet(vupsDir)
-      StreamingOps.streamingVectorUpserts(spark, vupsDir, base,
+      StreamingOps.streamingUpserts(spark, vupsDir, IndexGroup.vectors(base),
         admission = vecRules)
       assert(spark.table(s"${base}_vups_quarantine")
         .select("vec_id").as[Long].collect().toSet === Set(9002L))
 
-      val summary = StreamingOps.remediateVectorQuarantine(spark,
-        base,
+      val summary = StreamingOps.remediateQuarantine(spark,
+        IndexGroup.vectors(base),
         fix = df => df.withColumn("embedding",
           transform(col("embedding"), x => lit(0.05f))),
         admission = vecRules, cdc = true)
@@ -722,8 +729,8 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
         admission = vecRules)
       assert(spark.table(s"${base}_quarantine")
         .select("vec_id").as[Long].collect().toSet === Set(9003L))
-      val ingSummary = StreamingOps.remediateVectorQuarantine(spark,
-        base,
+      val ingSummary = StreamingOps.remediateQuarantine(spark,
+        IndexGroup.vectors(base),
         fix = df => df.withColumn("embedding",
           transform(col("embedding"),
             x => when(isnan(x), lit(0.0f)).otherwise(x))),

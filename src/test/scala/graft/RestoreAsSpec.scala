@@ -113,7 +113,8 @@ class RestoreAsSpec extends AnyFunSuite with SparkSuite {
       TextOps.writeBandIndex(
         (1L to 30L).map(i => (i, s"spark shuffle join token$i data"))
           .toDF("doc_id", "text"), s"${base}_band")
-      streaming.StreamingOps.backupDocuments(spark, base, "b0")
+      streaming.StreamingOps.backup(spark,
+        streaming.IndexGroup.documents(base), "b0")
       val bmAt = postings(s"${base}_bm25")
       val bandAt = spark.table(s"${base}_band")
         .selectExpr("band_key", "old_id").collect()
@@ -124,8 +125,8 @@ class RestoreAsSpec extends AnyFunSuite with SparkSuite {
           .toDF("doc_id", "text"), s"${base}_bm25",
         s"${base}_bm25_stats")
 
-      val out = streaming.StreamingOps.restoreDocumentsAs(spark,
-        base, "b0", dr)
+      val out = streaming.StreamingOps.restoreAs(spark,
+        streaming.IndexGroup.documents(base), "b0", dr)
       assert(out.contains(s"restored ${dr}_bm25") &&
         out.contains(s"restored ${dr}_band"), out.toString)
       assert(postings(s"${dr}_bm25") === bmAt)
@@ -139,7 +140,8 @@ class RestoreAsSpec extends AnyFunSuite with SparkSuite {
       assert(postings(s"${base}_bm25").size > bmAt.size)
       // uncommitted groups refuse
       val e = intercept[IllegalArgumentException] {
-        streaming.StreamingOps.restoreDocumentsAs(spark, base,
+        streaming.StreamingOps.restoreAs(spark,
+          streaming.IndexGroup.documents(base),
           "nosuch", dr + "x")
       }
       assert(e.getMessage.contains("no committed group backup"),

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.TextOps
-import graft.streaming.StreamingOps
+import graft.streaming.{IndexGroup, StreamingOps}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** AGE-BASED RETENTION (r17, VERDICT item 6): `pruneSnapshotsOlderThan`
@@ -105,34 +105,38 @@ class RetentionAgeSpec extends AnyFunSuite with SparkSuite {
     drop(all: _*)
     try {
       mk(t, 1L to 6L)
-      StreamingOps.backupDocuments(spark, base, "a")
+      StreamingOps.backup(spark, IndexGroup.documents(base), "a")
       Thread.sleep(30)
-      StreamingOps.backupDocuments(spark, base, "b")
-      assert(StreamingOps.listDocumentsBackups(spark, base) ===
+      StreamingOps.backup(spark, IndexGroup.documents(base), "b")
+      assert(StreamingOps.listBackups(spark, IndexGroup.documents(base)) ===
         Seq("a", "b"))
-      val outK = StreamingOps.pruneDocumentsBackups(spark, base, 1)
+      val outK = StreamingOps.pruneBackups(spark, IndexGroup.documents(base), 1)
       assert(outK === Seq("dropped backup a"), outK.toString)
-      assert(StreamingOps.listDocumentsBackups(spark, base) ===
+      assert(StreamingOps.listBackups(spark, IndexGroup.documents(base)) ===
         Seq("b"))
-      val ages = StreamingOps.listDocumentsBackupsWithAge(spark, base)
-      val outA = StreamingOps.pruneDocumentsBackupsOlderThan(spark,
-        base, olderThanMs = 0L, nowMs = ages.head._2 + 1000L)
+      val ages = StreamingOps.listBackupsWithAge(spark,
+        IndexGroup.documents(base))
+      val outA = StreamingOps.pruneBackupsOlderThan(spark,
+        IndexGroup.documents(base), olderThanMs = 0L,
+        nowMs = ages.head._2 + 1000L)
       assert(outA === Seq("dropped backup b"), outA.toString)
-      assert(StreamingOps.listDocumentsBackups(spark, base) === Nil)
+      assert(StreamingOps.listBackups(spark,
+        IndexGroup.documents(base)) === Nil)
       // snapshot twins
-      StreamingOps.snapshotDocuments(spark, base, "s1")
+      StreamingOps.snapshot(spark, IndexGroup.documents(base), "s1")
       Thread.sleep(30)
-      StreamingOps.snapshotDocuments(spark, base, "s2")
-      val sAges = StreamingOps.listDocumentsSnapshots(spark, base)
+      StreamingOps.snapshot(spark, IndexGroup.documents(base), "s2")
+      val sAges = StreamingOps.listSnapshots(spark, IndexGroup.documents(base))
         .toMap
       val now = sAges("s2") + 1000L
-      val outS = StreamingOps.pruneDocumentsSnapshotsOlderThan(spark,
-        base, olderThanMs = now - (sAges("s1") + sAges("s2")) / 2 - 1,
+      val outS = StreamingOps.pruneSnapshotsOlderThan(spark,
+        IndexGroup.documents(base),
+        olderThanMs = now - (sAges("s1") + sAges("s2")) / 2 - 1,
         nowMs = now)
       assert(outS === Seq("dropped snapshot s1"), outS.toString)
-      assert(StreamingOps.listDocumentsSnapshots(spark, base)
+      assert(StreamingOps.listSnapshots(spark, IndexGroup.documents(base))
         .map(_._1) === Seq("s2"))
-      assert(StreamingOps.checkDocumentsSnapshot(spark, base, "s2")
+      assert(StreamingOps.checkSnapshot(spark, IndexGroup.documents(base), "s2")
         === Nil)
     } finally drop(all: _*)
   }

@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.TextOps
 import graft.operators.TextOps.FoldGuard
-import graft.streaming.StreamingOps
+import graft.streaming.{IndexGroup, StreamingOps}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -128,9 +128,9 @@ class StorageBreakdownSpec extends AnyFunSuite with SparkSuite {
       Tables(spark, sf, "documents").filter(col("doc_id") < 20)
         .write.mode("append").parquet(s"$dir/documents.parquet")
       StreamingOps.streamingDocumentIngest(spark, dir, base)
-      StreamingOps.backupDocuments(spark, base, "g1")
+      StreamingOps.backup(spark, IndexGroup.documents(base), "g1")
 
-      val g = StreamingOps.storageBreakdownDocuments(spark, base)
+      val g = StreamingOps.storageBreakdown(spark, IndexGroup.documents(base))
       val comps = byComp(g)
       assert(Set("live", "state", "checkpoint", "state-backup",
         "ck-backup", "backup", "group-meta").subsetOf(comps.keySet),

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.TextOps
-import graft.streaming.StreamingOps
+import graft.streaming.{IndexGroup, StreamingOps}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -58,17 +58,19 @@ class StreamDiffBackupSpec extends AnyFunSuite with SparkSuite {
           (i, s"spark shuffle join token$i data", "en", "s0", 25L))
           .toDF("doc_id", "text", "lang", "source", "n_chars"),
         bandT)
-      StreamingOps.backupDocuments(spark, base, "b0")
-      assert(StreamingOps.checkDocumentsBackup(spark, base, "b0") ===
+      StreamingOps.backup(spark, IndexGroup.documents(base), "b0")
+      assert(StreamingOps.checkBackup(spark,
+        IndexGroup.documents(base), "b0") ===
         Nil)
       val fullBm = ownBytes(s"${bm25T}_bak_b0")
       // the append window touches ONLY the bm25 member
       TextOps.appendBm25Postings(
         (31L to 33L).map(i => i -> s"spark shuffle join token$i data")
           .toDF("doc_id", "text"), bm25T, s"${bm25T}_stats")
-      StreamingOps.backupDocuments(spark, base, "d1",
+      StreamingOps.backup(spark, IndexGroup.documents(base), "d1",
         baseTag = Some("b0"))
-      assert(StreamingOps.checkDocumentsBackup(spark, base, "d1") ===
+      assert(StreamingOps.checkBackup(spark,
+        IndexGroup.documents(base), "d1") ===
         Nil)
       // bm25's differential copies the window, not the corpus...
       val diffBm = ownBytes(s"${bm25T}_bak_d1")
@@ -85,27 +87,29 @@ class StreamDiffBackupSpec extends AnyFunSuite with SparkSuite {
         Seq(99L -> "post backup mutation").toDF("doc_id", "text"),
         bm25T, s"${bm25T}_stats")
       assert(postings(bm25T) !== asOfD1)
-      val out = StreamingOps.restoreDocuments(spark, base, "d1")
+      val out = StreamingOps.restore(spark, IndexGroup.documents(base), "d1")
       assert(out.exists(_.startsWith("restored ")), out.toString)
       assert(postings(bm25T) === asOfD1)
       // the base group is protected while d1 lives: direct drop
       // refuses BEFORE touching the group marker...
       val e = intercept[IllegalArgumentException] {
-        StreamingOps.dropDocumentsBackup(spark, base, "b0")
+        StreamingOps.dropBackup(spark, IndexGroup.documents(base), "b0")
       }
       assert(e.getMessage.contains("d1"), e.getMessage)
       assert(spark.catalog.tableExists(s"${base}_dbakok_b0"),
         "refused drop must leave the group marker in place")
       // ...and retention keeps it with a note
-      val pruned = StreamingOps.pruneDocumentsBackups(spark, base, 1)
+      val pruned = StreamingOps.pruneBackups(spark,
+        IndexGroup.documents(base), 1)
       assert(pruned.exists(v => v.startsWith("kept backup b0") &&
         v.contains("d1")), pruned.toString)
-      assert(StreamingOps.listDocumentsBackups(spark, base) ===
+      assert(StreamingOps.listBackups(spark, IndexGroup.documents(base)) ===
         Seq("b0", "d1"))
       // dependents first, then the base clears
-      StreamingOps.dropDocumentsBackup(spark, base, "d1")
-      StreamingOps.dropDocumentsBackup(spark, base, "b0")
-      assert(StreamingOps.listDocumentsBackups(spark, base) === Nil)
+      StreamingOps.dropBackup(spark, IndexGroup.documents(base), "d1")
+      StreamingOps.dropBackup(spark, IndexGroup.documents(base), "b0")
+      assert(StreamingOps.listBackups(spark,
+        IndexGroup.documents(base)) === Nil)
     } finally drop(tables: _*)
   }
 
@@ -121,13 +125,14 @@ class StreamDiffBackupSpec extends AnyFunSuite with SparkSuite {
       TextOps.appendBm25Postings(
         (1L to 12L).map(i => i -> s"spark token$i")
           .toDF("doc_id", "text"), bm25T, s"${bm25T}_stats")
-      StreamingOps.backupDocuments(spark, base, "b0")
+      StreamingOps.backup(spark, IndexGroup.documents(base), "b0")
       TextOps.appendBm25Postings(
         Seq(13L -> "window append").toDF("doc_id", "text"),
         bm25T, s"${bm25T}_stats")
-      StreamingOps.backupDocuments(spark, base, "d1",
+      StreamingOps.backup(spark, IndexGroup.documents(base), "d1",
         baseTag = Some("b0"))
-      assert(StreamingOps.checkDocumentsBackup(spark, base, "d1") ===
+      assert(StreamingOps.checkBackup(spark,
+        IndexGroup.documents(base), "d1") ===
         Nil)
       // damage the BASE copy the d1 take borrows from
       val loc = TextOps.tableLocation(spark, s"${bm25T}_bak_b0")
@@ -136,10 +141,10 @@ class StreamDiffBackupSpec extends AnyFunSuite with SparkSuite {
       val victim = TextOps.listDataFiles(spark, s"${bm25T}_bak_b0")
         .map(_._1).min
       fs.delete(new org.apache.hadoop.fs.Path(loc, victim), false)
-      val v = StreamingOps.checkDocumentsBackup(spark, base, "d1")
+      val v = StreamingOps.checkBackup(spark, IndexGroup.documents(base), "d1")
       assert(v.exists(_.contains("borrowed file")), v.toString)
       val e = intercept[IllegalArgumentException] {
-        StreamingOps.restoreDocuments(spark, base, "d1")
+        StreamingOps.restore(spark, IndexGroup.documents(base), "d1")
       }
       assert(e.getMessage.contains("integrity audit"), e.getMessage)
     } finally drop(tables: _*)

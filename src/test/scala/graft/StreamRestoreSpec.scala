@@ -78,11 +78,12 @@ class StreamRestoreSpec extends AnyFunSuite with SparkSuite {
       Seq(anchor -> "alpha merge join spark window stream")
         .toDF("doc_id", "text")
         .coalesce(1).write.mode("append").parquet(upsDir)
-      streaming.StreamingOps.streamingDocumentUpserts(spark, upsDir,
-        base)
+      streaming.StreamingOps.streamingUpserts(spark, upsDir,
+        streaming.IndexGroup.documents(base))
 
       val snap = state(members)
-      val written = streaming.StreamingOps.backupDocuments(spark, base)
+      val written = streaming.StreamingOps.backup(spark,
+        streaming.IndexGroup.documents(base))
       assert(written.exists(_.contains("_bm25_bak_bak")) &&
         written.exists(_.endsWith("_ck_bak_bak")), written.toString)
 
@@ -94,18 +95,19 @@ class StreamRestoreSpec extends AnyFunSuite with SparkSuite {
       Seq(anchor -> "beta rewrite content after snapshot spark")
         .toDF("doc_id", "text")
         .coalesce(1).write.mode("append").parquet(upsDir)
-      streaming.StreamingOps.streamingDocumentUpserts(spark, upsDir,
-        base)
+      streaming.StreamingOps.streamingUpserts(spark, upsDir,
+        streaming.IndexGroup.documents(base))
       val victim = spark.table(s"${base}_bm25")
         .select(max("doc_id")).collect()(0).getLong(0)
       Seq(victim).toDF("doc_id")
         .coalesce(1).write.mode("append").parquet(delDir)
-      streaming.StreamingOps.streamingDocumentDeletes(spark, delDir,
-        base)
+      streaming.StreamingOps.streamingDeletes(spark, delDir,
+        streaming.IndexGroup.documents(base))
       val full = state(members)
       assert(full !== snap, "post-snapshot life must change state")
 
-      val did = streaming.StreamingOps.restoreDocuments(spark, base)
+      val did = streaming.StreamingOps.restore(spark,
+        streaming.IndexGroup.documents(base))
       assert(did.exists(_.startsWith("restored ")), did.toString)
       assert(state(members) === snap,
         "restore did not return the member snapshot")
@@ -113,10 +115,10 @@ class StreamRestoreSpec extends AnyFunSuite with SparkSuite {
       // the strong contract: re-invoking the three streams replays
       // exactly the post-snapshot files and converges on `full`
       streaming.StreamingOps.streamingDocumentIngest(spark, dir, base)
-      streaming.StreamingOps.streamingDocumentUpserts(spark, upsDir,
-        base)
-      streaming.StreamingOps.streamingDocumentDeletes(spark, delDir,
-        base)
+      streaming.StreamingOps.streamingUpserts(spark, upsDir,
+        streaming.IndexGroup.documents(base))
+      streaming.StreamingOps.streamingDeletes(spark, delDir,
+        streaming.IndexGroup.documents(base))
       assert(state(members) === full,
         "restore + replay diverged from the never-crashed state")
       assert(TextOps.fsckBm25(spark, s"${base}_bm25",
@@ -159,7 +161,7 @@ class StreamRestoreSpec extends AnyFunSuite with SparkSuite {
         .write.mode("append").parquet(s"$dir/embeddings.parquet")
       streaming.StreamingOps.streamingAllIndexIngest(spark, dir, base)
       val snap = state(members)
-      streaming.StreamingOps.backupVectors(spark, base)
+      streaming.StreamingOps.backup(spark, streaming.IndexGroup.vectors(base))
 
       // post-snapshot: more corpus, a re-embed upsert, a delete
       emb.filter(col("vec_id") >= 30 && col("vec_id") < 60)
@@ -170,20 +172,24 @@ class StreamRestoreSpec extends AnyFunSuite with SparkSuite {
         .select(col("vec_id"),
           expr("transform(embedding, x -> x + 1.0d)").as("embedding"))
         .coalesce(1).write.mode("append").parquet(upsDir)
-      streaming.StreamingOps.streamingVectorUpserts(spark, upsDir, base)
+      streaming.StreamingOps.streamingUpserts(spark, upsDir,
+        streaming.IndexGroup.vectors(base))
       Seq(7L).toDF("vec_id")
         .coalesce(1).write.mode("append").parquet(delDir)
-      streaming.StreamingOps.streamingVectorDeletes(spark, delDir, base)
+      streaming.StreamingOps.streamingDeletes(spark, delDir,
+        streaming.IndexGroup.vectors(base))
       val full = state(members)
       assert(full !== snap)
 
-      streaming.StreamingOps.restoreVectors(spark, base)
+      streaming.StreamingOps.restore(spark, streaming.IndexGroup.vectors(base))
       assert(state(members) === snap,
         "restore did not return the vector snapshot")
       // replay: same invocation order as the original life
       streaming.StreamingOps.streamingAllIndexIngest(spark, dir, base)
-      streaming.StreamingOps.streamingVectorUpserts(spark, upsDir, base)
-      streaming.StreamingOps.streamingVectorDeletes(spark, delDir, base)
+      streaming.StreamingOps.streamingUpserts(spark, upsDir,
+        streaming.IndexGroup.vectors(base))
+      streaming.StreamingOps.streamingDeletes(spark, delDir,
+        streaming.IndexGroup.vectors(base))
       assert(state(members) === full,
         "restore + replay diverged from the never-crashed state")
       // no duplicate appends: a (vec_id, gen) pair appears once — the
@@ -219,28 +225,32 @@ class StreamRestoreSpec extends AnyFunSuite with SparkSuite {
       val sp = spark
       import sp.implicits._
       intercept[IllegalArgumentException] {
-        streaming.StreamingOps.restoreDocuments(spark, base)
+        streaming.StreamingOps.restore(spark,
+          streaming.IndexGroup.documents(base))
       }
       intercept[IllegalArgumentException] {
-        streaming.StreamingOps.backupDocuments(spark, base)
+        streaming.StreamingOps.backup(spark,
+          streaming.IndexGroup.documents(base))
       }
       intercept[IllegalArgumentException] {
-        streaming.StreamingOps.restoreVectors(spark, base)
+        streaming.StreamingOps.restore(spark,
+          streaming.IndexGroup.vectors(base))
       }
       docs.filter(col("doc_id") < 15)
         .write.mode("append").parquet(s"$dir/documents.parquet")
       streaming.StreamingOps.streamingDocumentIngest(spark, dir, base)
-      streaming.StreamingOps.backupDocuments(spark, base)
+      streaming.StreamingOps.backup(spark, streaming.IndexGroup.documents(base))
       // the ups stream is born AFTER the snapshot
       val anchor = spark.table(s"${base}_bm25")
         .select(min("doc_id")).collect()(0).getLong(0)
       Seq(anchor -> "post snapshot upsert content spark")
         .toDF("doc_id", "text")
         .coalesce(1).write.mode("append").parquet(upsDir)
-      streaming.StreamingOps.streamingDocumentUpserts(spark, upsDir,
-        base)
+      streaming.StreamingOps.streamingUpserts(spark, upsDir,
+        streaming.IndexGroup.documents(base))
       assert(spark.catalog.tableExists(s"${base}_ups_ledger"))
-      val did = streaming.StreamingOps.restoreDocuments(spark, base)
+      val did = streaming.StreamingOps.restore(spark,
+        streaming.IndexGroup.documents(base))
       assert(did.contains(
         s"dropped ${base}_ups_ledger (absent at snapshot)"),
         did.toString)
@@ -249,8 +259,8 @@ class StreamRestoreSpec extends AnyFunSuite with SparkSuite {
       assert(!spark.catalog.tableExists(s"${base}_ups_ledger"))
       // ledger + checkpoint rewound as a PAIR: replaying the CDC file
       // re-applies it (idempotent by content), never skips it
-      streaming.StreamingOps.streamingDocumentUpserts(spark, upsDir,
-        base)
+      streaming.StreamingOps.streamingUpserts(spark, upsDir,
+        streaming.IndexGroup.documents(base))
       val txt = spark.table(s"${base}_bm25")
         .filter(col("doc_id") === anchor).select("token")
         .collect().map(_.getString(0)).toSet

@@ -78,12 +78,12 @@ class StreamSnapshotSpec extends AnyFunSuite with SparkSuite {
       Seq(anchor -> "alpha merge join spark window stream")
         .toDF("doc_id", "text")
         .coalesce(1).write.mode("append").parquet(upsDir)
-      streaming.StreamingOps.streamingDocumentUpserts(spark, upsDir,
-        base)
+      streaming.StreamingOps.streamingUpserts(spark, upsDir,
+        streaming.IndexGroup.documents(base))
 
       val snap = state(members)
-      val written = streaming.StreamingOps.snapshotDocuments(spark,
-        base)
+      val written = streaming.StreamingOps.snapshot(spark,
+        streaming.IndexGroup.documents(base))
       assert(written.exists(_.startsWith(s"manifest ${base}_mf_snap")),
         written.toString)
       // the O(metadata) claim, structurally: NO copy of any payload
@@ -100,14 +100,14 @@ class StreamSnapshotSpec extends AnyFunSuite with SparkSuite {
       Seq(anchor -> "beta rewrite content after snapshot spark")
         .toDF("doc_id", "text")
         .coalesce(1).write.mode("append").parquet(upsDir)
-      streaming.StreamingOps.streamingDocumentUpserts(spark, upsDir,
-        base)
+      streaming.StreamingOps.streamingUpserts(spark, upsDir,
+        streaming.IndexGroup.documents(base))
       val victim = spark.table(s"${base}_bm25")
         .select(max("doc_id")).collect()(0).getLong(0)
       Seq(victim).toDF("doc_id")
         .coalesce(1).write.mode("append").parquet(delDir)
-      streaming.StreamingOps.streamingDocumentDeletes(spark, delDir,
-        base)
+      streaming.StreamingOps.streamingDeletes(spark, delDir,
+        streaming.IndexGroup.documents(base))
       val full = state(members)
       assert(full !== snap)
 
@@ -134,8 +134,8 @@ class StreamSnapshotSpec extends AnyFunSuite with SparkSuite {
       assert(ndAsOf.contains((probeId + 9000L, probeId)),
         ndAsOf.toString)
 
-      val did = streaming.StreamingOps.restoreDocumentsSnapshot(spark,
-        base)
+      val did = streaming.StreamingOps.restoreSnapshot(spark,
+        streaming.IndexGroup.documents(base))
       assert(did.exists(_.startsWith("pruned ")), did.toString)
       assert(state(members) === snap,
         "manifest restore did not return the member snapshot")
@@ -149,10 +149,10 @@ class StreamSnapshotSpec extends AnyFunSuite with SparkSuite {
         "group-tag near-dup as-of diverged from the restored group")
 
       streaming.StreamingOps.streamingDocumentIngest(spark, dir, base)
-      streaming.StreamingOps.streamingDocumentUpserts(spark, upsDir,
-        base)
-      streaming.StreamingOps.streamingDocumentDeletes(spark, delDir,
-        base)
+      streaming.StreamingOps.streamingUpserts(spark, upsDir,
+        streaming.IndexGroup.documents(base))
+      streaming.StreamingOps.streamingDeletes(spark, delDir,
+        streaming.IndexGroup.documents(base))
       assert(state(members) === full,
         "restore + replay diverged from the never-crashed state")
       assert(TextOps.fsckBm25(spark, s"${base}_bm25",
@@ -176,8 +176,10 @@ class StreamSnapshotSpec extends AnyFunSuite with SparkSuite {
       docs.filter(col("doc_id") < 15)
         .write.mode("append").parquet(s"$dir/documents.parquet")
       streaming.StreamingOps.streamingDocumentIngest(spark, dir, base)
-      streaming.StreamingOps.snapshotDocuments(spark, base)
-      assert(streaming.StreamingOps.checkDocumentsSnapshot(spark, base)
+      streaming.StreamingOps.snapshot(spark,
+        streaming.IndexGroup.documents(base))
+      assert(streaming.StreamingOps.checkSnapshot(spark,
+        streaming.IndexGroup.documents(base))
         .isEmpty, "a fresh stream snapshot must check clean")
       // post-snapshot: more corpus AND a compaction of ONE member —
       // the group restore must refuse as a unit even though the band
@@ -193,12 +195,13 @@ class StreamSnapshotSpec extends AnyFunSuite with SparkSuite {
           spark.conf.get("spark.sql.warehouse.dir"),
           base.toLowerCase + "_ck")).toSet
       // the cadence check names the problem BEFORE recovery day...
-      val chk = streaming.StreamingOps.checkDocumentsSnapshot(spark,
-        base)
+      val chk = streaming.StreamingOps.checkSnapshot(spark,
+        streaming.IndexGroup.documents(base))
       assert(chk.exists(_.contains("missing")), chk.toString)
       // ...and the restore refuses on the same evidence
       val e = intercept[IllegalArgumentException] {
-        streaming.StreamingOps.restoreDocumentsSnapshot(spark, base)
+        streaming.StreamingOps.restoreSnapshot(spark,
+          streaming.IndexGroup.documents(base))
       }
       assert(e.getMessage.contains("history was rewritten") &&
         e.getMessage.contains("copy-based"), e.getMessage)
@@ -211,8 +214,8 @@ class StreamSnapshotSpec extends AnyFunSuite with SparkSuite {
         "a refused group restore touched a checkpoint")
       // no snapshot at all refuses too
       intercept[IllegalArgumentException] {
-        streaming.StreamingOps.restoreDocumentsSnapshot(spark,
-          s"${base}_nothere")
+        streaming.StreamingOps.restoreSnapshot(spark,
+          streaming.IndexGroup.documents(s"${base}_nothere"))
       }
     } finally {
       drop(docArtifacts(base): _*)
@@ -253,7 +256,7 @@ class StreamSnapshotSpec extends AnyFunSuite with SparkSuite {
         .write.mode("append").parquet(s"$dir/embeddings.parquet")
       streaming.StreamingOps.streamingAllIndexIngest(spark, dir, base)
       val snap = state(members)
-      streaming.StreamingOps.snapshotVectors(spark, base)
+      streaming.StreamingOps.snapshot(spark, streaming.IndexGroup.vectors(base))
       emb.filter(col("vec_id") >= 30 && col("vec_id") < 50)
         .select("vec_id", "embedding")
         .write.mode("append").parquet(s"$dir/embeddings.parquet")
@@ -278,7 +281,8 @@ class StreamSnapshotSpec extends AnyFunSuite with SparkSuite {
       // post-snapshot members (vec_id >= 30) are invisible at the tag
       assert(!annAsOf.keySet.exists(_._2 >= 30L) &&
         !sqAsOf.keySet.exists(_._2 >= 30L))
-      streaming.StreamingOps.restoreVectorsSnapshot(spark, base)
+      streaming.StreamingOps.restoreSnapshot(spark,
+        streaming.IndexGroup.vectors(base))
       assert(state(members) === snap,
         "manifest restore did not return the vector snapshot")
       // ...and the as-of answers equal what the restored group serves

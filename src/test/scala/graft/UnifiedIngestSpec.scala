@@ -114,7 +114,7 @@ class UnifiedIngestSpec extends AnyFunSuite with SparkSuite {
       assert(spark.table(s"${base}_bm25_stats").collect()(0)
         .getLong(0) === liveN)
       // vacuum folds both lists; the probes see the same live corpus
-      streaming.StreamingOps.vacuumDocuments(spark, base)
+      streaming.StreamingOps.vacuum(spark, streaming.IndexGroup.documents(base))
       assert(!spark.catalog.tableExists(s"${base}_band_del"))
       assert(!spark.catalog.tableExists(s"${base}_bm25_del"))
       assert(deadBand() === 0L)
@@ -143,8 +143,8 @@ class UnifiedIngestSpec extends AnyFunSuite with SparkSuite {
       val statsFull = spark.table(s"${base}_bm25_stats").collect()(0)
       (0L until 30L).toDF("doc_id").write.mode("append")
         .parquet(s"$delDir/dels.parquet")
-      streaming.StreamingOps.streamingDocumentDeletes(spark,
-        s"$delDir/dels.parquet", base)
+      streaming.StreamingOps.streamingDeletes(spark,
+        s"$delDir/dels.parquet", streaming.IndexGroup.documents(base))
       val statsDel = spark.table(s"${base}_bm25_stats").collect()(0)
       assert(statsDel.getLong(0) < statsFull.getLong(0))
       def dead() = TextOps.liveBandIndex(spark, s"${base}_band")
@@ -152,14 +152,14 @@ class UnifiedIngestSpec extends AnyFunSuite with SparkSuite {
       assert(dead() === 0L)
       // re-run with no new files: the ledger skips everything, stats
       // do not move (the double-subtract guard, stream-shaped)
-      streaming.StreamingOps.streamingDocumentDeletes(spark,
-        s"$delDir/dels.parquet", base)
+      streaming.StreamingOps.streamingDeletes(spark,
+        s"$delDir/dels.parquet", streaming.IndexGroup.documents(base))
       assert(spark.table(s"${base}_bm25_stats").collect()(0) === statsDel)
       // a second batch of deletions arrives
       (30L until 40L).toDF("doc_id").write.mode("append")
         .parquet(s"$delDir/dels.parquet")
-      streaming.StreamingOps.streamingDocumentDeletes(spark,
-        s"$delDir/dels.parquet", base)
+      streaming.StreamingOps.streamingDeletes(spark,
+        s"$delDir/dels.parquet", streaming.IndexGroup.documents(base))
       assert(TextOps.liveBandIndex(spark, s"${base}_band")
         .filter(col("old_id") < 40L).count() === 0L)
     } finally {
@@ -203,7 +203,8 @@ class UnifiedIngestSpec extends AnyFunSuite with SparkSuite {
           .withColumn("doc_id", lit(9000L)))
         .select("doc_id", "text")
       batch.coalesce(1).write.mode("append").parquet(upsDir)
-      streaming.StreamingOps.streamingDocumentUpserts(spark, upsDir, base)
+      streaming.StreamingOps.streamingUpserts(spark, upsDir,
+        streaming.IndexGroup.documents(base))
 
       // MEMBER LOSS: the band member vanishes; the next ingest call
       // resets the family and replays the original corpus
@@ -211,7 +212,8 @@ class UnifiedIngestSpec extends AnyFunSuite with SparkSuite {
       streaming.StreamingOps.streamingDocumentIngest(spark, dir, base)
       // ...and the upsert stream, re-invoked with NO new files, must
       // replay its CDC files (its ledger/checkpoint were reset too)
-      streaming.StreamingOps.streamingDocumentUpserts(spark, upsDir, base)
+      streaming.StreamingOps.streamingUpserts(spark, upsDir,
+        streaming.IndexGroup.documents(base))
 
       // reference: independent build over the gated corpus + the same
       // upsert applied directly

@@ -41,28 +41,35 @@ class UnifiedVerbsSpec extends AnyFunSuite with SparkSuite {
         s"${base}_bm25_stats")
       TextOps.appendBandIndex(docs, s"${base}_band")
 
-      val st = streaming.StreamingOps.describeDocuments(spark, base)
+      val st = streaming.StreamingOps.describe(spark,
+        streaming.IndexGroup.documents(base))
       assert(st.keySet === Set(s"${base}_band", s"${base}_bm25"))
       assert(st(s"${base}_bm25").stats.get("n_docs").contains(2L),
         st(s"${base}_bm25").toString)
-      assert(streaming.StreamingOps.fsckDocuments(spark, base).isEmpty)
-      assert(streaming.StreamingOps.repairDocuments(spark, base).isEmpty,
+      assert(streaming.StreamingOps.fsck(spark,
+        streaming.IndexGroup.documents(base)).isEmpty)
+      assert(streaming.StreamingOps.repair(spark,
+        streaming.IndexGroup.documents(base)).isEmpty,
         "repair mutated a healthy family")
       // maintain is advisory-gauged: on a tiny fresh family it runs
       // zero or more ops — the contract here is just that ONE call
       // covers both members without throwing
-      streaming.StreamingOps.maintainDocuments(spark, base)
+      streaming.StreamingOps.maintain(spark,
+        streaming.IndexGroup.documents(base))
 
       // inject the crash-class corruption fsck exists to catch
       Seq((99L, 99L)).toDF("n_docs", "sum_dl")
         .write.mode("overwrite").saveAsTable(s"${base}_bm25_stats")
-      val v = streaming.StreamingOps.fsckDocuments(spark, base)
+      val v = streaming.StreamingOps.fsck(spark,
+        streaming.IndexGroup.documents(base))
       assert(v.nonEmpty && v.forall(_.startsWith(s"${base}_bm25: ")),
         v.toString)
-      val healed = streaming.StreamingOps.repairDocuments(spark, base)
+      val healed = streaming.StreamingOps.repair(spark,
+        streaming.IndexGroup.documents(base))
       assert(healed.exists(_.contains("recomputed stats")),
         healed.toString)
-      assert(streaming.StreamingOps.fsckDocuments(spark, base).isEmpty,
+      assert(streaming.StreamingOps.fsck(spark,
+        streaming.IndexGroup.documents(base)).isEmpty,
         "unified repair did not converge")
     } finally drop(all: _*)
   }
@@ -89,17 +96,21 @@ class UnifiedVerbsSpec extends AnyFunSuite with SparkSuite {
       BqIndex.write(emb, s"${base}_bq", dim = dim)
       SqIndex.write(emb, s"${base}_sq", dim = dim)
 
-      val st = streaming.StreamingOps.describeVectors(spark, base)
+      val st = streaming.StreamingOps.describe(spark,
+        streaming.IndexGroup.vectors(base))
       assert(st.keySet ===
         Set(s"${base}_ann", s"${base}_bq", s"${base}_sq"), st.keySet)
-      assert(streaming.StreamingOps.fsckVectors(spark, base).isEmpty)
-      assert(streaming.StreamingOps.repairVectors(spark, base).isEmpty)
-      streaming.StreamingOps.maintainVectors(spark, base)
+      assert(streaming.StreamingOps.fsck(spark,
+        streaming.IndexGroup.vectors(base)).isEmpty)
+      assert(streaming.StreamingOps.repair(spark,
+        streaming.IndexGroup.vectors(base)).isEmpty)
+      streaming.StreamingOps.maintain(spark, streaming.IndexGroup.vectors(base))
 
       // a delete leaves tombstone debt the unified describe reports
       AnnIndex.delete(spark, s"${base}_ann",
         Seq(3L).toDF("vec_id"))
-      val st2 = streaming.StreamingOps.describeVectors(spark, base)
+      val st2 = streaming.StreamingOps.describe(spark,
+        streaming.IndexGroup.vectors(base))
       assert(st2(s"${base}_ann").delRows >= 1L)
       assert(st2(s"${base}_bq").delRows === 0L)
     } finally drop(all: _*)

@@ -384,7 +384,8 @@ class UpsertSpec extends AnyFunSuite with SparkSuite {
       parts.zipWithIndex.foreach { case (st, i) =>
         fs.setTimes(st.getPath, st.getModificationTime + i * 10000L, -1L)
       }
-      streaming.StreamingOps.streamingDocumentUpserts(spark, dir, base)
+      streaming.StreamingOps.streamingUpserts(spark, dir,
+        streaming.IndexGroup.documents(base))
       // batch reference: the same two upserts in the same order
       val refT = s"${base}_ref"
       drop(refT, s"${refT}_stats", s"${refT}_del", s"${refT}_band")
@@ -401,7 +402,8 @@ class UpsertSpec extends AnyFunSuite with SparkSuite {
       assert(scores(docT) === scores(refT))
       assert(scores(docT).nonEmpty)
       // IDEMPOTENT re-invocation: no new files → nothing changes
-      streaming.StreamingOps.streamingDocumentUpserts(spark, dir, base)
+      streaming.StreamingOps.streamingUpserts(spark, dir,
+        streaming.IndexGroup.documents(base))
       assert(scores(docT) === scores(refT))
       drop(refT, s"${refT}_stats", s"${refT}_del")
 
@@ -417,8 +419,8 @@ class UpsertSpec extends AnyFunSuite with SparkSuite {
         ks = 8)
       IvfIndex.write(vv1, s"${vbase}_ivf", k = 4, dim = dim)
       vbatch.coalesce(1).write.mode("append").parquet(vdir)
-      streaming.StreamingOps.streamingVectorUpserts(spark, vdir, vbase,
-        nBands = 4, bits = 2, dim = dim)
+      streaming.StreamingOps.streamingUpserts(spark, vdir,
+        streaming.IndexGroup.vectors(vbase))
       // twin: the batch upserts applied directly
       val tws = fams2(vbase + "2")
       drop(tws: _*)
