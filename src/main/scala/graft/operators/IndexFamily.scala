@@ -1,0 +1,215 @@
+package graft.operators
+
+import graft.operators.{TextOps => TO}
+import graft.operators.IndexFamily.Heal
+import graft.operators.TextOps.{FoldGuard, IndexStatus, MaintenancePolicy}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+
+/** ONE stored index family's lifecycle — hold, delete, vacuum,
+  * maintain, describe, fsck and repair, written once over the tables
+  * the family owns. The five vector families, the BM25 postings and the
+  * band index are instances; each kind keeps only its write/append/
+  * upsert/probe code plus the data below, so the verbs cannot drift
+  * apart per family (REPOSE's one-probe-contract idea, applied to the
+  * lifecycle).
+  *
+  * Built only by the per-kind constructors — [[AnnIndex.family]],
+  * [[IvfIndex.family]], [[PqIndex.family]], [[BqIndex.family]],
+  * [[SqIndex.family]], [[TextOps.bm25Family]], [[TextOps.bandFamily]]
+  * — so the only values a caller sets are table names. What a kind
+  * supplies:
+  *   - `members`: the bucketed data tables — vacuum rewrites them,
+  *     maintain compacts them, describe reports their file health,
+  *     fsck audits one live generation per id across them;
+  *   - `swapSiblings`: the non-member tables a refresh swap-promotes
+  *     with the members (IVF `_cent`, PQ `_cb`) — the crashed-swap
+  *     audit and heal cover these, the members and the `_del` list;
+  *   - `idCol`: the stored id column; `callerIdCol`: the id column
+  *     hold/delete callers pass (band postings store `old_id` and are
+  *     addressed by `doc_id`);
+  *   - `sidecar`: the (noun, table) sibling without which the stored
+  *     rows cannot be audited at all — the `_cfg` pin, the IVF
+  *     quantizer, the PQ codebook; its loss is reported alone;
+  *   - `statsTable`: the BM25 corpus-stats sibling — describe reports
+  *     it, and deletes go through its write-ahead log
+  *     ([[TextOps.deleteBm25Docs]]) so the stats shrink with the
+  *     postings;
+  *   - `cfgOf`: the build config describe reports;
+  *   - `invariant`: the kind's structural audit over the live rows
+  *     (handed a member → live-rows function);
+  *   - `heals`: repair heals beyond the two every family shares
+  *     (crashed swaps, multi-generation ids), in run order;
+  *   - `quantizer`: the drift gauge and retrain-and-swap of a frozen-
+  *     quantizer family (IVF, PQ).
+  */
+final class IndexFamily private[operators] (
+    val table: String,
+    val members: Seq[String],
+    val idCol: String,
+    callerIdCol: String,
+    swapSiblings: Seq[String] = Nil,
+    sidecar: Option[(String, String)] = None,
+    statsTable: Option[String] = None,
+    cfgOf: SparkSession => Map[String, Int] = _ => Map.empty,
+    invariant: (SparkSession, String => DataFrame) => Seq[String] =
+      (_, _) => Nil,
+    heals: Seq[IndexFamily.Heal] = Nil,
+    quantizer: Option[IndexFamily.Quantizer] = None) {
+
+  def delTable: String = table + "_del"
+  def holdTable: String = table + "_hold"
+  /** A frozen-quantizer family (IVF, PQ): its maintain takes a
+    * `refreshWith` corpus. */
+  def quantized: Boolean = quantizer.nonEmpty
+
+  /** Every swap-promoted table, the base first (the group-swap
+    * marker's name). */
+  private def swapMembers: Seq[String] =
+    members ++ swapSiblings :+ delTable
+
+  /** `member`'s rows that answer probes (tombstones subtracted). */
+  private def live(s: SparkSession)(member: String): DataFrame =
+    TO.exceptTombstones(s.table(member), s, delTable, idCol)
+
+  /** Place a LEGAL HOLD on ids (r15 — see [[TextOps.holdIds]]): the
+    * `<table>_hold` sibling is an append-only id set filtered at every
+    * write/append/upsert/refresh entry of the family, surviving vacuum
+    * by construction. Pair with [[delete]] to remove already-stored
+    * content. */
+  def hold(s: SparkSession, ids: DataFrame): Unit =
+    TO.holdIds(s, holdTable, ids, callerIdCol)
+
+  /** TOMBSTONED DELETE: the ids stop answering (and asking) at once —
+    * every probe subtracts the family's one tombstone list from every
+    * member. O(|ids|), no index rewrite; [[vacuum]] folds the list
+    * into the stored files. Deletion is terminal per id (ids are never
+    * recycled — the ingest contract). A stats family deletes through
+    * the stats write-ahead log (exact n_docs/sum_dl subtraction). */
+  def delete(s: SparkSession, ids: DataFrame): Unit = statsTable match {
+    case Some(st) => TO.deleteBm25Docs(s, table, st, ids)
+    case None => TO.tombstone(s, delTable,
+      ids.select(col(callerIdCol).as(idCol)), idCol)
+  }
+
+  /** Fold the tombstones into the stored files (every member rewritten
+    * without the dead rows, spec-preserving atomic swap) and clear the
+    * list — post-vacuum probes pay no anti-join. */
+  def vacuum(s: SparkSession, guard: FoldGuard = FoldGuard.Refuse): Unit =
+    TO.vacuumIndex(s, delTable, members, idCol, guard)
+
+  /** ONE maintenance policy pass (r14 — see [[TextOps.maintainIndex]]):
+    * compacts whichever member outgrew the per-bucket file bound,
+    * vacuums/compacts the tombstone list past its thresholds, and for
+    * a quantizer family runs the drift leg — above the policy bound it
+    * refreshes over `refreshWith` when supplied, else reports
+    * `refresh-due` (PQ's gauge needs the exact vectors, so PQ gauges
+    * only with `refreshWith`). A family without a quantizer refuses a
+    * `refreshWith`. Returns the ops it ran; no-ops when healthy. */
+  def maintain(s: SparkSession,
+      policy: MaintenancePolicy = MaintenancePolicy(),
+      refreshWith: Option[DataFrame] = None,
+      guard: FoldGuard = FoldGuard.Refuse): Seq[String] = {
+    require(refreshWith.isEmpty || quantized,
+      s"maintain: $table has no quantizer to refresh")
+    TO.maintainIndex(s, members, delTable, idCol, policy,
+      drift = quantizer.flatMap(_.gauge(s, refreshWith)),
+      refresh = for (q <- quantizer; e <- refreshWith)
+        yield () => q.refresh(e, guard),
+      guard = guard)
+  }
+
+  /** Operational snapshot (r14 — see [[TextOps.describeIndex]]): member
+    * file health, tombstone debt, holds, the family's config (the `_cfg`
+    * pins, or the quantizer's shape) and the stats row when it keeps
+    * one. Metadata-cheap; never gauges drift. */
+  def describe(s: SparkSession): IndexStatus =
+    TO.describeIndex(s, members, delTable, cfgOf(s), statsTable)
+
+  /** STRUCTURAL AUDIT (fsck, r14): recompute the family's invariants
+    * against production state; empty = healthy. O(index) by design;
+    * read-only; run quiesced (a racing swap can produce transient
+    * findings). In order: crashed-swap evidence is reported ALONE
+    * (content audits against a half-swapped family are meaningless);
+    * an absent family is healthy; a missing sidecar is reported alone;
+    * then the kind's invariant, then one live generation per id in
+    * every member. */
+  def fsck(s: SparkSession): Seq[String] = {
+    val swaps = TO.swapCrashViolations(s, swapMembers)
+    if (swaps.nonEmpty) swaps
+    else if (!s.catalog.tableExists(table)) Nil
+    else sidecar.filterNot(x => s.catalog.tableExists(x._2)) match {
+      case Some((noun, t)) => Seq(s"$noun $t missing")
+      case None =>
+        invariant(s, live(s)) ++ members.filter(s.catalog.tableExists)
+          .flatMap(m => TO.multiGenViolations(live(s)(m), idCol))
+    }
+  }
+
+  /** REPAIR (r15 — VERDICT item 1, "close the fsck loop"): one
+    * idempotent pass mapping each fsck violation class to its heal —
+    * crashed swap renames recover, multi-generation ids re-barrier at
+    * their top live generation, then the kind's own heals. Protocol,
+    * under the build lock:
+    *   1. audit — a CLEAN family returns Nil having mutated NOTHING;
+    *   2. refuse loudly BEFORE touching anything if any violation
+    *     matches no heal (default-refuse: an unknown corruption class
+    *     must never be "healed" by guesswork, and a partial repair
+    *     that fixed the easy half would mask it);
+    *   3. run each heal whose class appeared, in order (order is part
+    *     of the contract — e.g. BM25 re-barriers before recomputing
+    *     stats, because the re-barrier itself changes what the stats
+    *     must say);
+    *   4. re-audit and THROW if violations remain — repair either
+    *     converges in one call or says so, never reports success over
+    *     a still-broken family.
+    * Returns the descriptions of the heals it ran.
+    */
+  def repair(s: SparkSession): Seq[String] = TO.withBuildLock(s) {
+    val all = Heal(_.startsWith("crashed swap"),
+        "recovered crashed swap renames",
+        TO.healCrashedSwaps(_, swapMembers)) +:
+      Heal(_.contains("live generations"),
+        "re-barriered multi-generation ids",
+        TO.rebarrierMultiGen(_, members, delTable, idCol)) +: heals
+    // iterate to convergence (r16): a heal can REVEAL violations the
+    // broken state masked — fsck returns crashed-swap evidence ALONE,
+    // so only the post-recovery round can see, say, the stats drift
+    // the crash also caused. Each round still refuses on any unknown
+    // class BEFORE touching anything further; the bound keeps a
+    // non-converging heal from looping.
+    val fixed = scala.collection.mutable.ListBuffer.empty[String]
+    var v = fsck(s)
+    var rounds = 0
+    while (v.nonEmpty && rounds < 4) {
+      val unmatched = v.filterNot(x => all.exists(_.matches(x)))
+      if (unmatched.nonEmpty)
+        throw new IllegalStateException(
+          "repair: no safe heal for: " + unmatched.mkString("; "))
+      all.foreach { h =>
+        if (v.exists(h.matches)) { h.run(s); fixed += h.desc; () }
+      }
+      v = fsck(s)
+      rounds += 1
+    }
+    if (v.nonEmpty)
+      throw new IllegalStateException(
+        "repair did not converge: " + v.mkString("; "))
+    fixed.toList.distinct
+  }
+}
+
+object IndexFamily {
+
+  /** A repair heal: the violations it answers, its description in
+    * repair's result, and the heal itself. */
+  private[operators] final case class Heal(matches: String => Boolean,
+      desc: String, run: SparkSession => Unit)
+
+  /** A frozen quantizer's drift leg: the gauge (given the caller's
+    * `refreshWith` corpus, None = do not gauge) and the retrain-and-
+    * swap refresh over a corpus. */
+  private[operators] final case class Quantizer(
+      gauge: (SparkSession, Option[DataFrame]) => Option[() => Double],
+      refresh: (DataFrame, FoldGuard) => Unit)
+}

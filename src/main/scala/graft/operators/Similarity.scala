@@ -179,7 +179,8 @@ object Ann {
     * and candidates become uncorrelated with similarity (recall
     * collapses with no error; ADVICE r15 #1). Legacy families keep
     * their (fold-prone but self-consistent) collision property until
-    * [[AnnIndex.repair]] rebuilds them into the derived family. */
+    * the family repair ([[AnnIndex.family]]) rebuilds them into the
+    * derived family. */
   val LegacyPlaneModulus = 29
 
   /** Plane p's integer weights under `modulus`, computed ONCE on the
@@ -769,157 +770,82 @@ object AnnIndex {
         gen = g)
     }
 
-  /** Place a LEGAL HOLD on vector ids (r15 — see
-    * [[graft.operators.TextOps.holdIds]]): the `<table>_hold` sibling
-    * is an append-only id set filtered at every write/append/upsert/
-    * refresh entry of this family, surviving vacuum by construction.
-    * Pair with [[delete]] to remove already-stored content. */
-  def hold(s: SparkSession, table: String, ids: DataFrame): Unit =
-    TO.holdIds(s, table + "_hold", ids, "vec_id")
+  /** The ANN family's lifecycle ([[IndexFamily]]): band postings and
+    * the `_vec` payload member under ONE tombstone list, the `_cfg`
+    * pin (dim/nbands/bits/planemod) as sidecar. Repair rebuilds the
+    * bands member from the payload for band-cardinality and
+    * plane-modulus violations alike ([[rebuildBandsFromPayload]]); a
+    * lost pin, wrong-width payload vectors or a lost payload member
+    * have no safe heal (the bands carry no vectors to rebuild from). */
+  def family(table: String): IndexFamily = new IndexFamily(table,
+    members = Seq(table, table + "_vec"),
+    idCol = "vec_id", callerIdCol = "vec_id",
+    sidecar = Some("config pin" -> (table + "_cfg")),
+    cfgOf = TO.readIndexConfig(_, table).getOrElse(Map.empty),
+    invariant = audit(_, table, _),
+    // band-cardinality violations AND legacy/forked plane modulus
+    // (ADVICE r15 #2) share ONE heal — the payload member carries the
+    // exact vectors, so rebuilding under the derived modulus +
+    // re-pinning converges both classes. ONE entry matching either
+    // message (ADVICE r16 #4): two entries with the same runner ran
+    // the full O(index) bands rewrite twice back-to-back when a family
+    // carried both violations in the same round.
+    heals = Seq(IndexFamily.Heal(
+      v => v.contains("band rows") || v.contains("planemod"),
+      "rebuilt band postings from the payload member under the " +
+        "derived plane modulus",
+      rebuildBandsFromPayload(_, table))))
 
-  /** TOMBSTONED DELETE for the ANN family: the ids stop answering (and
-    * asking) immediately — every probe ([[topK]], [[topKFiltered]],
-    * [[scoreExternal]], the streaming twin) subtracts the family's one
-    * tombstone list from both the band postings and the payload twin.
-    * O(|ids|), no index rewrite; [[vacuum]] folds the list into the
-    * stored files when its anti-join is worth retiring. Deletion is
-    * terminal per id (ids are never recycled — the ingest contract).
+  /** The ANN family invariant over the live rows:
+    *   - the planemod pin matches the derived modulus;
+    *   - every live vector carries exactly nbands band rows (a partial
+    *     append would silently shrink its candidate recall);
+    *   - every live payload vector has exactly the `_cfg` dim.
     */
-  def delete(s: SparkSession, table: String, ids: DataFrame): Unit =
-    TO.tombstone(s, table + "_del", ids, "vec_id")
-
-  /** Fold the family's tombstones into the stored files (both members
-    * rewritten without the deleted rows, spec-preserving atomic swap)
-    * and clear the list — post-vacuum probes pay no anti-join.
-    */
-  def vacuum(s: SparkSession, table: String,
-      guard: TO.FoldGuard = TO.FoldGuard.Refuse): Unit =
-    TO.vacuumIndex(s, table + "_del",
-      Seq(table, table + "_vec"), "vec_id", guard)
-
-  /** ONE maintenance policy pass for the family (r14 — see
-    * [[graft.operators.TextOps.maintainIndex]]): compacts whichever
-    * of the two bucketed members outgrew the per-bucket file bound,
-    * vacuums/compacts the tombstone list past its thresholds, no-ops
-    * when healthy. Returns the ops it ran. */
-  def maintain(s: SparkSession, table: String,
-      policy: TO.MaintenancePolicy = TO.MaintenancePolicy(),
-      guard: TO.FoldGuard = TO.FoldGuard.Refuse): Seq[String] =
-    TO.maintainIndex(s, Seq(table, table + "_vec"), table + "_del",
-      "vec_id", policy, guard = guard)
-
-  /** Operational snapshot of the family (r14 — see
-    * [[graft.operators.TextOps.describeIndex]]): both bucketed
-    * members' file health, tombstone debt, the stored `_cfg` pins
-    * (dim/nbands/bits). Stateless signatures have no quantizer to
-    * drift. */
-  def describe(s: SparkSession, table: String): TO.IndexStatus =
-    TO.describeIndex(s, Seq(table, table + "_vec"), table + "_del",
-      cfgOf = Some(table))
-
-  /** STRUCTURAL AUDIT (fsck, r14 — the
-    * [[graft.operators.TextOps.fsckBm25]] sibling): recompute the
-    * family's invariants against production state and report
-    * violations (empty = healthy). O(index) by design; read-only;
-    * run quiesced (a racing swap can produce transient findings).
-    *   - every live vector carries exactly nbands band rows (a
-    *     partial append would silently shrink its candidate recall);
-    *   - every live payload vector has exactly the `_cfg` dim;
-    *   - one live generation per id in BOTH members.
-    */
-  def fsck(s: SparkSession, table: String): Seq[String] = {
-    val swaps = TO.swapCrashViolations(s,
-      Seq(table, table + "_vec", table + "_del"))
-    if (swaps.nonEmpty) return swaps
+  private def audit(s: SparkSession, table: String,
+      live: String => DataFrame): Seq[String] = {
     val out = scala.collection.mutable.ListBuffer.empty[String]
-    if (!s.catalog.tableExists(table)) return out.toList
-    TO.readIndexConfig(s, table) match {
-      case None => out += s"config pin ${table}_cfg missing"
-      case Some(cfg) =>
-        // planemod pin audit (ADVICE r15 #2): a cfg lacking the pin
-        // is a pre-r15 legacy family (bands under the fixed
-        // LegacyPlaneModulus — served correctly by scoreExternal's
-        // legacy fallback, but fold-prone and append-refused); a pin
-        // differing from the derived value means the stored bands and
-        // the derived family have forked. Both heal by rebuilding the
-        // bands member under the derived modulus + re-pinning.
-        val wantPm = Ann.planeModulus(cfg("nbands") * cfg("bits"),
-          cfg("dim"))
-        cfg.get("planemod") match {
-          case None => out += "planemod pin missing (legacy banding " +
-            s"family under modulus ${Ann.LegacyPlaneModulus}; " +
-            s"derived is $wantPm)"
-          case Some(pm) if pm != wantPm =>
-            out += s"planemod pin $pm != derived $wantPm"
-          case _ => ()
-        }
-        val bands = TO.exceptTombstones(s.table(table), s,
-          table + "_del", "vec_id")
-        out ++= bands.groupBy("vec_id").count()
-          .filter(col("count") =!= cfg("nbands")).limit(5).collect()
-          .map(r => s"vec_id ${r.getLong(0)} has ${r.getLong(1)} " +
-            s"band rows (expected ${cfg("nbands")})")
-        out ++= TO.multiGenViolations(bands, "vec_id")
-        if (s.catalog.tableExists(table + "_vec")) {
-          val vecs = TO.exceptTombstones(s.table(table + "_vec"), s,
-            table + "_del", "vec_id")
-          val bad = vecs.filter(size(col("v")) =!= cfg("dim")).count()
-          if (bad > 0)
-            out += s"$bad payload vectors are not dim ${cfg("dim")}"
-          out ++= TO.multiGenViolations(vecs, "vec_id")
-          // TOTAL-loss band audit (ADVICE r14): the per-id count above
-          // groups over the bands table, so a live payload vector with
-          // ZERO band rows — every posting lost, the worst case of the
-          // partial-append invariant — is invisible to it. Anti-join
-          // the live payloads against the live band ids; NULL-embedding
-          // vectors legitimately store a payload row and no bands.
-          out ++= vecs.filter(col("v").isNotNull).select("vec_id")
-            .join(bands.select("vec_id").distinct(),
-              Seq("vec_id"), "left_anti")
-            .limit(5).collect()
-            .map(r => s"vec_id ${r.getLong(0)} has 0 band rows " +
-              s"(expected ${cfg("nbands")})")
-        } else out += s"payload member ${table}_vec missing"
+    val cfg = TO.readIndexConfig(s, table).get
+    // planemod pin audit (ADVICE r15 #2): a cfg lacking the pin is a
+    // pre-r15 legacy family (bands under the fixed LegacyPlaneModulus
+    // — served correctly by scoreExternal's legacy fallback, but
+    // fold-prone and append-refused); a pin differing from the derived
+    // value means the stored bands and the derived family have forked.
+    // Both heal by rebuilding the bands member under the derived
+    // modulus + re-pinning.
+    val wantPm = Ann.planeModulus(cfg("nbands") * cfg("bits"), cfg("dim"))
+    cfg.get("planemod") match {
+      case None => out += "planemod pin missing (legacy banding " +
+        s"family under modulus ${Ann.LegacyPlaneModulus}; " +
+        s"derived is $wantPm)"
+      case Some(pm) if pm != wantPm =>
+        out += s"planemod pin $pm != derived $wantPm"
+      case _ => ()
     }
+    val bands = live(table)
+    out ++= bands.groupBy("vec_id").count()
+      .filter(col("count") =!= cfg("nbands")).limit(5).collect()
+      .map(r => s"vec_id ${r.getLong(0)} has ${r.getLong(1)} " +
+        s"band rows (expected ${cfg("nbands")})")
+    if (s.catalog.tableExists(table + "_vec")) {
+      val vecs = live(table + "_vec")
+      val bad = vecs.filter(size(col("v")) =!= cfg("dim")).count()
+      if (bad > 0) out += s"$bad payload vectors are not dim ${cfg("dim")}"
+      // TOTAL-loss band audit (ADVICE r14): the per-id count above
+      // groups over the bands table, so a live payload vector with
+      // ZERO band rows — every posting lost, the worst case of the
+      // partial-append invariant — is invisible to it. Anti-join the
+      // live payloads against the live band ids; NULL-embedding
+      // vectors legitimately store a payload row and no bands.
+      out ++= vecs.filter(col("v").isNotNull).select("vec_id")
+        .join(bands.select("vec_id").distinct(), Seq("vec_id"),
+          "left_anti")
+        .limit(5).collect()
+        .map(r => s"vec_id ${r.getLong(0)} has 0 band rows " +
+          s"(expected ${cfg("nbands")})")
+    } else out += s"payload member ${table}_vec missing"
     out.toList
   }
-
-  /** REPAIR the family ([[graft.operators.TextOps.runRepair]]
-    * instance — r15, "close the fsck loop"):
-    *   - multi-generation ids re-barrier at their top live gen
-    *     (BOTH members share the one `_del` list);
-    *   - band-cardinality violations — short, long, or ZERO rows —
-    *     heal by REBUILDING the bands member from the surviving
-    *     payload sibling: `_vec` carries the exact vectors, the
-    *     `_cfg` pin carries the banding config, so the rebuilt
-    *     postings are definitionally correct, stamped at each id's
-    *     own live generation. The spec-preserving bucketed rewrite
-    *     keeps the zero-Exchange probe layout.
-    * A missing config pin, wrong-width payload vectors, or a lost
-    * payload member have no safe heal (the bands carry no vectors to
-    * rebuild from) — repair refuses loudly. Clean family = Nil.
-    */
-  def repair(s: SparkSession, table: String): Seq[String] =
-    TO.runRepair(s, () => fsck(s, table), Seq(
-      (_.startsWith("crashed swap"),
-        "recovered crashed swap renames",
-        () => TO.healCrashedSwaps(s,
-          Seq(table, table + "_vec", table + "_del"))),
-      (_.contains("live generations"),
-        "re-barriered multi-generation ids",
-        () => TO.rebarrierMultiGen(s, Seq(table, table + "_vec"),
-          table + "_del", "vec_id")),
-      // band-cardinality violations AND legacy/forked plane modulus
-      // (ADVICE r15 #2) share ONE heal — the payload member carries
-      // the exact vectors, so rebuilding under the derived modulus +
-      // re-pinning converges both classes. ONE entry matching either
-      // message (ADVICE r16 #4): two entries with the same runner ran
-      // the full O(index) bands rewrite twice back-to-back when a
-      // family carried both violations in the same round.
-      (v => v.contains("band rows") || v.contains("planemod"),
-        "rebuilt band postings from the payload member under the " +
-          "derived plane modulus",
-        () => rebuildBandsFromPayload(s, table))))
 
   /** The band-cardinality AND plane-modulus heal: re-derive the
     * ENTIRE bands member from the live payload rows under the `_cfg`
@@ -1011,8 +937,8 @@ object AnnIndex {
     * family whose stored bands were computed under the fixed
     * [[Ann.LegacyPlaneModulus]] — band under that constant (the
     * collision property holds; the family is merely the fold-prone
-    * legacy one until [[repair]] rebuilds it); no cfg at all falls
-    * back to deriving from the parameters, matching [[write]]'s
+    * legacy one until the family repair rebuilds it); no cfg at all
+    * falls back to deriving from the parameters, matching [[write]]'s
     * crash-window contract (pin written last, so cfg-absent data is
     * always current-code, derived-modulus data).
     */
@@ -1235,117 +1161,58 @@ object IvfIndex {
       .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq))
       .sortBy(_._1).toSeq
 
-  /** Place a LEGAL HOLD on vector ids (r15 — see
-    * [[graft.operators.TextOps.holdIds]]): the `<table>_hold` sibling
-    * is an append-only id set filtered at every write/append/upsert/
-    * refresh entry of this family, surviving vacuum by construction.
-    * Pair with [[delete]] to remove already-stored content. */
-  def hold(s: SparkSession, table: String, ids: DataFrame): Unit =
-    TO.holdIds(s, table + "_hold", ids, "vec_id")
-
-  /** TOMBSTONED DELETE / fold — the [[AnnIndex.delete]] contract over
-    * the one-member cells family; probes subtract the list, vacuum
-    * folds and clears it. */
-  def delete(s: SparkSession, table: String, ids: DataFrame): Unit =
-    TO.tombstone(s, table + "_del", ids, "vec_id")
-
-  def vacuum(s: SparkSession, table: String,
-      guard: TO.FoldGuard = TO.FoldGuard.Refuse): Unit =
-    TO.vacuumIndex(s, table + "_del", Seq(table), "vec_id", guard)
-
-  /** ONE maintenance policy pass for the family (r14): file-pressure
-    * compaction + tombstone thresholds like every member, PLUS the
-    * drift leg — [[quantizationError]] above the policy bound runs
-    * [[refresh]] over `refreshWith` when supplied (retrain-and-swap
-    * needs the current corpus), else reports `refresh-due`. */
-  def maintain(s: SparkSession, table: String,
-      policy: TO.MaintenancePolicy = TO.MaintenancePolicy(),
-      refreshWith: Option[DataFrame] = None,
-      guard: TO.FoldGuard = TO.FoldGuard.Refuse): Seq[String] =
-    TO.maintainIndex(s, Seq(table), table + "_del", "vec_id", policy,
-      drift = Some(() => quantizationError(s, table)),
-      refresh = refreshWith.map(e => () => refresh(e, table,
-        guard = guard)),
-      guard = guard)
-
-  /** Operational snapshot of the family (r14): cells-member file
-    * health, tombstone debt, and the quantizer's shape read off the
-    * stored centroids (k = centroid count, dim = their width). The
-    * drift gauge is an O(index) scan, so it only runs when asked. */
-  def describe(s: SparkSession, table: String,
-      withDrift: Boolean = false): TO.IndexStatus = {
-    val cents = loadCentroids(s, table)
-    TO.describeIndex(s, Seq(table), table + "_del",
-      drift = if (withDrift) Some(() => quantizationError(s, table))
-        else None)
-      .copy(cfg = Map("k" -> cents.size,
-        "dim" -> cents.headOption.map(_._2.length).getOrElse(0)))
-  }
-
-  /** STRUCTURAL AUDIT (fsck, r14): every live assignment routes to a
-    * cell the stored quantizer actually has, carries a vector of the
-    * quantizer's width, and one live generation per id. */
-  def fsck(s: SparkSession, table: String): Seq[String] = {
-    val swaps = TO.swapCrashViolations(s,
-      Seq(table, table + "_cent", table + "_del"))
-    if (swaps.nonEmpty) return swaps
-    val out = scala.collection.mutable.ListBuffer.empty[String]
-    if (!s.catalog.tableExists(table)) return out.toList
-    if (!s.catalog.tableExists(table + "_cent")) {
-      out += s"quantizer ${table}_cent missing"
-      return out.toList
-    }
-    val cents = loadCentroids(s, table)
-    val cells = cents.map(_._1).toSet
-    val dim = cents.head._2.length
-    val live = TO.exceptTombstones(s.table(table), s, table + "_del",
-      "vec_id")
-    out ++= live.filter(!col("cell").isin(cells.toSeq: _*))
-      .select("vec_id", "cell").limit(5).collect()
-      .map(r => s"vec_id ${r.getLong(0)} routed to unknown cell " +
-        s"${r.get(1)}")
-    val bad = live.filter(size(col("v")) =!= dim).count()
-    if (bad > 0) out += s"$bad assigned vectors are not dim $dim"
-    out ++= TO.multiGenViolations(live, "vec_id")
-    out.toList
-  }
-
-  /** REPAIR the family ([[graft.operators.TextOps.runRepair]]
-    * instance): multi-generation ids re-barrier at their top live
-    * gen; rows routed to a cell the stored quantizer doesn't have
-    * heal by RE-ASSIGNING every row with that quantizer (the member
-    * retains the exact vectors, so re-routing is definitionally
-    * correct and changes no content). A missing quantizer or
-    * wrong-width vectors have no safe heal — refuse loudly. Clean
-    * family = Nil.
-    */
-  def repair(s: SparkSession, table: String): Seq[String] =
-    TO.runRepair(s, () => fsck(s, table), Seq(
-      (_.startsWith("crashed swap"),
-        "recovered crashed swap renames",
-        () => TO.healCrashedSwaps(s,
-          Seq(table, table + "_cent", table + "_del"))),
-      (_.contains("live generations"),
-        "re-barriered multi-generation ids",
-        () => TO.rebarrierMultiGen(s, Seq(table), table + "_del",
-          "vec_id")),
-      (_.contains("unknown cell"),
-        "re-assigned rows with the stored quantizer",
-        () => {
-          graft.functions.VectorFunctions.register(s)
-          val cents = loadCentroids(s, table)
-          // repair rewrite: FoldGuard.Orphan (see the Ann heal)
-          TO.rewriteBucketed(s, table, guard = TO.FoldGuard.Orphan,
-            transform = df => {
-            graft.functions.VectorFunctions.register(df.sparkSession)
-            val withG =
-              if (df.columns.contains("gen")) df
-              else df.withColumn("gen", lit(0L))
-            Ivf.assignCells(withG.drop("cell"), cents)
-              .select(col("vec_id"), col("v"), col("nrm"),
-                col("cell"), col("gen"))
-          })
-        })))
+  /** The IVF family's lifecycle ([[IndexFamily]]): the cells member,
+    * the `_cent` quantizer as sidecar (its shape — k centroids of dim —
+    * is the config describe reports) and the drift leg
+    * ([[quantizationError]] gauged on every operator pass,
+    * [[refresh]] over `refreshWith`). Rows routed to a cell the stored
+    * quantizer doesn't have heal by RE-ASSIGNING every row with that
+    * quantizer (the member retains the exact vectors, so re-routing is
+    * definitionally correct and changes no content); a lost quantizer
+    * or wrong-width vectors have no safe heal. */
+  def family(table: String): IndexFamily = new IndexFamily(table,
+    members = Seq(table), idCol = "vec_id", callerIdCol = "vec_id",
+    swapSiblings = Seq(table + "_cent"),
+    sidecar = Some("quantizer" -> (table + "_cent")),
+    cfgOf = s => {
+      val cents = loadCentroids(s, table)
+      Map("k" -> cents.size,
+        "dim" -> cents.headOption.map(_._2.length).getOrElse(0))
+    },
+    invariant = (s, live) => {
+      // every live assignment routes to a cell the stored quantizer
+      // has and carries a vector of the quantizer's width
+      val cents = loadCentroids(s, table)
+      val dim = cents.head._2.length
+      val rows = live(table)
+      val routed = rows.filter(!col("cell").isin(cents.map(_._1): _*))
+        .select("vec_id", "cell").limit(5).collect()
+        .map(r => s"vec_id ${r.getLong(0)} routed to unknown cell " +
+          s"${r.get(1)}")
+      val bad = rows.filter(size(col("v")) =!= dim).count()
+      routed.toSeq ++
+        (if (bad > 0) Seq(s"$bad assigned vectors are not dim $dim")
+         else Nil)
+    },
+    heals = Seq(IndexFamily.Heal(_.contains("unknown cell"),
+      "re-assigned rows with the stored quantizer", s => {
+        graft.functions.VectorFunctions.register(s)
+        val cents = loadCentroids(s, table)
+        // repair rewrite: FoldGuard.Orphan (see the Ann heal)
+        TO.rewriteBucketed(s, table, guard = TO.FoldGuard.Orphan,
+          transform = df => {
+          graft.functions.VectorFunctions.register(df.sparkSession)
+          val withG =
+            if (df.columns.contains("gen")) df
+            else df.withColumn("gen", lit(0L))
+          Ivf.assignCells(withG.drop("cell"), cents)
+            .select(col("vec_id"), col("v"), col("nrm"),
+              col("cell"), col("gen"))
+        })
+      })),
+    quantizer = Some(IndexFamily.Quantizer(
+      gauge = (s, _) => Some(() => quantizationError(s, table)),
+      refresh = (e, guard) => refresh(e, table, guard = guard))))
 
   /** The IVF drift gauge (the [[PqIndex.quantizationError]] sibling):
     * mean (1 − cos(v, centroid)) over the STORED assignments — how far
@@ -1846,13 +1713,33 @@ object PqIndex {
       append(emb, table, nBuckets, gen = g)
     }
 
-  /** Place a LEGAL HOLD on vector ids (r15 — see
-    * [[graft.operators.TextOps.holdIds]]): the `<table>_hold` sibling
-    * is an append-only id set filtered at every write/append/upsert/
-    * refresh entry of this family, surviving vacuum by construction.
-    * Pair with [[delete]] to remove already-stored content. */
-  def hold(s: SparkSession, table: String, ids: DataFrame): Unit =
-    TO.holdIds(s, table + "_hold", ids, "vec_id")
+  /** The PQ family's lifecycle ([[IndexFamily]]): the codes member,
+    * the `_cb` codebook as sidecar (its grid — m subspaces × ks
+    * codewords of subDim — is the config describe reports), and the
+    * drift leg: the gauge reconstructs against the exact vectors, so
+    * both it and the refresh need `refreshWith`. Every live code row
+    * must carry exactly m codes (a short row would silently drop ADC
+    * terms); short rows cannot be recomputed (the codes member stores
+    * no original vectors) and a lost codebook cannot be guessed —
+    * repair refuses both. */
+  def family(table: String): IndexFamily = new IndexFamily(table,
+    members = Seq(table), idCol = "vec_id", callerIdCol = "vec_id",
+    swapSiblings = Seq(table + "_cb"),
+    sidecar = Some("codebook" -> (table + "_cb")),
+    cfgOf = s => {
+      val cb = s.table(table + "_cb")
+      val (m, subDim) = cbGrid(cb)
+      Map("m" -> m, "subDim" -> subDim,
+        "ks" -> cb.filter(col("sub") === 1).count().toInt)
+    },
+    invariant = (s, live) => {
+      val (m, _) = cbGrid(s.table(table + "_cb"))
+      val bad = live(table).filter(size(col("codes")) =!= m).count()
+      if (bad > 0) Seq(s"$bad code rows do not have m=$m codes") else Nil
+    },
+    quantizer = Some(IndexFamily.Quantizer(
+      gauge = (s, e) => e.map(x => () => quantizationError(s, table, x)),
+      refresh = (e, guard) => refresh(e, table, guard = guard))))
 
   /** ADC top-k: `queries` = (vec_id, v) exact canon vectors. Builds the
     * per-query LUT (queries × codebook — |q|·M·Ks rows, broadcast),
@@ -1861,83 +1748,6 @@ object PqIndex {
     * grid (order-free exact), and ranks the rounded sentinel cosine of
     * query vs the candidate's RECONSTRUCTION — computed without ever
     * materializing it. */
-  /** TOMBSTONED DELETE / fold — the [[AnnIndex.delete]] contract over
-    * the codes table ([[adcTopK]] subtracts the list for both the
-    * corpus-wide and pair-restricted probes). The codebook is
-    * untouched: deletion changes what answers, not how it's scored. */
-  def delete(s: SparkSession, table: String, ids: DataFrame): Unit =
-    TO.tombstone(s, table + "_del", ids, "vec_id")
-
-  def vacuum(s: SparkSession, table: String,
-      guard: TO.FoldGuard = TO.FoldGuard.Refuse): Unit =
-    TO.vacuumIndex(s, table + "_del", Seq(table), "vec_id", guard)
-
-  /** ONE maintenance policy pass (r14, the [[IvfIndex.maintain]]
-    * shape): the PQ drift gauge needs the exact vectors
-    * ([[quantizationError]] reconstructs against them), so BOTH the
-    * drift leg and the refresh require `refreshWith` — absent, the
-    * pass covers file pressure and tombstones only. */
-  def maintain(s: SparkSession, table: String,
-      policy: TO.MaintenancePolicy = TO.MaintenancePolicy(),
-      refreshWith: Option[DataFrame] = None,
-      guard: TO.FoldGuard = TO.FoldGuard.Refuse): Seq[String] =
-    TO.maintainIndex(s, Seq(table), table + "_del", "vec_id", policy,
-      drift = refreshWith.map(e => () => quantizationError(s, table, e)),
-      refresh = refreshWith.map(e => () => refresh(e, table, guard = guard)),
-      guard = guard)
-
-  /** Operational snapshot of the family (r14): codes-member file
-    * health, tombstone debt, the codebook grid as the config (m
-    * subspaces × ks codewords of subDim — PQ's quantizer IS its
-    * config store). The drift gauge needs the exact vectors, so it
-    * runs only when `driftWith` supplies them. */
-  def describe(s: SparkSession, table: String,
-      driftWith: Option[DataFrame] = None): TO.IndexStatus = {
-    val cb = s.table(table + "_cb")
-    val (m, subDim) = cbGrid(cb)
-    val ks = cb.filter(col("sub") === 1).count().toInt
-    TO.describeIndex(s, Seq(table), table + "_del",
-      drift = driftWith.map(e => () => quantizationError(s, table, e)))
-      .copy(cfg = Map("m" -> m, "subDim" -> subDim, "ks" -> ks))
-  }
-
-  /** STRUCTURAL AUDIT (fsck, r14): every live code row has exactly m
-    * subspace codes (a short row would silently drop ADC terms), and
-    * one live generation per id. */
-  def fsck(s: SparkSession, table: String): Seq[String] = {
-    val swaps = TO.swapCrashViolations(s,
-      Seq(table, table + "_cb", table + "_del"))
-    if (swaps.nonEmpty) return swaps
-    val out = scala.collection.mutable.ListBuffer.empty[String]
-    if (!s.catalog.tableExists(table)) return out.toList
-    if (!s.catalog.tableExists(table + "_cb")) {
-      out += s"codebook ${table}_cb missing"
-      return out.toList
-    }
-    val (m, _) = cbGrid(s.table(table + "_cb"))
-    val live = TO.exceptTombstones(s.table(table), s, table + "_del",
-      "vec_id")
-    val bad = live.filter(size(col("codes")) =!= m).count()
-    if (bad > 0) out += s"$bad code rows do not have m=$m codes"
-    out ++= TO.multiGenViolations(live, "vec_id")
-    out.toList
-  }
-
-  /** REPAIR the family: crashed swap renames recover; multi-
-    * generation ids re-barrier at their top live gen. Short code
-    * rows cannot be recomputed (the codes member stores no original
-    * vectors) and a missing codebook cannot be guessed — refuse
-    * loudly. Clean family = Nil. */
-  def repair(s: SparkSession, table: String): Seq[String] =
-    TO.runRepair(s, () => fsck(s, table), Seq(
-      (_.startsWith("crashed swap"),
-        "recovered crashed swap renames",
-        () => TO.healCrashedSwaps(s,
-          Seq(table, table + "_cb", table + "_del"))),
-      (_.contains("live generations"),
-        "re-barriered multi-generation ids",
-        () => TO.rebarrierMultiGen(s, Seq(table), table + "_del",
-          "vec_id"))))
 
   def topK(s: SparkSession, table: String, queries: DataFrame,
       k: Int): DataFrame = {
@@ -2387,73 +2197,21 @@ object BqIndex {
       append(emb, table, dim, nBuckets, gen = g)
     }
 
-  /** Place a LEGAL HOLD on vector ids (r15 — see
-    * [[graft.operators.TextOps.holdIds]]): the `<table>_hold` sibling
-    * is an append-only id set filtered at every write/append/upsert/
-    * refresh entry of this family, surviving vacuum by construction.
-    * Pair with [[delete]] to remove already-stored content. */
-  def hold(s: SparkSession, table: String, ids: DataFrame): Unit =
-    TO.holdIds(s, table + "_hold", ids, "vec_id")
-
-  /** TOMBSTONED DELETE / fold — the [[AnnIndex.delete]] contract over
-    * the signature table ([[topK]] filters the sig side, which both
-    * queries and candidates come off). */
-  def delete(s: SparkSession, table: String, ids: DataFrame): Unit =
-    TO.tombstone(s, table + "_del", ids, "vec_id")
-
-  def vacuum(s: SparkSession, table: String,
-      guard: TO.FoldGuard = TO.FoldGuard.Refuse): Unit =
-    TO.vacuumIndex(s, table + "_del", Seq(table), "vec_id", guard)
-
-  /** ONE maintenance policy pass (r14): stateless signatures have no
-    * quantizer to drift, so the pass is file pressure + tombstones. */
-  def maintain(s: SparkSession, table: String,
-      policy: TO.MaintenancePolicy = TO.MaintenancePolicy(),
-      guard: TO.FoldGuard = TO.FoldGuard.Refuse): Seq[String] =
-    TO.maintainIndex(s, Seq(table), table + "_del", "vec_id", policy,
-      guard = guard)
-
-  /** Operational snapshot of the family (r14): signature-member file
-    * health, tombstone debt, the stored `_cfg` dim pin. */
-  def describe(s: SparkSession, table: String): TO.IndexStatus =
-    TO.describeIndex(s, Seq(table), table + "_del",
-      cfgOf = Some(table))
-
-  /** STRUCTURAL AUDIT (fsck, r14): every live signature packs exactly
-    * ⌈dim/64⌉ words for the `_cfg` dim, one live generation per id. */
-  def fsck(s: SparkSession, table: String): Seq[String] = {
-    val swaps = TO.swapCrashViolations(s, Seq(table, table + "_del"))
-    if (swaps.nonEmpty) return swaps
-    val out = scala.collection.mutable.ListBuffer.empty[String]
-    if (!s.catalog.tableExists(table)) return out.toList
-    TO.readIndexConfig(s, table) match {
-      case None => out += s"config pin ${table}_cfg missing"
-      case Some(cfg) =>
-        val words = (cfg("dim") + 63) / 64
-        val live = TO.exceptTombstones(s.table(table), s,
-          table + "_del", "vec_id")
-        val bad = live.filter(size(col("sig")) =!= words).count()
-        if (bad > 0)
-          out += s"$bad signatures do not pack $words words"
-        out ++= TO.multiGenViolations(live, "vec_id")
-    }
-    out.toList
-  }
-
-  /** REPAIR the family: crashed swap renames recover; multi-
-    * generation ids re-barrier at their top live gen (signatures
-    * cannot be recomputed without the original vectors; a lost
-    * `_cfg` pin cannot be guessed). Refuses loudly otherwise;
-    * clean = Nil. */
-  def repair(s: SparkSession, table: String): Seq[String] =
-    TO.runRepair(s, () => fsck(s, table), Seq(
-      (_.startsWith("crashed swap"),
-        "recovered crashed swap renames",
-        () => TO.healCrashedSwaps(s, Seq(table, table + "_del"))),
-      (_.contains("live generations"),
-        "re-barriered multi-generation ids",
-        () => TO.rebarrierMultiGen(s, Seq(table), table + "_del",
-          "vec_id"))))
+  /** The BQ family's lifecycle ([[IndexFamily]]): the signature
+    * member, the `_cfg` dim pin as sidecar. Every live signature must
+    * pack exactly ⌈dim/64⌉ words; signatures cannot be recomputed
+    * without the original vectors and a lost pin cannot be guessed, so
+    * repair heals only the shared classes. */
+  def family(table: String): IndexFamily = new IndexFamily(table,
+    members = Seq(table), idCol = "vec_id", callerIdCol = "vec_id",
+    sidecar = Some("config pin" -> (table + "_cfg")),
+    cfgOf = TO.readIndexConfig(_, table).getOrElse(Map.empty),
+    invariant = (s, live) => {
+      val words = (TO.readIndexConfig(s, table).get("dim") + 63) / 64
+      val bad = live(table).filter(size(col("sig")) =!= words).count()
+      if (bad > 0) Seq(s"$bad signatures do not pack $words words")
+      else Nil
+    })
 
   /** Hamming-prefiltered exact-reranked top-k. Phase 1 scans the
     * dim/8-byte signatures against the broadcast query signatures —
@@ -2722,74 +2480,25 @@ object SqIndex {
       append(emb, table, dim, nBuckets, gen = g)
     }
 
-  /** Place a LEGAL HOLD on vector ids (r15 — see
-    * [[graft.operators.TextOps.holdIds]]): the `<table>_hold` sibling
-    * is an append-only id set filtered at every write/append/upsert/
-    * refresh entry of this family, surviving vacuum by construction.
-    * Pair with [[delete]] to remove already-stored content. */
-  def hold(s: SparkSession, table: String, ids: DataFrame): Unit =
-    TO.holdIds(s, table + "_hold", ids, "vec_id")
-
-  /** TOMBSTONED DELETE / fold — the [[AnnIndex.delete]] contract over
-    * the codes table. */
-  def delete(s: SparkSession, table: String, ids: DataFrame): Unit =
-    TO.tombstone(s, table + "_del", ids, "vec_id")
-
-  def vacuum(s: SparkSession, table: String,
-      guard: TO.FoldGuard = TO.FoldGuard.Refuse): Unit =
-    TO.vacuumIndex(s, table + "_del", Seq(table), "vec_id", guard)
-
-  /** ONE maintenance policy pass (r14): per-vector scales have no
-    * quantizer to drift, so the pass is file pressure + tombstones. */
-  def maintain(s: SparkSession, table: String,
-      policy: TO.MaintenancePolicy = TO.MaintenancePolicy(),
-      guard: TO.FoldGuard = TO.FoldGuard.Refuse): Seq[String] =
-    TO.maintainIndex(s, Seq(table), table + "_del", "vec_id", policy,
-      guard = guard)
-
-  /** Operational snapshot of the family (r14): codes-member file
-    * health, tombstone debt, the stored `_cfg` dim pin. */
-  def describe(s: SparkSession, table: String): TO.IndexStatus =
-    TO.describeIndex(s, Seq(table), table + "_del",
-      cfgOf = Some(table))
-
-  /** STRUCTURAL AUDIT (fsck, r14): every live code row carries
-    * exactly the `_cfg` dim codes and a positive scale, one live
-    * generation per id. */
-  def fsck(s: SparkSession, table: String): Seq[String] = {
-    val swaps = TO.swapCrashViolations(s, Seq(table, table + "_del"))
-    if (swaps.nonEmpty) return swaps
-    val out = scala.collection.mutable.ListBuffer.empty[String]
-    if (!s.catalog.tableExists(table)) return out.toList
-    TO.readIndexConfig(s, table) match {
-      case None => out += s"config pin ${table}_cfg missing"
-      case Some(cfg) =>
-        val live = TO.exceptTombstones(s.table(table), s,
-          table + "_del", "vec_id")
-        val bad = live.filter(size(col("codes")) =!= cfg("dim")).count()
-        if (bad > 0)
-          out += s"$bad code rows are not dim ${cfg("dim")}"
-        val badSc = live.filter(col("sc") < 0d).count()
-        if (badSc > 0) out += s"$badSc rows carry a negative scale"
-        out ++= TO.multiGenViolations(live, "vec_id")
-    }
-    out.toList
-  }
-
-  /** REPAIR the family: crashed swap renames recover; multi-
-    * generation ids re-barrier at their top live gen (SQ8 codes
-    * cannot be recomputed without the original vectors; a lost
-    * `_cfg` pin or a negative scale cannot be fixed by guesswork).
-    * Refuses loudly otherwise; clean = Nil. */
-  def repair(s: SparkSession, table: String): Seq[String] =
-    TO.runRepair(s, () => fsck(s, table), Seq(
-      (_.startsWith("crashed swap"),
-        "recovered crashed swap renames",
-        () => TO.healCrashedSwaps(s, Seq(table, table + "_del"))),
-      (_.contains("live generations"),
-        "re-barriered multi-generation ids",
-        () => TO.rebarrierMultiGen(s, Seq(table), table + "_del",
-          "vec_id"))))
+  /** The SQ8 family's lifecycle ([[IndexFamily]]): the codes member,
+    * the `_cfg` dim pin as sidecar. Every live code row must carry
+    * exactly the pinned dim codes and a non-negative scale; codes
+    * cannot be recomputed without the original vectors, and a lost pin
+    * or a negative scale cannot be fixed by guesswork, so repair heals
+    * only the shared classes. */
+  def family(table: String): IndexFamily = new IndexFamily(table,
+    members = Seq(table), idCol = "vec_id", callerIdCol = "vec_id",
+    sidecar = Some("config pin" -> (table + "_cfg")),
+    cfgOf = TO.readIndexConfig(_, table).getOrElse(Map.empty),
+    invariant = (s, live) => {
+      val dim = TO.readIndexConfig(s, table).get("dim")
+      val rows = live(table)
+      val bad = rows.filter(size(col("codes")) =!= dim).count()
+      val badSc = rows.filter(col("sc") < 0d).count()
+      (if (bad > 0) Seq(s"$bad code rows are not dim $dim") else Nil) ++
+        (if (badSc > 0) Seq(s"$badSc rows carry a negative scale")
+         else Nil)
+    })
 
   /** Brute top-k over DEQUANTIZED vectors served entirely from the
     * stored codes table — queries come off the same table by vec_id

@@ -469,17 +469,6 @@ object TextOps {
     else df.join(s.table(holdTable).select(col(idCol)), Seq(idCol),
       "left_anti")
 
-  /** Place a legal hold on document ids for an incremental BM25
-    * family — see [[holdIds]]. */
-  def holdBm25Docs(s: org.apache.spark.sql.SparkSession, table: String,
-      ids: org.apache.spark.sql.DataFrame): Unit =
-    holdIds(s, table + "_hold", ids, "doc_id")
-
-  /** Place a legal hold on document ids for a band index family. */
-  def holdBandDocs(s: org.apache.spark.sql.SparkSession, table: String,
-      ids: org.apache.spark.sql.DataFrame): Unit =
-    holdIds(s, table + "_hold", ids, "doc_id")
-
   /** A tombstone list with its `gen` column guaranteed present —
     * pre-r14 lists (id only) read as all-terminal. */
   private def withEntryGen(del: org.apache.spark.sql.DataFrame)
@@ -698,16 +687,16 @@ object TextOps {
     * describe SHOWS it without mutating anything): per-member file
     * health, the tombstone list's row and file debt split into
     * terminal deletes vs finite upsert barriers (plus the current top
-    * barrier — 0 means no upsert ever ran), the stored `_cfg` pins,
-    * the stats row's numeric fields when the family keeps one, and
-    * the quantizer drift when the caller supplied the gauge.
+    * barrier — 0 means no upsert ever ran), the family's config
+    * (`_cfg` pins or quantizer shape) and the stats row's numeric
+    * fields when the family keeps one. Quantizer drift is
+    * [[IndexFamily.maintain]]'s to gauge, not describe's.
     */
   final case class IndexStatus(
       members: Seq[(String, IndexFileHealth)],
       delRows: Long, delFiles: Long, terminalDeletes: Long,
       topBarrier: Long, cfg: Map[String, Int],
-      stats: Map[String, Long], drift: Option[Double],
-      holds: Long = 0L,
+      stats: Map[String, Long], holds: Long = 0L,
       /** `base/tag` manifest snapshots currently pinning live files
         * of this family's members — the tags a fold would orphan
         * (r17). Surfaced so the operator sees the conflict in
@@ -723,9 +712,7 @@ object TextOps {
       * `policy` — advisory, not a contract: maintain re-gauges
       * between its steps (a vacuum resets the member file pressure
       * before the member leg reads it), so the list maintain actually
-      * executes can be SHORTER than this one, never longer. Drift
-      * above the bound always reports as `refresh-due` here (describe
-      * never holds the corpus frame a refresh would need). */
+      * executes can be SHORTER than this one, never longer. */
     def due(policy: MaintenancePolicy = MaintenancePolicy())
         : Seq[String] = {
       val b = scala.collection.mutable.ListBuffer.empty[String]
@@ -735,7 +722,6 @@ object TextOps {
         if (h.needsCompaction(policy.filesPerBucketMax))
           b += s"compact:$m"
       }
-      drift.foreach(d => if (d > policy.driftMax) b += "refresh-due")
       // fold-aware snapshots (r17): when any due op is a fold AND
       // live manifest tags pin this family's files, say so HERE —
       // the operator learns the conflict from the cadence check, not
@@ -753,16 +739,13 @@ object TextOps {
         : Boolean = due(policy).isEmpty
   }
 
-  /** Build an [[IndexStatus]] for a family. Everything is driver-side
-    * metadata plus ONE O(|list|) aggregation over the small tombstone
-    * table; the `drift` thunk is the only potentially-expensive leg
-    * (an O(index) reconstruction job) and runs only when supplied —
-    * the per-family `describe` wrappers keep it opt-in.
+  /** Build an [[IndexStatus]] for a family: driver-side metadata plus
+    * ONE O(|list|) aggregation over the small tombstone table. `cfg`
+    * is the family's config as [[IndexFamily]] reads it.
     */
   private[graft] def describeIndex(s: org.apache.spark.sql.SparkSession,
-      members: Seq[String], delTable: String,
-      cfgOf: Option[String] = None, statsTable: Option[String] = None,
-      drift: Option[() => Double] = None): IndexStatus = {
+      members: Seq[String], delTable: String, cfg: Map[String, Int],
+      statsTable: Option[String]): IndexStatus = {
     val mh = members.filter(s.catalog.tableExists)
       .map(m => m -> indexFileHealth(s, m))
     val (rows, term, top) =
@@ -810,76 +793,72 @@ object TextOps {
         case (tag, mtime) if isLeakedEpoch(s, tag, mtime) => s"$b/$tag"
       }
     }.distinct.sorted
-    IndexStatus(mh, rows, tableFileCount(s, delTable), term, top,
-      cfgOf.flatMap(readIndexConfig(s, _))
-        .getOrElse(Map.empty[String, Int]),
-      st, drift.map(_()), holds, pinned, leaked)
+    IndexStatus(mh, rows, tableFileCount(s, delTable), term, top, cfg,
+      st, holds, pinned, leaked)
   }
 
-  /** [[describeIndex]] for the incremental BM25 family (stats row
-    * included — n_docs/sum_dl read directly off the snapshot). */
-  def describeBm25(s: org.apache.spark.sql.SparkSession,
-      table: String): IndexStatus =
-    describeIndex(s, Seq(table), table + "_del",
-      statsTable = Some(table + "_stats"))
-
-  /** STRUCTURAL AUDIT (fsck) for an incremental BM25 family — the
-    * tool an operator reaches for after a crash or a suspect migration:
-    * recompute every invariant the engine maintains incrementally and
-    * report violations (empty = healthy). Unlike the specs this runs
-    * against PRODUCTION state, and unlike [[describeIndex]] it is
-    * O(index) by design (a full recompute IS the audit):
-    *   - the 1-row stats (n_docs, sum_dl) must equal a recompute over
-    *     the tombstone-filtered postings — the exactly-once delete WAL
-    *     and the reset reconcile both promise this;
-    *   - every live doc must carry exactly ONE generation — two live
-    *     generations of one id means a barrier failed to supersede;
+  /** The incremental BM25 family's lifecycle ([[IndexFamily]]):
+    * postings member plus the 1-row `statsTable` (n_docs, sum_dl) —
+    * describe reports it, and deletes go through its write-ahead log
+    * ([[deleteBm25Docs]]). The invariant (fsck) recomputes what the
+    * engine maintains incrementally:
+    *   - the stats must equal a recompute over the tombstone-filtered
+    *     postings — the exactly-once delete WAL and the reset
+    *     reconcile both promise this;
     *   - a lingering `_del_stage` is reported (a crashed delete that
     *     heals at the next entry — informational, not corruption).
-    * Read-only; racing a maintenance swap can produce transient
-    * findings — run it quiesced, or under [[retryingProbe]].
-    */
-  def fsckBm25(s: org.apache.spark.sql.SparkSession,
-      table: String, statsTable: String): Seq[String] = {
-    val swaps = swapCrashViolations(s, Seq(table, table + "_del"))
-    if (swaps.nonEmpty) return swaps
-    val out = scala.collection.mutable.ListBuffer.empty[String]
-    if (!s.catalog.tableExists(table)) return out.toList
-    val live = exceptTombstones(s.table(table), s, table + "_del",
-      "doc_id")
-    if (s.catalog.tableExists(statsTable)) {
-      val r = live.select("doc_id", "dl").distinct()
-        .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).collect()(0)
-      val cur = s.table(statsTable).collect()(0)
-      if (cur.getLong(0) != r.getLong(0) ||
-          cur.getLong(1) != r.getLong(1))
-        out += s"stats drift: stored (n_docs=${cur.getLong(0)}, " +
-          s"sum_dl=${cur.getLong(1)}) != recomputed " +
-          s"(${r.getLong(0)}, ${r.getLong(1)})"
-    } else out += s"stats table $statsTable missing"
-    out ++= multiGenViolations(live, "doc_id")
-    if (s.catalog.tableExists(table + "_del_stage"))
-      out += "pending delete stage (crashed delete; heals at the " +
-        "next maintenance entry)"
-    out.toList
-  }
+    * Repair applies a pending stage through the standard WAL replay
+    * (exactly-once by txn token), then recomputes the stats from the
+    * live postings — after the shared re-barrier, which kills
+    * superseded postings whose (count, dl) the stored stats still
+    * carry. */
+  def bm25Family(table: String, statsTable: String): IndexFamily =
+    new IndexFamily(table,
+      members = Seq(table), idCol = "doc_id", callerIdCol = "doc_id",
+      statsTable = Some(statsTable),
+      invariant = (s, _) => {
+        val stats =
+          if (!s.catalog.tableExists(statsTable))
+            Seq(s"stats table $statsTable missing")
+          else {
+            val (n, dl) = liveBm25Stats(s, table)
+            val cur = s.table(statsTable).collect()(0)
+            if (cur.getLong(0) == n && cur.getLong(1) == dl) Nil
+            else Seq(s"stats drift: stored (n_docs=${cur.getLong(0)}, " +
+              s"sum_dl=${cur.getLong(1)}) != recomputed ($n, $dl)")
+          }
+        stats ++ (if (!s.catalog.tableExists(table + "_del_stage")) Nil
+          else Seq("pending delete stage (crashed delete; heals at " +
+            "the next maintenance entry)"))
+      },
+      heals = Seq(
+        IndexFamily.Heal(_.contains("pending delete stage"),
+          "applied crashed delete stage",
+          applyBm25DeleteStage(_, table, statsTable)),
+        // ONE stats recompute for every class that needs it (ADVICE
+        // r16 #4: a round carrying both a multi-gen id and stats drift
+        // used to run the O(index) recompute twice); it runs after the
+        // re-barrier, so it always sees the re-barriered postings
+        IndexFamily.Heal(v => v.contains("stats drift") ||
+            v.contains("stats table") || v.contains("live generations"),
+          "recomputed stats from live postings",
+          recomputeBm25Stats(_, table, statsTable))))
 
-  /** [[fsckBm25]] for a band index family: the supersession invariant
-    * (band families store no corpus stats and no config pin — the
-    * slot-prefixed band keys are self-describing, so generation
-    * integrity is the one invariant to recompute). */
-  def fsckBand(s: org.apache.spark.sql.SparkSession,
-      table: String): Seq[String] = {
-    val swaps = swapCrashViolations(s, Seq(table, table + "_del"))
-    if (swaps.nonEmpty) swaps
-    else if (!s.catalog.tableExists(table)) Nil
-    else multiGenViolations(
-      exceptTombstones(s.table(table), s, table + "_del", "old_id"),
-      "old_id")
-  }
+  /** [[bm25Family]] over the conventional `<table>_stats` sibling. */
+  def bm25Family(table: String): IndexFamily =
+    bm25Family(table, table + "_stats")
+
+  /** A band index family's lifecycle ([[IndexFamily]]): (band_key,
+    * old_id, old_toks) postings, addressed by `doc_id` — the public
+    * documents-side id name, stored as old_id. Band families keep no
+    * corpus stats and no config pin (the slot-prefixed band keys are
+    * self-describing), so one live generation per id is the one
+    * invariant to recompute and the re-barrier the one heal. */
+  def bandFamily(table: String): IndexFamily = new IndexFamily(table,
+    members = Seq(table), idCol = "old_id", callerIdCol = "doc_id")
 
   /** One live generation per id — the supersession invariant every
-    * gen-barrier family shares ([[fsckBm25]] and the vector fscks). */
+    * gen-barrier family shares ([[IndexFamily.fsck]]). */
   private[graft] def multiGenViolations(
       live: org.apache.spark.sql.DataFrame,
       idCol: String): Seq[String] =
@@ -890,63 +869,6 @@ object TextOps {
       .map(r => s"$idCol ${r.get(0)} has ${r.getLong(1)} live " +
         "generations (a barrier failed to supersede)")
       .toSeq
-
-  /** [[describeIndex]] for a band index family. */
-  def describeBand(s: org.apache.spark.sql.SparkSession,
-      table: String): IndexStatus =
-    describeIndex(s, Seq(table), table + "_del")
-
-  /** REPAIR SKELETON (r15 — VERDICT item 1, "close the fsck loop"):
-    * one idempotent pass mapping each fsck violation class to its
-    * existing heal. Protocol, under the caller-held build lock:
-    *   1. audit — a CLEAN family returns Nil having mutated NOTHING;
-    *   2. refuse loudly BEFORE touching anything if any violation
-    *     matches no registered heal (default-refuse: an unknown
-    *     corruption class must never be "healed" by guesswork, and a
-    *     partial repair that fixed the easy half would mask it);
-    *   3. run each heal whose class appeared, in registration order
-    *     (order is part of the contract — e.g. BM25 re-barriers
-    *     before recomputing stats, because the re-barrier itself
-    *     changes what the stats must say);
-    *   4. re-audit and THROW if violations remain — repair either
-    *     converges in one call or says so, never reports success
-    *     over a still-broken family.
-    * Returns the descriptions of the heals it ran.
-    */
-  private[graft] def runRepair(s: org.apache.spark.sql.SparkSession,
-      fsck: () => Seq[String],
-      heals: Seq[(String => Boolean, String, () => Unit)])
-      : Seq[String] = withBuildLock(s) {
-    val v0 = fsck()
-    if (v0.isEmpty) Nil
-    else {
-      // iterate to convergence (r16): a heal can REVEAL violations
-      // the broken state masked — fsck returns crashed-swap evidence
-      // ALONE (content audits against a half-swapped family are
-      // meaningless), so only the post-recovery round can see, say,
-      // the stats drift the crash also caused. Each round still
-      // refuses on any unknown class BEFORE touching anything
-      // further; the bound keeps a non-converging heal from looping.
-      val fixed = scala.collection.mutable.ListBuffer.empty[String]
-      var v = v0
-      var rounds = 0
-      while (v.nonEmpty && rounds < 4) {
-        val unmatched = v.filterNot(x => heals.exists(_._1(x)))
-        if (unmatched.nonEmpty)
-          throw new IllegalStateException(
-            "repair: no safe heal for: " + unmatched.mkString("; "))
-        heals.foreach { case (matches, desc, run) =>
-          if (v.exists(matches)) { run(); fixed += desc; () }
-        }
-        v = fsck()
-        rounds += 1
-      }
-      if (v.nonEmpty)
-        throw new IllegalStateException(
-          "repair did not converge: " + v.mkString("; "))
-      fixed.toList.distinct
-    }
-  }
 
   /** Crashed-swap evidence across a family's swap-promoted members:
     * a member unbound while its `_compact`/`_old` twin holds the
@@ -1035,69 +957,24 @@ object TextOps {
   /** Overwrite the 1-row stats table with a recompute over the live
     * (tombstone-filtered) postings — the one true heal for stats
     * drift, shared by [[reconcileBm25Tombstones]] and
-    * [[repairBm25]]. Caller holds the build lock. */
+    * [[bm25Family]]'s repair. Caller holds the build lock. */
   private def recomputeBm25Stats(s: org.apache.spark.sql.SparkSession,
       table: String, statsTable: String): Unit = {
-    val live = exceptTombstones(s.table(table), s, table + "_del",
-      "doc_id")
-    val r = live.select("doc_id", "dl").distinct()
-      .agg(count(lit(1)).as("n_docs"),
-        coalesce(sum("dl"), lit(0L)).as("sum_dl"))
-      .collect()(0)
     val sp = s
     import sp.implicits._
-    Seq((r.getLong(0), r.getLong(1))).toDF("n_docs", "sum_dl")
+    Seq(liveBm25Stats(s, table)).toDF("n_docs", "sum_dl")
       .write.mode("overwrite").saveAsTable(statsTable)
   }
 
-  /** REPAIR an incremental BM25 family ([[runRepair]] instance):
-    *   - a pending `_del_stage` applies through the standard WAL
-    *     replay (exactly-once by txn token);
-    *   - multi-generation ids re-barrier at their top live gen, THEN
-    *     the stats recompute — the re-barrier kills the superseded
-    *     postings, whose (count, dl) the stored stats still carry;
-    *   - plain stats drift (or a lost stats table) recomputes from
-    *     the live postings.
-    * Anything else refuses loudly. Clean family = no-op Nil.
-    */
-  def repairBm25(s: org.apache.spark.sql.SparkSession, table: String,
-      statsTable: String): Seq[String] =
-    runRepair(s, () => fsckBm25(s, table, statsTable), Seq(
-      (_.startsWith("crashed swap"),
-        "recovered crashed swap renames",
-        () => healCrashedSwaps(s, Seq(table, table + "_del"))),
-      (_.contains("pending delete stage"),
-        "applied crashed delete stage",
-        () => applyBm25DeleteStage(s, table, statsTable)),
-      (_.contains("live generations"),
-        "re-barriered multi-generation ids",
-        () => rebarrierMultiGen(s, Seq(table), table + "_del",
-          "doc_id")),
-      // the stats recompute is ONE entry matching every class that
-      // needs it (ADVICE r16 #4 applied here too: the re-barrier
-      // entry used to ALSO recompute stats, so a round carrying both
-      // a multi-gen id and stats drift ran the O(index) recompute
-      // twice). Ordered after the re-barrier — runRepair runs heals
-      // in sequence, so the recompute always sees the re-barriered
-      // postings.
-      (v => v.contains("stats drift") || v.contains("stats table") ||
-          v.contains("live generations"),
-        "recomputed stats from live postings",
-        () => recomputeBm25Stats(s, table, statsTable))))
-
-  /** REPAIR a band index family: the supersession invariant is the
-    * family's one recomputable invariant, so the one heal is the
-    * re-barrier. Clean family = no-op Nil. */
-  def repairBand(s: org.apache.spark.sql.SparkSession,
-      table: String): Seq[String] =
-    runRepair(s, () => fsckBand(s, table), Seq(
-      (_.startsWith("crashed swap"),
-        "recovered crashed swap renames",
-        () => healCrashedSwaps(s, Seq(table, table + "_del"))),
-      (_.contains("live generations"),
-        "re-barriered multi-generation ids",
-        () => rebarrierMultiGen(s, Seq(table), table + "_del",
-          "old_id"))))
+  /** (n_docs, sum_dl) recomputed over the live (tombstone-filtered)
+    * postings — what the stored stats row must say. */
+  private def liveBm25Stats(s: org.apache.spark.sql.SparkSession,
+      table: String): (Long, Long) = {
+    val r = exceptTombstones(s.table(table), s, table + "_del", "doc_id")
+      .select("doc_id", "dl").distinct()
+      .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).collect()(0)
+    (r.getLong(0), r.getLong(1))
+  }
 
   /** Rewrite a tombstone list to ONE file (entries deduped on
     * (id, gen)) — the cheap O(|list|) answer to delete-call file
@@ -1187,21 +1064,6 @@ object TextOps {
       }
       ran.toList
     }
-
-  /** [[maintainIndex]] for the incremental BM25 family (postings
-    * member + stats sibling; no quantizer). */
-  def maintainBm25(s: org.apache.spark.sql.SparkSession, table: String,
-      policy: MaintenancePolicy = MaintenancePolicy(),
-      guard: FoldGuard = FoldGuard.Refuse): Seq[String] =
-    maintainIndex(s, Seq(table), table + "_del", "doc_id", policy,
-      guard = guard)
-
-  /** [[maintainIndex]] for a band index family. */
-  def maintainBand(s: org.apache.spark.sql.SparkSession, table: String,
-      policy: MaintenancePolicy = MaintenancePolicy(),
-      guard: FoldGuard = FoldGuard.Refuse): Seq[String] =
-    maintainIndex(s, Seq(table), table + "_del", "old_id", policy,
-      guard = guard)
 
   /** Promote a fully-written replacement table `tmp` to `table` with an
     * `_old` backup — the maintenance-swap primitive compaction and any
@@ -5143,17 +5005,6 @@ object TextOps {
       appendBandIndex(old.filter(pmod(col("doc_id"), lit(2)) === 1), t)
     })
 
-  /** TOMBSTONED DELETE for a band index — the [[tombstone]] lifecycle
-    * over (band_key, old_id, old_toks) rows: deleted documents stop
-    * colliding immediately ([[liveBandIndex]] subtracts the list),
-    * [[vacuumIndex]] folds it. `ids` is a (doc_id) frame — the public
-    * documents-side id name; the index stores it as old_id.
-    */
-  def deleteBandDocs(s: org.apache.spark.sql.SparkSession,
-      table: String, ids: org.apache.spark.sql.DataFrame): Unit =
-    tombstone(s, table + "_del",
-      ids.select(col("doc_id").as("old_id")), "old_id")
-
   /** UPSERT documents into a stored band index — the
     * [[upsertBm25Docs]] contract for the near-dup family (no stats
     * twin here, so the whole op is barrier + append): the incoming
@@ -5177,10 +5028,6 @@ object TextOps {
   def liveBandIndex(s: org.apache.spark.sql.SparkSession,
       table: String): org.apache.spark.sql.DataFrame =
     exceptTombstones(s.table(table), s, table + "_del", "old_id")
-
-  def vacuumBandIndex(s: org.apache.spark.sql.SparkSession,
-      table: String, guard: FoldGuard = FoldGuard.Refuse): Unit =
-    vacuumIndex(s, table + "_del", Seq(table), "old_id", guard)
 
   /** Near-dup pairs of `newDocs` against a stored (band_key, old_id,
     * old_toks) index frame (spark.table of a [[writeBandIndex]] table,

@@ -756,7 +756,7 @@ object StreamingOps {
     */
   def delete(spark: SparkSession, g: IndexGroup,
       ids: org.apache.spark.sql.DataFrame): Unit =
-    g.members.foreach(_.delete(spark, ids))
+    g.members.foreach(_.family.delete(spark, ids))
 
   /** ONE-CALL LEGAL HOLD — the hold twin of [[delete]]: stamp the id
     * set into EVERY member registry (`<member>_hold`) so the unified
@@ -767,7 +767,7 @@ object StreamingOps {
     */
   def hold(spark: SparkSession, g: IndexGroup,
       ids: org.apache.spark.sql.DataFrame): Unit = {
-    g.members.foreach(_.hold(spark, ids))
+    g.members.foreach(_.family.hold(spark, ids))
     // the hold contract is NO TRACE — and the quarantine audit sinks
     // hold rejected rows' FULL CONTENT. A row quarantined on arrival
     // and legally held afterwards would otherwise keep its content in
@@ -785,7 +785,7 @@ object StreamingOps {
   /** Fold every member family's tombstones into its stored files. */
   def vacuum(spark: SparkSession, g: IndexGroup,
       guard: FoldGuard = FoldGuard.Refuse): Unit =
-    g.members.foreach(_.vacuum(spark, guard))
+    g.members.foreach(_.family.vacuum(spark, guard))
 
   // ---- point-in-time backup/restore for stream-fed groups (r15) --
 
@@ -1671,12 +1671,10 @@ object StreamingOps {
       g.members.filter(m => spark.catalog.tableExists(m.table))
     else g.members
 
-  /** One-call `describe`: member-family name → status. Drift gauges
-    * stay off — they are O(index); ask the per-family describe when
-    * needed. */
+  /** One-call `describe`: member-family name → status. */
   def describe(spark: SparkSession,
       g: IndexGroup): Map[String, TextOps.IndexStatus] =
-    visited(spark, g).map(m => m.table -> m.describe(spark)).toMap
+    visited(spark, g).map(m => m.table -> m.family.describe(spark)).toMap
 
   /** One-call cadence advisory: each member's `due()` prefixed with
     * its family, PLUS the admission-drift advisory for the ingest and
@@ -1732,7 +1730,8 @@ object StreamingOps {
   /** One-call structural audit — violations prefixed with the member
     * family, Nil = healthy. */
   def fsck(spark: SparkSession, g: IndexGroup): Seq[String] =
-    visited(spark, g).flatMap(m => m.fsck(spark).map(v => s"${m.table}: $v"))
+    visited(spark, g).flatMap(m =>
+      m.family.fsck(spark).map(v => s"${m.table}: $v"))
 
   /** One-call repair: each member family's idempotent fsck-mapped
     * heal pass, in the ingest loop's member order. Same contract as
@@ -1740,7 +1739,7 @@ object StreamingOps {
     * violation refuses loudly. */
   def repair(spark: SparkSession, g: IndexGroup): Seq[String] =
     visited(spark, g).flatMap(m =>
-      m.repair(spark).map(v => s"${m.table}: $v"))
+      m.family.repair(spark).map(v => s"${m.table}: $v"))
 
   /** One-call maintenance pass over the group's members.
     * `refreshWith` supplies the corpus for a vector group's quantizer
@@ -1753,8 +1752,9 @@ object StreamingOps {
       guard: FoldGuard = FoldGuard.Refuse): Seq[String] = {
     require(refreshWith.isEmpty || g.quantized,
       s"maintain: a ${g.kind} group has no quantizer family to refresh")
-    visited(spark, g).flatMap(m => m.maintain(spark, policy, refreshWith,
-      guard).map(v => s"${m.table}: $v"))
+    visited(spark, g).flatMap(m => m.family.maintain(spark, policy,
+      refreshWith.filter(_ => m.family.quantized), guard)
+      .map(v => s"${m.table}: $v"))
   }
 
   /** Refresh the caller session's view of every member table, the hash
@@ -1764,7 +1764,7 @@ object StreamingOps {
     * stats table's vanished part file). */
   private def refreshMembers(spark: SparkSession, g: IndexGroup,
       extra: Seq[String] = Nil): Unit =
-    (g.members.flatMap(m => m.ingestTables :+ m.delTable) ++
+    (g.members.flatMap(m => m.ingestTables :+ m.family.delTable) ++
         g.hashStore ++ extra)
       .foreach(t => if (spark.catalog.tableExists(t))
         spark.catalog.refreshTable(t))
@@ -1773,7 +1773,7 @@ object StreamingOps {
   private def exceptHeld(s: SparkSession, g: IndexGroup,
       df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     g.members.foldLeft(df)((d, m) =>
-      TextOps.exceptHeld(d, s, m.holdTable, g.idCol))
+      TextOps.exceptHeld(d, s, m.family.holdTable, g.idCol))
 
   /** STREAMING DELETES — the CDC shape: deletion requests arrive as a
     * file stream of id rows and each micro-batch drives [[delete]]
@@ -1985,7 +1985,7 @@ object StreamingOps {
       // METADATA-CHEAP legs run per batch — the drift gauges are
       // O(index) reconstruction jobs, and drift-triggered refresh
       // belongs to an operator pass with the training corpus in hand
-      // (IvfIndex/PqIndex.maintain with refreshWith), not to every
+      // (the family maintain with refreshWith), not to every
       // arriving micro-batch. FoldGuard.Anchor: unattended (see the
       // document ingest hook).
       afterBatch = s => maintain.foreach(p =>
@@ -2367,7 +2367,7 @@ object StreamingOps {
       batches: Option[Seq[Long]] = None)
       : org.apache.spark.sql.DataFrame = {
     val out = remediateCore(spark, if (cdc) g.upsertStream else g.base,
-      g.idCol, g.members.map(_.holdTable), fix, admission, batches,
+      g.idCol, g.members.map(_.family.holdTable), fix, admission, batches,
       healed => {
         val s = healed.sparkSession
         // ONE definition of the ingest door's trimmings (shared with

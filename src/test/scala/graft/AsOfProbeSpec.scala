@@ -84,7 +84,7 @@ class AsOfProbeSpec extends AnyFunSuite with SparkSuite {
       AnnIndex.write(emb, a, nBands = 4, bits = 2)
       val sp = spark
       import sp.implicits._
-      AnnIndex.delete(spark, a, Seq(3L).toDF("vec_id"))
+      AnnIndex.family(a).delete(spark, Seq(3L).toDF("vec_id"))
       TextOps.snapshotIndex(spark, a, "s1")
       val queries = emb.filter(col("vec_id").isin(1L, 2L))
         .select((col("vec_id") + 1000L).as("q_id"), col("embedding"))
@@ -95,7 +95,7 @@ class AsOfProbeSpec extends AnyFunSuite with SparkSuite {
       assert(asOf.nonEmpty)
       assert(!asOf.keySet.exists(_._2 == 3L), "tombstoned vec scored")
       // live moves on: another delete shrinks the live candidates
-      AnnIndex.delete(spark, a, Seq(1L).toDF("vec_id"))
+      AnnIndex.family(a).delete(spark, Seq(1L).toDF("vec_id"))
       val live = scores(AnnIndex.scoreExternal(queries, spark, a))
       assert(live !== asOf)
       assert(scores(AnnIndex.scoreAsOf(queries, spark, a, "s1")) ===
@@ -127,7 +127,7 @@ class AsOfProbeSpec extends AnyFunSuite with SparkSuite {
       val sp = spark
       import sp.implicits._
       IvfIndex.write(Tables(spark, sf, "embeddings"), t)
-      IvfIndex.delete(spark, t, Seq(3L).toDF("vec_id"))
+      IvfIndex.family(t).delete(spark, Seq(3L).toDF("vec_id"))
       TextOps.snapshotIndex(spark, t, "s1")
       val queries = extQueries
       def scores(df: org.apache.spark.sql.DataFrame) =
@@ -139,7 +139,7 @@ class AsOfProbeSpec extends AnyFunSuite with SparkSuite {
       assert(!asOf.keySet.exists(_._2 == 3L), "tombstoned vec scored")
       // live moves on: member 1 dies, so query 1001 (its exact copy)
       // loses its sim~1 top hit in the LIVE probe only
-      IvfIndex.delete(spark, t, Seq(1L).toDF("vec_id"))
+      IvfIndex.family(t).delete(spark, Seq(1L).toDF("vec_id"))
       val live = scores(
         IvfIndex.scoreExternal(queries, spark, t, k = 5, nprobe = 2))
       assert(live !== asOf)
@@ -149,7 +149,7 @@ class AsOfProbeSpec extends AnyFunSuite with SparkSuite {
       // tombstones into a full cells rewrite, and the as-of probe
       // keeps serving the tag from the anchor (the bm25 contract,
       // carried to the ladder)
-      IvfIndex.vacuum(spark, t, FoldGuard.Anchor)
+      IvfIndex.family(t).vacuum(spark, FoldGuard.Anchor)
       assert(scores(IvfIndex.scoreAsOf(queries, spark, t, "s1",
         k = 5, nprobe = 2)) === asOf)
       TextOps.restoreSnapshot(spark, t, "s1")
@@ -167,7 +167,7 @@ class AsOfProbeSpec extends AnyFunSuite with SparkSuite {
       val sp = spark
       import sp.implicits._
       PqIndex.write(Tables(spark, sf, "embeddings"), t)
-      PqIndex.delete(spark, t, Seq(3L).toDF("vec_id"))
+      PqIndex.family(t).delete(spark, Seq(3L).toDF("vec_id"))
       TextOps.snapshotIndex(spark, t, "s1")
       val queries = extQueries
       // the live topK takes the (vec_id, v) member shape — adapt the
@@ -182,7 +182,7 @@ class AsOfProbeSpec extends AnyFunSuite with SparkSuite {
         k = 5))
       assert(asOf.nonEmpty)
       assert(!asOf.keySet.exists(_._2 == 3L), "tombstoned vec scored")
-      PqIndex.delete(spark, t, Seq(1L).toDF("vec_id"))
+      PqIndex.family(t).delete(spark, Seq(1L).toDF("vec_id"))
       val live = scores(PqIndex.topK(spark, t, liveQ, k = 5))
       assert(live !== asOf)
       assert(scores(PqIndex.scoreAsOf(queries, spark, t, "s1",
@@ -204,7 +204,7 @@ class AsOfProbeSpec extends AnyFunSuite with SparkSuite {
       val emb = Tables(spark, sf, "embeddings")
       AnnIndex.write(emb, av, nBands = 4, bits = 2)
       BqIndex.write(emb, t)
-      BqIndex.delete(spark, t, Seq(3L).toDF("vec_id"))
+      BqIndex.family(t).delete(spark, Seq(3L).toDF("vec_id"))
       TextOps.snapshotIndex(spark, t, "s1")
       TextOps.snapshotIndex(spark, av, "s1")
       val queries = extQueries
@@ -218,7 +218,7 @@ class AsOfProbeSpec extends AnyFunSuite with SparkSuite {
         vecsAsOf, k = 5))
       assert(asOf.nonEmpty)
       assert(!asOf.keySet.exists(_._2 == 3L), "tombstoned vec scored")
-      BqIndex.delete(spark, t, Seq(1L).toDF("vec_id"))
+      BqIndex.family(t).delete(spark, Seq(1L).toDF("vec_id"))
       val live = scores(BqIndex.scoreExternal(queries, spark, t,
         s"${av}_vec", k = 5))
       assert(live !== asOf)
@@ -243,7 +243,7 @@ class AsOfProbeSpec extends AnyFunSuite with SparkSuite {
       val emb = Tables(spark, sf, "embeddings")
       IvfIndex.write(emb, ivf)
       PqIndex.write(emb, t)
-      PqIndex.delete(spark, t, Seq(3L).toDF("vec_id"))
+      PqIndex.family(t).delete(spark, Seq(3L).toDF("vec_id"))
       TextOps.snapshotIndex(spark, ivf, "s1")
       TextOps.snapshotIndex(spark, t, "s1")
       val queries = extQueries
@@ -260,7 +260,7 @@ class AsOfProbeSpec extends AnyFunSuite with SparkSuite {
       assert(!asOf.keySet.exists(_._2 == 3L), "tombstoned vec scored")
       // live moves on on the PQ side only — the composed as-of probe
       // must not see it
-      PqIndex.delete(spark, t, Seq(1L).toDF("vec_id"))
+      PqIndex.family(t).delete(spark, Seq(1L).toDF("vec_id"))
       val liveQ = graft.operators.Ann.prepExternal(queries, 64)
         .select(col("q_id").as("vec_id"), col("qv").as("v"))
       val live = scores(PqIndex.topKPairs(spark, t, liveQ,
@@ -287,7 +287,7 @@ class AsOfProbeSpec extends AnyFunSuite with SparkSuite {
         .filter(col("doc_id") <= 40)
         .select(col("doc_id"), col("text"))
       TextOps.writeBandIndex(docs, t)
-      TextOps.deleteBandDocs(spark, t, Seq(3L).toDF("doc_id"))
+      TextOps.bandFamily(t).delete(spark, Seq(3L).toDF("doc_id"))
       TextOps.snapshotIndex(spark, t, "s1")
       // probe batch: exact copies of corpus docs 1-3 in a new id space
       val newDocs = docs.filter(col("doc_id").isin(1L, 2L, 3L))
@@ -301,7 +301,7 @@ class AsOfProbeSpec extends AnyFunSuite with SparkSuite {
         "tombstoned doc collided")
       // live moves on: doc 1 leaves the index — the as-of audit must
       // still see it as it stood at the tag
-      TextOps.deleteBandDocs(spark, t, Seq(1L).toDF("doc_id"))
+      TextOps.bandFamily(t).delete(spark, Seq(1L).toDF("doc_id"))
       val live = pairs(TextOps.nearDupsAgainstIndex(newDocs,
         TextOps.liveBandIndex(spark, t)))
       assert(!live.contains((1001L, 1L)))
@@ -322,7 +322,7 @@ class AsOfProbeSpec extends AnyFunSuite with SparkSuite {
       val sp = spark
       import sp.implicits._
       SqIndex.write(Tables(spark, sf, "embeddings"), t)
-      SqIndex.delete(spark, t, Seq(3L).toDF("vec_id"))
+      SqIndex.family(t).delete(spark, Seq(3L).toDF("vec_id"))
       TextOps.snapshotIndex(spark, t, "s1")
       val queries = extQueries
       def scores(df: org.apache.spark.sql.DataFrame) =
@@ -332,7 +332,7 @@ class AsOfProbeSpec extends AnyFunSuite with SparkSuite {
         k = 5))
       assert(asOf.nonEmpty)
       assert(!asOf.keySet.exists(_._2 == 3L), "tombstoned vec scored")
-      SqIndex.delete(spark, t, Seq(1L).toDF("vec_id"))
+      SqIndex.family(t).delete(spark, Seq(1L).toDF("vec_id"))
       val live = scores(SqIndex.scoreExternal(queries, spark, t,
         k = 5))
       assert(live !== asOf)

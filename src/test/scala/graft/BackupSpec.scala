@@ -70,7 +70,7 @@ class BackupSpec extends AnyFunSuite with SparkSuite {
       val did = TextOps.restoreIndex(spark, t)
       assert(did.exists(_.startsWith("restored ")), did.toString)
       assert(scores() === snap, "restore did not return the snapshot")
-      assert(TextOps.fsckBm25(spark, t, s"${t}_stats").isEmpty,
+      assert(TextOps.bm25Family(t).fsck(spark).isEmpty,
         "restored family fails its own audit")
       // the backup is kept; a second restore converges identically
       // (the crash-mid-restore story: just re-run)
@@ -135,15 +135,15 @@ class BackupSpec extends AnyFunSuite with SparkSuite {
       val snap = probe()
       assert(snap.nonEmpty)
       TextOps.backupIndex(spark, t)
-      AnnIndex.delete(spark, t, Seq(7L).toDF("vec_id"))
+      AnnIndex.family(t).delete(spark, Seq(7L).toDF("vec_id"))
       AnnIndex.upsert(emb.filter(col("vec_id") === 3L)
         .withColumn("embedding",
           expr("transform(embedding, x -> x + 5.0d)")), t, dim = dim)
-      AnnIndex.vacuum(spark, t)
+      AnnIndex.family(t).vacuum(spark)
       assert(probe() !== snap)
       TextOps.restoreIndex(spark, t)
       assert(probe() === snap, "restored ANN family probes differently")
-      assert(AnnIndex.fsck(spark, t).isEmpty)
+      assert(AnnIndex.family(t).fsck(spark).isEmpty)
     } finally drop(all: _*)
   }
 
@@ -163,7 +163,7 @@ class BackupSpec extends AnyFunSuite with SparkSuite {
         "backup must not copy the hold registry")
       // the hold arrives AFTER the snapshot — legal obligations don't
       // time-travel
-      TextOps.holdBm25Docs(spark, t, Seq(5L).toDF("doc_id"))
+      TextOps.bm25Family(t).hold(spark, Seq(5L).toDF("doc_id"))
       TextOps.restoreIndex(spark, t)
       assert(spark.catalog.tableExists(s"${t}_hold"),
         "restore rolled back the hold registry")

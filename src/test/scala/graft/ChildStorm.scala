@@ -43,7 +43,7 @@ object ChildStorm {
           graft.operators.TextOps.vacuumIndex(spark, s"${table}_del",
             Seq(table), "doc_id")
       }
-      val v = graft.operators.TextOps.fsckBm25(spark, table, statsT)
+      val v = graft.operators.TextOps.bm25Family(table, statsT).fsck(spark)
       val n = spark.table(statsT).select("n_docs").head().getLong(0)
       // the parent asserts on this exact line
       println(s"CHILD_OK n_docs=$n fsck=${v.size}")

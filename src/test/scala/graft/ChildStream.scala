@@ -94,9 +94,8 @@ object ChildStream {
         .select("doc_id").as[Long].collect().toSet
       require(hits == fixable, s"healed probe: $hits")
       val fsck =
-        graft.operators.TextOps.fsckBm25(spark, s"${base}_bm25",
-          s"${base}_bm25_stats") ++
-        graft.operators.TextOps.fsckBand(spark, s"${base}_band")
+        graft.operators.TextOps.bm25Family(s"${base}_bm25").fsck(spark) ++
+        graft.operators.TextOps.bandFamily(s"${base}_band").fsck(spark)
       fsck.foreach(v => println(s"CHILD_FSCK $v"))
       println(s"CHILD_OK rounds=$rounds healed=$healed " +
         s"remaining=$remaining fsck=${fsck.size}")

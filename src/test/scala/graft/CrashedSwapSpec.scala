@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * effect of the NEXT maintenance write. Now fsck returns the
   * crashed-swap evidence ALONE (content audits against a
   * half-swapped family are meaningless), repair maps it to the
-  * existing recoverGroupSwap/recoverSwap heals, and runRepair
+  * existing recoverGroupSwap/recoverSwap heals, and repair
   * iterates to convergence so the violations the crash MASKED (the
   * stats drift it also caused) heal in the same call.
   */
@@ -49,16 +49,16 @@ class CrashedSwapSpec extends AnyFunSuite with SparkSuite {
       val rows = spark.table(t).count()
       spark.sql(s"ALTER TABLE $t RENAME TO ${t}_old")
       // the family is dark: fsck must NOT read this as healthy
-      val v = TextOps.fsckBm25(spark, t, s"${t}_stats")
+      val v = TextOps.bm25Family(t).fsck(spark)
       assert(v.exists(_.startsWith(s"crashed swap: $t unbound")),
         v.toString)
-      val fixed = TextOps.repairBm25(spark, t, s"${t}_stats")
+      val fixed = TextOps.bm25Family(t).repair(spark)
       assert(fixed.contains("recovered crashed swap renames"),
         fixed.toString)
-      assert(TextOps.fsckBm25(spark, t, s"${t}_stats") === Nil)
+      assert(TextOps.bm25Family(t).fsck(spark) === Nil)
       assert(spark.table(t).count() === rows)
       assert(!spark.catalog.tableExists(s"${t}_old"))
-      assert(TextOps.repairBm25(spark, t, s"${t}_stats") === Nil)
+      assert(TextOps.bm25Family(t).repair(spark) === Nil)
     } finally drop(bm25All(t): _*)
   }
 
@@ -76,15 +76,15 @@ class CrashedSwapSpec extends AnyFunSuite with SparkSuite {
         "WHERE doc_id <> 3")
       val tmpRows = spark.table(s"${t}_compact").count()
       spark.sql(s"ALTER TABLE $t RENAME TO ${t}_old")
-      val v = TextOps.fsckBm25(spark, t, s"${t}_stats")
+      val v = TextOps.bm25Family(t).fsck(spark)
       assert(v.exists(_.contains(s"content survives in ${t}_compact")),
         v.toString)
       // the stats now describe the OLD content — the crash MASKED a
       // stats drift; the convergence loop heals both in ONE call
-      val fixed = TextOps.repairBm25(spark, t, s"${t}_stats")
+      val fixed = TextOps.bm25Family(t).repair(spark)
       assert(fixed.contains("recovered crashed swap renames") &&
         fixed.exists(_.contains("stats")), fixed.toString)
-      assert(TextOps.fsckBm25(spark, t, s"${t}_stats") === Nil)
+      assert(TextOps.bm25Family(t).fsck(spark) === Nil)
       assert(spark.table(t).count() === tmpRows)
       assert(!spark.catalog.tableExists(s"${t}_compact"))
       assert(!spark.catalog.tableExists(s"${t}_old"))
@@ -99,13 +99,13 @@ class CrashedSwapSpec extends AnyFunSuite with SparkSuite {
       freshBm25(t)
       spark.sql(s"CREATE TABLE ${t}_old LIKE $t")
       spark.sql(s"INSERT INTO ${t}_old SELECT * FROM $t")
-      val v = TextOps.fsckBm25(spark, t, s"${t}_stats")
+      val v = TextOps.bm25Family(t).fsck(spark)
       assert(v.exists(_.contains(s"leftover backup ${t}_old")),
         v.toString)
-      assert(TextOps.repairBm25(spark, t, s"${t}_stats")
+      assert(TextOps.bm25Family(t).repair(spark)
         .contains("recovered crashed swap renames"))
       assert(!spark.catalog.tableExists(s"${t}_old"))
-      assert(TextOps.fsckBm25(spark, t, s"${t}_stats") === Nil)
+      assert(TextOps.bm25Family(t).fsck(spark) === Nil)
 
       // a group-swap intent marker pinned with its replacement staged:
       // repair replays the promotion forward (recoverGroupSwap)
@@ -117,14 +117,14 @@ class CrashedSwapSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       Seq((t, s"${t}_compact")).toDF("member", "tmp")
         .write.saveAsTable(s"${t}_swap")
-      val v2 = TextOps.fsckBm25(spark, t, s"${t}_stats")
+      val v2 = TextOps.bm25Family(t).fsck(spark)
       assert(v2.exists(_.contains("intent marker")), v2.toString)
-      val fixed = TextOps.repairBm25(spark, t, s"${t}_stats")
+      val fixed = TextOps.bm25Family(t).repair(spark)
       assert(fixed.contains("recovered crashed swap renames"),
         fixed.toString)
       assert(spark.table(t).count() === tmpRows)
       assert(!spark.catalog.tableExists(s"${t}_swap"))
-      assert(TextOps.fsckBm25(spark, t, s"${t}_stats") === Nil)
+      assert(TextOps.bm25Family(t).fsck(spark) === Nil)
     } finally drop(bm25All(t): _*)
   }
 
@@ -148,15 +148,15 @@ class CrashedSwapSpec extends AnyFunSuite with SparkSuite {
       spark.sql(s"ALTER TABLE $t RENAME TO ${t}_old")
       // fsck sees ONLY the swap (content audits against a
       // half-swapped family are meaningless)...
-      val v0 = TextOps.fsckBm25(spark, t, s"${t}_stats")
+      val v0 = TextOps.bm25Family(t).fsck(spark)
       assert(v0.forall(_.startsWith("crashed swap")), v0.toString)
       // ...and ONE repair() converges through all three classes —
       // the convergence loop re-audits after each round, so the
       // violations the crash masked surface and heal in the same call
-      val fixed = TextOps.repairBm25(spark, t, s"${t}_stats")
+      val fixed = TextOps.bm25Family(t).repair(spark)
       assert(fixed.contains("recovered crashed swap renames") &&
         fixed.exists(_.contains("re-barriered")), fixed.toString)
-      assert(TextOps.fsckBm25(spark, t, s"${t}_stats") === Nil)
+      assert(TextOps.bm25Family(t).fsck(spark) === Nil)
       // the healed family equals a from-scratch build over the FINAL
       // content (doc 2 replaced — the newest generation survives)
       val t2 = s"cs_all_twin_p$pid"
@@ -177,7 +177,7 @@ class CrashedSwapSpec extends AnyFunSuite with SparkSuite {
         assert(want.nonEmpty)
         assert(scores(lp, ls) === want)
       } finally drop(t2, s"${t2}_stats")
-      assert(TextOps.repairBm25(spark, t, s"${t}_stats") === Nil)
+      assert(TextOps.bm25Family(t).repair(spark) === Nil)
     } finally drop(bm25All(t): _*)
   }
 
@@ -197,12 +197,12 @@ class CrashedSwapSpec extends AnyFunSuite with SparkSuite {
       val want = probe()
       assert(want.nonEmpty)
       spark.sql(s"ALTER TABLE ${a}_vec RENAME TO ${a}_vec_old")
-      val v = AnnIndex.fsck(spark, a)
+      val v = AnnIndex.family(a).fsck(spark)
       assert(v.exists(_.startsWith(s"crashed swap: ${a}_vec unbound")),
         v.toString)
-      assert(AnnIndex.repair(spark, a)
+      assert(AnnIndex.family(a).repair(spark)
         .contains("recovered crashed swap renames"))
-      assert(AnnIndex.fsck(spark, a) === Nil)
+      assert(AnnIndex.family(a).fsck(spark) === Nil)
       assert(probe() === want)
     } finally drop(all: _*)
   }

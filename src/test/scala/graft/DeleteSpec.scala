@@ -232,7 +232,7 @@ class DeleteSpec extends AnyFunSuite with SparkSuite {
       val probeDocs = docs.filter(col("doc_id") >= 200 &&
         col("doc_id") < 260)
       TextOps.writeBandIndex(old, t)
-      TextOps.deleteBandDocs(spark, t, victims)
+      TextOps.bandFamily(t).delete(spark, victims)
       TextOps.writeBandIndex(
         old.join(victims, Seq("doc_id"), "left_anti"), t2)
       def pairs(index: org.apache.spark.sql.DataFrame) =
@@ -241,7 +241,7 @@ class DeleteSpec extends AnyFunSuite with SparkSuite {
       val got = pairs(TextOps.liveBandIndex(spark, t))
       assert(got === pairs(spark.table(t2)))
       assert(!got.exists { case (_, o) => o >= 10L && o < 40L })
-      TextOps.vacuumBandIndex(spark, t)
+      TextOps.bandFamily(t).vacuum(spark)
       assert(!spark.catalog.tableExists(s"${t}_del"))
       assert(spark.table(t).filter(
         col("old_id") >= 10L && col("old_id") < 40L).isEmpty)
@@ -259,7 +259,7 @@ class DeleteSpec extends AnyFunSuite with SparkSuite {
     try {
       val ids = victimIds(8)
       AnnIndex.write(emb, t)
-      AnnIndex.delete(spark, t, ids)
+      AnnIndex.family(t).delete(spark, ids)
       // banding is stateless (deterministic hyperplanes), so the
       // survivor-only build differs from the deleted index by exactly
       // the tombstoned rows
@@ -279,7 +279,7 @@ class DeleteSpec extends AnyFunSuite with SparkSuite {
         .map(_.getLong(1)).toSet
       assert(ext.intersect((20L until 28L).toSet).isEmpty)
 
-      AnnIndex.vacuum(spark, t)
+      AnnIndex.family(t).vacuum(spark)
       assert(!spark.catalog.tableExists(s"${t}_del"))
       assert(spark.table(s"${t}_vec").filter(
         col("vec_id") >= 20L && col("vec_id") < 28L).isEmpty)
@@ -337,16 +337,16 @@ class DeleteSpec extends AnyFunSuite with SparkSuite {
         case "sq" => SqIndex.write(survivors, t)
       }
       def delete(f: String, t: String): Unit = f match {
-        case "ivf" => IvfIndex.delete(spark, t, ids)
-        case "pq" => PqIndex.delete(spark, t, ids)
-        case "bq" => BqIndex.delete(spark, t, ids)
-        case "sq" => SqIndex.delete(spark, t, ids)
+        case "ivf" => IvfIndex.family(t).delete(spark, ids)
+        case "pq" => PqIndex.family(t).delete(spark, ids)
+        case "bq" => BqIndex.family(t).delete(spark, ids)
+        case "sq" => SqIndex.family(t).delete(spark, ids)
       }
       def vacuum(f: String, t: String): Unit = f match {
-        case "ivf" => IvfIndex.vacuum(spark, t)
-        case "pq" => PqIndex.vacuum(spark, t)
-        case "bq" => BqIndex.vacuum(spark, t)
-        case "sq" => SqIndex.vacuum(spark, t)
+        case "ivf" => IvfIndex.family(t).vacuum(spark)
+        case "pq" => PqIndex.family(t).vacuum(spark)
+        case "bq" => BqIndex.family(t).vacuum(spark)
+        case "sq" => SqIndex.family(t).vacuum(spark)
       }
       fams.foreach { f =>
         val t = s"${base}_$f"

@@ -81,7 +81,7 @@ class EpochLeakSpec extends AnyFunSuite with SparkSuite {
       assert(e.getMessage.contains(s"$t/$tag"), e.getMessage)
       assert(TextOps.listSnapshots(spark, t).map(_._1) === Seq(tag))
       // the cadence check shows the pin conflict but NO leak yet
-      val stLive = TextOps.describeBm25(spark, t)
+      val stLive = TextOps.bm25Family(t).describe(spark)
       assert(stLive.leakedEpochs === Nil, stLive.leakedEpochs)
       assert(!stLive.due().exists(_.startsWith("sweep-leaked-epochs")))
       // and the gauge prices it as an intentional snapshot
@@ -97,7 +97,7 @@ class EpochLeakSpec extends AnyFunSuite with SparkSuite {
         !ProcessHandle.of(childPid).get.isAlive)
 
       // due() names the leak BEFORE any fold trips over it...
-      val stDead = TextOps.describeBm25(spark, t)
+      val stDead = TextOps.bm25Family(t).describe(spark)
       assert(stDead.leakedEpochs === Seq(s"$t/$tag"),
         stDead.leakedEpochs)
       assert(stDead.due().exists(v =>
@@ -113,8 +113,8 @@ class EpochLeakSpec extends AnyFunSuite with SparkSuite {
       // proceeds — the crash cannot wedge batch maintenance
       TextOps.compactIndex(spark, t)
       assert(TextOps.listSnapshots(spark, t) === Nil)
-      assert(TextOps.fsckBm25(spark, t, s"${t}_stats") === Nil)
-      assert(TextOps.describeBm25(spark, t).leakedEpochs === Nil)
+      assert(TextOps.bm25Family(t).fsck(spark) === Nil)
+      assert(TextOps.bm25Family(t).describe(spark).leakedEpochs === Nil)
     } finally {
       if (child.isAlive) child.destroyForcibly()
       if (tag != null) TextOps.dropSnapshot(spark, t, tag)

@@ -42,7 +42,7 @@ class ExportSpec extends AnyFunSuite with SparkSuite {
         src, s"${src}_stats")
       TextOps.deleteBm25Docs(spark, src, s"${src}_stats",
         Seq(2L).toDF("doc_id"))
-      TextOps.holdBm25Docs(spark, src, Seq(7L).toDF("doc_id"))
+      TextOps.bm25Family(src).hold(spark, Seq(7L).toDF("doc_id"))
       val qt = Seq((1, "window"), (1, "spark"), (2, "data"))
         .toDF("q_id", "token")
       def scores(t: String): Map[(Int, Long), Double] = {
@@ -87,7 +87,7 @@ class ExportSpec extends AnyFunSuite with SparkSuite {
         "a migrated family ingested held content")
       // the tombstone travelled too: doc 2 stays dead
       assert(p.filter(col("doc_id") === 2L).isEmpty)
-      assert(TextOps.fsckBm25(spark, dst, s"${dst}_stats").isEmpty,
+      assert(TextOps.bm25Family(dst).fsck(spark).isEmpty,
         "imported family fails its own audit")
     } finally drop(all: _*)
   }
@@ -114,7 +114,7 @@ class ExportSpec extends AnyFunSuite with SparkSuite {
       TextOps.exportIndex(spark, src, dir)
       TextOps.importIndex(spark, dir, dst)
       assert(probe(dst) === want, "migrated ANN family probes differently")
-      assert(AnnIndex.fsck(spark, dst).isEmpty)
+      assert(AnnIndex.family(dst).fsck(spark).isEmpty)
     } finally drop(all: _*)
   }
 

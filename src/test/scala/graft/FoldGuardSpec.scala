@@ -67,7 +67,7 @@ class FoldGuardSpec extends AnyFunSuite with SparkSuite {
       assert(TextOps.checkSnapshot(spark, t, "s1") === Nil)
       // the cadence check names the conflict without running anything:
       // force compaction due via a zero threshold
-      val st = TextOps.describeBm25(spark, t)
+      val st = TextOps.bm25Family(t).describe(spark)
       assert(st.pinnedSnapshots === Seq(s"$t/s1"), st.pinnedSnapshots)
       val due = st.due(TextOps.MaintenancePolicy(filesPerBucketMax = 0.0))
       assert(due.exists(_.startsWith("fold-orphans-snapshots:")),
@@ -75,7 +75,7 @@ class FoldGuardSpec extends AnyFunSuite with SparkSuite {
       assert(due.exists(_.contains(s"$t/s1")), due.toString)
       // maintain under the same policy refuses like the direct fold
       val e2 = intercept[IllegalStateException] {
-        TextOps.maintainBm25(spark, t,
+        TextOps.bm25Family(t).maintain(spark,
           TextOps.MaintenancePolicy(filesPerBucketMax = 0.0))
       }
       assert(e2.getMessage.contains(s"$t/s1"), e2.getMessage)

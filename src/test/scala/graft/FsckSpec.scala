@@ -40,31 +40,31 @@ class FsckSpec extends AnyFunSuite with SparkSuite {
       // with the WAL-adjusted stats over the survivors
       TextOps.deleteBm25Docs(spark, b, s"${b}_stats",
         Seq(3L).toDF("doc_id"))
-      assert(TextOps.fsckBm25(spark, b, s"${b}_stats") === Nil)
+      assert(TextOps.bm25Family(b).fsck(spark) === Nil)
 
       AnnIndex.write(emb, a, nBands = 4, bits = 2)
-      AnnIndex.delete(spark, a, Seq(5L).toDF("vec_id"))
-      assert(AnnIndex.fsck(spark, a) === Nil)
+      AnnIndex.family(a).delete(spark, Seq(5L).toDF("vec_id"))
+      assert(AnnIndex.family(a).fsck(spark) === Nil)
       BqIndex.write(emb, q)
-      assert(BqIndex.fsck(spark, q) === Nil)
+      assert(BqIndex.family(q).fsck(spark) === Nil)
       SqIndex.write(emb, sq)
-      assert(SqIndex.fsck(spark, sq) === Nil)
+      assert(SqIndex.family(sq).fsck(spark) === Nil)
       PqIndex.write(emb, p, m = 4, subDim = 16, ks = 8)
-      assert(PqIndex.fsck(spark, p) === Nil)
+      assert(PqIndex.family(p).fsck(spark) === Nil)
       IvfIndex.write(emb, iv, k = 4)
-      assert(IvfIndex.fsck(spark, iv) === Nil)
+      assert(IvfIndex.family(iv).fsck(spark) === Nil)
       val bd = s"fs_band_p$pid"
       drop(bd, s"${bd}_del")
       try {
         TextOps.writeBandIndex(docs, bd)
         TextOps.upsertBandDocs(spark, bd,
           Seq((2L, "entirely rewritten text")).toDF("doc_id", "text"))
-        assert(TextOps.fsckBand(spark, bd) === Nil)
+        assert(TextOps.bandFamily(bd).fsck(spark) === Nil)
       } finally drop(bd, s"${bd}_del")
       // a family that does not exist is silently healthy (nothing to
       // audit), not an error
-      assert(TextOps.fsckBm25(spark, s"fs_none_p$pid",
-        s"fs_none_p${pid}_stats") === Nil)
+      assert(TextOps.bm25Family(s"fs_none_p$pid",
+        s"fs_none_p${pid}_stats").fsck(spark) === Nil)
     } finally drop(all: _*)
   }
 
@@ -81,7 +81,7 @@ class FsckSpec extends AnyFunSuite with SparkSuite {
       // exists to prevent — fsck must catch it if it ever lands)
       Seq((99L, 99L)).toDF("n_docs", "sum_dl")
         .write.mode("overwrite").saveAsTable(s"${b}_stats")
-      val v1 = TextOps.fsckBm25(spark, b, s"${b}_stats")
+      val v1 = TextOps.bm25Family(b).fsck(spark)
       assert(v1.exists(_.contains("stats drift")), v1.toString)
 
       // a second live generation of doc 1 WITHOUT a barrier entry —
@@ -89,7 +89,7 @@ class FsckSpec extends AnyFunSuite with SparkSuite {
       TextOps.appendBm25Postings(
         Seq((1L, "rewritten content entirely")).toDF("doc_id", "text"),
         b, s"${b}_stats", gen = 1L)
-      val v2 = TextOps.fsckBm25(spark, b, s"${b}_stats")
+      val v2 = TextOps.bm25Family(b).fsck(spark)
       assert(v2.exists(_.contains("live generations")), v2.toString)
     } finally drop(b, s"${b}_stats", s"${b}_del")
   }
@@ -109,7 +109,7 @@ class FsckSpec extends AnyFunSuite with SparkSuite {
         .write.mode("append")
         .bucketBy(8, "band_key").sortBy("band_key")
         .saveAsTable(a)
-      val v = AnnIndex.fsck(spark, a)
+      val v = AnnIndex.family(a).fsck(spark)
       assert(v.exists(_.contains("band rows")), v.toString)
     } finally drop(a, s"${a}_vec", s"${a}_cfg", s"${a}_del")
   }
@@ -133,7 +133,7 @@ class FsckSpec extends AnyFunSuite with SparkSuite {
         .saveAsTable(tmp)
       spark.sql(s"DROP TABLE $a")
       spark.sql(s"ALTER TABLE $tmp RENAME TO $a")
-      val v = AnnIndex.fsck(spark, a)
+      val v = AnnIndex.family(a).fsck(spark)
       assert(v.exists(x => x.contains(s"vec_id $victim") &&
         x.contains("0 band rows")), v.toString)
     } finally drop(a, s"${a}_vec", s"${a}_cfg", s"${a}_del", tmp)

@@ -145,14 +145,14 @@ class GroupAuditSpec extends AnyFunSuite with SparkSuite {
       TextOps.overwriteIndexConfig(spark, a,
         Seq("dim" -> cfg("dim"), "nbands" -> cfg("nbands"),
           "bits" -> cfg("bits"), "planemod" -> (cfg("planemod") + 1)))
-      val v = AnnIndex.fsck(spark, a)
+      val v = AnnIndex.family(a).fsck(spark)
       assert(v.exists(_.contains("band rows")), v.toString)
       assert(v.exists(_.contains("planemod")), v.toString)
-      val fixed = AnnIndex.repair(spark, a)
+      val fixed = AnnIndex.family(a).repair(spark)
       // ONE combined entry heals both classes
       assert(fixed.count(_.contains("rebuilt band")) === 1,
         fixed.toString)
-      assert(AnnIndex.fsck(spark, a) === Nil)
+      assert(AnnIndex.family(a).fsck(spark) === Nil)
       def probe(t: String) =
         AnnIndex.topK(spark, t, c => c < 3, k = 4).collect()
           .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))

@@ -3,18 +3,18 @@ package graft
 import graft.pipeline.{OmsPipeline, SchemaMapper}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Schema-matching front end against every committed reference dataset
-  * (FIXTURES.md §B): each wild header set must map exactly as the
+/** Schema-matching front end against the reference datasets' header
+  * shapes (FIXTURES.md §B): each wild header set must map exactly as the
   * reference's synonym logic does, including the quoted-comma header and
-  * the intentionally unmappable file.
+  * the intentionally unmappable file. Inputs are the small in-repo
+  * fixtures under `src/test/resources/oms/` (verbatim headers, a few
+  * rows each).
   */
 class HeterogeneousInputsSpec extends AnyFunSuite with SparkSuite {
 
-  private val d = "/root/reference/DATASETS"
-
   private def mappedCols(file: String,
       synonyms: Seq[(String, Seq[String])]): Set[String] = {
-    val raw = OmsPipeline.extract(spark, s"$d/$file")
+    val raw = OmsPipeline.extract(spark, OmsFixtures.path(file))
     SchemaMapper.applyMapping(raw, synonyms).columns.toSet
   }
 

@@ -39,7 +39,7 @@ class HoldSpec extends AnyFunSuite with SparkSuite {
           3L -> "window fast data"), t, s"${t}_stats")
       // hold + delete doc 2 (hold gates ingest; delete removes the
       // already-stored content)
-      TextOps.holdBm25Docs(spark, t, Seq(2L).toDF("doc_id"))
+      TextOps.bm25Family(t).hold(spark, Seq(2L).toDF("doc_id"))
       TextOps.deleteBm25Docs(spark, t, s"${t}_stats",
         Seq(2L).toDF("doc_id"))
       // VACUUM: terminal tombstones fold away — the exact hazard the
@@ -71,9 +71,9 @@ class HoldSpec extends AnyFunSuite with SparkSuite {
       val (lp2, _) = TextOps.liveBm25(spark, t, s"${t}_stats")
       assert(lp2.filter(col("doc_id") === 2L).isEmpty)
       // observability
-      assert(TextOps.describeBm25(spark, t).holds === 1L)
+      assert(TextOps.bm25Family(t).describe(spark).holds === 1L)
       // holds dedup: re-holding appends nothing
-      TextOps.holdBm25Docs(spark, t, Seq(2L).toDF("doc_id"))
+      TextOps.bm25Family(t).hold(spark, Seq(2L).toDF("doc_id"))
       assert(spark.table(s"${t}_hold").count() === 1L)
     } finally drop(all: _*)
   }
@@ -86,7 +86,7 @@ class HoldSpec extends AnyFunSuite with SparkSuite {
       val sp = spark
       import sp.implicits._
       val docs = Tables(spark, sf, "documents")
-      TextOps.holdBandDocs(spark, t, Seq(10L).toDF("doc_id"))
+      TextOps.bandFamily(t).hold(spark, Seq(10L).toDF("doc_id"))
       TextOps.writeBandIndex(docs.filter(col("doc_id") < 50), t)
       def has10 = !TextOps.liveBandIndex(spark, t)
         .filter(col("old_id") === 10L).isEmpty
@@ -96,7 +96,7 @@ class HoldSpec extends AnyFunSuite with SparkSuite {
       TextOps.upsertBandDocs(spark, t,
         docs.filter(col("doc_id") === 10L))
       assert(!has10, "upsert stored a held doc")
-      assert(TextOps.describeBand(spark, t).holds === 1L)
+      assert(TextOps.bandFamily(t).describe(spark).holds === 1L)
     } finally drop(all: _*)
   }
 
@@ -116,11 +116,11 @@ class HoldSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       val held = Seq(20L).toDF("vec_id")
       def hold(f: String, t: String) = f match {
-        case "ann" => AnnIndex.hold(spark, t, held)
-        case "bq" => BqIndex.hold(spark, t, held)
-        case "sq" => SqIndex.hold(spark, t, held)
-        case "pq" => PqIndex.hold(spark, t, held)
-        case "ivf" => IvfIndex.hold(spark, t, held)
+        case "ann" => AnnIndex.family(t).hold(spark, held)
+        case "bq" => BqIndex.family(t).hold(spark, held)
+        case "sq" => SqIndex.family(t).hold(spark, held)
+        case "pq" => PqIndex.family(t).hold(spark, held)
+        case "ivf" => IvfIndex.family(t).hold(spark, held)
       }
       def write(f: String, t: String): Unit = f match {
         case "ann" => AnnIndex.write(emb, t, nBands = 4, bits = 2)
@@ -140,20 +140,20 @@ class HoldSpec extends AnyFunSuite with SparkSuite {
         }
       }
       def vacuum(f: String, t: String): Unit = f match {
-        case "ann" => AnnIndex.vacuum(spark, t)
-        case "bq" => BqIndex.vacuum(spark, t)
-        case "sq" => SqIndex.vacuum(spark, t)
-        case "pq" => PqIndex.vacuum(spark, t)
-        case "ivf" => IvfIndex.vacuum(spark, t)
+        case "ann" => AnnIndex.family(t).vacuum(spark)
+        case "bq" => BqIndex.family(t).vacuum(spark)
+        case "sq" => SqIndex.family(t).vacuum(spark)
+        case "pq" => PqIndex.family(t).vacuum(spark)
+        case "ivf" => IvfIndex.family(t).vacuum(spark)
       }
       def stored5(f: String, t: String): Boolean =
         !spark.table(t).filter(col("vec_id") === 20L).isEmpty
       def describeHolds(f: String, t: String): Long = (f match {
-        case "ann" => AnnIndex.describe(spark, t)
-        case "bq" => BqIndex.describe(spark, t)
-        case "sq" => SqIndex.describe(spark, t)
-        case "pq" => PqIndex.describe(spark, t)
-        case "ivf" => IvfIndex.describe(spark, t)
+        case "ann" => AnnIndex.family(t).describe(spark)
+        case "bq" => BqIndex.family(t).describe(spark)
+        case "sq" => SqIndex.family(t).describe(spark)
+        case "pq" => PqIndex.family(t).describe(spark)
+        case "ivf" => IvfIndex.family(t).describe(spark)
       }).holds
       fams.foreach { f =>
         val t = s"${base}_$f"
@@ -285,7 +285,7 @@ class HoldSpec extends AnyFunSuite with SparkSuite {
       }
       assert(bands.contains(4L) && payload.contains(4L),
         "unheld vectors missing — the stream itself broke")
-      assert(AnnIndex.describe(spark, t).holds === 2L)
+      assert(AnnIndex.family(t).describe(spark).holds === 2L)
     } finally {
       drop(all: _*)
       rmCk(t)

@@ -113,17 +113,17 @@ class LegacyBandingSpec extends AnyFunSuite with SparkSuite {
       assert(legacySet.nonEmpty)
       assert(served(a) === legacySet)
       // fsck names the legacy family; repair rebuilds + re-pins
-      val v = AnnIndex.fsck(spark, a)
+      val v = AnnIndex.family(a).fsck(spark)
       assert(v.exists(_.contains("planemod pin missing")), v.toString)
-      val fixed = AnnIndex.repair(spark, a)
+      val fixed = AnnIndex.family(a).repair(spark)
       assert(fixed.exists(_.contains("derived plane modulus")),
         fixed.toString)
-      assert(AnnIndex.fsck(spark, a) === Nil)
+      assert(AnnIndex.family(a).fsck(spark) === Nil)
       assert(TextOps.readIndexConfig(spark, a)
         .flatMap(_.get("planemod")) === Some(derived))
       assert(served(a) === collisions(a, derived, derived))
       // healed family is a clean no-op
-      assert(AnnIndex.repair(spark, a) === Nil)
+      assert(AnnIndex.family(a).repair(spark) === Nil)
     } finally drop(famTables(a): _*)
   }
 
@@ -136,13 +136,13 @@ class LegacyBandingSpec extends AnyFunSuite with SparkSuite {
       makeLegacy(a, planemodPin = Some(Ann.LegacyPlaneModulus))
       assert(served(a) === collisions(a, Ann.LegacyPlaneModulus,
         Ann.LegacyPlaneModulus))
-      val v = AnnIndex.fsck(spark, a)
+      val v = AnnIndex.family(a).fsck(spark)
       assert(v.exists(_.contains(
         s"planemod pin ${Ann.LegacyPlaneModulus} != derived $derived")),
         v.toString)
-      assert(AnnIndex.repair(spark, a)
+      assert(AnnIndex.family(a).repair(spark)
         .exists(_.contains("derived plane modulus")))
-      assert(AnnIndex.fsck(spark, a) === Nil)
+      assert(AnnIndex.family(a).fsck(spark) === Nil)
       assert(served(a) === collisions(a, derived, derived))
     } finally drop(famTables(a): _*)
   }
@@ -155,7 +155,7 @@ class LegacyBandingSpec extends AnyFunSuite with SparkSuite {
       AnnIndex.write(emb, a, nBands = NB, bits = BT)
       assert(TextOps.readIndexConfig(spark, a)
         .flatMap(_.get("planemod")) === Some(derived))
-      assert(!AnnIndex.fsck(spark, a).exists(_.contains("planemod")))
+      assert(!AnnIndex.family(a).fsck(spark).exists(_.contains("planemod")))
       assert(served(a) === collisions(a, derived, derived))
     } finally drop(famTables(a): _*)
   }

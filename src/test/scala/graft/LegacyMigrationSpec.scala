@@ -37,7 +37,7 @@ class LegacyMigrationSpec extends AnyFunSuite with SparkSuite {
       Seq(5L).toDF("old_id").coalesce(1).write
         .saveAsTable(s"${t}_del")
       // pre-fix this append failed loudly on the extra gen column
-      TextOps.deleteBandDocs(spark, t, Seq(7L).toDF("doc_id"))
+      TextOps.bandFamily(t).delete(spark, Seq(7L).toDF("doc_id"))
       val del = spark.table(s"${t}_del")
       assert(del.columns.contains("gen"))
       // the migrated entry reads terminal — exactly the read-side

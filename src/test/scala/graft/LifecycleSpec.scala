@@ -145,8 +145,8 @@ class LifecycleSpec extends AnyFunSuite with SparkSuite {
       // 5. the maintenance pass (forced vacuum folds every barrier
       // generation and the terminal tombstones into the files)
       val p = TextOps.MaintenancePolicy(delRowsMax = 0L)
-      val ran = TextOps.maintainBm25(spark, bm25T, p) ++
-        TextOps.maintainBand(spark, bandT, p)
+      val ran = TextOps.bm25Family(bm25T).maintain(spark, p) ++
+        TextOps.bandFamily(bandT).maintain(spark, p)
       assert(ran.contains("vacuum"), ran.toString)
       assert(!spark.catalog.tableExists(s"${bm25T}_del"))
       assert(spark.table(bm25T).filter(col("gen") =!= 0L).isEmpty)

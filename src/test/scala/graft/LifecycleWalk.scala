@@ -104,7 +104,7 @@ object LifecycleWalk {
       }
     }
     def checkAudits(): Unit = {
-      check(TextOps.fsckBm25(spark, t, s"${t}_stats") == Nil,
+      check(TextOps.bm25Family(t).fsck(spark) == Nil,
         s"fsck $ctx")
       bakTags.foreach(tg =>
         check(TextOps.checkBackup(spark, t, tg) == Nil,
@@ -234,7 +234,7 @@ object LifecycleWalk {
       model.clear(); model ++= memo(tg)
       checkIds(); checkScores()
     }
-    check(TextOps.fsckBm25(spark, t, s"${t}_stats") == Nil,
+    check(TextOps.bm25Family(t).fsck(spark) == Nil,
       s"final fsck $ctx")
     trace.toSeq
   }

@@ -60,10 +60,8 @@ class MainCliSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("CLI directory mode writes the operational star tree") {
-    assumeReference()
     val out = java.nio.file.Files.createTempDirectory("graft_cli_d").toString
-    Main.run(spark, Main.Args(dir = Some("/root/reference/DATASETS"),
-      out = out))
+    Main.run(spark, Main.Args(dir = Some(OmsFixtures.dir), out = out))
     val dir = s"$out/Operational"
     for (t <- Seq("Pays", "Region", "Maladie", "Statistique", "RegionGeo"))
       assert(new java.io.File(s"$dir/$t.csv").exists(), t)

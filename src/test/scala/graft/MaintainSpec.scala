@@ -43,7 +43,7 @@ class MaintainSpec extends AnyFunSuite with SparkSuite {
     try {
       BqIndex.write(emb, t)
       val before = TextOps.indexFileHealth(spark, t)
-      assert(BqIndex.maintain(spark, t) === Nil)
+      assert(BqIndex.family(t).maintain(spark) === Nil)
       assert(TextOps.indexFileHealth(spark, t) === before)
     } finally drop(t, s"${t}_cfg", s"${t}_del")
   }
@@ -56,12 +56,12 @@ class MaintainSpec extends AnyFunSuite with SparkSuite {
         BqIndex.append(emb.filter(pmod(col("vec_id"), lit(6)) === m), t)
       }
       assert(TextOps.indexFileHealth(spark, t).needsCompaction())
-      val ops = BqIndex.maintain(spark, t)
+      val ops = BqIndex.family(t).maintain(spark)
       assert(ops === Seq(s"compact:$t"), ops.toString)
       val h = TextOps.indexFileHealth(spark, t)
       assert(h.files === h.buckets.toLong)
       // second pass: healthy again, nothing runs
-      assert(BqIndex.maintain(spark, t) === Nil)
+      assert(BqIndex.family(t).maintain(spark) === Nil)
     } finally drop(t, s"${t}_cfg", s"${t}_del", s"${t}_compact",
       s"${t}_old")
   }
@@ -78,21 +78,21 @@ class MaintainSpec extends AnyFunSuite with SparkSuite {
       BqIndex.write(emb, t)
       // one delete CALL per id — each appends one coalesced file
       (1000L until 1050L).foreach { id =>
-        BqIndex.delete(spark, t, Seq(id).toDF("vec_id"))
+        BqIndex.family(t).delete(spark, Seq(id).toDF("vec_id"))
       }
       val grown = TextOps.indexFileHealth(spark, t)
       assert(grown.siblingFiles >= 50L, grown.toString)
       assert(grown.needsSiblingCompaction())
       // pass 1: the file count trips the CHEAP list compaction (row
       // count 50 sits under the vacuum threshold) — and only it
-      val ops1 = BqIndex.maintain(spark, t,
+      val ops1 = BqIndex.family(t).maintain(spark,
         TextOps.MaintenancePolicy(delFilesMax = 16L, delRowsMax = 1024L))
       assert(ops1 === Seq("compact-tombstones"), ops1.toString)
       assert(delFiles(t) <= 2L, s"del files ${delFiles(t)}")
       assert(spark.table(s"${t}_del").count() === 50L)
       // pass 2: a tighter row threshold trips the full vacuum — list
       // folded into the members and dropped
-      val ops2 = BqIndex.maintain(spark, t,
+      val ops2 = BqIndex.family(t).maintain(spark,
         TextOps.MaintenancePolicy(delRowsMax = 40L))
       assert(ops2 === Seq("vacuum"), ops2.toString)
       assert(!spark.catalog.tableExists(s"${t}_del"))
@@ -100,7 +100,7 @@ class MaintainSpec extends AnyFunSuite with SparkSuite {
       assert(after.siblingFiles <= 1L, after.toString) // just _cfg
       assert(after.files === after.buckets.toLong)
       // pass 3: healthy
-      assert(BqIndex.maintain(spark, t) === Nil)
+      assert(BqIndex.family(t).maintain(spark) === Nil)
     } finally drop(all: _*)
   }
 
@@ -129,19 +129,19 @@ class MaintainSpec extends AnyFunSuite with SparkSuite {
       val bound = (errFit + errDrift) / 2.0
       val current = a.unionByName(b)
       // without the corpus: the debt is REPORTED, never silently run
-      val due = IvfIndex.maintain(spark, t,
+      val due = IvfIndex.family(t).maintain(spark,
         TextOps.MaintenancePolicy(driftMax = bound))
       assert(due === Seq("refresh-due"), due.toString)
       assert(IvfIndex.quantizationError(spark, t) === errDrift)
       // with the corpus: refresh runs, the gauge drops under the bound
-      val ops = IvfIndex.maintain(spark, t,
+      val ops = IvfIndex.family(t).maintain(spark,
         TextOps.MaintenancePolicy(driftMax = bound),
         refreshWith = Some(current))
       assert(ops === Seq("refresh"), ops.toString)
       val errAfter = IvfIndex.quantizationError(spark, t)
       assert(errAfter <= bound, s"refresh left drift $errAfter > $bound")
       // healthy again
-      assert(IvfIndex.maintain(spark, t,
+      assert(IvfIndex.family(t).maintain(spark,
         TextOps.MaintenancePolicy(driftMax = bound),
         refreshWith = Some(current)) === Nil)
     } finally drop(all: _*)
@@ -333,17 +333,17 @@ class MaintainSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       BqIndex.write(emb, t)
       // healthy family: no debt anywhere, nothing due
-      val h = BqIndex.describe(spark, t)
+      val h = BqIndex.family(t).describe(spark)
       assert(h.healthy() && h.due() === Nil)
       assert(h.cfg.get("dim").contains(64))
       assert(h.delRows === 0L && h.terminalDeletes === 0L &&
-        h.topBarrier === 0L && h.drift.isEmpty)
+        h.topBarrier === 0L)
       assert(h.members.map(_._1) === Seq(t))
 
       // a terminal delete and an upsert show up split by kind
-      BqIndex.delete(spark, t, Seq(3L, 4L).toDF("vec_id"))
+      BqIndex.family(t).delete(spark, Seq(3L, 4L).toDF("vec_id"))
       BqIndex.upsert(emb.filter(col("vec_id") === 7L), t)
-      val d = BqIndex.describe(spark, t)
+      val d = BqIndex.family(t).describe(spark)
       assert(d.terminalDeletes === 2L)
       assert(d.delRows === 3L)
       assert(d.topBarrier === 1L)
@@ -354,10 +354,10 @@ class MaintainSpec extends AnyFunSuite with SparkSuite {
         BqIndex.append(emb.filter(pmod(col("vec_id"), lit(6)) === m), t)
       }
       val p = TextOps.MaintenancePolicy(delFilesMax = 64L)
-      val s2 = BqIndex.describe(spark, t)
+      val s2 = BqIndex.family(t).describe(spark)
       assert(s2.due(p) === Seq(s"compact:$t"))
-      assert(BqIndex.maintain(spark, t, p) === s2.due(p))
-      assert(BqIndex.describe(spark, t).healthy(p))
+      assert(BqIndex.family(t).maintain(spark, p) === s2.due(p))
+      assert(BqIndex.family(t).describe(spark).healthy(p))
 
       // the BM25 describe carries the stats row's numeric fields
       val bt = s"mnt_desc_bm25_p$pid"
@@ -366,7 +366,7 @@ class MaintainSpec extends AnyFunSuite with SparkSuite {
         TextOps.appendBm25Postings(
           Seq((1L, "spark window join"), (2L, "hash scan"))
             .toDF("doc_id", "text"), bt, s"${bt}_stats")
-        val b = TextOps.describeBm25(spark, bt)
+        val b = TextOps.bm25Family(bt).describe(spark)
         assert(b.stats.get("n_docs").contains(2L))
         assert(b.stats.get("sum_dl").contains(5L))
       } finally drop(bt, s"${bt}_stats", s"${bt}_del")

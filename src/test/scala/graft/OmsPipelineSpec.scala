@@ -30,6 +30,10 @@ class OmsPipelineSpec extends AnyFunSuite with SparkSuite {
     OmsPipeline.extract(spark, s"$refData/monkeypox_report.csv"), "Monkeypox")
   private lazy val star =
     OmsPipeline.starSchema(standardized, "Monkeypox", spark)
+  /** The input-only legs run on the in-repo fixture of the same file. */
+  private lazy val fixtureStandardized = OmsPipeline.standardize(
+    OmsPipeline.extract(spark, OmsFixtures.path("monkeypox_report.csv")),
+    "Monkeypox")
 
   test("synonym mapping: first match wins, unmatched pass through") {
     val m = SchemaMapper.renameMap(
@@ -186,8 +190,7 @@ class OmsPipelineSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("EP1 long format: indicators melt with unit lookup") {
-    assumeReference()
-    val long = OmsPipeline.toLongFormat(standardized)
+    val long = OmsPipeline.toLongFormat(fixtureStandardized)
     val units = long.select("indicator", "unit").distinct().collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     // all-null measures (recovered/active here) are dropped by the
@@ -201,13 +204,13 @@ class OmsPipelineSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("melt then pivot round-trips the standardized measures") {
-    assumeReference()
-    val wide = OmsPipeline.toWideFormat(OmsPipeline.toLongFormat(standardized))
+    val wide = OmsPipeline.toWideFormat(
+      OmsPipeline.toLongFormat(fixtureStandardized))
     // monkeypox report has all six measures? recovered/active are absent
     // → dropped in long form → zero-filled in wide form
     assert(wide.columns.toSet ===
       Set("date", "country", "pandemic") ++ OmsPipeline.measureCols)
-    val n = standardized.select("country", "date").distinct().count()
+    val n = fixtureStandardized.select("country", "date").distinct().count()
     assert(wide.count() === n)
   }
 
@@ -238,13 +241,12 @@ class OmsPipelineSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("operational run: unmappable files skipped, diseases detected") {
-    assumeReference()
     // cache hygiene is asserted on the run's OWN frame below —
     // JVM-global getPersistentRDDs counts are unusable here because
     // parallel sibling suites persist and unpersist concurrently
     // (review r13: a count-based check can both false-pass and
     // false-fail)
-    val res = OmsPipeline.runOperational(spark, refData)
+    val res = OmsPipeline.runOperational(spark, OmsFixtures.dir)
     // monkeypox_report_2.csv (Entity,Day,Daily cases) matches no synonym
     // and must be skipped (ETL_OMS_OPERATIONNEL.py:250-253); covid_day_wise
     // has no country column.

@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{AnnIndex, BqIndex, IvfIndex, PqIndex, SqIndex, TextOps}
+import graft.operators.{AnnIndex, BqIndex, IndexFamily, IvfIndex, PqIndex,
+  SqIndex, TextOps}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -44,14 +45,14 @@ class RepairSpec extends AnyFunSuite with SparkSuite {
       // inject drift: the stored stats lie
       Seq((99L, 9999L)).toDF("n_docs", "sum_dl")
         .write.mode("overwrite").saveAsTable(s"${t}_stats")
-      assert(TextOps.fsckBm25(spark, t, s"${t}_stats").nonEmpty)
-      val fixed = TextOps.repairBm25(spark, t, s"${t}_stats")
+      assert(TextOps.bm25Family(t).fsck(spark).nonEmpty)
+      val fixed = TextOps.bm25Family(t).repair(spark)
       assert(fixed.exists(_.contains("stats")), fixed.toString)
-      assert(TextOps.fsckBm25(spark, t, s"${t}_stats") === Nil)
+      assert(TextOps.bm25Family(t).fsck(spark) === Nil)
       assert(spark.table(s"${t}_stats")
         .select("n_docs", "sum_dl").collect()(0) === good)
       // idempotent: the healed family is a clean no-op
-      assert(TextOps.repairBm25(spark, t, s"${t}_stats") === Nil)
+      assert(TextOps.bm25Family(t).repair(spark) === Nil)
     } finally drop(all: _*)
   }
 
@@ -71,11 +72,11 @@ class RepairSpec extends AnyFunSuite with SparkSuite {
       // at gen 2 but the barrier entry never committed — TWO live
       // generations, and the stats double-count the doc
       TextOps.appendBm25Postings(newer, t, s"${t}_stats", gen = 2L)
-      val v = TextOps.fsckBm25(spark, t, s"${t}_stats")
+      val v = TextOps.bm25Family(t).fsck(spark)
       assert(v.exists(_.contains("live generations")), v.toString)
-      val fixed = TextOps.repairBm25(spark, t, s"${t}_stats")
+      val fixed = TextOps.bm25Family(t).repair(spark)
       assert(fixed.exists(_.contains("re-barriered")), fixed.toString)
-      assert(TextOps.fsckBm25(spark, t, s"${t}_stats") === Nil)
+      assert(TextOps.bm25Family(t).fsck(spark) === Nil)
       // the repaired family equals a from-scratch build over the
       // FINAL content (v1 with doc 2 replaced) — scores AND stats
       val fin = v1.filter(col("doc_id") =!= 2L).unionByName(newer)
@@ -95,7 +96,7 @@ class RepairSpec extends AnyFunSuite with SparkSuite {
         .select("n_docs", "sum_dl").collect()(0) ===
         spark.table(s"${t2}_stats")
           .select("n_docs", "sum_dl").collect()(0))
-      assert(TextOps.repairBm25(spark, t, s"${t}_stats") === Nil)
+      assert(TextOps.bm25Family(t).repair(spark) === Nil)
     } finally drop(all: _*)
   }
 
@@ -127,10 +128,10 @@ class RepairSpec extends AnyFunSuite with SparkSuite {
         .saveAsTable(tmp)
       spark.sql(s"DROP TABLE $a")
       spark.sql(s"ALTER TABLE $tmp RENAME TO $a")
-      assert(AnnIndex.fsck(spark, a).nonEmpty)
-      val fixed = AnnIndex.repair(spark, a)
+      assert(AnnIndex.family(a).fsck(spark).nonEmpty)
+      val fixed = AnnIndex.family(a).repair(spark)
       assert(fixed.exists(_.contains("rebuilt band")), fixed.toString)
-      assert(AnnIndex.fsck(spark, a) === Nil)
+      assert(AnnIndex.family(a).fsck(spark) === Nil)
       // the repaired index probes identically to the untouched twin
       def probe(t: String) =
         AnnIndex.topK(spark, t, c => c < 3, k = 4).collect()
@@ -138,7 +139,7 @@ class RepairSpec extends AnyFunSuite with SparkSuite {
       val got = probe(a)
       assert(got === probe(a2))
       assert(got.nonEmpty)
-      assert(AnnIndex.repair(spark, a) === Nil)
+      assert(AnnIndex.family(a).repair(spark) === Nil)
     } finally drop(all: _*)
   }
 
@@ -160,18 +161,18 @@ class RepairSpec extends AnyFunSuite with SparkSuite {
         .write.bucketBy(8, "cell").sortBy("cell").saveAsTable(tmp)
       spark.sql(s"DROP TABLE $t")
       spark.sql(s"ALTER TABLE $tmp RENAME TO $t")
-      val v = IvfIndex.fsck(spark, t)
+      val v = IvfIndex.family(t).fsck(spark)
       assert(v.exists(_.contains("unknown cell")), v.toString)
-      val fixed = IvfIndex.repair(spark, t)
+      val fixed = IvfIndex.family(t).repair(spark)
       assert(fixed.exists(_.contains("re-assigned")), fixed.toString)
-      assert(IvfIndex.fsck(spark, t) === Nil)
+      assert(IvfIndex.family(t).fsck(spark) === Nil)
       def probe(x: String) =
         IvfIndex.topK(spark, x, c => c < 3, k = 4).collect()
           .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(3))).toMap
       val got = probe(t)
       assert(got === probe(t2))
       assert(got.nonEmpty)
-      assert(IvfIndex.repair(spark, t) === Nil)
+      assert(IvfIndex.family(t).repair(spark) === Nil)
     } finally drop(all: _*)
   }
 
@@ -188,51 +189,66 @@ class RepairSpec extends AnyFunSuite with SparkSuite {
       // replacement rows at gen 2, barrier lost
       TextOps.appendBandIndex(docs.filter(col("doc_id") === 10L), bd,
         gen = 2L)
-      assert(TextOps.fsckBand(spark, bd).nonEmpty)
-      val fixed = TextOps.repairBand(spark, bd)
+      assert(TextOps.bandFamily(bd).fsck(spark).nonEmpty)
+      val fixed = TextOps.bandFamily(bd).repair(spark)
       assert(fixed.exists(_.contains("re-barriered")), fixed.toString)
-      assert(TextOps.fsckBand(spark, bd) === Nil)
+      assert(TextOps.bandFamily(bd).fsck(spark) === Nil)
       // exactly one live copy of the id's postings remains
       assert(TextOps.liveBandIndex(spark, bd)
         .filter(col("old_id") === 10L)
         .select("gen").distinct().count() === 1L)
-      assert(TextOps.repairBand(spark, bd) === Nil)
+      assert(TextOps.bandFamily(bd).repair(spark) === Nil)
 
       SqIndex.write(emb, sq)
       SqIndex.append(emb.filter(col("vec_id") === 5L), sq, gen = 3L)
-      assert(SqIndex.fsck(spark, sq).nonEmpty)
-      assert(SqIndex.repair(spark, sq)
+      assert(SqIndex.family(sq).fsck(spark).nonEmpty)
+      assert(SqIndex.family(sq).repair(spark)
         .exists(_.contains("re-barriered")))
-      assert(SqIndex.fsck(spark, sq) === Nil)
-      assert(SqIndex.repair(spark, sq) === Nil)
+      assert(SqIndex.family(sq).fsck(spark) === Nil)
+      assert(SqIndex.family(sq).repair(spark) === Nil)
     } finally drop(all: _*)
   }
 
   test("clean families are no-ops; unhealable violations refuse " +
       "loudly before touching anything") {
-    val a = s"rp_ref_ann_p$pid"
-    val p = s"rp_ref_pq_p$pid"
-    val all = Seq(a, s"${a}_vec", s"${a}_cfg", s"${a}_del",
-      p, s"${p}_cb", s"${p}_del")
-    drop(all: _*)
-    try {
-      AnnIndex.write(emb, a, nBands = 4, bits = 2)
-      PqIndex.write(emb, p, m = 4, subDim = 16, ks = 8)
-      assert(AnnIndex.repair(spark, a) === Nil)
-      assert(PqIndex.repair(spark, p) === Nil)
-      // no safe heal: the ANN config pin vanishes — repair must
-      // refuse, not guess a banding config
-      spark.sql(s"DROP TABLE ${a}_cfg")
-      val e1 = intercept[IllegalStateException] {
-        AnnIndex.repair(spark, a)
-      }
-      assert(e1.getMessage.contains("no safe heal"), e1.getMessage)
-      // no safe heal: the PQ codebook vanishes
-      spark.sql(s"DROP TABLE ${p}_cb")
-      val e2 = intercept[IllegalStateException] {
-        PqIndex.repair(spark, p)
-      }
-      assert(e2.getMessage.contains("no safe heal"), e2.getMessage)
-    } finally drop(all: _*)
+    val docs = Tables(spark, sf, "documents").filter(col("doc_id") < 50)
+    // one row per descriptor: (table, its build, the family, the
+    // sidecar whose loss has no safe heal — None for the two document
+    // families, every violation class of which has a heal)
+    val cases: Seq[(String, String => Unit, String => IndexFamily,
+        Option[String])] = Seq(
+      ("ann", AnnIndex.write(emb, _, nBands = 4, bits = 2),
+        AnnIndex.family, Some("_cfg")),
+      ("pq", PqIndex.write(emb, _, m = 4, subDim = 16, ks = 8),
+        PqIndex.family, Some("_cb")),
+      ("ivf", IvfIndex.write(emb, _, k = 4), IvfIndex.family,
+        Some("_cent")),
+      ("bq", BqIndex.write(emb, _), BqIndex.family, Some("_cfg")),
+      ("sq", SqIndex.write(emb, _), SqIndex.family, Some("_cfg")),
+      ("bm25", t => TextOps.appendBm25Postings(docs, t, s"${t}_stats"),
+        TextOps.bm25Family, None),
+      ("band", TextOps.writeBandIndex(docs, _), TextOps.bandFamily, None))
+    cases.foreach { case (kind, build, family, sidecar) =>
+      val t = s"rp_ref_${kind}_p$pid"
+      val all = t +: Seq("_vec", "_cfg", "_cb", "_cent", "_stats", "_del")
+        .map(t + _)
+      drop(all: _*)
+      try {
+        build(t)
+        assert(family(t).repair(spark) === Nil, kind)
+        // no safe heal: the sidecar vanishes — repair must refuse, not
+        // guess a config, codebook or quantizer
+        sidecar.foreach { suffix =>
+          spark.sql(s"DROP TABLE $t$suffix")
+          val rows = spark.table(t).count()
+          val e = intercept[IllegalStateException] {
+            family(t).repair(spark)
+          }
+          assert(e.getMessage.contains("no safe heal") &&
+            e.getMessage.contains(s"$t$suffix missing"), e.getMessage)
+          assert(spark.table(t).count() === rows, kind)
+        }
+      } finally drop(all: _*)
+    }
   }
 }

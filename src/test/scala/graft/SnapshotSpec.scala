@@ -73,7 +73,7 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
       assert(did.contains(s"dropped ${t}_del (absent at snapshot)"),
         did.toString)
       assert(scores() === snap, "snapshot restore missed the state")
-      assert(TextOps.fsckBm25(spark, t, s"${t}_stats").isEmpty,
+      assert(TextOps.bm25Family(t).fsck(spark).isEmpty,
         "restored family fails its own audit")
       // idempotent: nothing left to prune, same converged state
       val again = TextOps.restoreSnapshot(spark, t)
@@ -108,11 +108,11 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
       }.toDF("vec_id", "embedding"), t, dim = dim)
       // 19 sits in the snapshot's top-3 (query 4), so deleting it
       // visibly changes the probe the restore must bring back
-      AnnIndex.delete(spark, t, Seq(19L).toDF("vec_id"))
+      AnnIndex.family(t).delete(spark, Seq(19L).toDF("vec_id"))
       assert(probe() !== snap)
       TextOps.restoreSnapshot(spark, t)
       assert(probe() === snap, "restored ANN family probes differently")
-      assert(AnnIndex.fsck(spark, t).isEmpty)
+      assert(AnnIndex.family(t).fsck(spark).isEmpty)
     } finally drop(all: _*)
   }
 
@@ -164,7 +164,7 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
           s"$tg not restorable before its turn")
         TextOps.restoreSnapshot(spark, t, tg)
         assert(scores() === at(tg), s"time travel to $tg diverged")
-        assert(TextOps.fsckBm25(spark, t, s"${t}_stats").isEmpty,
+        assert(TextOps.bm25Family(t).fsck(spark).isEmpty,
           s"$tg restored to an unhealthy family")
       }
     } finally drop(all.distinct: _*)
@@ -278,7 +278,7 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
       TextOps.restoreSnapshot(spark, t)
       assert(spark.table(t).collect().map(_.toString).sorted.toSeq
         === snapRows.toSeq, "re-run after mid-prune crash diverged")
-      assert(TextOps.fsckBm25(spark, t, s"${t}_stats").isEmpty)
+      assert(TextOps.bm25Family(t).fsck(spark).isEmpty)
     } finally drop(all: _*)
   }
 

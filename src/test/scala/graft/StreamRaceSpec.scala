@@ -134,8 +134,8 @@ class StreamRaceSpec extends AnyFunSuite with SparkSuite {
           "fsck=0"), text.takeRight(2000))
 
       // the parent's own family audits clean after the contention
-      assert(graft.operators.TextOps.fsckBm25(spark, parentT,
-        parentStats).isEmpty)
+      assert(graft.operators.TextOps.bm25Family(parentT,
+        parentStats).fsck(spark).isEmpty)
 
       // PROVEN overlap on the shared wall clock: child ingest stamps
       // inside the parent's verb span, parent verbs inside the

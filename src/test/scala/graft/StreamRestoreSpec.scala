@@ -121,8 +121,7 @@ class StreamRestoreSpec extends AnyFunSuite with SparkSuite {
         streaming.IndexGroup.documents(base))
       assert(state(members) === full,
         "restore + replay diverged from the never-crashed state")
-      assert(TextOps.fsckBm25(spark, s"${base}_bm25",
-        s"${base}_bm25_stats").isEmpty)
+      assert(TextOps.bm25Family(s"${base}_bm25").fsck(spark).isEmpty)
     } finally {
       drop(members ++ ledgers ++ baks: _*)
       rmCk(base, s"${base}_ups", s"${base}_dels")

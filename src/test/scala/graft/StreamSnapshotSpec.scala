@@ -155,8 +155,7 @@ class StreamSnapshotSpec extends AnyFunSuite with SparkSuite {
         streaming.IndexGroup.documents(base))
       assert(state(members) === full,
         "restore + replay diverged from the never-crashed state")
-      assert(TextOps.fsckBm25(spark, s"${base}_bm25",
-        s"${base}_bm25_stats").isEmpty)
+      assert(TextOps.bm25Family(s"${base}_bm25").fsck(spark).isEmpty)
     } finally {
       drop(docArtifacts(base): _*)
       rmCk(base, s"${base}_ups", s"${base}_dels")

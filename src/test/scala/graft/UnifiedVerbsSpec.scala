@@ -107,7 +107,7 @@ class UnifiedVerbsSpec extends AnyFunSuite with SparkSuite {
       streaming.StreamingOps.maintain(spark, streaming.IndexGroup.vectors(base))
 
       // a delete leaves tombstone debt the unified describe reports
-      AnnIndex.delete(spark, s"${base}_ann",
+      AnnIndex.family(s"${base}_ann").delete(spark,
         Seq(3L).toDF("vec_id"))
       val st2 = streaming.StreamingOps.describe(spark,
         streaming.IndexGroup.vectors(base))

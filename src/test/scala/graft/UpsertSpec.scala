@@ -167,7 +167,7 @@ class UpsertSpec extends AnyFunSuite with SparkSuite {
           .map(r => (r.getLong(0), r.getLong(1))).toSet
       val got = pairs(TextOps.liveBandIndex(spark, t))
       assert(got === pairs(spark.table(t2)))
-      TextOps.vacuumBandIndex(spark, t)
+      TextOps.bandFamily(t).vacuum(spark)
       assert(pairs(TextOps.liveBandIndex(spark, t)) === got)
       assert(spark.table(t).filter(col("gen") =!= 0L).isEmpty)
       assert(spark.table(t).count() === spark.table(t2).count())
@@ -247,11 +247,11 @@ class UpsertSpec extends AnyFunSuite with SparkSuite {
           case _ => write(f, t, fin)
         }
         def vacuum(f: String, t: String): Unit = f match {
-          case "ann" => AnnIndex.vacuum(spark, t)
-          case "bq" => BqIndex.vacuum(spark, t)
-          case "sq" => SqIndex.vacuum(spark, t)
-          case "pq" => PqIndex.vacuum(spark, t)
-          case "ivf" => IvfIndex.vacuum(spark, t)
+          case "ann" => AnnIndex.family(t).vacuum(spark)
+          case "bq" => BqIndex.family(t).vacuum(spark)
+          case "sq" => SqIndex.family(t).vacuum(spark)
+          case "pq" => PqIndex.family(t).vacuum(spark)
+          case "ivf" => IvfIndex.family(t).vacuum(spark)
         }
         fams.foreach { f =>
           val t = s"${base}_$f"
@@ -312,7 +312,7 @@ class UpsertSpec extends AnyFunSuite with SparkSuite {
       // the upserted id still answers (gen-0 stamping would kill it)
       assert(got.keys.exists(_._1 == 21L), got.keys.toString)
       // a terminal delete lands on the refreshed rows too
-      IvfIndex.delete(spark, t, Seq(21L).toDF("vec_id"))
+      IvfIndex.family(t).delete(spark, Seq(21L).toDF("vec_id"))
       assert(!ivfProbe(t).keys.exists(_._1 == 21L))
 
       PqIndex.write(v1, pt, m = 4, subDim = dim / 4, ks = 8)
@@ -523,11 +523,11 @@ class UpsertSpec extends AnyFunSuite with SparkSuite {
       def delete(f: String, t: String, id: Long): Unit = {
         val ids = Seq(id).toDF("vec_id")
         f match {
-          case "ann" => AnnIndex.delete(spark, t, ids)
-          case "bq" => BqIndex.delete(spark, t, ids)
-          case "sq" => SqIndex.delete(spark, t, ids)
-          case "pq" => PqIndex.delete(spark, t, ids)
-          case "ivf" => IvfIndex.delete(spark, t, ids)
+          case "ann" => AnnIndex.family(t).delete(spark, ids)
+          case "bq" => BqIndex.family(t).delete(spark, ids)
+          case "sq" => SqIndex.family(t).delete(spark, ids)
+          case "pq" => PqIndex.family(t).delete(spark, ids)
+          case "ivf" => IvfIndex.family(t).delete(spark, ids)
         }
       }
       fams.foreach { f =>
@@ -595,7 +595,7 @@ class UpsertSpec extends AnyFunSuite with SparkSuite {
       // every rebuilt row of id 10 below its surviving barrier)
       assert(got.contains((10L, 10L)), got.toString)
       // terminal delete survives a further rebuild
-      TextOps.deleteBandDocs(spark, t, Seq(10L).toDF("doc_id"))
+      TextOps.bandFamily(t).delete(spark, Seq(10L).toDF("doc_id"))
       TextOps.writeBandIndex(fin, t)
       assert(!pairs(TextOps.liveBandIndex(spark, t))
         .exists(_._2 == 10L))
