@@ -171,18 +171,6 @@ object Ann {
       .get
   }
 
-  /** The FIXED plane modulus every pre-r15 build used (the family
-    * [[planeModulus]]'s doc dissects). A stored `_cfg` row that
-    * predates the `planemod` pin describes bands computed under THIS
-    * constant — the serving path must band external queries under it
-    * too, or query and stored keys live in different hash families
-    * and candidates become uncorrelated with similarity (recall
-    * collapses with no error; ADVICE r15 #1). Legacy families keep
-    * their (fold-prone but self-consistent) collision property until
-    * the family repair ([[AnnIndex.family]]) rebuilds them into the
-    * derived family. */
-  val LegacyPlaneModulus = 29
-
   /** Plane p's integer weights under `modulus`, computed ONCE on the
     * driver and shipped as a literal array — the equivalent
     * `transform(sequence(...), ...)` expression is a higher-order
@@ -783,7 +771,7 @@ object AnnIndex {
     sidecar = Some("config pin" -> (table + "_cfg")),
     cfgOf = TO.readIndexConfig(_, table).getOrElse(Map.empty),
     invariant = audit(_, table, _),
-    // band-cardinality violations AND legacy/forked plane modulus
+    // band-cardinality violations AND a missing/forked plane modulus
     // (ADVICE r15 #2) share ONE heal — the payload member carries the
     // exact vectors, so rebuilding under the derived modulus +
     // re-pinning converges both classes. ONE entry matching either
@@ -806,22 +794,14 @@ object AnnIndex {
       live: String => DataFrame): Seq[String] = {
     val out = scala.collection.mutable.ListBuffer.empty[String]
     val cfg = TO.readIndexConfig(s, table).get
-    // planemod pin audit (ADVICE r15 #2): a cfg lacking the pin is a
-    // pre-r15 legacy family (bands under the fixed LegacyPlaneModulus
-    // — served correctly by scoreExternal's legacy fallback, but
-    // fold-prone and append-refused); a pin differing from the derived
-    // value means the stored bands and the derived family have forked.
-    // Both heal by rebuilding the bands member under the derived
-    // modulus + re-pinning.
+    // planemod pin audit (ADVICE r15 #2): a pin that is missing or
+    // differs from the derived value means the stored bands and the
+    // derived family may have forked. Both heal by rebuilding the
+    // bands member under the derived modulus + re-pinning.
     val wantPm = Ann.planeModulus(cfg("nbands") * cfg("bits"), cfg("dim"))
-    cfg.get("planemod") match {
-      case None => out += "planemod pin missing (legacy banding " +
-        s"family under modulus ${Ann.LegacyPlaneModulus}; " +
-        s"derived is $wantPm)"
-      case Some(pm) if pm != wantPm =>
-        out += s"planemod pin $pm != derived $wantPm"
-      case _ => ()
-    }
+    if (!cfg.get("planemod").contains(wantPm))
+      out += s"planemod pin ${cfg.get("planemod").getOrElse("missing")}" +
+        s" != derived $wantPm"
     val bands = live(table)
     out ++= bands.groupBy("vec_id").count()
       .filter(col("count") =!= cfg("nbands")).limit(5).collect()
@@ -850,12 +830,12 @@ object AnnIndex {
   /** The band-cardinality AND plane-modulus heal: re-derive the
     * ENTIRE bands member from the live payload rows under the `_cfg`
     * pin's (nbands, bits, dim) — always banded under the DERIVED
-    * modulus, which is what upgrades a legacy family — each id's
+    * modulus, which is what heals a missing or forked pin — each id's
     * postings stamped at its own live generation, then re-pin
     * `planemod` to the derived value. Physically drops any dead rows
     * the member still held (they were probe-invisible already — the
     * vacuum argument). Rebuild FIRST, re-pin LAST: a crash between
-    * the two leaves a legacy pin over derived bands, which fsck still
+    * the two leaves a stale pin over derived bands, which fsck still
     * flags (pin != derived) and a re-run converges — the reverse
     * order would leave a pin that PASSES fsck over bands it does not
     * describe. */
@@ -932,34 +912,38 @@ object AnnIndex {
     * (r13 — the serving path no longer trusts the caller to repeat
     * the build parameters); the parameters are the fallback for an
     * index predating the config pin. The plane MODULUS follows the
-    * same rule (ADVICE r15 #1): a cfg carrying `planemod` bands
-    * queries under that pin; a cfg LACKING the key is a pre-r15
-    * family whose stored bands were computed under the fixed
-    * [[Ann.LegacyPlaneModulus]] — band under that constant (the
-    * collision property holds; the family is merely the fold-prone
-    * legacy one until the family repair rebuilds it); no cfg at all
-    * falls back to deriving from the parameters, matching [[write]]'s
-    * crash-window contract (pin written last, so cfg-absent data is
-    * always current-code, derived-modulus data).
+    * same rule (ADVICE r15 #1) — see [[probeBanding]].
     */
   def scoreExternal(queries: DataFrame, s: SparkSession, table: String,
       nBands: Int = NBands, bits: Int = Bits,
       dim: Int = CosSim.EmbDim): DataFrame = {
     graft.functions.VectorFunctions.register(s)
-    val cfg = TO.readIndexConfig(s, table)
-    val (nb, bt, dm) = cfg match {
-      case Some(c) => (c("nbands"), c("bits"), c("dim"))
-      case None => (nBands, bits, dim)
-    }
-    val pm = cfg match {
-      case Some(c) => c.getOrElse("planemod", Ann.LegacyPlaneModulus)
-      case None => 0 // 0 = derive (Ann.bandKeys)
-    }
+    val (nb, bt, dm, pm) = probeBanding("scoreExternal", table,
+      TO.readIndexConfig(s, table), nBands, bits, dim)
     val bands = TO.exceptTombstones(s.table(table), s,
       table + "_del", "vec_id")
     val vecs = TO.exceptTombstones(s.table(table + "_vec"), s,
       table + "_del", "vec_id")
     scoreExternalFrames(queries, bands, vecs, nb, bt, dm, pm)
+  }
+
+  /** The (nbands, bits, dim, plane modulus) an external probe bands
+    * its queries under. A `_cfg` pin wins and must carry `planemod`:
+    * a pin without it does not say which hash family the stored bands
+    * live in, so the probe refuses and names the repair that re-pins
+    * it. No pin at all falls back to the caller's parameters and the
+    * derived modulus (0, see [[Ann.bandKeys]]), matching [[write]]'s
+    * crash-window contract (pin written last, so cfg-absent data is
+    * always current-code, derived-modulus data). */
+  private def probeBanding(verb: String, table: String,
+      cfg: Option[Map[String, Int]], nBands: Int, bits: Int,
+      dim: Int): (Int, Int, Int, Int) = cfg match {
+    case Some(c) =>
+      require(c.contains("planemod"), s"$verb: config pin " +
+        s"${table}_cfg has no planemod — run the family repair " +
+        s"(AnnIndex.family(\"$table\").repair) to re-pin it")
+      (c("nbands"), c("bits"), c("dim"), c("planemod"))
+    case None => (nBands, bits, dim, 0)
   }
 
   /** The [[scoreExternal]] body over explicit index FRAMES — shared
@@ -1011,14 +995,8 @@ object AnnIndex {
         Some(row.schema.fieldNames.map(k =>
           k -> row.getAs[Int](k)).toMap)
       } else None
-    val (nb, bt, dm) = cfg match {
-      case Some(c) => (c("nbands"), c("bits"), c("dim"))
-      case None => (nBands, bits, dim)
-    }
-    val pm = cfg match {
-      case Some(c) => c.getOrElse("planemod", Ann.LegacyPlaneModulus)
-      case None => 0 // 0 = derive (Ann.bandKeys)
-    }
+    val (nb, bt, dm, pm) = probeBanding("scoreAsOf", table, cfg,
+      nBands, bits, dim)
     val del =
       if (manifest.contains(table + "_del"))
         Some(TO.readSnapshot(s, table, tag, "_del"))

@@ -333,10 +333,10 @@ object TextOps {
     *     (the r13 "ids are terminal, so nothing can be refreshed"
     *     gap this design closes).
     * Rows in index tables written before the gen column existed (and
-    * frames without one) read as gen 0; entries in a pre-r14 list
-    * read as terminal. Entries are deduped on (id, gen) — a replayed
-    * delete or upsert appends nothing new (idempotent; a double
-    * delete cannot double-subtract anything downstream).
+    * frames without one) read as gen 0. Entries are deduped on
+    * (id, gen) — a replayed delete or upsert appends nothing new
+    * (idempotent; a double delete cannot double-subtract anything
+    * downstream).
     */
   private[graft] val TerminalGen: Long = Long.MaxValue
 
@@ -350,13 +350,9 @@ object TextOps {
       delTable: String): Long =
     if (!s.catalog.tableExists(delTable)) 1L
     else {
-      val del = s.table(delTable)
-      if (!del.columns.contains("gen")) 1L
-      else {
-        val r = del.filter(col("gen") =!= lit(TerminalGen))
-          .agg(max("gen")).collect()(0)
-        if (r.isNullAt(0)) 1L else r.getLong(0) + 1L
-      }
+      val r = s.table(delTable).filter(col("gen") =!= lit(TerminalGen))
+        .agg(max("gen")).collect()(0)
+      if (r.isNullAt(0)) 1L else r.getLong(0) + 1L
     }
 
   /** The generation a FULL-REBUILD overwrite must stamp its rows at:
@@ -396,40 +392,15 @@ object TextOps {
       idCol: String, gen: Long = TerminalGen): Unit =
     withBuildLock(s) {
     clearOrphanLocation(s, delTable)
-    // pre-r14 lists (id only) were read-compatible but WRITE-broken
-    // (ADVICE r14): appending an (id, gen) frame into a gen-less
-    // table fails loudly on the extra column. First write migrates
-    // the list once — every existing entry rewritten at TerminalGen,
-    // exactly how the read side already interprets it — so the
-    // "entries in a pre-r14 list read as terminal" claim holds for
-    // writes too.
-    migrateGenlessDelList(s, delTable)
     val fresh = ids.select(col(idCol)).distinct()
       .withColumn("gen", lit(gen))
     val novel =
       if (s.catalog.tableExists(delTable))
-        fresh.join(withEntryGen(s.table(delTable)),
-          Seq(idCol, "gen"), "left_anti")
+        fresh.join(s.table(delTable), Seq(idCol, "gen"), "left_anti")
       else fresh
     novel.coalesce(1).write.mode("append").saveAsTable(delTable)
     s.catalog.refreshTable(delTable)
   }
-
-  /** One-time write-side migration of a pre-r14 gen-less tombstone
-    * list: rewrite with every entry at [[TerminalGen]] (the read
-    * interpretation, materialized) behind the standard tmp-and-swap.
-    * No-op on fresh families and already-migrated lists. Caller
-    * holds the build lock. */
-  private def migrateGenlessDelList(s: org.apache.spark.sql.SparkSession,
-      delTable: String): Unit =
-    if (s.catalog.tableExists(delTable) &&
-        !s.table(delTable).columns.contains("gen")) {
-      val tmp = delTable + "_mig"
-      s.sql(s"DROP TABLE IF EXISTS $tmp")
-      clearOrphanLocation(s, tmp)
-      withEntryGen(s.table(delTable)).coalesce(1).write.saveAsTable(tmp)
-      swapIndexTables(s, delTable, tmp)
-    }
 
   /** LEGAL-HOLD registry (r15, VERDICT item 4 — the vacuumIndex
     * HONESTY NOTE's "caller owns that registry" gap, closed in the
@@ -469,21 +440,13 @@ object TextOps {
     else df.join(s.table(holdTable).select(col(idCol)), Seq(idCol),
       "left_anti")
 
-  /** A tombstone list with its `gen` column guaranteed present —
-    * pre-r14 lists (id only) read as all-terminal. */
-  private def withEntryGen(del: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    if (del.columns.contains("gen")) del
-    else del.withColumn("gen", lit(TerminalGen))
-
   /** Fold an orphaned/reset delete stage's ids into the tombstone
     * list AT THE STAGE'S OWN BARRIER (terminal for a delete stage,
-    * finite for an upsert's — a pre-r14 gen-less stage reads as
-    * terminal), preserving the op's exact semantics across a family
-    * reset. */
+    * finite for an upsert's), preserving the op's exact semantics
+    * across a family reset. */
   private def foldStageTombstones(s: org.apache.spark.sql.SparkSession,
       table: String, stage: String): Unit = {
-    val df = withEntryGen(s.table(stage))
+    val df = s.table(stage)
     val g = df.agg(coalesce(max("gen"), lit(TerminalGen)))
       .collect()(0).getLong(0)
     tombstone(s, table + "_del", df.select("doc_id"), "doc_id", gen = g)
@@ -520,8 +483,8 @@ object TextOps {
     delFrame match {
       case None => df
       case Some(d) =>
-        val del = withEntryGen(d)
-          .select(col(idCol).as("_del_id"), col("gen").as("_del_gen"))
+        val del =
+          d.select(col(idCol).as("_del_id"), col("gen").as("_del_gen"))
         val rowGen =
           if (df.columns.contains("gen")) df("gen") else lit(0L)
         df.join(del, df(idCol) === col("_del_id") &&
@@ -751,7 +714,7 @@ object TextOps {
     val (rows, term, top) =
       if (!s.catalog.tableExists(delTable)) (0L, 0L, 0L)
       else {
-        val r = withEntryGen(s.table(delTable))
+        val r = s.table(delTable)
           .agg(count(lit(1)),
             coalesce(sum(when(col("gen") === lit(TerminalGen), 1L)
               .otherwise(0L)), lit(0L)),
@@ -1197,8 +1160,8 @@ object TextOps {
   }
 
   /** md5 (hex) of one data file under a table location — the deep
-    * audit's re-hash and [[markBackupComplete]]'s vouch-with-teeth.
-    * O(file bytes): opt-in paths only, never the O(metadata) verbs. */
+    * audit's re-hash. O(file bytes): opt-in paths only, never the
+    * O(metadata) verbs. */
   private[graft] def hashDataFile(s: org.apache.spark.sql.SparkSession,
       loc: org.apache.hadoop.fs.Path, relPath: String): String = {
     val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -1427,33 +1390,22 @@ object TextOps {
       .write.mode("overwrite").saveAsTable(marker)
   }
 
-  /** The marker as a normalized 5-column DataFrame (member, path,
-    * len, src, sha) — pre-r17 3-column markers read with null src
-    * (full sets), pre-hash markers with null sha. The at-scale view
-    * (r18, VERDICT #5): aggregate verbs (provenance, dependents, the
+  /** The marker as a 5-column DataFrame (member, path, len, src,
+    * sha); a null sha is a file with no recorded content hash, which
+    * the deep audits name. The at-scale view (r18, VERDICT #5):
+    * aggregate verbs (provenance, dependents, the
     * storage gauge) and the distributed audit diff consume THIS and
     * collect only bounded summaries/violations, instead of pulling
     * one driver tuple per committed file. */
   private[graft] def markerFrame(s: org.apache.spark.sql.SparkSession,
-      marker: String): org.apache.spark.sql.DataFrame = {
-    val df = s.table(marker)
-    val src =
-      if (df.columns.contains("src")) col("src")
-      else lit(null).cast("string").as("src")
-    val sha =
-      if (df.columns.contains("sha")) col("sha")
-      else lit(null).cast("string").as("sha")
-    df.select(col("member"), col("path"), col("len"),
-      src.as("src"), sha.as("sha"))
-  }
+      marker: String): org.apache.spark.sql.DataFrame =
+    s.table(marker).select("member", "path", "len", "src", "sha")
 
   /** Marker rows back: (copy name, file path, len, physical tag for
     * a borrowed file — differential references r17, content md5 —
-    * deep audit r17). Pre-r17 3-column markers read with src = None
-    * throughout (full sets); pre-hash markers with sha = None (the
-    * deep audit NAMES those as unverifiable rather than skipping).
-    * This is the ROW-LEVEL read — callers that only aggregate go
-    * through [[markerFrame]] instead (r18). */
+    * deep audit r17; None is named by the deep audit as unverifiable
+    * rather than skipped). This is the ROW-LEVEL read — callers that
+    * only aggregate go through [[markerFrame]] instead (r18). */
   private[graft] def readBackupMarker(
       s: org.apache.spark.sql.SparkSession, marker: String)
       : Seq[(String, Option[String], Long, Option[String],
@@ -1462,37 +1414,6 @@ object TextOps {
       (r.getString(0), Option(r.getString(1)), r.getLong(2),
         Option(r.getString(3)), Option(r.getString(4)))
     }
-
-  /** Declare a marker-less backup set complete — the operator escape
-    * hatch for a pre-r16 backup (taken before the commit marker
-    * existed) that is KNOWN whole. Records whatever copies currently
-    * exist under the tag; never use it on a backup that may have
-    * crashed mid-set — re-take that one instead. */
-  def markBackupComplete(s: org.apache.spark.sql.SparkSession,
-      table: String, tag: String = "bak"): Seq[String] =
-      withBuildLock(s) {
-    requireTag("markBackupComplete", tag)
-    require(s.catalog.tableExists(s"${table}_bak_$tag"),
-      s"markBackupComplete: no base copy ${table}_bak_$tag — nothing " +
-        "to vouch for")
-    val members = (table +: BackupSiblings.map(table + _))
-      .map(m => s"${m}_bak_$tag").filter(s.catalog.tableExists)
-    // the vouch has teeth: hash what is actually there NOW (an
-    // O(bytes) read, distributed — this is the operator declaring
-    // the set whole, not the O(metadata) cadence check)
-    val byMember = members.map { m =>
-      (m, tableLocation(s, m).toString, listDataFiles(s, m)) }
-    val hashes = hashFilesDistributed(s, byMember.flatMap {
-      case (_, loc, files) => files.map { case (p, _) => (loc, p) } })
-    writeBackupMarker(s, s"${table}_bakok_$tag", byMember.flatMap {
-      case (m, loc, files) =>
-        if (files.isEmpty)
-          Seq((m, null: String, 0L, null: String, null: String))
-        else files.map { case (p, l) =>
-          (m, p, l, null: String, hashes((loc, p))) }
-    })
-    members
-  }
 
   /** READ-ONLY audit of a copy-based backup set: the marker must
     * exist, every copy it records must still exist WITH EXACTLY the
@@ -1508,8 +1429,7 @@ object TextOps {
       return Seq(
         if (s.catalog.tableExists(s"${table}_bak_$tag"))
           s"backup $table/$tag has copies but no commit marker " +
-            "(crashed mid-set, or pre-r16) — re-take it, or " +
-            "markBackupComplete if you can vouch for it"
+            "(crashed mid-set, or pre-r16) — re-take it"
         else s"no backup $table/$tag")
     // r18 (VERDICT #5): past `graft.marker.fanoutThreshold` committed
     // files the marker-vs-listing diff runs as DataFrame anti joins —
@@ -1668,8 +1588,8 @@ object TextOps {
     * O(metadata)): re-hash every recorded file at the copy that
     * physically holds it and compare to the take-time md5. This is
     * what (name, len) identity cannot see: same-length bit rot or
-    * tamper inside a committed copy. A pre-hash row is NAMED as
-    * unverifiable — a silent skip would read as "verified". */
+    * tamper inside a committed copy. A row without a hash is NAMED
+    * as unverifiable — a silent skip would read as "verified". */
   private def checkBackupDeep(s: org.apache.spark.sql.SparkSession,
       marker: String, tag: String, distributed: Boolean)
       : Seq[String] =
@@ -1683,7 +1603,7 @@ object TextOps {
       marker: String, tag: String): Seq[String] = {
     val recorded = readBackupMarker(s, marker).groupBy(_._1)
     // gather every verifiable (file, holder, expected md5) — the
-    // unverifiable pre-hash rows are named — then ONE distributed
+    // unverifiable hash-less rows are named — then ONE distributed
     // re-hash job over all of them ([[hashFilesDistributed]]):
     // the deep check re-reads every committed byte, which must
     // parallelize at scale
@@ -1697,8 +1617,8 @@ object TextOps {
                 (p, l, src, sha) }.sortBy(_._1).flatMap {
                 case (p, _, _, None) =>
                   Seq(Left(s"$m: $p has no recorded content hash " +
-                    "(pre-hash marker) — deep audit cannot verify " +
-                    "it; re-take the backup"))
+                    "— deep audit cannot verify it; re-take the " +
+                    "backup"))
                 case (p, l, src, Some(sha)) =>
                   // resolve exactly like restore: the own copy when
                   // it physically holds the file (full rows, or
@@ -1755,7 +1675,7 @@ object TextOps {
     val confKv = hadoopConfKv(s.sparkContext.hadoopConfiguration)
     // ONE cached pass over the marker — this branch only runs past
     // the fan-out threshold, where re-scanning the marker table for
-    // every per-member derivation (members, pre-hash rows, borrow
+    // every per-member derivation (members, hash-less rows, borrow
     // tags, the join input) would multiply exactly the cost the
     // threshold bounds (late r18, review #2)
     val mf = markerFrame(s, marker).where(col("path").isNotNull)
@@ -1769,14 +1689,12 @@ object TextOps {
       else {
         val live = m.stripSuffix(s"_bak_$tag")
         val rowsM = mf.where(col("member") === m)
-        // pre-hash rows are NAMED per file, as in the local rung — a
-        // silent skip would read as "verified"; pre-hash markers are
-        // legacy-small by construction
+        // hash-less rows are NAMED per file, as in the local rung — a
+        // silent skip would read as "verified"
         val unver = rowsM.where(col("sha").isNull)
           .select(col("path")).collect().map(_.getString(0))
           .map(p => p -> (s"$m: $p has no recorded content hash " +
-            "(pre-hash marker) — deep audit cannot verify it; " +
-            "re-take the backup"))
+            "— deep audit cannot verify it; re-take the backup"))
         // bounded: distinct borrow tags → existing holders' locations
         val srcTags = rowsM
           .where(col("sha").isNotNull && col("src").isNotNull)
@@ -1907,8 +1825,7 @@ object TextOps {
         !s.catalog.tableExists(s"${table}_bak_$tag"),
       s"restoreIndex: backup $table/$tag has copies but no commit " +
         "marker — the backup crashed mid-set (or predates the marker," +
-        " r16); re-take it, or markBackupComplete if you can vouch " +
-        "for it")
+        " r16); re-take it")
     require(s.catalog.tableExists(s"${table}_bak_$tag"),
       s"restoreIndex: no backup ${table}_bak_$tag — refusing to " +
         "touch the live family without its snapshot")
@@ -2103,8 +2020,8 @@ object TextOps {
     * promoted set stays green under [[checkBackup]] and restorable —
     * borrowed bytes serve from either side), the marker rewrite
     * commits last. A crash during the marker rewrite itself leaves
-    * marker-less copies that are ALREADY fully materialized, so
-    * [[markBackupComplete]] vouches correctly. Refuses when a not-
+    * marker-less copies, which every verb refuses as a crashed set
+    * (re-take it). Refuses when a not-
     * yet-materialized borrowed file is gone from its base copy —
     * promote cannot invent bytes; restore what the base still serves
     * or re-take. No-op on a set with no borrows. Returns what it did
@@ -2117,8 +2034,7 @@ object TextOps {
     require(s.catalog.tableExists(marker),
       s"promoteBackup: no committed backup $table/$tag" +
         (if (s.catalog.tableExists(s"${table}_bak_$tag"))
-          " (copies exist but the marker is gone — re-take, or " +
-            "markBackupComplete if you can vouch for the set)"
+          " (copies exist but the marker is gone — re-take)"
         else ""))
     val entries = readBackupMarker(s, marker)
     val borrowedByMember = entries.groupBy(_._1).view
@@ -2778,15 +2694,14 @@ object TextOps {
       "h" + hostHash
 
   /** (owning pid, owning host hash) encoded in an ephemeral epoch
-    * tag; None for every ordinary (operator-chosen) snapshot tag.
-    * The host group is optional — pre-r18.3 tags carried only the
-    * pid (minted same-host by construction then). */
-  private[graft] def epochTagParts(tag: String)
-      : Option[(Long, Option[String])] =
-    "^ep[0-9a-z]+p([0-9]+)(?:h([0-9a-f]{6}))?$".r
+    * tag; None for every ordinary (operator-chosen) snapshot tag —
+    * including a pid-only `ep…p<pid>` name, which [[epochTag]] never
+    * mints, so the crash sweep can never take it for a leaked pin. */
+  private[graft] def epochTagParts(tag: String): Option[(Long, String)] =
+    "^ep[0-9a-z]+p([0-9]+)h([0-9a-f]{6})$".r
       .findFirstMatchIn(tag)
       .flatMap(m => scala.util.Try(m.group(1).toLong).toOption
-        .map(pid => (pid, Option(m.group(2)))))
+        .map(pid => (pid, m.group(2))))
 
   /** The owning pid encoded in an ephemeral epoch tag; None for every
     * ordinary (operator-chosen) snapshot tag. */
@@ -2898,8 +2813,7 @@ object TextOps {
     *     host's pin whose pid is dead HERE may be a live reader
     *     THERE, and a falsely-swept epoch corrupts that reader
     *     silently where a falsely-held one merely waits for the TTL.
-    *     A foreign host's pins age out by TTL only; pre-host-hash
-    *     tags read as same-host, which is what minting them implied);
+    *     A foreign host's pins age out by TTL only);
     *   - the pin's last HEARTBEAT is older than `graft.epoch.ttlMs`
     *     (default 24 h). The clock is `max(manifest mtime, lease
     *     mtime)` (r19, VERDICT #1): every with*Epoch scope renews a
@@ -2916,8 +2830,7 @@ object TextOps {
       tag: String, mtimeMs: Long,
       nowMs: Long = System.currentTimeMillis()): Boolean =
     epochTagParts(tag).exists { case (pid, host) =>
-      val sameHost = host.forall(_ == hostHash)
-      val dead = sameHost &&
+      val dead = host == hostHash &&
         !java.lang.ProcessHandle.of(pid).isPresent
       val ttl = s.conf.getOption("graft.epoch.ttlMs").map(_.toLong)
         .getOrElse(86400000L)
@@ -3849,7 +3762,7 @@ object TextOps {
       val delT = table + "_del"
       val live =
         if (s.catalog.tableExists(delT))
-          docs.join(withEntryGen(s.table(delT))
+          docs.join(s.table(delT)
               .filter(col("gen") === lit(TerminalGen))
               .select("doc_id"),
             Seq("doc_id"), "left_anti")
@@ -3904,35 +3817,23 @@ object TextOps {
     }
     // the stage's barrier generation rides in its `gen` column — a
     // terminal delete stages TerminalGen, an upsert stages its finite
-    // barrier (and a pre-r14 stage without the column reads as
-    // terminal). The barrier participates in the txn token so two
+    // barrier). The barrier participates in the txn token so two
     // stages over the same ids at different barriers can never be
     // mistaken for replays of each other.
-    val hadGen = s.table(stage).columns.contains("gen")
-    val stageDf =
-      if (hadGen) s.table(stage)
-      else s.table(stage).withColumn("gen", lit(TerminalGen))
+    val stageDf = s.table(stage)
     val agg = stageDf
       .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("dl"),
         md5(concat_ws(",",
           sort_array(collect_list(col("doc_id"))),
           max(col("gen")).cast("string"))).as("txn"),
-        coalesce(max(col("gen")), lit(TerminalGen)).as("gen"),
-        // the pre-r14 token omitted the barrier — a crashed stage of
-        // that era may sit in the stats row under the OLD format, and
-        // matching only the new one would re-subtract on replay
-        // (ADVICE r14). Computed only to recognize, never written.
-        md5(concat_ws(",",
-          sort_array(collect_list(col("doc_id"))))).as("txn_legacy"))
+        coalesce(max(col("gen")), lit(TerminalGen)).as("gen"))
       .collect()(0)
     if (agg.getLong(0) > 0L) {
       val txn = agg.getString(2)
       val cur = s.table(statsTable).collect()(0)
-      def matches(t: String) = cur.schema.fieldNames.contains("txn") &&
+      val applied = cur.schema.fieldNames.contains("txn") &&
         !cur.isNullAt(cur.fieldIndex("txn")) &&
-        cur.getAs[String]("txn") == t
-      val applied = matches(txn) ||
-        (!hadGen && matches(agg.getString(4)))
+        cur.getAs[String]("txn") == txn
       if (!applied) {
         val sp = s
         import sp.implicits._
@@ -4274,11 +4175,12 @@ object TextOps {
     *     [[isLeakedEpoch]]; a FOREIGN host's holder whose pid happens
     *     to be absent locally may be a live writer there, and
     *     sweeping it re-opens the read-modify-write race the lock
-    *     exists to close). Foreign/legacy-format holders expire by an
-    *     mtime TTL instead (`graft.buildLock.staleMs`, default
-    *     30 min — generously above any maintenance verb's hold). An
-    *     unreadable/empty lock older than 5 s — a crash between
-    *     create and pid write — counts as dead on any host;
+    *     exists to close). Foreign holders expire by an mtime TTL
+    *     instead (`graft.buildLock.staleMs`, default 30 min —
+    *     generously above any maintenance verb's hold). A lock whose
+    *     body is not `pid@host` (empty or torn — a crash between
+    *     create and pid write) older than 5 s counts as dead on any
+    *     host;
     *   - a lock held by a LIVE foreign pid is waited on (100 ms
     *     polls) up to `graft.buildLock.timeoutMs` (default 30 000),
     *     then refused LOUDLY with the holder's pid — never silent
@@ -4344,20 +4246,14 @@ object TextOps {
       s.conf.getOption("graft.buildLock.path").getOrElse(
         s.conf.get("spark.sql.warehouse.dir") + "/_graft_build.lock"))
 
-  /** Parse a lock file body: `pid@hostHash` (r19) or a bare pid
-    * (pre-r19 — minted same-host by construction then, so it reads
-    * as same-host, mirroring [[epochTagParts]]'s legacy handling).
-    * None for an unreadable/empty body. */
+  /** Parse a lock file body `pid@hostHash` into (pid, minted on
+    * this host). None for any other body — empty, torn, or without
+    * a host — which the acquirer retires after the write grace. */
   private[graft] def parseLockHolder(txt: String)
-      : Option[(Long, Boolean)] = txt.trim match {
-    case s if s.isEmpty => None
-    case s =>
-      val (pidPart, hostPart) = s.indexOf('@') match {
-        case -1 => (s, None)
-        case i => (s.substring(0, i), Some(s.substring(i + 1)))
-      }
-      scala.util.Try(pidPart.toLong).toOption
-        .map(pid => (pid, hostPart.forall(_ == hostHash)))
+      : Option[(Long, Boolean)] = txt.trim.split('@') match {
+    case Array(pid, host) =>
+      scala.util.Try(pid.toLong).toOption.map(p => (p, host == hostHash))
+    case _ => None
   }
 
   private def acquireProcessLock(
@@ -4404,7 +4300,7 @@ object TextOps {
             (try System.currentTimeMillis() -
               fs.getFileStatus(p).getModificationTime > staleMs
             catch { case scala.util.control.NonFatal(_) => true })
-          case None => // unreadable/empty: dead once past the write grace
+          case None => // not pid@host: dead once past the write grace
             (try System.currentTimeMillis() -
               fs.getFileStatus(p).getModificationTime > 5000L
             catch { case scala.util.control.NonFatal(_) => true })

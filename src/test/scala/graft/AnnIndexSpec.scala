@@ -793,6 +793,11 @@ class AnnIndexSpec extends AnyFunSuite with SparkSuite {
   test("q_simsearch_banded answers from a second session in the same JVM") {
     assert(SparkEntry.queries("q_simsearch_banded")(spark, sf).count() > 0)
     val s2 = spark.newSession()
+    // a new session starts from the production lock wait; give it the
+    // test sessions' wait (SparkSuite) so a parallel lane's long hold
+    // of the shared build lock is waited out, not refused
+    s2.conf.set("graft.buildLock.timeoutMs",
+      spark.conf.get("graft.buildLock.timeoutMs"))
     graft.functions.VectorFunctions.register(s2)
     assert(SparkEntry.queries("q_simsearch_banded")(s2, sf).count() > 0)
     assert(SparkEntry.queries("q_simsearch_ivf")(s2, sf).count() > 0)

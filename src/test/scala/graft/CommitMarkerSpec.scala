@@ -18,8 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     before the meta-member copies are rewritten).
   * Restore REQUIRES the marker; listBackups lists only committed
   * tags; checkBackup/checkDocumentsBackup audit a set read-only;
-  * markBackupComplete is the explicit operator escape hatch for a
-  * pre-marker backup known to be whole.
+  * a marker-less set is healed by re-taking it.
   */
 class CommitMarkerSpec extends AnyFunSuite with SparkSuite {
 
@@ -33,8 +32,8 @@ class CommitMarkerSpec extends AnyFunSuite with SparkSuite {
       .flatMap(m => Seq(m, s"${m}_bak_bak")) :+ s"${t}_bakok_bak"
 
   test("family backup: marker-less copies refuse to restore, are " +
-      "not listed, and are named by checkBackup; markBackupComplete " +
-      "vouches; dropBackup clears the marker") {
+      "not listed, and are named by checkBackup; a re-take heals; " +
+      "dropBackup clears the marker") {
     val t = s"cm_bm25_p$pid"
     val all = famAll(t) ++ Seq(s"${t}_stats")
     drop(all: _*)
@@ -58,9 +57,8 @@ class CommitMarkerSpec extends AnyFunSuite with SparkSuite {
       assert(TextOps.listBackups(spark, t) === Nil)
       val v = TextOps.checkBackup(spark, t)
       assert(v.exists(_.contains("no commit marker")), v.toString)
-      // the operator vouches for it (pre-r16 backup known whole)
-      val vouched = TextOps.markBackupComplete(spark, t)
-      assert(vouched.contains(s"${t}_bak_bak"))
+      // the heal the refusals name: re-take the set
+      TextOps.backupIndex(spark, t)
       assert(TextOps.checkBackup(spark, t) === Nil)
       assert(TextOps.restoreIndex(spark, t)
         .exists(_.startsWith("restored ")))

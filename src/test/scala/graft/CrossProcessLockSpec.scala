@@ -25,7 +25,8 @@ class CrossProcessLockSpec extends AnyFunSuite with SparkSuite {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = fsOf(p)
     val out = fs.create(p, true)
-    try out.write(holder.toString.getBytes("UTF-8")) finally out.close()
+    try out.write(s"$holder@${TextOps.hostHash}".getBytes("UTF-8"))
+    finally out.close()
   }
 
   private def deadPid: Long =
@@ -119,24 +120,32 @@ class CrossProcessLockSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("an empty lock past the write grace reads as dead and is swept") {
-    val lock = java.nio.file.Files
-      .createTempDirectory("graft_lock").toString + "/l4.lock"
-    val p = new org.apache.hadoop.fs.Path(lock)
-    val fs = fsOf(p)
-    fs.create(p, true).close() // crashed between create and pid write
-    fs.setTimes(p, System.currentTimeMillis() - 60000L, -1L)
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_lock").toString
     val t = s"xpl_empty_p$pid"
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"DROP TABLE IF EXISTS ${t}_stats")
-    val s2 = lockSession(lock, 10000L)
+    // an empty body (crashed between create and pid write), and a
+    // bare pid without `@host` — unreadable too, so it is retired
+    // after the same grace even when that pid is a live process
+    val live = new ProcessBuilder("sleep", "60").start()
     try {
-      val sp = s2
-      import sp.implicits._
-      TextOps.appendBm25Postings(
-        Seq(1L -> "spark join window").toDF("doc_id", "text"),
-        t, s"${t}_stats")
-      assert(s2.table(t).count() > 0)
+      Seq("l4.lock" -> "", "l4b.lock" -> live.pid().toString).foreach {
+        case (name, body) =>
+          val lock = s"$dir/$name"
+          writeLockStr(lock, body)
+          val p = new org.apache.hadoop.fs.Path(lock)
+          fsOf(p).setTimes(p, System.currentTimeMillis() - 60000L, -1L)
+          spark.sql(s"DROP TABLE IF EXISTS $t")
+          spark.sql(s"DROP TABLE IF EXISTS ${t}_stats")
+          val s2 = lockSession(lock, 10000L)
+          val sp = s2
+          import sp.implicits._
+          TextOps.appendBm25Postings(
+            Seq(1L -> "spark join window").toDF("doc_id", "text"),
+            t, s"${t}_stats")
+          assert(s2.table(t).count() > 0, body)
+      }
     } finally {
+      live.destroyForcibly()
       spark.sql(s"DROP TABLE IF EXISTS $t")
       spark.sql(s"DROP TABLE IF EXISTS ${t}_stats")
     }
@@ -163,13 +172,12 @@ class CrossProcessLockSpec extends AnyFunSuite with SparkSuite {
     val dp = deadPid
     val s2 = lockSession(lock, 700L)
     try {
-      // parsing: new format, legacy format, garbage
+      // parsing: pid@host, a bare pid, garbage
       assert(TextOps.parseLockHolder(s"$dp@$otherHost") ===
         Some((dp, false)))
       assert(TextOps.parseLockHolder(
         s"$dp@${TextOps.hostHash}") === Some((dp, true)))
-      assert(TextOps.parseLockHolder(dp.toString) ===
-        Some((dp, true))) // legacy bare pid = minted same-host
+      assert(TextOps.parseLockHolder(dp.toString) === None)
       assert(TextOps.parseLockHolder("") === None)
       assert(TextOps.parseLockHolder("junk@zz") === None)
 

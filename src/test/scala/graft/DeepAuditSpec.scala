@@ -12,8 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * opt-in O(bytes), the restore-day confidence check, while the
   * cadence check stays O(metadata). Borrowed differential rows
   * inherit the base row's hash and verify at the HOLDER, so one deep
-  * audit covers the whole chain; a pre-hash (legacy) row is NAMED as
-  * unverifiable, never silently skipped.
+  * audit covers the whole chain; a row without a recorded hash is
+  * NAMED as unverifiable, never silently skipped.
   */
 class DeepAuditSpec extends AnyFunSuite with SparkSuite {
 
@@ -105,14 +105,16 @@ class DeepAuditSpec extends AnyFunSuite with SparkSuite {
       assert(TextOps.checkBackup(spark, t, "base", deep = true) === Nil)
       assert(TextOps.checkBackup(spark, t, "d1", deep = true) === Nil)
 
-      // legacy leg: a pre-hash marker deep-audits as UNVERIFIABLE
-      // (named per file), while the shallow check stays green
+      // hash-less leg: a marker whose rows carry a null sha
+      // deep-audits as UNVERIFIABLE (named per file), while the
+      // shallow check stays green
       val legacyRows = TextOps
         .readBackupMarker(spark, s"${t}_bakok_d1")
-        .map { case (m, p, l, src, _) => (m, p.orNull, l, src.orNull) }
+        .map { case (m, p, l, src, _) =>
+          (m, p.orNull, l, src.orNull, null: String) }
       drop(s"${t}_bakok_d1")
-      legacyRows.toDF("member", "path", "len", "src").coalesce(1)
-        .write.saveAsTable(s"${t}_bakok_d1")
+      legacyRows.toDF("member", "path", "len", "src", "sha")
+        .coalesce(1).write.saveAsTable(s"${t}_bakok_d1")
       assert(TextOps.checkBackup(spark, t, "d1") === Nil)
       val deepLegacy = TextOps.checkBackup(spark, t, "d1", deep = true)
       assert(deepLegacy.nonEmpty &&
@@ -230,33 +232,6 @@ class DeepAuditSpec extends AnyFunSuite with SparkSuite {
         v.contains("content mismatch")), deepV.toString)
       assert(deepV.exists(v => v.contains(famCopy) &&
         v.contains("content mismatch")), deepV.toString)
-    } finally drop(all: _*)
-  }
-
-  test("markBackupComplete vouches with teeth: the declared set " +
-      "carries real content hashes, so the deep audit has them") {
-    val t = s"da_vouch_p$pid"
-    val all = famAll(t)
-    drop(all: _*)
-    try {
-      val sp = spark
-      import sp.implicits._
-      TextOps.appendBm25Postings(
-        (1L to 10L).map(i => i -> s"spark shuffle token$i")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
-      TextOps.backupIndex(spark, t, "base")
-      // simulate the pre-marker world: the copies exist, the marker
-      // is gone; the operator vouches
-      drop(s"${t}_bakok_base")
-      TextOps.markBackupComplete(spark, t, "base")
-      assert(TextOps.checkBackup(spark, t, "base", deep = true) === Nil)
-      // and the vouch is not a rubber stamp — corrupt, re-audit
-      val rel = TextOps.listDataFiles(spark, s"${t}_bak_base")
-        .head._1
-      flipByte(s"${t}_bak_base", rel)
-      assert(TextOps.checkBackup(spark, t, "base") === Nil)
-      assert(TextOps.checkBackup(spark, t, "base", deep = true)
-        .exists(_.contains("content mismatch")))
     } finally drop(all: _*)
   }
 }

@@ -96,6 +96,7 @@ class DeleteSpec extends AnyFunSuite with SparkSuite {
       TextOps.appendBm25Postings(docs, t2, s"${t2}_stats")
       val stageRows = spark.table(t).select("doc_id", "dl").distinct()
         .join(victims, Seq("doc_id"))
+        .withColumn("gen", lit(TextOps.TerminalGen))
 
       // crash state A: the stage committed, nothing applied (died
       // right after the write-ahead). The next PROBE must heal it to
@@ -126,7 +127,8 @@ class DeleteSpec extends AnyFunSuite with SparkSuite {
       val extra = docs.filter(col("doc_id") >= 400 && col("doc_id") < 410)
       val vic2 = (30L until 40L).toDF("doc_id")
       val stage2 = spark.table(t).select("doc_id", "dl").distinct()
-        .join(vic2, Seq("doc_id")).persist()
+        .join(vic2, Seq("doc_id"))
+        .withColumn("gen", lit(TextOps.TerminalGen)).persist()
       val n2 = stage2.count()
       stage2.write.saveAsTable(s"${t}_del_stage")
       val before = spark.table(s"${t}_stats").collect()(0).getLong(0)
@@ -200,7 +202,9 @@ class DeleteSpec extends AnyFunSuite with SparkSuite {
       // a family reset, must not LOSE the deletion — the reset folds
       // the staged ids into the tombstones and the replay reconciles
       spark.table(t).select("doc_id", "dl").distinct()
-        .filter(col("doc_id") === 5L).write.saveAsTable(s"${t}_del_stage")
+        .filter(col("doc_id") === 5L)
+        .withColumn("gen", lit(TextOps.TerminalGen))
+        .write.saveAsTable(s"${t}_del_stage")
       spark.sql(s"DROP TABLE $st")
       streaming.StreamingOps.streamingBm25Ingest(spark, dir, t, st)
       val want2 = survivorStats(Seq(1L, 3L))

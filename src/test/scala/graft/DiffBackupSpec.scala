@@ -153,36 +153,4 @@ class DiffBackupSpec extends AnyFunSuite with SparkSuite {
         .exists(_.contains("lost or changed")))
     } finally drop(all: _*)
   }
-
-  test("pre-r17 3-column markers still audit and restore (full-set " +
-      "compatibility)") {
-    val t = s"db_legacy_p$pid"
-    val all = famAll(t) ++ Seq(s"${t}_bakok_base_tmp")
-    drop(all: _*)
-    try {
-      val sp = spark
-      import sp.implicits._
-      TextOps.appendBm25Postings(
-        (1L to 10L).map(i => i -> s"spark token$i")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
-      TextOps.backupIndex(spark, t, "base")
-      // rewrite the marker to the r16 3-column shape
-      val legacy = spark.table(s"${t}_bakok_base")
-        .select("member", "path", "len").collect()
-      spark.sql(s"DROP TABLE ${t}_bakok_base")
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(legacy.toIndexedSeq),
-          new org.apache.spark.sql.types.StructType()
-            .add("member", "string").add("path", "string")
-            .add("len", "long"))
-        .coalesce(1).write.saveAsTable(s"${t}_bakok_base")
-      assert(TextOps.checkBackup(spark, t, "base") === Nil)
-      val before = postings(t)
-      TextOps.appendBm25Postings(
-        Seq(11L -> "mutation").toDF("doc_id", "text"),
-        t, s"${t}_stats")
-      TextOps.restoreIndex(spark, t, "base")
-      assert(postings(t) === before)
-    } finally drop(all: _*)
-  }
 }

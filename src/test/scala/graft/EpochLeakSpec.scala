@@ -53,7 +53,8 @@ class EpochLeakSpec extends AnyFunSuite with SparkSuite {
   }
 
   private def epochTagFor(owner: Long): String =
-    "ep" + java.lang.Long.toString(System.nanoTime(), 36) + "p" + owner
+    "ep" + java.lang.Long.toString(System.nanoTime(), 36) + "p" + owner +
+      "h" + TextOps.hostHash
 
   test("kill -9 mid-epoch: the dead pid's pin refuses folds while " +
       "the process lives, then sweeps on the next fold — which " +
@@ -192,9 +193,12 @@ class EpochLeakSpec extends AnyFunSuite with SparkSuite {
   test("a FOREIGN host's epoch pin never dead-pid-sweeps (late r18, " +
       "review): on a shared warehouse its pid is only answerable on " +
       "its own host — it ages out by TTL alone; this host's dead pid " +
-      "and a legacy host-less tag still sweep") {
+      "still sweeps; a host-less named snapshot is never swept") {
     val t = s"epl_host_p$pid"
     val all = famAll(t)
+    // an operator's named snapshot that merely looks like a
+    // host-less epoch tag: not an epoch, never swept
+    val named = "epoch2p999999999"
     drop(all: _*)
     try {
       mkFam(t)
@@ -207,30 +211,34 @@ class EpochLeakSpec extends AnyFunSuite with SparkSuite {
       val ours = "ep" +
         java.lang.Long.toString(System.nanoTime(), 36) +
         s"p${deadPid}h${TextOps.hostHash}"
-      val legacy = epochTagFor(deadPid) // pre-host-hash shape
-      Seq(foreign, ours, legacy)
+      Seq(foreign, ours, named)
         .foreach(TextOps.snapshotIndex(spark, t, _))
-      // parsing: all three are epoch tags with the same owner pid
+      // parsing: both epoch tags carry the same owner pid
       assert(TextOps.epochTagOwner(foreign) === Some(deadPid))
       assert(TextOps.epochTagOwner(ours) === Some(deadPid))
-      assert(TextOps.epochTagOwner(legacy) === Some(deadPid))
-      // real clock: OUR dead pid and the legacy tag sweep; the
-      // foreign host's pin survives (its pid may be live THERE)
+      assert(TextOps.epochTagOwner(named) === None)
+      // real clock: OUR dead pid sweeps; the foreign host's pin
+      // survives (its pid may be live THERE), and so does the
+      // named snapshot
       val swept = TextOps.sweepLeakedEpochs(spark, Some(t))
       assert(swept.exists(_.contains(s"$t/$ours")), swept)
-      assert(swept.exists(_.contains(s"$t/$legacy")), swept)
+      assert(!swept.exists(_.contains(s"$t/$named")), swept)
       assert(!swept.exists(_.contains(s"$t/$foreign")), swept)
-      assert(TextOps.listSnapshots(spark, t).map(_._1) ===
-        Seq(foreign))
-      // the TTL backstop still reclaims the foreign pin eventually
+      assert(TextOps.listSnapshots(spark, t).map(_._1).sorted ===
+        Seq(foreign, named).sorted)
+      // the TTL backstop still reclaims the foreign pin eventually —
+      // never the named snapshot, whatever its age
       val future = System.currentTimeMillis() + 100L * 3600 * 1000
       val swept2 = TextOps.sweepLeakedEpochs(spark, Some(t), future)
       assert(swept2.exists(_.contains(s"$t/$foreign")), swept2)
-      assert(TextOps.listSnapshots(spark, t) === Nil)
+      assert(TextOps.listSnapshots(spark, t).map(_._1) === Seq(named))
       // freshly-minted tags carry this host's hash
       assert(TextOps.epochTagParts(TextOps.epochTag())
         .exists(_._2.contains(TextOps.hostHash)))
-    } finally drop(all: _*)
+    } finally {
+      TextOps.dropSnapshot(spark, t, named)
+      drop(all: _*)
+    }
   }
 
   test("lease renewal (r19, VERDICT #1): a FOREIGN-host holder " +

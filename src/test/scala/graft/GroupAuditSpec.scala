@@ -105,7 +105,6 @@ class GroupAuditSpec extends AnyFunSuite with SparkSuite {
       val e = intercept[IllegalArgumentException](f)
       assert(e.getMessage.contains("alphanumeric"), e.getMessage)
     }
-    refuses(TextOps.markBackupComplete(spark, t, "a_b"))
     refuses(TextOps.checkBackup(spark, t, "a b"))
     refuses(TextOps.dropBackup(spark, t, "x';--"))
     refuses(TextOps.restoreIndex(spark, t, "a_b"))

@@ -5,19 +5,16 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** LEGACY PLANE-MODULUS SERVING + HEALING (ADVICE r15 #1/#2): a
-  * pre-r15 ANN family stored its band postings under the FIXED
-  * [[Ann.LegacyPlaneModulus]] and pinned a `_cfg` row WITHOUT the
-  * `planemod` key. The serving path must band external queries under
-  * the modulus the STORED bands were computed with — banding under
-  * the (current) derived modulus puts query and stored keys in
-  * different hash families, so candidates become uncorrelated with
-  * similarity and recall collapses with no error. Gated here:
-  *   - scoreExternal against a legacy family (pin absent) produces
-  *     EXACTLY the legacy-modulus collision set — and that set
-  *     differs from the mixed-moduli set the bug produced (teeth);
-  *   - a pin explicitly carrying the legacy value serves the same
-  *     way (the half-migrated-restore shape);
+/** PLANE-MODULUS PIN SERVING + HEALING (ADVICE r15 #1/#2): the
+  * serving path must band external queries under the modulus the
+  * STORED bands were computed with — banding under any other puts
+  * query and stored keys in different hash families, so candidates
+  * become uncorrelated with similarity and recall collapses with no
+  * error. Gated here:
+  *   - a `_cfg` pin LACKING `planemod` does not say which family the
+  *     bands live in: scoreExternal refuses, naming the repair;
+  *   - a pin carrying a non-derived value (a fixed modulus, the
+  *     half-migrated-restore shape) serves under that pin;
   *   - fsck names the violation (missing pin / pin != derived);
   *   - ONE repair() rebuilds the bands member under the derived
   *     modulus from the payload sibling, re-pins, and the family
@@ -32,6 +29,8 @@ class LegacyBandingSpec extends AnyFunSuite with SparkSuite {
   private val BT = 2
   private val Dim = 64
   private val derived = Ann.planeModulus(NB * BT, Dim)
+  /** A fixed plane modulus that differs from the derived one. */
+  private val Forked = 29
 
   private def emb = Tables(spark, sf, "embeddings")
 
@@ -73,14 +72,13 @@ class LegacyBandingSpec extends AnyFunSuite with SparkSuite {
       .select("q_id", "vec_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  /** Rewrite `a`'s stored state to what a pre-r15 build left: bands
-    * computed under the legacy fixed modulus, `_cfg` pinned with
-    * `planemodPin` (None = the key absent entirely). */
-  private def makeLegacy(a: String, planemodPin: Option[Int]): Unit = {
+  /** Rewrite `a`'s stored state to bands computed under the fixed
+    * [[Forked]] modulus, `_cfg` pinned with `planemodPin` (None = the
+    * key absent entirely). */
+  private def makeForked(a: String, planemodPin: Option[Int]): Unit = {
     graft.functions.VectorFunctions.register(spark)
     spark.table(s"${a}_vec").select("vec_id", "v", "gen")
-      .withColumn("bands", Ann.bandKeys(col("v"), NB, BT, Dim,
-        Ann.LegacyPlaneModulus))
+      .withColumn("bands", Ann.bandKeys(col("v"), NB, BT, Dim, Forked))
       .select(col("vec_id"), col("gen"), posexplode(col("bands")))
       .toDF("vec_id", "gen", "band_idx", "bits")
       .select(concat(col("band_idx").cast("string"), lit(":"),
@@ -96,23 +94,17 @@ class LegacyBandingSpec extends AnyFunSuite with SparkSuite {
       .write.mode("overwrite").saveAsTable(s"${a}_cfg")
   }
 
-  test("a legacy family (no planemod pin) serves external queries " +
-      "under the legacy modulus; repair() upgrades it to the derived " +
+  test("a pin lacking planemod: the probe refuses naming repair, " +
+      "fsck flags it, and one repair() re-pins it into the derived " +
       "family") {
     val a = s"lb_ann_p$pid"
     drop(famTables(a): _*)
     try {
       AnnIndex.write(emb, a, nBands = NB, bits = BT)
-      makeLegacy(a, planemodPin = None)
-      val legacySet = collisions(a, Ann.LegacyPlaneModulus,
-        Ann.LegacyPlaneModulus)
-      val buggedSet = collisions(a, Ann.LegacyPlaneModulus, derived)
-      // teeth: if the two families happened to collide identically on
-      // this fixture the serving assertion would be vacuous
-      assert(legacySet !== buggedSet)
-      assert(legacySet.nonEmpty)
-      assert(served(a) === legacySet)
-      // fsck names the legacy family; repair rebuilds + re-pins
+      makeForked(a, planemodPin = None)
+      val e = intercept[IllegalArgumentException](served(a))
+      assert(e.getMessage.contains("repair"), e.getMessage)
+      // fsck names the missing pin; repair rebuilds + re-pins
       val v = AnnIndex.family(a).fsck(spark)
       assert(v.exists(_.contains("planemod pin missing")), v.toString)
       val fixed = AnnIndex.family(a).repair(spark)
@@ -133,12 +125,16 @@ class LegacyBandingSpec extends AnyFunSuite with SparkSuite {
     drop(famTables(a): _*)
     try {
       AnnIndex.write(emb, a, nBands = NB, bits = BT)
-      makeLegacy(a, planemodPin = Some(Ann.LegacyPlaneModulus))
-      assert(served(a) === collisions(a, Ann.LegacyPlaneModulus,
-        Ann.LegacyPlaneModulus))
+      makeForked(a, planemodPin = Some(Forked))
+      // teeth: if banding queries under the derived modulus happened
+      // to collide identically on this fixture, the serving assertion
+      // would be vacuous
+      assert(collisions(a, Forked, Forked) !== collisions(a, Forked,
+        derived))
+      assert(served(a) === collisions(a, Forked, Forked))
       val v = AnnIndex.family(a).fsck(spark)
       assert(v.exists(_.contains(
-        s"planemod pin ${Ann.LegacyPlaneModulus} != derived $derived")),
+        s"planemod pin $Forked != derived $derived")),
         v.toString)
       assert(AnnIndex.family(a).repair(spark)
         .exists(_.contains("derived plane modulus")))
