@@ -186,21 +186,6 @@ object Quality {
     (missing ++ retyped ++ extra).toSeq.sorted
   }
 
-  /** Per-file parquet footer schemas for the streaming gate's
-    * [[Rule.SchemaMatches]] drift discovery (late r18). Per-file, not
-    * merged: a merge UNIONS columns, which would hide the one file
-    * that LOST a column. Under `graft.footer.fanoutThreshold`
-    * (default 1024) each footer is read on the driver — a micro-batch
-    * is a handful of files and a Spark job costs more than it saves.
-    * Above it the footers read as ONE Spark job (the
-    * hashFilesDistributed / distcp shape: at 100 TB a backfill batch
-    * can carry tens of thousands of files, and a per-file driver loop
-    * would serialize exactly the path that must keep up with the
-    * feed). Tasks return raw footer MessageType text; the
-    * parquet→Spark conversion runs driver-side with the session's OWN
-    * SQLConf converter, so both rungs yield bit-identical schemas —
-    * spec-gated in QualitySpec.
-    */
   /** Recursively force-nullable (late r18): the file-source read path
     * marks every column nullable, but a raw footer conversion keeps
     * parquet `required` fields non-nullable — without this the two
@@ -251,20 +236,35 @@ object Quality {
     finally r.close()
   }
 
+  /** Per-file parquet footer schemas for the streaming gate's
+    * [[Rule.SchemaMatches]] drift discovery (late r18). Per-file, not
+    * merged: a merge UNIONS columns, which would hide the one file
+    * that LOST a column. Up to `driverMax` files (1024) each footer
+    * is read on the driver — a micro-batch is a handful of files and
+    * a Spark job costs more than it saves. Above it the footers read
+    * as ONE Spark job (the hashFilesDistributed / distcp shape: at
+    * 100 TB a backfill batch can carry tens of thousands of files —
+    * a micro-batch has no file bound when `maxFilesPerTrigger` is
+    * unset — and a per-file driver loop would serialize exactly the
+    * path that must keep up with the feed). Tasks return raw footer
+    * MessageType text; the parquet→Spark conversion runs driver-side
+    * with the session's OWN SQLConf converter, so both rungs yield
+    * bit-identical schemas — spec-gated in QualitySpec, which passes
+    * `driverMax = 0` to force the job rung.
+    */
   private[graft] def footerSchemas(
-      s: org.apache.spark.sql.SparkSession, files: Seq[String])
+      s: org.apache.spark.sql.SparkSession, files: Seq[String],
+      driverMax: Int = 1024)
       : Seq[org.apache.spark.sql.types.StructType] = {
-    val threshold = s.conf.getOption("graft.footer.fanoutThreshold")
-      .map(_.toInt).getOrElse(1024)
     // the EXPENSIVE part — opening tens of thousands of files and
-    // reading their footers — distributes past the threshold; the
+    // reading their footers — distributes past `driverMax`; the
     // parquet→Spark type conversion is pure CPU per schema and runs
     // on the driver with the session's OWN SQLConf converter, so the
     // two rungs cannot drift on conversion rules (and the converter
     // never has to serialize). Footers travel as parquet MessageType
     // text — the parseable canonical form.
     val raw: Seq[String] =
-      if (files.size <= threshold) {
+      if (files.size <= driverMax) {
         val conf = s.sessionState.newHadoopConf()
         files.map(footerText(_, conf))
       } else {

@@ -1143,54 +1143,44 @@ object TextOps {
     val dst = new org.apache.hadoop.fs.Path(dstLoc, p)
     val parent = dst.getParent
     if (parent != null) { dfs.mkdirs(parent); () }
-    val md = java.security.MessageDigest.getInstance("MD5")
     val in = sfs.open(new org.apache.hadoop.fs.Path(srcLoc, p))
     try {
       val out = dfs.create(dst, true)
-      try {
-        val buf = new Array[Byte](131072)
-        var n = in.read(buf)
-        while (n >= 0) {
-          if (n > 0) { md.update(buf, 0, n); out.write(buf, 0, n) }
-          n = in.read(buf)
-        }
-      } finally out.close()
+      try md5Stream(in, out.write(_, 0, _)) finally out.close()
     } finally in.close()
+  }
+
+  /** The one MD5 stream loop: digest `in` in 128 KiB chunks at
+    * constant memory (never loading a file whole), handing each chunk
+    * to `sink` as well; returns the hex digest. Does not close `in`. */
+  private def md5Stream(in: java.io.InputStream,
+      sink: (Array[Byte], Int) => Unit): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val buf = new Array[Byte](131072)
+    var n = in.read(buf)
+    while (n >= 0) {
+      if (n > 0) { md.update(buf, 0, n); sink(buf, n) }
+      n = in.read(buf)
+    }
     md.digest().map("%02x".format(_)).mkString
+  }
+
+  /** md5 (hex) of `rel` under `root`, read through `conf`'s
+    * filesystem. */
+  private def md5File(conf: org.apache.hadoop.conf.Configuration,
+      root: org.apache.hadoop.fs.Path, rel: String): String = {
+    val in = root.getFileSystem(conf)
+      .open(new org.apache.hadoop.fs.Path(root, rel))
+    try md5Stream(in, (_, _) => ()) finally in.close()
   }
 
   /** md5 (hex) of one data file under a table location — the deep
     * audit's re-hash. O(file bytes): opt-in paths only, never the
     * O(metadata) verbs. */
   private[graft] def hashDataFile(s: org.apache.spark.sql.SparkSession,
-      loc: org.apache.hadoop.fs.Path, relPath: String): String = {
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val in = fs.open(new org.apache.hadoop.fs.Path(loc, relPath))
-    try {
-      val buf = new Array[Byte](131072)
-      var n = in.read(buf)
-      while (n >= 0) {
-        if (n > 0) md.update(buf, 0, n)
-        n = in.read(buf)
-      }
-    } finally in.close()
-    md.digest().map("%02x".format(_)).mkString
-  }
+      loc: org.apache.hadoop.fs.Path, relPath: String): String =
+    md5File(s.sparkContext.hadoopConfiguration, loc, relPath)
 
-  /** DISTRIBUTED re-hash of (location, relPath) files — ONE Spark
-    * job, each task streaming its files through MD5 at constant
-    * memory (never loading a file whole). The deep audits route all
-    * their verification reads through here: at 100 TB a deep check
-    * re-reads every committed backup byte, and a driver-side
-    * file-at-a-time loop would make the restore-day confidence check
-    * itself take a day. The session's Hadoop conf rides to the tasks
-    * as a plain key-value array (rebuilt per partition — the
-    * object-store credentials and endpoints a real deployment's
-    * filesystems need; `SerializableConfiguration` is spark-private).
-    * Files are pre-checked for existence by the callers (missing
-    * files are the SHALLOW pass's finding); a file that disappears
-    * mid-audit surfaces as the task's IO error. */
   /** The ship-a-Hadoop-conf-to-tasks idiom, ONE definition (late r18,
     * review #2: five hand-rolled copies had already drifted on the
     * source conf): serialize to a plain key-value array on the
@@ -1211,6 +1201,17 @@ object TextOps {
     c
   }
 
+  /** DISTRIBUTED re-hash of (location, relPath) files — ONE Spark
+    * job, each task streaming its files through [[md5Stream]]. The
+    * deep audits route all their verification reads through here: at
+    * 100 TB a deep check re-reads every committed backup byte, and a
+    * driver-side file-at-a-time loop would make the restore-day
+    * confidence check itself take a day. The session's Hadoop conf
+    * rides to the tasks through [[hadoopConfKv]] (the object-store
+    * credentials and endpoints a real deployment's filesystems
+    * need). Files are pre-checked for existence by the callers
+    * (missing files are the SHALLOW pass's finding); a file that
+    * disappears mid-audit surfaces as the task's IO error. */
   private[graft] def hashFilesDistributed(
       s: org.apache.spark.sql.SparkSession,
       files: Seq[(String, String)]): Map[(String, String), String] =
@@ -1222,27 +1223,11 @@ object TextOps {
       s.sparkContext.parallelize(files.distinct, n)
         .mapPartitions { it =>
           val conf = rebuildHadoopConf(confKv)
-          it.map { case (loc, rel) => hashOne(conf, loc, rel) }
+          it.map { case (loc, rel) => (loc, rel) ->
+            md5File(conf, new org.apache.hadoop.fs.Path(loc), rel) }
         }
         .collect().toMap
     }
-
-  private def hashOne(conf: org.apache.hadoop.conf.Configuration,
-      loc: String, rel: String): ((String, String), String) = {
-    val root = new org.apache.hadoop.fs.Path(loc)
-    val fs = root.getFileSystem(conf)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val in = fs.open(new org.apache.hadoop.fs.Path(root, rel))
-    try {
-      val buf = new Array[Byte](131072)
-      var k = in.read(buf)
-      while (k >= 0) {
-        if (k > 0) md.update(buf, 0, k)
-        k = in.read(buf)
-      }
-    } finally in.close()
-    ((loc, rel), md.digest().map("%02x".format(_)).mkString)
-  }
 
   /** Tag hygiene shared by EVERY backup/snapshot verb (ADVICE r16
     * #3): tags are interpolated into table names and raw SQL, so a
@@ -1392,11 +1377,10 @@ object TextOps {
 
   /** The marker as a 5-column DataFrame (member, path, len, src,
     * sha); a null sha is a file with no recorded content hash, which
-    * the deep audits name. The at-scale view (r18, VERDICT #5):
-    * aggregate verbs (provenance, dependents, the
-    * storage gauge) and the distributed audit diff consume THIS and
-    * collect only bounded summaries/violations, instead of pulling
-    * one driver tuple per committed file. */
+    * the deep audit names. The at-scale view (r18, VERDICT #5):
+    * aggregate verbs (provenance, dependents, the storage gauge)
+    * consume THIS and collect only bounded summaries, instead of
+    * pulling one driver tuple per committed file. */
   private[graft] def markerFrame(s: org.apache.spark.sql.SparkSession,
       marker: String): org.apache.spark.sql.DataFrame =
     s.table(marker).select("member", "path", "len", "src", "sha")
@@ -1419,8 +1403,11 @@ object TextOps {
     * exist, every copy it records must still exist WITH EXACTLY the
     * data files it committed with ((name, len) identity — the
     * manifest-snapshot convention), and no unrecorded copy may sit
-    * under the tag (restore would resurrect it as a member). All
-    * O(metadata). Nil = the set restores as taken. */
+    * under the tag (restore would resurrect it as a member). Cost:
+    * one marker read and one listing per copy (a base copy is listed
+    * only when a borrowed file is not in the own copy), all
+    * O(metadata); `deep` adds one re-hash job. Nil = the set restores
+    * as taken. */
   def checkBackup(s: org.apache.spark.sql.SparkSession, table: String,
       tag: String = "bak", deep: Boolean = false): Seq[String] = {
     requireTag("checkBackup", tag)
@@ -1431,45 +1418,37 @@ object TextOps {
           s"backup $table/$tag has copies but no commit marker " +
             "(crashed mid-set, or pre-r16) — re-take it"
         else s"no backup $table/$tag")
-    // r18 (VERDICT #5): past `graft.marker.fanoutThreshold` committed
-    // files the marker-vs-listing diff runs as DataFrame anti joins —
-    // the marker rows never materialize on the driver, only the
-    // (bounded) violations and the per-member listings (the Hadoop
-    // listStatus API is driver-side by nature; what used to be
-    // unbounded was the row-tuple set algebra on top of it). Below
-    // the threshold the original in-memory path runs; the two are
-    // bit-exact (MarkerScaleSpec runs both on the same damage).
-    val fanoutThreshold = s.conf
-      .getOption("graft.marker.fanoutThreshold").map(_.toLong)
-      .getOrElse(100000L)
-    val markerRows = s.table(marker).count()
-    val recordedMembers = markerFrame(s, marker)
-      .select("member").distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    val fileProblems =
-      if (markerRows > fanoutThreshold)
-        checkBackupFilesDistributed(s, marker, tag, recordedMembers)
-      else checkBackupFilesLocal(s, marker, tag)
+    // the ONE marker read: the shallow diff, the extras and the deep
+    // gather all work from these rows, member by member in name order
+    val recorded = readBackupMarker(s, marker).groupBy(_._1)
+      .toSeq.sortBy(_._1)
+    // each copy is listed at most once, shared by both passes
+    val listed = scala.collection.mutable.Map
+      .empty[String, Map[String, Long]]
+    val files = (c: String) =>
+      listed.getOrElseUpdate(c, listDataFiles(s, c).toMap)
+    val fileProblems = checkBackupFiles(s, tag, recorded, files)
+    val members = recorded.map(_._1).toSet
     val extras = (table +: BackupSiblings.map(table + _))
       .map(m => s"${m}_bak_$tag")
-      .filter(m => s.catalog.tableExists(m) &&
-        !recordedMembers.contains(m))
+      .filter(m => s.catalog.tableExists(m) && !members.contains(m))
       .map(m => s"$m: copy exists but is not in the commit marker " +
         "(restore would resurrect it as a member) — re-take the " +
         "backup")
     val deepProblems =
-      if (!deep) Nil
-      else checkBackupDeep(s, marker, tag,
-        distributed = markerRows > fanoutThreshold)
+      if (!deep) Nil else checkBackupDeep(s, tag, recorded, files)
     fileProblems ++ extras ++ deepProblems
   }
 
-  /** The original in-memory shallow diff (small markers). */
-  private def checkBackupFilesLocal(
-      s: org.apache.spark.sql.SparkSession, marker: String,
-      tag: String): Seq[String] = {
-    val recorded = readBackupMarker(s, marker).groupBy(_._1)
-    recorded.toSeq.sortBy(_._1).flatMap {
+  private type MarkerRow =
+    (String, Option[String], Long, Option[String], Option[String])
+
+  /** The shallow diff: each recorded member's rows against its copy's
+    * listing (`files`: relative path → length). */
+  private def checkBackupFiles(s: org.apache.spark.sql.SparkSession,
+      tag: String, recorded: Seq[(String, Seq[MarkerRow])],
+      files: String => Map[String, Long]): Seq[String] =
+    recorded.flatMap {
       case (m, rows) =>
         if (!s.catalog.tableExists(m))
           Seq(s"$m: recorded in the commit marker but missing")
@@ -1486,18 +1465,19 @@ object TextOps {
             case (_, Some(p), l, Some(b), _) => (p, l, b) }
           val borrowedSet =
             borrowed.map { case (p, l, _) => (p, l) }.toSet
-          val now = listDataFiles(s, m).toSet
-          val lost = (own -- now).toSeq.sorted.map { case (p, l) =>
-            s"$m: committed file $p ($l bytes) lost or changed " +
-              "since the backup"
-          }
-          val unrecorded = (now -- own -- borrowedSet).toSeq.sorted
+          val now = files(m)
+          val lost = own.filterNot { case (p, l) => now.get(p).contains(l) }
+            .toSeq.sorted.map { case (p, l) =>
+              s"$m: committed file $p ($l bytes) lost or changed " +
+                "since the backup"
+            }
+          val unrecorded = (now.toSet -- own -- borrowedSet).toSeq.sorted
             .map { case (p, _) =>
               s"$m: file $p not in the commit marker (written into " +
                 "the copy after commit?)"
             }
           val borrowProblems = borrowed
-            .filterNot { case (p, l, _) => now.contains((p, l)) }
+            .filterNot { case (p, l, _) => now.get(p).contains(l) }
             .groupBy(_._3).toSeq
             .sortBy(_._1).flatMap { case (b, fs3) =>
               val baseCopy =
@@ -1507,9 +1487,9 @@ object TextOps {
                   s"backup tag $b, but $baseCopy is missing (base " +
                   "dropped out-of-band?)")
               else {
-                val baseNow = listDataFiles(s, baseCopy).toSet
+                val baseNow = files(baseCopy)
                 fs3.sortBy(_._1).collect {
-                  case (p, l, _) if !baseNow.contains((p, l)) =>
+                  case (p, l, _) if !baseNow.get(p).contains(l) =>
                     s"$m: borrowed file $p ($l bytes) lost or " +
                       s"changed in base copy $baseCopy"
                 }
@@ -1518,248 +1498,58 @@ object TextOps {
           lost ++ unrecorded ++ borrowProblems
         }
     }
-  }
-
-  /** The shallow diff as DataFrame anti joins (large markers) — the
-    * marker stays a frame end-to-end; only the per-member listings
-    * (Hadoop listStatus, driver-side by API nature) and the bounded
-    * violation sets ever materialize. Output strings and their order
-    * are BIT-EXACT with [[checkBackupFilesLocal]] (spec-gated). */
-  private def checkBackupFilesDistributed(
-      s: org.apache.spark.sql.SparkSession, marker: String,
-      tag: String, recordedMembers: Seq[String]): Seq[String] = {
-    val sp = s
-    import sp.implicits._
-    val mf = markerFrame(s, marker).where(col("path").isNotNull)
-    def listingDF(m: String): org.apache.spark.sql.DataFrame = {
-      val files = listDataFiles(s, m)
-      s.sparkContext.parallelize(files,
-        (files.size / 100000 + 1).min(64)).toDF("apath", "alen")
-    }
-    recordedMembers.flatMap { m =>
-      if (!s.catalog.tableExists(m))
-        Seq(s"$m: recorded in the commit marker but missing")
-      else {
-        val rowsM = mf.where(col("member") === m)
-        val own = rowsM.where(col("src").isNull)
-          .select(col("path"), col("len"))
-        val borrowed = rowsM.where(col("src").isNotNull)
-          .select(col("path"), col("len"), col("src"))
-        val actual = listingDF(m)
-        val onFile = col("path") === col("apath") &&
-          col("len") === col("alen")
-        val lost = own.join(actual, onFile, "left_anti")
-          .collect().map(r => (r.getString(0), r.getLong(1)))
-          .sorted.map { case (p, l) =>
-            s"$m: committed file $p ($l bytes) lost or changed " +
-              "since the backup"
-          }
-        val unrecorded = actual.join(
-            rowsM.select(col("path"), col("len")),
-            onFile, "left_anti")
-          .collect().map(_.getString(0)).sorted
-          .map(p => s"$m: file $p not in the commit marker (written " +
-            "into the copy after commit?)")
-        val missingBorrow = borrowed.join(actual, onFile, "left_anti")
-          .collect().map(r =>
-            (r.getString(0), r.getLong(1), r.getString(2)))
-        val borrowProblems = missingBorrow.groupBy(_._3).toSeq
-          .sortBy(_._1).flatMap { case (b, fs3) =>
-            val baseCopy = m.stripSuffix(s"_bak_$tag") + s"_bak_$b"
-            if (!s.catalog.tableExists(baseCopy))
-              Seq(s"$m: borrows ${fs3.size} file(s) from base " +
-                s"backup tag $b, but $baseCopy is missing (base " +
-                "dropped out-of-band?)")
-            else {
-              val baseNow = listDataFiles(s, baseCopy).toSet
-              fs3.sortBy(_._1).collect {
-                case (p, l, _) if !baseNow.contains((p, l)) =>
-                  s"$m: borrowed file $p ($l bytes) lost or " +
-                    s"changed in base copy $baseCopy"
-              }
-            }
-          }
-        lost ++ unrecorded ++ borrowProblems
-      }
-    }
-  }
 
   /** DEEP pass (opt-in, O(backup bytes) — the cadence check stays
     * O(metadata)): re-hash every recorded file at the copy that
     * physically holds it and compare to the take-time md5. This is
     * what (name, len) identity cannot see: same-length bit rot or
     * tamper inside a committed copy. A row without a hash is NAMED
-    * as unverifiable — a silent skip would read as "verified". */
+    * as unverifiable — a silent skip would read as "verified".
+    * Holders resolve on the driver from the copy listings; the bytes
+    * are read by ONE distributed re-hash job
+    * ([[hashFilesDistributed]]) over the whole verifiable set. */
   private def checkBackupDeep(s: org.apache.spark.sql.SparkSession,
-      marker: String, tag: String, distributed: Boolean)
-      : Seq[String] =
-    if (distributed) checkBackupDeepDistributed(s, marker, tag)
-    else checkBackupDeepLocal(s, marker, tag)
-
-  /** The original in-memory deep gather (small markers): per-file
-    * tuples resolve on the driver, one distributed re-hash job over
-    * the verifiable set. */
-  private def checkBackupDeepLocal(s: org.apache.spark.sql.SparkSession,
-      marker: String, tag: String): Seq[String] = {
-    val recorded = readBackupMarker(s, marker).groupBy(_._1)
-    // gather every verifiable (file, holder, expected md5) — the
-    // unverifiable hash-less rows are named — then ONE distributed
-    // re-hash job over all of them ([[hashFilesDistributed]]):
-    // the deep check re-reads every committed byte, which must
-    // parallelize at scale
-    val gathered = recorded.toSeq.sortBy(_._1).flatMap {
-          case (m, rows) =>
-            if (!s.catalog.tableExists(m)) Nil // shallow reported it
-            else {
-              val ownNow = listDataFiles(s, m).toSet
-              val live = m.stripSuffix(s"_bak_$tag")
-              rows.collect { case (_, Some(p), l, src, sha) =>
-                (p, l, src, sha) }.sortBy(_._1).flatMap {
-                case (p, _, _, None) =>
-                  Seq(Left(s"$m: $p has no recorded content hash " +
-                    "— deep audit cannot verify it; re-take the " +
-                    "backup"))
-                case (p, l, src, Some(sha)) =>
-                  // resolve exactly like restore: the own copy when
-                  // it physically holds the file (full rows, or
-                  // borrowed rows a promote materialized), else the
-                  // base copy
-                  val holder =
-                    if (src.isEmpty || ownNow.contains((p, l))) Some(m)
-                    else Some(s"${live}_bak_${src.get}")
-                      .filter(s.catalog.tableExists)
-                  holder.toSeq.flatMap { h =>
-                    val loc = tableLocation(s, h)
-                    val fs = loc.getFileSystem(
-                      s.sparkContext.hadoopConfiguration)
-                    if (!fs.exists(
-                        new org.apache.hadoop.fs.Path(loc, p)))
-                      Nil // missing = the shallow pass's finding
-                    else Seq(Right((m, p, h, loc.toString, sha)))
-                  }
-              }
-            }
-        }
-    val got = hashFilesDistributed(s,
-      gathered.collect { case Right((_, p, _, loc, _)) =>
-        (loc, p) })
-    gathered.flatMap {
-      case Left(msg) => Seq(msg)
-      case Right((m, p, h, loc, sha)) =>
-        if (got((loc, p)) == sha) Nil
-        else Seq(s"$m: $p content mismatch in $h (recorded md5 " +
-          s"$sha, found ${got((loc, p))} — bit rot or tamper at " +
-          "unchanged length); re-take the backup")
-    }
-  }
-
-  /** The deep pass past `graft.marker.fanoutThreshold` (late r18,
-    * review: the shallow diff fanned out but the deep gather still
-    * collected one driver tuple per committed file — the exact
-    * materialization the threshold exists to avoid). Holder
-    * resolution (own copy when it physically holds the file, else
-    * the base copy) moves into a join against the own-copy listing;
-    * existence probing, hashing, and the hash COMPARISON all run in
-    * the tasks, so the driver collects only violations (bounded by
-    * damage) plus the bounded per-member metadata (listings — the
-    * Hadoop API is driver-side by nature — distinct borrow tags,
-    * holder locations). Message text and (member, path) order are
-    * BIT-EXACT with [[checkBackupDeepLocal]] (spec-gated in
-    * MarkerScaleSpec).
-    */
-  private def checkBackupDeepDistributed(
-      s: org.apache.spark.sql.SparkSession, marker: String,
-      tag: String): Seq[String] = {
-    val sp = s
-    import sp.implicits._
-    val confKv = hadoopConfKv(s.sparkContext.hadoopConfiguration)
-    // ONE cached pass over the marker — this branch only runs past
-    // the fan-out threshold, where re-scanning the marker table for
-    // every per-member derivation (members, hash-less rows, borrow
-    // tags, the join input) would multiply exactly the cost the
-    // threshold bounds (late r18, review #2)
-    val mf = markerFrame(s, marker).where(col("path").isNotNull)
-      .persist()
-    try {
-    val recordedMembers = mf
-      .select("member").distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    recordedMembers.flatMap { m =>
+      tag: String, recorded: Seq[(String, Seq[MarkerRow])],
+      files: String => Map[String, Long]): Seq[String] = {
+    val gathered = recorded.flatMap { case (m, rows) =>
       if (!s.catalog.tableExists(m)) Nil // shallow reported it
       else {
         val live = m.stripSuffix(s"_bak_$tag")
-        val rowsM = mf.where(col("member") === m)
-        // hash-less rows are NAMED per file, as in the local rung — a
-        // silent skip would read as "verified"
-        val unver = rowsM.where(col("sha").isNull)
-          .select(col("path")).collect().map(_.getString(0))
-          .map(p => p -> (s"$m: $p has no recorded content hash " +
-            "— deep audit cannot verify it; re-take the backup"))
-        // bounded: distinct borrow tags → existing holders' locations
-        val srcTags = rowsM
-          .where(col("sha").isNotNull && col("src").isNotNull)
-          .select(col("src")).distinct()
-          .collect().map(_.getString(0)).toSeq
-        val holderLoc: Map[String, String] =
-          ((m, true) +: srcTags.map { b =>
-            val h = s"${live}_bak_$b"
-            (h, s.catalog.tableExists(h))
-          }).collect { case (h, true) =>
-            h -> tableLocation(s, h).toString
-          }.toMap
-        val locMapB = s.sparkContext.broadcast(holderLoc)
-        val files = listDataFiles(s, m)
-        val ownDF = s.sparkContext.parallelize(files,
-          (files.size / 100000 + 1).min(64)).toDF("apath", "alen")
-        val joined = rowsM.where(col("sha").isNotNull)
-          .join(ownDF, col("path") === col("apath") &&
-            col("len") === col("alen"), "left_outer")
-          .select(col("path"), col("src"), col("sha"),
-            col("apath").isNotNull.as("inOwn"))
-        val mm = m
-        val liveB = live
-        val bad =
-          try joined.rdd.mapPartitions { it =>
-          val conf = rebuildHadoopConf(confKv)
-          it.flatMap { r =>
-            val p = r.getString(0)
-            val src = Option(r.getString(1))
-            val sha = r.getString(2)
-            val inOwn = r.getBoolean(3)
+        rows.collect { case (_, Some(p), l, src, sha) =>
+          (p, l, src, sha) }.sortBy(_._1).flatMap {
+          case (p, _, _, None) =>
+            Seq(Left(s"$m: $p has no recorded content hash " +
+              "— deep audit cannot verify it; re-take the " +
+              "backup"))
+          case (p, l, src, Some(sha)) =>
+            // resolve exactly like restore: the own copy when
+            // it physically holds the file (full rows, or
+            // borrowed rows a promote materialized), else the
+            // base copy
             val holder =
-              if (src.isEmpty || inOwn) mm
-              else s"${liveB}_bak_${src.get}"
-            locMapB.value.get(holder).flatMap { loc =>
-              val root = new org.apache.hadoop.fs.Path(loc)
-              val fs = root.getFileSystem(conf)
-              if (!fs.exists(new org.apache.hadoop.fs.Path(root, p)))
-                None // missing = the shallow pass's finding
-              else {
-                val got = hashOne(conf, loc, p)._2
-                if (got == sha) None
-                else Some(p -> (s"$mm: $p content mismatch in " +
-                  s"$holder (recorded md5 $sha, found $got — bit " +
-                  "rot or tamper at unchanged length); re-take the " +
-                  "backup"))
-              }
-            }
-          }
-        }.collect()
-        finally {
-          // in a finally: a failed hash job must not leak the
-          // broadcast for the session's lifetime (late r18, review #2)
-          locMapB.unpersist()
-          ()
+              if (src.isEmpty || files(m).get(p).contains(l))
+                Some(m)
+              else Some(s"${live}_bak_${src.get}")
+                .filter(s.catalog.tableExists)
+            // a holder without the file (by path) is the
+            // shallow pass's finding
+            holder.filter(files(_).contains(p))
+              .map(h => Right((m, p, h, sha))).toSeq
         }
-        // the local rung walks this member's rows in path order,
-        // interleaving unverifiable and mismatch lines — merge-sort
-        // by path to match
-        (unver ++ bad).sortBy(_._1).map(_._2).toSeq
       }
     }
-    } finally {
-      mf.unpersist()
-      ()
+    val locs = gathered.collect { case Right((_, _, h, _)) => h }
+      .distinct.map(h => h -> tableLocation(s, h).toString).toMap
+    val got = hashFilesDistributed(s,
+      gathered.collect { case Right((_, p, h, _)) => (locs(h), p) })
+    gathered.flatMap {
+      case Left(msg) => Seq(msg)
+      case Right((m, p, h, sha)) =>
+        val found = got((locs(h), p))
+        if (found == sha) Nil
+        else Seq(s"$m: $p content mismatch in $h (recorded md5 " +
+          s"$sha, found $found — bit rot or tamper at " +
+          "unchanged length); re-take the backup")
     }
   }
 

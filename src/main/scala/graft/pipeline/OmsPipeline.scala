@@ -249,15 +249,28 @@ object OmsPipeline {
   final case class StarSchema(pays: DataFrame, region: DataFrame,
       maladie: DataFrame, statistique: DataFrame)
 
-  /** EP2 star schema (reference ETL_OMS_FINAL.py:74-100). Surrogate ids
-    * are ordinal over name sort order (the reference uses first-appearance
-    * index+1, which depends on input order); region mirrors pays 1:1 as in
-    * the reference.
+  /** EP2 star schema (reference ETL_OMS_FINAL.py:74-100): one disease,
+    * so maladie is the one-row literal dim (present even on empty
+    * input) and every fact row is disease 1.
     */
   def starSchema(standardized: DataFrame, pandemicName: String,
       spark: SparkSession): StarSchema = {
     val sp = spark
     import sp.implicits._
+    star(standardized,
+      Seq((1, pandemicName)).toDF("id_maladie", "nom_maladie"),
+      byName = false)
+  }
+
+  /** The pays/region dims and the fact both star builders share.
+    * Surrogate ids are ordinal over name sort order (the reference uses
+    * first-appearance index+1, which depends on input order); region
+    * mirrors pays 1:1 as in the reference. `byName` keys each fact row
+    * to its own disease through a broadcast lookup on `maladie`'s
+    * names; otherwise every row is disease 1.
+    */
+  private def star(standardized: DataFrame, maladie: DataFrame,
+      byName: Boolean): StarSchema = {
     val pays = standardized.select("country").distinct()
       .withColumn("id_pays", row_number().over(Window.orderBy("country")))
     // region mirrors pays 1:1 (ETL_OMS_FINAL.py:78-81) but is computed as
@@ -268,18 +281,24 @@ object OmsPipeline {
       .withColumn("id_region", row_number().over(Window.orderBy("nom_region")))
       .withColumn("id_pays", col("id_region"))
       .select("id_region", "nom_region", "id_pays")
-    val maladie = Seq((1, pandemicName)).toDF("id_maladie", "nom_maladie")
     val withPays = standardized.join(broadcast(pays), Seq("country"))
-    val fact = withPays
+    val withRegion = withPays
       .join(broadcast(region),
         withPays("id_pays") === region("id_pays") &&
           withPays("country") === region("nom_region"))
-      .withColumn("id_maladie", lit(1))
-      .select(col("id_maladie"), region("id_region"), col("date"),
+    val (keyed, idMaladie) =
+      if (byName)
+        (withRegion.join(broadcast(maladie),
+          withPays("pandemic") === maladie("nom_maladie")),
+          maladie("id_maladie"))
+      else (withRegion, lit(1).as("id_maladie"))
+    val fact = keyed
+      .select(idMaladie, region("id_region"), col("date"),
         col("new_deaths").as("nouveau_mort"),
         col("new_cases").as("nouveau_cas"),
         col("deaths").as("total_mort"))
-    StarSchema(pays.select("country", "id_pays"), region, maladie, fact)
+    StarSchema(pays.select("country", "id_pays"), region,
+      maladie.select("id_maladie", "nom_maladie"), fact)
   }
 
   /** v5 pre-load dedup-agg (reference ETL_OMS_OPERATIONNEL.py:160-166):
@@ -430,32 +449,12 @@ object OmsPipeline {
     * lookup — the set-based form of the reference's dim-cache probes.
     */
   def starSchemaMulti(standardized: DataFrame,
-      spark: SparkSession): StarSchema = {
-    val pays = standardized.select("country").distinct()
-      .withColumn("id_pays", row_number().over(Window.orderBy("country")))
-    val region = standardized.select(col("country").as("nom_region"))
-      .distinct()
-      .withColumn("id_region", row_number().over(Window.orderBy("nom_region")))
-      .withColumn("id_pays", col("id_region"))
-      .select("id_region", "nom_region", "id_pays")
-    val maladie = standardized.select(col("pandemic").as("nom_maladie"))
-      .distinct()
-      .withColumn("id_maladie",
-        row_number().over(Window.orderBy("nom_maladie")))
-    val withPays = standardized.join(broadcast(pays), Seq("country"))
-    val fact = withPays
-      .join(broadcast(region),
-        withPays("id_pays") === region("id_pays") &&
-          withPays("country") === region("nom_region"))
-      .join(broadcast(maladie),
-        withPays("pandemic") === maladie("nom_maladie"))
-      .select(maladie("id_maladie"), region("id_region"), col("date"),
-        col("new_deaths").as("nouveau_mort"),
-        col("new_cases").as("nouveau_cas"),
-        col("deaths").as("total_mort"))
-    StarSchema(pays.select("country", "id_pays"), region,
-      maladie.select("id_maladie", "nom_maladie"), fact)
-  }
+      spark: SparkSession): StarSchema =
+    star(standardized,
+      standardized.select(col("pandemic").as("nom_maladie")).distinct()
+        .withColumn("id_maladie",
+          row_number().over(Window.orderBy("nom_maladie"))),
+      byName = true)
 
   /** v5 per-file standardization (reference
     * ETL_OMS_OPERATIONNEL.py:95-150): v5 synonym map, null completion,

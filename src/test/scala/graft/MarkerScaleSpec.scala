@@ -4,17 +4,15 @@ import graft.operators.TextOps
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** MARKER-CHAIN RESOLUTION AT SCALE (r18, VERDICT #5): a 100 TB
-  * family with small files makes the backup marker millions of rows,
-  * and the audit verbs used to collect every row as driver tuples.
-  * Now the aggregate verbs (provenance, dependents, the storage
-  * gauge) consume the marker as a DataFrame and collect only bounded
-  * summaries, and checkBackup's shallow diff dispatches to DataFrame
-  * anti joins past `graft.marker.fanoutThreshold` rows. This spec
-  * pins the load-bearing property: the DISTRIBUTED path is BIT-EXACT
-  * with the in-memory one — same strings, same order — on a healthy
-  * set, under file loss, post-commit additions, and a dropped
-  * differential base.
+/** MARKER-CHAIN RESOLUTION (r18, VERDICT #5): a 100 TB family with
+  * small files makes the backup marker millions of rows. The
+  * aggregate verbs (provenance, dependents, the storage gauge)
+  * consume the marker as a DataFrame and collect only bounded
+  * summaries; checkBackup reads the rows once and audits them on one
+  * shallow and one deep path. This spec pins what that path must
+  * name on a differential chain: file loss, post-commit additions, a
+  * dropped differential base, and a same-length tamper in the own
+  * and in the base copy.
   */
 class MarkerScaleSpec extends AnyFunSuite with SparkSuite {
 
@@ -42,16 +40,8 @@ class MarkerScaleSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  /** checkBackup under a forced threshold (session-conf scoped). */
-  private def checkAt(t: String, tag: String, threshold: Long)
-      : Seq[String] = {
-    spark.conf.set("graft.marker.fanoutThreshold", threshold.toString)
-    try TextOps.checkBackup(spark, t, tag)
-    finally spark.conf.unset("graft.marker.fanoutThreshold")
-  }
-
-  test("distributed and in-memory checkBackup are bit-exact: healthy, " +
-      "lost file, unrecorded file, and dropped differential base") {
+  test("checkBackup names the damage: healthy, lost file, unrecorded " +
+      "file, and dropped differential base") {
     val t = s"ms_bm25_p$pid"
     val all = famAll(t)
     drop(all: _*)
@@ -66,9 +56,8 @@ class MarkerScaleSpec extends AnyFunSuite with SparkSuite {
         t, s"${t}_stats")
       TextOps.backupIndex(spark, t, "b2", Some("b1"))
 
-      // healthy: both paths Nil (threshold 0 forces the join path)
-      assert(checkAt(t, "b2", 0L) === Nil)
-      assert(checkAt(t, "b2", 1000000L) === Nil)
+      // healthy
+      assert(TextOps.checkBackup(spark, t, "b2") === Nil)
 
       // damage 1: delete one committed file from b2's own copy
       val own = s"${t}_bak_b2"
@@ -86,10 +75,8 @@ class MarkerScaleSpec extends AnyFunSuite with SparkSuite {
       val out = fs.create(rogue, true)
       out.write(Array[Byte](1, 2, 3)); out.close()
 
-      val local = checkAt(t, "b2", 1000000L)
-      val dist = checkAt(t, "b2", 0L)
+      val local = TextOps.checkBackup(spark, t, "b2")
       assert(local.nonEmpty)
-      assert(dist === local, s"\ndist:  $dist\nlocal: $local")
       assert(local.exists(_.contains("lost or changed")), local)
       assert(local.exists(_.contains("not in the commit marker")), local)
 
@@ -97,19 +84,15 @@ class MarkerScaleSpec extends AnyFunSuite with SparkSuite {
       fs.delete(rogue, false)
       val back = fs.create(victim, true)
       back.write(victimBytes); back.close()
-      assert(checkAt(t, "b2", 0L) === Nil) // healed, both paths clean
+      assert(TextOps.checkBackup(spark, t, "b2") === Nil) // healed
       spark.sql(s"DROP TABLE ${t}_bak_b1") // base copy gone out-of-band
-      val local2 = checkAt(t, "b2", 1000000L)
-      val dist2 = checkAt(t, "b2", 0L)
+      val local2 = TextOps.checkBackup(spark, t, "b2")
       assert(local2.exists(_.contains("missing (base dropped")), local2)
-      assert(dist2 === local2, s"\ndist:  $dist2\nlocal: $local2")
     } finally drop(all: _*)
   }
 
-  test("DEEP audit: distributed and in-memory rungs are bit-exact on " +
-      "a same-length byte tamper, in the own copy and in a borrowed " +
-      "base copy (late r18 — the deep gather used to stay " +
-      "driver-bound past the threshold the shallow diff honored)") {
+  test("DEEP audit names a same-length byte tamper, in the own copy " +
+      "and in a borrowed base copy") {
     val t = s"ms_deep_p$pid"
     val all = famAll(t)
     drop(all: _*)
@@ -122,14 +105,9 @@ class MarkerScaleSpec extends AnyFunSuite with SparkSuite {
         Seq(902L -> "deep delta content words").toDF("doc_id", "text"),
         t, s"${t}_stats")
       TextOps.backupIndex(spark, t, "b2", Some("b1"))
-      def deepAt(threshold: Long): Seq[String] = {
-        spark.conf.set("graft.marker.fanoutThreshold",
-          threshold.toString)
-        try TextOps.checkBackup(spark, t, "b2", deep = true)
-        finally spark.conf.unset("graft.marker.fanoutThreshold")
-      }
-      assert(deepAt(1000000L) === Nil)
-      assert(deepAt(0L) === Nil)
+      def deep(): Seq[String] =
+        TextOps.checkBackup(spark, t, "b2", deep = true)
+      assert(deep() === Nil)
       def flipOneByte(copy: String): (org.apache.hadoop.fs.Path,
           Array[Byte]) = {
         val loc = new org.apache.hadoop.fs.Path(
@@ -160,22 +138,18 @@ class MarkerScaleSpec extends AnyFunSuite with SparkSuite {
       }
       // tamper in b2's OWN copy
       val (v1, b1bytes) = flipOneByte(s"${t}_bak_b2")
-      val local = deepAt(1000000L)
-      val dist = deepAt(0L)
+      val local = deep()
       assert(local.exists(_.contains("content mismatch")), local)
-      assert(dist === local, s"\ndist:  $dist\nlocal: $local")
       heal(v1, b1bytes)
-      assert(deepAt(0L) === Nil)
+      assert(deep() === Nil)
       // tamper in the BASE copy b2 borrows from — the mismatch must
-      // name the base copy as the holder, identically in both rungs
+      // name the base copy as the holder
       val (v2, b2bytes) = flipOneByte(s"${t}_bak_b1")
-      val local2 = deepAt(1000000L)
-      val dist2 = deepAt(0L)
+      val local2 = deep()
       assert(local2.exists(m => m.contains("content mismatch") &&
         m.contains(s"${t}_bak_b1")), local2)
-      assert(dist2 === local2, s"\ndist:  $dist2\nlocal: $local2")
       heal(v2, b2bytes)
-      assert(deepAt(0L) === Nil)
+      assert(deep() === Nil)
     } finally drop(all: _*)
   }
 

@@ -249,11 +249,8 @@ class QualitySpec extends AnyFunSuite with SparkSuite {
       }.sorted
       assert(files.size === 4)
       val driverRung = Quality.footerSchemas(spark, files)
-      val key = "graft.footer.fanoutThreshold"
-      spark.conf.set(key, "0") // force the Spark-job rung
-      val jobRung =
-        try Quality.footerSchemas(spark, files)
-        finally spark.conf.unset(key)
+      // driverMax = 0 forces the Spark-job rung
+      val jobRung = Quality.footerSchemas(spark, files, driverMax = 0)
       assert(jobRung.map(_.json) === driverRung.map(_.json),
         "the two rungs must be bit-exact")
       val expected = StructType(Seq(
