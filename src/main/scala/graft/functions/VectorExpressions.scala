@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -393,12 +394,14 @@ object VectorFunctions {
   }
 
   /** Register graft's custom expressions for SQL/expr use in this
-    * session.
+    * session. Names the session already holds are kept, so a repeated
+    * call neither replaces them nor logs a replacement warning per name.
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     all.foreach { case (name, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, builder, "built-in")
     }
   }
 }

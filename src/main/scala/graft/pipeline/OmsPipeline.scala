@@ -1,9 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField,
+  StructType}
 
 /** Full-pipeline parity with the reference ETL (SURVEY.md §3): ingest
   * heterogeneous epidemic CSV/JSON, normalize schemas, derive daily deltas
@@ -82,6 +84,11 @@ object OmsPipeline {
       .getOrElse("Inconnue")
   }
 
+  /** [[detectMaladie]] over a column of file paths, for frames that span
+    * several files. The keywords are ASCII letters, which URL-encoding
+    * never escapes, so an encoded path detects like its decoded form. */
+  private val maladieOf = udf(detectMaladie _)
+
   /** Extension-dispatch source (reference ETL_OMS.py:32-36). */
   def extract(spark: SparkSession, path: String): DataFrame =
     if (path.endsWith(".json"))
@@ -127,33 +134,38 @@ object OmsPipeline {
 
   /** Conditional per-country delta derivation (reference
     * ETL_OMS_FINAL.py:64-68): only when the delta column is entirely
-    * null does the cumulative diff kick in. The gate is branch-free: a
-    * 1-row global aggregate broadcast-cross-joined onto the frame, so the
-    * whole derivation stays one lazy plan — no driver actions, nothing to
-    * cache, and at 100× file counts no serialized job launches. The diff
-    * is a window lag ordered by date (the reference relies on file
+    * null does the cumulative diff kick in. "Entirely" is per input
+    * file: `source` names the column that tells a union's files apart,
+    * and the gate is a window count over it, so a whole directory stays
+    * one lazy plan — no driver actions, no per-file jobs. A frame
+    * without `source` is one file, gated in one partition (Spark warns
+    * "No Partition Defined" for it). The diff is a window lag over
+    * (source, country) ordered by date (the reference relies on file
     * order — a latent bug SURVEY.md §7.4.2 resolves with the explicit
     * sort).
     */
-  def deriveDeltas(df: DataFrame,
-      treatZeroAsMissing: Boolean = false): DataFrame = {
+  def deriveDeltas(df: DataFrame, treatZeroAsMissing: Boolean = false,
+      source: Option[String] = None): DataFrame = {
+    val file = source.map(col).toSeq
     // duplicate (country, date) rows (multi-file or province-level
     // inputs) need a value tiebreak or lag() is partition-order
     // dependent; cumulative columns give a deterministic total order up
     // to fully-identical rows (whose lag is then identical anyway)
-    val wTie = Window.partitionBy("country")
+    val wTie = Window.partitionBy(file :+ col("country"): _*)
       .orderBy(col("date"), col("confirmed"), col("deaths"))
+    val wFile = Window.partitionBy(file: _*)
     // v3/v4 gate: column entirely null (ETL_OMS_FINAL.py:64); v5 gate:
     // entirely zero (ETL_OMS_OPERATIONNEL.py:141) — unified as "no
     // meaningful value present"
-    def meaningful(c: String): org.apache.spark.sql.Column =
-      if (treatZeroAsMissing) count(when(col(c) =!= 0.0, 1))
-      else count(col(c))
-    val gates = df.agg(meaningful("new_cases").as("__nc_present"),
-      meaningful("new_deaths").as("__nd_present"))
-    def diffed(cum: String): org.apache.spark.sql.Column =
+    def meaningful(c: String): Column =
+      (if (treatZeroAsMissing) count(when(col(c) =!= 0.0, 1))
+      else count(col(c))).over(wFile)
+    def diffed(cum: String): Column =
       coalesce(col(cum) - lag(cum, 1).over(wTie), lit(0.0))
-    df.crossJoin(broadcast(gates))
+    // the gates are computed first: their shuffle on the file key also
+    // serves the (file, country) lag, so a union shuffles once
+    df.withColumn("__nc_present", meaningful("new_cases"))
+      .withColumn("__nd_present", meaningful("new_deaths"))
       .withColumn("new_cases", when(col("__nc_present") === 0L,
         diffed("confirmed")).otherwise(col("new_cases")))
       .withColumn("new_deaths", when(col("__nd_present") === 0L,
@@ -358,9 +370,16 @@ object OmsPipeline {
     * (see [[saveTableJsonArray]]), not Spark's JSON-lines.
     */
   def saveTable(df: DataFrame, outDir: String, name: String): Unit = {
-    df.coalesce(1).write.mode("overwrite")
-      .option("header", true).csv(s"$outDir/$name.csv")
-    saveTableJsonArray(df, outDir, name)
+    // both formats write one computed frame: unpersisted, each write
+    // would run the table's whole lineage (joins, windows, upserts)
+    // again. A frame the caller already cached is left as it is.
+    val own = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    if (own) df.persist()
+    try {
+      df.coalesce(1).write.mode("overwrite")
+        .option("header", true).csv(s"$outDir/$name.csv")
+      saveTableJsonArray(df, outDir, name)
+    } finally if (own) df.unpersist()
   }
 
   /** S6 shape parity: pandas `to_json(orient="records")` emits ONE JSON
@@ -372,7 +391,6 @@ object OmsPipeline {
     */
   def saveTableJsonArray(df: DataFrame, outDir: String,
       name: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val hconf = df.sparkSession.sparkContext.hadoopConfiguration
     val tmpPath = new Path(outDir, s".${name}_jsonl_tmp")
     // Hadoop FS, not java.io.File: the out dir may be hdfs://, s3a://
@@ -462,7 +480,25 @@ object OmsPipeline {
     * delta gate, 6dp coordinate cleanup.
     */
   def standardizeOperational(raw: DataFrame, disease: String,
-      population: Option[Double] = None): DataFrame = {
+      population: Option[Double] = None): DataFrame =
+    operationalDeltas(operationalRows(raw, lit(disease), population))
+
+  /** The standardized columns of a v5 run, in output order. */
+  private val operationalCols: Seq[String] =
+    ("country" +: "date" +: measureCols) ++
+      Seq("latitude", "longitude", "pandemic")
+
+  /** The column that tells the files of a directory run apart. */
+  private val SourceCol = "__source"
+
+  /** [[standardizeOperational]] up to the delta gate, projected onto
+    * [[operationalCols]] (and [[SourceCol]] when `raw` carries it), so
+    * frames of different headers union by name. The date chain parses
+    * `string(date)` and the measures are cast to double, so an
+    * all-string read and a schema-inferred one give the same rows.
+    */
+  private def operationalRows(raw: DataFrame, disease: Column,
+      population: Option[Double]): DataFrame = {
     val mapped = SchemaMapper.applyMapping(raw, v5ColumnSynonyms)
     val complete = (measureCols ++ Seq("latitude", "longitude"))
       .foldLeft(mapped) { (df, c) =>
@@ -477,25 +513,67 @@ object OmsPipeline {
     val dated = complete.withColumn("date", parseDate)
       .na.drop(Seq("date"))
       .filter(col("date") >= lit("2019-01-01").cast("timestamp"))
-    val converted = cleanCoordinates(convertPerCapita(dated, population))
-      .withColumn("pandemic", lit(disease))
-    deriveDeltas(converted, treatZeroAsMissing = true)
-      .select(("country" +: "date" +: measureCols :+ "latitude" :+
-        "longitude" :+ "pandemic").map(col): _*)
+    cleanCoordinates(convertPerCapita(dated, population))
+      .withColumn("pandemic", disease)
+      .select((operationalCols ++ raw.columns.filter(_ == SourceCol))
+        .map(col): _*)
+  }
+
+  /** The all-zero delta gate over [[operationalRows]]' output, per file
+    * when it carries [[SourceCol]]. */
+  private def operationalDeltas(rows: DataFrame): DataFrame =
+    deriveDeltas(rows, treatZeroAsMissing = true,
+      source = Some(SourceCol).filter(rows.columns.contains))
+      .select(operationalCols.map(col): _*)
+
+  /** The column names `spark.read.option("header", true).csv(path)`
+    * gives the file, read on the driver with no Spark job: the first
+    * non-blank line (a UTF-8 byte-order mark dropped, as Hadoop's line
+    * reader does), parsed by univocity with Spark's CSV settings, and
+    * empty or duplicate names made safe the way Spark names them. Empty
+    * for a file with no such line.
+    */
+  private[graft] def csvHeader(spark: SparkSession, fs: FileSystem,
+      path: Path): Seq[String] = {
+    import org.apache.spark.sql.catalyst.csv.CSVOptions
+    import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+    val conf = spark.sessionState.conf
+    val opts = new CSVOptions(Map("header" -> "true"),
+      conf.csvColumnPruning, conf.sessionLocalTimeZone)
+    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+      fs.open(path), java.nio.charset.StandardCharsets.UTF_8))
+    try {
+      val first = Option(in.readLine()).map(_.stripPrefix("\uFEFF"))
+      (first.iterator ++
+        Iterator.continually(in.readLine()).takeWhile(_ != null))
+        .find(_.trim.nonEmpty)
+        .map { line =>
+          val row = new com.univocity.parsers.csv.CsvParser(
+            opts.asParserSettings).parseLine(line)
+          CSVUtils.makeSafeHeader(row, conf.caseSensitiveAnalysis, opts)
+            .toSeq
+        }
+        .getOrElse(Nil)
+    } finally in.close()
   }
 
   /** EP3/v5 whole-directory run (reference ETL_OMS_OPERATIONNEL.py:218-369)
-    * in one pass: per-file standardize (heterogeneous headers force
-    * per-file plans; the frames then union), skip-and-count for unmappable
-    * files (ETL_OMS_OPERATIONNEL.py:250-253), single cached frame instead
-    * of the reference's two-pass re-extraction. `regionGeo` carries the
-    * U3 first-observation-wins lat/long enrichment
-    * (ETL_OMS_OPERATIONNEL.py:320-352) as a broadcast join instead of a
-    * generated CASE-WHEN UPDATE.
+    * in one pass. Each CSV's header is read on the driver
+    * ([[csvHeader]]), and the files that share a header are read by one
+    * all-string scan with that header as its schema. Each JSON file
+    * keeps its own schema-inferring read: one record's keys cannot stand
+    * for a file's. Files whose mapped columns lack country or date are
+    * skipped and counted (ETL_OMS_OPERATIONNEL.py:250-253); a skipped CSV
+    * costs no Spark job. The scans union, the delta gate runs once over
+    * the union, per file ([[deriveDeltas]]), and the result is one
+    * cached frame instead of the reference's two-pass re-extraction.
+    * `regionGeo` carries the U3 first-observation-wins lat/long
+    * enrichment (ETL_OMS_OPERATIONNEL.py:320-352) as a broadcast join
+    * instead of a generated CASE-WHEN UPDATE.
     */
   final case class OperationalResult(processed: Seq[String],
       skipped: Seq[String], star: StarSchema, regionGeo: DataFrame,
-      private val cached: DataFrame) {
+      private[graft] val cached: DataFrame) {
     /** Release the run's cached union frame once the star/geo outputs
       * have been written — long-lived sessions otherwise accumulate dead
       * cache blocks.
@@ -515,8 +593,8 @@ object OmsPipeline {
     * the listed files (len + mtime) at entry, EAGERLY materialize the
     * cached union (closing the read window), re-fingerprint, and
     * REPLAN from scratch when any input changed mid-read. A feed that
-    * rewrites a landing file between the schema-inferring extract and
-    * the first action used to be able to serve a silently mixed run
+    * rewrites a landing file between the header read and the first
+    * action used to be able to serve a silently mixed run
     * (half old file, half new); now the run either reads one
     * consistent directory state or retries onto the next one — the
     * repeatable-read verb on the reference's own workload. Bounded
@@ -547,7 +625,7 @@ object OmsPipeline {
       : Either[Seq[String], OperationalResult] = {
     // Hadoop FS, not java.io.File — the ingest dir may be hdfs://,
     // s3a:// etc. (same rule saveTableJsonArray follows for its out dir)
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
+    val dirPath = new Path(dir)
     val hfs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!hfs.exists(dirPath) || !hfs.getFileStatus(dirPath).isDirectory)
       throw new IllegalArgumentException(s"not a directory: $dir")
@@ -566,8 +644,8 @@ object OmsPipeline {
     val before = fingerprint()
     val files = before.keys.toSeq.sorted
     // a vanished file must surface as a REPLAN anywhere in the read
-    // window — the schema-inferring extracts do eager driver-side
-    // I/O too, so the guard covers them, not just the cache
+    // window — the header reads and the JSON extracts do eager
+    // driver-side I/O too, so the guard covers them, not just the cache
     // materialization (late r18, review #2: the first fix only
     // wrapped all.count(), and a file deleted during the per-file
     // extract loop still crashed)
@@ -581,26 +659,38 @@ object OmsPipeline {
     var cached: org.apache.spark.sql.DataFrame = null
     val loaded =
       try {
-        val results = files.map { path =>
-          val raw = extract(spark, path)
+        // one scan per CSV header and one per JSON file; opening a scan
+        // with an explicit schema starts no job, so an unmappable CSV
+        // costs none
+        val (jsons, csvs) = files.partition(_.endsWith(".json"))
+        val byHeader = csvs.map(p => p -> csvHeader(spark, hfs, new Path(p)))
+          .filter(_._2.nonEmpty).groupMap(_._2)(_._1).toSeq
+          .sortBy(_._2.head)
+        val scans = byHeader.map { case (header, paths) =>
+          paths -> spark.read
+            .schema(StructType(header.map(StructField(_, StringType))))
+            .option("header", true).csv(paths: _*)
+        } ++ jsons.map(p => Seq(p) -> extract(spark, p))
+        val mappable = scans.filter { case (_, raw) =>
           val mapped = SchemaMapper.applyMapping(raw, v5ColumnSynonyms)
-          val ok = mapped.columns.contains("country") &&
+          mapped.columns.contains("country") &&
             mapped.columns.contains("date")
-          (path, ok,
-            if (ok) Some(standardizeOperational(raw, detectMaladie(path)))
-            else None)
         }
-        val frames = results.flatMap(_._3)
-        cached = frames.reduceOption(_.unionByName(_))
+        val rows = mappable.map { case (_, raw) =>
+          operationalRows(
+            raw.withColumn(SourceCol, col("_metadata.file_path")),
+            maladieOf(col(SourceCol)), population = None)
+        }
+        cached = operationalDeltas(rows.reduceOption(_.unionByName(_))
           .getOrElse(
-            throw new IllegalStateException("no mappable files"))
+            throw new IllegalStateException("no mappable files")))
           .cache()
         onUnionBuilt()
         // materialize NOW — every downstream pass serves from the
         // cache, so the consistency the re-fingerprint proves covers
         // them all
         cached.count()
-        Right(results)
+        Right(mappable.flatMap(_._1).toSet)
       } catch {
         case t: Throwable if vanished(t) =>
           if (cached != null) cached.unpersist()
@@ -617,12 +707,11 @@ object OmsPipeline {
           }
           throw t
       }
-    val results = loaded match {
+    val mappedFiles = loaded match {
       case Left(changed) => return Left(changed)
       case Right(r) => r
     }
-    val processed = results.collect { case (p, true, _) => p }
-    val skipped = results.collect { case (p, false, _) => p }
+    val (processed, skipped) = files.partition(mappedFiles)
     val all = cached
     val after = fingerprint()
     val changed = files.filter(p => !after.get(p).contains(before(p)))

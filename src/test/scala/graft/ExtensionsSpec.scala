@@ -95,4 +95,25 @@ class ExtensionsSpec extends AnyFunSuite with SparkSuite {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext)
   }
+
+  test("VectorFunctions.register installs every function once per " +
+      "session: a repeated call keeps the registrations, a new session " +
+      "gets all of them") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val names = graft.functions.VectorFunctions.all.map(_._1)
+    def infos(s: org.apache.spark.sql.SparkSession) = names.map(n =>
+      s.sessionState.functionRegistry.lookupFunction(FunctionIdentifier(n)))
+    val fresh = spark.newSession()
+    graft.functions.VectorFunctions.register(fresh)
+    val first = infos(fresh)
+    assert(first.forall(_.isDefined))
+    graft.functions.VectorFunctions.register(fresh)
+    // a replacement would install a new ExpressionInfo per name
+    assert(infos(fresh).zip(first).forall { case (a, b) => a.get eq b.get })
+    val next = fresh.newSession()
+    graft.functions.VectorFunctions.register(next)
+    assert(infos(next).forall(_.isDefined))
+    assert(next.sql("SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D))")
+      .head().getDouble(0) === 11.0)
+  }
 }
