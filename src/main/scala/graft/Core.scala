@@ -391,14 +391,23 @@ object Rank {
   }
 }
 
-/** Session defaults shared by Verify/Bench/tests: UTC (oracle date parity),
-  * ANSI off (the reference's pandas `errors="coerce"` null-on-failure
-  * semantics — SURVEY.md §2.7 F1/F5), shuffle partitions sized for local
-  * mode, nanosAsLong for the events table.
+/** The one place a session gets graft.
+  *
+  * `builder` sets the session defaults shared by Verify/Bench/Main/tests:
+  * UTC (oracle date parity), ANSI off (the reference's pandas
+  * `errors="coerce"` null-on-failure semantics — SURVEY.md §2.7 F1/F5),
+  * shuffle partitions sized for local mode, nanosAsLong for the events
+  * table. It installs [[graft.extensions.GraftExtensions]] through
+  * `withExtensions` (not the `spark.sql.extensions` conf, so sessions
+  * graft did not build stay bare), so the session and every
+  * `newSession()`/clone of it hold graft's functions, rewrite rules and
+  * as-of planner strategy from birth. `ensure` arms a session graft did
+  * not build.
   */
 object GraftSession {
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =
     SparkSession.builder()
+      .withExtensions(new graft.extensions.GraftExtensions)
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.warehouse.dir",
@@ -424,4 +433,24 @@ object GraftSession {
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
       .config("spark.ui.enabled", "false")
+
+  /** Give `spark` graft's SQL functions and the as-of planner strategy,
+    * unless it already holds them — from [[builder]], from
+    * `spark.sql.extensions=graft.extensions.GraftExtensions`, or from an
+    * earlier call. Idempotent. The rewrite rules are not installed: they
+    * only speed up plans graft's own queries do not write.
+    */
+  def ensure(spark: SparkSession): Unit = {
+    graft.functions.VectorFunctions.register(spark)
+    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .experimental
+    // read-modify-write on a session-shared Seq — guard it, or two
+    // first-use threads can lose each other's strategies
+    exp.synchronized {
+      if (!spark.sessionState.planner.strategies
+          .contains(graft.plans.AsOfJoinStrategy))
+        exp.extraStrategies =
+          exp.extraStrategies :+ graft.plans.AsOfJoinStrategy
+    }
+  }
 }

@@ -23,9 +23,15 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_delta")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each arms
+    * its session first ([[GraftSession.ensure]]): the caller's session
+    * need not come from [[GraftSession.builder]].
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map(q => q.name -> q.fn).toMap
+    all.map(q => q.name -> { (s: SparkSession, d: String) =>
+      GraftSession.ensure(s)
+      q.fn(s, d)
+    }).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.

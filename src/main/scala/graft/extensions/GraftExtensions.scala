@@ -82,10 +82,13 @@ object RewriteIntersectSize extends Rule[LogicalPlan] {
     }
 }
 
-/** Session extension wiring: `--conf spark.sql.extensions=
-  * graft.extensions.GraftExtensions` gives any session the graft
-  * functions and the HOF-dot / intersect-size rewrites without code
-  * changes.
+/** Session extension wiring: graft's functions, the HOF-dot /
+  * intersect-size rewrites and the as-of planner strategy.
+  * `graft.GraftSession.builder` installs it, so every session graft
+  * builds (and each `newSession()` of it) has them from birth. Any other
+  * session gets the same with `--conf spark.sql.extensions=
+  * graft.extensions.GraftExtensions`, or the functions and strategy
+  * (not the rewrites) with `graft.GraftSession.ensure`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

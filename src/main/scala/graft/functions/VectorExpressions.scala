@@ -284,8 +284,8 @@ case class HammingWords(left: Expression, right: Expression)
 
 object VectorFunctions {
   /** Single source of truth for graft's custom functions — consumed by
-    * both per-session `register` and the GraftExtensions injection path
-    * so the two can't drift.
+    * both `register` and the GraftExtensions injection path so the two
+    * can't drift.
     */
   val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
     // every entry is arity-checked: without it, extra arguments are
@@ -393,9 +393,13 @@ object VectorFunctions {
     }
   }
 
-  /** Register graft's custom expressions for SQL/expr use in this
-    * session. Names the session already holds are kept, so a repeated
-    * call neither replaces them nor logs a replacement warning per name.
+  /** Register graft's custom expressions for SQL/expr use in a bare
+    * session: one built neither by `graft.GraftSession.builder` nor with
+    * `spark.sql.extensions=graft.extensions.GraftExtensions`, which both
+    * install them already. `graft.GraftSession.ensure` calls it. The
+    * functions are session-temporary: `newSession()` does not inherit
+    * them. Names the session already holds are kept, so a repeated call
+    * neither replaces them nor logs a replacement warning per name.
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry

@@ -177,7 +177,6 @@ object Aggregates {
     // accuracy is asserted in KmvSpec.
     QDef("q_kmv_distinct",
       (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val t = Tables(s, d, "lineitem")
         // ONE scan, dedup-then-count (r19) — q_approx_distinct's
         // reasoning verbatim: the KMV sketch keeps the k smallest
@@ -225,7 +224,6 @@ object Aggregates {
     // handles million-cardinality columns with bounded memory at 100 TB.
     QDef("q_heavy_hitters",
       (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         Tables.events(s, d)
           .groupBy(expr("user_id % 4").as("bucket"))
           .agg(expr("graft_heavy_hitters(event_type, 16)").as("hh"))

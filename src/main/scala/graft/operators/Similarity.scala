@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{Det, QDef, Tables}
-import graft.functions.VectorFunctions
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -590,7 +589,6 @@ object AnnIndex {
       payloadCols: Seq[String] = Nil): Unit =
       TO.withBuildLock(emb.sparkSession) {
     val s = emb.sparkSession
-    graft.functions.VectorFunctions.register(s)
     TO.clearOrphanLocation(s, table)
     TO.clearOrphanLocation(s, table + "_vec")
     // rebuild-over-upserted-family: rebuilt rows ride at the top
@@ -646,7 +644,6 @@ object AnnIndex {
     */
   def topK(s: SparkSession, table: String, isQuery: Column => Column,
       k: Int, matchCols: Seq[String] = Nil): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     // ONE tombstone list serves the whole family — both the band
     // postings and the payload twin subtract it (no-op without
     // deletes; see TextOps.tombstone for the lifecycle)
@@ -717,7 +714,6 @@ object AnnIndex {
     // IS the full writer set.
     TO.withBuildLock(emb.sparkSession) {
     val s = emb.sparkSession
-    graft.functions.VectorFunctions.register(s)
     TO.ensureIndexConfig(s, table,
       Seq("dim" -> dim, "nbands" -> nBands, "bits" -> bits,
         "planemod" -> Ann.planeModulus(nBands * bits, dim)))
@@ -841,7 +837,6 @@ object AnnIndex {
     * describe. */
   private def rebuildBandsFromPayload(s: SparkSession,
       table: String): Unit = {
-    graft.functions.VectorFunctions.register(s)
     val cfg = TO.readIndexConfig(s, table).getOrElse(
       throw new IllegalStateException(
         s"rebuildBandsFromPayload: no config pin ${table}_cfg"))
@@ -852,7 +847,6 @@ object AnnIndex {
     TO.rewriteBucketed(s, table, guard = TO.FoldGuard.Orphan,
         transform = df => {
       val s2 = df.sparkSession
-      graft.functions.VectorFunctions.register(s2)
       val live = TO.exceptTombstones(s2.table(table + "_vec"), s2,
         table + "_del", "vec_id")
       val gen =
@@ -917,7 +911,6 @@ object AnnIndex {
   def scoreExternal(queries: DataFrame, s: SparkSession, table: String,
       nBands: Int = NBands, bits: Int = Bits,
       dim: Int = CosSim.EmbDim): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val (nb, bt, dm, pm) = probeBanding("scoreExternal", table,
       TO.readIndexConfig(s, table), nBands, bits, dim)
     val bands = TO.exceptTombstones(s.table(table), s,
@@ -985,7 +978,6 @@ object AnnIndex {
   def scoreAsOf(queries: DataFrame, s: SparkSession, table: String,
       tag: String, nBands: Int = NBands, bits: Int = Bits,
       dim: Int = CosSim.EmbDim): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val mf = s"${table}_mf_$tag"
     require(s.catalog.tableExists(mf), s"scoreAsOf: no manifest $mf")
     val manifest = TO.readManifest(s, mf)
@@ -1055,7 +1047,6 @@ object IvfIndex {
       dim: Int = CosSim.EmbDim, iters: Int = Iters,
       nBuckets: Int = 8): Unit = TO.withBuildLock(emb.sparkSession) {
     val s = emb.sparkSession
-    graft.functions.VectorFunctions.register(s)
     TO.clearOrphanLocation(s, table)
     TO.clearOrphanLocation(s, table + "_cent")
     // rebuilt rows ride at the top surviving finite barrier, not
@@ -1101,7 +1092,6 @@ object IvfIndex {
     // maintenance-swap file-listing race)
     TO.withBuildLock(emb.sparkSession) {
     val s = emb.sparkSession
-    graft.functions.VectorFunctions.register(s)
     require(s.catalog.tableExists(table + "_cent"),
       s"IvfIndex.append: no stored quantizer ${table}_cent — build " +
         "with IvfIndex.write first (append never retrains)")
@@ -1174,12 +1164,10 @@ object IvfIndex {
     },
     heals = Seq(IndexFamily.Heal(_.contains("unknown cell"),
       "re-assigned rows with the stored quantizer", s => {
-        graft.functions.VectorFunctions.register(s)
         val cents = loadCentroids(s, table)
         // repair rewrite: FoldGuard.Orphan (see the Ann heal)
         TO.rewriteBucketed(s, table, guard = TO.FoldGuard.Orphan,
           transform = df => {
-          graft.functions.VectorFunctions.register(df.sparkSession)
           val withG =
             if (df.columns.contains("gen")) df
             else df.withColumn("gen", lit(0L))
@@ -1204,7 +1192,6 @@ object IvfIndex {
     * (their sentinel cosine is a convention, not a distance).
     */
   def quantizationError(s: SparkSession, table: String): Double = {
-    graft.functions.VectorFunctions.register(s)
     val cents = s.table(table + "_cent")
       .select(col("cell"), col("c").as("cv"))
       .withColumn("cnrm", expr("sqrt(graft_dot(cv, cv))"))
@@ -1239,7 +1226,6 @@ object IvfIndex {
       nBuckets: Int = 8,
       guard: TO.FoldGuard = TO.FoldGuard.Refuse): Unit = {
     val s = emb.sparkSession
-    graft.functions.VectorFunctions.register(s)
     TO.withBuildLock(s) {
       TO.recoverGroupSwap(s, table)
       TO.recoverSwap(s, table)
@@ -1287,7 +1273,6 @@ object IvfIndex {
   def topK(s: SparkSession, table: String,
       isQuery: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
       k: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val cells = TO.exceptTombstones(s.table(table), s,
       table + "_del", "vec_id")
     val q = cells.filter(isQuery(col("vec_id")))
@@ -1319,7 +1304,6 @@ object IvfIndex {
   def topKMultiProbe(s: SparkSession, table: String,
       isQuery: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
       k: Int, nprobe: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val cells = TO.exceptTombstones(s.table(table), s,
       table + "_del", "vec_id")
     val q = cells.filter(isQuery(col("vec_id")))
@@ -1340,7 +1324,6 @@ object IvfIndex {
     */
   def scoreExternal(queries: DataFrame, s: SparkSession, table: String,
       k: Int, nprobe: Int = 1): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val cells = TO.exceptTombstones(s.table(table), s,
       table + "_del", "vec_id")
     val cents = s.table(table + "_cent")
@@ -1361,7 +1344,6 @@ object IvfIndex {
     * restored copy). Audit path, not the serving path. */
   def scoreAsOf(queries: DataFrame, s: SparkSession, table: String,
       tag: String, k: Int, nprobe: Int = 1): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val mf = s"${table}_mf_$tag"
     require(s.catalog.tableExists(mf), s"scoreAsOf: no manifest $mf")
     val manifest = TO.readManifest(s, mf)
@@ -1391,7 +1373,6 @@ object IvfIndex {
     */
   def scoreExternalCandidates(queries: DataFrame, s: SparkSession,
       table: String, nprobe: Int = 1): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val cells = TO.exceptTombstones(s.table(table), s,
       table + "_del", "vec_id")
     val cents = loadCentroids(s, table)
@@ -1601,7 +1582,6 @@ object PqIndex {
   private def trainCodebookTo(emb: DataFrame, cbTable: String, m: Int,
       subDim: Int, ks: Int): Unit = {
     val s = emb.sparkSession
-    graft.functions.VectorFunctions.register(s)
     TO.clearOrphanLocation(s, cbTable)
     val e = Ann.prepStrict(emb, m * subDim).persist()
     try {
@@ -1661,7 +1641,6 @@ object PqIndex {
     // maintenance-swap file-listing race)
     TO.withBuildLock(emb.sparkSession) {
     val s = emb.sparkSession
-    graft.functions.VectorFunctions.register(s)
     require(s.catalog.tableExists(table + "_cb"),
       s"PqIndex.append: no stored codebook ${table}_cb — build with " +
         "PqIndex.write first (append never retrains)")
@@ -1729,7 +1708,6 @@ object PqIndex {
 
   def topK(s: SparkSession, table: String, queries: DataFrame,
       k: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     adcTopK(s.table(table + "_cb"),
       TO.exceptTombstones(s.table(table), s, table + "_del",
         "vec_id"),
@@ -1764,7 +1742,6 @@ object PqIndex {
   private def asOfAdc(queries: DataFrame, s: SparkSession,
       table: String, tag: String, k: Int,
       cand: Option[DataFrame]): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val mf = s"${table}_mf_$tag"
     require(s.catalog.tableExists(mf), s"scoreAsOf: no manifest $mf")
     val manifest = TO.readManifest(s, mf)
@@ -1848,7 +1825,6 @@ object PqIndex {
     * cost is O(Σ|cell| · M), never corpus-wide. */
   def topKPairs(s: SparkSession, table: String, queries: DataFrame,
       cand: DataFrame, k: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     adcTopK(s.table(table + "_cb"),
       TO.exceptTombstones(s.table(table), s, table + "_del",
         "vec_id"),
@@ -1881,7 +1857,6 @@ object PqIndex {
     */
   def quantizationError(s: SparkSession, table: String,
       emb: DataFrame): Double = {
-    graft.functions.VectorFunctions.register(s)
     val cb = s.table(table + "_cb")
     val (m, subDim) = cbGrid(cb)
     val e = Ann.prepStrict(emb, m * subDim)
@@ -1931,7 +1906,6 @@ object PqIndex {
   def refresh(emb: DataFrame, table: String, nBuckets: Int = 8,
       guard: TO.FoldGuard = TO.FoldGuard.Refuse): Unit = {
     val s = emb.sparkSession
-    graft.functions.VectorFunctions.register(s)
     TO.withBuildLock(s) {
       TO.recoverGroupSwap(s, table)
       TO.recoverSwap(s, table)
@@ -2150,7 +2124,6 @@ object BqIndex {
     // maintenance-swap file-listing race)
     TO.withBuildLock(emb.sparkSession) {
     val s = emb.sparkSession
-    graft.functions.VectorFunctions.register(s)
     TO.ensureIndexConfig(s, table, Seq("dim" -> dim))
     TO.clearOrphanLocation(s, table)
     Ann.prepStrict(TO.exceptHeld(emb, s, table + "_hold",
@@ -2202,7 +2175,6 @@ object BqIndex {
     * probe plan reads nothing but stored indexes (PlanSpec-gated). */
   def topK(s: SparkSession, table: String, vecTable: String,
       isQuery: Column => Column, k: Int, c: Int = C): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     // tombstone-filter the SIGNATURE side only: queries and candidates
     // both come off it, so a deleted id can neither ask nor answer —
     // the payload join on surviving candidates can't resurrect one
@@ -2247,7 +2219,6 @@ object BqIndex {
   def scoreExternal(queries: DataFrame, s: SparkSession, table: String,
       vecTable: String, k: Int, c: Int = C,
       dim: Int = CosSim.EmbDim): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val dm = TO.readIndexConfig(s, table).map(_("dim")).getOrElse(dim)
     val sigs = TO.exceptTombstones(s.table(table), s,
       table + "_del", "vec_id")
@@ -2269,7 +2240,6 @@ object BqIndex {
   def scoreAsOf(queries: DataFrame, s: SparkSession, table: String,
       tag: String, vecs: DataFrame, k: Int, c: Int = C,
       dim: Int = CosSim.EmbDim): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val mf = s"${table}_mf_$tag"
     require(s.catalog.tableExists(mf), s"scoreAsOf: no manifest $mf")
     val manifest = TO.readManifest(s, mf)
@@ -2486,7 +2456,6 @@ object SqIndex {
     * tiebreaks. */
   def topK(s: SparkSession, table: String, isQuery: Column => Column,
       k: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = TO.exceptTombstones(s.table(table), s,
         table + "_del", "vec_id")
       .withColumn("vq", expr(vqExpr))
@@ -2518,7 +2487,6 @@ object SqIndex {
     */
   def scoreExternal(queries: DataFrame, s: SparkSession, table: String,
       k: Int, dim: Int = CosSim.EmbDim): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val dm = TO.readIndexConfig(s, table).map(_("dim")).getOrElse(dim)
     val codes = TO.exceptTombstones(s.table(table), s,
       table + "_del", "vec_id")
@@ -2533,7 +2501,6 @@ object SqIndex {
     * path, not the serving path. */
   def scoreAsOf(queries: DataFrame, s: SparkSession, table: String,
       tag: String, k: Int, dim: Int = CosSim.EmbDim): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val mf = s"${table}_mf_$tag"
     require(s.catalog.tableExists(mf), s"scoreAsOf: no manifest $mf")
     val manifest = TO.readManifest(s, mf)
@@ -2673,7 +2640,6 @@ object Similarity {
     // X3: brute-force top-5 cosine neighbors for query vectors vec_id<10.
     QDef("q_simsearch",
       (s, d) => {
-        VectorFunctions.register(s)
         val e = Tables(s, d, "embeddings")
           .select(col("vec_id"), CosSim.canon(col("embedding"), CosSim.EmbDim).as("v"))
           .withColumn("nrm", expr(norm))
@@ -2709,7 +2675,6 @@ object Similarity {
     // construction (bucket-boundary neighbors are missed).
     QDef("q_simsearch_lsh",
       (s, d) => {
-        VectorFunctions.register(s)
         // driver-computed literal planes — the transform(sequence(...))
         // form would rebuild each plane per row, interpreted
         def planeVec(p: Int) =
@@ -2829,7 +2794,6 @@ object Similarity {
     // return few/no rows when no near-dups exist.
     QDef("q_embed_dedup",
       (s, d) => {
-        VectorFunctions.register(s)
         val e = Tables(s, d, "embeddings")
           .select(col("vec_id"), col("label"),
             CosSim.canon(col("embedding"), CosSim.EmbDim).as("v"))
@@ -2887,7 +2851,6 @@ object Similarity {
     // normedVectorsAndCentroids.
     QDef("q_embed_outliers",
       (s, d) => {
-        VectorFunctions.register(s)
         val (v, cent) = normedVectorsAndCentroids(s, d)
         v.join(broadcast(cent), "label")
           .withColumn("cos_sim", centCos)
@@ -2911,7 +2874,6 @@ object Similarity {
     // argmax — the corpus never self-joins.
     QDef("q_embed_assign",
       (s, d) => {
-        VectorFunctions.register(s)
         val (v, cent) = normedVectorsAndCentroids(s, d)
         val w = Window.partitionBy("vec_id")
           .orderBy(col("cos_sim").desc, col("c_label").asc)
@@ -2974,7 +2936,6 @@ object Similarity {
     // (decimal-grid exact in both engines).
     QDef("q_pq",
       (s, d) => {
-        VectorFunctions.register(s)
         val q = Tables(s, d, "embeddings")
           .filter(col("vec_id") < 10)
           .select(col("vec_id"),
@@ -2994,7 +2955,6 @@ object Similarity {
     // QDef is their composition, hash-gated end to end.
     QDef("q_ivfpq",
       (s, d) => {
-        VectorFunctions.register(s)
         val cells = s.table(IvfIndex.ivfIndex(s, d))
         val q = cells.filter(col("vec_id") < 10)
           .select(col("vec_id").as("q_id"), col("v"),
@@ -3037,7 +2997,6 @@ object Similarity {
     // corpus). Emits the KEPT rows (vec_id, cell).
     QDef("q_semdd",
       (s, d) => {
-        VectorFunctions.register(s)
         val cells = s.table(semDedupIndex(s, d))
         val a = cells.select(col("vec_id").as("a_id"),
           col("v").as("qv"), col("nrm").as("qn"),
@@ -3103,7 +3062,6 @@ object Similarity {
     QDef("q_rrf",
       (s, d) => {
         import graft.operators.{TextOps => TO}
-        VectorFunctions.register(s)
         val qt = broadcast(Tables(s, d, "documents")
           .filter(col("doc_id") < 3)
           .select(col("doc_id").as("q_id"),

@@ -296,6 +296,9 @@ object TextOps {
     // cannot de-adapt queries planned concurrently on the caller's
     // session
     val s2 = s.newSession()
+    // a bare session's newSession() drops what ensure armed it with
+    // (its temp functions and as-of strategy); the transforms need them
+    graft.GraftSession.ensure(s2)
     s2.conf.set("spark.sql.adaptive.enabled", "false")
     // read the FILES, not the catalog table: the bucketed scan
     // already claims HashPartitioning(bucketCols, n), which makes
@@ -4528,8 +4531,8 @@ object TextOps {
   /** (doc_id, toks, band1, band2) for any documents-shaped frame —
     * stateless per-row expressions, so it works identically on a STREAM
     * (StreamingOps.streamingNearDedup computes the same signatures on
-    * arriving micro-batches). Callers must have VectorFunctions
-    * registered.
+    * arriving micro-batches). The session must hold graft's functions
+    * (see [[graft.GraftSession]]).
     */
   private[graft] def sigWithToks(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
@@ -4546,7 +4549,6 @@ object TextOps {
   private def bandSignatures(s: org.apache.spark.sql.SparkSession,
       d: String): (org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame) = {
-    graft.functions.VectorFunctions.register(s)
     val docs = Tables(s, d, "documents").repartition(col("doc_id"))
     val bands = sigWithToks(docs).drop("toks").persist()
     (docs, bands)
@@ -4609,7 +4611,6 @@ object TextOps {
     */
   private[graft] def bandIndexRows(docs: org.apache.spark.sql.DataFrame,
       idAs: String, toksAs: String): org.apache.spark.sql.DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     sigWithToks(docs).select(
       explode(array(
         concat(lit("1"), col("band1")),
@@ -5287,7 +5288,6 @@ object TextOps {
     // X4: MinHash signatures over word-3-gram shingles (4 seeds, 2 bands).
     QDef("q_minhash",
       (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         Tables(s, d, "documents")
           .withColumn("lanes", expr("graft_minhash_lanes(text)"))
           .select(
@@ -5561,7 +5561,6 @@ object TextOps {
     // TextExprSpec proves bit-equality to that form.
     QDef("q_simhash",
       (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         Tables(s, d, "documents")
           .select(col("doc_id"), expr("graft_simhash16(text)").as("simhash"))
           .withColumn("band_hi", substring(col("simhash"), 1, 8))

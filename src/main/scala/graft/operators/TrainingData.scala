@@ -140,7 +140,6 @@ object TrainingData {
   def curate(docs: org.apache.spark.sql.DataFrame,
       isBenchmark: Column => Column,
       isCorpus: Column => Column): org.apache.spark.sql.DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     val q = curateGate(docs)
     val wDd = Window.partitionBy(md5(col("text")))
       .orderBy(col("doc_id"))
@@ -262,7 +261,6 @@ object TrainingData {
     // overlap size per contaminated doc.
     QDef("q_contamination",
       (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         Tables(s, d, "documents")
           .select(col("doc_id"),
             explode(expr("graft_shingle_set(text)")).as("sh"))
@@ -341,7 +339,6 @@ object TrainingData {
     // per-row, zero shuffle.
     QDef("q_repetition",
       (s, d) => {
-        graft.functions.VectorFunctions.register(s)
         val nSh = size(expr("graft_shingles(text)"))
         val nUniq = size(expr("graft_shingle_set(text)"))
         Tables(s, d, "documents").select(

@@ -14,9 +14,12 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   * window, which forces both sides through one unioned schema). This is
   * the full tier-(c) Catalyst extension from SURVEY.md §7.3: a resolved
   * logical node + a planner [[SparkStrategy]] + a sort-merge physical
-  * operator, registered per session (`AsOfJoin.join` adds the strategy to
-  * `spark.experimental.extraStrategies`) or globally via
-  * `spark.sql.extensions=graft.extensions.GraftExtensions`.
+  * operator. The strategy comes with [[graft.extensions.GraftExtensions]]
+  * (installed by `graft.GraftSession.builder`, or by
+  * `spark.sql.extensions=graft.extensions.GraftExtensions`); a session
+  * built without either gets it from `graft.GraftSession.ensure`.
+  * `AsOfJoin.join` only builds the node: on a session without the
+  * strategy, planning the result fails.
   *
   * Semantics: for every left row, the LAST right row with the same key
   * and `rightTime <= leftTime` (inclusive — DuckDB `ASOF JOIN ... ON
@@ -175,13 +178,6 @@ object AsOfJoin {
       rightTimeCol: String): DataFrame = {
     val spark = left.sparkSession
       .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    // registration is read-modify-write on a session-shared Seq — guard
-    // it, or two first-use threads can lose each other's strategies
-    spark.experimental.synchronized {
-      if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
     val lPlan = left.queryExecution.analyzed
     // fresh exprIds for every right-side attribute (see scaladoc)
     val rAliases = right.queryExecution.analyzed.output

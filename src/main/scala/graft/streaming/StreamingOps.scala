@@ -284,7 +284,6 @@ object StreamingOps {
   def streamingNearDedup(spark: SparkSession, sfDir: String,
       queryName: String = "stream_neardedup",
       indexTable: Option[String] = None): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val bound = graft.operators.TrainingData.TrainBoundary
     val bucket = graft.operators.TrainingData
       .hashPrefixOf(col("doc_id"), 2)
@@ -490,7 +489,6 @@ object StreamingOps {
     val table = graft.operators.PqIndex.pqIndex(spark, sfDir)
     microBatchProbe(spark, queriesDir, outTable, b => {
       val s = b.sparkSession
-      graft.functions.VectorFunctions.register(s)
       // PqIndex.topK's query contract is (vec_id, v) exact vectors;
       // adapt the external (q_id, embedding) shape through the same
       // checked prep every external probe uses

@@ -32,7 +32,6 @@ class AnnIndexSpec extends AnyFunSuite with SparkSuite {
     spark.sql(s"DROP TABLE IF EXISTS ${table}_vec")
     // conf-isolated session (suites plan in parallel); shares the catalog
     val s = spark.newSession()
-    graft.functions.VectorFunctions.register(s)
     try {
       AnnIndex.write(emb, table)
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -63,7 +62,6 @@ class AnnIndexSpec extends AnyFunSuite with SparkSuite {
     spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.sql(s"DROP TABLE IF EXISTS ${table}_vec")
     val s = spark.newSession()
-    graft.functions.VectorFunctions.register(s)
     try {
       AnnIndex.write(emb, table)
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -113,7 +111,6 @@ class AnnIndexSpec extends AnyFunSuite with SparkSuite {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"DROP TABLE IF EXISTS ${t}_cent")
     val s = spark.newSession()
-    graft.functions.VectorFunctions.register(s)
     try {
       IvfIndex.write(emb, t)
       // equivalence with the pre-r12 inline retrain (one shared
@@ -798,7 +795,6 @@ class AnnIndexSpec extends AnyFunSuite with SparkSuite {
     // of the shared build lock is waited out, not refused
     s2.conf.set("graft.buildLock.timeoutMs",
       spark.conf.get("graft.buildLock.timeoutMs"))
-    graft.functions.VectorFunctions.register(s2)
     assert(SparkEntry.queries("q_simsearch_banded")(s2, sf).count() > 0)
     assert(SparkEntry.queries("q_simsearch_ivf")(s2, sf).count() > 0)
   }

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.VectorFunctions
 import graft.operators.Ann
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,7 +20,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class AnnRecallSpec extends AnyFunSuite with SparkSuite {
 
   test("banded ANN (8x2) recall >= 0.9 vs brute force, with real pruning") {
-    VectorFunctions.register(spark)
     val emb = Tables(spark, sf, "embeddings")
     val nCorpus = emb.count()
     val nQueries = 10L

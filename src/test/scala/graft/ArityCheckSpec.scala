@@ -39,7 +39,6 @@ class ArityCheckSpec extends AnyFunSuite with SparkSuite {
     * plain integer-literal filler arguments are enough to probe it.
     */
   private def call(name: String, n: Int): Unit = {
-    VectorFunctions.register(spark)
     spark.sql(s"SELECT $name(${Seq.fill(n)("1").mkString(", ")})").collect()
   }
 

@@ -190,53 +190,21 @@ class AsOfJoinSpec extends AnyFunSuite with SparkSuite {
   test("works via GraftExtensions injection (no explicit register)") {
     import org.apache.spark.sql.SparkSession
     // a FRESH session wired only through the GraftExtensions class must
-    // plan the node without AsOfJoin.join's experimental-strategies
-    // fallback. `spark.sql.extensions` is a STATIC conf (read from the
-    // SparkContext conf, unavailable to a second in-JVM session), so the
-    // in-process equivalent is builder().withExtensions — it runs the
-    // exact same GraftExtensions.apply, including injectPlannerStrategy.
-    // getOrCreate returns the suite's shared session unless the default
-    // is cleared first (which would silently void this whole test); the
-    // new session shares the SparkContext, so it must NOT be stopped.
-    spark.sparkContext // force the shared context up first
-    val prev = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[2]")
-      .withExtensions(new graft.extensions.GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .appName("asof-ext").getOrCreate()
-    assert(s2 ne spark)
-    try {
-      val sp = s2
-      import sp.implicits._
+    // plan the node with experimental.extraStrategies left empty.
+    // `spark.sql.extensions` is a STATIC conf (read from the SparkContext
+    // conf, unavailable to a second in-JVM session), so the in-process
+    // equivalent is builder().withExtensions — it runs the exact same
+    // GraftExtensions.apply, including injectPlannerStrategy.
+    withOwnSession(SparkSession.builder()
+        .withExtensions(new graft.extensions.GraftExtensions())
+        .config("spark.sql.shuffle.partitions", "2")) { s2 =>
+      import s2.implicits._
       val l = Seq((1, 10L)).toDF("k", "t")
       val r = Seq((1, 9L, "x")).toDF("qk", "qt", "v")
-      // build the logical node DIRECTLY (not via AsOfJoin.join, which
-      // self-registers the strategy on experimental.extraStrategies and
-      // would mask a broken injectPlannerStrategy line) — planning must
-      // succeed purely through the GraftExtensions-injected strategy
-      assert(s2.experimental.extraStrategies.isEmpty)
-      val lPlan = l.queryExecution.analyzed
-      val rPlan = r.queryExecution.analyzed
-      def a(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-          n: String) = p.output.find(_.name == n).get
-      val df = org.apache.spark.sql.graftbridge.GraftDatasetBridge.ofRows(
-        s2.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-        graft.plans.AsOfJoinPlan(lPlan, rPlan,
-          a(lPlan, "k"), a(rPlan, "qk"), a(lPlan, "t"), a(rPlan, "qt")))
-      val got = df.select("v").collect().map(_.getString(0))
+      val got = AsOfJoin.join(l, r, "k", "qk", "t", "qt")
+        .select("v").collect().map(_.getString(0))
       assert(got === Array("x"))
       assert(s2.experimental.extraStrategies.isEmpty)
-    } finally {
-      // restore the suite's shared session as default/active (s2 shares
-      // its SparkContext — stopping it would kill every later suite)
-      org.apache.spark.sql.SparkSession.clearActiveSession()
-      org.apache.spark.sql.SparkSession.clearDefaultSession()
-      prev.foreach(org.apache.spark.sql.SparkSession.setDefaultSession)
-      prev.foreach(org.apache.spark.sql.SparkSession.setActiveSession)
     }
   }
 }

@@ -22,7 +22,6 @@ class BandCandidateAuditSpec extends AnyFunSuite with SparkSuite {
       "(audit — prints, gates only sanity)") {
     assume(sys.env.contains("GRAFT_SCALE_AUDIT"),
       "opt-in audit: set GRAFT_SCALE_AUDIT=1")
-    graft.functions.VectorFunctions.register(spark)
     val emb = Tables(spark, "/root/testdata/sf0.1", "embeddings")
     val dim = AnnIndex.Dim
     val derived = Ann.planeModulus(AnnIndex.NBands * AnnIndex.Bits, dim)

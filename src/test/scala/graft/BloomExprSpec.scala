@@ -12,11 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BloomExprSpec extends AnyFunSuite with SparkSuite {
 
-  /** 1000-key view `bloom_keys` with the given prefix, functions
-    * registered.
-    */
+  /** 1000-key view `bloom_keys` with the given prefix. */
   private def keysView(name: String, prefix: String): Unit = {
-    graft.functions.VectorFunctions.register(spark)
     import spark.implicits._
     (0L until 1000L).map(i => s"${prefix}_$i").toDF("k")
       .createOrReplaceTempView(name)

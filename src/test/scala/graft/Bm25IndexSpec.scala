@@ -125,7 +125,6 @@ class Bm25IndexSpec extends AnyFunSuite with SparkSuite {
     // catalog-is-the-memo fix, the JVM-global built-set skipped the
     // build here and s2.table(...) threw TABLE_OR_VIEW_NOT_FOUND.
     val s2 = spark.newSession()
-    graft.functions.VectorFunctions.register(s2)
     val out = SparkEntry.queries("q_bm25")(s2, sf)
     assert(out.count() > 0)
   }

@@ -54,7 +54,6 @@ class DataSourceV2Spec extends AnyFunSuite with SparkSuite {
   }
 
   test("source composes with the engine's own operators") {
-    graft.functions.VectorFunctions.register(spark)
     val stats = read(500, 4)
       .groupBy("lang").agg(count(lit(1)).as("n"),
         sum("n_chars").as("chars"))

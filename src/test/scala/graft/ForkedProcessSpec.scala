@@ -22,6 +22,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * by a racing swap would show here) and a CLEAN fsck after the
   * storm; the parent's contending ops all succeed; probes escape no
   * failure; no lock file is left behind.
+  *
+  * A second leg forks [[ChildExtConf]]: a session configured only with
+  * `spark.sql.extensions=graft.extensions.GraftExtensions` resolves the
+  * graft functions, applies the rewrites and plans the native as-of
+  * join without graft arming it.
   */
 class ForkedProcessSpec extends AnyFunSuite with SparkSuite {
 
@@ -86,8 +91,11 @@ class ForkedProcessSpec extends AnyFunSuite with SparkSuite {
           parentT, s"${parentT}_stats")
         if (i % 3 == 0) TextOps.compactIndex(spark, parentT)
         parentOps += 1
-        // path-based probe of the CHILD's family across its swaps
-        if (fs.exists(childDir)) {
+        // path-based probe of the CHILD's family across its swaps,
+        // from its first committed write on: while the child's first
+        // (table-creating) append runs, the directory holds only
+        // `_temporary`, and a path reader cannot infer a schema from it
+        if (fs.exists(new org.apache.hadoop.fs.Path(childDir, "_SUCCESS"))) {
           probeHits = TextOps.retryingProbe(spark, Seq(),
             attempts = 8) {
             spark.read.parquet(childDir.toString)
@@ -135,5 +143,30 @@ class ForkedProcessSpec extends AnyFunSuite with SparkSuite {
       java.nio.file.Files.deleteIfExists(out)
     }
    }
+  }
+
+  test("a child JVM configured only with spark.sql.extensions runs " +
+      "graft_dot and q_asof_native") {
+    val out = java.nio.file.Files.createTempFile("graft_extconf", ".log")
+    val cmd: Seq[String] = Seq(sys.props("java.home") + "/bin/java") ++
+      addOpensPkgs.flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED")) ++
+      Seq("-Xmx1g", "-Dfile.encoding=UTF-8",
+        "-cp", sys.props("java.class.path"), "graft.ChildExtConf", sf)
+    val child = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+      .redirectOutput(out.toFile).start()
+    try {
+      assert(child.waitFor(240, java.util.concurrent.TimeUnit.SECONDS),
+        "child JVM did not finish within 240s")
+      val log = new String(java.nio.file.Files.readAllBytes(out), "UTF-8")
+      assert(child.exitValue() === 0, s"child failed:\n${log.takeRight(3000)}")
+      val ok = log.linesIterator.find(_.startsWith("CHILD_OK"))
+      assert(ok.nonEmpty, log.takeRight(3000))
+      val asofRows = SparkEntry.queries("q_asof_native")(spark, sf).count()
+      assert(ok.get === s"CHILD_OK dot=11.0 rewrite=true " +
+        s"asof_rows=$asofRows extra_strategies=0")
+    } finally {
+      if (child.isAlive) child.destroyForcibly()
+      java.nio.file.Files.deleteIfExists(out)
+    }
   }
 }

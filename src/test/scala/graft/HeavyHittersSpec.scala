@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.VectorFunctions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +12,6 @@ class HeavyHittersSpec extends AnyFunSuite with SparkSuite {
   test("exact when distinct <= k, any partitioning") {
     val sp = spark
     import sp.implicits._
-    VectorFunctions.register(spark)
     val data = (1 to 3000).map(i => s"v${i % 5}")
     // 8 partitions force partial buffers + serialized merges
     val df = sp.sparkContext.parallelize(data, 8).toDF("x")
@@ -27,7 +25,6 @@ class HeavyHittersSpec extends AnyFunSuite with SparkSuite {
   test("above k: every item with freq > n/(k+1) survives, bounded undercount") {
     val sp = spark
     import sp.implicits._
-    VectorFunctions.register(spark)
     // one dominant item (40%), many singletons
     val n = 2000
     val data = Seq.fill(n * 2 / 5)("hot") ++
@@ -51,7 +48,6 @@ class HeavyHittersSpec extends AnyFunSuite with SparkSuite {
   test("invalid k raises a clear AnalysisException, not an NPE") {
     val sp = spark
     import sp.implicits._
-    VectorFunctions.register(spark)
     val df = Seq("a", "b").toDF("x")
     val eNull = intercept[org.apache.spark.sql.AnalysisException] {
       df.agg(expr("graft_heavy_hitters(x, NULL)")).first()
@@ -66,7 +62,6 @@ class HeavyHittersSpec extends AnyFunSuite with SparkSuite {
   test("nulls ignored; empty input yields empty array") {
     val sp = spark
     import sp.implicits._
-    VectorFunctions.register(spark)
     val df = Seq(Some("a"), None, Some("a"), None).toDF("x")
     val got = df.agg(expr("graft_heavy_hitters(x, 4)").as("hh")).first()
       .getSeq[org.apache.spark.sql.Row](0)

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.VectorFunctions
 import graft.operators.Ivf
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -23,7 +22,6 @@ class IvfAssignSpec extends AnyFunSuite with SparkSuite {
   /** 120 vectors, ids dense from 0; no row is all-zero (17j mod 13
     * varies with j, so the 13-residue can't sit at 6 for every j). */
   private lazy val e: DataFrame = {
-    VectorFunctions.register(spark)
     import spark.implicits._
     (0 until 120).map { i =>
       (i.toLong,

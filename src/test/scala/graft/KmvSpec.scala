@@ -31,7 +31,6 @@ class KmvSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("native bigint input stays within 15% and is exact below k") {
-    graft.functions.VectorFunctions.register(spark)
     // accuracy on a real high-cardinality long column, across merges
     val rows = Tables(spark, sf, "lineitem").repartition(8)
       .groupBy("l_returnflag").agg(
@@ -53,7 +52,6 @@ class KmvSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("TypedImperativeAggregate form == Aggregator form, incl. merges") {
-    graft.functions.VectorFunctions.register(spark)
     val df = Tables(spark, sf, "lineitem").repartition(8)
     val rows = df.groupBy("l_returnflag").agg(
       KmvDistinct.kmvDistinct(col("l_partkey").cast("string")).as("agg"),

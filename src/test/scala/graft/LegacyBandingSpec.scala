@@ -52,7 +52,6 @@ class LegacyBandingSpec extends AnyFunSuite with SparkSuite {
     * the bug's mixed-family set. */
   private def collisions(a: String, corpusM: Int,
       queryM: Int): Set[(Long, Long)] = {
-    graft.functions.VectorFunctions.register(spark)
     def keyed(df: DataFrame, vcol: String, idAs: String, m: Int) =
       df.withColumn("bands", Ann.bandKeys(col(vcol), NB, BT, Dim, m))
         .select(col(idAs), posexplode(col("bands")))
@@ -76,7 +75,6 @@ class LegacyBandingSpec extends AnyFunSuite with SparkSuite {
     * [[Forked]] modulus, `_cfg` pinned with `planemodPin` (None = the
     * key absent entirely). */
   private def makeForked(a: String, planemodPin: Option[Int]): Unit = {
-    graft.functions.VectorFunctions.register(spark)
     spark.table(s"${a}_vec").select("vec_id", "v", "gen")
       .withColumn("bands", Ann.bandKeys(col("v"), NB, BT, Dim, Forked))
       .select(col("vec_id"), col("gen"), posexplode(col("bands")))

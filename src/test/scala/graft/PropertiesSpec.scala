@@ -95,7 +95,6 @@ class PropertiesSpec extends AnyFunSuite with SparkSuite {
   test("property: graft_intersect_size equals reference set intersection") {
     val sp = spark
     import sp.implicits._
-    graft.functions.VectorFunctions.register(spark)
     val tok = Gen.oneOf("a", "b", "cc", "dd", "e", "", " x", "zz")
     val arrGen = Gen.listOf(tok)
     samples(Gen.nonEmptyListOf(Gen.zip(arrGen, arrGen)), 3).foreach { rows =>
@@ -112,7 +111,6 @@ class PropertiesSpec extends AnyFunSuite with SparkSuite {
   test("property: heavy hitters exact under any grouping when distinct <= k") {
     val sp = spark
     import sp.implicits._
-    graft.functions.VectorFunctions.register(spark)
     val gen = Gen.nonEmptyListOf(Gen.oneOf("p", "q", "r", "s"))
     samples(gen, 3).foreach { values =>
       val truth = values.groupBy(identity).view.mapValues(_.size.toLong).toMap

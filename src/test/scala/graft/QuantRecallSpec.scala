@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.VectorFunctions
 import graft.operators.{Ann, AnnIndex, BqIndex, IvfIndex, PqIndex}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,7 +30,6 @@ class QuantRecallSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("BQ Hamming+rerank recall: floor holds, deeper rerank monotone") {
-    VectorFunctions.register(spark)
     val bq = BqIndex.bqIndex(spark, sf)
     val vecs = AnnIndex.annIndex(spark, sf) + "_vec"
     def r(c: Int) = recallOf(
@@ -53,7 +51,6 @@ class QuantRecallSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("PQ ADC recall vs brute force") {
-    VectorFunctions.register(spark)
     val q = Ann.prep(Tables(spark, sf, "embeddings")
         .filter(col("vec_id") < nQueries))
       .select(col("vec_id"), col("v"))
@@ -70,7 +67,6 @@ class QuantRecallSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("IVF multi-probe recall >= single-cell recall") {
-    VectorFunctions.register(spark)
     val t = IvfIndex.ivfIndex(spark, sf)
     val single = recallOf(IvfIndex.topK(spark, t, _ < nQueries, k = k))
     val multi = recallOf(

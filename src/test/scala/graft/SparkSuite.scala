@@ -17,4 +17,27 @@ trait SparkSuite { self: AnyFunSuite =>
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Run `f` on a session of its own, built by `b` on the shared
+    * SparkContext. getOrCreate returns the shared session unless the
+    * default is cleared first (which would silently void the caller's
+    * test); the new session shares the context, so it is not stopped —
+    * the shared session is restored as default and active instead.
+    */
+  def withOwnSession[T](b: SparkSession.Builder)(f: SparkSession => T): T = {
+    spark.sparkContext // force the shared context up first
+    val prev = SparkSession.getDefaultSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val s = b.config("spark.ui.enabled", "false").getOrCreate()
+      assert(s ne spark)
+      f(s)
+    } finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      prev.foreach(SparkSession.setDefaultSession)
+      prev.foreach(SparkSession.setActiveSession)
+    }
+  }
 }

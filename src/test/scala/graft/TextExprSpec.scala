@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.VectorFunctions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,7 +22,6 @@ class TextExprSpec extends AnyFunSuite with SparkSuite {
   test("graft_shingles == SQL trim+split shingles, incl. edge whitespace") {
     val sp = spark
     import sp.implicits._
-    VectorFunctions.register(spark)
     val df = Seq("\ta b c", "a  b\tc d ", "  x y  ", "", "one two",
       "a b c d e f").toDF("text")
     val cmp = df.select(
@@ -34,7 +32,6 @@ class TextExprSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("graft_shingle_set == array_distinct(graft_shingles) on documents") {
-    VectorFunctions.register(spark)
     val df = Tables(spark, sf, "documents")
     val cmp = df.select(
       expr("graft_shingle_set(text)").as("fused"),
@@ -45,7 +42,6 @@ class TextExprSpec extends AnyFunSuite with SparkSuite {
   test("graft_simhash16 == composable transform+filter SimHash") {
     val sp = spark
     import sp.implicits._
-    VectorFunctions.register(spark)
     val toks = "array_distinct(split(trim(text), '\\\\s+'))"
     val hs = s"transform($toks, t -> md5(t))"
     def bit(j: Int) =
@@ -79,7 +75,6 @@ class TextExprSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("graft_minhash_lanes == SQL minhash lanes on real documents") {
-    VectorFunctions.register(spark)
     val df = Tables(spark, sf, "documents")
     val cmp = df.select(
       expr("graft_minhash_lanes(text)").as("fused"),

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.VectorFunctions
 import graft.operators.Ann
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -85,7 +84,6 @@ class WideRecallSpec extends AnyFunSuite with SparkSuite {
 
   for (dim <- Seq(128, 768)) {
     test(s"dim $dim: banded ANN (8x2) recall >= 0.9 vs brute force, real pruning") {
-      VectorFunctions.register(spark)
       val emb = corpus(dim)
       val nCorpus = emb.count()
       val k = 5
@@ -158,7 +156,6 @@ class WideRecallSpec extends AnyFunSuite with SparkSuite {
 
   test("dim 768: the fold-defeating corpus — the old fixed-29 modulus " +
       "loses every true pair; the derived modulus finds them") {
-    VectorFunctions.register(spark)
     val dim = 768
     val nPairs = 16
     val emb = foldKernelCorpus(dim, nPairs)
@@ -211,7 +208,6 @@ class WideRecallSpec extends AnyFunSuite with SparkSuite {
   for (dim <- Seq(128, 768)) {
     test(s"dim $dim: IVF (k=4, nprobe=2) recall >= 0.9 vs brute force " +
         "on a clustered corpus") {
-      VectorFunctions.register(spark)
       val t = s"wr_ivf_${dim}_p$pid"
       val all = Seq(t, s"${t}_cent", s"${t}_del")
       all.foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
