@@ -8,11 +8,14 @@ import org.apache.spark.sql.functions.col
 
 /** ONE stored index family's lifecycle — hold, delete, vacuum,
   * maintain, describe, fsck and repair, written once over the tables
-  * the family owns. The five vector families, the BM25 postings and the
-  * band index are instances; each kind keeps only its write/append/
-  * upsert/probe code plus the data below, so the verbs cannot drift
-  * apart per family (REPOSE's one-probe-contract idea, applied to the
-  * lifecycle).
+  * the family owns — plus the two seams every kind's own code goes
+  * through: [[frames]], where the family's rows come from (live, or as
+  * of a snapshot tag), and [[upsert]], the barrier-then-append body.
+  * The five vector families, the BM25 postings and the band index are
+  * instances; each kind keeps only its write/append code and its
+  * scorers plus the data below, so neither the verbs nor the reads can
+  * drift apart per family (REPOSE's one-probe-contract idea, applied
+  * to the lifecycle and to the read side).
   *
   * Built only by the per-kind constructors — [[AnnIndex.family]],
   * [[IvfIndex.family]], [[PqIndex.family]], [[BqIndex.family]],
@@ -26,15 +29,16 @@ import org.apache.spark.sql.functions.col
   *     with the members (IVF `_cent`, PQ `_cb`) — the crashed-swap
   *     audit and heal cover these, the members and the `_del` list;
   *   - `idCol`: the stored id column; `callerIdCol`: the id column
-  *     hold/delete callers pass (band postings store `old_id` and are
-  *     addressed by `doc_id`);
+  *     hold/delete/upsert callers pass (band postings store `old_id`
+  *     and are addressed by `doc_id`);
   *   - `sidecar`: the (noun, table) sibling without which the stored
   *     rows cannot be audited at all — the `_cfg` pin, the IVF
   *     quantizer, the PQ codebook; its loss is reported alone;
   *   - `statsTable`: the BM25 corpus-stats sibling — describe reports
-  *     it, and deletes go through its write-ahead log
+  *     it, deletes go through its write-ahead log
   *     ([[TextOps.deleteBm25Docs]]) so the stats shrink with the
-  *     postings;
+  *     postings, and an as-of read refuses a snapshot that pinned a
+  *     pending delete stage;
   *   - `cfgOf`: the build config describe reports;
   *   - `invariant`: the kind's structural audit over the live rows
   *     (handed a member → live-rows function);
@@ -68,9 +72,71 @@ final class IndexFamily private[operators] (
   private def swapMembers: Seq[String] =
     members ++ swapSiblings :+ delTable
 
-  /** `member`'s rows that answer probes (tombstones subtracted). */
-  private def live(s: SparkSession)(member: String): DataFrame =
-    TO.exceptTombstones(s.table(member), s, delTable, idCol)
+  /** Where the family's rows come from: live (the catalog), or AS OF
+    * a `<tag>` manifest snapshot without restoring anything. Every
+    * probe of every kind reads through here, so its live and as-of
+    * forms share one scorer over the returned [[IndexFamily.Frames]]:
+    *   - `member(name)`: the rows that answer probes. Live, the
+    *     catalog table minus the `_del` list; as of a tag,
+    *     [[TextOps.readSnapshot]]'s file-pinned files minus the tag's
+    *     own `_del` list when its manifest holds one
+    *     ([[TextOps.exceptTombstonesFrame]]);
+    *   - `sidecar(suffix)` (`_cent`, `_cb`, `_stats`): the live table,
+    *     or the tag's O(1) meta copy;
+    *   - `config`: the `_cfg` pin — [[TextOps.readIndexConfig]] live,
+    *     the tag's meta copy as of it; None when the family (or the
+    *     tag) has none.
+    * An unknown tag refuses here, naming the missing
+    * `<table>_mf_<tag>`. A stats family (BM25) also refuses a tag
+    * whose manifest pinned a pending delete stage: the serving path
+    * folds the stage before scoring, so no served state ever matched
+    * the raw staged mix. As-of frames are plain parquet scans (no
+    * bucket metadata) — the audit path, not the serving path. */
+  private[graft] def frames(s: SparkSession,
+      asOf: Option[String] = None): IndexFamily.Frames = asOf match {
+    case None => new IndexFamily.Frames(
+      m => TO.exceptTombstones(s.table(m), s, delTable, idCol),
+      sfx => s.table(table + sfx),
+      () => TO.readIndexConfig(s, table))
+    case Some(tag) =>
+      val mf = s"${table}_mf_$tag"
+      require(s.catalog.tableExists(mf),
+        s"no manifest $mf: $table has no snapshot under tag $tag")
+      val manifest = TO.readManifest(s, mf)
+      require(statsTable.isEmpty ||
+          manifest.getOrElse(table + "_del_stage", Nil).isEmpty,
+        s"snapshot $tag of $table carries a pending delete stage — " +
+          "the serving path folds it before scoring; restore the " +
+          "snapshot and probe the restored family instead")
+      def snap(sfx: String) = TO.readSnapshot(s, table, tag, sfx)
+      val del =
+        if (manifest.contains(delTable)) Some(snap("_del")) else None
+      new IndexFamily.Frames(
+        m => TO.exceptTombstonesFrame(snap(m.stripPrefix(table)), del,
+          idCol),
+        snap,
+        () =>
+          if (!s.catalog.tableExists(s"${table}_cfg_bak_mf$tag")) None
+          else Some(TO.configRow(snap("_cfg").collect()(0))))
+  }
+
+  /** UPSERT a batch: under the build lock, take the family's next
+    * barrier generation, tombstone the batch's caller ids at it, then
+    * run the kind's `append` at the same generation — old versions
+    * die under the barrier, the new rows ride above it, pure inserts
+    * just append; a terminally deleted id stays deleted. O(batch),
+    * nothing rewritten. Barrier FIRST: if the append fails, its ids
+    * stay dead until a retry, which takes a fresh barrier; appending
+    * first could leave two copies of one generation, which fsck
+    * cannot tell apart. [[TextOps.upsertBm25Docs]] keeps its own path
+    * (it also writes the stats write-ahead log). */
+  private[operators] def upsert(s: SparkSession, batch: DataFrame)(
+      append: Long => Unit): Unit = TO.withBuildLock(s) {
+    val g = TO.nextGen(s, delTable)
+    TO.tombstone(s, delTable, batch.select(col(callerIdCol).as(idCol)),
+      idCol, gen = g)
+    append(g)
+  }
 
   /** Place a LEGAL HOLD on ids (r15 — see [[TextOps.holdIds]]): the
     * `<table>_hold` sibling is an append-only id set filtered at every
@@ -141,8 +207,9 @@ final class IndexFamily private[operators] (
     else sidecar.filterNot(x => s.catalog.tableExists(x._2)) match {
       case Some((noun, t)) => Seq(s"$noun $t missing")
       case None =>
-        invariant(s, live(s)) ++ members.filter(s.catalog.tableExists)
-          .flatMap(m => TO.multiGenViolations(live(s)(m), idCol))
+        val live = frames(s).member
+        invariant(s, live) ++ members.filter(s.catalog.tableExists)
+          .flatMap(m => TO.multiGenViolations(live(m), idCol))
     }
   }
 
@@ -200,6 +267,15 @@ final class IndexFamily private[operators] (
 }
 
 object IndexFamily {
+
+  /** One read of a family's stored state, live or as of a tag — see
+    * [[IndexFamily.frames]]. */
+  private[graft] final class Frames(
+      val member: String => DataFrame,
+      val sidecar: String => DataFrame,
+      readConfig: () => Option[Map[String, Int]]) {
+    lazy val config: Option[Map[String, Int]] = readConfig()
+  }
 
   /** A repair heal: the violations it answers, its description in
     * repair's result, and the heal itself. */

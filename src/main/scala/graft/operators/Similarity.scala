@@ -647,10 +647,9 @@ object AnnIndex {
     // ONE tombstone list serves the whole family — both the band
     // postings and the payload twin subtract it (no-op without
     // deletes; see TextOps.tombstone for the lifecycle)
-    val bands = TO.exceptTombstones(s.table(table), s,
-      table + "_del", "vec_id")
-    val vecs = TO.exceptTombstones(s.table(table + "_vec"), s,
-      table + "_del", "vec_id")
+    val f = family(table).frames(s)
+    val bands = f.member(table)
+    val vecs = f.member(table + "_vec")
     val qb = bands.filter(isQuery(col("vec_id")))
       .select(col("band_key").as("q_band_key"), col("vec_id").as("q_id"))
     val cand = bands.join(broadcast(qb),
@@ -733,26 +732,17 @@ object AnnIndex {
     } finally { e.unpersist(); () }
   }
 
-  /** UPSERT vectors — the [[graft.operators.TextOps.upsertBm25Docs]]
-    * contract for the ANN family (no corpus stats, so the op is
-    * barrier + append over BOTH members): the incoming ids' old band
-    * postings and payload rows die under a fresh finite barrier, the
-    * batch's new rows ride above it at gen = barrier, pure inserts
-    * just append. One build-lock scope, O(batch), nothing rewritten;
-    * a terminally deleted id stays deleted. Config must match the
-    * stored `_cfg` pin (enforced by append).
+  /** UPSERT vectors — [[IndexFamily.upsert]] over BOTH members: the
+    * incoming ids' old band postings and payload rows die under a
+    * fresh finite barrier and the batch's rows [[append]] above it.
+    * Config must match the stored `_cfg` pin (enforced by append).
     */
   def upsert(emb: DataFrame, table: String, nBands: Int = NBands,
       bits: Int = Bits, dim: Int = CosSim.EmbDim,
       nBuckets: Int = 8, payloadCols: Seq[String] = Nil): Unit =
-    TO.withBuildLock(emb.sparkSession) {
-      val s = emb.sparkSession
-      val g = TO.nextGen(s, table + "_del")
-      TO.tombstone(s, table + "_del", emb.select(col("vec_id")),
-        "vec_id", gen = g)
+    family(table).upsert(emb.sparkSession, emb)(g =>
       append(emb, table, nBands, bits, dim, nBuckets, payloadCols,
-        gen = g)
-    }
+        gen = g))
 
   /** The ANN family's lifecycle ([[IndexFamily]]): band postings and
     * the `_vec` payload member under ONE tombstone list, the `_cfg`
@@ -846,9 +836,8 @@ object AnnIndex {
     // checkSnapshot names whatever the rewrite orphaned
     TO.rewriteBucketed(s, table, guard = TO.FoldGuard.Orphan,
         transform = df => {
-      val s2 = df.sparkSession
-      val live = TO.exceptTombstones(s2.table(table + "_vec"), s2,
-        table + "_del", "vec_id")
+      val live = family(table).frames(df.sparkSession)
+        .member(table + "_vec")
       val gen =
         if (live.columns.contains("gen")) live.select(col("vec_id"),
           col("gen"))
@@ -910,15 +899,21 @@ object AnnIndex {
     */
   def scoreExternal(queries: DataFrame, s: SparkSession, table: String,
       nBands: Int = NBands, bits: Int = Bits,
-      dim: Int = CosSim.EmbDim): DataFrame = {
-    val (nb, bt, dm, pm) = probeBanding("scoreExternal", table,
-      TO.readIndexConfig(s, table), nBands, bits, dim)
-    val bands = TO.exceptTombstones(s.table(table), s,
-      table + "_del", "vec_id")
-    val vecs = TO.exceptTombstones(s.table(table + "_vec"), s,
-      table + "_del", "vec_id")
-    scoreExternalFrames(queries, bands, vecs, nb, bt, dm, pm)
-  }
+      dim: Int = CosSim.EmbDim): DataFrame =
+    scoreAt(queries, s, table, None, nBands, bits, dim)
+
+  /** [[scoreExternal]] AS OF a `<tag>` manifest snapshot WITHOUT
+    * restoring anything (r17, VERDICT item 5): bands, payload and the
+    * banding config are the family's as-of [[IndexFamily.frames]] —
+    * the pins the index was SERVING under at the tag, not today's.
+    * One scorer ([[scoreAt]]) for live and as-of, so parity holds by
+    * construction (AsOfProbeSpec gates it against a restored copy).
+    * Plain parquet scans + a one-off Exchange: the audit path, not
+    * the serving path. */
+  def scoreAsOf(queries: DataFrame, s: SparkSession, table: String,
+      tag: String, nBands: Int = NBands, bits: Int = Bits,
+      dim: Int = CosSim.EmbDim): DataFrame =
+    scoreAt(queries, s, table, Some(tag), nBands, bits, dim)
 
   /** The (nbands, bits, dim, plane modulus) an external probe bands
     * its queries under. A `_cfg` pin wins and must carry `planemod`:
@@ -939,14 +934,15 @@ object AnnIndex {
     case None => (nBands, bits, dim, 0)
   }
 
-  /** The [[scoreExternal]] body over explicit index FRAMES — shared
-    * by the live path (catalog tables minus live tombstones) and the
-    * as-of path ([[scoreAsOf]]: readSnapshot's file-pinned frames),
-    * so the two cannot drift (the streamingBm25 one-definition
-    * discipline). */
-  private def scoreExternalFrames(queries: DataFrame,
-      bands: DataFrame, vecs: DataFrame,
-      nb: Int, bt: Int, dm: Int, pm: Int): DataFrame = {
+  /** The one external-query scorer behind [[scoreExternal]] (live
+    * frames) and [[scoreAsOf]] (the tag's frames). */
+  private def scoreAt(queries: DataFrame, s: SparkSession,
+      table: String, asOf: Option[String], nBands: Int, bits: Int,
+      dim: Int): DataFrame = {
+    val f = family(table).frames(s, asOf)
+    val (nb, bt, dm, pm) = probeBanding(
+      asOf.fold("scoreExternal")(_ => "scoreAsOf"), table, f.config,
+      nBands, bits, dim)
     val qb = Ann.prepExternal(queries, dm)
       .withColumn("bands", Ann.bandKeys(col("qv"), nb, bt, dm, pm))
       .select(col("q_id"), col("qv"), col("qn"),
@@ -955,49 +951,13 @@ object AnnIndex {
       .select(col("q_id"), col("qv"), col("qn"),
         concat(col("band_idx").cast("string"), lit(":"),
           col("bits")).as("band_key"))
-    qb.join(bands, "band_key")
+    qb.join(f.member(table), "band_key")
       .select(col("q_id"), col("vec_id"), col("qv"), col("qn"))
       .dropDuplicates("q_id", "vec_id")
-      .join(vecs, "vec_id")
+      .join(f.member(table + "_vec"), "vec_id")
       .select(col("q_id"), col("vec_id"),
         CosSim.sentinel(expr("graft_dot(v, qv)"),
           col("nrm"), col("qn")).as("sim"))
-  }
-
-  /** [[scoreExternal]] AS OF a `<tag>` manifest snapshot WITHOUT
-    * restoring anything (r17, VERDICT item 5): bands, payload and
-    * the tombstone list come from
-    * [[graft.operators.TextOps.readSnapshot]]'s file-pinned frames
-    * (fold-anchor-aware), the banding config from the snapshot's own
-    * `_cfg` meta copy — the pins the index was SERVING under at the
-    * tag, not today's. One scoring definition ([[
-    * scoreExternalFrames]]) for live and as-of, so parity holds by
-    * construction (AsOfProbeSpec gates it against a restored copy).
-    * Plain parquet scans + a one-off Exchange: the audit path, not
-    * the serving path. */
-  def scoreAsOf(queries: DataFrame, s: SparkSession, table: String,
-      tag: String, nBands: Int = NBands, bits: Int = Bits,
-      dim: Int = CosSim.EmbDim): DataFrame = {
-    val mf = s"${table}_mf_$tag"
-    require(s.catalog.tableExists(mf), s"scoreAsOf: no manifest $mf")
-    val manifest = TO.readManifest(s, mf)
-    val cfg =
-      if (s.catalog.tableExists(s"${table}_cfg_bak_mf$tag")) {
-        val row = TO.readSnapshot(s, table, tag, "_cfg").collect()(0)
-        Some(row.schema.fieldNames.map(k =>
-          k -> row.getAs[Int](k)).toMap)
-      } else None
-    val (nb, bt, dm, pm) = probeBanding("scoreAsOf", table, cfg,
-      nBands, bits, dim)
-    val del =
-      if (manifest.contains(table + "_del"))
-        Some(TO.readSnapshot(s, table, tag, "_del"))
-      else None
-    val bands = TO.exceptTombstonesFrame(
-      TO.readSnapshot(s, table, tag), del, "vec_id")
-    val vecs = TO.exceptTombstonesFrame(
-      TO.readSnapshot(s, table, tag, "_vec"), del, "vec_id")
-    scoreExternalFrames(queries, bands, vecs, nb, bt, dm, pm)
   }
 
   /** The stored ANN index for `sfDir`'s embeddings, built on first use
@@ -1104,21 +1064,14 @@ object IvfIndex {
       .saveAsTable(table)
   }
 
-  /** UPSERT vectors — the [[AnnIndex.upsert]] contract for the IVF
-    * cells family: old assignments die under a fresh finite barrier,
-    * the batch re-assigns with the FROZEN stored quantizer (upsert
-    * changes what answers, never how it's routed — retraining stays
-    * [[refresh]]'s job) and appends at gen = barrier. One build-lock
-    * scope, O(batch·k).
+  /** UPSERT vectors — [[IndexFamily.upsert]] for the IVF cells: the
+    * batch re-assigns with the FROZEN stored quantizer (upsert changes
+    * what answers, never how it's routed — retraining stays
+    * [[refresh]]'s job). O(batch·k).
     */
   def upsert(emb: DataFrame, table: String, nBuckets: Int = 8): Unit =
-    TO.withBuildLock(emb.sparkSession) {
-      val s = emb.sparkSession
-      val g = TO.nextGen(s, table + "_del")
-      TO.tombstone(s, table + "_del", emb.select(col("vec_id")),
-        "vec_id", gen = g)
-      append(emb, table, nBuckets, gen = g)
-    }
+    family(table).upsert(emb.sparkSession, emb)(g =>
+      append(emb, table, nBuckets, gen = g))
 
   /** ONE centroid decode for every consumer of the stored quantizer
     * (append, the stateless probe) — two copies could drift on a
@@ -1273,8 +1226,7 @@ object IvfIndex {
   def topK(s: SparkSession, table: String,
       isQuery: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
       k: Int): DataFrame = {
-    val cells = TO.exceptTombstones(s.table(table), s,
-      table + "_del", "vec_id")
+    val cells = family(table).frames(s).member(table)
     val q = cells.filter(isQuery(col("vec_id")))
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("nrm").as("qn"), col("cell").as("q_cell"))
@@ -1304,12 +1256,12 @@ object IvfIndex {
   def topKMultiProbe(s: SparkSession, table: String,
       isQuery: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
       k: Int, nprobe: Int): DataFrame = {
-    val cells = TO.exceptTombstones(s.table(table), s,
-      table + "_del", "vec_id")
+    val f = family(table).frames(s)
+    val cells = f.member(table)
     val q = cells.filter(isQuery(col("vec_id")))
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("nrm").as("qn"))
-    multiProbeCore(s.table(table + "_cent"), cells, q, k, nprobe,
+    multiProbeCore(f.sidecar("_cent"), cells, q, k, nprobe,
       selfExclude = true)
   }
 
@@ -1323,40 +1275,31 @@ object IvfIndex {
     * ([[multiProbeCore]]), so serving and analysis cannot drift.
     */
   def scoreExternal(queries: DataFrame, s: SparkSession, table: String,
-      k: Int, nprobe: Int = 1): DataFrame = {
-    val cells = TO.exceptTombstones(s.table(table), s,
-      table + "_del", "vec_id")
-    val cents = s.table(table + "_cent")
-    val dim = cents.select(size(col("c"))).head().getInt(0)
-    val q = Ann.prepExternal(queries, dim)
-    multiProbeCore(cents, cells, q, k, nprobe, selfExclude = false)
-  }
+      k: Int, nprobe: Int = 1): DataFrame =
+    scoreAt(queries, s, table, None, k, nprobe)
 
   /** [[scoreExternal]] AS OF a `<tag>` manifest snapshot WITHOUT
     * restoring anything — the [[AnnIndex.scoreAsOf]] shape for the
-    * IVF index: cells and the tombstone list come from
-    * [[graft.operators.TextOps.readSnapshot]]'s file-pinned frames,
-    * the CENTROIDS from the snapshot's own `_cent` meta copy — the
-    * quantizer the index was serving under at the tag, not today's
-    * (an [[refresh]]ed quantizer must not re-route an as-of probe).
-    * One probe pipeline ([[multiProbeCore]]) with the live paths, so
-    * parity holds by construction (AsOfProbeSpec gates it against a
-    * restored copy). Audit path, not the serving path. */
+    * IVF index: cells and the CENTROIDS are the family's as-of
+    * [[IndexFamily.frames]] — the quantizer the index was serving
+    * under at the tag, not today's (an [[refresh]]ed quantizer must
+    * not re-route an as-of probe). One probe pipeline
+    * ([[multiProbeCore]]) with the live paths, so parity holds by
+    * construction (AsOfProbeSpec gates it against a restored copy).
+    * Audit path, not the serving path. */
   def scoreAsOf(queries: DataFrame, s: SparkSession, table: String,
-      tag: String, k: Int, nprobe: Int = 1): DataFrame = {
-    val mf = s"${table}_mf_$tag"
-    require(s.catalog.tableExists(mf), s"scoreAsOf: no manifest $mf")
-    val manifest = TO.readManifest(s, mf)
-    val del =
-      if (manifest.contains(table + "_del"))
-        Some(TO.readSnapshot(s, table, tag, "_del"))
-      else None
-    val cells = TO.exceptTombstonesFrame(
-      TO.readSnapshot(s, table, tag), del, "vec_id")
-    val cents = TO.readSnapshot(s, table, tag, "_cent")
+      tag: String, k: Int, nprobe: Int = 1): DataFrame =
+    scoreAt(queries, s, table, Some(tag), k, nprobe)
+
+  /** The external-query probe over the live or the tag's frames. */
+  private def scoreAt(queries: DataFrame, s: SparkSession,
+      table: String, asOf: Option[String], k: Int,
+      nprobe: Int): DataFrame = {
+    val f = family(table).frames(s, asOf)
+    val cents = f.sidecar("_cent")
     val dim = cents.select(size(col("c"))).head().getInt(0)
-    val q = Ann.prepExternal(queries, dim)
-    multiProbeCore(cents, cells, q, k, nprobe, selfExclude = false)
+    multiProbeCore(cents, f.member(table), Ann.prepExternal(queries, dim),
+      k, nprobe, selfExclude = false)
   }
 
   /** STREAM-SAFE external candidate generation: like [[scoreExternal]]
@@ -1373,8 +1316,7 @@ object IvfIndex {
     */
   def scoreExternalCandidates(queries: DataFrame, s: SparkSession,
       table: String, nprobe: Int = 1): DataFrame = {
-    val cells = TO.exceptTombstones(s.table(table), s,
-      table + "_del", "vec_id")
+    val cells = family(table).frames(s).member(table)
     val cents = loadCentroids(s, table)
     val dim = cents.head._2.length
     val q = Ann.prepExternal(queries, dim)
@@ -1655,20 +1597,13 @@ object PqIndex {
       .saveAsTable(table)
   }
 
-  /** UPSERT vectors — the [[AnnIndex.upsert]] contract for the PQ
-    * codes family: old codes die under a fresh finite barrier, the
+  /** UPSERT vectors — [[IndexFamily.upsert]] for the PQ codes: the
     * batch re-encodes with the FROZEN stored codebook (retraining
-    * stays [[refresh]]'s job) and appends at gen = barrier. One
-    * build-lock scope, O(batch·M·Ks).
+    * stays [[refresh]]'s job). O(batch·M·Ks).
     */
   def upsert(emb: DataFrame, table: String, nBuckets: Int = 8): Unit =
-    TO.withBuildLock(emb.sparkSession) {
-      val s = emb.sparkSession
-      val g = TO.nextGen(s, table + "_del")
-      TO.tombstone(s, table + "_del", emb.select(col("vec_id")),
-        "vec_id", gen = g)
-      append(emb, table, nBuckets, gen = g)
-    }
+    family(table).upsert(emb.sparkSession, emb)(g =>
+      append(emb, table, nBuckets, gen = g))
 
   /** The PQ family's lifecycle ([[IndexFamily]]): the codes member,
     * the `_cb` codebook as sidecar (its grid — m subspaces × ks
@@ -1705,23 +1640,17 @@ object PqIndex {
     * grid (order-free exact), and ranks the rounded sentinel cosine of
     * query vs the candidate's RECONSTRUCTION — computed without ever
     * materializing it. */
-
   def topK(s: SparkSession, table: String, queries: DataFrame,
-      k: Int): DataFrame = {
-    adcTopK(s.table(table + "_cb"),
-      TO.exceptTombstones(s.table(table), s, table + "_del",
-        "vec_id"),
-      queries, k, cand = None)
-  }
+      k: Int): DataFrame =
+    adcTopK(family(table).frames(s), table, queries, k, cand = None)
 
   /** [[topK]] AS OF a `<tag>` manifest snapshot WITHOUT restoring
-    * anything — codes and tombstones from
-    * [[graft.operators.TextOps.readSnapshot]]'s file-pinned frames,
-    * the CODEBOOK from the snapshot's own `_cb` meta copy (the
-    * training grid the codes were encoded under at the tag). Takes
-    * the external (q_id, embedding) query shape every scoreExternal
-    * takes, adapted through the same checked prep. One ADC pipeline
-    * ([[adcTopK]]) with the live paths. Audit path, not serving. */
+    * anything — codes and the CODEBOOK are the family's as-of
+    * [[IndexFamily.frames]] (the training grid the codes were encoded
+    * under at the tag). Takes the external (q_id, embedding) query
+    * shape every scoreExternal takes, adapted through the same checked
+    * prep. One ADC pipeline ([[adcTopK]]) with the live paths. Audit
+    * path, not serving. */
   def scoreAsOf(queries: DataFrame, s: SparkSession, table: String,
       tag: String, k: Int): DataFrame =
     asOfAdc(queries, s, table, tag, k, cand = None)
@@ -1739,38 +1668,32 @@ object PqIndex {
       table: String, tag: String, cand: DataFrame, k: Int): DataFrame =
     asOfAdc(queries, s, table, tag, k, cand = Some(cand))
 
+  /** The as-of verbs' query prep: external queries canonicalized at
+    * the tag's codebook width. */
   private def asOfAdc(queries: DataFrame, s: SparkSession,
       table: String, tag: String, k: Int,
       cand: Option[DataFrame]): DataFrame = {
-    val mf = s"${table}_mf_$tag"
-    require(s.catalog.tableExists(mf), s"scoreAsOf: no manifest $mf")
-    val manifest = TO.readManifest(s, mf)
-    val del =
-      if (manifest.contains(table + "_del"))
-        Some(TO.readSnapshot(s, table, tag, "_del"))
-      else None
-    val codes = TO.exceptTombstonesFrame(
-      TO.readSnapshot(s, table, tag), del, "vec_id")
-    val cb = TO.readSnapshot(s, table, tag, "_cb")
-    val dim = cb.agg(max(size(col("c")) * col("sub")))
+    val f = family(table).frames(s, Some(tag))
+    val dim = f.sidecar("_cb").agg(max(size(col("c")) * col("sub")))
       .head().getInt(0)
     val q = Ann.prepExternal(queries, dim)
       .select(col("q_id").as("vec_id"), col("qv").as("v"))
-    adcTopK(cb, codes, q, k, cand)
+    adcTopK(f, table, q, k, cand)
   }
 
   /** ONE ADC scoring pipeline for the corpus-wide, pair-restricted
     * AND as-of probes (review r12: topKPairs was a wholesale copy
-    * that could drift from topK's ADC arithmetic; `cb`/`codesIn` =
-    * the live tables or a snapshot's frames): per-query LUT (queries
-    * × codebook, broadcast), stored-codes explode — restricted to the
+    * that could drift from topK's ADC arithmetic; `f` = the live or
+    * a tag's frames): per-query LUT (queries × codebook, broadcast),
+    * stored-codes explode — restricted to the
     * candidate residents BEFORE the LUT lookup when `cand` is given —
     * decimal-grid-exact subspace sums, stored-norm sentinel guard,
     * rank cut.
     */
-  private def adcTopK(cb: DataFrame, codesIn: DataFrame,
+  private def adcTopK(f: IndexFamily.Frames, table: String,
       queries: DataFrame,
       k: Int, cand: Option[DataFrame]): DataFrame = {
+    val cb = f.sidecar("_cb")
     // the stored codebook determines the subspace width — probes of a
     // wide-dim index (subDim = 96 at dim 768) slice with ITS grid.
     // ONE ROW suffices (every codeword has the same length — the
@@ -1784,7 +1707,7 @@ object PqIndex {
         expr(s"graft_dot(slice(v, (sub-1)*$subDim+1, $subDim), c)")
           .as("dp"),
         col("nc2"))
-    val codesAll = codesIn
+    val codesAll = f.member(table)
       .select(col("vec_id"), col("nrm"),
         posexplode(col("codes")).as(Seq("pos", "cid")))
       .select(col("vec_id"), col("nrm"), (col("pos") + 1).as("sub"),
@@ -1824,12 +1747,8 @@ object PqIndex {
     * down to the candidate residents BEFORE the LUT lookup, so probe
     * cost is O(Σ|cell| · M), never corpus-wide. */
   def topKPairs(s: SparkSession, table: String, queries: DataFrame,
-      cand: DataFrame, k: Int): DataFrame = {
-    adcTopK(s.table(table + "_cb"),
-      TO.exceptTombstones(s.table(table), s, table + "_del",
-        "vec_id"),
-      queries, k, cand = Some(cand))
-  }
+      cand: DataFrame, k: Int): DataFrame =
+    adcTopK(family(table).frames(s), table, queries, k, cand = Some(cand))
 
   /** Memoized stored PQ index for `sfDir`'s embeddings — the
     * [[IvfIndex.ivfIndex]] contract (catalog memo, `_ok` marker, sweep,
@@ -2134,19 +2053,14 @@ object BqIndex {
       .saveAsTable(table)
   }
 
-  /** UPSERT vectors — the [[AnnIndex.upsert]] contract for the BQ
-    * signature family (stateless doc-local signatures: barrier +
-    * re-sign + append, one build-lock scope, O(batch)).
+  /** UPSERT vectors — [[IndexFamily.upsert]] for the BQ signatures
+    * (stateless doc-local signatures: barrier + re-sign + append,
+    * O(batch)).
     */
   def upsert(emb: DataFrame, table: String, dim: Int = CosSim.EmbDim,
       nBuckets: Int = 8): Unit =
-    TO.withBuildLock(emb.sparkSession) {
-      val s = emb.sparkSession
-      val g = TO.nextGen(s, table + "_del")
-      TO.tombstone(s, table + "_del", emb.select(col("vec_id")),
-        "vec_id", gen = g)
-      append(emb, table, dim, nBuckets, gen = g)
-    }
+    family(table).upsert(emb.sparkSession, emb)(g =>
+      append(emb, table, dim, nBuckets, gen = g))
 
   /** The BQ family's lifecycle ([[IndexFamily]]): the signature
     * member, the `_cfg` dim pin as sidecar. Every live signature must
@@ -2178,32 +2092,15 @@ object BqIndex {
     // tombstone-filter the SIGNATURE side only: queries and candidates
     // both come off it, so a deleted id can neither ask nor answer —
     // the payload join on surviving candidates can't resurrect one
-    val sigs = TO.exceptTombstones(s.table(table), s,
-      table + "_del", "vec_id")
-    val q = sigs.filter(isQuery(col("vec_id")))
-      .select(col("vec_id").as("q_id"), col("sig").as("q_sig"))
-    val wh = Window.partitionBy("q_id")
-      .orderBy(col("ham").asc, col("vec_id").asc)
-    val cand = sigs.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("ham", expr("graft_hamming(sig, q_sig)"))
-      .withColumn("hrn", row_number().over(wh))
-      .filter(col("hrn") <= c)
-      .select("q_id", "vec_id", "ham")
+    val sigs = family(table).frames(s).member(table)
     val vecs = s.table(vecTable)
-    val qv = vecs.filter(isQuery(col("vec_id")))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
-    val sim = CosSim.sentinel(expr("graft_dot(v, qv)"),
-      col("nrm"), col("qn"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("sim").desc, col("vec_id").asc)
-    cand.join(vecs, "vec_id").join(broadcast(qv), "q_id")
-      .withColumn("sim", sim)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("vec_id"), col("ham").cast("int").as("ham"),
-        col("sim"))
+    score(sigs, vecs,
+      sigs.filter(isQuery(col("vec_id")))
+        .select(col("vec_id").as("q_id"), col("sig").as("q_sig")),
+      vecs.filter(isQuery(col("vec_id")))
+        .select(col("vec_id").as("q_id"), col("v").as("qv"),
+          col("nrm").as("qn")),
+      k, c, selfExclude = true)
   }
 
   /** EXTERNAL-QUERY Hamming serving — the [[AnnIndex.scoreExternal]]
@@ -2218,79 +2115,70 @@ object BqIndex {
     */
   def scoreExternal(queries: DataFrame, s: SparkSession, table: String,
       vecTable: String, k: Int, c: Int = C,
-      dim: Int = CosSim.EmbDim): DataFrame = {
-    val dm = TO.readIndexConfig(s, table).map(_("dim")).getOrElse(dim)
-    val sigs = TO.exceptTombstones(s.table(table), s,
-      table + "_del", "vec_id")
-    scoreExternalFrames(queries, sigs, s.table(vecTable), dm, k, c)
-  }
+      dim: Int = CosSim.EmbDim): DataFrame =
+    scoreAt(queries, s, table, None, s.table(vecTable), k, c, dim)
 
   /** [[scoreExternal]] AS OF a `<tag>` manifest snapshot WITHOUT
-    * restoring anything: signatures and tombstones from
-    * [[graft.operators.TextOps.readSnapshot]]'s file-pinned frames,
-    * the packing width from the snapshot's own `_cfg` meta copy. The
-    * exact-rerank PAYLOAD lives in another family (the live probes
-    * pass a `vecTable` — conventionally the banded-ANN family's
-    * `_vec`), so the as-of caller supplies it as a frame pinned to
-    * the SAME cadence tag, e.g.
-    * `TextOps.readSnapshot(s, annTable, tag, "_vec")` — the audit
-    * composes the two families' snapshots explicitly rather than
-    * this verb guessing whose past to read. One scoring definition
-    * ([[scoreExternalFrames]]) with the live path. */
+    * restoring anything: signatures and the packing width are the
+    * family's as-of [[IndexFamily.frames]]. The exact-rerank PAYLOAD
+    * lives in another family (the live probes pass a `vecTable` —
+    * conventionally the banded-ANN family's `_vec`), so the as-of
+    * caller supplies it as a frame pinned to the SAME cadence tag —
+    * [[TextOps.readSnapshot]] of the ANN family's `_vec` member at
+    * that tag — the audit composes the two families' snapshots
+    * explicitly rather than this verb guessing whose past to read.
+    * One scorer with the live path. */
   def scoreAsOf(queries: DataFrame, s: SparkSession, table: String,
       tag: String, vecs: DataFrame, k: Int, c: Int = C,
-      dim: Int = CosSim.EmbDim): DataFrame = {
-    val mf = s"${table}_mf_$tag"
-    require(s.catalog.tableExists(mf), s"scoreAsOf: no manifest $mf")
-    val manifest = TO.readManifest(s, mf)
-    val dm =
-      if (s.catalog.tableExists(s"${table}_cfg_bak_mf$tag")) {
-        val row = TO.readSnapshot(s, table, tag, "_cfg").collect()(0)
-        row.getAs[Int]("dim")
-      } else dim
-    val del =
-      if (manifest.contains(table + "_del"))
-        Some(TO.readSnapshot(s, table, tag, "_del"))
-      else None
-    val sigs = TO.exceptTombstonesFrame(
-      TO.readSnapshot(s, table, tag), del, "vec_id")
-    scoreExternalFrames(queries, sigs, vecs, dm, k, c)
+      dim: Int = CosSim.EmbDim): DataFrame =
+    scoreAt(queries, s, table, Some(tag), vecs, k, c, dim)
+
+  /** External queries over the live or the tag's signatures, packed
+    * at the pinned width (`dim` when the family has no pin). */
+  private def scoreAt(queries: DataFrame, s: SparkSession,
+      table: String, asOf: Option[String], vecs: DataFrame, k: Int,
+      c: Int, dim: Int): DataFrame = {
+    val f = family(table).frames(s, asOf)
+    val q = Ann.prepExternal(queries, f.config.fold(dim)(_("dim")))
+      .withColumn("q_sig", expr("graft_sign_pack_words(qv)"))
+    score(f.member(table), vecs, q.select("q_id", "q_sig"),
+      q.select("q_id", "qv", "qn"), k, c, selfExclude = false)
   }
 
-  /** The ONE external-query Hamming pipeline behind the live and
-    * as-of probes (`sigs`/`vecs` = live tables minus tombstones, or a
-    * snapshot's file-pinned frames). */
-  private def scoreExternalFrames(queries: DataFrame, sigs: DataFrame,
-      vecs: DataFrame, dm: Int, k: Int, c: Int): DataFrame = {
-    val q = Ann.prepExternal(queries, dm)
-      .withColumn("q_sig", expr("graft_sign_pack_words(qv)"))
-    // phase 1 keeps the member-topK contract: only (q_id, vec_id, ham)
-    // int triples travel into the top-C cut — the query VECTORS rejoin
-    // from the broadcast side after the cut (review r13: carrying qv
-    // through the corpus-wide window was a ~25× data-volume blowup in
-    // exactly the scan this index keeps integer-cheap)
+  /** The ONE Hamming-prefilter + exact-rerank scan behind the member,
+    * external and as-of probes: `qSig` (q_id, q_sig) and `qVec`
+    * (q_id, qv, qn) are the query side, broadcast; `selfExclude`
+    * drops the query's own id (member queries are corpus rows).
+    * Phase 1 carries only (q_id, vec_id, ham) int triples into the
+    * top-C cut — the query VECTORS rejoin from the broadcast side
+    * after the cut (review r13: carrying qv through the corpus-wide
+    * window was a ~25× data-volume blowup in exactly the scan this
+    * index keeps integer-cheap). Candidates derive from the
+    * tombstone-filtered `sigs`, so the payload join cannot resurrect
+    * a deleted id — `vecs` rides in unfiltered. */
+  private def score(sigs: DataFrame, vecs: DataFrame, qSig: DataFrame,
+      qVec: DataFrame, k: Int, c: Int,
+      selfExclude: Boolean): DataFrame = {
+    val excl =
+      if (selfExclude) col("vec_id") =!= col("q_id") else lit(true)
     val wh = Window.partitionBy("q_id")
       .orderBy(col("ham").asc, col("vec_id").asc)
-    val cand = sigs.crossJoin(broadcast(q.select("q_id", "q_sig")))
+    val cand = sigs.crossJoin(broadcast(qSig))
+      .filter(excl)
       .withColumn("ham", expr("graft_hamming(sig, q_sig)"))
-      .select("q_id", "vec_id", "ham")
       .withColumn("hrn", row_number().over(wh))
       .filter(col("hrn") <= c)
       .select("q_id", "vec_id", "ham")
-    // candidates derive from the filtered sigs, so the payload join
-    // cannot resurrect a deleted id — the payload frame rides in
-    // unfiltered (the member topK rationale)
     val sim = CosSim.sentinel(expr("graft_dot(v, qv)"),
       col("nrm"), col("qn"))
     val w = Window.partitionBy("q_id")
       .orderBy(col("sim").desc, col("vec_id").asc)
-    cand.join(vecs, "vec_id")
-      .join(broadcast(q.select("q_id", "qv", "qn")), "q_id")
+    cand.join(vecs, "vec_id").join(broadcast(qVec), "q_id")
       .withColumn("sim", sim)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
-      .select(col("q_id"), col("vec_id"),
-        col("ham").cast("int").as("ham"), col("sim"))
+      .select(col("q_id"), col("vec_id"), col("ham").cast("int").as("ham"),
+        col("sim"))
   }
 
   /** Memoized stored signature table for `sfDir`'s embeddings — the
@@ -2414,19 +2302,14 @@ object SqIndex {
       .saveAsTable(table)
   }
 
-  /** UPSERT vectors — the [[AnnIndex.upsert]] contract for the SQ8
-    * codes family (stateless per-vector scales: barrier + re-quantize
-    * + append, one build-lock scope, O(batch)).
+  /** UPSERT vectors — [[IndexFamily.upsert]] for the SQ8 codes
+    * (stateless per-vector scales: barrier + re-quantize + append,
+    * O(batch)).
     */
   def upsert(emb: DataFrame, table: String, dim: Int = CosSim.EmbDim,
       nBuckets: Int = 8): Unit =
-    TO.withBuildLock(emb.sparkSession) {
-      val s = emb.sparkSession
-      val g = TO.nextGen(s, table + "_del")
-      TO.tombstone(s, table + "_del", emb.select(col("vec_id")),
-        "vec_id", gen = g)
-      append(emb, table, dim, nBuckets, gen = g)
-    }
+    family(table).upsert(emb.sparkSession, emb)(g =>
+      append(emb, table, dim, nBuckets, gen = g))
 
   /** The SQ8 family's lifecycle ([[IndexFamily]]): the codes member,
     * the `_cfg` dim pin as sidecar. Every live code row must carry
@@ -2456,23 +2339,11 @@ object SqIndex {
     * tiebreaks. */
   def topK(s: SparkSession, table: String, isQuery: Column => Column,
       k: Int): DataFrame = {
-    val e = TO.exceptTombstones(s.table(table), s,
-        table + "_del", "vec_id")
-      .withColumn("vq", expr(vqExpr))
-      .withColumn("nrm", expr("sqrt(graft_dot(vq, vq))"))
-    val q = e.filter(isQuery(col("vec_id")))
-      .select(col("vec_id").as("q_id"), col("vq").as("qv"),
-        col("nrm").as("qn"))
-    val sim = CosSim.sentinel(expr("graft_dot(vq, qv)"),
-      col("nrm"), col("qn"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("sim").desc, col("vec_id").asc)
-    e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("sim", sim)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select("q_id", "vec_id", "sim")
+    val e = dequantized(family(table).frames(s).member(table))
+    score(e, e.filter(isQuery(col("vec_id")))
+        .select(col("vec_id").as("q_id"), col("vq").as("qv"),
+          col("nrm").as("qn")),
+      k, selfExclude = true)
   }
 
   /** EXTERNAL-QUERY serving for the SQ8 index: `queries` is (q_id,
@@ -2486,51 +2357,47 @@ object SqIndex {
     * error scale (gated in ExternalProbeSpec).
     */
   def scoreExternal(queries: DataFrame, s: SparkSession, table: String,
-      k: Int, dim: Int = CosSim.EmbDim): DataFrame = {
-    val dm = TO.readIndexConfig(s, table).map(_("dim")).getOrElse(dim)
-    val codes = TO.exceptTombstones(s.table(table), s,
-      table + "_del", "vec_id")
-    scoreExternalFrames(queries, codes, dm, k)
-  }
+      k: Int, dim: Int = CosSim.EmbDim): DataFrame =
+    scoreAt(queries, s, table, None, k, dim)
 
   /** [[scoreExternal]] AS OF a `<tag>` manifest snapshot WITHOUT
-    * restoring anything: codes and tombstones from
-    * [[graft.operators.TextOps.readSnapshot]]'s file-pinned frames,
-    * the width from the snapshot's own `_cfg` meta copy. One scoring
-    * definition ([[scoreExternalFrames]]) with the live path. Audit
+    * restoring anything: codes and the width are the family's as-of
+    * [[IndexFamily.frames]]. One scorer with the live path. Audit
     * path, not the serving path. */
   def scoreAsOf(queries: DataFrame, s: SparkSession, table: String,
-      tag: String, k: Int, dim: Int = CosSim.EmbDim): DataFrame = {
-    val mf = s"${table}_mf_$tag"
-    require(s.catalog.tableExists(mf), s"scoreAsOf: no manifest $mf")
-    val manifest = TO.readManifest(s, mf)
-    val dm =
-      if (s.catalog.tableExists(s"${table}_cfg_bak_mf$tag")) {
-        val row = TO.readSnapshot(s, table, tag, "_cfg").collect()(0)
-        row.getAs[Int]("dim")
-      } else dim
-    val del =
-      if (manifest.contains(table + "_del"))
-        Some(TO.readSnapshot(s, table, tag, "_del"))
-      else None
-    val codes = TO.exceptTombstonesFrame(
-      TO.readSnapshot(s, table, tag), del, "vec_id")
-    scoreExternalFrames(queries, codes, dm, k)
+      tag: String, k: Int, dim: Int = CosSim.EmbDim): DataFrame =
+    scoreAt(queries, s, table, Some(tag), k, dim)
+
+  /** External queries over the live or the tag's codes, canonicalized
+    * at the pinned width (`dim` when the family has no pin). */
+  private def scoreAt(queries: DataFrame, s: SparkSession,
+      table: String, asOf: Option[String], k: Int,
+      dim: Int): DataFrame = {
+    val f = family(table).frames(s, asOf)
+    score(dequantized(f.member(table)),
+      Ann.prepExternal(queries, f.config.fold(dim)(_("dim"))), k,
+      selfExclude = false)
   }
 
-  /** The ONE external-query dequantized scan behind the live and
-    * as-of probes. */
-  private def scoreExternalFrames(queries: DataFrame, codes: DataFrame,
-      dm: Int, k: Int): DataFrame = {
-    val e = codes
-      .withColumn("vq", expr(vqExpr))
+  /** Codes rows with their reconstruction `vq` and its norm. */
+  private def dequantized(codes: DataFrame): DataFrame =
+    codes.withColumn("vq", expr(vqExpr))
       .withColumn("nrm", expr("sqrt(graft_dot(vq, vq))"))
-    val q = Ann.prepExternal(queries, dm)
+
+  /** The ONE dequantized brute scan behind the member, external and
+    * as-of probes: `q` (q_id, qv, qn) broadcast against every
+    * reconstruction; `selfExclude` drops the query's own id (member
+    * queries are corpus rows). */
+  private def score(e: DataFrame, q: DataFrame, k: Int,
+      selfExclude: Boolean): DataFrame = {
+    val excl =
+      if (selfExclude) col("vec_id") =!= col("q_id") else lit(true)
     val sim = CosSim.sentinel(expr("graft_dot(vq, qv)"),
       col("nrm"), col("qn"))
     val w = Window.partitionBy("q_id")
       .orderBy(col("sim").desc, col("vec_id").asc)
     e.crossJoin(broadcast(q))
+      .filter(excl)
       .withColumn("sim", sim)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)

@@ -204,10 +204,12 @@ object TextOps {
   private[graft] def readIndexConfig(s: org.apache.spark.sql.SparkSession,
       table: String): Option[Map[String, Int]] =
     if (!s.catalog.tableExists(table + "_cfg")) None
-    else {
-      val row = s.table(table + "_cfg").collect()(0)
-      Some(row.schema.fieldNames.map(k => k -> row.getAs[Int](k)).toMap)
-    }
+    else Some(configRow(s.table(table + "_cfg").collect()(0)))
+
+  /** A `_cfg` row (live or a snapshot's meta copy) as a map. */
+  private[graft] def configRow(
+      row: org.apache.spark.sql.Row): Map[String, Int] =
+    row.schema.fieldNames.map(k => k -> row.getAs[Int](k)).toMap
 
   /** COMPACT an append-grown bucketed index table. Append-only
     * maintenance (appendBm25Postings, AnnIndex/IvfIndex/PqIndex/
@@ -476,9 +478,10 @@ object TextOps {
       else None, idCol)
 
   /** [[exceptTombstones]] over an explicit tombstone FRAME instead of
-    * a live catalog table — the as-of probes subtract a snapshot's
-    * tombstone list read from its manifested files (r17). None = no
-    * list (nothing subtracted), matching the absent-table case. */
+    * a live catalog table — [[IndexFamily.frames]] subtracts a
+    * snapshot's tombstone list, read from its manifested files, from
+    * every as-of member read (r17). None = no list (nothing
+    * subtracted), matching the absent-table case. */
   private[graft] def exceptTombstonesFrame(
       df: org.apache.spark.sql.DataFrame,
       delFrame: Option[org.apache.spark.sql.DataFrame],
@@ -2785,7 +2788,9 @@ object TextOps {
     * parquet read of the snapshot's files (no bucket metadata), so
     * it serves AS-OF analytics and audits ("what did the corpus look
     * like last Tuesday"), not the zero-Exchange probe plans —
-    * restore for those. */
+    * restore for those. The raw read: tombstoned rows are still in
+    * it. The as-of probes read through [[IndexFamily.frames]], which
+    * subtracts the tag's own `_del` list. */
   def readSnapshot(s: org.apache.spark.sql.SparkSession,
       table: String, tag: String = "snap", member: String = "")
       : org.apache.spark.sql.DataFrame = {
@@ -3725,44 +3730,30 @@ object TextOps {
       withBuildLock(s) {
         applyBm25DeleteStage(s, table, statsTable)
       }
-    (exceptTombstones(s.table(table), s, table + "_del", "doc_id"),
+    (bm25Family(table, statsTable).frames(s).member(table),
       s.table(statsTable))
   }
 
   /** Score (q_id, token) query terms against a BM25 family AS OF a
     * `<tag>` manifest snapshot WITHOUT restoring anything — the
-    * audit-path probe (r17, VERDICT item 5): postings and the
-    * tombstone list come from [[readSnapshot]]'s file-pinned frames
-    * (fold-anchor-aware, like every snapshot read), the stats row
-    * from its O(1) meta copy, and the arithmetic is the ONE shared
-    * scorer ([[bm25ScoreIncr]]) — so the as-of score equals what a
-    * restored copy of the tag would serve (AsOfProbeSpec gates
-    * value-parity). The plan is plain parquet scans with a one-off
-    * Exchange — this is the AUDIT path ("what did this query score
-    * last Tuesday"), not the serving path; restore for serving.
-    * Refuses a snapshot carrying a PENDING delete stage: the serving
-    * path folds the stage before scoring, so no served state ever
-    * matches the raw staged mix. */
+    * audit-path probe (r17, VERDICT item 5): postings and the stats
+    * row are the family's as-of [[IndexFamily.frames]] (file-pinned
+    * and fold-anchor-aware, the stats from the O(1) meta copy), and
+    * the arithmetic is the ONE shared scorer ([[bm25ScoreIncr]]) — so
+    * the as-of score equals what a restored copy of the tag would
+    * serve (AsOfProbeSpec gates value-parity). The plan is plain
+    * parquet scans with a one-off Exchange — this is the AUDIT path
+    * ("what did this query score last Tuesday"), not the serving
+    * path; restore for serving. Refuses an unknown tag, and a
+    * snapshot carrying a PENDING delete stage: the serving path folds
+    * the stage before scoring, so no served state ever matches the
+    * raw staged mix. */
   def scoreBm25AsOf(s: org.apache.spark.sql.SparkSession,
       table: String, tag: String,
       queryTerms: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val mf = s"${table}_mf_$tag"
-    require(s.catalog.tableExists(mf),
-      s"scoreBm25AsOf: no manifest $mf")
-    val manifest = readManifest(s, mf)
-    require(manifest.getOrElse(table + "_del_stage", Nil).isEmpty,
-      s"scoreBm25AsOf: snapshot $tag carries a pending delete " +
-        "stage — the serving path folds it before scoring; restore " +
-        "the snapshot and probe the restored family instead")
-    val postings = readSnapshot(s, table, tag)
-    val del =
-      if (manifest.contains(table + "_del"))
-        Some(readSnapshot(s, table, tag, "_del"))
-      else None
-    val stats = readSnapshot(s, table, tag, "_stats")
-    bm25ScoreIncr(queryTerms,
-      exceptTombstonesFrame(postings, del, "doc_id"), stats)
+    val f = bm25Family(table).frames(s, Some(tag))
+    bm25ScoreIncr(queryTerms, f.member(table), f.sidecar("_stats"))
   }
 
   /** Score query terms against an INCREMENTAL index ([[
@@ -4692,20 +4683,16 @@ object TextOps {
       appendBandIndex(old.filter(pmod(col("doc_id"), lit(2)) === 1), t)
     })
 
-  /** UPSERT documents into a stored band index — the
-    * [[upsertBm25Docs]] contract for the near-dup family (no stats
-    * twin here, so the whole op is barrier + append): the incoming
-    * ids' old signatures stop colliding, the batch's new signatures
-    * start, pure inserts just append. One build-lock scope, O(batch).
+  /** UPSERT documents into a stored band index —
+    * [[IndexFamily.upsert]] for the near-dup family (no stats twin, so
+    * the whole op is barrier + append): the incoming ids' old
+    * signatures stop colliding, the batch's new signatures start, pure
+    * inserts just append. O(batch).
     */
   def upsertBandDocs(s: org.apache.spark.sql.SparkSession,
       table: String, docs: org.apache.spark.sql.DataFrame): Unit =
-    withBuildLock(s) {
-      val g = nextGen(s, table + "_del")
-      tombstone(s, table + "_del",
-        docs.select(col("doc_id").as("old_id")), "old_id", gen = g)
-      appendBandIndex(docs, table, gen = g)
-    }
+    bandFamily(table).upsert(s, docs)(g =>
+      appendBandIndex(docs, table, gen = g))
 
   /** The tombstone-filtered serving view of a stored band index —
     * hand this to [[nearDupsAgainstIndex]] (it takes a frame, so the
@@ -4714,7 +4701,7 @@ object TextOps {
     */
   def liveBandIndex(s: org.apache.spark.sql.SparkSession,
       table: String): org.apache.spark.sql.DataFrame =
-    exceptTombstones(s.table(table), s, table + "_del", "old_id")
+    bandFamily(table).frames(s).member(table)
 
   /** Near-dup pairs of `newDocs` against a stored (band_key, old_id,
     * old_toks) index frame (spark.table of a [[writeBandIndex]] table,
@@ -4745,27 +4732,19 @@ object TextOps {
     * time" is the training-data provenance question a contamination
     * audit asks, and it must be answered against the index AS IT
     * STOOD, not today's (documents upserted since the tag must
-    * neither collide nor mask). Band rows and the tombstone list come
-    * from [[readSnapshot]]'s file-pinned frames; the probe pipeline
-    * is the ONE live definition, so parity with a restored copy holds
-    * by construction (AsOfProbeSpec gates it). No `_del_stage` guard:
-    * band deletes tombstone directly (no stats WAL). Audit path, not
-    * the serving path.
+    * neither collide nor mask). The band rows are the family's as-of
+    * [[IndexFamily.frames]]; the probe pipeline is the ONE live
+    * definition, so parity with a restored copy holds by construction
+    * (AsOfProbeSpec gates it). No `_del_stage` guard: band deletes
+    * tombstone directly (no stats WAL). Audit path, not the serving
+    * path.
     */
   def nearDupsAsOf(s: org.apache.spark.sql.SparkSession,
       table: String, tag: String,
       newDocs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val mf = s"${table}_mf_$tag"
-    require(s.catalog.tableExists(mf), s"nearDupsAsOf: no manifest $mf")
-    val manifest = readManifest(s, mf)
-    val del =
-      if (manifest.contains(table + "_del"))
-        Some(readSnapshot(s, table, tag, "_del"))
-      else None
-    nearDupsAgainstIndex(newDocs, exceptTombstonesFrame(
-      readSnapshot(s, table, tag), del, "old_id"))
-  }
+      : org.apache.spark.sql.DataFrame =
+    nearDupsAgainstIndex(newDocs,
+      bandFamily(table).frames(s, Some(tag)).member(table))
 
   /** Exact set-overlap verification used by every near-dup candidate
     * check — ONE definition (shared with the QDefs below) so the

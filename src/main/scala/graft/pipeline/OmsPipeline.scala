@@ -138,8 +138,10 @@ object OmsPipeline {
     * file: `source` names the column that tells a union's files apart,
     * and the gate is a window count over it, so a whole directory stays
     * one lazy plan — no driver actions, no per-file jobs. A frame
-    * without `source` is one file, gated in one partition (Spark warns
-    * "No Partition Defined" for it). The diff is a window lag over
+    * without `source` is one file: its gate is one global aggregate
+    * cross-joined onto the frame (still lazy, and the rows keep their
+    * partitions — a window without a partition key would move them
+    * all to one). The diff is a window lag over
     * (source, country) ordered by date (the reference relies on file
     * order — a latent bug SURVEY.md §7.4.2 resolves with the explicit
     * sort).
@@ -153,19 +155,26 @@ object OmsPipeline {
     // to fully-identical rows (whose lag is then identical anyway)
     val wTie = Window.partitionBy(file :+ col("country"): _*)
       .orderBy(col("date"), col("confirmed"), col("deaths"))
-    val wFile = Window.partitionBy(file: _*)
     // v3/v4 gate: column entirely null (ETL_OMS_FINAL.py:64); v5 gate:
     // entirely zero (ETL_OMS_OPERATIONNEL.py:141) — unified as "no
     // meaningful value present"
     def meaningful(c: String): Column =
-      (if (treatZeroAsMissing) count(when(col(c) =!= 0.0, 1))
-      else count(col(c))).over(wFile)
+      if (treatZeroAsMissing) count(when(col(c) =!= 0.0, 1))
+      else count(col(c))
     def diffed(cum: String): Column =
       coalesce(col(cum) - lag(cum, 1).over(wTie), lit(0.0))
-    // the gates are computed first: their shuffle on the file key also
-    // serves the (file, country) lag, so a union shuffles once
-    df.withColumn("__nc_present", meaningful("new_cases"))
-      .withColumn("__nd_present", meaningful("new_deaths"))
+    val gated = source match {
+      // the gates are computed first: their shuffle on the file key
+      // also serves the (file, country) lag, so a union shuffles once
+      case Some(_) =>
+        val wFile = Window.partitionBy(file: _*)
+        df.withColumn("__nc_present", meaningful("new_cases").over(wFile))
+          .withColumn("__nd_present", meaningful("new_deaths").over(wFile))
+      case None =>
+        df.crossJoin(df.agg(meaningful("new_cases").as("__nc_present"),
+          meaningful("new_deaths").as("__nd_present")))
+    }
+    gated
       .withColumn("new_cases", when(col("__nc_present") === 0L,
         diffed("confirmed")).otherwise(col("new_cases")))
       .withColumn("new_deaths", when(col("__nd_present") === 0L,

@@ -343,4 +343,59 @@ class AsOfProbeSpec extends AnyFunSuite with SparkSuite {
         k = 5)) === asOf)
     } finally drop(all: _*)
   }
+
+  // ---- refusals: an as-of probe never falls back to live state
+
+  test("every as-of verb refuses an unknown tag, naming the missing " +
+      "manifest") {
+    val t = s"ao_none_p$pid"
+    val none = spark.emptyDataFrame
+    val verbs: Seq[(String, () => Any)] = Seq(
+      "AnnIndex.scoreAsOf" -> (() => AnnIndex.scoreAsOf(none, spark, t,
+        "nope")),
+      "IvfIndex.scoreAsOf" -> (() => IvfIndex.scoreAsOf(none, spark, t,
+        "nope", k = 5)),
+      "PqIndex.scoreAsOf" -> (() => PqIndex.scoreAsOf(none, spark, t,
+        "nope", k = 5)),
+      "PqIndex.scoreAsOfPairs" -> (() => PqIndex.scoreAsOfPairs(none,
+        spark, t, "nope", none, k = 5)),
+      "BqIndex.scoreAsOf" -> (() => BqIndex.scoreAsOf(none, spark, t,
+        "nope", none, k = 5)),
+      "SqIndex.scoreAsOf" -> (() => SqIndex.scoreAsOf(none, spark, t,
+        "nope", k = 5)),
+      "TextOps.scoreBm25AsOf" -> (() => TextOps.scoreBm25AsOf(spark, t,
+        "nope", none)),
+      "TextOps.nearDupsAsOf" -> (() => TextOps.nearDupsAsOf(spark, t,
+        "nope", none)))
+    verbs.foreach { case (name, run) =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains(s"${t}_mf_nope"),
+        s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("scoreBm25AsOf refuses a snapshot taken while a delete stage " +
+      "was pending") {
+    val t = s"ao_stage_p$pid"
+    val all = famAll(t)
+    drop(all: _*)
+    try {
+      val sp = spark
+      import sp.implicits._
+      TextOps.appendBm25Postings(
+        (1L to 10L).map(i => i -> s"spark shuffle token$i")
+          .toDF("doc_id", "text"), t, s"${t}_stats")
+      // a crashed delete: the write-ahead stage committed, nothing
+      // applied (the DeleteSpec crash state A)
+      spark.table(t).select("doc_id", "dl").distinct()
+        .filter(col("doc_id") === 4L)
+        .withColumn("gen", lit(TextOps.TerminalGen))
+        .write.saveAsTable(s"${t}_del_stage")
+      TextOps.snapshotIndex(spark, t, "s1")
+      val qt = Seq((1, "spark")).toDF("q_id", "token")
+      val e = intercept[IllegalArgumentException](
+        TextOps.scoreBm25AsOf(spark, t, "s1", qt))
+      assert(e.getMessage.contains("pending delete stage"))
+    } finally drop(all: _*)
+  }
 }

@@ -417,4 +417,29 @@ class OmsPipelineSpec extends AnyFunSuite with SparkSuite {
       .orderBy("date").select("new_cases").collect().map(_.getDouble(0))
     assert(out.toSeq === Seq(0.0, 15.0))
   }
+
+  test("standardize on a multi-partition frame plans no Window " +
+      "without a partition key") {
+    val sp = spark
+    import sp.implicits._
+    // two countries, one all-null delta column (so the gate derives
+    // it) spread over four partitions
+    val raw = (1 to 8).map(d => ("X", f"2024-01-$d%02d", 10.0 * d, 1.0))
+      .++((1 to 8).map(d => ("Y", f"2024-01-$d%02d", 5.0 * d, 2.0)))
+      .toDF("country", "date", "confirmed", "deaths")
+      .repartition(4)
+    val out = OmsPipeline.standardize(raw, "COVID-19")
+    val rows = out.filter(col("country") === "X").orderBy("date")
+      .select("new_cases").collect().map(_.getDouble(0))
+    assert(rows.toSeq === 0.0 +: Seq.fill(7)(10.0))
+    out.collect()
+    val helper =
+      new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val windows = helper.collect(out.queryExecution.executedPlan) {
+      case w: org.apache.spark.sql.execution.window.WindowExec => w
+    }
+    assert(windows.nonEmpty, "the per-country lag is a window")
+    assert(windows.forall(_.partitionSpec.nonEmpty),
+      "a Window without a partition key moves every row to one partition")
+  }
 }
