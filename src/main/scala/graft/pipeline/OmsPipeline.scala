@@ -1,11 +1,15 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StringType, StructField,
-  StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType,
+  LongType, StringType, StructField, StructType}
 
 /** Full-pipeline parity with the reference ETL (SURVEY.md §3): ingest
   * heterogeneous epidemic CSV/JSON, normalize schemas, derive daily deltas
@@ -16,7 +20,7 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructField,
   * two-pass re-extraction), this is declarative: broadcast joins for dim
   * lookups, one cached standardized frame, window functions for deltas.
   * All per-country derivations shuffle once on `country`; dims are
-  * dimension-sized and broadcast.
+  * dimension-sized, built once on the driver and broadcast.
   *
   * Order-dependence fixes (SURVEY.md §7.4.2): the reference's diff-without-
   * sort and index+1 ids rely on input file order; here deltas order by
@@ -272,54 +276,81 @@ object OmsPipeline {
 
   /** EP2 star schema (reference ETL_OMS_FINAL.py:74-100): one disease,
     * so maladie is the one-row literal dim (present even on empty
-    * input) and every fact row is disease 1.
+    * input) and every fact row is disease 1. Runs one query when called,
+    * [[star]]'s collect of the distinct keys (under AQE, its shuffle and
+    * its result are two jobs); the fact stays lazy.
     */
   def starSchema(standardized: DataFrame, pandemicName: String,
       spark: SparkSession): StarSchema = {
     val sp = spark
     import sp.implicits._
     star(standardized,
-      Seq((1, pandemicName)).toDF("id_maladie", "nom_maladie"),
-      byName = false)
+      Some(Seq((1, pandemicName)).toDF("id_maladie", "nom_maladie")))
   }
 
-  /** The pays/region dims and the fact both star builders share.
-    * Surrogate ids are ordinal over name sort order (the reference uses
-    * first-appearance index+1, which depends on input order); region
-    * mirrors pays 1:1 as in the reference. `byName` keys each fact row
-    * to its own disease through a broadcast lookup on `maladie`'s
-    * names; otherwise every row is disease 1.
+  /** `values` in the order `row_number().over(Window.orderBy(c))` numbers
+    * a column `c` of type `dt`: Spark's own ascending order, nulls first.
+    * For strings that is UTF-8 byte order, which is not Java's
+    * `String.compareTo` (UTF-16 units) beyond the Basic Multilingual
+    * Plane.
     */
-  private def star(standardized: DataFrame, maladie: DataFrame,
-      byName: Boolean): StarSchema = {
-    val pays = standardized.select("country").distinct()
-      .withColumn("id_pays", row_number().over(Window.orderBy("country")))
-    // region mirrors pays 1:1 (ETL_OMS_FINAL.py:78-81) but is computed as
-    // its own frame (fresh attribute ids) so the composite-key join below
-    // is not a self join on shared attributes.
-    val region = standardized.select(col("country").as("nom_region"))
-      .distinct()
-      .withColumn("id_region", row_number().over(Window.orderBy("nom_region")))
-      .withColumn("id_pays", col("id_region"))
-      .select("id_region", "nom_region", "id_pays")
+  private def sparkOrder(values: Seq[Any], dt: DataType): Seq[Any] = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    values.sortBy(v => InternalRow(toCatalyst(v)))(
+      InterpretedOrdering.forSchema(Seq(dt)))
+  }
+
+  /** A relation of `rows` held on the driver: joins broadcast it and
+    * writes read it without running its lineage again. */
+  private def local(spark: SparkSession, fields: Seq[StructField],
+      rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, StructType(fields))
+
+  /** The dims and the fact both star builders share. The dims are built
+    * once, on the driver, from one collect of the distinct (country,
+    * pandemic) keys — the reference's driver-side dim cache
+    * (ETL_OMS_OPERATIONNEL.py:229-234). Surrogate ids are ordinal over
+    * name order ([[sparkOrder]]; the reference uses first-appearance
+    * index+1, which depends on input order); region mirrors pays 1:1 as
+    * in the reference (ETL_OMS_FINAL.py:78-81), so one broadcast lookup
+    * on country gives a fact row both ids. Without `oneDisease` the
+    * maladie dim spans the diseases seen and a second broadcast lookup
+    * keys each row to its own; with it every row is disease 1.
+    */
+  private def star(standardized: DataFrame,
+      oneDisease: Option[DataFrame]): StarSchema = {
+    val spark = standardized.sparkSession
+    val distinctKeys = standardized.select("country", "pandemic").distinct()
+    val Seq(country, pandemic) = distinctKeys.schema.fields.toSeq
+    val keys = distinctKeys.collect().toSeq
+    def numbered(i: Int): Seq[(Any, Int)] =
+      sparkOrder(keys.map(_.get(i)).distinct,
+        distinctKeys.schema(i).dataType).zipWithIndex
+        .map { case (v, n) => (v, n + 1) }
+    val id = (n: String) => StructField(n, IntegerType, nullable = false)
+    val countries = numbered(0)
+    val pays = local(spark, Seq(country, id("id_pays")),
+      countries.map { case (c, n) => Row(c, n) })
+    val region = local(spark,
+      Seq(id("id_region"), country.copy(name = "nom_region"), id("id_pays")),
+      countries.map { case (c, n) => Row(n, c, n) })
     val withPays = standardized.join(broadcast(pays), Seq("country"))
-    val withRegion = withPays
-      .join(broadcast(region),
-        withPays("id_pays") === region("id_pays") &&
-          withPays("country") === region("nom_region"))
-    val (keyed, idMaladie) =
-      if (byName)
-        (withRegion.join(broadcast(maladie),
-          withPays("pandemic") === maladie("nom_maladie")),
-          maladie("id_maladie"))
-      else (withRegion, lit(1).as("id_maladie"))
+    val (maladie, keyed, idMaladie) = oneDisease match {
+      case Some(one) => (one, withPays, lit(1))
+      case None =>
+        val dim = local(spark,
+          Seq(id("id_maladie"), pandemic.copy(name = "nom_maladie")),
+          numbered(1).map { case (p, n) => Row(n, p) })
+        (dim, withPays.join(broadcast(dim),
+          col("pandemic") === col("nom_maladie")), col("id_maladie"))
+    }
     val fact = keyed
-      .select(idMaladie, region("id_region"), col("date"),
+      .select(idMaladie.as("id_maladie"), col("id_pays").as("id_region"),
+        col("date"),
         col("new_deaths").as("nouveau_mort"),
         col("new_cases").as("nouveau_cas"),
         col("deaths").as("total_mort"))
-    StarSchema(pays.select("country", "id_pays"), region,
-      maladie.select("id_maladie", "nom_maladie"), fact)
+    StarSchema(pays, region, maladie, fact)
   }
 
   /** v5 pre-load dedup-agg (reference ETL_OMS_OPERATIONNEL.py:160-166):
@@ -358,18 +389,40 @@ object OmsPipeline {
   }
 
   /** U1 dim upsert: insert-if-absent with stable ids for existing rows
-    * (reference get-or-insert, ETL_OMS_OPERATIONNEL.py:263-284). New names
-    * get ids after the current max, ordered by name.
+    * (reference get-or-insert, ETL_OMS_OPERATIONNEL.py:263-284), merged
+    * on the driver: a dimension is dimension-sized. The dim's
+    * `(name, id)` rows and the distinct incoming names are collected;
+    * each name the dim lacks gets `max(id) + its ordinal` in name order
+    * ([[sparkOrder]]), after the existing rows. A null name never
+    * matches an existing one, so an incoming null is always appended.
+    * The result is a local relation with the dim's `(name, id)` schema;
+    * the id column must be `int` or `bigint`.
     */
   def upsertDim(dim: DataFrame, names: DataFrame, nameCol: String,
       idCol: String): DataFrame = {
-    val newNames = names.select(nameCol).distinct()
-      .join(dim, Seq(nameCol), "left_anti")
-    val maxId = dim.agg(coalesce(max(col(idCol)), lit(0))).first()
-      .getAs[Number](0).intValue()
-    val fresh = newNames.withColumn(idCol,
-      (row_number().over(Window.orderBy(nameCol)) + maxId))
-    dim.select(nameCol, idCol).unionByName(fresh.select(nameCol, idCol))
+    val current = dim.select(nameCol, idCol)
+    val (nameField, idField) = (current.schema(0), current.schema(1))
+    val toId: Long => Any = idField.dataType match {
+      case IntegerType => Math.toIntExact(_)
+      case LongType => identity
+      case t => throw new IllegalArgumentException(
+        s"upsertDim: id column $idCol is ${t.simpleString}, not int/bigint")
+    }
+    val rows = current.collect().toSeq
+    val known = rows.map(_.get(0)).filter(_ != null).toSet
+    val maxId = rows.flatMap(r => Option(r.get(1)))
+      .map(_.asInstanceOf[Number].longValue).maxOption.getOrElse(0L)
+    val incoming = names.select(nameCol)
+    val fresh = sparkOrder(
+      incoming.distinct().collect().toSeq.map(_.get(0))
+        .filterNot(n => n != null && known(n)),
+      incoming.schema(0).dataType)
+    local(dim.sparkSession,
+      Seq(nameField.copy(
+        nullable = nameField.nullable || incoming.schema(0).nullable),
+        idField),
+      rows ++ fresh.zipWithIndex.map { case (n, i) =>
+        Row(n, toId(maxId + i + 1)) })
   }
 
   /** S5/S6 sinks (reference ETL_OMS_FINAL.py:103-108): CSV with header +
@@ -477,11 +530,7 @@ object OmsPipeline {
     */
   def starSchemaMulti(standardized: DataFrame,
       spark: SparkSession): StarSchema =
-    star(standardized,
-      standardized.select(col("pandemic").as("nom_maladie")).distinct()
-        .withColumn("id_maladie",
-          row_number().over(Window.orderBy("nom_maladie"))),
-      byName = true)
+    star(standardized, None)
 
   /** v5 per-file standardization (reference
     * ETL_OMS_OPERATIONNEL.py:95-150): v5 synonym map, null completion,

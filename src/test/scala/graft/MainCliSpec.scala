@@ -68,4 +68,28 @@ class MainCliSpec extends AnyFunSuite with SparkSuite {
     val maladie = spark.read.option("header", true).csv(s"$dir/Maladie.csv")
     assert(maladie.count() >= 2) // COVID-19 + Monkeypox at least
   }
+
+  test("CLI directory mode writes the committed golden star, byte for " +
+      "byte, over the six fixture dialects") {
+    // src/test/resources/oms/star holds the five tables an earlier,
+    // set-based star builder wrote for these fixtures: each CSV table's
+    // one part file and each JSON array
+    val out = java.nio.file.Files.createTempDirectory("graft_cli_g").toString
+    Main.run(spark, Main.Args(dir = Some(OmsFixtures.dir), out = out))
+    // compared as UTF-8 text: equal text is equal bytes, and a failure
+    // prints readable rows
+    def text(f: java.io.File) = new String(
+      java.nio.file.Files.readAllBytes(f.toPath),
+      java.nio.charset.StandardCharsets.UTF_8)
+    val golden = new java.io.File(OmsFixtures.dir, "star")
+    for (t <- Seq("Pays", "Region", "Maladie", "Statistique", "RegionGeo")) {
+      val parts = new java.io.File(s"$out/Operational/$t.csv").listFiles()
+        .filter(_.getName.startsWith("part-"))
+      assert(parts.length === 1, t)
+      assert(text(parts.head) === text(new java.io.File(golden, s"$t.csv")),
+        t)
+      assert(text(new java.io.File(s"$out/Operational/$t.json")) ===
+        text(new java.io.File(golden, s"$t.json")), t)
+    }
+  }
 }

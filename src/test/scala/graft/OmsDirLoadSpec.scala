@@ -5,6 +5,9 @@ import java.nio.file.{Files, Path => JPath}
 
 import graft.pipeline.{OmsPipeline, SchemaMapper}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.DateType
 import org.apache.spark.storage.StorageLevel
@@ -16,7 +19,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * union; each leg holds it to the file-by-file definition it replaces:
   * Spark's own header names, and
   * `standardizeOperational(extract(f), detectMaladie(f))` per file. The
-  * sink (`saveTable`) computes a table once for both its formats.
+  * sink (`saveTable`) computes a table once for both its formats, and
+  * the whole load, star dimensions built on the driver, holds a job
+  * budget with no global window in its tables' plans.
   */
 class OmsDirLoadSpec extends AnyFunSuite with SparkSuite {
 
@@ -201,6 +206,36 @@ class OmsDirLoadSpec extends AnyFunSuite with SparkSuite {
         assert(runJobs(three) === oneJobs)
         unmappable(three)
         assert(runJobs(three) === oneJobs)
+      }
+    }
+  }
+
+  test("job and plan budget of a whole directory load: read, star and " +
+      "region-geo sinks run 21 jobs over the six fixtures, and no " +
+      "table's plan holds a window without a partition key") {
+    withDir { out =>
+      var plans = Seq.empty[(String, SparkPlan)]
+      val jobs = jobsOf {
+        val res = OmsPipeline.runOperational(spark, OmsFixtures.dir)
+        val s = res.star
+        plans = Seq("Pays" -> s.pays, "Region" -> s.region,
+          "Maladie" -> s.maladie, "Statistique" -> s.statistique,
+          "RegionGeo" -> res.regionGeo)
+          .map { case (t, df) => t -> df.queryExecution.executedPlan }
+        OmsPipeline.saveStar(s, out.toString)
+        OmsPipeline.saveTable(res.regionGeo, out.toString, "RegionGeo")
+        res.release()
+      }
+      // 37 while every table that read a dim planned and ran the dim's
+      // distinct and global row_number window again
+      assert(jobs === 21)
+      val helper = new AdaptiveSparkPlanHelper {}
+      plans.foreach { case (t, plan) =>
+        val global = helper.collect(plan) {
+          case w: WindowExec if w.partitionSpec.isEmpty => w
+        }
+        assert(global.isEmpty, s"$t plans a window without a partition " +
+          s"key, which moves every row to one partition:\n$plan")
       }
     }
   }

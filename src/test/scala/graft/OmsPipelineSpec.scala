@@ -1,7 +1,10 @@
 package graft
 
 import graft.pipeline.{OmsPipeline, SchemaMapper}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden-file parity (SURVEY.md §5.3): run the EP2 star-schema pipeline
@@ -238,6 +241,90 @@ class OmsPipelineSpec extends AnyFunSuite with SparkSuite {
     val out = OmsPipeline.upsertDim(dim, names, "nom_pays", "id_pays")
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(out === Map("France" -> 1, "Peru" -> 2, "Benin" -> 3, "Chad" -> 4))
+  }
+
+  /** The set-based `upsertDim` the driver-side merge replaced, kept as
+    * its reference definition: left-anti on the name, fresh ids from a
+    * global `row_number()` over the name after the dim's max id. */
+  private def upsertDimSetBased(dim: DataFrame, names: DataFrame,
+      nameCol: String, idCol: String): DataFrame = {
+    val newNames = names.select(nameCol).distinct()
+      .join(dim, Seq(nameCol), "left_anti")
+    val maxId = dim.agg(coalesce(max(col(idCol)), lit(0))).first()
+      .getAs[Number](0).intValue()
+    val fresh = newNames.withColumn(idCol,
+      (row_number().over(Window.orderBy(nameCol)) + maxId))
+    dim.select(nameCol, idCol).unionByName(fresh.select(nameCol, idCol))
+  }
+
+  test("dimension ids follow Spark's string order where Java's " +
+      "String.compareTo disagrees: null, empty, case, accents, a " +
+      "supplementary character against U+FF21, a duplicate") {
+    val sp = spark
+    import sp.implicits._
+    val grin = new String(Character.toChars(0x1F600))
+    val names: Seq[Option[String]] = Seq(None, Some(""), Some("a"),
+      Some("B"), Some("Cote"), Some("Côte d'Ivoire"), Some("Curaçao"),
+      Some(grin), Some("Ａ"), Some("a"))
+    // UTF-16 puts the surrogate pair (0xD83D…) before U+FF21, UTF-8
+    // bytes (F0… against EF…) after it: the two orders really differ
+    assert(grin.compareTo("Ａ") < 0)
+    val df = names.toDF("name")
+    def ids(d: DataFrame, n: String, id: String): Map[Option[String], Int] =
+      d.select(n, id).collect()
+        .map(r => Option(r.getString(0)) -> r.getInt(1)).toMap
+    val expected = ids(df.distinct()
+      .withColumn("id", row_number().over(Window.orderBy("name"))),
+      "name", "id")
+    assert(expected.size === 9)
+    assert(expected(Some("Ａ")) < expected(Some(grin)))
+    val std = df.select(col("name").as("country"),
+      lit("2020-01-01").cast("timestamp").as("date"),
+      lit(1.0).as("new_deaths"), lit(2.0).as("new_cases"),
+      lit(3.0).as("deaths"), col("name").as("pandemic"))
+    val star = OmsPipeline.starSchemaMulti(std, spark)
+    assert(ids(star.pays, "country", "id_pays") === expected)
+    assert(ids(star.region, "nom_region", "id_region") === expected)
+    assert(ids(star.maladie, "nom_maladie", "id_maladie") === expected)
+    // every fact row with a non-null name is keyed to its name's ids
+    val keyed = star.statistique.select("id_region", "id_maladie")
+      .as[(Int, Int)].collect().toSeq.sorted
+    assert(keyed === names.flatten.map(n => (expected(Some(n)),
+      expected(Some(n)))).sorted)
+    val empty = Seq.empty[(String, Int)].toDF("name", "id")
+    assert(ids(OmsPipeline.upsertDim(empty, df, "name", "id"), "name",
+      "id") === expected)
+  }
+
+  test("upsertDim edge cases equal the set-based definition: a bigint " +
+      "id keeps its type, an incoming null is appended beside an " +
+      "existing null, a duplicate name gets one id, an empty dim starts " +
+      "at 1") {
+    val sp = spark
+    import sp.implicits._
+    def same(dim: DataFrame, names: DataFrame): DataFrame = {
+      val ours = OmsPipeline.upsertDim(dim, names, "name", "id")
+      val ref = upsertDimSetBased(dim, names, "name", "id")
+      assert(ours.schema === ref.schema)
+      assert(ours.collect().toSeq === ref.collect().toSeq)
+      ours
+    }
+    val long = same(Seq(("France", 1L), ("Peru", 7L)).toDF("name", "id"),
+      Seq("Peru", "Chad").toDF("name"))
+    assert(long.schema("id").dataType === LongType)
+    assert(long.as[(String, Long)].collect().last === ("Chad", 8L))
+    val nulls = same(
+      Seq((None, 1), (Some("France"), 2)).toDF("name", "id"),
+      Seq(None, Some("Chad"), None).toDF("name"))
+    assert(nulls.as[(Option[String], Int)].collect().toSeq === Seq(
+      (None, 1), (Some("France"), 2), (None, 3), (Some("Chad"), 4)))
+    val dup = same(Seq(("France", 1)).toDF("name", "id"),
+      Seq("Chad", "Benin", "Chad").toDF("name"))
+    assert(dup.count() === 3L)
+    val fresh = same(Seq.empty[(String, Int)].toDF("name", "id"),
+      Seq("Peru", "Chad").toDF("name"))
+    assert(fresh.as[(String, Int)].collect().toSeq ===
+      Seq(("Chad", 1), ("Peru", 2)))
   }
 
   test("operational run: unmappable files skipped, diseases detected") {
