@@ -2040,6 +2040,37 @@ object TextOps {
     case object Anchor extends FoldGuard
   }
 
+  /** Which tagged records a prune drops: the one policy behind every
+    * retention verb — family and group snapshots and backups
+    * ([[pruneSnapshots]], [[pruneBackups]], their
+    * `graft.streaming.StreamingOps` group forms) and the admission
+    * audit partitions (`StreamingOps.pruneAdmissionAudit`). Count and
+    * age compose by running two prunes: keep at least N, and nothing
+    * older than T. Refuses an invalid bound when built.
+    */
+  sealed trait Retention {
+    /** The items of `newestFirst` to drop, in its order. `mtime` reads
+      * an item's age clock (ms); only age policies call it, so a count
+      * prune never pays for an age read. */
+    def select[A](newestFirst: Seq[A])(mtime: A => Long): Seq[A]
+  }
+  object Retention {
+    /** Keep the newest `n` (`n >= 1`), drop the rest. */
+    final case class KeepNewest(n: Int) extends Retention {
+      require(n >= 1, s"Retention.KeepNewest: n must be >= 1, got $n")
+      def select[A](newestFirst: Seq[A])(mtime: A => Long): Seq[A] =
+        newestFirst.drop(n)
+    }
+    /** Drop what is strictly older than `ms` (`ms >= 0`) at `nowMs`:
+      * `mtime < nowMs - ms`. `nowMs` is settable for determinism. */
+    final case class OlderThan(ms: Long,
+        nowMs: Long = System.currentTimeMillis()) extends Retention {
+      require(ms >= 0, s"Retention.OlderThan: ms must be >= 0, got $ms")
+      def select[A](newestFirst: Seq[A])(mtime: A => Long): Seq[A] =
+        newestFirst.filter(a => mtime(a) < nowMs - ms)
+    }
+  }
+
   /** The fold-anchor directory for one member under one snapshot
     * tag: `<warehouse>/<member>_mfanchor_<tag>`. Not a catalog
     * table — just the pinned data files at their manifested relative
@@ -2865,21 +2896,37 @@ object TextOps {
     }
   }
 
-  /** The family's manifest snapshots, NEWEST FIRST: (tag, manifest
-    * mtime ms). Age comes from the manifest table's own location
-    * mtime — no clock rides in the data. */
-  def listSnapshots(s: org.apache.spark.sql.SparkSession,
-      table: String): Seq[(String, Long)] = {
-    val prefix = s"${table.toLowerCase}_mf_"
-    s.sessionState.catalog
-      .listTables("default", s"$prefix*").map(_.table)
+  /** The tags of the catalog tables named `<prefix><tag>`, in name
+    * order. */
+  private[graft] def listTags(s: org.apache.spark.sql.SparkSession,
+      prefix: String): Seq[String] = {
+    val p = prefix.toLowerCase
+    s.sessionState.catalog.listTables("default", s"$p*")
+      .map(_.table.stripPrefix(p)).sorted
+  }
+
+  /** The tags of the catalog tables named `<prefix><tag>` with each
+    * table's location mtime, NEWEST FIRST: one catalog listing plus one
+    * `getFileStatus` per tag. Every tag record is written last by its
+    * take, so the mtime is the take's commit time — no clock rides in
+    * the data. */
+  private[graft] def listTagsWithAge(s: org.apache.spark.sql.SparkSession,
+      prefix: String): Seq[(String, Long)] = {
+    val p = prefix.toLowerCase
+    s.sessionState.catalog.listTables("default", s"$p*").map(_.table)
       .map { n =>
         val loc = tableLocation(s, n)
         val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        (n.stripPrefix(prefix), fs.getFileStatus(loc).getModificationTime)
+        (n.stripPrefix(p), fs.getFileStatus(loc).getModificationTime)
       }
       .sortBy(-_._2)
   }
+
+  /** The family's manifest snapshots, NEWEST FIRST: (tag, manifest
+    * mtime ms). */
+  def listSnapshots(s: org.apache.spark.sql.SparkSession,
+      table: String): Seq[(String, Long)] =
+    listTagsWithAge(s, s"${table}_mf_")
 
   /** The family's copy-based backups, by tag — COMMITTED sets only
     * (the `_bakok_<tag>` marker is written last by [[backupIndex]]
@@ -2887,63 +2934,33 @@ object TextOps {
     * restorable; a crashed backup's marker-less copies do NOT list —
     * [[checkBackup]] names them). */
   def listBackups(s: org.apache.spark.sql.SparkSession,
-      table: String): Seq[String] = {
-    val prefix = s"${table.toLowerCase}_bakok_"
-    s.sessionState.catalog
-      .listTables("default", s"$prefix*").map(_.table)
-      .map(_.stripPrefix(prefix))
-      .sorted
-  }
-
-  /** RETENTION: keep the newest `keep` manifest snapshots, drop the
-    * rest (manifest + meta copies + fold anchors). A tight snapshot
-    * cadence without this grows one tiny manifest table per tag
-    * forever. */
-  def pruneSnapshots(s: org.apache.spark.sql.SparkSession,
-      table: String, keep: Int): Seq[String] = withBuildLock(s) {
-    require(keep >= 1, "pruneSnapshots: keep must be >= 1")
-    listSnapshots(s, table).drop(keep).map { case (tag, _) =>
-      dropSnapshot(s, table, tag)
-      s"dropped snapshot $tag"
-    }
-  }
-
-  /** AGE-BASED retention twin (r17, VERDICT item 6): drop every
-    * manifest snapshot older than `olderThanMs` against the same
-    * mtime clock [[listSnapshots]] reports. `nowMs` is injectable
-    * for determinism; count-based and age-based compose (run both —
-    * keep at least N, and nothing older than T). */
-  def pruneSnapshotsOlderThan(s: org.apache.spark.sql.SparkSession,
-      table: String, olderThanMs: Long,
-      nowMs: Long = System.currentTimeMillis()): Seq[String] =
-    withBuildLock(s) {
-      require(olderThanMs >= 0,
-        "pruneSnapshotsOlderThan: olderThanMs must be >= 0")
-      listSnapshots(s, table)
-        .filter { case (_, mtime) => mtime < nowMs - olderThanMs }
-        .map { case (tag, _) =>
-          dropSnapshot(s, table, tag)
-          s"dropped snapshot $tag"
-        }
-    }
+      table: String): Seq[String] =
+    listTags(s, s"${table}_bakok_")
 
   /** The family's COMMITTED copy-backup tags with their marker
-    * mtimes, NEWEST FIRST — the age-aware sibling of [[listBackups]]
-    * (the marker is written last, so its mtime is the take's commit
-    * time). */
+    * mtimes, NEWEST FIRST — the age-aware sibling of [[listBackups]]. */
   def listBackupsWithAge(s: org.apache.spark.sql.SparkSession,
-      table: String): Seq[(String, Long)] = {
-    val prefix = s"${table.toLowerCase}_bakok_"
-    s.sessionState.catalog
-      .listTables("default", s"$prefix*").map(_.table)
-      .map { n =>
-        val loc = tableLocation(s, n)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        (n.stripPrefix(prefix),
-          fs.getFileStatus(loc).getModificationTime)
+      table: String): Seq[(String, Long)] =
+    listTagsWithAge(s, s"${table}_bakok_")
+
+  /** RETENTION for manifest snapshots: drop the ones `r` picks
+    * (manifest + meta copies + fold anchors). A tight snapshot cadence
+    * without this grows one tiny manifest table per tag forever. */
+  def pruneSnapshots(s: org.apache.spark.sql.SparkSession,
+      table: String, r: Retention): Seq[String] =
+    pruneSnapshotTags(s, table, r)(dropSnapshot(s, table, _))
+
+  /** The snapshot-drop loop of the family and group
+    * `pruneSnapshots`: under the build lock, `drop` each snapshot tag
+    * of `base` that `r` picks, newest first. */
+  private[graft] def pruneSnapshotTags(s: org.apache.spark.sql.SparkSession,
+      base: String, r: Retention)(drop: String => Unit): Seq[String] =
+    withBuildLock(s) {
+      r.select(listSnapshots(s, base))(_._2).map { case (tag, _) =>
+        drop(tag)
+        s"dropped snapshot $tag"
       }
-      .sortBy(-_._2)
-  }
+    }
 
   /** The family's COMPLETE storage footprint as one queryable frame —
     * the gauge every retention decision reads. One row per
@@ -2969,7 +2986,7 @@ object TextOps {
     *     and repair/re-take reclaim.
     *
     * Reclaim verbs per component: dropBackup / promoteBackup (backup),
-    * dropSnapshot / pruneSnapshots* (snapshot + anchor), repair +
+    * dropSnapshot / pruneSnapshots (snapshot + anchor), repair +
     * re-take (debris). Live bytes fold via compact/vacuum — priced
     * against the snapshots they would orphan by [[snapshotDiff]] and
     * the FoldGuard.
@@ -3061,47 +3078,38 @@ object TextOps {
       .orderBy("component", "tag", "member")
   }
 
-  /** Drop each tag in `tags` (ordered newest-first by the callers) —
-    * EXCEPT a tag that other live tags still borrow files from: a
-    * differential base outliving its retention window is kept with a
-    * note instead of stranding its dependents (drop or re-anchor the
-    * dependents, then the next prune pass takes the base). Dependents
-    * inside the same prune list drop first (newest-first order), so a
-    * whole retired chain clears in ONE pass. */
-  private def pruneBackupTags(s: org.apache.spark.sql.SparkSession,
-      table: String, tags: Seq[String]): Seq[String] =
-    tags.map { tag =>
-      val deps = dependentBackups(s, table, tag)
-      if (deps.nonEmpty)
-        s"kept backup $tag: differential base of live tag(s) " +
-          deps.mkString(",")
-      else {
-        dropBackup(s, table, tag)
-        s"dropped backup $tag"
-      }
-    }
-
-  /** RETENTION for copy-based backups: keep the newest `keep`
-    * committed tags, drop the rest — differential bases with live
-    * dependents are kept with a note (see [[pruneBackupTags]]). */
+  /** RETENTION for copy-based backups: drop the committed tags `r`
+    * picks — differential bases with live dependents are kept with a
+    * note (see [[pruneBackupTags]]). */
   def pruneBackups(s: org.apache.spark.sql.SparkSession,
-      table: String, keep: Int): Seq[String] = withBuildLock(s) {
-    require(keep >= 1, "pruneBackups: keep must be >= 1")
-    pruneBackupTags(s, table,
-      listBackupsWithAge(s, table).drop(keep).map(_._1))
-  }
+      table: String, r: Retention): Seq[String] =
+    pruneBackupTags(s, listBackupsWithAge(s, table), r,
+      dependentBackups(s, table, _))(dropBackup(s, table, _))
 
-  /** AGE-BASED retention twin for copy-based backups. */
-  def pruneBackupsOlderThan(s: org.apache.spark.sql.SparkSession,
-      table: String, olderThanMs: Long,
-      nowMs: Long = System.currentTimeMillis()): Seq[String] =
+  /** The borrowed-base keep loop of the family and group
+    * `pruneBackups`: under the build lock, `drop` each tag `r` picks
+    * from `tagged` (newest first) — EXCEPT a tag that `dependents`
+    * says other live tags still borrow files from: a differential base
+    * outliving its retention window is kept with a note instead of
+    * stranding its dependents (drop or re-anchor the dependents, then
+    * the next prune pass takes the base). Dependents inside the same
+    * pick drop first (newest-first order), so a whole retired chain
+    * clears in ONE pass. */
+  private[graft] def pruneBackupTags(s: org.apache.spark.sql.SparkSession,
+      tagged: => Seq[(String, Long)], r: Retention,
+      dependents: String => Seq[String])(drop: String => Unit)
+      : Seq[String] =
     withBuildLock(s) {
-      require(olderThanMs >= 0,
-        "pruneBackupsOlderThan: olderThanMs must be >= 0")
-      pruneBackupTags(s, table,
-        listBackupsWithAge(s, table)
-          .filter { case (_, mtime) => mtime < nowMs - olderThanMs }
-          .map(_._1))
+      r.select(tagged)(_._2).map { case (tag, _) =>
+        val deps = dependents(tag)
+        if (deps.nonEmpty)
+          s"kept backup $tag: differential base of live tag(s) " +
+            deps.mkString(",")
+        else {
+          drop(tag)
+          s"dropped backup $tag"
+        }
+      }
     }
 
   /** What travels on a MIGRATION, vs a backup: the legal-hold

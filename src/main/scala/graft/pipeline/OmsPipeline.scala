@@ -549,6 +549,9 @@ object OmsPipeline {
   /** The column that tells the files of a directory run apart. */
   private val SourceCol = "__source"
 
+  /** The column that tells [[runOperational]] attempts apart. */
+  private val AttemptCol = "__attempt"
+
   /** [[standardizeOperational]] up to the delta gate, projected onto
     * [[operationalCols]] (and [[SourceCol]] when `raw` carries it), so
     * frames of different headers union by name. The date chain parses
@@ -739,9 +742,15 @@ object OmsPipeline {
             raw.withColumn(SourceCol, col("_metadata.file_path")),
             maladieOf(col(SourceCol)), population = None)
         }
+        // Spark keys its cache by plan, and two scans of one directory
+        // plan alike however the files changed in between: a literal
+        // unique to this attempt, projected away again (the optimizer
+        // drops it), gives the attempt a cache entry of its own
         cached = operationalDeltas(rows.reduceOption(_.unionByName(_))
           .getOrElse(
             throw new IllegalStateException("no mappable files")))
+          .withColumn(AttemptCol, lit(java.util.UUID.randomUUID().toString))
+          .drop(AttemptCol)
           .cache()
         onUnionBuilt()
         // materialize NOW — every downstream pass serves from the

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.Tables
 import graft.operators.TextOps
-import graft.operators.TextOps.{FoldGuard, MaintenancePolicy}
+import graft.operators.TextOps.{FoldGuard, MaintenancePolicy, Retention}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -971,66 +971,23 @@ object StreamingOps {
     * name order (the listBackups convention one level up: a listed
     * tag is restorable; a crashed group's marker-less copies do not
     * list). */
-  def listBackups(spark: SparkSession, g: IndexGroup): Seq[String] = {
-    val p = g.markerPrefix.toLowerCase
-    spark.sessionState.catalog.listTables("default", s"$p*")
-      .map(_.table.stripPrefix(p)).sorted
-  }
+  def listBackups(spark: SparkSession, g: IndexGroup): Seq[String] =
+    TextOps.listTags(spark, g.markerPrefix)
 
   /** [[listBackups]] with group-marker mtimes, newest first. */
   def listBackupsWithAge(spark: SparkSession,
-      g: IndexGroup): Seq[(String, Long)] = {
-    val p = g.markerPrefix.toLowerCase
-    spark.sessionState.catalog.listTables("default", s"$p*")
-      .map(_.table)
-      .map { n =>
-        val loc = TextOps.tableLocation(spark, n)
-        val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        (n.stripPrefix(p), fs.getFileStatus(loc).getModificationTime)
-      }
-      .sortBy(-_._2)
-  }
+      g: IndexGroup): Seq[(String, Long)] =
+    TextOps.listTagsWithAge(spark, g.markerPrefix)
 
-  /** RETENTION for group copy backups: keep the newest `keep`
-    * committed group tags. */
+  /** RETENTION for group copy backups: drop the committed group tags
+    * `r` picks, by group-marker mtime (the commit-time clock — it is
+    * written last) — EXCEPT a tag whose family copies other live tags
+    * still borrow from, kept with a note (the family-level
+    * [[TextOps.pruneBackups]] contract one level up). */
   def pruneBackups(spark: SparkSession, g: IndexGroup,
-      keep: Int): Seq[String] = {
-    require(keep >= 1, "pruneBackups: keep must be >= 1")
-    dropBackupTags(spark, g, _.drop(keep))
-  }
-
-  /** AGE-BASED retention (r17, VERDICT item 6) — the group sibling of
-    * [[TextOps.pruneBackupsOlderThan]]. Ages come from the group
-    * marker mtimes (the commit-time clock — it is written last);
-    * `nowMs` is injectable for determinism. */
-  def pruneBackupsOlderThan(spark: SparkSession, g: IndexGroup,
-      olderThanMs: Long,
-      nowMs: Long = System.currentTimeMillis()): Seq[String] = {
-    require(olderThanMs >= 0,
-      "pruneBackupsOlderThan: olderThanMs must be >= 0")
-    dropBackupTags(spark, g,
-      _.filter { case (_, mtime) => mtime < nowMs - olderThanMs })
-  }
-
-  /** Drop each picked group tag — EXCEPT a tag whose family copies
-    * other live tags still borrow from (a differential base outliving
-    * its window is kept with a note; newest-first order clears a fully
-    * retired chain in one pass — the family-level pruneBackupTags
-    * contract one level up). */
-  private def dropBackupTags(spark: SparkSession, g: IndexGroup,
-      pick: Seq[(String, Long)] => Seq[(String, Long)]): Seq[String] =
-    TextOps.withBuildLock(spark) {
-      pick(listBackupsWithAge(spark, g)).map { case (tag, _) =>
-        val deps = dependents(spark, g, tag)
-        if (deps.nonEmpty)
-          s"kept backup $tag: differential base of live tag(s) " +
-            deps.mkString(",")
-        else {
-          dropBackup(spark, g, tag)
-          s"dropped backup $tag"
-        }
-      }
-    }
+      r: Retention): Seq[String] =
+    TextOps.pruneBackupTags(spark, listBackupsWithAge(spark, g), r,
+      dependents(spark, g, _))(dropBackup(spark, g, _))
 
   /** Drop a group's `<tag>` MANIFEST snapshot: the stream manifest
     * (the group's commit marker) FIRST, then each member family's
@@ -1049,35 +1006,12 @@ object StreamingOps {
       g: IndexGroup): Seq[(String, Long)] =
     TextOps.listSnapshots(spark, g.base)
 
-  /** RETENTION for a group's manifest snapshots: keep the newest
-    * `keep`, drop the rest (group manifest, member manifests, meta
-    * copies). */
+  /** RETENTION for a group's manifest snapshots: drop the ones `r`
+    * picks, by group-manifest mtime (written last) — group manifest,
+    * member manifests, meta copies. */
   def pruneSnapshots(spark: SparkSession, g: IndexGroup,
-      keep: Int): Seq[String] = {
-    require(keep >= 1, "pruneSnapshots: keep must be >= 1")
-    dropSnapshotTags(spark, g, _.drop(keep))
-  }
-
-  /** AGE-BASED snapshot retention (r17) — the group sibling of
-    * [[TextOps.pruneSnapshotsOlderThan]]; ages are group-manifest
-    * mtimes (written last). */
-  def pruneSnapshotsOlderThan(spark: SparkSession, g: IndexGroup,
-      olderThanMs: Long,
-      nowMs: Long = System.currentTimeMillis()): Seq[String] = {
-    require(olderThanMs >= 0,
-      "pruneSnapshotsOlderThan: olderThanMs must be >= 0")
-    dropSnapshotTags(spark, g,
-      _.filter { case (_, mtime) => mtime < nowMs - olderThanMs })
-  }
-
-  private def dropSnapshotTags(spark: SparkSession, g: IndexGroup,
-      pick: Seq[(String, Long)] => Seq[(String, Long)]): Seq[String] =
-    TextOps.withBuildLock(spark) {
-      pick(listSnapshots(spark, g)).map { case (tag, _) =>
-        dropSnapshot(spark, g, tag)
-        s"dropped snapshot $tag"
-      }
-    }
+      r: Retention): Seq[String] =
+    TextOps.pruneSnapshotTags(spark, g.base, r)(dropSnapshot(spark, g, _))
 
   /** Repeatable-read serving epoch over a group —
     * [[TextOps.withIndexEpoch]] lifted to the group: one O(metadata)
@@ -2003,61 +1937,27 @@ object StreamingOps {
     ledgeredIngest(spark, s"$sfDir/embeddings.parquet", table, refresh,
       (b, t, _) => append(b, t))
 
-  /** RETENTION for the admission audit sinks: keep the NEWEST
-    * `keepBatches` batch partitions of `<base>_quarantine` and
-    * `<base>_admission`, delete the older partition directories
-    * (batch ids are monotone within a ledger life, so newest = highest
-    * id). The sinks are re-derivable audit trails, not index state —
-    * pruning them never touches the family and never triggers a reset
-    * (they are deliberately outside the reset-membership list).
-    * Runs under the cross-process build lock (r18): a prune racing a
-    * [[scrubQuarantine]] overwrite of the same partition could
-    * resurrect the pruned rows from the scrub's checkpointed remnant.
+  /** RETENTION for the admission audit sinks: delete the `_batch`
+    * partition directories of `<base>_quarantine` and
+    * `<base>_admission` that `r` picks, highest batch id first (batch
+    * ids are monotone within a ledger life, so newest = highest id).
+    * A partition's age is its newest file's mtime — batch ids carry no
+    * clock, and a replay re-stamps its slice's files, which is
+    * correct: re-derived evidence is NEW evidence. Only an age policy
+    * lists a partition's contents. The sinks are re-derivable audit
+    * trails, not index state — pruning them never touches the family
+    * and never triggers a reset (they are deliberately outside the
+    * reset-membership list). Runs under the cross-process build lock
+    * (r18): a prune racing a [[scrubQuarantine]] overwrite of the same
+    * partition could resurrect the pruned rows from the scrub's
+    * checkpointed remnant.
     */
   def pruneAdmissionAudit(spark: SparkSession, base: String,
-      keepBatches: Int): Seq[String] = {
-    require(keepBatches >= 1,
-      "pruneAdmissionAudit: keepBatches must be >= 1")
-    graft.operators.TextOps.withBuildLock(spark) {
-    auditSinks(base).filter(spark.catalog.tableExists).flatMap { t =>
-        val loc = graft.operators.TextOps.tableLocation(spark, t)
-        val fs = loc.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val parts = fs.listStatus(loc).toSeq
-          .filter(st => st.isDirectory &&
-            st.getPath.getName.startsWith("_batch="))
-          .sortBy(st => -st.getPath.getName
-            .stripPrefix("_batch=").toLong)
-        val victims = parts.drop(keepBatches)
-        victims.foreach(st => fs.delete(st.getPath, true))
-        if (victims.nonEmpty) spark.catalog.refreshTable(t)
-        victims.map(st => s"dropped $t/${st.getPath.getName}")
-      }
-    }
-  }
-
-  /** AGE twin of [[pruneAdmissionAudit]] (r18 — retention is bounded
-    * by count AND age everywhere else in the engine: backups and
-    * snapshots prune by both, the audit sinks only pruned by count):
-    * drop every `_batch` partition of the six admission sinks whose
-    * newest file is older than `maxAgeMs`, never touching the family
-    * and never triggering a reset (the sinks are re-derivable audit
-    * trails, outside the reset-membership list by design). Age is the
-    * partition's max file mtime — batch ids order WITHIN a ledger
-    * life but carry no clock, and a replay re-stamps its slice's
-    * files, which is correct: re-derived evidence is NEW evidence.
-    * Locked like its count twin.
-    */
-  def pruneAdmissionAuditOlderThan(spark: SparkSession, base: String,
-      maxAgeMs: Long,
-      nowMs: Long = System.currentTimeMillis()): Seq[String] = {
-    require(maxAgeMs >= 0L,
-      "pruneAdmissionAuditOlderThan: maxAgeMs must be >= 0")
-    graft.operators.TextOps.withBuildLock(spark) {
-    auditSinks(base).filter(spark.catalog.tableExists).flatMap { t =>
-        val loc = graft.operators.TextOps.tableLocation(spark, t)
-        val fs = loc.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
+      r: Retention): Seq[String] =
+    TextOps.withBuildLock(spark) {
+      auditSinks(base).filter(spark.catalog.tableExists).flatMap { t =>
+        val loc = TextOps.tableLocation(spark, t)
+        val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
         def newestMtime(p: org.apache.hadoop.fs.Path): Long = {
           val kids = fs.listStatus(p)
           val own = kids.filter(_.isFile).map(_.getModificationTime)
@@ -2065,16 +1965,16 @@ object StreamingOps {
             newestMtime(s.getPath))
           (own ++ sub :+ 0L).max
         }
-        val victims = fs.listStatus(loc).toSeq
+        val parts = fs.listStatus(loc).toSeq
           .filter(st => st.isDirectory &&
             st.getPath.getName.startsWith("_batch="))
-          .filter(st => nowMs - newestMtime(st.getPath) > maxAgeMs)
+          .sortBy(st => -st.getPath.getName.stripPrefix("_batch=").toLong)
+        val victims = r.select(parts)(st => newestMtime(st.getPath))
         victims.foreach(st => fs.delete(st.getPath, true))
         if (victims.nonEmpty) spark.catalog.refreshTable(t)
-        victims.map(st => s"dropped $t/${st.getPath.getName} (age)")
+        victims.map(st => s"dropped $t/${st.getPath.getName}")
       }
     }
-  }
 
   /** Remove every row matching `ids` (on `idCol`) from a
     * batch-partitioned quarantine sink, rewriting ONLY the touched

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Quality.Rule._
+import graft.operators.TextOps.Retention
 import graft.streaming.{IndexGroup, StreamingOps}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -141,7 +142,8 @@ class AdmissionSpec extends AnyFunSuite with SparkSuite {
         .select("_batch").distinct().as[Long].collect().sorted
       assert(batches.length === 2, batches.toSeq)
       val indexedBefore = spark.table(s"${base}_bm25").count()
-      val dropped = StreamingOps.pruneAdmissionAudit(spark, base, 1)
+      val dropped = StreamingOps.pruneAdmissionAudit(spark, base,
+        Retention.KeepNewest(1))
       assert(dropped.nonEmpty)
       assert(dropped.forall(_.contains("_batch=")))
       val after = spark.table(s"${base}_quarantine")

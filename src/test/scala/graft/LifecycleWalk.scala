@@ -198,7 +198,7 @@ object LifecycleWalk {
           }
         case 9 if snapTags.size > 2 =>
           trace += "pruneSnapshots(2)"
-          TextOps.pruneSnapshots(spark, t, 2)
+          TextOps.pruneSnapshots(spark, t, TextOps.Retention.KeepNewest(2))
           val live = TextOps.listSnapshots(spark, t).map(_._1).toSet
           snapTags.filterInPlace(live.contains)
         case 10 => // EPOCH (r18): a repeatable-read pin over the

@@ -466,6 +466,72 @@ class OmsPipelineSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  /** Runs `f` on a fresh landing directory and a writer of one-header
+    * CSV files in it; the directory is deleted afterwards. */
+  private def withFeedDir(f: (java.nio.file.Path,
+      (String, Seq[String]) => Unit) => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_omsfeed")
+    def write(name: String, rows: Seq[String]): Unit =
+      java.nio.file.Files.write(dir.resolve(name),
+        ("country,date,new_cases,new_deaths,deaths" +: rows)
+          .mkString("\n").getBytes("UTF-8"))
+    try f(dir, write)
+    finally {
+      import scala.jdk.CollectionConverters._
+      val walk = java.nio.file.Files.walk(dir)
+      val paths =
+        try walk.sorted(java.util.Comparator.reverseOrder())
+          .iterator().asScala.toList
+        finally walk.close()
+      paths.foreach(java.nio.file.Files.deleteIfExists(_))
+    }
+  }
+
+  test("two runs over one unchanged directory cache apart: releasing " +
+      "one leaves the other's cached union in place") {
+    withFeedDir { (dir, write) =>
+      write("covid_feed.csv", Seq(
+        "France,2020-03-01,10,1,1",
+        "Peru,2020-03-01,5,0,0"))
+      val none = org.apache.spark.storage.StorageLevel.NONE
+      val first = OmsPipeline.runOperational(spark, dir.toString)
+      val second = OmsPipeline.runOperational(spark, dir.toString)
+      try {
+        first.release()
+        assert(first.cachedStorageLevel === none)
+        assert(second.cachedStorageLevel !== none,
+          "releasing one run uncached the other run's union")
+      } finally { first.release(); second.release() }
+      assert(second.cachedStorageLevel === none)
+    }
+  }
+
+  test("a rerun after a landing file is rewritten in place (same name, " +
+      "same header) reads the new values while the earlier run is held") {
+    withFeedDir { (dir, write) =>
+      write("covid_feed.csv", Seq(
+        "France,2020-03-01,10,1,1",
+        "France,2020-03-02,20,2,3",
+        "Peru,2020-03-01,5,0,0"))
+      def newCases(r: OmsPipeline.OperationalResult): Double =
+        r.star.statistique.agg(sum("nouveau_cas")).head().getDouble(0)
+      val first = OmsPipeline.runOperational(spark, dir.toString)
+      try {
+        assert(newCases(first) === 35.0)
+        write("covid_feed.csv", Seq(
+          "France,2020-03-01,11,1,1",
+          "France,2020-03-02,21,2,3",
+          "Peru,2020-03-01,6,0,0"))
+        val second = OmsPipeline.runOperational(spark, dir.toString)
+        try {
+          assert(newCases(second) === 38.0,
+            "the rerun was served the earlier run's rows")
+          assert(newCases(first) === 35.0)
+        } finally second.release()
+      } finally first.release()
+    }
+  }
+
   test("v4 typed defaults: Unknown country, now() date, zero measures") {
     val sp = spark
     import sp.implicits._

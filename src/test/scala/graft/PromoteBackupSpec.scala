@@ -235,7 +235,8 @@ class PromoteBackupSpec extends AnyFunSuite with SparkSuite {
         baseTag = Some("b0"))
       val asOfD1 = postings(bm25T)
       // before promote: retention protects the borrowed-from base
-      val kept = StreamingOps.pruneBackups(spark, IndexGroup.documents(base), 1)
+      val kept = StreamingOps.pruneBackups(spark, IndexGroup.documents(base),
+        TextOps.Retention.KeepNewest(1))
       assert(kept.exists(_.startsWith("kept backup b0")),
         kept.toString)
       // promote the group, then the same prune retires b0
@@ -245,7 +246,7 @@ class PromoteBackupSpec extends AnyFunSuite with SparkSuite {
         IndexGroup.documents(base), "d1") ===
         Nil)
       val pruned = StreamingOps.pruneBackups(spark,
-        IndexGroup.documents(base), 1)
+        IndexGroup.documents(base), TextOps.Retention.KeepNewest(1))
       assert(pruned.exists(_.contains("b0")) &&
         !pruned.exists(_.startsWith("kept backup b0")),
         pruned.toString)

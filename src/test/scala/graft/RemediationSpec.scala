@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Quality.Rule._
+import graft.operators.TextOps.Retention
 import graft.streaming.{IndexGroup, StreamingOps}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -580,13 +581,13 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
         ann.foreach(_.unpersist())
       }
       // a generous bound keeps everything
-      assert(StreamingOps.pruneAdmissionAuditOlderThan(spark, base,
-        maxAgeMs = 3600000L).isEmpty)
+      assert(StreamingOps.pruneAdmissionAudit(spark, base,
+        Retention.OlderThan(3600000L)).isEmpty)
       assert(spark.table(s"${base}_quarantine").count() === 2L)
       // from one hour in the future, every partition is over-age
-      val dropped = StreamingOps.pruneAdmissionAuditOlderThan(spark,
-        base, maxAgeMs = 60000L,
-        nowMs = System.currentTimeMillis() + 3600000L)
+      val dropped = StreamingOps.pruneAdmissionAudit(spark,
+        base, Retention.OlderThan(60000L,
+          nowMs = System.currentTimeMillis() + 3600000L))
       assert(dropped.exists(_.contains(s"${base}_quarantine/_batch=0")),
         dropped.mkString("; "))
       assert(dropped.exists(_.contains(s"${base}_quarantine/_batch=1")),

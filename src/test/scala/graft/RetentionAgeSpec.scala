@@ -1,13 +1,15 @@
 package graft
 
 import graft.operators.TextOps
+import graft.operators.TextOps.Retention
 import graft.streaming.{IndexGroup, StreamingOps}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** AGE-BASED RETENTION (r17, VERDICT item 6): `pruneSnapshotsOlderThan`
-  * / `pruneBackupsOlderThan` beside the count-based verbs, family and
-  * stream level, against the same mtime clock the list verbs report
-  * (`nowMs` injectable so these tests are deterministic). The backup
+/** AGE-BASED RETENTION (r17, VERDICT item 6): `pruneSnapshots` /
+  * `pruneBackups` with a `Retention.OlderThan` beside the count-based
+  * `Retention.KeepNewest`, family and stream level, against the same
+  * mtime clock the list verbs report (`nowMs` injectable so these
+  * tests are deterministic). The backup
   * pruners respect the differential chain: a base tag with live
   * dependents is KEPT with a note, never dropped out from under them —
   * and a fully retired chain clears in one pass (dependents drop
@@ -37,6 +39,22 @@ class RetentionAgeSpec extends AnyFunSuite with SparkSuite {
         .toDF("doc_id", "text"), t, s"${t}_stats")
   }
 
+  test("Retention refuses bad bounds when built; KeepNewest keeps the " +
+      "order and never reads an age; OlderThan's cutoff is strict") {
+    intercept[IllegalArgumentException](Retention.KeepNewest(0))
+    intercept[IllegalArgumentException](Retention.OlderThan(-1L))
+    val items = Seq("c", "b", "a")
+    val noAge = (_: String) => fail("KeepNewest read an age"): Long
+    assert(Retention.KeepNewest(1).select(items)(noAge) === Seq("b", "a"))
+    assert(Retention.KeepNewest(3).select(items)(noAge) === Nil)
+    // cutoff = nowMs - ms = 900: exactly at it stays, 1 ms older drops
+    val mtime = Map("c" -> 901L, "b" -> 900L, "a" -> 899L)
+    assert(Retention.OlderThan(100L, nowMs = 1000L).select(items)(mtime)
+      === Seq("a"))
+    assert(Retention.OlderThan(0L, nowMs = 902L).select(items)(mtime)
+      === items)
+  }
+
   test("pruneSnapshotsOlderThan drops exactly the tags past the " +
       "cutoff; the newer tag keeps serving") {
     val t = s"ra_snap_p$pid"
@@ -52,15 +70,14 @@ class RetentionAgeSpec extends AnyFunSuite with SparkSuite {
       assert(ages("s2") > ages("s1"), ages.toString)
       // cutoff strictly between the two mtimes
       val now = ages("s2") + 1000L
-      val out = TextOps.pruneSnapshotsOlderThan(spark, t,
-        olderThanMs = now - (ages("s1") + ages("s2")) / 2 - 1,
-        nowMs = now)
+      val out = TextOps.pruneSnapshots(spark, t, Retention.OlderThan(
+        now - (ages("s1") + ages("s2")) / 2 - 1, nowMs = now))
       assert(out === Seq("dropped snapshot s1"), out.toString)
       assert(TextOps.listSnapshots(spark, t).map(_._1) === Seq("s2"))
       assert(TextOps.checkSnapshot(spark, t, "s2") === Nil)
       // nothing old enough left: no-op
-      assert(TextOps.pruneSnapshotsOlderThan(spark, t,
-        olderThanMs = 3600000L, nowMs = now) === Nil)
+      assert(TextOps.pruneSnapshots(spark, t,
+        Retention.OlderThan(3600000L, nowMs = now)) === Nil)
     } finally drop(all: _*)
   }
 
@@ -77,7 +94,7 @@ class RetentionAgeSpec extends AnyFunSuite with SparkSuite {
       TextOps.backupIndex(spark, t, "d1", baseTag = Some("base"))
       // keep=1 keeps d1 (newest); base survives WITH A NOTE because
       // d1 borrows its files
-      val out1 = TextOps.pruneBackups(spark, t, keep = 1)
+      val out1 = TextOps.pruneBackups(spark, t, Retention.KeepNewest(1))
       assert(out1.exists(v => v.startsWith("kept backup base") &&
         v.contains("d1")), out1.toString)
       assert(TextOps.listBackups(spark, t).sorted ===
@@ -86,8 +103,8 @@ class RetentionAgeSpec extends AnyFunSuite with SparkSuite {
       // first), which frees base to drop too
       val ages = TextOps.listBackupsWithAge(spark, t).toMap
       val now = ages("d1") + 1000L
-      val out2 = TextOps.pruneBackupsOlderThan(spark, t,
-        olderThanMs = 0L, nowMs = now)
+      val out2 = TextOps.pruneBackups(spark, t,
+        Retention.OlderThan(0L, nowMs = now))
       assert(out2 === Seq("dropped backup d1", "dropped backup base"),
         out2.toString)
       assert(TextOps.listBackups(spark, t) === Nil)
@@ -110,15 +127,16 @@ class RetentionAgeSpec extends AnyFunSuite with SparkSuite {
       StreamingOps.backup(spark, IndexGroup.documents(base), "b")
       assert(StreamingOps.listBackups(spark, IndexGroup.documents(base)) ===
         Seq("a", "b"))
-      val outK = StreamingOps.pruneBackups(spark, IndexGroup.documents(base), 1)
+      val outK = StreamingOps.pruneBackups(spark, IndexGroup.documents(base),
+        Retention.KeepNewest(1))
       assert(outK === Seq("dropped backup a"), outK.toString)
       assert(StreamingOps.listBackups(spark, IndexGroup.documents(base)) ===
         Seq("b"))
       val ages = StreamingOps.listBackupsWithAge(spark,
         IndexGroup.documents(base))
-      val outA = StreamingOps.pruneBackupsOlderThan(spark,
-        IndexGroup.documents(base), olderThanMs = 0L,
-        nowMs = ages.head._2 + 1000L)
+      val outA = StreamingOps.pruneBackups(spark,
+        IndexGroup.documents(base),
+        Retention.OlderThan(0L, nowMs = ages.head._2 + 1000L))
       assert(outA === Seq("dropped backup b"), outA.toString)
       assert(StreamingOps.listBackups(spark,
         IndexGroup.documents(base)) === Nil)
@@ -129,10 +147,9 @@ class RetentionAgeSpec extends AnyFunSuite with SparkSuite {
       val sAges = StreamingOps.listSnapshots(spark, IndexGroup.documents(base))
         .toMap
       val now = sAges("s2") + 1000L
-      val outS = StreamingOps.pruneSnapshotsOlderThan(spark,
-        IndexGroup.documents(base),
-        olderThanMs = now - (sAges("s1") + sAges("s2")) / 2 - 1,
-        nowMs = now)
+      val outS = StreamingOps.pruneSnapshots(spark,
+        IndexGroup.documents(base), Retention.OlderThan(
+          now - (sAges("s1") + sAges("s2")) / 2 - 1, nowMs = now))
       assert(outS === Seq("dropped snapshot s1"), outS.toString)
       assert(StreamingOps.listSnapshots(spark, IndexGroup.documents(base))
         .map(_._1) === Seq("s2"))

@@ -228,7 +228,8 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
       TextOps.backupIndex(spark, t)
       assert(TextOps.listBackups(spark, t) === Seq("bak"),
         "sibling meta copies must not masquerade as backup tags")
-      val pruned = TextOps.pruneSnapshots(spark, t, keep = 1)
+      val pruned = TextOps.pruneSnapshots(spark, t,
+        TextOps.Retention.KeepNewest(1))
       assert(pruned === Seq("dropped snapshot a"), pruned.toString)
       assert(!spark.catalog.tableExists(s"${t}_mf_a") &&
         !spark.catalog.tableExists(s"${t}_stats_bak_mfa"))

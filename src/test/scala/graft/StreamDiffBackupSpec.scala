@@ -100,7 +100,7 @@ class StreamDiffBackupSpec extends AnyFunSuite with SparkSuite {
         "refused drop must leave the group marker in place")
       // ...and retention keeps it with a note
       val pruned = StreamingOps.pruneBackups(spark,
-        IndexGroup.documents(base), 1)
+        IndexGroup.documents(base), TextOps.Retention.KeepNewest(1))
       assert(pruned.exists(v => v.startsWith("kept backup b0") &&
         v.contains("d1")), pruned.toString)
       assert(StreamingOps.listBackups(spark, IndexGroup.documents(base)) ===

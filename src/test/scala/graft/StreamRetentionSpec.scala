@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{AnnIndex, TextOps}
+import graft.operators.TextOps.Retention
 import graft.streaming.{IndexGroup, StreamingOps}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -53,7 +54,8 @@ class StreamRetentionSpec extends AnyFunSuite with SparkSuite {
         .map(_._1)
       assert(tags === Seq("s2", "s1"), tags.toString)
       val pruned = StreamingOps
-        .pruneSnapshots(spark, IndexGroup.documents(base), keep = 1)
+        .pruneSnapshots(spark, IndexGroup.documents(base),
+          Retention.KeepNewest(1))
       assert(pruned === Seq("dropped snapshot s1"), pruned.toString)
       assert(!spark.catalog.tableExists(s"${base}_mf_s1"))
       assert(!spark.catalog.tableExists(s"${t}_mf_s1"))
@@ -140,15 +142,15 @@ class StreamRetentionSpec extends AnyFunSuite with SparkSuite {
       assert(StreamingOps.listSnapshots(spark, g).map(_._1) ===
         Seq("s2", "s1"))
       assert(StreamingOps.checkSnapshot(spark, g, "s2") === Nil)
-      assert(StreamingOps.pruneSnapshots(spark, g, keep = 1) ===
+      assert(StreamingOps.pruneSnapshots(spark, g, Retention.KeepNewest(1)) ===
         Seq("dropped snapshot s1"))
       assert(!spark.catalog.tableExists(s"${base}_mf_s1") &&
         !spark.catalog.tableExists(s"${t}_mf_s1"))
       val s2At = StreamingOps.listSnapshots(spark, g).head._2
-      assert(StreamingOps.pruneSnapshotsOlderThan(spark, g,
-        olderThanMs = 600000L, nowMs = s2At + 1000L) === Nil)
-      assert(StreamingOps.pruneSnapshotsOlderThan(spark, g,
-        olderThanMs = 0L, nowMs = s2At + 1000L) ===
+      assert(StreamingOps.pruneSnapshots(spark, g,
+        Retention.OlderThan(600000L, nowMs = s2At + 1000L)) === Nil)
+      assert(StreamingOps.pruneSnapshots(spark, g,
+        Retention.OlderThan(0L, nowMs = s2At + 1000L)) ===
         Seq("dropped snapshot s2"))
       StreamingOps.snapshot(spark, g, "s3")
       StreamingOps.dropSnapshot(spark, g, "s3")
@@ -174,11 +176,11 @@ class StreamRetentionSpec extends AnyFunSuite with SparkSuite {
       StreamingOps.backup(spark, g, "t2", baseTag = Some("t1"))
       assert(StreamingOps.listBackupsWithAge(spark, g).map(_._1) ===
         Seq("t2", "t1"))
-      assert(StreamingOps.pruneBackups(spark, g, keep = 1) ===
+      assert(StreamingOps.pruneBackups(spark, g, Retention.KeepNewest(1)) ===
         Seq("kept backup t1: differential base of live tag(s) t2"))
       StreamingOps.promote(spark, g, "t2")
       assert(StreamingOps.checkBackup(spark, g, "t2") === Nil)
-      assert(StreamingOps.pruneBackups(spark, g, keep = 1) ===
+      assert(StreamingOps.pruneBackups(spark, g, Retention.KeepNewest(1)) ===
         Seq("dropped backup t1"))
       assert(StreamingOps.listBackups(spark, g) === Seq("t2"))
       // drill the committed group into a second base
@@ -196,8 +198,8 @@ class StreamRetentionSpec extends AnyFunSuite with SparkSuite {
         .select("member").as[String].collect().toSeq ===
         Seq(s"${base}_vbakok_t2"))
       val t2At = StreamingOps.listBackupsWithAge(spark, g).head._2
-      assert(StreamingOps.pruneBackupsOlderThan(spark, g,
-        olderThanMs = 0L, nowMs = t2At + 1000L) ===
+      assert(StreamingOps.pruneBackups(spark, g,
+        Retention.OlderThan(0L, nowMs = t2At + 1000L)) ===
         Seq("dropped backup t2"))
       assert(StreamingOps.listBackups(spark, g) === Nil)
 
