@@ -37,8 +37,9 @@ import org.apache.spark.sql.functions.col
   *   - `statsTable`: the BM25 corpus-stats sibling — describe reports
   *     it, deletes go through its write-ahead log
   *     ([[TextOps.deleteBm25Docs]]) so the stats shrink with the
-  *     postings, and an as-of read refuses a snapshot that pinned a
-  *     pending delete stage;
+  *     postings, an as-of read refuses a snapshot that pinned a
+  *     pending delete stage, and a stream's member-loss reset owes it
+  *     a recount ([[graft.streaming.StreamingOps]]);
   *   - `cfgOf`: the build config describe reports;
   *   - `invariant`: the kind's structural audit over the live rows
   *     (handed a member → live-rows function);
@@ -54,7 +55,7 @@ final class IndexFamily private[operators] (
     callerIdCol: String,
     swapSiblings: Seq[String] = Nil,
     sidecar: Option[(String, String)] = None,
-    statsTable: Option[String] = None,
+    val statsTable: Option[String] = None,
     cfgOf: SparkSession => Map[String, Int] = _ => Map.empty,
     invariant: (SparkSession, String => DataFrame) => Seq[String] =
       (_, _) => Nil,

@@ -413,8 +413,11 @@ object OmsPipeline {
     val maxId = rows.flatMap(r => Option(r.get(1)))
       .map(_.asInstanceOf[Number].longValue).maxOption.getOrElse(0L)
     val incoming = names.select(nameCol)
+    // names already on the driver take their distinct there: Spark's
+    // would run a shuffle job and a result job
     val fresh = sparkOrder(
-      incoming.distinct().collect().toSeq.map(_.get(0))
+      (if (names.isLocal) incoming else incoming.distinct()).collect()
+        .toSeq.map(_.get(0)).distinct
         .filterNot(n => n != null && known(n)),
       incoming.schema(0).dataType)
     local(dim.sparkSession,

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Tables
-import graft.operators.TextOps
+import graft.operators.{IndexFamily, TextOps}
 import graft.operators.TextOps.{FoldGuard, MaintenancePolicy, Retention}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -546,9 +546,9 @@ object StreamingOps {
     // the `_cfg` pin is a first-class member: losing it (or ingesting
     // into a pre-config-pin index) resets the whole family rather
     // than letting the first append re-pin against surviving data
-    vectorIngest(spark, sfDir, table,
+    ledgeredIngest(spark, s"$sfDir/embeddings.parquet", table,
       Seq(table, table + "_vec", table + "_cfg"),
-      (batch, t) => graft.operators.AnnIndex.append(batch, t,
+      (batch, t, _) => graft.operators.AnnIndex.append(batch, t,
         nBands = nBands, bits = bits, dim = dim,
         payloadCols = payloadCols))
 
@@ -570,8 +570,8 @@ object StreamingOps {
     require(spark.catalog.tableExists(table + "_cb"),
       s"streamingPqIngest: no stored codebook ${table}_cb — train with " +
         "PqIndex.trainCodebook first (ingest never retrains)")
-    vectorIngest(spark, sfDir, table, Seq(table),
-      (batch, t) => graft.operators.PqIndex.append(batch, t))
+    ledgeredIngest(spark, s"$sfDir/embeddings.parquet", table, Seq(table),
+      (batch, t, _) => graft.operators.PqIndex.append(batch, t))
   }
 
   /** Streaming IVF INDEX INGEST — the online maintenance leg of
@@ -587,8 +587,8 @@ object StreamingOps {
     require(spark.catalog.tableExists(table + "_cent"),
       s"streamingIvfIngest: no stored quantizer ${table}_cent — build " +
         "with IvfIndex.write first (ingest never retrains)")
-    vectorIngest(spark, sfDir, table, Seq(table),
-      (batch, t) => graft.operators.IvfIndex.append(batch, t))
+    ledgeredIngest(spark, s"$sfDir/embeddings.parquet", table, Seq(table),
+      (batch, t, _) => graft.operators.IvfIndex.append(batch, t))
   }
 
   /** Streaming SQ8 INDEX INGEST — the online maintenance leg of
@@ -602,8 +602,9 @@ object StreamingOps {
   def streamingSqIngest(spark: SparkSession, sfDir: String,
       table: String,
       dim: Int = graft.operators.AnnIndex.Dim): Unit =
-    vectorIngest(spark, sfDir, table, Seq(table, table + "_cfg"),
-      (batch, t) => graft.operators.SqIndex.append(batch, t, dim))
+    ledgeredIngest(spark, s"$sfDir/embeddings.parquet", table,
+      Seq(table, table + "_cfg"),
+      (batch, t, _) => graft.operators.SqIndex.append(batch, t, dim))
 
   /** Streaming BQ INDEX INGEST — the online maintenance leg of
     * [[graft.operators.BqIndex]]: arriving vectors collapse to their
@@ -617,8 +618,9 @@ object StreamingOps {
   def streamingBqIngest(spark: SparkSession, sfDir: String,
       table: String,
       dim: Int = graft.operators.AnnIndex.Dim): Unit =
-    vectorIngest(spark, sfDir, table, Seq(table, table + "_cfg"),
-      (batch, t) => graft.operators.BqIndex.append(batch, t, dim))
+    ledgeredIngest(spark, s"$sfDir/embeddings.parquet", table,
+      Seq(table, table + "_cfg"),
+      (batch, t, _) => graft.operators.BqIndex.append(batch, t, dim))
 
   /** ONE-CALL DOCUMENT INGEST (VERDICT r12 #7 — "a batch arrived"
     * should be one call, not four): a single file-streamed loop over
@@ -659,81 +661,14 @@ object StreamingOps {
       maintain: Option[graft.operators.TextOps.MaintenancePolicy] =
         None,
       admission: Seq[graft.operators.Quality.Rule] = Nil,
-      maxQuarantineRate: Double = 1.0): Unit = {
-    require(maxQuarantineRate >= 0.0 && maxQuarantineRate <= 1.0,
-      "streamingDocumentIngest: maxQuarantineRate must be in [0, 1]")
-    val g = IndexGroup.documents(base)
-    val bandT = s"${base}_band"
-    val bm25T = s"${base}_bm25"
-    val statsT = s"${base}_bm25_stats"
-    val hashT = s"${base}_hashes"
-    // NOTE: quarantine/admission are deliberately NOT in `refresh` —
-    // that list doubles as the reset-membership gate, and pruning an
-    // AUDIT sink must never reset the family (they are re-derivable;
-    // their caller-session caches refresh explicitly below)
-    ledgeredIngest(spark, s"$sfDir/documents.parquet", base,
-      refresh = g.ingestTables,
-      append = (batch, _, bid) => {
-        val s = batch.sparkSession
-        val unheld = exceptHeld(s, g, batch.toDF())
-        // EXPLICIT admission gate (r17): the declared Quality rules run
-        // before the built-in curate gate — every rejected row lands in
-        // `<base>_quarantine` NAMED with the rules it failed, and the
-        // per-rule counts land in `<base>_admission`, both partitioned
-        // by batch id and overwritten per partition, so a ledger replay
-        // re-derives its own slice instead of duplicating it (rules are
-        // deterministic; the audit trail is idempotent like the index).
-        // Audit sinks, not index state: the group backup/snapshot verbs
-        // deliberately exclude them (a replay regenerates them).
-        val (admitted, annOpt) = admitBatch(s, unheld, admission,
-          maxQuarantineRate, base, bid, "streamingDocumentIngest",
-          source = Some(batch.toDF()))
-        val novel = ingestDoorTrim(s, admitted, hashT)
-        try {
-          graft.operators.TextOps.appendBandIndex(novel, bandT)
-          graft.operators.TextOps.appendBm25Postings(novel, bm25T, statsT)
-          appendHashRows(s, novel, hashT)
-        } finally {
-          novel.unpersist()
-          annOpt.foreach(_.unpersist())
-          ()
-        }
-      },
-      // the BM25 member carries the family's only corpus stats — the
-      // band/hash members are doc-local and self-healing under a
-      // tombstone-surviving reset, but the rebuilt stats must be
-      // recomputed over the tombstone-filtered postings (ADVICE r13).
-      // The sibling CDC upsert stream resets WITH the members
-      // (ADVICE r14): the replayed originals are dead under the
-      // surviving upsert barriers by design, and only a full CDC
-      // replay restores the superseding content.
-      onReset = s => {
-        graft.operators.TextOps.markBm25ResetReconcile(s, bm25T)
-        resetSiblingCdcStream(s, s"${base}_ups")
-        // the audit sinks drop with the members: a reset replay may
-        // re-batch the files differently (all-in-one batch 0), and a
-        // lingering higher-numbered partition from the previous life
-        // would read as duplicated audit rows. Re-derivable by design.
-        dropAdmissionSinks(s, base)
-      },
-      afterReplay = s => graft.operators.TextOps
-        .reconcileBm25Tombstones(s, bm25T, statsT),
-      // per-batch self-maintenance when a policy rides along (r14):
-      // the ingest loop compacts/vacuums its own families as their
-      // gauges trip, no separate maintenance scheduler required.
-      // UNATTENDED folds run under FoldGuard.Anchor (r17): a refusal
-      // would crash the batch, and nobody is there to answer it —
-      // anchoring keeps both the stream AND any pinned manifest
-      // snapshots serving (the operator-facing verbs keep Refuse)
-      afterBatch = s => maintain.foreach(p =>
-        g.members.foreach(_.maintainBatch(s, p))))
-    // the hook may have compacted/vacuumed the tombstone lists in the
-    // batch session — refresh the caller's view of them too, and of
-    // the admission audit sinks (a replay dynamically OVERWRITES their
-    // batch partitions; a stale caller listing would read dropped
-    // part files)
-    refreshMembers(spark, g, if (admission.nonEmpty) sinkPair(base) else Nil)
-  }
+      maxQuarantineRate: Double = 1.0): Unit =
+    groupStream(spark, IndexGroup.documents(base),
+      s"$sfDir/documents.parquet", "streamingDocumentIngest", cdc = false,
+      maintain, admission, maxQuarantineRate) { novel =>
+      graft.operators.TextOps.appendBandIndex(novel, s"${base}_band")
+      graft.operators.TextOps.appendBm25Postings(novel, s"${base}_bm25",
+        s"${base}_bm25_stats")
+    }
 
   /** ONE-CALL DOCUMENT DELETE: [[delete]] on the document group at
     * `base` — the entry point the document store's callers use. */
@@ -1749,44 +1684,9 @@ object StreamingOps {
       g: IndexGroup,
       maintain: Option[MaintenancePolicy] = None,
       admission: Seq[graft.operators.Quality.Rule] = Nil,
-      maxQuarantineRate: Double = 1.0): Unit = {
-    require(maxQuarantineRate >= 0.0 && maxQuarantineRate <= 1.0,
-      "streamingUpserts: maxQuarantineRate must be in [0, 1]")
-    resetDeleteLedgerIfCheckpointLost(spark, g.upsertStream)
-    ledgeredIngest(spark, path, g.upsertStream, refresh = Seq(),
-      (batch, _, bid) => {
-        val s = batch.sparkSession
-        // holds gate BEFORE the admission gate (r18): the member
-        // upserts re-filter held ids as a backstop, but a held row
-        // that VIOLATES a rule would land its full content in the
-        // quarantine sink — a trace the hold contract forbids
-        val unheld = exceptHeld(s, g, batch.toDF())
-        // the CDC stream takes the SAME admission gate as ingest — an
-        // upsert rewrites content, so gating ingest alone leaves a
-        // side door for unvetted content; sinks are stream-scoped
-        // (`<base>_ups_quarantine`) because upsert batch ids live in
-        // their own ledger and must not collide with ingest slices
-        val (vetted, annOpt) = admitBatch(s, unheld, admission,
-          maxQuarantineRate, g.upsertStream, bid, "streamingUpserts",
-          source = Some(batch.toDF()))
-        val b = vetted.persist()
-        try g.members.foreach(_.upsert(b))
-        finally {
-          b.unpersist()
-          annOpt.foreach(_.unpersist())
-          ()
-        }
-      },
-      maxFilesPerTrigger = Some(1),
-      // an upsert cadence accrues the SAME debt as ingest+delete (a
-      // barrier entry and one `_del` file per batch) — the long-running
-      // CDC stream self-maintains exactly like the ingest loops
-      // (FoldGuard.Anchor: unattended, see the ingest hook)
-      afterBatch = s => maintain.foreach(p =>
-        g.members.foreach(_.maintainBatch(s, p))))
-    refreshMembers(spark, g,
-      if (admission.nonEmpty) sinkPair(g.upsertStream) else Nil)
-  }
+      maxQuarantineRate: Double = 1.0): Unit =
+    groupStream(spark, g, path, "streamingUpserts", cdc = true, maintain,
+      admission, maxQuarantineRate)(b => g.members.foreach(_.upsert(b)))
 
   /** Checkpoint/ledger PAIRING for the delete streams (review r13):
     * a lost checkpoint with a surviving ledger silently skips every
@@ -1863,12 +1763,6 @@ object StreamingOps {
         None,
       admission: Seq[graft.operators.Quality.Rule] = Nil,
       maxQuarantineRate: Double = 1.0): Unit = {
-    require(maxQuarantineRate >= 0.0 && maxQuarantineRate <= 1.0,
-      "streamingAllIndexIngest: maxQuarantineRate must be in [0, 1]")
-    val g = IndexGroup.vectors(base)
-    val annT = s"${base}_ann"
-    val bqT = s"${base}_bq"
-    val sqT = s"${base}_sq"
     val pqT = s"${base}_pq"
     val ivfT = s"${base}_ivf"
     require(spark.catalog.tableExists(pqT + "_cb"),
@@ -1877,65 +1771,97 @@ object StreamingOps {
     require(spark.catalog.tableExists(ivfT + "_cent"),
       s"streamingAllIndexIngest: no stored quantizer ${ivfT}_cent — " +
         "build with IvfIndex.write first (ingest never retrains)")
-    ledgeredIngest(spark, s"$sfDir/embeddings.parquet", base,
-      refresh = g.ingestTables,
-      append = (batch, _, bid) => {
-        val s = batch.sparkSession
-        // holds gate BEFORE the admission gate (r18) — the member
-        // appends re-filter as a backstop, but a held vec_id failing
-        // a rule must not leave its embedding in the quarantine sink
-        val unheld = exceptHeld(s, g, batch.toDF())
-        // the vector gate: a single NaN/Inf or zero-norm embedding
-        // poisons every cosine/ADC score it touches — admission rules
-        // (FiniteArray / NormInRange / custom) quarantine it with the
-        // same sinks+valve contract as the document gate
-        val (vetted, annOpt) = admitBatch(s, unheld, admission,
-          maxQuarantineRate, base, bid, "streamingAllIndexIngest",
-          source = Some(batch.toDF()))
-        val b = vetted.persist()
-        try {
-          graft.operators.AnnIndex.append(b, annT, nBands, bits, dim)
-          graft.operators.BqIndex.append(b, bqT, dim)
-          graft.operators.SqIndex.append(b, sqT, dim)
-          graft.operators.PqIndex.append(b, pqT)
-          graft.operators.IvfIndex.append(b, ivfT)
-        } finally {
-          b.unpersist()
-          annOpt.foreach(_.unpersist())
-          ()
-        }
-      },
-      // member-loss reset also replays the sibling CDC upsert stream
-      // (ADVICE r14 — the streamingDocumentIngest rationale); the
-      // audit sinks drop with it (batch ids restart on replay)
-      onReset = s => {
-        resetSiblingCdcStream(s, s"${base}_vups")
-        dropAdmissionSinks(s, base)
-      },
-      // per-batch self-maintenance across all five families (the
-      // streamingDocumentIngest hook, vector side). Only the
-      // METADATA-CHEAP legs run per batch — the drift gauges are
-      // O(index) reconstruction jobs, and drift-triggered refresh
-      // belongs to an operator pass with the training corpus in hand
-      // (the family maintain with refreshWith), not to every
-      // arriving micro-batch. FoldGuard.Anchor: unattended (see the
-      // document ingest hook).
-      afterBatch = s => maintain.foreach(p =>
-        g.members.foreach(_.maintainBatch(s, p))))
-    // refresh the caller's view of lists the hook may have rewritten
-    refreshMembers(spark, g, if (admission.nonEmpty) sinkPair(base) else Nil)
+    groupStream(spark, IndexGroup.vectors(base),
+      s"$sfDir/embeddings.parquet", "streamingAllIndexIngest", cdc = false,
+      maintain, admission, maxQuarantineRate) { b =>
+      graft.operators.AnnIndex.append(b, s"${base}_ann", nBands, bits, dim)
+      graft.operators.BqIndex.append(b, s"${base}_bq", dim)
+      graft.operators.SqIndex.append(b, s"${base}_sq", dim)
+      graft.operators.PqIndex.append(b, pqT)
+      graft.operators.IvfIndex.append(b, ivfT)
+    }
   }
 
-  /** The shared vector-ingest loop (ANN bands, PQ codes): file-stream
-    * the corpus, append each micro-batch through `append` behind the
-    * batch-id replay ledger, stable warehouse checkpoint at
-    * `<table>_ck` (orphan-cleaned when the table is gone), refresh
-    * `refresh` for the caller's session. */
-  private def vectorIngest(spark: SparkSession, sfDir: String,
-      table: String, refresh: Seq[String],
-      append: (org.apache.spark.sql.DataFrame, String) => Unit): Unit =
-    ledgeredIngest(spark, s"$sfDir/embeddings.parquet", table, refresh,
-      (b, t, _) => append(b, t))
+  /** THE ENTRY of a group's rows from its two fed streams — the ingest
+    * (`cdc = false`: the `<base>` stream, whose member loss resets it)
+    * and the CDC upserts (`cdc = true`: `g.upsertStream`, one file per
+    * batch so a later file's version of an id supersedes an earlier
+    * one's). Per micro-batch, behind the stream's replay ledger:
+    *   1. the GATE — the members' holds first (r18: the member writes
+    *      re-filter as a backstop, but a held row that violates a rule
+    *      must not land its content in the quarantine sink), then the
+    *      admission rules and valve ([[admitBatch]], sinks under the
+    *      stream's own prefix — CDC batch ids live in their own ledger
+    *      and must not collide with ingest slices). The footer check
+    *      reads the unfiltered batch: the hold anti join can blank
+    *      `input_file_name()` past its exchange;
+    *   2. the [[door]], whose member writes are `write`;
+    *   3. after the ledger commit, the per-batch maintenance pass when
+    *      a policy rides along (r14), FoldGuard.Anchor (r17: a refusal
+    *      would crash an unattended batch; anchoring keeps the stream
+    *      and any pinned snapshots serving).
+    * The ingest's reset list is `g.ingestTables` — the audit sinks stay
+    * out of it, so pruning an audit sink never resets the group. A
+    * reset marks the stats members' recount ([[ledgeredIngest]]),
+    * replays the sibling CDC stream ([[resetSiblingCdcStream]]) and
+    * drops the ingest's audit sinks (a reset replay may re-batch the
+    * files, and a lingering partition from the previous life would
+    * read as duplicated audit rows). The CDC stream never resets; a
+    * lost checkpoint drops its ledger instead
+    * ([[resetDeleteLedgerIfCheckpointLost]]). On return the caller's
+    * session refreshes the members, the hash store and the stream's
+    * audit sinks: the batches wrote them from cloned sessions.
+    */
+  private def groupStream(spark: SparkSession, g: IndexGroup, path: String,
+      what: String, cdc: Boolean, maintain: Option[MaintenancePolicy],
+      admission: Seq[graft.operators.Quality.Rule],
+      maxQuarantineRate: Double)(write: DataFrame => Unit): Unit = {
+    require(maxQuarantineRate >= 0.0 && maxQuarantineRate <= 1.0,
+      s"$what: maxQuarantineRate must be in [0, 1]")
+    val stream = if (cdc) g.upsertStream else g.base
+    if (cdc) resetDeleteLedgerIfCheckpointLost(spark, stream)
+    ledgeredIngest(spark, path, stream,
+      refresh = if (cdc) Nil else g.ingestTables,
+      append = (batch, _, bid) => {
+        val s = batch.sparkSession
+        val (admitted, annOpt) = admitBatch(s, exceptHeld(s, g, batch),
+          admission, maxQuarantineRate, stream, bid, what,
+          source = Some(batch))
+        try door(g, cdc, admitted)(write)
+        finally annOpt.foreach(_.unpersist())
+      },
+      onReset = s => {
+        resetSiblingCdcStream(s, g.upsertStream)
+        dropAdmissionSinks(s, g.base)
+      },
+      stats = if (cdc) Nil else g.members.map(_.family),
+      maxFilesPerTrigger = if (cdc) Some(1) else None,
+      afterBatch = s => maintain.foreach(p =>
+        g.members.foreach(_.maintainBatch(s, p))))
+    refreshMembers(spark, g, if (admission.nonEmpty) sinkPair(stream) else Nil)
+  }
+
+  /** THE DOOR through which rows enter a group's members: a stream's
+    * admitted batch ([[groupStream]]) or a quarantine heal
+    * ([[remediateQuarantine]]). The ingest side of a group with a hash
+    * store takes the ingest door's trimmings ([[ingestDoorTrim]]) and
+    * lands the novelty's hash rows after the member writes; any other
+    * entry persists the rows as they are. Either way the member writes
+    * in `write` share one cached frame, released on return.
+    */
+  private def door(g: IndexGroup, cdc: Boolean, rows: DataFrame)(
+      write: DataFrame => Unit): Unit = {
+    val s = rows.sparkSession
+    val trim = if (cdc) None else g.hashStore
+    val entry = trim.fold(rows.persist())(ingestDoorTrim(s, rows, _))
+    try {
+      write(entry)
+      trim.foreach(appendHashRows(s, entry, _))
+    } finally {
+      entry.unpersist()
+      ()
+    }
+  }
 
   /** RETENTION for the admission audit sinks: delete the `_batch`
     * partition directories of `<base>_quarantine` and
@@ -2266,21 +2192,10 @@ object StreamingOps {
       : org.apache.spark.sql.DataFrame = {
     val out = remediateCore(spark, if (cdc) g.upsertStream else g.base,
       g.idCol, g.members.map(_.family.holdTable), fix, admission, batches,
-      healed => {
-        val s = healed.sparkSession
-        // ONE definition of the ingest door's trimmings (shared with
-        // streamingDocumentIngest, late r18 review) — what a healed
-        // row faces can never drift from what a clean delivery faces
-        val door = if (cdc) None else g.hashStore
-        val entry = door.fold(healed.persist())(ingestDoorTrim(s, healed, _))
-        try {
-          g.members.foreach(_.upsert(entry.drop("content_hash")))
-          door.foreach(appendHashRows(s, entry, _))
-        } finally {
-          entry.unpersist()
-          ()
-        }
-      })
+      // the streams' door (late r18 review): what a healed row faces
+      // can never drift from what a clean delivery faces
+      door(g, cdc, _)(e =>
+        g.members.foreach(_.upsert(e.drop("content_hash")))))
     refreshMembers(spark, g)
     out
   }
@@ -2510,10 +2425,10 @@ object StreamingOps {
     }
   }
 
-  /** THE ledgered ingest loop — shared by the vector-index ingests and
-    * [[streamingBm25Ingest]] (review r12: two hand-rolled copies of
-    * the replay machinery is exactly the one-definition-or-drift
-    * failure the loop exists to prevent): file-stream the source,
+  /** THE ledgered ingest loop — shared by every ledgered stream in
+    * this file (review r12: two hand-rolled copies of the replay
+    * machinery is exactly the one-definition-or-drift failure the
+    * loop exists to prevent): file-stream the source,
     * apply each micro-batch through `append` behind the batch-id
     * replay ledger, stable warehouse checkpoint at `<table>_ck`
     * (orphan-cleaned with its paired ledger when the table is gone),
@@ -2525,9 +2440,14 @@ object StreamingOps {
       table: String, refresh: Seq[String],
       append: (org.apache.spark.sql.DataFrame, String, Long) => Unit,
       onReset: SparkSession => Unit = _ => (),
-      afterReplay: SparkSession => Unit = _ => (),
+      stats: Seq[IndexFamily] = Nil,
       maxFilesPerTrigger: Option[Int] = None,
       afterBatch: SparkSession => Unit = _ => ()): Unit = {
+    // tombstones survive a member-loss reset, but its replay re-counts
+    // tombstoned docs: the reset marks each family of `stats` that
+    // keeps corpus stats (BM25), and the finished replay recomputes
+    // them over the tombstone-filtered postings (ADVICE r13)
+    val owed = stats.flatMap(f => f.statsTable.map(f.table -> _))
     val schema = spark.read.parquet(path).schema
     val ledger = table + "_ledger"
     graft.operators.TextOps.clearOrphanLocation(spark, ledger)
@@ -2556,10 +2476,8 @@ object StreamingOps {
       }
       // the family's TOMBSTONE siblings (`_del`, `_del_stage`) are
       // deliberately NOT in the drop list — deletion is terminal per
-      // id, so tombstones must survive a reset. The family-specific
-      // hook records whatever reconciliation the replay will owe them
-      // (ADVICE r13: for stats-bearing families, the replay re-counts
-      // tombstoned docs and the stats must be recomputed afterwards)
+      // id, so tombstones must survive a reset
+      owed.foreach(o => TextOps.markBm25ResetReconcile(spark, o._1))
       onReset(spark)
     }
     // AvailableNow honors the source rate limit: with a cap the run
@@ -2594,7 +2512,8 @@ object StreamingOps {
     q.awaitTermination()
     // replay complete — settle any reset-owed reconciliation BEFORE
     // the caller-session cache refresh (it may rewrite a member)
-    afterReplay(spark)
+    owed.foreach { case (t, st) =>
+      TextOps.reconcileBm25Tombstones(spark, t, st) }
     refresh.foreach { t =>
       if (spark.catalog.tableExists(t)) spark.catalog.refreshTable(t)
     }
@@ -2643,13 +2562,7 @@ object StreamingOps {
       refresh = Seq(table, statsTable),
       append = (batch, t, _) => graft.operators.TextOps
         .appendBm25Postings(batch, t, statsTable),
-      // tombstones survive a member-loss reset; the replay re-ingests
-      // tombstoned docs, so the rebuilt stats are recomputed over the
-      // tombstone-filtered postings once the replay lands (ADVICE r13)
-      onReset = s => graft.operators.TextOps
-        .markBm25ResetReconcile(s, table),
-      afterReplay = s => graft.operators.TextOps
-        .reconcileBm25Tombstones(s, table, statsTable))
+      stats = Seq(TextOps.bm25Family(table, statsTable)))
 
   private def corpusPrep(docs: DataFrame): DataFrame =
     docs

@@ -594,20 +594,41 @@ class AdmissionSpec extends AnyFunSuite with SparkSuite {
       "batch refuses wholesale with the evidence written; fixing the " +
       "threshold and re-invoking replays cleanly") {
     val base = s"admv_doc_p$pid"
+    val vbase = s"admv_vec_p$pid"
     val dir = java.nio.file.Files
       .createTempDirectory("graft_admv").toString
-    drop(famTables(base): _*)
-    rmCk(base)
+    val upsDir = java.nio.file.Files
+      .createTempDirectory("graft_admv_ups").toString
+    val extra = Seq(s"${base}_ups_ledger", s"${base}_ups_quarantine",
+      s"${base}_ups_admission") ++ Seq("_ann", "_ann_vec", "_ann_cfg",
+      "_bq", "_bq_cfg", "_sq", "_sq_cfg", "_pq", "_pq_cb", "_ivf",
+      "_ivf_cent", "_ledger", "_quarantine", "_admission").map(vbase + _)
+    drop(famTables(base) ++ extra: _*)
+    rmCk(base); rmCk(s"${base}_ups"); rmCk(vbase)
+    // every door's valve and rate check speak in its own verb's name
+    def refused(verb: String)(body: => Unit): String = {
+      val e = intercept[Exception](body)
+      val chain = Iterator.iterate(e: Throwable)(_.getCause)
+        .takeWhile(_ != null).take(8)
+        .flatMap(t => Option(t.getMessage)).toSeq
+      assert(chain.exists(_.startsWith(s"$verb: batch 0 quarantined ")),
+        chain.mkString(" | "))
+      chain.mkString(" | ")
+    }
+    def rateRefused(verb: String)(body: => Unit): Unit =
+      assert(intercept[IllegalArgumentException](body).getMessage ===
+        s"requirement failed: $verb: maxQuarantineRate must be in [0, 1]")
     try {
       Tables(spark, sf, "documents").filter(col("doc_id") < 40)
         .write.mode("append").parquet(s"$dir/documents.parquet")
-      val e = intercept[Exception] {
+      rateRefused("streamingDocumentIngest") {
+        StreamingOps.streamingDocumentIngest(spark, dir, base,
+          admission = rules, maxQuarantineRate = 1.5)
+      }
+      val msgs = refused("streamingDocumentIngest") {
         StreamingOps.streamingDocumentIngest(spark, dir, base,
           admission = rules, maxQuarantineRate = 0.0)
       }
-      val msgs = Iterator.iterate(e: Throwable)(_.getCause)
-        .takeWhile(_ != null).take(8)
-        .flatMap(t => Option(t.getMessage)).mkString(" | ")
       assert(msgs.contains("feed looks poisoned"), msgs)
       // the refusal left the evidence...
       assert(spark.catalog.tableExists(s"${base}_quarantine"))
@@ -620,17 +641,57 @@ class AdmissionSpec extends AnyFunSuite with SparkSuite {
       StreamingOps.streamingDocumentIngest(spark, dir, base,
         admission = rules, maxQuarantineRate = 1.0)
       assert(spark.table(s"${base}_bm25").count() > 0)
+
+      // the CDC upsert stream: a rewrite failing both rules
+      val sp = spark
+      import sp.implicits._
+      Seq((1L, "tiny", "xx", "cdc", 4L))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .coalesce(1).write.mode("append").parquet(upsDir)
+      val docs = IndexGroup.documents(base)
+      rateRefused("streamingUpserts") {
+        StreamingOps.streamingUpserts(spark, upsDir, docs,
+          admission = rules, maxQuarantineRate = 1.5)
+      }
+      refused("streamingUpserts") {
+        StreamingOps.streamingUpserts(spark, upsDir, docs,
+          admission = rules, maxQuarantineRate = 0.0)
+      }
+
+      // the vector ingest: one NaN embedding among good ones
+      val emb = Tables(spark, sf, "embeddings")
+      graft.operators.PqIndex.trainCodebook(emb, s"${vbase}_pq")
+      graft.operators.IvfIndex.write(
+        emb.filter(col("vec_id") < 30), s"${vbase}_ivf")
+      spark.sql(s"DROP TABLE ${vbase}_ivf") // keep only the quantizer
+      val dim = emb.select(size(col("embedding"))).head.getInt(0)
+      emb.filter(col("vec_id") < 20).select("vec_id", "embedding")
+        .unionByName(Seq(9001L -> Array.fill(dim)(0.1f)
+          .updated(3, Float.NaN)).toDF("vec_id", "embedding"))
+        .coalesce(1).write.mode("append").parquet(s"$dir/embeddings.parquet")
+      val vecRules = Seq[graft.operators.Quality.Rule](
+        FiniteArray("embedding"))
+      rateRefused("streamingAllIndexIngest") {
+        StreamingOps.streamingAllIndexIngest(spark, dir, vbase,
+          admission = vecRules, maxQuarantineRate = 1.5)
+      }
+      refused("streamingAllIndexIngest") {
+        StreamingOps.streamingAllIndexIngest(spark, dir, vbase,
+          admission = vecRules, maxQuarantineRate = 0.0)
+      }
     } finally {
-      drop(famTables(base): _*)
-      rmCk(base)
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      val paths =
-        try {
-          import scala.jdk.CollectionConverters._
-          walk.sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.toList
-        } finally walk.close()
-      paths.foreach(java.nio.file.Files.deleteIfExists(_))
+      drop(famTables(base) ++ extra: _*)
+      rmCk(base); rmCk(s"${base}_ups"); rmCk(vbase)
+      Seq(dir, upsDir).foreach { d =>
+        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
+        val paths =
+          try {
+            import scala.jdk.CollectionConverters._
+            walk.sorted(java.util.Comparator.reverseOrder())
+              .iterator().asScala.toList
+          } finally walk.close()
+        paths.foreach(java.nio.file.Files.deleteIfExists(_))
+      }
     }
   }
 }

@@ -261,4 +261,28 @@ class OmsDirLoadSpec extends AnyFunSuite with SparkSuite {
       } finally mine.unpersist()
     }
   }
+
+  test("upsertDim over two local relations starts no Spark job: the " +
+      "dimension and the incoming names are both on the driver") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    // the star's dimensions are built this way: a local relation each
+    def local(fields: Seq[StructField], rows: Row*) =
+      spark.createDataFrame(rows.asJava, StructType(fields))
+    val name = StructField("nom_pays", StringType)
+    val dim = local(Seq(name, StructField("id_pays", IntegerType)),
+      Row("France", 1), Row("Peru", 2))
+    val names = local(Seq(name), Row("Peru"), Row("Chad"), Row("Chad"),
+      Row("Benin"))
+    assert(dim.isLocal && names.isLocal)
+    var out: org.apache.spark.sql.DataFrame = null
+    // 2 while the names' distinct ran in Spark: a shuffle job and a
+    // result job
+    assert(jobsOf {
+      out = OmsPipeline.upsertDim(dim, names, "nom_pays", "id_pays")
+    } === 0)
+    assert(out.collect().map(r => r.getString(0) -> r.getInt(1)).toMap ===
+      Map("France" -> 1, "Peru" -> 2, "Benin" -> 3, "Chad" -> 4))
+  }
 }

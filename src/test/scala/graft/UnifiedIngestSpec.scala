@@ -251,6 +251,89 @@ class UnifiedIngestSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("vector member-loss reset: losing the ANN payload resets the " +
+      "group, replays the sibling `_vups` stream and drops the audit " +
+      "sinks; the upserted vectors serve again after the CDC replay") {
+    val base = s"uni_vrst_p$pid"
+    val fams = Seq("_ann", "_ann_vec", "_ann_cfg", "_ann_del", "_bq",
+      "_bq_cfg", "_bq_del", "_sq", "_sq_cfg", "_sq_del", "_pq", "_pq_cb",
+      "_pq_del", "_ivf", "_ivf_cent", "_ivf_del", "_ledger", "_quarantine",
+      "_admission", "_vups_ledger", "_vups_quarantine", "_vups_admission")
+      .map(base + _)
+    val ref = Seq(s"${base}_xann", s"${base}_xann_vec", s"${base}_xann_cfg",
+      s"${base}_xann_del")
+    val dir = java.nio.file.Files.createTempDirectory("graft_univrst")
+      .toString
+    val upsDir = java.nio.file.Files.createTempDirectory("graft_univrstu")
+      .toString
+    def ckExists(t: String) = {
+      val ck = new org.apache.hadoop.fs.Path(
+        spark.conf.get("spark.sql.warehouse.dir"), t.toLowerCase + "_ck")
+      ck.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(ck)
+    }
+    drop(fams ++ ref: _*)
+    rmCk(base, s"${base}_vups")
+    try {
+      PqIndex.trainCodebook(emb, s"${base}_pq")
+      IvfIndex.write(emb.filter(col("vec_id") < 30), s"${base}_ivf")
+      spark.sql(s"DROP TABLE ${base}_ivf") // keep only the quantizer
+      val rules = Seq[graft.operators.Quality.Rule](
+        graft.operators.Quality.Rule.FiniteArray("embedding"))
+      val corpus = emb.filter(col("vec_id") < 40).select("vec_id", "embedding")
+      corpus.write.mode("append").parquet(s"$dir/embeddings.parquet")
+      val g = streaming.IndexGroup.vectors(base)
+      streaming.StreamingOps.streamingAllIndexIngest(spark, dir, base,
+        admission = rules)
+      // CDC: vector 5 re-embedded, vector 9000 new
+      val ups = emb.filter(col("vec_id") === 5L)
+        .select(col("vec_id"),
+          expr("transform(embedding, x -> x + 1.0d)").as("embedding"))
+        .unionByName(emb.filter(col("vec_id") === 6L)
+          .select(lit(9000L).as("vec_id"), col("embedding")))
+      ups.coalesce(1).write.mode("append").parquet(upsDir)
+      streaming.StreamingOps.streamingUpserts(spark, upsDir, g,
+        admission = rules)
+      Seq(s"${base}_quarantine", s"${base}_admission",
+        s"${base}_vups_ledger", s"${base}_vups_admission")
+        .foreach(t => assert(spark.catalog.tableExists(t), t))
+      assert(ckExists(s"${base}_vups"))
+
+      // MEMBER LOSS: the ANN payload vanishes; the next ingest resets
+      spark.sql(s"DROP TABLE ${base}_ann_vec")
+      streaming.StreamingOps.streamingAllIndexIngest(spark, dir, base)
+      assert(spark.catalog.tableExists(s"${base}_ann_vec"))
+      Seq(s"${base}_quarantine", s"${base}_admission",
+        s"${base}_vups_ledger", s"${base}_vups_quarantine",
+        s"${base}_vups_admission")
+        .foreach(t => assert(!spark.catalog.tableExists(t), t))
+      assert(!ckExists(s"${base}_vups"))
+      def live(fam: String, member: String) =
+        AnnIndex.family(fam).frames(spark).member(member)
+          .select("vec_id", "v", "nrm")
+      assert(live(s"${base}_ann", s"${base}_ann_vec")
+        .filter(col("vec_id") === 9000L).isEmpty)
+
+      // the CDC stream, re-invoked with no new file, replays its file
+      streaming.StreamingOps.streamingUpserts(spark, upsDir, g)
+      assert(spark.catalog.tableExists(s"${base}_vups_ledger"))
+      // reference: the same corpus and upsert on one independent family
+      AnnIndex.append(corpus, s"${base}_xann")
+      AnnIndex.upsert(ups, s"${base}_xann")
+      assert(strings(live(s"${base}_ann", s"${base}_ann_vec")) ===
+        strings(live(s"${base}_xann", s"${base}_xann_vec")))
+      Seq(("_bq", BqIndex.family _), ("_sq", SqIndex.family _),
+        ("_pq", PqIndex.family _), ("_ivf", IvfIndex.family _)).foreach {
+        case (sfx, fam) =>
+          val ids = fam(base + sfx).frames(spark).member(base + sfx)
+            .select("vec_id").collect().map(_.getLong(0)).toSet
+          assert(ids.contains(9000L) && ids.contains(5L), sfx)
+      }
+    } finally {
+      drop(fams ++ ref: _*)
+      rmCk(base, s"${base}_vups")
+    }
+  }
+
   test("streamingAllIndexIngest equals per-family independent appends") {
     val base = s"uni_vec_p$pid"
     val fams = Seq(s"${base}_ann", s"${base}_ann_vec", s"${base}_ann_cfg",
