@@ -4,18 +4,23 @@ import graft.operators.{TextOps => TO}
 import graft.operators.IndexFamily.Heal
 import graft.operators.TextOps.{FoldGuard, IndexStatus, MaintenancePolicy}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 /** ONE stored index family's lifecycle — hold, delete, vacuum,
   * maintain, describe, fsck and repair, written once over the tables
-  * the family owns — plus the two seams every kind's own code goes
+  * the family owns — plus the seams every kind's own code goes
   * through: [[frames]], where the family's rows come from (live, or as
-  * of a snapshot tag), and [[upsert]], the barrier-then-append body.
-  * The five vector families, the BM25 postings and the band index are
-  * instances; each kind keeps only its write/append code and its
-  * scorers plus the data below, so neither the verbs nor the reads can
-  * drift apart per family (REPOSE's one-probe-contract idea, applied
-  * to the lifecycle and to the read side).
+  * of a snapshot tag); and the write side — [[rebuild]], [[append]],
+  * [[upsert]] (barrier, then append) and [[retrain]] (a frozen
+  * quantizer's train-and-swap). The five vector families, the BM25
+  * postings and the band index are instances; each kind keeps only its
+  * [[IndexFamily.Encoder]] (rows in, member frames out), its training
+  * and its scorers plus the data below, so neither the verbs, the
+  * reads nor the writes can drift apart per family (REPOSE's
+  * one-probe-contract idea, applied to the lifecycle and to both
+  * sides of it). BM25's batch write and append keep their own bodies:
+  * the batch postings are a different format, and an append also
+  * writes the stats write-ahead log.
   *
   * Built only by the per-kind constructors — [[AnnIndex.family]],
   * [[IvfIndex.family]], [[PqIndex.family]], [[BqIndex.family]],
@@ -121,6 +126,67 @@ final class IndexFamily private[operators] (
           else Some(TO.configRow(snap("_cfg").collect()(0))))
   }
 
+  /** REBUILD the family from `rows`: drop the data members and, when
+    * the kind pins a config, the `_cfg` pin — never the `_del` list or
+    * the `_hold` registry, so terminal deletes and holds outlive every
+    * rebuild — then [[append]] at [[TextOps.rebuildGen]]. Rebuilt rows
+    * ride at the top surviving finite barrier, not gen 0: below it,
+    * every previously upserted id's rebuilt rows would read as
+    * superseded and vanish from probes. The pin is written only after
+    * the data ([[append]]), so a failed rebuild leaves no pin at all,
+    * never one describing data it did not write — probes then fall
+    * back to the caller's parameters. A quantizer sibling (`_cent`,
+    * `_cb`) is the kind's training to overwrite. */
+  private[operators] def rebuild(rows: DataFrame, nBuckets: Int,
+      pin: Seq[(String, Int)] = Nil)(
+      encoder: => IndexFamily.Encoder): Unit = {
+    val s = rows.sparkSession
+    TO.withBuildLock(s) {
+      (members ++ (if (pin.isEmpty) Nil else Seq(table + "_cfg")))
+        .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
+      append(rows, TO.rebuildGen(s, delTable), nBuckets, pin)(encoder)
+    }
+  }
+
+  /** APPEND `rows` at generation `gen`, nothing stored rewritten. Under
+    * the build lock: a maintenance swap (compact, vacuum, refresh)
+    * lists the files before its rewrite, and an append landing between
+    * that listing and the swap would be lost with the old table. In
+    * order:
+    *   1. the kind's `encoder` is built — under the lock, so it reads
+    *      the stored quantizer a refresh may be swapping, and a kind
+    *      that needs one refuses before anything is touched;
+    *   2. an existing `_cfg` pin must equal `pin` (a mismatched ingest
+    *      fails loudly instead of silently forking the family);
+    *   3. held ids leave the batch — the hold gate of every write,
+    *      append, upsert and retrain;
+    *   4. each member frame the encoder returns is saved, stamped with
+    *      `gen` and bucketed and sorted on its key, after its orphan
+    *      location is swept ([[TextOps.clearOrphanLocation]]);
+    *   5. a missing pin is written, after the data it describes.
+    * Member rows are doc-local for every kind, so an index grown by
+    * appends equals a from-scratch [[rebuild]] over the union (under
+    * the same quantizer). */
+  private[operators] def append(rows: DataFrame, gen: Long, nBuckets: Int,
+      pin: Seq[(String, Int)] = Nil)(
+      encoder: => IndexFamily.Encoder): Unit = {
+    val s = rows.sparkSession
+    TO.withBuildLock(s) {
+      val enc = encoder
+      val pinned = pin.nonEmpty && s.catalog.tableExists(table + "_cfg")
+      if (pinned) TO.ensureIndexConfig(s, table, pin)
+      val gated = TO.exceptHeld(rows, s, holdTable, callerIdCol)
+      val e = enc.persisted.fold(gated)(_(gated).persist())
+      try enc.encode(e).foreach { m =>
+        TO.clearOrphanLocation(s, m.table)
+        m.rows.withColumn("gen", lit(gen)).write.mode("append")
+          .bucketBy(nBuckets, m.bucket).sortBy(m.bucket)
+          .saveAsTable(m.table)
+      } finally if (enc.persisted.nonEmpty) { e.unpersist(); () }
+      if (pin.nonEmpty && !pinned) TO.ensureIndexConfig(s, table, pin)
+    }
+  }
+
   /** UPSERT a batch: under the build lock, take the family's next
     * barrier generation, tombstone the batch's caller ids at it, then
     * run the kind's `append` at the same generation — old versions
@@ -137,6 +203,37 @@ final class IndexFamily private[operators] (
     TO.tombstone(s, delTable, batch.select(col(callerIdCol).as(idCol)),
       idCol, gen = g)
     append(g)
+  }
+
+  /** RETRAIN-AND-SWAP, a frozen-quantizer family's refresh: under the
+    * build lock, heal any crashed swap of the family, run the
+    * fold-aware snapshot check (`verb` names the refusal — every
+    * member file is rewritten), then [[append]] the encoder `train`
+    * returns into the `_compact` replacements (`train` is handed that
+    * naming: it trains a fresh quantizer on the hold-gated rows, saves
+    * it under the replacement sibling's name and encodes every row
+    * under it) at the current top finite generation — the family's
+    * upsert barriers survive a refresh and the refreshed corpus is
+    * current by definition — and promote siblings and members
+    * together through [[TextOps.swapIndexTableGroup]], so a crash at
+    * any step converges to the all-new group on recovery and new
+    * centers never serve old assignments. */
+  private[operators] def retrain(rows: DataFrame, nBuckets: Int,
+      guard: FoldGuard, verb: String)(
+      train: (String => String) => IndexFamily.Encoder): Unit = {
+    val s = rows.sparkSession
+    val tmp = (t: String) => t + "_compact"
+    val pairs = (swapSiblings ++ members).map(t => t -> tmp(t))
+    TO.withBuildLock(s) {
+      TO.recoverGroupSwap(s, table)
+      (members ++ swapSiblings).foreach(TO.recoverSwap(s, _))
+      TO.guardFold(s, s"$verb of $table", members, guard)
+      pairs.foreach { case (_, x) =>
+        s.sql(s"DROP TABLE IF EXISTS $x"); TO.clearOrphanLocation(s, x)
+      }
+      append(rows, TO.rebuildGen(s, delTable), nBuckets)(train(tmp))
+      TO.swapIndexTableGroup(s, table, pairs)
+    }
   }
 
   /** Place a LEGAL HOLD on ids (r15 — see [[TextOps.holdIds]]): the
@@ -277,6 +374,20 @@ object IndexFamily {
       readConfig: () => Option[Map[String, Int]]) {
     lazy val config: Option[Map[String, Int]] = readConfig()
   }
+
+  /** One member frame of an [[Encoder]]: `rows` land in `table`,
+    * bucketed and sorted on `bucket`. */
+  private[operators] final case class Member(table: String,
+      bucket: String, rows: DataFrame)
+
+  /** A kind's encoder — hold-gated rows in, member frames out. An
+    * `encode` that reads its input more than once (ANN's two members,
+    * IVF's training and assignment) names the prep in `persisted`:
+    * `encode` then reads the prepped rows, persisted until the members
+    * are saved. */
+  private[operators] final case class Encoder(
+      encode: DataFrame => Seq[Member],
+      persisted: Option[DataFrame => DataFrame] = None)
 
   /** A repair heal: the violations it answers, its description in
     * repair's result, and the heal itself. */

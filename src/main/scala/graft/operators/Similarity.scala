@@ -579,54 +579,38 @@ object AnnIndex {
       .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
 
   /** Materialize `emb`'s band postings + vector payload as bucketed
-    * tables (see object doc). `payloadCols` ride in the payload table
-    * for metadata-filtered probes ([[topKFiltered]]). Caller-supplied
-    * names must be per-process unique in a shared warehouse —
-    * TextOps.clearOrphanLocation's contract.
+    * tables (see object doc) — the family's [[IndexFamily.rebuild]]:
+    * the `_cfg` pin is retired with the data and re-pinned only after
+    * both data tables land, so a crashed or failed rebuild leaves the
+    * family cfg-absent (probes fall back to the caller's explicit
+    * parameters), never a new-parameter pin over bands it did not
+    * write — [[scoreExternal]] trusts the stored pin, and would band
+    * external queries wrongly under one. `payloadCols` ride in the
+    * payload table for metadata-filtered probes ([[topKFiltered]]).
+    * Caller-supplied names must be per-process unique in a shared
+    * warehouse — TextOps.clearOrphanLocation's contract.
     */
   def write(emb: DataFrame, table: String, nBands: Int = NBands,
       bits: Int = Bits, dim: Int = CosSim.EmbDim, nBuckets: Int = 8,
       payloadCols: Seq[String] = Nil): Unit =
-      TO.withBuildLock(emb.sparkSession) {
-    val s = emb.sparkSession
-    TO.clearOrphanLocation(s, table)
-    TO.clearOrphanLocation(s, table + "_vec")
-    // rebuild-over-upserted-family: rebuilt rows ride at the top
-    // surviving finite barrier, not gen 0 — otherwise every
-    // previously-upserted id's rebuilt rows would sit below its
-    // surviving barrier and exceptTombstones would silently drop them
-    // (TextOps.rebuildGen — ADVICE r14; terminal deletes still kill)
-    val gTop = TO.rebuildGen(s, table + "_del")
-    // a full rebuild may change the banding config — RETIRE the pin
-    // before touching data, and re-pin only after BOTH data tables
-    // land (ADVICE r13): pinning first left a direct-call crash window
-    // where a new-parameter cfg sat over old-parameter stored bands,
-    // and scoreExternal (which trusts the stored cfg) would band
-    // external queries with the wrong config and silently return
-    // garbage candidates. With the pin written LAST, every crash
-    // state is cfg-absent-or-matching: probes fall back to the
-    // caller's explicit parameters, never a config describing data
-    // that was not written. (The memoized path additionally commits
-    // via the `_ok` marker; this ordering protects direct callers.)
-    s.sql(s"DROP TABLE IF EXISTS ${table}_cfg")
-    // the prep scan feeds both writes; persisting the narrow normalized
-    // form beats re-reading + re-folding norms for the band pass
-    // legal holds gate the ingest door (r15)
-    val e = prepPayload(TO.exceptHeld(emb, s, table + "_hold",
-      "vec_id"), dim, payloadCols).persist()
-    try {
-      bandRows(e, nBands, bits, dim).withColumn("gen", lit(gTop))
-        .write.mode("overwrite")
-        .bucketBy(nBuckets, "band_key").sortBy("band_key")
-        .saveAsTable(table)
-      e.withColumn("gen", lit(gTop)).write.mode("overwrite")
-        .bucketBy(nBuckets, "vec_id").sortBy("vec_id")
-        .saveAsTable(table + "_vec")
-    } finally { e.unpersist(); () }
-    TO.ensureIndexConfig(s, table,
-      Seq("dim" -> dim, "nbands" -> nBands, "bits" -> bits,
-        "planemod" -> Ann.planeModulus(nBands * bits, dim)))
-  }
+    family(table).rebuild(emb, nBuckets, pin(nBands, bits, dim))(
+      encoder(table, nBands, bits, dim, payloadCols))
+
+  /** The `_cfg` pin of an ANN build: banding, width and the derived
+    * plane modulus. */
+  private def pin(nBands: Int, bits: Int, dim: Int): Seq[(String, Int)] =
+    Seq("dim" -> dim, "nbands" -> nBands, "bits" -> bits,
+      "planemod" -> Ann.planeModulus(nBands * bits, dim))
+
+  /** ANN's encoder: the band postings and the payload rows, both from
+    * the one persisted normalized form — cheaper than re-reading and
+    * re-folding norms for the band pass. */
+  private def encoder(table: String, nBands: Int, bits: Int, dim: Int,
+      payloadCols: Seq[String]): IndexFamily.Encoder = IndexFamily.Encoder(
+    e => Seq(
+      IndexFamily.Member(table, "band_key", bandRows(e, nBands, bits, dim)),
+      IndexFamily.Member(table + "_vec", "vec_id", e)),
+    Some(prepPayload(_, dim, payloadCols)))
 
   /** Banded ANN top-k served ENTIRELY from the stored index: query band
     * keys and query vectors are fetched by vec_id filter (pruned scans,
@@ -695,42 +679,18 @@ object AnnIndex {
     * rewritten — per-batch cost O(batch). An index grown by appends is
     * row-identical to a from-scratch [[write]] over the union (gated
     * in AnnIndexSpec) and probes identically. The (nBands, bits, dim)
-    * config is PINNED in `<table>_cfg` (first maintenance call
-    * creates it, every later one must match — r13, so a mismatched
-    * ingest fails loudly instead of silently forking the banding);
-    * `payloadCols` must likewise match the original build.
+    * config is PINNED in `<table>_cfg` (the first maintenance call
+    * writes it after its data, every later one must match before
+    * writing any — r13, so a mismatched ingest fails loudly instead of
+    * silently forking the banding); `payloadCols` must likewise match
+    * the original build.
     */
   def append(emb: DataFrame, table: String, nBands: Int = NBands,
       bits: Int = Bits, dim: Int = CosSim.EmbDim,
       nBuckets: Int = 8, payloadCols: Seq[String] = Nil,
       gen: Long = 0L): Unit =
-    // under the shared build lock (review r13): a maintenance swap
-    // (compact/vacuum/refresh) snapshots the file listing before its
-    // rewrite — an append landing files between that snapshot and the
-    // swap would be silently discarded with the old table. The lock is
-    // reentrant, so memoized builds that append under it still work;
-    // table names are per-process-unique, so in-process serialization
-    // IS the full writer set.
-    TO.withBuildLock(emb.sparkSession) {
-    val s = emb.sparkSession
-    TO.ensureIndexConfig(s, table,
-      Seq("dim" -> dim, "nbands" -> nBands, "bits" -> bits,
-        "planemod" -> Ann.planeModulus(nBands * bits, dim)))
-    TO.clearOrphanLocation(s, table)
-    TO.clearOrphanLocation(s, table + "_vec")
-    // legal holds gate the ingest door (r15)
-    val e = prepPayload(TO.exceptHeld(emb, s, table + "_hold",
-      "vec_id"), dim, payloadCols).persist()
-    try {
-      bandRows(e, nBands, bits, dim).withColumn("gen", lit(gen))
-        .write.mode("append")
-        .bucketBy(nBuckets, "band_key").sortBy("band_key")
-        .saveAsTable(table)
-      e.withColumn("gen", lit(gen)).write.mode("append")
-        .bucketBy(nBuckets, "vec_id").sortBy("vec_id")
-        .saveAsTable(table + "_vec")
-    } finally { e.unpersist(); () }
-  }
+    family(table).append(emb, gen, nBuckets, pin(nBands, bits, dim))(
+      encoder(table, nBands, bits, dim, payloadCols))
 
   /** UPSERT vectors — [[IndexFamily.upsert]] over BOTH members: the
     * incoming ids' old band postings and payload rows die under a
@@ -838,13 +798,9 @@ object AnnIndex {
         transform = df => {
       val live = family(table).frames(df.sparkSession)
         .member(table + "_vec")
-      val gen =
-        if (live.columns.contains("gen")) live.select(col("vec_id"),
-          col("gen"))
-        else live.select(col("vec_id")).withColumn("gen", lit(0L))
       bandRows(live.select(col("vec_id"), col("v")),
           cfg("nbands"), cfg("bits"), cfg("dim"))
-        .join(gen, "vec_id")
+        .join(live.select(col("vec_id"), col("gen")), "vec_id")
         .select(col("band_key"), col("vec_id"), col("gen"))
     })
     val wantPm = Ann.planeModulus(cfg("nbands") * cfg("bits"),
@@ -1003,32 +959,14 @@ object IvfIndex {
   val K = 8
   val Iters = 2
 
+  /** Train the quantizer on `emb` and store centroids and cell
+    * assignments — the family's [[IndexFamily.rebuild]] over
+    * [[trained]]. */
   def write(emb: DataFrame, table: String, k: Int = K,
       dim: Int = CosSim.EmbDim, iters: Int = Iters,
-      nBuckets: Int = 8): Unit = TO.withBuildLock(emb.sparkSession) {
-    val s = emb.sparkSession
-    TO.clearOrphanLocation(s, table)
-    TO.clearOrphanLocation(s, table + "_cent")
-    // rebuilt rows ride at the top surviving finite barrier, not
-    // gen 0 (TextOps.rebuildGen — ADVICE r14)
-    val gTop = TO.rebuildGen(s, table + "_del")
-    // persisted: the seed collect, each Lloyd pass, and the final
-    // assignment all rescan the normalized corpus. Legal holds gate
-    // the build door — held vectors neither train nor store (r15).
-    val e = Ann.prepStrict(TO.exceptHeld(emb, s, table + "_hold",
-      "vec_id"), dim).persist()
-    try {
-      val cents = Ivf.kmeansCentroids(e, k, dim, iters)
-      Ivf.assignCells(e, cents).withColumn("gen", lit(gTop))
-        .write.mode("overwrite")
-        .bucketBy(nBuckets, "cell").sortBy("cell")
-        .saveAsTable(table)
-      val sp = s
-      import sp.implicits._
-      cents.toDF("cell", "c").write.mode("overwrite")
-        .saveAsTable(table + "_cent")
-    } finally { e.unpersist(); () }
-  }
+      nBuckets: Int = 8): Unit =
+    family(table).rebuild(emb, nBuckets)(trained(table, identity, k, dim,
+      iters))
 
   /** APPEND-ONLY maintenance for the stored IVF index: new vectors are
     * assigned with the STORED quantizer (centroids read from
@@ -1038,7 +976,7 @@ object IvfIndex {
     * DELIBERATE IVF semantics: the quantizer is frozen at build time,
     * so appended vectors land in the nearest EXISTING cell — the
     * standard inverted-file practice (append at ingest, retrain
-    * periodically when drift warrants a [[write]] rebuild); an
+    * periodically when drift warrants a [[refresh]]); an
     * append-grown index therefore equals a from-scratch build ONLY
     * when the centroids agree, which AnnIndexSpec gates by comparing
     * appended assignments against assignCells under the stored
@@ -1048,21 +986,34 @@ object IvfIndex {
     */
   def append(emb: DataFrame, table: String, nBuckets: Int = 8,
       gen: Long = 0L): Unit =
-    // build-lock scope: the AnnIndex.append rationale (append vs
-    // maintenance-swap file-listing race)
-    TO.withBuildLock(emb.sparkSession) {
-    val s = emb.sparkSession
-    require(s.catalog.tableExists(table + "_cent"),
-      s"IvfIndex.append: no stored quantizer ${table}_cent — build " +
-        "with IvfIndex.write first (append never retrains)")
-    val cents = loadCentroids(s, table)
-    val e = Ann.prepStrict(TO.exceptHeld(emb, s,
-      table + "_hold", "vec_id"), cents.head._2.length)
-    Ivf.assignCells(e, cents).withColumn("gen", lit(gen))
-      .write.mode("append")
-      .bucketBy(nBuckets, "cell").sortBy("cell")
-      .saveAsTable(table)
-  }
+    family(table).append(emb, gen, nBuckets) {
+      val s = emb.sparkSession
+      require(s.catalog.tableExists(table + "_cent"),
+        s"IvfIndex.append: no stored quantizer ${table}_cent — build " +
+          "with IvfIndex.write first (append never retrains)")
+      val cents = loadCentroids(s, table)
+      IndexFamily.Encoder(e => Seq(IndexFamily.Member(table, "cell",
+        Ivf.assignCells(Ann.prepStrict(e, cents.head._2.length), cents))))
+    }
+
+  /** IVF's training encoder ([[write]], [[refresh]]): k-means over the
+    * persisted normalized corpus — the seed collect, each Lloyd pass
+    * and the final assignment all rescan it — the centroids saved as
+    * `into(<table>_cent)`, every row assigned under them into
+    * `into(<table>)`. Held vectors neither train nor store (the
+    * seam's hold gate runs first). */
+  private def trained(table: String, into: String => String, k: Int,
+      dim: Int, iters: Int): IndexFamily.Encoder = IndexFamily.Encoder(
+    e => {
+      val cents = Ivf.kmeansCentroids(e, k, dim, iters)
+      val centT = into(table + "_cent")
+      val sp = e.sparkSession
+      import sp.implicits._
+      TO.clearOrphanLocation(sp, centT)
+      cents.toDF("cell", "c").write.mode("overwrite").saveAsTable(centT)
+      Seq(IndexFamily.Member(into(table), "cell", Ivf.assignCells(e, cents)))
+    },
+    Some(Ann.prepStrict(_, dim)))
 
   /** UPSERT vectors — [[IndexFamily.upsert]] for the IVF cells: the
     * batch re-assigns with the FROZEN stored quantizer (upsert changes
@@ -1121,10 +1072,7 @@ object IvfIndex {
         // repair rewrite: FoldGuard.Orphan (see the Ann heal)
         TO.rewriteBucketed(s, table, guard = TO.FoldGuard.Orphan,
           transform = df => {
-          val withG =
-            if (df.columns.contains("gen")) df
-            else df.withColumn("gen", lit(0L))
-          Ivf.assignCells(withG.drop("cell"), cents)
+          Ivf.assignCells(df.drop("cell"), cents)
             .select(col("vec_id"), col("v"), col("nrm"),
               col("cell"), col("gen"))
         })
@@ -1161,61 +1109,24 @@ object IvfIndex {
 
   /** RETRAIN-AND-SWAP maintenance (the [[PqIndex.refresh]] sibling):
     * retrain the quantizer on `emb` (the current corpus — original
-    * plus appended drift), reassign everything, and promote BOTH
-    * tables via the atomic [[TextOps.swapIndexTables]] dance under the
-    * shared build lock. k and dim are inherited from the CURRENT
-    * stored centroids — refresh moves the cell centers, never the cell
-    * count or width. Deterministic training (lowest-vec_id seeds,
-    * integer-scaled Lloyd means) makes a refreshed index BIT-IDENTICAL
-    * to a from-scratch [[write]] over the same corpus (IvfRefreshSpec)
-    * — write's cost without the serving gap.
-    *
-    * Crash contract: same as PqIndex.refresh — the centroids and
-    * cells promote together through [[TextOps.swapIndexTableGroup]],
-    * so a crash at any step converges to the all-new pair on recovery
-    * (GroupSwapSpec); new centers can no longer serve old assignments.
+    * plus appended drift), reassign everything, and promote centroids
+    * and cells together — [[IndexFamily.retrain]] over [[trained]]. k
+    * and dim are inherited from the CURRENT stored centroids — refresh
+    * moves the cell centers, never the cell count or width.
+    * Deterministic training (lowest-vec_id seeds, integer-scaled Lloyd
+    * means) makes a refreshed index BIT-IDENTICAL to a from-scratch
+    * [[write]] over the same corpus (IvfRefreshSpec) — write's cost
+    * without the serving gap; a crash at any step converges to the
+    * all-new pair on recovery (GroupSwapSpec).
     */
   def refresh(emb: DataFrame, table: String, iters: Int = Iters,
       nBuckets: Int = 8,
-      guard: TO.FoldGuard = TO.FoldGuard.Refuse): Unit = {
-    val s = emb.sparkSession
-    TO.withBuildLock(s) {
-      TO.recoverGroupSwap(s, table)
-      TO.recoverSwap(s, table)
-      TO.recoverSwap(s, table + "_cent")
-      // a retrain-and-swap rewrites every cells file — fold-aware
-      // snapshot check first (r17)
-      TO.guardFold(s, s"IvfIndex.refresh of $table", Seq(table), guard)
-      val stored = s.table(table + "_cent").collect()
-      val k = stored.length
-      val dim = stored.head.getSeq[Double](1).length
-      val cellsTmp = table + "_compact"
-      val centTmp = table + "_cent_compact"
-      Seq(cellsTmp, centTmp).foreach { x =>
-        s.sql(s"DROP TABLE IF EXISTS $x"); TO.clearOrphanLocation(s, x)
-      }
-      val e = Ann.prepStrict(TO.exceptHeld(emb, s,
-        table + "_hold", "vec_id"), dim).persist()
-      try {
-        val cents = Ivf.kmeansCentroids(e, k, dim, iters)
-        // re-materialized rows land at the CURRENT top finite
-        // generation (r14): the family's upsert barriers survive a
-        // refresh, so rows stamped below them would read as
-        // superseded — the refreshed corpus is current by definition,
-        // so it rides at the top barrier (0 when no upserts ever ran;
-        // terminal deletions still kill their ids at any gen)
-        val gTop = TO.nextGen(s, table + "_del") - 1
-        Ivf.assignCells(e, cents).withColumn("gen", lit(gTop)).write
-          .bucketBy(nBuckets, "cell").sortBy("cell")
-          .saveAsTable(cellsTmp)
-        val sp = s
-        import sp.implicits._
-        cents.toDF("cell", "c").write.saveAsTable(centTmp)
-      } finally { e.unpersist(); () }
-      TO.swapIndexTableGroup(s, table,
-        Seq(table + "_cent" -> centTmp, table -> cellsTmp))
+      guard: TO.FoldGuard = TO.FoldGuard.Refuse): Unit =
+    family(table).retrain(emb, nBuckets, guard, "IvfIndex.refresh") {
+      into =>
+        val cents = loadCentroids(emb.sparkSession, table)
+        trained(table, into, cents.size, cents.head._2.length, iters)
     }
-  }
 
   /** Cell-probe top-k from the stored assignments: queries fetched by
     * vec_id filter off the same table carry their cell, candidates are
@@ -1542,25 +1453,12 @@ object PqIndex {
     } finally { e.unpersist(); () }
   }
 
-  /** Train and store codebook + codes: [[trainCodebook]] then one
-    * [[append]] of the whole corpus — byte-identical to a fused build
-    * (parquet doubles roundtrip exactly, so encoding under the STORED
-    * codebook equals encoding under the in-flight one), and it keeps
-    * ONE encode definition for build, append, and streaming ingest. */
+  /** Train and store codebook + codes — the family's
+    * [[IndexFamily.rebuild]] over [[trained]]. */
   def write(emb: DataFrame, table: String, nBuckets: Int = 8,
       m: Int = M, subDim: Int = SubDim, ks: Int = Ks): Unit =
-      TO.withBuildLock(emb.sparkSession) {
-    val s = emb.sparkSession
-    TO.clearOrphanLocation(s, table)
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    // legal holds gate the build door — held vectors neither train
-    // the codebook nor store codes (append filters the store) (r15)
-    trainCodebook(TO.exceptHeld(emb, s, table + "_hold", "vec_id"),
-      table, m, subDim, ks)
-    // rebuilt rows ride at the top surviving finite barrier, not
-    // gen 0 (TextOps.rebuildGen — ADVICE r14)
-    append(emb, table, nBuckets, gen = TO.rebuildGen(s, table + "_del"))
-  }
+    family(table).rebuild(emb, nBuckets)(trained(table, identity, m,
+      subDim, ks))
 
   /** Encode vectors under a GIVEN codebook frame (sub, cid, c) — the
     * shared definition [[append]] writes and AnnIndexSpec's
@@ -1573,29 +1471,41 @@ object PqIndex {
       subvectors(Ann.prepStrict(emb, m * subDim), m, subDim), cb))
   }
 
+  /** PQ's encoder: code rows into `out` under the STORED codebook
+    * `cbTable` — ONE encode definition for build, append, refresh and
+    * streaming ingest; encoding under the stored codebook equals
+    * encoding under the in-flight one (parquet doubles roundtrip
+    * exactly). */
+  private def codes(s: SparkSession, out: String,
+      cbTable: String): IndexFamily.Encoder = {
+    val cb = s.table(cbTable).select(col("sub"), col("cid"), col("c"))
+    IndexFamily.Encoder(g =>
+      Seq(IndexFamily.Member(out, "vec_id", encode(g, cb))))
+  }
+
+  /** PQ's training encoder ([[write]], [[refresh]]): train the
+    * codebook into `into(<table>_cb)` on the hold-gated rows, then
+    * [[codes]] under it into `into(<table>)`. */
+  private def trained(table: String, into: String => String, m: Int,
+      subDim: Int, ks: Int): IndexFamily.Encoder = IndexFamily.Encoder(
+    g => {
+      trainCodebookTo(g, into(table + "_cb"), m, subDim, ks)
+      codes(g.sparkSession, into(table), into(table + "_cb")).encode(g)
+    })
+
   /** APPEND-ONLY maintenance: new vectors are encoded with the STORED
     * codebook (frozen at build — the [[IvfIndex.append]] contract:
-    * retrain periodically via [[write]] when drift warrants) and their
-    * code rows appended; nothing rewritten. */
+    * retrain periodically via [[refresh]] when drift warrants) and
+    * their code rows appended; nothing rewritten. */
   def append(emb: DataFrame, table: String, nBuckets: Int = 8,
       gen: Long = 0L): Unit =
-    // build-lock scope: the AnnIndex.append rationale (append vs
-    // maintenance-swap file-listing race)
-    TO.withBuildLock(emb.sparkSession) {
-    val s = emb.sparkSession
-    require(s.catalog.tableExists(table + "_cb"),
-      s"PqIndex.append: no stored codebook ${table}_cb — build with " +
-        "PqIndex.write first (append never retrains)")
-    // a dead process's orphaned codes directory would fail the CREATE
-    // the first append performs (the guard every sibling append has)
-    TO.clearOrphanLocation(s, table)
-    val cb = s.table(table + "_cb").select(col("sub"), col("cid"),
-      col("c"))
-    encode(TO.exceptHeld(emb, s, table + "_hold", "vec_id"),
-        cb).withColumn("gen", lit(gen))
-      .write.mode("append").bucketBy(nBuckets, "vec_id").sortBy("vec_id")
-      .saveAsTable(table)
-  }
+    family(table).append(emb, gen, nBuckets) {
+      val s = emb.sparkSession
+      require(s.catalog.tableExists(table + "_cb"),
+        s"PqIndex.append: no stored codebook ${table}_cb — build with " +
+          "PqIndex.write first (append never retrains)")
+      codes(s, table, table + "_cb")
+    }
 
   /** UPSERT vectors — [[IndexFamily.upsert]] for the PQ codes: the
     * batch re-encodes with the FROZEN stored codebook (retraining
@@ -1802,59 +1712,28 @@ object PqIndex {
 
   /** RETRAIN-AND-SWAP maintenance (VERDICT r12 #4): train a fresh
     * codebook on `emb` (the current corpus — original plus appended
-    * drift), re-encode everything under it, and promote BOTH tables
-    * via the atomic [[TextOps.swapIndexTables]] dance — the compaction
-    * precedent, under the shared build lock so in-process probes and
-    * builders serialize with the swap. The grid (m, subDim) and ks are
-    * inherited from the CURRENT codebook: refresh changes the
-    * codewords, never the layout.
+    * drift), re-encode everything under it, and promote codebook and
+    * codes together — [[IndexFamily.retrain]] over [[trained]], so a
+    * crash at ANY step converges to the all-new pair on the next
+    * refresh's recovery (GroupSwapSpec) and new codewords never serve
+    * old codes. The grid (m, subDim) and ks are inherited from the
+    * CURRENT codebook: refresh changes the codewords, never the
+    * layout.
     *
     * Determinism makes the parity gate exact: training is seeded from
     * the ks lowest vec_ids with integer-scaled Lloyd means, so a
     * refreshed index is BIT-IDENTICAL to a from-scratch [[write]] over
     * the same corpus (spec-gated) — refresh is write's cost without
     * the serving gap.
-    *
-    * Crash contract: the codebook and codes promote together through
-    * [[TextOps.swapIndexTableGroup]] — an intent marker plus
-    * rename-out/rename-in phases, so a crash at ANY step converges to
-    * the all-new pair on the next refresh's [[TextOps
-    * .recoverGroupSwap]] (gated in GroupSwapSpec); new codewords can
-    * no longer serve old codes.
     */
   def refresh(emb: DataFrame, table: String, nBuckets: Int = 8,
-      guard: TO.FoldGuard = TO.FoldGuard.Refuse): Unit = {
-    val s = emb.sparkSession
-    TO.withBuildLock(s) {
-      TO.recoverGroupSwap(s, table)
-      TO.recoverSwap(s, table)
-      TO.recoverSwap(s, table + "_cb")
-      // a retrain-and-swap rewrites every codes file — fold-aware
-      // snapshot check first (r17)
-      TO.guardFold(s, s"PqIndex.refresh of $table", Seq(table), guard)
-      val cb = s.table(table + "_cb")
-      val (m, subDim) = cbGrid(cb)
-      val ks = (cb.count() / m).toInt
-      val cbTmp = table + "_cb_compact"
-      val codesTmp = table + "_compact"
-      Seq(cbTmp, codesTmp).foreach { x =>
-        s.sql(s"DROP TABLE IF EXISTS $x"); TO.clearOrphanLocation(s, x)
-      }
-      // legal holds gate the retrain door too (r15)
-      val live = TO.exceptHeld(emb, s, table + "_hold", "vec_id")
-      trainCodebookTo(live, cbTmp, m, subDim, ks)
-      // re-encoded rows ride at the current top finite generation —
-      // the IvfIndex.refresh rationale (upsert barriers survive a
-      // refresh; the refreshed corpus is current by definition)
-      val gTop = TO.nextGen(s, table + "_del") - 1
-      encode(live, s.table(cbTmp).select(col("sub"), col("cid"), col("c")))
-        .withColumn("gen", lit(gTop))
-        .write.bucketBy(nBuckets, "vec_id").sortBy("vec_id")
-        .saveAsTable(codesTmp)
-      TO.swapIndexTableGroup(s, table,
-        Seq(table + "_cb" -> cbTmp, table -> codesTmp))
+      guard: TO.FoldGuard = TO.FoldGuard.Refuse): Unit =
+    family(table).retrain(emb, nBuckets, guard, "PqIndex.refresh") {
+      into =>
+        val cb = emb.sparkSession.table(table + "_cb")
+        val (m, subDim) = cbGrid(cb)
+        trained(table, into, m, subDim, (cb.count() / m).toInt)
     }
-  }
 
   /** The sv/cb0/pa1/cb1/codes CTE bodies (no WITH, no `e` — the caller
     * supplies the canon `e`): per-subspace seed + Lloyd + assignment,
@@ -2016,21 +1895,15 @@ object BqIndex {
       "THEN shiftleft(CAST(1 AS BIGINT), p) ELSE CAST(0 AS BIGINT) " +
       "END))"
 
-  /** Build the signature table from scratch. Rescoring vectors live in
-    * the [[AnnIndex]] payload table — BQ stores ONLY the dim/8-byte
-    * signatures. A rebuild may change dim, so the config row resets
+  /** Build the signature table from scratch — the family's
+    * [[IndexFamily.rebuild]]. Rescoring vectors live in the
+    * [[AnnIndex]] payload table — BQ stores ONLY the dim/8-byte
+    * signatures. A rebuild may change dim, so the config pin resets
     * with the table. */
   def write(emb: DataFrame, table: String, dim: Int = CosSim.EmbDim,
-      nBuckets: Int = 8): Unit = TO.withBuildLock(emb.sparkSession) {
-    val s = emb.sparkSession
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    s.sql(s"DROP TABLE IF EXISTS ${table}_cfg")
-    TO.clearOrphanLocation(s, table)
-    // rebuilt rows ride at the top surviving finite barrier, not
-    // gen 0 (TextOps.rebuildGen — ADVICE r14)
-    append(emb, table, dim, nBuckets,
-      gen = TO.rebuildGen(s, table + "_del"))
-  }
+      nBuckets: Int = 8): Unit =
+    family(table).rebuild(emb, nBuckets, Seq("dim" -> dim))(
+      encoder(table, dim))
 
   /** APPEND-ONLY maintenance: signatures are doc-local (no corpus
     * statistics, no codebook), so growing the table batch by batch is
@@ -2039,19 +1912,14 @@ object BqIndex {
     * in `<table>_cfg`; later appends must match it. */
   def append(emb: DataFrame, table: String, dim: Int = CosSim.EmbDim,
       nBuckets: Int = 8, gen: Long = 0L): Unit =
-    // build-lock scope: the AnnIndex.append rationale (append vs
-    // maintenance-swap file-listing race)
-    TO.withBuildLock(emb.sparkSession) {
-    val s = emb.sparkSession
-    TO.ensureIndexConfig(s, table, Seq("dim" -> dim))
-    TO.clearOrphanLocation(s, table)
-    Ann.prepStrict(TO.exceptHeld(emb, s, table + "_hold",
-        "vec_id"), dim)
-      .select(col("vec_id"), expr(sigExpr).as("sig"),
-        lit(gen).as("gen"))
-      .write.mode("append").bucketBy(nBuckets, "vec_id").sortBy("vec_id")
-      .saveAsTable(table)
-  }
+    family(table).append(emb, gen, nBuckets, Seq("dim" -> dim))(
+      encoder(table, dim))
+
+  /** BQ's encoder: the width-checked canon vector's sign words. */
+  private def encoder(table: String, dim: Int): IndexFamily.Encoder =
+    IndexFamily.Encoder(g => Seq(IndexFamily.Member(table, "vec_id",
+      Ann.prepStrict(g, dim).select(col("vec_id"),
+        expr(sigExpr).as("sig")))))
 
   /** UPSERT vectors — [[IndexFamily.upsert]] for the BQ signatures
     * (stateless doc-local signatures: barrier + re-sign + append,
@@ -2261,18 +2129,13 @@ object SqIndex {
     * in-flight. */
   private val vqExpr = "transform(codes, c -> CAST(c AS DOUBLE) * sc)"
 
+  /** Build the codes table from scratch — the family's
+    * [[IndexFamily.rebuild]]; a rebuild may change dim, so the config
+    * pin resets with the table. */
   def write(emb: DataFrame, table: String, dim: Int = CosSim.EmbDim,
-      nBuckets: Int = 8): Unit = TO.withBuildLock(emb.sparkSession) {
-    val s = emb.sparkSession
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    // a rebuild may change dim — the config row resets with the table
-    s.sql(s"DROP TABLE IF EXISTS ${table}_cfg")
-    TO.clearOrphanLocation(s, table)
-    // rebuilt rows ride at the top surviving finite barrier, not
-    // gen 0 (TextOps.rebuildGen — ADVICE r14)
-    append(emb, table, dim, nBuckets,
-      gen = TO.rebuildGen(s, table + "_del"))
-  }
+      nBuckets: Int = 8): Unit =
+    family(table).rebuild(emb, nBuckets, Seq("dim" -> dim))(
+      encoder(table, dim))
 
   /** APPEND-ONLY maintenance: the per-vector scale depends only on the
     * vector's own coordinates, so growing batch by batch equals a
@@ -2283,24 +2146,18 @@ object SqIndex {
     * dot is NULL, silently vanishing candidates from [[topK]]. */
   def append(emb: DataFrame, table: String, dim: Int = CosSim.EmbDim,
       nBuckets: Int = 8, gen: Long = 0L): Unit =
-    // build-lock scope: the AnnIndex.append rationale (append vs
-    // maintenance-swap file-listing race)
-    TO.withBuildLock(emb.sparkSession) {
-    val s = emb.sparkSession
-    TO.ensureIndexConfig(s, table, Seq("dim" -> dim))
-    TO.clearOrphanLocation(s, table)
-    // ingest-side width enforcement — the canonChecked contract;
-    // legal holds gate the ingest door (r15)
-    TO.exceptHeld(emb, s, table + "_hold", "vec_id")
-      .select(col("vec_id"),
-        CosSim.canonChecked(col("embedding"), dim).as("v"))
-      .withColumn("sc",
-        expr("array_max(transform(v, x -> abs(x)))") / lit(127.0))
-      .select(col("vec_id"), col("sc"), expr(codesExpr).as("codes"),
-        lit(gen).as("gen"))
-      .write.mode("append").bucketBy(nBuckets, "vec_id").sortBy("vec_id")
-      .saveAsTable(table)
-  }
+    family(table).append(emb, gen, nBuckets, Seq("dim" -> dim))(
+      encoder(table, dim))
+
+  /** SQ8's encoder: the width-checked canon vector (the canonChecked
+    * contract), its per-vector scale and int8 codes. */
+  private def encoder(table: String, dim: Int): IndexFamily.Encoder =
+    IndexFamily.Encoder(g => Seq(IndexFamily.Member(table, "vec_id",
+      g.select(col("vec_id"),
+          CosSim.canonChecked(col("embedding"), dim).as("v"))
+        .withColumn("sc",
+          expr("array_max(transform(v, x -> abs(x)))") / lit(127.0))
+        .select(col("vec_id"), col("sc"), expr(codesExpr).as("codes")))))
 
   /** UPSERT vectors — [[IndexFamily.upsert]] for the SQ8 codes
     * (stateless per-vector scales: barrier + re-quantize + append,

@@ -395,16 +395,24 @@ object TextOps {
   private[graft] def tombstone(s: org.apache.spark.sql.SparkSession,
       delTable: String, ids: org.apache.spark.sql.DataFrame,
       idCol: String, gen: Long = TerminalGen): Unit =
-    withBuildLock(s) {
-    clearOrphanLocation(s, delTable)
-    val fresh = ids.select(col(idCol)).distinct()
-      .withColumn("gen", lit(gen))
+    appendNovel(s, delTable,
+      ids.select(col(idCol)).distinct().withColumn("gen", lit(gen)),
+      Seq(idCol, "gen"))
+
+  /** The one write of the append-only id lists (tombstones, holds):
+    * under the build lock, append the rows of `fresh` that `table`
+    * does not hold yet by `keys` — a replayed delete, upsert or hold
+    * appends nothing. */
+  private def appendNovel(s: org.apache.spark.sql.SparkSession,
+      table: String, fresh: org.apache.spark.sql.DataFrame,
+      keys: Seq[String]): Unit = withBuildLock(s) {
+    clearOrphanLocation(s, table)
     val novel =
-      if (s.catalog.tableExists(delTable))
-        fresh.join(s.table(delTable), Seq(idCol, "gen"), "left_anti")
+      if (s.catalog.tableExists(table))
+        fresh.join(s.table(table), keys, "left_anti")
       else fresh
-    novel.coalesce(1).write.mode("append").saveAsTable(delTable)
-    s.catalog.refreshTable(delTable)
+    novel.coalesce(1).write.mode("append").saveAsTable(table)
+    s.catalog.refreshTable(table)
   }
 
   /** LEGAL-HOLD registry (r15, VERDICT item 4 — the vacuumIndex
@@ -424,16 +432,9 @@ object TextOps {
     */
   private[graft] def holdIds(s: org.apache.spark.sql.SparkSession,
       holdTable: String, ids: org.apache.spark.sql.DataFrame,
-      idCol: String): Unit = withBuildLock(s) {
-    clearOrphanLocation(s, holdTable)
-    val fresh = ids.select(col(idCol)).distinct()
-    val novel =
-      if (s.catalog.tableExists(holdTable))
-        fresh.join(s.table(holdTable), Seq(idCol), "left_anti")
-      else fresh
-    novel.coalesce(1).write.mode("append").saveAsTable(holdTable)
-    s.catalog.refreshTable(holdTable)
-  }
+      idCol: String): Unit =
+    appendNovel(s, holdTable, ids.select(col(idCol)).distinct(),
+      Seq(idCol))
 
   /** Ingest-side hold gate: subtract the family's hold registry from
     * an incoming batch. No registry (the common case) = the frame
@@ -4048,11 +4049,23 @@ object TextOps {
     case _ => None
   }
 
+  /** The file system the lock file is created, read, stated and
+    * deleted through: the raw one under a checksummed local FS. A lock
+    * body is a few bytes rewritten under contention, and a `.crc`
+    * sibling read mid-rewrite only makes Hadoop log a spurious
+    * `FSInputChecker` EOF stack per contended poll. */
+  private def lockFs(s: org.apache.spark.sql.SparkSession,
+      p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileSystem =
+    p.getFileSystem(s.sparkContext.hadoopConfiguration) match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case fs => fs
+    }
+
   private def acquireProcessLock(
       s: org.apache.spark.sql.SparkSession,
       waitMsOverride: Option[Long] = None): Unit = {
     val p = processLockPath(s)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = lockFs(s, p)
     val timeoutMs = waitMsOverride.getOrElse(
       s.conf.getOption("graft.buildLock.timeoutMs")
         .map(_.toLong).getOrElse(30000L))
@@ -4117,8 +4130,7 @@ object TextOps {
       s: org.apache.spark.sql.SparkSession): Unit = {
     val p = processLockPath(s)
     try {
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(p, false); ()
+      lockFs(s, p).delete(p, false); ()
     } catch { case scala.util.control.NonFatal(_) => () }
   }
 
@@ -4630,19 +4642,8 @@ object TextOps {
     * costs O(|batch| + collisions) with no second corpus-wide join.
     */
   def writeBandIndex(docs: org.apache.spark.sql.DataFrame, table: String,
-      nBuckets: Int = 8): Unit = withBuildLock(docs.sparkSession) {
-    clearOrphanLocation(docs.sparkSession, table)
-    // rebuild-over-upserted-family: ride at the top surviving finite
-    // barrier, not gen 0 (see [[rebuildGen]] — ADVICE r14). Legal
-    // holds gate the rebuild door too (r15).
-    bandIndexRows(exceptHeld(docs, docs.sparkSession,
-        table + "_hold", "doc_id"), "old_id", "old_toks")
-      .withColumn("gen",
-        lit(rebuildGen(docs.sparkSession, table + "_del")))
-      .write.mode("overwrite")
-      .bucketBy(nBuckets, "band_key").sortBy("band_key")
-      .saveAsTable(table)
-  }
+      nBuckets: Int = 8): Unit =
+    bandFamily(table).rebuild(docs, nBuckets)(bandEncoder(table))
 
   /** APPEND-ONLY maintenance for the MinHash band index (VERDICT r11
     * #6) — the q_bm25_incr treatment for dedup: every index row
@@ -4658,18 +4659,13 @@ object TextOps {
     */
   def appendBandIndex(docs: org.apache.spark.sql.DataFrame, table: String,
       nBuckets: Int = 8, gen: Long = 0L): Unit =
-    // build-lock scope: the appendBm25Postings rationale (append vs
-    // maintenance-swap file-listing race)
-    withBuildLock(docs.sparkSession) {
-      clearOrphanLocation(docs.sparkSession, table)
-      // legal holds gate the ingest door (r15)
-      bandIndexRows(exceptHeld(docs, docs.sparkSession,
-          table + "_hold", "doc_id"), "old_id", "old_toks")
-        .withColumn("gen", lit(gen))
-        .write.mode("append")
-        .bucketBy(nBuckets, "band_key").sortBy("band_key")
-        .saveAsTable(table)
-    }
+    bandFamily(table).append(docs, gen, nBuckets)(bandEncoder(table))
+
+  /** The band index's encoder: each document's slot-prefixed band rows
+    * ([[bandIndexRows]]), stored as (band_key, old_id, old_toks). */
+  private def bandEncoder(table: String): IndexFamily.Encoder =
+    IndexFamily.Encoder(d => Seq(IndexFamily.Member(table, "band_key",
+      bandIndexRows(d, "old_id", "old_toks"))))
 
   /** Memoized APPEND-BUILT corpus band index for `sfDir` (the
     * [[bm25IndexIncr]] contract: per process + catalog, `_ok` marker

@@ -216,6 +216,30 @@ class AnnIndexSpec extends AnyFunSuite with SparkSuite {
       assert(AnnIndex.topK(spark, t, _ < 5, k = 3).count() > 0)
     } finally Seq(t, s"${t}_vec", s"${t}_cfg")
       .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
+    // the BQ and SQ `dim` pins follow the same order: a rebuild at a
+    // new width whose width-checked scan fails leaves no pin behind,
+    // so the family still takes an append at its old width
+    type Write = (org.apache.spark.sql.DataFrame, String, Int) => Unit
+    Seq[(String, Write, Write)](
+      ("bq", BqIndex.write(_, _, _), BqIndex.append(_, _, _)),
+      ("sq", SqIndex.write(_, _, _), SqIndex.append(_, _, _))).foreach {
+      case (kind, write, append) =>
+        val tk = s"${t}_$kind"
+        Seq(tk, s"${tk}_cfg")
+          .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
+        try {
+          write(emb, tk, 64)
+          intercept[Exception] { write(emb, tk, 32) }
+          assert(!spark.catalog.tableExists(s"${tk}_cfg"),
+            s"$kind: failed rebuild left a cfg pin over data it never " +
+              "wrote")
+          append(emb, tk, 64)
+          assert(spark.table(s"${tk}_cfg").collect()(0)
+            .getAs[Int]("dim") === 64, kind)
+          assert(spark.table(tk).count() === emb.count(), kind)
+        } finally Seq(tk, s"${tk}_cfg")
+          .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
+    }
   }
 
   test("cfg with a missing key fails with the descriptive mismatch error") {
