@@ -225,8 +225,7 @@ final class IndexFamily private[operators] (
     val tmp = (t: String) => t + "_compact"
     val pairs = (swapSiblings ++ members).map(t => t -> tmp(t))
     TO.withBuildLock(s) {
-      TO.recoverGroupSwap(s, table)
-      (members ++ swapSiblings).foreach(TO.recoverSwap(s, _))
+      TO.healCrashedSwaps(s, members ++ swapSiblings)
       TO.guardFold(s, s"$verb of $table", members, guard)
       pairs.foreach { case (_, x) =>
         s.sql(s"DROP TABLE IF EXISTS $x"); TO.clearOrphanLocation(s, x)

@@ -270,8 +270,7 @@ object TextOps {
     // before compaction stages its own `_compact` tmp — otherwise the
     // marker's later replay could mistake that tmp for the stranded
     // refresh replacement
-    recoverGroupSwap(s, table)
-    recoverSwap(s, table)
+    healCrashedSwaps(s, Seq(table))
     // fold-aware snapshots (r17): this rewrite replaces every data
     // file of `table` — check the manifest snapshots pinning them
     // BEFORE staging anything
@@ -1947,50 +1946,99 @@ object TextOps {
         m -> rs.toSeq.collect { case (_, Some(p), l) => (p, l) }
       }
 
-  /** Phase-1 VALIDATION shared by every manifest-restore: each entry
-    * must still resolve (`locate` returns its live location) and each
-    * manifest file must still exist at its recorded length. Returns
-    * the violations; empty = pruning can converge. Read-only. */
+  /** The one manifest WRITER — family snapshots ([[snapshotIndex]])
+    * and a group's stream-state manifest (`StreamingOps.snapshot`):
+    * lists each (entry, location) pair and commits one
+    * `(member, path, len)` row per file to `mf`, plus a null-path row
+    * for an entry that exists but holds no files ("empty at snapshot",
+    * not "absent"). Returns the number of files recorded. */
+  private[graft] def writeManifest(s: org.apache.spark.sql.SparkSession,
+      mf: String, entries: Seq[(String, org.apache.hadoop.fs.Path)])
+      : Int = {
+    val rows = entries.flatMap { case (m, loc) =>
+      val files = listFilesUnder(s, loc)
+      if (files.isEmpty) Seq((m, null: String, 0L))
+      else files.map { case (p, l) => (m, p, l) }
+    }
+    val sp = s
+    import sp.implicits._
+    rows.toDF("member", "path", "len").coalesce(1).write.saveAsTable(mf)
+    rows.count(_._2 != null)
+  }
+
+  /** The one phase-1 VALIDATOR of every manifest verb — family and
+    * group restores, [[checkSnapshot]] and the group check — made
+    * fold-anchor-aware: a manifested file counts as present when the
+    * entry's live location (`locate`) OR the tag's fold anchor
+    * ([[anchorDir]]) serves it at the recorded length, and an entry
+    * dropped by an anchored fold is fine as long as its files all
+    * resolve (the restore recreates it from the anchor). An entry
+    * empty at snapshot must still exist. Returns the violations;
+    * empty = pruning can converge. Read-only. */
   private[graft] def manifestProblems(
-      s: org.apache.spark.sql.SparkSession,
+      s: org.apache.spark.sql.SparkSession, tag: String,
       manifest: Map[String, Seq[(String, Long)]],
       locate: String => Option[org.apache.hadoop.fs.Path])
       : Seq[String] =
     manifest.toSeq.sortBy(_._1).flatMap { case (m, files) =>
-      locate(m) match {
-        case None => Seq(s"$m: missing (dropped since snapshot)")
-        case Some(loc) =>
-          val live = listFilesUnder(s, loc).toMap
-          files.flatMap { case (p, l) =>
-            live.get(p) match {
-              case Some(ll) if ll == l => None
-              case Some(ll) =>
-                Some(s"$m/$p: length $ll != snapshot $l (rewritten)")
-              case None =>
-                Some(s"$m/$p: missing (compacted/vacuumed/rebuilt)")
-            }
-          }
-      }
+      if (files.isEmpty) {
+        if (locate(m).isDefined) Nil
+        else Seq(s"$m: missing (dropped since snapshot)")
+      } else resolveSnapshotFiles(s, m, tag, files, locate)
+        .left.toSeq.flatten
     }
 
-  /** Phase-2 PRUNE shared by every manifest-restore: delete live
-    * files not in the manifest, then let `refresh` invalidate any
-    * cache over the entry. Callers validate FIRST. */
+  /** Refuse a manifest restore whose phase-1 `problems` are nonempty,
+    * naming the first five and the copy-based `fallback`. */
+  private[graft] def requireConvergent(problems: Seq[String],
+      fallback: String): Unit =
+    require(problems.isEmpty,
+      "restoreSnapshot: history was rewritten since the snapshot — " +
+        s"${problems.take(5).mkString("; ")}" +
+        (if (problems.size > 5) s" (+${problems.size - 5} more)"
+        else "") +
+        s" — file pruning cannot converge; use the copy-based $fallback")
+
+  /** The one phase-2 PRUNER of every manifest restore, family and
+    * group: converge each entry to exactly its manifested file set —
+    * delete live files not in the manifest (post-snapshot appends),
+    * copy anchored files back under their manifested names, and
+    * recreate an entry a fold dropped (folds drop only PLAIN
+    * manifest-class tables — tombstone lists — so a parquet table
+    * with the anchor's schema is faithful); then refresh any table
+    * over the entry. Callers validate FIRST with [[manifestProblems]]. */
   private[graft] def pruneToManifest(
-      s: org.apache.spark.sql.SparkSession,
+      s: org.apache.spark.sql.SparkSession, tag: String,
       manifest: Map[String, Seq[(String, Long)]],
-      locate: String => Option[org.apache.hadoop.fs.Path],
-      refresh: String => Unit): Seq[String] =
+      locate: String => Option[org.apache.hadoop.fs.Path]): Seq[String] =
     manifest.toSeq.sortBy(_._1).map { case (m, files) =>
-      val keep = files.map(_._1).toSet
-      val loc = locate(m).get
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val extras = listFilesUnder(s, loc).map(_._1)
-        .filterNot(keep).sorted
-      extras.foreach(p =>
-        fs.delete(new org.apache.hadoop.fs.Path(loc, p), false))
-      refresh(m)
-      s"pruned $m: ${extras.size} post-snapshot files"
+      val aDir = anchorDir(s, m, tag)
+      locate(m) match {
+        case None =>
+          val schema = s.read.parquet(files.map(f =>
+            new org.apache.hadoop.fs.Path(aDir, f._1).toString): _*)
+            .schema
+          s.catalog.createTable(m, "parquet", schema,
+            Map.empty[String, String])
+          copyDataFiles(s, aDir, tableLocation(s, m), files.map(_._1))
+          s.catalog.refreshTable(m)
+          s"recreated $m from the fold anchor (${files.size} files)"
+        case Some(loc) =>
+          val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
+          val live = listFilesUnder(s, loc).toMap
+          val keep = files.map(_._1).toSet
+          val extras = live.keys.filterNot(keep).toSeq.sorted
+          extras.foreach(p =>
+            fs.delete(new org.apache.hadoop.fs.Path(loc, p), false))
+          val fromAnchor = files.filter { case (p, l) =>
+            !live.get(p).contains(l) }
+          copyDataFiles(s, aDir, loc, fromAnchor.map(_._1))
+          if (s.catalog.tableExists(m)) s.catalog.refreshTable(m)
+          s"pruned $m: ${extras.size} post-snapshot files" +
+            (if (fromAnchor.nonEmpty)
+              s"; restored ${fromAnchor.size} from the fold anchor"
+            else "")
+      }
     }
 
   /** The table-entry `locate` every family-level manifest verb uses. */
@@ -2252,16 +2300,17 @@ object TextOps {
       }
     }
 
-  /** Resolve each manifested file of member `m` under `tag` to the
-    * location currently serving it: the member's live directory
-    * first, the fold anchor second ((name, length) identity both
-    * ways). Left = the violations a restore/read would refuse on. */
+  /** Resolve each manifested file of entry `m` under `tag` to the
+    * location currently serving it: the entry's live location
+    * (`locate`) first, the fold anchor second ((name, length)
+    * identity both ways). Left = the violations a restore/read would
+    * refuse on. */
   private def resolveSnapshotFiles(
       s: org.apache.spark.sql.SparkSession, m: String, tag: String,
-      files: Seq[(String, Long)])
+      files: Seq[(String, Long)],
+      locate: String => Option[org.apache.hadoop.fs.Path])
       : Either[Seq[String], Seq[org.apache.hadoop.fs.Path]] = {
-    val liveLoc =
-      if (s.catalog.tableExists(m)) Some(tableLocation(s, m)) else None
+    val liveLoc = locate(m)
     val live: Map[String, Long] =
       liveLoc.map(l => listFilesUnder(s, l).toMap).getOrElse(Map.empty)
     val aDir = anchorDir(s, m, tag)
@@ -2279,23 +2328,6 @@ object TextOps {
     }
     if (bad.nonEmpty) Left(bad) else Right(good)
   }
-
-  /** Phase-1 validation for the FAMILY-level manifest verbs —
-    * [[manifestProblems]] made fold-anchor-aware: a manifested file
-    * counts as present when the live location OR the tag's anchor
-    * serves it at the recorded length, and a member TABLE dropped by
-    * an anchored fold is fine as long as its files all resolve (the
-    * restore recreates it from the anchor). */
-  private[graft] def familyManifestProblems(
-      s: org.apache.spark.sql.SparkSession, tag: String,
-      manifest: Map[String, Seq[(String, Long)]]): Seq[String] =
-    manifest.toSeq.sortBy(_._1).flatMap { case (m, files) =>
-      if (files.isEmpty) {
-        if (s.catalog.tableExists(m)) Nil
-        else Seq(s"$m: missing (dropped since snapshot)")
-      } else resolveSnapshotFiles(s, m, tag, files)
-        .left.toSeq.flatten
-    }
 
   /** MANIFEST SNAPSHOT — the O(metadata) sibling of [[backupIndex]]
     * for append-dominated windows. [[backupIndex]] is an O(index)
@@ -2341,20 +2373,13 @@ object TextOps {
     // new manifest records the current live files, and stale anchor
     // entries must not satisfy a later resolution by name collision
     dropAnchors(s, table, tag)
-    val rows = (table +: SnapshotManifestSiblings.map(table + _))
-      .filter(s.catalog.tableExists)
-      .flatMap { m =>
-        val files = listDataFiles(s, m)
-        if (files.isEmpty) Seq((m, null: String, 0L))
-        else files.map { case (p, l) => (m, p, l) }
-      }
     val copies = SnapshotCopySiblings.map(table + _)
       .flatMap(backupTable(s, _, s"mf$tag"))
-    val sp = s
-    import sp.implicits._
-    rows.toDF("member", "path", "len").coalesce(1).write.saveAsTable(mf)
-    Seq(s"manifest $mf: ${rows.count(_._2 != null)} files across " +
-      s"${rows.map(_._1).distinct.size} members") ++ copies
+    val entries = (table +: SnapshotManifestSiblings.map(table + _))
+      .flatMap(m => locateTable(s)(m).map(m -> _))
+    val n = writeManifest(s, mf, entries)
+    Seq(s"manifest $mf: $n files across ${entries.size} members") ++
+      copies
   }
 
   /** Converge a family to its `<tag>` MANIFEST snapshot — or refuse
@@ -2387,49 +2412,12 @@ object TextOps {
       // phase 1 — validate everything BEFORE mutating anything (a
       // manifested file may live at the member's location OR in the
       // tag's fold anchor — an anchored fold keeps the tag serving)
-      val problems = familyManifestProblems(s, tag, manifest)
-      require(problems.isEmpty,
-        "restoreSnapshot: history was rewritten since the snapshot — " +
-          s"${problems.take(5).mkString("; ")}" +
-          (if (problems.size > 5) s" (+${problems.size - 5} more)"
-          else "") +
-          " — file pruning cannot converge; use the copy-based " +
-          "backupIndex/restoreIndex path")
+      requireConvergent(manifestProblems(s, tag, manifest,
+        locateTable(s)), "backupIndex/restoreIndex path")
       // phase 2 — converge each manifest member to exactly its file
-      // set: prune post-snapshot extras, copy anchored files back
-      // under their manifested names, recreate a member a fold
-      // dropped (folds only drop the PLAIN manifest-class members —
-      // tombstone lists — so a schema-from-anchor parquet table is
-      // faithful), refresh
-      val pruned = manifest.toSeq.sortBy(_._1).map { case (m, files) =>
-        val aDir = anchorDir(s, m, tag)
-        if (!s.catalog.tableExists(m)) {
-          val schema = s.read.parquet(files.map(f =>
-            new org.apache.hadoop.fs.Path(aDir, f._1).toString): _*)
-            .schema
-          s.catalog.createTable(m, "parquet", schema,
-            Map.empty[String, String])
-          copyDataFiles(s, aDir, tableLocation(s, m), files.map(_._1))
-          s.catalog.refreshTable(m)
-          s"recreated $m from the fold anchor (${files.size} files)"
-        } else {
-          val loc = tableLocation(s, m)
-          val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-          val live = listFilesUnder(s, loc).toMap
-          val keep = files.map(_._1).toSet
-          val extras = live.keys.filterNot(keep).toSeq.sorted
-          extras.foreach(p =>
-            fs.delete(new org.apache.hadoop.fs.Path(loc, p), false))
-          val fromAnchor = files.filter { case (p, l) =>
-            !live.get(p).contains(l) }
-          copyDataFiles(s, aDir, loc, fromAnchor.map(_._1))
-          s.catalog.refreshTable(m)
-          s"pruned $m: ${extras.size} post-snapshot files" +
-            (if (fromAnchor.nonEmpty)
-              s"; restored ${fromAnchor.size} from the fold anchor"
-            else "")
-        }
-      }
+      // set (prune, copy anchored files back, recreate a member a fold
+      // dropped), then drop members absent at snapshot
+      val pruned = pruneToManifest(s, tag, manifest, locateTable(s))
       val dropped = (table +: SnapshotManifestSiblings.map(table + _))
         .filterNot(manifest.contains)
         .filter(s.catalog.tableExists)
@@ -2749,11 +2737,12 @@ object TextOps {
   def checkSnapshot(s: org.apache.spark.sql.SparkSession,
       table: String, tag: String = "snap",
       deep: Boolean = false): Seq[String] = {
+    requireTag("checkSnapshot", tag)
     val mf = s"${table}_mf_$tag"
     if (!s.catalog.tableExists(mf))
       return Seq(s"no manifest $mf")
     val manifest = readManifest(s, mf)
-    val fileProblems = familyManifestProblems(s, tag, manifest)
+    val fileProblems = manifestProblems(s, tag, manifest, locateTable(s))
     val copyProblems = SnapshotCopySiblings.map(table + _)
       .filter(m => s.catalog.tableExists(m) &&
         !s.catalog.tableExists(s"${m}_bak_mf$tag"))
@@ -2826,6 +2815,7 @@ object TextOps {
   def readSnapshot(s: org.apache.spark.sql.SparkSession,
       table: String, tag: String = "snap", member: String = "")
       : org.apache.spark.sql.DataFrame = {
+    requireTag("readSnapshot", tag)
     val m = table + member
     if (SnapshotCopySiblings.contains(member)) {
       val b = s"${m}_bak_mf$tag"
@@ -2846,7 +2836,7 @@ object TextOps {
         s"readSnapshot: member $m was empty at snapshot and has " +
           "been dropped since — nothing to serve")
       s.table(m).limit(0)
-    } else resolveSnapshotFiles(s, m, tag, files) match {
+    } else resolveSnapshotFiles(s, m, tag, files, locateTable(s)) match {
       case Left(problems) => throw new IllegalArgumentException(
         "readSnapshot: history was rewritten since the snapshot — " +
           s"${problems.take(5).mkString("; ")} — these files are " +
@@ -2871,6 +2861,7 @@ object TextOps {
     * in only one tag report as added/dropped. Nil = identical. */
   def snapshotDiff(s: org.apache.spark.sql.SparkSession,
       table: String, tagA: String, tagB: String): Seq[String] = {
+    Seq(tagA, tagB).foreach(requireTag("snapshotDiff", _))
     def load(tag: String): Map[String, Seq[(String, Long)]] = {
       val mf = s"${table}_mf_$tag"
       require(s.catalog.tableExists(mf),
@@ -3884,8 +3875,7 @@ object TextOps {
       // recoverSwap alone would promote that member's NEW tmp while
       // keeping the partner's OLD copy, serving a mixed family (new
       // codewords scoring old codes) as complete
-      recoverGroupSwap(s, table)
-      (table +: suffixes.map(table + _)).foreach(recoverSwap(s, _))
+      healCrashedSwaps(s, table +: suffixes.map(table + _))
       val ok = s.catalog.tableExists(okTable) &&
         (table +: suffixes.map(table + _))
           .forall(s.catalog.tableExists) &&

@@ -930,6 +930,7 @@ object StreamingOps {
   def dropSnapshot(spark: SparkSession, g: IndexGroup,
       tag: String = "snap"): Unit =
     TextOps.withBuildLock(spark) {
+      TextOps.requireTag("dropSnapshot", tag)
       dropTableClean(spark, s"${g.base}_mf_$tag")
       g.families.foreach(TextOps.dropSnapshot(spark, _, tag))
     }
@@ -958,7 +959,10 @@ object StreamingOps {
     * PQ rerank → exact payload) must see one corpus state, not
     * whatever each family's last micro-batch left — and the per-batch
     * self-maintenance hooks fold under Anchor, so an epoch taken
-    * mid-stream keeps serving across them.
+    * mid-stream keeps serving across them. [[checkSnapshot]] and
+    * [[restoreSnapshot]] check the members through the same
+    * anchor-aware [[TextOps.manifestProblems]], so the tag also
+    * restores across those folds.
     */
   def withEpoch[T](spark: SparkSession, g: IndexGroup)
       (f: String => T): T = {
@@ -1366,36 +1370,6 @@ object StreamingOps {
   // ---- O(metadata) stream-level snapshots (r15): manifest twins --
   // ---- of backup/restore for append windows                     --
 
-  /** The stream-state manifest rows for a set of append-only tables
-    * (hash store, replay ledgers) and checkpoint DIRECTORIES: entry
-    * name → (relative path, length), null-path sentinel for a
-    * present-but-empty entry. Written to `<base>_mf_<tag>`. */
-  private def writeStreamManifest(spark: SparkSession, mf: String,
-      tables: Seq[String], streams: Seq[String]): Seq[String] = {
-    val tblRows = tables.filter(spark.catalog.tableExists).flatMap { m =>
-      val files = TextOps.listDataFiles(spark, m)
-      if (files.isEmpty) Seq((m, null: String, 0L))
-      else files.map { case (p, l) => (m, p, l) }
-    }
-    val ckRows = streams.flatMap { n =>
-      val dir = ckDir(spark, n)
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(dir)) Seq.empty
-      else {
-        val files = TextOps.listFilesUnder(spark, dir)
-        if (files.isEmpty) Seq((dir.getName, null: String, 0L))
-        else files.map { case (p, l) => (dir.getName, p, l) }
-      }
-    }
-    val rows = tblRows ++ ckRows
-    dropTableClean(spark, mf)
-    val sp = spark
-    import sp.implicits._
-    rows.toDF("member", "path", "len").coalesce(1).write.saveAsTable(mf)
-    Seq(s"manifest $mf: ${rows.count(_._2 != null)} stream-state " +
-      s"files across ${rows.map(_._1).distinct.size} entries")
-  }
-
   /** `locate` for stream-state manifest entries: a `<stream>_ck`
     * entry resolves to the checkpoint directory, anything else to
     * its table location. */
@@ -1418,9 +1392,10 @@ object StreamingOps {
     * the copy-based pair proves (StreamRestoreSpec): re-invoking the
     * streams after a restore replays exactly the post-snapshot files.
     * Checkpoint logs are write-once per batch, so they manifest like
-    * data files; a stream-log compaction (like a member compaction)
-    * makes the manifest unrestorable and the restore refuses to the
-    * copy-based pair. */
+    * data files; a stream-log compaction (like a member fold without
+    * an anchor) makes the manifest unrestorable and the restore
+    * refuses to the copy-based pair. Both manifests are written by
+    * [[TextOps.writeManifest]]. */
   def snapshot(spark: SparkSession, g: IndexGroup,
       tag: String = "snap"): Seq[String] =
     TextOps.withBuildLock(spark) {
@@ -1431,16 +1406,25 @@ object StreamingOps {
       // the restore, written last) — retire it before re-snapshotting
       // the member families, so a crashed re-take never leaves the
       // previous group manifest over fresh member snapshots (r16)
-      dropTableClean(spark, s"${g.base}_mf_$tag")
-      present.flatMap(TextOps.snapshotIndex(spark, _, tag)) ++
-        writeStreamManifest(spark, s"${g.base}_mf_$tag", g.stateTables,
-          g.streams)
+      val mf = s"${g.base}_mf_$tag"
+      dropTableClean(spark, mf)
+      val fams = present.flatMap(TextOps.snapshotIndex(spark, _, tag))
+      val loc = streamLocate(spark, g.streams)
+      val entries = (g.stateTables ++
+        g.streams.map(ckDir(spark, _).getName))
+        .flatMap(m => loc(m).map(m -> _))
+      val n = TextOps.writeManifest(spark, mf, entries)
+      fams :+ s"manifest $mf: $n stream-state files across " +
+        s"${entries.size} entries"
     }
 
   /** Converge a group to its `<tag>` manifest snapshot — all member
     * families and the stream state validate BEFORE anything mutates
-    * (no half-restored groups), then prune. Refuses to the copy-based
-    * pair when history was rewritten. */
+    * (no half-restored groups), then prune. Validation and pruning are
+    * the family verbs' own ([[TextOps.manifestProblems]],
+    * [[TextOps.pruneToManifest]]), so a member folded under
+    * `FoldGuard.Anchor` restores from the tag's anchor; only history
+    * rewritten without an anchor refuses to the copy-based pair. */
   def restoreSnapshot(spark: SparkSession, g: IndexGroup,
       tag: String = "snap"): Seq[String] =
     TextOps.withBuildLock(spark) {
@@ -1459,25 +1443,18 @@ object StreamingOps {
       // compaction refused)
       val loc = streamLocate(spark, g.streams)
       val sm = TextOps.readManifest(spark, mfT)
-      val problems = snapped.flatMap(f =>
-        TextOps.manifestProblems(spark,
+      TextOps.requireConvergent(snapped.flatMap(f =>
+        TextOps.manifestProblems(spark, tag,
           TextOps.readManifest(spark, s"${f}_mf_$tag"),
           TextOps.locateTable(spark))) ++
-        TextOps.manifestProblems(spark, sm, loc)
-      require(problems.isEmpty,
-        "restoreSnapshot: history was rewritten since the snapshot — " +
-          s"${problems.take(5).mkString("; ")}" +
-          (if (problems.size > 5) s" (+${problems.size - 5} more)"
-          else "") + " — file pruning cannot converge; use the " +
-          "copy-based stream backup/restore pair")
+        TextOps.manifestProblems(spark, tag, sm, loc),
+        "stream backup/restore pair")
       // phase 2 — member families (their own validation re-passes),
       // then the stream state: prune manifest entries, remove
       // entries born after the snapshot (ledger + checkpoint rewind
       // as a PAIR, the ledgeredIngest contract)
       val famOut = snapped.flatMap(TextOps.restoreSnapshot(spark, _, tag))
-      val pruned = TextOps.pruneToManifest(spark, sm,
-        loc, m => if (spark.catalog.tableExists(m))
-          spark.catalog.refreshTable(m))
+      val pruned = TextOps.pruneToManifest(spark, tag, sm, loc)
       val droppedT = g.stateTables.filterNot(sm.contains)
         .filter(spark.catalog.tableExists).map { m =>
           spark.sql(s"DROP TABLE $m")
@@ -1514,6 +1491,7 @@ object StreamingOps {
     * day. Nil = restores clean. */
   def checkSnapshot(spark: SparkSession, g: IndexGroup,
       tag: String = "snap"): Seq[String] = {
+    TextOps.requireTag("checkSnapshot", tag)
     val mfT = s"${g.base}_mf_$tag"
     if (!spark.catalog.tableExists(mfT))
       return Seq(s"no stream manifest $mfT")
@@ -1522,8 +1500,8 @@ object StreamingOps {
     (if (snapped.isEmpty) Seq(s"no member-family manifests under tag $tag")
       else Nil) ++
       snapped.flatMap(TextOps.checkSnapshot(spark, _, tag)) ++
-      TextOps.manifestProblems(spark, TextOps.readManifest(spark, mfT),
-        streamLocate(spark, g.streams))
+      TextOps.manifestProblems(spark, tag,
+        TextOps.readManifest(spark, mfT), streamLocate(spark, g.streams))
   }
 
   // ---- one-call observe/audit/heal (r15) --------------------------

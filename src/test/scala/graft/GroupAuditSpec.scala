@@ -118,6 +118,20 @@ class GroupAuditSpec extends AnyFunSuite with SparkSuite {
     refuses(StreamingOps.checkBackup(spark, IndexGroup.vectors(t), "a_b"))
     refuses(StreamingOps.snapshot(spark, IndexGroup.documents(t), "a_b"))
     refuses(StreamingOps.restoreSnapshot(spark, IndexGroup.documents(t), "a_b"))
+    refuses(TextOps.checkSnapshot(spark, t, "a_b"))
+    refuses(TextOps.readSnapshot(spark, t, "a_b"))
+    refuses(TextOps.snapshotDiff(spark, t, "a_b", "snap"))
+    refuses(TextOps.snapshotDiff(spark, t, "snap", "a_b"))
+    refuses(StreamingOps.checkSnapshot(spark, IndexGroup.documents(t), "a_b"))
+    // the group drop refuses BEFORE it drops anything: a table that
+    // happens to be named like the bad tag's stream manifest survives
+    val sp = spark
+    import sp.implicits._
+    try {
+      Seq(1).toDF("x").write.saveAsTable(s"${t}_mf_a_b")
+      refuses(StreamingOps.dropSnapshot(spark, IndexGroup.documents(t), "a_b"))
+      assert(spark.catalog.tableExists(s"${t}_mf_a_b"))
+    } finally drop(s"${t}_mf_a_b")
   }
 
   test("ANN: simultaneous band-row and planemod violations converge " +

@@ -222,6 +222,40 @@ class StreamSnapshotSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("an ANCHORED member compaction after the snapshot keeps the " +
+      "group restorable: check clean, restore converges from the " +
+      "fold anchor") {
+    val base = s"ss_anc_p$pid"
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_ssanc").toString
+    drop(docArtifacts(base): _*)
+    rmCk(base, s"${base}_ups", s"${base}_dels")
+    val g = streaming.IndexGroup.documents(base)
+    try {
+      docs.filter(col("doc_id") < 15)
+        .write.mode("append").parquet(s"$dir/documents.parquet")
+      streaming.StreamingOps.streamingDocumentIngest(spark, dir, base)
+      val snap = state(docTables(base))
+      streaming.StreamingOps.snapshot(spark, g)
+      docs.filter(col("doc_id") >= 15 && col("doc_id") < 25)
+        .write.mode("append").parquet(s"$dir/documents.parquet")
+      streaming.StreamingOps.streamingDocumentIngest(spark, dir, base)
+      // the fold the group's own per-batch maintenance runs: the
+      // pinned bm25 files are copied into the tag's anchor first
+      TextOps.compactIndex(spark, s"${base}_bm25", TextOps.FoldGuard.Anchor)
+      assert(streaming.StreamingOps.checkSnapshot(spark, g) === Nil)
+      val did = streaming.StreamingOps.restoreSnapshot(spark, g)
+      assert(did.exists(_.contains("fold anchor")), did.toString)
+      assert(state(Seq(s"${base}_bm25")) ===
+        snap.filter(_._1 == s"${base}_bm25"),
+        "the anchored restore did not return the snapshot postings")
+    } finally {
+      streaming.StreamingOps.dropSnapshot(spark, g)
+      drop(docArtifacts(base): _*)
+      rmCk(base, s"${base}_ups", s"${base}_dels")
+    }
+  }
+
   test("vectors: manifest snapshot across all five stream-fed " +
       "families; restore + replay converges to the never-crashed " +
       "state") {
