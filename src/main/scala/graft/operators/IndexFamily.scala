@@ -18,9 +18,7 @@ import org.apache.spark.sql.functions.{col, lit}
   * and its scorers plus the data below, so neither the verbs, the
   * reads nor the writes can drift apart per family (REPOSE's
   * one-probe-contract idea, applied to the lifecycle and to both
-  * sides of it). BM25's batch write and append keep their own bodies:
-  * the batch postings are a different format, and an append also
-  * writes the stats write-ahead log.
+  * sides of it).
   *
   * Built only by the per-kind constructors — [[AnnIndex.family]],
   * [[IvfIndex.family]], [[PqIndex.family]], [[BqIndex.family]],
@@ -39,13 +37,9 @@ import org.apache.spark.sql.functions.{col, lit}
   *   - `sidecar`: the (noun, table) sibling without which the stored
   *     rows cannot be audited at all — the `_cfg` pin, the IVF
   *     quantizer, the PQ codebook; its loss is reported alone;
-  *   - `statsTable`: the BM25 corpus-stats sibling — describe reports
-  *     it, deletes go through its write-ahead log
-  *     ([[TextOps.deleteBm25Docs]]) so the stats shrink with the
-  *     postings, an as-of read refuses a snapshot that pinned a
-  *     pending delete stage, and a stream's member-loss reset owes it
-  *     a recount ([[graft.streaming.StreamingOps]]);
-  *   - `cfgOf`: the build config describe reports;
+  *   - `cfgOf`, `statsOf`: the build config and the corpus stats
+  *     (BM25's n_docs, sum_dl, derived from its live rows) describe
+  *     reports;
   *   - `invariant`: the kind's structural audit over the live rows
   *     (handed a member → live-rows function);
   *   - `heals`: repair heals beyond the two every family shares
@@ -60,8 +54,8 @@ final class IndexFamily private[operators] (
     callerIdCol: String,
     swapSiblings: Seq[String] = Nil,
     sidecar: Option[(String, String)] = None,
-    val statsTable: Option[String] = None,
     cfgOf: SparkSession => Map[String, Int] = _ => Map.empty,
+    statsOf: SparkSession => Map[String, Long] = _ => Map.empty,
     invariant: (SparkSession, String => DataFrame) => Seq[String] =
       (_, _) => Nil,
     heals: Seq[IndexFamily.Heal] = Nil,
@@ -87,16 +81,13 @@ final class IndexFamily private[operators] (
     *     [[TextOps.readSnapshot]]'s file-pinned files minus the tag's
     *     own `_del` list when its manifest holds one
     *     ([[TextOps.exceptTombstonesFrame]]);
-    *   - `sidecar(suffix)` (`_cent`, `_cb`, `_stats`): the live table,
+    *   - `sidecar(suffix)` (`_cent`, `_cb`): the live table,
     *     or the tag's O(1) meta copy;
     *   - `config`: the `_cfg` pin — [[TextOps.readIndexConfig]] live,
     *     the tag's meta copy as of it; None when the family (or the
     *     tag) has none.
     * An unknown tag refuses here, naming the missing
-    * `<table>_mf_<tag>`. A stats family (BM25) also refuses a tag
-    * whose manifest pinned a pending delete stage: the serving path
-    * folds the stage before scoring, so no served state ever matched
-    * the raw staged mix. As-of frames are plain parquet scans (no
+    * `<table>_mf_<tag>`. As-of frames are plain parquet scans (no
     * bucket metadata) — the audit path, not the serving path. */
   private[graft] def frames(s: SparkSession,
       asOf: Option[String] = None): IndexFamily.Frames = asOf match {
@@ -108,15 +99,10 @@ final class IndexFamily private[operators] (
       val mf = s"${table}_mf_$tag"
       require(s.catalog.tableExists(mf),
         s"no manifest $mf: $table has no snapshot under tag $tag")
-      val manifest = TO.readManifest(s, mf)
-      require(statsTable.isEmpty ||
-          manifest.getOrElse(table + "_del_stage", Nil).isEmpty,
-        s"snapshot $tag of $table carries a pending delete stage — " +
-          "the serving path folds it before scoring; restore the " +
-          "snapshot and probe the restored family instead")
       def snap(sfx: String) = TO.readSnapshot(s, table, tag, sfx)
       val del =
-        if (manifest.contains(delTable)) Some(snap("_del")) else None
+        if (TO.readManifest(s, mf).contains(delTable)) Some(snap("_del"))
+        else None
       new IndexFamily.Frames(
         m => TO.exceptTombstonesFrame(snap(m.stripPrefix(table)), del,
           idCol),
@@ -195,8 +181,7 @@ final class IndexFamily private[operators] (
     * nothing rewritten. Barrier FIRST: if the append fails, its ids
     * stay dead until a retry, which takes a fresh barrier; appending
     * first could leave two copies of one generation, which fsck
-    * cannot tell apart. [[TextOps.upsertBm25Docs]] keeps its own path
-    * (it also writes the stats write-ahead log). */
+    * cannot tell apart. */
   private[operators] def upsert(s: SparkSession, batch: DataFrame)(
       append: Long => Unit): Unit = TO.withBuildLock(s) {
     val g = TO.nextGen(s, delTable)
@@ -247,13 +232,9 @@ final class IndexFamily private[operators] (
     * every probe subtracts the family's one tombstone list from every
     * member. O(|ids|), no index rewrite; [[vacuum]] folds the list
     * into the stored files. Deletion is terminal per id (ids are never
-    * recycled — the ingest contract). A stats family deletes through
-    * the stats write-ahead log (exact n_docs/sum_dl subtraction). */
-  def delete(s: SparkSession, ids: DataFrame): Unit = statsTable match {
-    case Some(st) => TO.deleteBm25Docs(s, table, st, ids)
-    case None => TO.tombstone(s, delTable,
-      ids.select(col(callerIdCol).as(idCol)), idCol)
-  }
+    * recycled — the ingest contract). */
+  def delete(s: SparkSession, ids: DataFrame): Unit =
+    TO.tombstone(s, delTable, ids.select(col(callerIdCol).as(idCol)), idCol)
 
   /** Fold the tombstones into the stored files (every member rewritten
     * without the dead rows, spec-preserving atomic swap) and clear the
@@ -284,10 +265,10 @@ final class IndexFamily private[operators] (
 
   /** Operational snapshot (r14 — see [[TextOps.describeIndex]]): member
     * file health, tombstone debt, holds, the family's config (the `_cfg`
-    * pins, or the quantizer's shape) and the stats row when it keeps
-    * one. Metadata-cheap; never gauges drift. */
+    * pins, or the quantizer's shape) and the corpus stats when it
+    * derives them. Never gauges drift. */
   def describe(s: SparkSession): IndexStatus =
-    TO.describeIndex(s, members, delTable, cfgOf(s), statsTable)
+    TO.describeIndex(s, members, delTable, cfgOf(s), statsOf(s))
 
   /** STRUCTURAL AUDIT (fsck, r14): recompute the family's invariants
     * against production state; empty = healthy. O(index) by design;
@@ -321,9 +302,8 @@ final class IndexFamily private[operators] (
     *     must never be "healed" by guesswork, and a partial repair
     *     that fixed the easy half would mask it);
     *   3. run each heal whose class appeared, in order (order is part
-    *     of the contract — e.g. BM25 re-barriers before recomputing
-    *     stats, because the re-barrier itself changes what the stats
-    *     must say);
+    *     of the contract — the shared re-barrier runs before a kind's
+    *     own heals, which then see the re-barriered rows);
     *   4. re-audit and THROW if violations remain — repair either
     *     converges in one call or says so, never reports success over
     *     a still-broken family.
@@ -338,7 +318,7 @@ final class IndexFamily private[operators] (
         TO.rebarrierMultiGen(_, members, delTable, idCol)) +: heals
     // iterate to convergence (r16): a heal can REVEAL violations the
     // broken state masked — fsck returns crashed-swap evidence ALONE,
-    // so only the post-recovery round can see, say, the stats drift
+    // so only the post-recovery round can see, say, the docs drift
     // the crash also caused. Each round still refuses on any unknown
     // class BEFORE touching anything further; the bound keeps a
     // non-converging heal from looping.

@@ -636,7 +636,7 @@ object Quality {
           // state that a fresh ingest would mistake for replayable
           // history — hard-drop the family and its checkpoint first
           Seq("_band", "_band_del", "_band_hold", "_bm25", "_bm25_del",
-            "_bm25_del_stage", "_bm25_hold", "_bm25_stats", "_hashes",
+            "_bm25_docs", "_bm25_hold", "_hashes",
             "_ledger", "_quarantine", "_admission").foreach { sfx =>
             s.sql(s"DROP TABLE IF EXISTS $base$sfx")
             TextOps.clearOrphanLocation(s, base + sfx)

@@ -445,18 +445,6 @@ object TextOps {
     else df.join(s.table(holdTable).select(col(idCol)), Seq(idCol),
       "left_anti")
 
-  /** Fold an orphaned/reset delete stage's ids into the tombstone
-    * list AT THE STAGE'S OWN BARRIER (terminal for a delete stage,
-    * finite for an upsert's), preserving the op's exact semantics
-    * across a family reset. */
-  private def foldStageTombstones(s: org.apache.spark.sql.SparkSession,
-      table: String, stage: String): Unit = {
-    val df = s.table(stage)
-    val g = df.agg(coalesce(max("gen"), lit(TerminalGen)))
-      .collect()(0).getLong(0)
-    tombstone(s, table + "_del", df.select("doc_id"), "doc_id", gen = g)
-  }
-
   /** Subtract a tombstone list from an index scan — the probe-side
     * half of [[tombstone]]. When no list exists (the common case) the
     * frame passes through UNTOUCHED, so probe plans without deletes
@@ -610,7 +598,7 @@ object TextOps {
       * upsert call appends one coalesced file to the `_del` sibling,
       * so a delete-heavy cadence accumulates a file per call that the
       * bucketed-member gauge never saw. True once the family's small
-      * siblings (`_del`, `_del_stage`, `_cfg`, `_stats`) carry more
+      * siblings (`_del`, `_cfg`) carry more
       * than `maxFiles` between them — the [[compactTombstones]] /
       * [[vacuumIndex]] trigger. */
     def needsSiblingCompaction(maxFiles: Long = 16L): Boolean =
@@ -639,7 +627,7 @@ object TextOps {
   /** The family's small-table sibling suffixes the gauge watches —
     * the tables delete/upsert/config traffic lands in. */
   private[graft] val HealthSiblings: Seq[String] =
-    Seq("_del", "_del_stage", "_cfg", "_stats")
+    Seq("_del", "_cfg")
 
   def indexFileHealth(s: org.apache.spark.sql.SparkSession,
       table: String): IndexFileHealth = {
@@ -657,8 +645,8 @@ object TextOps {
     * health, the tombstone list's row and file debt split into
     * terminal deletes vs finite upsert barriers (plus the current top
     * barrier — 0 means no upsert ever ran), the family's config
-    * (`_cfg` pins or quantizer shape) and the stats row's numeric
-    * fields when the family keeps one. Quantizer drift is
+    * (`_cfg` pins or quantizer shape) and the corpus stats when the
+    * family derives them (BM25's n_docs, sum_dl). Quantizer drift is
     * [[IndexFamily.maintain]]'s to gauge, not describe's.
     */
   final case class IndexStatus(
@@ -710,11 +698,12 @@ object TextOps {
 
   /** Build an [[IndexStatus]] for a family: driver-side metadata plus
     * ONE O(|list|) aggregation over the small tombstone table. `cfg`
-    * is the family's config as [[IndexFamily]] reads it.
+    * and `stats` are the family's config and corpus stats as
+    * [[IndexFamily]] reads them.
     */
   private[graft] def describeIndex(s: org.apache.spark.sql.SparkSession,
       members: Seq[String], delTable: String, cfg: Map[String, Int],
-      statsTable: Option[String]): IndexStatus = {
+      stats: Map[String, Long]): IndexStatus = {
     val mh = members.filter(s.catalog.tableExists)
       .map(m => m -> indexFileHealth(s, m))
     val (rows, term, top) =
@@ -729,15 +718,6 @@ object TextOps {
           .collect()(0)
         (r.getLong(0), r.getLong(1), r.getLong(2))
       }
-    val st = statsTable.filter(s.catalog.tableExists).map { t =>
-      val row = s.table(t).collect()(0)
-      row.schema.fields.collect {
-        case f if f.dataType ==
-            org.apache.spark.sql.types.LongType &&
-            !row.isNullAt(row.fieldIndex(f.name)) =>
-          f.name -> row.getLong(row.fieldIndex(f.name))
-      }.toMap
-    }.getOrElse(Map.empty[String, Long])
     // the legal-hold sibling rides the same `<family>_` base as the
     // tombstone list (r15, VERDICT item 4)
     val holdT = delTable.stripSuffix("_del") + "_hold"
@@ -763,59 +743,63 @@ object TextOps {
       }
     }.distinct.sorted
     IndexStatus(mh, rows, tableFileCount(s, delTable), term, top, cfg,
-      st, holds, pinned, leaked)
+      stats, holds, pinned, leaked)
   }
 
-  /** The incremental BM25 family's lifecycle ([[IndexFamily]]):
-    * postings member plus the 1-row `statsTable` (n_docs, sum_dl) —
-    * describe reports it, and deletes go through its write-ahead log
-    * ([[deleteBm25Docs]]). The invariant (fsck) recomputes what the
-    * engine maintains incrementally:
-    *   - the stats must equal a recompute over the tombstone-filtered
-    *     postings — the exactly-once delete WAL and the reset
-    *     reconcile both promise this;
-    *   - a lingering `_del_stage` is reported (a crashed delete that
-    *     heals at the next entry — informational, not corruption).
-    * Repair applies a pending stage through the standard WAL replay
-    * (exactly-once by txn token), then recomputes the stats from the
-    * live postings — after the shared re-barrier, which kills
-    * superseded postings whose (count, dl) the stored stats still
-    * carry. */
-  def bm25Family(table: String, statsTable: String): IndexFamily =
+  /** The incremental BM25 family's lifecycle ([[IndexFamily]]): the
+    * token-bucketed postings and the doc-id-bucketed `<table>_docs`
+    * member (doc_id, dl, gen), both written by [[bm25Encoder]] from one
+    * tokenize pass. The corpus stats are not stored: [[bm25Stats]]
+    * derives (n_docs, sum_dl) from the live `_docs` rows at read time,
+    * as the probe derives df from the postings, so a delete or upsert
+    * is the plain tombstone every family uses. The invariant (fsck)
+    * is that the live `_docs` rows equal the live postings' distinct
+    * (doc_id, dl, gen) — a crash between the two member writes breaks
+    * it — and repair rewrites `_docs` from the stored postings. */
+  def bm25Family(table: String): IndexFamily = {
+    val docsT = table + "_docs"
+    val cols = Seq("doc_id", "dl", "gen").map(col)
     new IndexFamily(table,
-      members = Seq(table), idCol = "doc_id", callerIdCol = "doc_id",
-      statsTable = Some(statsTable),
-      invariant = (s, _) => {
-        val stats =
-          if (!s.catalog.tableExists(statsTable))
-            Seq(s"stats table $statsTable missing")
-          else {
-            val (n, dl) = liveBm25Stats(s, table)
-            val cur = s.table(statsTable).collect()(0)
-            if (cur.getLong(0) == n && cur.getLong(1) == dl) Nil
-            else Seq(s"stats drift: stored (n_docs=${cur.getLong(0)}, " +
-              s"sum_dl=${cur.getLong(1)}) != recomputed ($n, $dl)")
-          }
-        stats ++ (if (!s.catalog.tableExists(table + "_del_stage")) Nil
-          else Seq("pending delete stage (crashed delete; heals at " +
-            "the next maintenance entry)"))
+      members = Seq(table, docsT), idCol = "doc_id", callerIdCol = "doc_id",
+      statsOf = s =>
+        if (!s.catalog.tableExists(docsT)) Map.empty
+        else {
+          val r = bm25Stats(exceptTombstones(s.table(docsT), s,
+            table + "_del", "doc_id")).collect()(0)
+          Map("n_docs" -> r.getLong(0), "sum_dl" -> r.getLong(1))
+        },
+      invariant = (s, live) => {
+        val want = live(table).select(cols: _*).distinct()
+        val got =
+          if (s.catalog.tableExists(docsT))
+            live(docsT).select(cols: _*).distinct()
+          else want.limit(0)
+        val off = want.except(got).union(got.except(want)).count()
+        if (off == 0L) Nil
+        else Seq(s"stats drift: $off (doc_id, dl, gen) rows of $docsT " +
+          "differ from the live postings")
       },
-      heals = Seq(
-        IndexFamily.Heal(_.contains("pending delete stage"),
-          "applied crashed delete stage",
-          applyBm25DeleteStage(_, table, statsTable)),
-        // ONE stats recompute for every class that needs it (ADVICE
-        // r16 #4: a round carrying both a multi-gen id and stats drift
-        // used to run the O(index) recompute twice); it runs after the
-        // re-barrier, so it always sees the re-barriered postings
-        IndexFamily.Heal(v => v.contains("stats drift") ||
-            v.contains("stats table") || v.contains("live generations"),
-          "recomputed stats from live postings",
-          recomputeBm25Stats(_, table, statsTable))))
+      heals = Seq(IndexFamily.Heal(_.contains("stats drift"),
+        "recomputed stats: rewrote the docs member from the postings",
+        s => {
+          val n = s.sessionState.catalog.getTableMetadata(
+              org.apache.spark.sql.catalyst.TableIdentifier(table))
+            .bucketSpec.map(_.numBuckets).getOrElse(8)
+          s.sql(s"DROP TABLE IF EXISTS $docsT")
+          clearOrphanLocation(s, docsT)
+          s.table(table).select(cols: _*).distinct().write
+            .bucketBy(n, "doc_id").sortBy("doc_id").saveAsTable(docsT)
+        })))
+  }
 
-  /** [[bm25Family]] over the conventional `<table>_stats` sibling. */
-  def bm25Family(table: String): IndexFamily =
-    bm25Family(table, table + "_stats")
+  /** (n_docs, sum_dl) over a BM25 family's live `_docs` rows, as the
+    * 1-row frame [[bm25ScoreIncr]] takes: the distinct (doc_id, dl)
+    * pairs counted and summed. */
+  private def bm25Stats(docs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    docs.select("doc_id", "dl").distinct()
+      .agg(count(lit(1)).as("n_docs"),
+        coalesce(sum("dl"), lit(0L)).as("sum_dl"))
 
   /** A band index family's lifecycle ([[IndexFamily]]): (band_key,
     * old_id, old_toks) postings, addressed by `doc_id` — the public
@@ -921,28 +905,6 @@ object TextOps {
         }
       } finally { bad.unpersist(); () }
     }
-  }
-
-  /** Overwrite the 1-row stats table with a recompute over the live
-    * (tombstone-filtered) postings — the one true heal for stats
-    * drift, shared by [[reconcileBm25Tombstones]] and
-    * [[bm25Family]]'s repair. Caller holds the build lock. */
-  private def recomputeBm25Stats(s: org.apache.spark.sql.SparkSession,
-      table: String, statsTable: String): Unit = {
-    val sp = s
-    import sp.implicits._
-    Seq(liveBm25Stats(s, table)).toDF("n_docs", "sum_dl")
-      .write.mode("overwrite").saveAsTable(statsTable)
-  }
-
-  /** (n_docs, sum_dl) recomputed over the live (tombstone-filtered)
-    * postings — what the stored stats row must say. */
-  private def liveBm25Stats(s: org.apache.spark.sql.SparkSession,
-      table: String): (Long, Long) = {
-    val r = exceptTombstones(s.table(table), s, table + "_del", "doc_id")
-      .select("doc_id", "dl").distinct()
-      .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).collect()(0)
-    (r.getLong(0), r.getLong(1))
   }
 
   /** Rewrite a tombstone list to ONE file (entries deduped on
@@ -1071,7 +1033,7 @@ object TextOps {
     *     member-loss protocol) or reset the stream's ledger.
     */
   private[graft] val BackupSiblings: Seq[String] =
-    Seq("_vec", "_cent", "_cb", "_cfg", "_stats", "_del", "_del_stage")
+    Seq("_vec", "_docs", "_cent", "_cb", "_cfg", "_del")
 
   /** Bucketing-preserving table copy: definition via CREATE TABLE
     * LIKE (provider + bucket spec ride along), rows via a raw DATA
@@ -2048,20 +2010,19 @@ object TextOps {
     else None
 
   /** Member split for the MANIFEST snapshot: the payload-scale
-    * members (postings/codes/payload base, `_vec`, tombstone lists)
-    * only gain part-files between maintenance folds — manifest them.
-    * The metadata members (`_cfg`, the 1-row `_stats`, trained
-    * `_cent`/`_cb`) are OVERWRITTEN in place by ordinary appends and
-    * deletes (the stats fold is a 1-row rewrite), so a manifest over
-    * them would refuse after every batch — they get copy-based
+    * members (postings/codes/payload base, `_vec`, BM25's `_docs`,
+    * tombstone lists) only gain part-files between maintenance folds —
+    * manifest them. The metadata members (`_cfg`, trained
+    * `_cent`/`_cb`) are OVERWRITTEN in place, so a manifest over
+    * them would refuse after every rewrite — they get copy-based
     * snapshots instead, which is O(1) by construction (they are tiny
     * BECAUSE they are the rewritten-in-place members: a table cheap
     * enough to rewrite per batch is cheap enough to copy per
     * snapshot). */
   private[graft] val SnapshotManifestSiblings: Seq[String] =
-    Seq("_vec", "_del", "_del_stage")
+    Seq("_vec", "_docs", "_del")
   private[graft] val SnapshotCopySiblings: Seq[String] =
-    Seq("_cfg", "_stats", "_cent", "_cb")
+    Seq("_cfg", "_cent", "_cb")
 
   /** What a FOLD (compact / vacuum / retrain-rebuild) does about the
     * manifest snapshots its rewrite would orphan (r17, VERDICT #1).
@@ -2363,7 +2324,7 @@ object TextOps {
     // discipline): the manifest is this snapshot's commit marker
     // (written last), and on a RE-TAKE the meta-member copies below
     // are rewritten in place — a crash mid-copies must not leave the
-    // PREVIOUS manifest describing a file set whose stats/config
+    // PREVIOUS manifest describing a file set whose config/quantizer
     // copies are already the new ones; with the manifest retired,
     // every crash state refuses at restoreSnapshot's require
     val mf = s"${table}_mf_$tag"
@@ -2396,7 +2357,7 @@ object TextOps {
     *      live manifest-class members absent at snapshot, refresh
     *      relation caches;
     *   3. copy-restore the metadata members ([[SnapshotCopySiblings]]
-    *      — stats/config/trained artifacts) from their O(1) copies.
+    *      — config pins/trained artifacts) from their O(1) copies.
     * Idempotent — a second call finds nothing to prune; the manifest
     * and copies are kept. Holds are untouched (no manifest rows, not
     * a snapshot member). */
@@ -2729,9 +2690,9 @@ object TextOps {
     * failure is a backup nobody ever test-restored). Returns the
     * violations a restore would refuse on, PLUS a warning for any
     * live copy-class member the snapshot has no copy of (restore
-    * would drop it — correct by the absence contract, but a bm25
-    * family "restoring" to no stats table is worth knowing before
-    * recovery day). Nil = restores clean NOW; each maintenance fold
+    * would drop it — correct by the absence contract, but a family
+    * "restoring" to no config pin is worth knowing before recovery
+    * day). Nil = restores clean NOW; each maintenance fold
     * flips this — re-check after compact/vacuum/refresh, and take a
     * fresh copy-based anchor. */
   def checkSnapshot(s: org.apache.spark.sql.SparkSession,
@@ -3408,144 +3369,56 @@ object TextOps {
     *     a new batch appends to the bucketed table (bucketBy append
     *     keeps the layout) and nothing already stored is ever
     *     rewritten;
-    *   - the CORPUS-GLOBAL stats are not stored per posting. df is
-    *     derived AT PROBE TIME from the rows the probe fetched anyway
-    *     (every posting of a probed token lives in that token's
-    *     bucket, so count-per-token over the fetched rows IS the full
-    *     document frequency — zero extra scan), and (n_docs, sum_dl)
-    *     live in a 1-row stats table each ingest folds its batch into.
+    *   - the CORPUS-GLOBAL stats are not stored at all. df is derived
+    *     AT PROBE TIME from the rows the probe fetched anyway (every
+    *     posting of a probed token lives in that token's bucket, so
+    *     count-per-token over the fetched rows IS the full document
+    *     frequency — zero extra scan), and (n_docs, sum_dl) from the
+    *     `<table>_docs` member's live (doc_id, dl) rows
+    *     ([[bm25Stats]]), which each append writes beside the postings.
     * [[bm25ScoreIncr]] then reproduces the batch arithmetic op-for-op,
     * so scores over an incrementally-grown index hash-match q_bm25's
     * oracle — q_bm25_incr builds its index in two halves and is gated
-    * by the IDENTICAL oracle SQL. StreamingOps.streamingBm25Ingest is
-    * this function under foreachBatch.
+    * by the IDENTICAL oracle SQL. This is [[IndexFamily.append]] with
+    * [[bm25Encoder]]; StreamingOps.streamingBm25Ingest is this
+    * function under foreachBatch.
     */
   def appendBm25Postings(docs: org.apache.spark.sql.DataFrame,
-      table: String, statsTable: String, nBuckets: Int = 8,
-      gen: Long = 0L): Unit =
-    // build-lock scope (review r13): a maintenance swap (compact/
-    // vacuum) snapshots the file listing before its rewrite — an
-    // append landing files between that snapshot and the swap would
-    // be silently discarded with the old table. Reentrant for the
-    // memoized builds that append under the same lock; the r14
-    // cross-process file pairs with per-process-unique table names to
-    // make the serialization the FULL writer set, both axes.
-    { val s = docs.sparkSession
-    withBuildLock(s) {
-    // heal any crashed delete before touching stats: the append's
-    // stats rewrite would otherwise drop the txn token an in-flight
-    // delete needs for its exactly-once replay guard
-    applyBm25DeleteStage(s, table, statsTable)
-    clearOrphanLocation(s, table)
-    clearOrphanLocation(s, statsTable)
-    // legal holds gate the ingest door: held ids' rows never land and
-    // their (count, dl) never touch the stats (r15)
-    val tf = tokenTf(
-      exceptHeld(docs, s, table + "_hold", "doc_id")).persist()
-    try {
-      // an EMPTY batch still creates/keeps the tables (coalesced sums):
-      // an empty corpus must yield an empty probe result, exactly like
-      // writeBm25Index's unconditional save — not TABLE_NOT_FOUND
-      val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
-      tf.join(dl, "doc_id")
-        .select(col("token"), col("doc_id"), col("tf"), col("dl"),
-          lit(gen).as("gen"))
-        .write.mode("append")
-        .bucketBy(nBuckets, "token").sortBy("token")
-        .saveAsTable(table)
-      val batch = dl.agg(count(lit(1)).as("n_docs"),
-        coalesce(sum("dl"), lit(0L)).as("sum_dl"))
-      val merged =
-        if (s.catalog.tableExists(statsTable))
-          // (n_docs, sum_dl) by name: a delete-adjusted stats row also
-          // carries its txn token, which this rewrite retires (the
-          // entry heal already applied any in-flight delete)
-          s.table(statsTable).select("n_docs", "sum_dl")
-            .unionByName(batch)
-            .agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl"))
-        else batch
-      // materialize on the driver BEFORE the overwrite (1 row — this is
-      // metadata, not data): writing a table from a plan that reads the
-      // same table is not safe
-      val r = merged.collect()(0)
-      val sp = s
-      import sp.implicits._
-      Seq((r.getLong(0), r.getLong(1))).toDF("n_docs", "sum_dl")
-        .write.mode("overwrite").saveAsTable(statsTable)
-    } finally tf.unpersist()
-  } }
+      table: String, nBuckets: Int = 8, gen: Long = 0L): Unit =
+    bm25Family(table).append(docs, gen, nBuckets)(bm25Encoder(table))
 
-  /** DELETE documents from an incremental BM25 index ([[
-    * appendBm25Postings]] family): tombstone the doc ids and subtract
-    * exactly the victims' contribution from the 1-row stats table —
-    * n_docs by their count, sum_dl by their document lengths (read
-    * off their own stored postings: every posting row carries its
-    * doc's dl). df needs NO correction here because the incremental
-    * probe derives it per-token from the postings it actually fetches
-    * ([[bm25ScoreIncr]]'s count window), which [[liveBm25]] has
-    * already tombstone-filtered — so after a delete the probe is
+  /** BM25's encoder: the postings (token, doc_id, tf, dl) and the
+    * `_docs` rows (doc_id, dl), both from the one persisted
+    * [[tokenTf]] pass, postings first — a crash between the two writes
+    * leaves postings the stats do not count yet, which fsck names and
+    * repair heals. */
+  private def bm25Encoder(table: String): IndexFamily.Encoder =
+    IndexFamily.Encoder(tf => {
+      val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
+      Seq(IndexFamily.Member(table, "token", tf.join(dl, "doc_id")
+          .select(col("token"), col("doc_id"), col("tf"), col("dl"))),
+        IndexFamily.Member(table + "_docs", "doc_id", dl))
+    }, Some(tokenTf))
+
+  /** DELETE documents from an incremental BM25 index: the family's
+    * tombstone ([[IndexFamily.delete]]). The stats need no correction
+    * — they are derived from the tombstone-filtered `_docs` rows — and
+    * neither does df, which the probe counts over the tombstone-
+    * filtered postings it fetches, so after a delete the probe is
     * BIT-IDENTICAL to one against an index built only from the
-    * surviving documents (DeleteSpec). Victims are intersected with
-    * the live indexed docs first: deleting an unknown or
-    * already-deleted id adjusts nothing (idempotent). Folding the
-    * tombstones into the files is [[vacuumIndex]]'s job.
+    * surviving documents (DeleteSpec). Folding the tombstones into the
+    * files is [[vacuumIndex]]'s job.
     */
   def deleteBm25Docs(s: org.apache.spark.sql.SparkSession,
-      table: String, statsTable: String,
-      ids: org.apache.spark.sql.DataFrame): Unit =
-    withBuildLock(s) {
-      // heal any in-flight delete FIRST: its staged victims are about
-      // to be tombstoned, and this call's victim set must be computed
-      // against the fully-applied state
-      applyBm25DeleteStage(s, table, statsTable)
-      val stage = table + "_del_stage"
-      // tombstone-filter BEFORE projecting away `gen` (r14): the
-      // barrier comparison needs the rows' own generation — a
-      // projected gen-less frame would read as gen 0 and an upserted
-      // doc's CURRENT rows would be mistaken for dead ones
-      val victims = exceptTombstones(s.table(table), s,
-          table + "_del", "doc_id")
-        .select("doc_id", "dl").distinct()
-        .join(ids.select(col("doc_id")).distinct(), Seq("doc_id"))
-        .withColumn("gen", lit(TerminalGen))
-      // WRITE-AHEAD stage (review r13): the victims-with-dl snapshot
-      // commits BEFORE either downstream mutation. A crash anywhere
-      // after this point replays through applyBm25DeleteStage, whose
-      // content-addressed txn token makes the stats subtraction
-      // exactly-once — the old tombstone-then-stats order left a
-      // window where the tombstones committed, the replay saw zero
-      // live victims, and the stats kept counting deleted docs forever
-      s.sql(s"DROP TABLE IF EXISTS $stage")
-      clearOrphanLocation(s, stage)
-      victims.coalesce(1).write.saveAsTable(stage)
-      applyBm25DeleteStage(s, table, statsTable)
-    }
+      table: String, ids: org.apache.spark.sql.DataFrame): Unit =
+    bm25Family(table).delete(s, ids)
 
-  /** UPSERT documents into an incremental BM25 index — replace the
-    * stored content of each incoming id (and insert ids the index
-    * has never seen) in ONE build-lock scope, O(batch), no rewrite
-    * (r14, VERDICT item 1: the terminal-delete contract made content
-    * refresh impossible — a plain tombstone+append would kill the
-    * replacement rows along with the old, so upsert runs on the
-    * finite GENERATION BARRIERS [[tombstone]] grew for it):
-    *   1. staged delete of each incoming id's CURRENT live version
-    *      (the [[deleteBm25Docs]] WAL — stats subtraction stays
-    *      exactly-once across crashes) at a fresh finite barrier g;
-    *   2. a barrier entry for EVERY incoming id — the pure inserts
-    *      too: [[nextGen]] must see g, or a later upsert could reuse
-    *      the barrier and this batch's rows would survive it;
-    *   3. the standard append with rows stamped gen = g — old
-    *      generations die under the barrier, the gen-g rows ride
-    *      above it.
-    * A terminally deleted id stays deleted (its new rows remain
-    * below the terminal ceiling — ids are still never recycled), and
-    * its incoming content is DROPPED AT THE DOOR: appendBm25Postings
-    * folds every appended doc's (count, dl) into the 1-row stats
-    * unconditionally, so letting a dead id's rows through would
-    * inflate n_docs/sum_dl — rows no probe can see would still skew
-    * every score's IDF and length normalization against a
-    * survivor-only build. A replayed upsert of the same batch
-    * converges to the same served content at a higher barrier. `docs`
+  /** UPSERT documents into an incremental BM25 index —
+    * [[IndexFamily.upsert]] (a finite barrier for every incoming id,
+    * then [[appendBm25Postings]] at it): the old versions' postings and
+    * `_docs` rows die under the barrier, pure inserts just append, and
+    * a terminally deleted id stays deleted (its new rows remain below
+    * the terminal ceiling, in the stats as in the probe). `docs`
     * carries at most one version per doc_id (the CDC-compacted
     * contract every append path shares). Bit-parity with a
     * from-scratch build over the final corpus state — probes AND
@@ -3553,207 +3426,43 @@ object TextOps {
     * UpsertSpec.
     */
   def upsertBm25Docs(s: org.apache.spark.sql.SparkSession,
-      table: String, statsTable: String,
-      docs: org.apache.spark.sql.DataFrame): Unit =
-    withBuildLock(s) {
-      applyBm25DeleteStage(s, table, statsTable)
-      val delT = table + "_del"
-      val live =
-        if (s.catalog.tableExists(delT))
-          docs.join(s.table(delT)
-              .filter(col("gen") === lit(TerminalGen))
-              .select("doc_id"),
-            Seq("doc_id"), "left_anti")
-        else docs
-      val g = nextGen(s, delT)
-      if (s.catalog.tableExists(table)) {
-        val stage = table + "_del_stage"
-        val victims = exceptTombstones(s.table(table), s,
-            delT, "doc_id")
-          .select("doc_id", "dl").distinct()
-          .join(live.select(col("doc_id")).distinct(), Seq("doc_id"))
-          .withColumn("gen", lit(g))
-        s.sql(s"DROP TABLE IF EXISTS $stage")
-        clearOrphanLocation(s, stage)
-        victims.coalesce(1).write.saveAsTable(stage)
-        applyBm25DeleteStage(s, table, statsTable)
-      }
-      tombstone(s, delT, live.select(col("doc_id")),
-        "doc_id", gen = g)
-      appendBm25Postings(live, table, statsTable, gen = g)
-    }
-
-  /** Apply (or re-apply after a crash) a staged BM25 delete: subtract
-    * the staged victims' (count, Σdl) from the stats row UNLESS the
-    * row already carries this stage's content hash as its `txn`
-    * column (the exactly-once guard), then tombstone the staged ids
-    * (idempotent anti-join append) and drop the stage. Runs at every
-    * entry that reads or mutates the family — deleteBm25Docs,
-    * appendBm25Postings, liveBm25 — so no code path can observe a
-    * half-applied delete. Caller holds [[bm25BuildLock]].
-    */
-  private def applyBm25DeleteStage(
-      s: org.apache.spark.sql.SparkSession, table: String,
-      statsTable: String): Unit = {
-    val stage = table + "_del_stage"
-    if (!s.catalog.tableExists(stage)) return
-    // a stage without a stats table is an ORPHAN: the family was reset
-    // out from under a crashed delete (ledgeredIngest's member-loss
-    // reset drops postings+stats but knows nothing of the stage). Its
-    // stats subtraction is moot (the stats are gone), but the
-    // DELETION ITSELF must survive the reset (ADVICE r13 — dropping
-    // the stage outright lost it): tombstone the staged ids so the
-    // rebuilt index keeps excluding them, then retire the stage. The
-    // post-replay [[reconcileBm25Tombstones]] recomputes the rebuilt
-    // stats over the tombstone-filtered postings, which accounts for
-    // these ids along with every other surviving tombstone.
-    if (!s.catalog.tableExists(statsTable)) {
-      foldStageTombstones(s, table, stage)
-      s.sql(s"DROP TABLE $stage")
-      clearOrphanLocation(s, stage)
-      return
-    }
-    // the stage's barrier generation rides in its `gen` column — a
-    // terminal delete stages TerminalGen, an upsert stages its finite
-    // barrier). The barrier participates in the txn token so two
-    // stages over the same ids at different barriers can never be
-    // mistaken for replays of each other.
-    val stageDf = s.table(stage)
-    val agg = stageDf
-      .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("dl"),
-        md5(concat_ws(",",
-          sort_array(collect_list(col("doc_id"))),
-          max(col("gen")).cast("string"))).as("txn"),
-        coalesce(max(col("gen")), lit(TerminalGen)).as("gen"))
-      .collect()(0)
-    if (agg.getLong(0) > 0L) {
-      val txn = agg.getString(2)
-      val cur = s.table(statsTable).collect()(0)
-      val applied = cur.schema.fieldNames.contains("txn") &&
-        !cur.isNullAt(cur.fieldIndex("txn")) &&
-        cur.getAs[String]("txn") == txn
-      if (!applied) {
-        val sp = s
-        import sp.implicits._
-        Seq((cur.getLong(0) - agg.getLong(0),
-            cur.getLong(1) - agg.getLong(1), txn))
-          .toDF("n_docs", "sum_dl", "txn")
-          .write.mode("overwrite").saveAsTable(statsTable)
-      }
-      tombstone(s, table + "_del", stageDf.select("doc_id"),
-        "doc_id", gen = agg.getLong(3))
-    }
-    s.sql(s"DROP TABLE $stage")
-    clearOrphanLocation(s, stage)
-  }
-
-  /** RESET-SIDE half of the tombstone/replay contract (ADVICE r13):
-    * called by the ingest loop's member-loss reset AFTER it drops the
-    * family's data members. The tombstone list deliberately SURVIVES
-    * a reset (deletion is terminal per id — dropping `_del` would
-    * resurrect deleted docs), but the replay then re-ingests those
-    * docs' postings and re-counts them into the rebuilt stats; since
-    * their ids stay tombstoned, a later delete intersects to zero
-    * victims and the overcount would be permanent. This marks the
-    * family for the post-replay [[reconcileBm25Tombstones]] via a
-    * `<table>_del_reconcile` marker table, and folds any orphaned
-    * `_del_stage` (a delete that crashed before the reset) into the
-    * tombstones first so that deletion survives too.
-    */
-  private[graft] def markBm25ResetReconcile(
-      s: org.apache.spark.sql.SparkSession, table: String): Unit =
-    withBuildLock(s) {
-      val stage = table + "_del_stage"
-      if (s.catalog.tableExists(stage)) {
-        foldStageTombstones(s, table, stage)
-        s.sql(s"DROP TABLE $stage")
-        clearOrphanLocation(s, stage)
-      }
-      val del = table + "_del"
-      if (s.catalog.tableExists(del) && !s.table(del).isEmpty) {
-        val marker = table + "_del_reconcile"
-        clearOrphanLocation(s, marker)
-        val sp = s
-        import sp.implicits._
-        Seq(1).toDF("ok").coalesce(1)
-          .write.mode("overwrite").saveAsTable(marker)
-      }
-    }
-
-  /** REPLAY-SIDE half: once the reset's replay has re-ingested the
-    * source, rebuild the 1-row stats from the TOMBSTONE-FILTERED
-    * postings — n_docs / sum_dl over the surviving docs — and retire
-    * the marker. Recomputing from state (rather than subtracting a
-    * delta) makes the op absolutely idempotent: a crash anywhere
-    * re-runs it to the same result, and interleaved appends can never
-    * double-subtract. Cost is one pass over the rebuilt postings —
-    * proportionally free against the O(index) replay that preceded
-    * it. Runs at every ledgered-ingest completion (cheap no-op
-    * without the marker); a crash BETWEEN replay and reconcile leaves
-    * stats overcounted until the ingest is re-invoked (the documented
-    * crashed-ingest recovery), while probe ROW results stay correct
-    * throughout — the tombstone anti-join never lapses.
-    */
-  private[graft] def reconcileBm25Tombstones(
-      s: org.apache.spark.sql.SparkSession, table: String,
-      statsTable: String): Unit = withBuildLock(s) {
-    val marker = table + "_del_reconcile"
-    if (!s.catalog.tableExists(marker)) return
-    // the replay (and any per-batch maintenance hook) ran in CLONED
-    // sessions — this session's relation caches for the family may
-    // hold pre-swap file listings; refresh before reading (r14: the
-    // maintenance hook's tombstone compaction mid-ingest surfaced it)
-    Seq(table, table + "_del", statsTable)
-      .foreach(t => if (s.catalog.tableExists(t)) s.catalog.refreshTable(t))
-    // heal any crashed delete first so the recompute sees final state
-    applyBm25DeleteStage(s, table, statsTable)
-    if (s.catalog.tableExists(table) && s.catalog.tableExists(statsTable)) {
-      recomputeBm25Stats(s, table, statsTable)
-      s.sql(s"DROP TABLE $marker")
-      clearOrphanLocation(s, marker)
-    }
-    // table/stats still missing (a replay that delivered nothing):
-    // keep the marker — a later successful ingest reconciles
-  }
+      table: String, docs: org.apache.spark.sql.DataFrame): Unit =
+    bm25Family(table).upsert(s, docs)(g =>
+      appendBm25Postings(docs, table, gen = g))
 
   /** The tombstone-filtered serving view of an incremental BM25 index:
-    * (live postings, stats) ready for [[bm25ScoreIncr]]. With no
+    * (live postings, stats) ready for [[bm25ScoreIncr]], the stats
+    * derived from the live `_docs` rows ([[bm25Stats]]). With no
     * deletes the postings frame is the raw table scan — plans
-    * unchanged.
+    * unchanged. `statsTable` is unused: the stats are no longer
+    * stored; the parameter stays because callers outside this source
+    * tree pass it.
     */
   def liveBm25(s: org.apache.spark.sql.SparkSession, table: String,
       statsTable: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    // heal-before-trust (the memoIndex discipline): a probe must never
-    // see a half-applied delete's stats/tombstone mix
-    if (s.catalog.tableExists(table + "_del_stage"))
-      withBuildLock(s) {
-        applyBm25DeleteStage(s, table, statsTable)
-      }
-    (bm25Family(table, statsTable).frames(s).member(table),
-      s.table(statsTable))
+    val f = bm25Family(table).frames(s)
+    (f.member(table), bm25Stats(f.member(table + "_docs")))
   }
 
   /** Score (q_id, token) query terms against a BM25 family AS OF a
     * `<tag>` manifest snapshot WITHOUT restoring anything — the
-    * audit-path probe (r17, VERDICT item 5): postings and the stats
-    * row are the family's as-of [[IndexFamily.frames]] (file-pinned
-    * and fold-anchor-aware, the stats from the O(1) meta copy), and
+    * audit-path probe (r17, VERDICT item 5): postings and the `_docs`
+    * rows the stats derive from are the family's as-of
+    * [[IndexFamily.frames]] (file-pinned and fold-anchor-aware), and
     * the arithmetic is the ONE shared scorer ([[bm25ScoreIncr]]) — so
     * the as-of score equals what a restored copy of the tag would
     * serve (AsOfProbeSpec gates value-parity). The plan is plain
     * parquet scans with a one-off Exchange — this is the AUDIT path
     * ("what did this query score last Tuesday"), not the serving
-    * path; restore for serving. Refuses an unknown tag, and a
-    * snapshot carrying a PENDING delete stage: the serving path folds
-    * the stage before scoring, so no served state ever matches the
-    * raw staged mix. */
+    * path; restore for serving. Refuses an unknown tag. */
   def scoreBm25AsOf(s: org.apache.spark.sql.SparkSession,
       table: String, tag: String,
       queryTerms: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val f = bm25Family(table).frames(s, Some(tag))
-    bm25ScoreIncr(queryTerms, f.member(table), f.sidecar("_stats"))
+    bm25ScoreIncr(queryTerms, f.member(table),
+      bm25Stats(f.member(table + "_docs")))
   }
 
   /** Score query terms against an INCREMENTAL index ([[
@@ -3898,21 +3607,19 @@ object TextOps {
     * each half appended as its own ingest batch — so every q_bm25_incr
     * verification exercises true append-maintenance, while reps within
     * a session pay only the probe. The memoIndex `_ok` marker commits
-    * the build: a crash mid-build (half the corpus appended, stats
-    * covering less) can never be served as complete — the next call
-    * drops the partial tables and rebuilds. Returns (postings, stats).
+    * the build: a crash mid-build (half the corpus appended) can
+    * never be served as complete — the next call drops the partial
+    * tables and rebuilds. Returns (postings, stats).
     */
   private[graft] def bm25IndexIncr(s: org.apache.spark.sql.SparkSession,
       sfDir: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val table = memoIndex(s, "graft_bm25_incr", sfDir, Seq("_stats")) { t =>
+    val table = memoIndex(s, "graft_bm25_incr", sfDir, Seq("_docs")) { t =>
       val docs = Tables(s, sfDir, "documents")
-      appendBm25Postings(
-        docs.filter(pmod(col("doc_id"), lit(2)) === 0), t, t + "_stats")
-      appendBm25Postings(
-        docs.filter(pmod(col("doc_id"), lit(2)) === 1), t, t + "_stats")
+      appendBm25Postings(docs.filter(pmod(col("doc_id"), lit(2)) === 0), t)
+      appendBm25Postings(docs.filter(pmod(col("doc_id"), lit(2)) === 1), t)
     }
-    liveBm25(s, table, table + "_stats")
+    liveBm25(s, table, "")
   }
 
   /** Build lock for [[bm25Index]] — serializes concurrent first-use
@@ -3927,7 +3634,7 @@ object TextOps {
     * DELIBERATELY one coarse monitor (review r13 weighed a per-table
     * keyed map): every maintenance op — builds, appends, swaps,
     * deletes, vacuums — nests through this lock with reentrancy
-    * assumptions (memoIndex→append, deleteBm25Docs→tombstone,
+    * assumptions (memoIndex→append, upsert→tombstone,
     * refresh→swapIndexTableGroup), so a keyed map would need a
     * proven lock ORDER across those chains to stay deadlock-free.
     * The cost is in-JVM convoying of concurrent maintenance on
@@ -4301,7 +4008,7 @@ object TextOps {
     ("^graft_(?:bm25_(?:idx|incr)|ann_idx|ivf_idx|pq_idx|band_incr" +
       "|sdd_idx|bq_idx|sq_idx|remq)" +
       "_[0-9a-f]{10}_p([0-9]+)" +
-      "(?:_stats|_ok|_ledger|_vec|_cent|_cb|_ck|_compact|_old|_cfg|_swap|_del|_stage|_reconcile" +
+      "(?:_docs|_ok|_ledger|_vec|_cent|_cb|_ck|_compact|_old|_cfg|_swap|_del" +
       "|_f|_band|_bm25|_hashes|_quarantine|_admission|_hold)*$").r
 
   private var sweptDeadIndexes = false
@@ -4640,7 +4347,7 @@ object TextOps {
     * (band_key, old_id, old_toks) is DOC-LOCAL (signatures depend only
     * on the document's own text, never on corpus statistics), so a new
     * ingest batch simply appends its exploded band rows to the bucketed
-    * table — nothing already stored is ever rewritten, no stats table
+    * table — nothing already stored is ever rewritten, no corpus stats
     * needed, per-batch cost O(batch). An index grown by appends is
     * row-identical to a from-scratch [[writeBandIndex]] build over the
     * union (gated in BandIndexSpec), so document ingest and near-dedup
@@ -4678,8 +4385,8 @@ object TextOps {
     })
 
   /** UPSERT documents into a stored band index —
-    * [[IndexFamily.upsert]] for the near-dup family (no stats twin, so
-    * the whole op is barrier + append): the incoming ids' old
+    * [[IndexFamily.upsert]] for the near-dup family (barrier +
+    * append): the incoming ids' old
     * signatures stop colliding, the batch's new signatures start, pure
     * inserts just append. O(batch).
     */
@@ -4729,9 +4436,7 @@ object TextOps {
     * neither collide nor mask). The band rows are the family's as-of
     * [[IndexFamily.frames]]; the probe pipeline is the ONE live
     * definition, so parity with a restored copy holds by construction
-    * (AsOfProbeSpec gates it). No `_del_stage` guard: band deletes
-    * tombstone directly (no stats WAL). Audit path, not the serving
-    * path.
+    * (AsOfProbeSpec gates it). Audit path, not the serving path.
     */
   def nearDupsAsOf(s: org.apache.spark.sql.SparkSession,
       table: String, tag: String,
@@ -5064,14 +4769,17 @@ object TextOps {
     * checkpointed frame — `Dataset.localCheckpoint` offers no release
     * hook (`Dataset.unpersist` goes through the CacheManager, which
     * does not track checkpoint RDDs, so it is a silent NO-OP here),
-    * so reach through the LogicalRDD it plans to. The frame must
-    * not be referenced afterwards (its only data source is gone).
+    * so reach through the LogicalRDD it plans to and free its blocks
+    * by id (`RDD.unpersist` would log a lineage-truncation warning for
+    * every such intended release). The frame must not be referenced
+    * afterwards (its only data source is gone).
     */
   private[graft] def unpersistCheckpoint(
       df: org.apache.spark.sql.DataFrame): Unit =
     df.queryExecution.analyzed.collectFirst {
       case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false)
+        org.apache.spark.sql.graftbridge.GraftDatasetBridge
+          .unpersistRDD(r.rdd)
     }
 
   val defs: Seq[QDef] = Seq(
@@ -5729,8 +5437,8 @@ object TextOps {
     // same queries, same scoring arithmetic, same top-10 window, but
     // the index is built by APPEND-ONLY maintenance (two ingest batches
     // split by doc_id parity; see appendBm25Postings) with df derived
-    // at probe time and (n_docs, sum_dl) folded into a 1-row stats
-    // table. Gated by the IDENTICAL oracle SQL as q_bm25: the hash gate
+    // at probe time and (n_docs, sum_dl) from the `_docs` member.
+    // Gated by the IDENTICAL oracle SQL as q_bm25: the hash gate
     // proves append-maintenance loses nothing against a from-scratch
     // build, bit-for-bit.
     QDef("q_bm25_incr",

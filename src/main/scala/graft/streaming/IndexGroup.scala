@@ -79,18 +79,18 @@ final class IndexGroup private (
 object IndexGroup {
 
   /** The unified DOCUMENT group at `base`: near-dup band index + BM25
-    * postings (stats sibling), the `_hashes` exact-dedup store, the
-    * `_ups` / `_dels` CDC streams, markers `<base>_dbakok_<tag>`. */
+    * postings (with their `_docs` member), the `_hashes` exact-dedup
+    * store, the `_ups` / `_dels` CDC streams, markers
+    * `<base>_dbakok_<tag>`. */
   def documents(base: String): IndexGroup = {
     val band = s"${base}_band"
     val bm25 = s"${base}_bm25"
-    val stats = s"${bm25}_stats"
     new IndexGroup("documents", base,
       Seq(
         GroupMember(TextOps.bandFamily(band), Seq(band),
           b => TextOps.upsertBandDocs(b.sparkSession, band, b)),
-        GroupMember(TextOps.bm25Family(bm25, stats), Seq(bm25, stats),
-          b => TextOps.upsertBm25Docs(b.sparkSession, bm25, stats, b))),
+        GroupMember(TextOps.bm25Family(bm25), Seq(bm25, s"${bm25}_docs"),
+          b => TextOps.upsertBm25Docs(b.sparkSession, bm25, b))),
       hashStore = Some(s"${base}_hashes"),
       upsertStream = s"${base}_ups", deleteStream = s"${base}_dels",
       idCol = "doc_id", markerPrefix = s"${base}_dbakok_",

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Tables
-import graft.operators.{IndexFamily, TextOps}
+import graft.operators.TextOps
 import graft.operators.TextOps.{FoldGuard, MaintenancePolicy, Retention}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -636,7 +636,7 @@ object StreamingOps {
     *      never index twice;
     *   3. appends the surviving docs' band rows to `<base>_band`
     *      (near-dup index) and their postings to `<base>_bm25` +
-    *      `<base>_bm25_stats` — the same appendBandIndex /
+    *      `<base>_bm25_docs` — the same appendBandIndex /
     *      appendBm25Postings definitions batch maintenance uses, so
     *      unified and independent maintenance cannot drift (parity
     *      gated in UnifiedIngestSpec);
@@ -666,8 +666,7 @@ object StreamingOps {
       s"$sfDir/documents.parquet", "streamingDocumentIngest", cdc = false,
       maintain, admission, maxQuarantineRate) { novel =>
       graft.operators.TextOps.appendBandIndex(novel, s"${base}_band")
-      graft.operators.TextOps.appendBm25Postings(novel, s"${base}_bm25",
-        s"${base}_bm25_stats")
+      graft.operators.TextOps.appendBm25Postings(novel, s"${base}_bm25")
     }
 
   /** ONE-CALL DOCUMENT DELETE: [[delete]] on the document group at
@@ -680,9 +679,8 @@ object StreamingOps {
   // ---- (IndexGroup.documents / IndexGroup.vectors)             ----
 
   /** ONE-CALL GROUP DELETE — the removal twin of the unified ingest:
-    * one call tombstones the ids across every member family (the BM25
-    * member with the exact stats subtraction). A document group's
-    * `_hashes` dedup rows are KEPT deliberately: deletion is terminal
+    * one call tombstones the ids across every member family. A document
+    * group's `_hashes` dedup rows are KEPT deliberately: deletion is terminal
     * per id/content (the ingest contract), so a redelivered copy of a
     * deleted document must still be recognized and skipped, not
     * re-indexed.
@@ -1385,7 +1383,7 @@ object StreamingOps {
   /** O(METADATA) SNAPSHOT of a group — the manifest twin of [[backup]]
     * for append-dominated windows: member families via
     * [[TextOps.snapshotIndex]] (file manifests + O(1) copies of the
-    * rewritten-in-place stats/config members), PLUS a stream-state
+    * rewritten-in-place config members), PLUS a stream-state
     * manifest over the state tables (hash store, replay ledgers) and
     * the checkpoint DIRECTORIES — ledger and checkpoint snapshot as a
     * pair, so [[restoreSnapshot]] keeps the replay-exactness contract
@@ -1606,7 +1604,7 @@ object StreamingOps {
     * store and `extra`: the stream batches and the heal wrote them in
     * another session, whose relation cache is separate — a stale
     * listing would miss appended files (or fail on an overwritten
-    * stats table's vanished part file). */
+    * table's vanished part file). */
   private def refreshMembers(spark: SparkSession, g: IndexGroup,
       extra: Seq[String] = Nil): Unit =
     (g.members.flatMap(m => m.ingestTables :+ m.family.delTable) ++
@@ -1626,8 +1624,8 @@ object StreamingOps {
     * `<base>_dels` / `<base>_vdels`, untouched by ingests and
     * vacuums, so a vacuum dropping the tombstone lists never resets
     * this stream into replaying old deletions). Tombstoning is
-    * idempotent and intersects the live index, so even a replayed
-    * batch cannot double-subtract stats. The caller-session relation
+    * idempotent (an (id, gen) pair appends once), so a replayed batch
+    * changes nothing. The caller-session relation
     * caches of the touched lists refresh on return.
     */
   def streamingDeletes(spark: SparkSession, path: String,
@@ -1671,7 +1669,7 @@ object StreamingOps {
     * new deletion — batch ids restart at 0, the old ledger marks 0
     * applied, and AvailableNow bundles ALL files (old + new) into
     * that one skipped batch. Deletions are content-level idempotent
-    * (tombstone anti-join, WAL txn token), so the safe move on a
+    * (tombstone anti-join), so the safe move on a
     * checkpoint loss is dropping the ledger and REPLAYING everything
     * — re-deleting an already-deleted id is exactly a no-op. (The
     * INGEST loops cannot do this: replaying appends would duplicate
@@ -1780,8 +1778,7 @@ object StreamingOps {
     *      and any pinned snapshots serving).
     * The ingest's reset list is `g.ingestTables` — the audit sinks stay
     * out of it, so pruning an audit sink never resets the group. A
-    * reset marks the stats members' recount ([[ledgeredIngest]]),
-    * replays the sibling CDC stream ([[resetSiblingCdcStream]]) and
+    * reset replays the sibling CDC stream ([[resetSiblingCdcStream]]) and
     * drops the ingest's audit sinks (a reset replay may re-batch the
     * files, and a lingering partition from the previous life would
     * read as duplicated audit rows). The CDC stream never resets; a
@@ -1812,7 +1809,6 @@ object StreamingOps {
         resetSiblingCdcStream(s, g.upsertStream)
         dropAdmissionSinks(s, g.base)
       },
-      stats = if (cdc) Nil else g.members.map(_.family),
       maxFilesPerTrigger = if (cdc) Some(1) else None,
       afterBatch = s => maintain.foreach(p =>
         g.members.foreach(_.maintainBatch(s, p))))
@@ -2413,32 +2409,26 @@ object StreamingOps {
     * then refresh `refresh` for the caller's session — the batch
     * writes ran in the micro-batch's CLONED session, whose relation
     * cache is separate, and a stale listing would miss appended files
-    * (or fail on an overwritten stats table's vanished part file). */
+    * (or fail on an overwritten table's vanished part file). */
   private def ledgeredIngest(spark: SparkSession, path: String,
       table: String, refresh: Seq[String],
       append: (org.apache.spark.sql.DataFrame, String, Long) => Unit,
       onReset: SparkSession => Unit = _ => (),
-      stats: Seq[IndexFamily] = Nil,
       maxFilesPerTrigger: Option[Int] = None,
       afterBatch: SparkSession => Unit = _ => ()): Unit = {
-    // tombstones survive a member-loss reset, but its replay re-counts
-    // tombstoned docs: the reset marks each family of `stats` that
-    // keeps corpus stats (BM25), and the finished replay recomputes
-    // them over the tombstone-filtered postings (ADVICE r13)
-    val owed = stats.flatMap(f => f.statsTable.map(f.table -> _))
     val schema = spark.read.parquet(path).schema
     val ledger = table + "_ledger"
     graft.operators.TextOps.clearOrphanLocation(spark, ledger)
     val ck = ckDir(spark, table)
     val fs = ck.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // reset keys on ANY member table missing, not just the primary
-    // (ADVICE r12): for a multi-table ingest (bm25's stats twin, ANN's
-    // payload twin), losing only the sibling while postings + ledger
+    // (ADVICE r12): for a multi-table ingest (bm25's `_docs` twin,
+    // ANN's payload twin), losing only the sibling while postings + ledger
     // survive would otherwise skip every batch as already-applied and
     // never rebuild the lost member. The reset drops EVERY member, not
     // just the missing one: with the checkpoint gone the source replays
     // all files, and replaying into a surviving append table would
-    // duplicate its rows (or double-fold the stats twin)
+    // duplicate its rows
     if (refresh.exists(t => !spark.catalog.tableExists(t))) {
       if (fs.exists(ck)) { fs.delete(ck, true); () }
       // checkpoint and ledger are a PAIR: with the checkpoint reset,
@@ -2452,10 +2442,9 @@ object StreamingOps {
         spark.sql(s"DROP TABLE IF EXISTS $t")
         graft.operators.TextOps.clearOrphanLocation(spark, t)
       }
-      // the family's TOMBSTONE siblings (`_del`, `_del_stage`) are
-      // deliberately NOT in the drop list — deletion is terminal per
-      // id, so tombstones must survive a reset
-      owed.foreach(o => TextOps.markBm25ResetReconcile(spark, o._1))
+      // the family's TOMBSTONE list (`_del`) is deliberately NOT in the
+      // drop list — deletion is terminal per id, so tombstones must
+      // survive a reset (and keep filtering the replayed rows)
       onReset(spark)
     }
     // AvailableNow honors the source rate limit: with a cap the run
@@ -2488,10 +2477,6 @@ object StreamingOps {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    // replay complete — settle any reset-owed reconciliation BEFORE
-    // the caller-session cache refresh (it may rewrite a member)
-    owed.foreach { case (t, st) =>
-      TextOps.reconcileBm25Tombstones(spark, t, st) }
     refresh.foreach { t =>
       if (spark.catalog.tableExists(t)) spark.catalog.refreshTable(t)
     }
@@ -2499,9 +2484,9 @@ object StreamingOps {
 
   /** Streaming BM25 INDEX INGEST — the online half of the maintenance
     * story streamingBm25 serves from: documents arrive as a file
-    * stream and each micro-batch APPENDS its doc-local postings to the
-    * bucketed incremental index + folds its counts into the 1-row
-    * stats table (TextOps.appendBm25Postings under foreachBatch — ONE
+    * stream and each micro-batch APPENDS its doc-local postings and
+    * `_docs` rows to the bucketed incremental index
+    * (TextOps.appendBm25Postings under foreachBatch — ONE
     * maintenance definition with batch, so stream-built and
     * batch-built indexes cannot drift; exact probe parity against
     * batch q_bm25 is gated in RetrievalSpec). Nothing already stored
@@ -2510,7 +2495,7 @@ object StreamingOps {
     *
     * REPLAY GUARD: foreachBatch is at-least-once — a driver restart
     * redelivers batch ids, and a blind re-append would double every
-    * posting and stats count. A `<table>_ledger` table records applied
+    * posting. A `<table>_ledger` table records applied
     * batch ids; a redelivered id is skipped. The ledger write follows
     * the append non-atomically, so a crash exactly between them still
     * duplicates on replay — closing that last window needs a
@@ -2531,16 +2516,15 @@ object StreamingOps {
     * names are reclaimed with their tables by the dead-pid sweep.
     */
   def streamingBm25Ingest(spark: SparkSession, sfDir: String,
-      table: String, statsTable: String): Unit =
+      table: String): Unit =
     // point the source AT the table path, not at sfDir + glob: the
     // corpus ships both as a single documents.parquet FILE (testdata)
     // and as a directory of part files (anything Spark wrote), and a
     // leaf-name glob filter would see no files in the directory layout
     ledgeredIngest(spark, s"$sfDir/documents.parquet", table,
-      refresh = Seq(table, statsTable),
+      refresh = Seq(table, table + "_docs"),
       append = (batch, t, _) => graft.operators.TextOps
-        .appendBm25Postings(batch, t, statsTable),
-      stats = Seq(TextOps.bm25Family(table, statsTable)))
+        .appendBm25Postings(batch, t))
 
   private def corpusPrep(docs: DataFrame): DataFrame =
     docs

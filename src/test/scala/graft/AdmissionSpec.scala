@@ -27,8 +27,8 @@ class AdmissionSpec extends AnyFunSuite with SparkSuite {
 
   private def famTables(base: String): Seq[String] = Seq(
     s"${base}_band", s"${base}_band_del", s"${base}_bm25",
-    s"${base}_bm25_del", s"${base}_bm25_del_stage",
-    s"${base}_bm25_stats", s"${base}_hashes", s"${base}_ledger",
+    s"${base}_bm25_del", s"${base}_bm25_docs", s"${base}_hashes",
+    s"${base}_ledger",
     s"${base}_quarantine", s"${base}_admission")
 
   private def rmCk(base: String): Unit = {
@@ -206,7 +206,7 @@ class AdmissionSpec extends AnyFunSuite with SparkSuite {
     val base = s"admq_doc_p$pid"
     val t = s"${base}_admission"
     val fam = Seq(s"${base}_band", s"${base}_band_del",
-      s"${base}_bm25", s"${base}_bm25_del", s"${base}_bm25_stats", t)
+      s"${base}_bm25", s"${base}_bm25_del", s"${base}_bm25_docs", t)
     drop(fam: _*)
     try {
       val sp = spark
@@ -215,8 +215,7 @@ class AdmissionSpec extends AnyFunSuite with SparkSuite {
       val docs = Seq(1L -> "alpha beta gamma delta common words here")
         .toDF("doc_id", "text")
       graft.operators.TextOps.appendBandIndex(docs, s"${base}_band")
-      graft.operators.TextOps.appendBm25Postings(docs,
-        s"${base}_bm25", s"${base}_bm25_stats")
+      graft.operators.TextOps.appendBm25Postings(docs, s"${base}_bm25")
       // flat history: no advisory
       ((0L to 4L).map(b => ("r_flat", 100L, 10L, b)))
         .toDF("rule", "total", "violations", "_batch")
@@ -281,7 +280,7 @@ class AdmissionSpec extends AnyFunSuite with SparkSuite {
       assert(!after.contains(target + 1000L))
       // while the good rewrite APPLIED (its fresh token serves)
       val (p, st) = graft.operators.TextOps.liveBm25(spark,
-        s"${base}_bm25", s"${base}_bm25_stats")
+        s"${base}_bm25", "")
       val hits = graft.operators.TextOps.bm25ScoreIncr(
         Seq((1, "plentiful")).toDF("q_id", "token"), p, st)
         .select("doc_id").as[Long].collect().toSet

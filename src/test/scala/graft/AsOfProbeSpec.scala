@@ -24,8 +24,7 @@ class AsOfProbeSpec extends AnyFunSuite with SparkSuite {
 
   private def famAll(t: String): Seq[String] =
     (t +: TextOps.BackupSiblings.map(t + _)) ++
-      Seq(s"${t}_mf_s1", s"${t}_compact", s"${t}_old",
-        s"${t}_stats") ++
+      Seq(s"${t}_mf_s1", s"${t}_compact", s"${t}_old") ++
       TextOps.SnapshotCopySiblings.map(sf => s"$t${sf}_bak_mfs1")
 
   test("scoreBm25AsOf(tag) equals the restored copy's score — " +
@@ -38,9 +37,9 @@ class AsOfProbeSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       TextOps.appendBm25Postings(
         (1L to 20L).map(i => i -> s"spark shuffle join token$i data")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       // a tombstone so the as-of path exercises the `_del` subtract
-      TextOps.deleteBm25Docs(spark, t, s"${t}_stats",
+      TextOps.deleteBm25Docs(spark, t,
         Seq(5L).toDF("doc_id"))
       TextOps.snapshotIndex(spark, t, "s1")
       val qt = Seq((1, "spark"), (1, "shuffle"), (2, "token7"))
@@ -53,11 +52,10 @@ class AsOfProbeSpec extends AnyFunSuite with SparkSuite {
       assert(!asOf.keySet.exists(_._2 == 5L), "tombstoned doc scored")
       // live moves on: more docs, another delete
       TextOps.appendBm25Postings(
-        Seq(21L -> "spark shuffle fresh").toDF("doc_id", "text"),
-        t, s"${t}_stats")
-      TextOps.deleteBm25Docs(spark, t, s"${t}_stats",
+        Seq(21L -> "spark shuffle fresh").toDF("doc_id", "text"), t)
+      TextOps.deleteBm25Docs(spark, t,
         Seq(1L).toDF("doc_id"))
-      val (p2, s2) = TextOps.liveBm25(spark, t, s"${t}_stats")
+      val (p2, s2) = TextOps.liveBm25(spark, t, "")
       val live = scores(TextOps.bm25ScoreIncr(qt, p2, s2))
       assert(live !== asOf)
       // the as-of score is unmoved...
@@ -69,7 +67,7 @@ class AsOfProbeSpec extends AnyFunSuite with SparkSuite {
         asOf)
       // and it equals exactly what a restored copy of the tag serves
       TextOps.restoreSnapshot(spark, t, "s1")
-      val (rp, rs) = TextOps.liveBm25(spark, t, s"${t}_stats")
+      val (rp, rs) = TextOps.liveBm25(spark, t, "")
       assert(scores(TextOps.bm25ScoreIncr(qt, rp, rs)) === asOf)
     } finally drop(all: _*)
   }
@@ -372,30 +370,5 @@ class AsOfProbeSpec extends AnyFunSuite with SparkSuite {
       assert(e.getMessage.contains(s"${t}_mf_nope"),
         s"$name: ${e.getMessage}")
     }
-  }
-
-  test("scoreBm25AsOf refuses a snapshot taken while a delete stage " +
-      "was pending") {
-    val t = s"ao_stage_p$pid"
-    val all = famAll(t)
-    drop(all: _*)
-    try {
-      val sp = spark
-      import sp.implicits._
-      TextOps.appendBm25Postings(
-        (1L to 10L).map(i => i -> s"spark shuffle token$i")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
-      // a crashed delete: the write-ahead stage committed, nothing
-      // applied (the DeleteSpec crash state A)
-      spark.table(t).select("doc_id", "dl").distinct()
-        .filter(col("doc_id") === 4L)
-        .withColumn("gen", lit(TextOps.TerminalGen))
-        .write.saveAsTable(s"${t}_del_stage")
-      TextOps.snapshotIndex(spark, t, "s1")
-      val qt = Seq((1, "spark")).toDF("q_id", "token")
-      val e = intercept[IllegalArgumentException](
-        TextOps.scoreBm25AsOf(spark, t, "s1", qt))
-      assert(e.getMessage.contains("pending delete stage"))
-    } finally drop(all: _*)
   }
 }

@@ -50,7 +50,7 @@ class BackupScaleSpec extends AnyFunSuite with SparkSuite {
         .distinct
       all.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       try {
-        TextOps.appendBm25Postings(docs, bt, s"${bt}_stats")
+        TextOps.appendBm25Postings(docs, bt)
         AnnIndex.write(emb, at)
         // bytes are the load-immune curve: wall-clock at these SFs is
         // job-launch-overhead-dominated (a 50k-doc copy is still
@@ -95,7 +95,7 @@ class BackupScaleSpec extends AnyFunSuite with SparkSuite {
           rows.map(r => ((r.getInt(0), r.getLong(1)),
             r.getDouble(2))).toMap
         val (liveRows, liveS) = timed {
-          val (p, st) = TextOps.liveBm25(spark, bt, s"${bt}_stats")
+          val (p, st) = TextOps.liveBm25(spark, bt, "")
           TextOps.bm25ScoreIncr(qt, p, st).collect()
         }
         val (asOfRows, asOfS) = timed {
@@ -111,7 +111,7 @@ class BackupScaleSpec extends AnyFunSuite with SparkSuite {
         val extra = docs
           .limit(math.max(1, (docs.count() / 10).toInt))
           .withColumn("doc_id", col("doc_id") + lit(1000000000L))
-        TextOps.appendBm25Postings(extra, bt, s"${bt}_stats")
+        TextOps.appendBm25Postings(extra, bt)
         val (_, diffS) = timed {
           TextOps.backupIndex(spark, bt, "diff",
             baseTag = Some("bak"))

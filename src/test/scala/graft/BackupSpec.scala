@@ -44,11 +44,11 @@ class BackupSpec extends AnyFunSuite with SparkSuite {
       def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
       TextOps.appendBm25Postings(
         docs(1L -> "spark join window", 2L -> "hash scan merge",
-          3L -> "window fast data"), t, s"${t}_stats")
+          3L -> "window fast data"), t)
       val qt = Seq((1, "window"), (1, "spark"), (2, "data"),
         (2, "hash")).toDF("q_id", "token")
       def scores(): Map[(Int, Long), Double] = {
-        val (p, st) = TextOps.liveBm25(spark, t, s"${t}_stats")
+        val (p, st) = TextOps.liveBm25(spark, t, "")
         TextOps.bm25ScoreIncr(qt, p, st).collect()
           .map(r => ((r.getInt(0), r.getLong(1)), r.getDouble(2))).toMap
       }
@@ -56,16 +56,16 @@ class BackupSpec extends AnyFunSuite with SparkSuite {
       assert(snap.nonEmpty)
       val writtenTo = TextOps.backupIndex(spark, t)
       assert(writtenTo.contains(s"${t}_bak_bak") &&
-        writtenTo.contains(s"${t}_stats_bak_bak"))
+        writtenTo.contains(s"${t}_docs_bak_bak"))
       // heavy mutation AFTER the snapshot: delete, upsert, append,
       // vacuum — every lifecycle verb
-      TextOps.deleteBm25Docs(spark, t, s"${t}_stats",
+      TextOps.deleteBm25Docs(spark, t,
         Seq(2L).toDF("doc_id"))
-      TextOps.upsertBm25Docs(spark, t, s"${t}_stats",
+      TextOps.upsertBm25Docs(spark, t,
         docs(1L -> "totally different content now"))
-      TextOps.appendBm25Postings(docs(9L -> "brand new doc"), t,
-        s"${t}_stats")
-      TextOps.vacuumIndex(spark, s"${t}_del", Seq(t), "doc_id")
+      TextOps.appendBm25Postings(docs(9L -> "brand new doc"), t)
+      TextOps.vacuumIndex(spark, s"${t}_del",
+        Seq(t, s"${t}_docs"), "doc_id")
       assert(scores() !== snap, "mutations must actually change probes")
       val did = TextOps.restoreIndex(spark, t)
       assert(did.exists(_.startsWith("restored ")), did.toString)
@@ -74,7 +74,7 @@ class BackupSpec extends AnyFunSuite with SparkSuite {
         "restored family fails its own audit")
       // the backup is kept; a second restore converges identically
       // (the crash-mid-restore story: just re-run)
-      TextOps.upsertBm25Docs(spark, t, s"${t}_stats",
+      TextOps.upsertBm25Docs(spark, t,
         docs(3L -> "half-applied garbage"))
       TextOps.restoreIndex(spark, t)
       assert(scores() === snap)
@@ -91,11 +91,11 @@ class BackupSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       TextOps.appendBm25Postings(
         Seq(1L -> "spark join window", 2L -> "hash scan merge")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       assert(!spark.catalog.tableExists(s"${t}_del"))
       TextOps.backupIndex(spark, t)
       // a delete AFTER the snapshot creates the tombstone list
-      TextOps.deleteBm25Docs(spark, t, s"${t}_stats",
+      TextOps.deleteBm25Docs(spark, t,
         Seq(2L).toDF("doc_id"))
       assert(spark.catalog.tableExists(s"${t}_del"))
       val did = TextOps.restoreIndex(spark, t)
@@ -156,8 +156,7 @@ class BackupSpec extends AnyFunSuite with SparkSuite {
       val sp = spark
       import sp.implicits._
       TextOps.appendBm25Postings(
-        Seq(1L -> "spark join window").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(1L -> "spark join window").toDF("doc_id", "text"), t)
       val written = TextOps.backupIndex(spark, t)
       assert(!written.exists(_.contains("_hold")),
         "backup must not copy the hold registry")
@@ -168,9 +167,8 @@ class BackupSpec extends AnyFunSuite with SparkSuite {
       assert(spark.catalog.tableExists(s"${t}_hold"),
         "restore rolled back the hold registry")
       TextOps.appendBm25Postings(
-        Seq(5L -> "held content arriving").toDF("doc_id", "text"),
-        t, s"${t}_stats")
-      val (p, _) = TextOps.liveBm25(spark, t, s"${t}_stats")
+        Seq(5L -> "held content arriving").toDF("doc_id", "text"), t)
+      val (p, _) = TextOps.liveBm25(spark, t, "")
       assert(p.filter(col("doc_id") === 5L).isEmpty,
         "post-restore ingest stored a held id")
     } finally drop(all: _*)
@@ -186,8 +184,8 @@ class BackupSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       TextOps.appendBm25Postings(
         Seq(1L -> "spark join window", 2L -> "hash scan merge")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
-      TextOps.deleteBm25Docs(spark, t, s"${t}_stats",
+          .toDF("doc_id", "text"), t)
+      TextOps.deleteBm25Docs(spark, t,
         Seq(2L).toDF("doc_id"))
       assert(spark.catalog.tableExists(s"${t}_del"))
       TextOps.backupIndex(spark, t)
@@ -226,18 +224,17 @@ class BackupSpec extends AnyFunSuite with SparkSuite {
       }
       // a live family with NO backup must survive the refused restore
       TextOps.appendBm25Postings(
-        Seq(1L -> "spark join window").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(1L -> "spark join window").toDF("doc_id", "text"), t)
       intercept[IllegalArgumentException] {
         TextOps.restoreIndex(spark, t)
       }
       assert(spark.catalog.tableExists(t) &&
-        spark.catalog.tableExists(s"${t}_stats"))
+        spark.catalog.tableExists(s"${t}_docs"))
       TextOps.backupIndex(spark, t)
       assert(spark.catalog.tableExists(s"${t}_bak_bak"))
       TextOps.dropBackup(spark, t)
       assert(!spark.catalog.tableExists(s"${t}_bak_bak") &&
-        !spark.catalog.tableExists(s"${t}_stats_bak_bak"))
+        !spark.catalog.tableExists(s"${t}_docs_bak_bak"))
     } finally drop(all: _*)
   }
 }

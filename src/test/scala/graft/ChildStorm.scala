@@ -24,7 +24,6 @@ object ChildStorm {
     // the SparkSuite rationale: under full-suite load a lock waiter
     // can starve past the 30 s production default
     spark.conf.set("graft.buildLock.timeoutMs", "180000")
-    val statsT = table + "_stats"
     try {
       val sp = spark
       import sp.implicits._
@@ -33,18 +32,19 @@ object ChildStorm {
           ((r * 100 + i).toLong,
             s"tok${i % 7} tok${(i + 1) % 7} alpha beta round$r")
         }.toDF("doc_id", "text")
-        graft.operators.TextOps.appendBm25Postings(docs, table, statsT)
+        graft.operators.TextOps.appendBm25Postings(docs, table)
         if (r % 2 == 0)
           graft.operators.TextOps.compactIndex(spark, table)
         if (r % 3 == 0)
-          graft.operators.TextOps.deleteBm25Docs(spark, table, statsT,
+          graft.operators.TextOps.deleteBm25Docs(spark, table,
             Seq((r * 100 + 1).toLong).toDF("doc_id"))
         if (r % 4 == 0)
           graft.operators.TextOps.vacuumIndex(spark, s"${table}_del",
-            Seq(table), "doc_id")
+            Seq(table, s"${table}_docs"), "doc_id")
       }
-      val v = graft.operators.TextOps.bm25Family(table, statsT).fsck(spark)
-      val n = spark.table(statsT).select("n_docs").head().getLong(0)
+      val v = graft.operators.TextOps.bm25Family(table).fsck(spark)
+      val n = graft.operators.TextOps.liveBm25(spark, table, "")._2
+        .select("n_docs").head().getLong(0)
       // the parent asserts on this exact line
       println(s"CHILD_OK n_docs=$n fsck=${v.size}")
       v.foreach(x => println(s"CHILD_FSCK $x"))

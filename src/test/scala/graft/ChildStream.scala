@@ -88,7 +88,7 @@ object ChildStream {
       require(left == unfixable, s"post-heal quarantine: $left")
       // every healed doc serves from the index under its marker token
       val (p, st) = graft.operators.TextOps.liveBm25(spark,
-        s"${base}_bm25", s"${base}_bm25_stats")
+        s"${base}_bm25", "")
       val hits = graft.operators.TextOps.bm25ScoreIncr(
         Seq((1, "healme")).toDF("q_id", "token"), p, st)
         .select("doc_id").as[Long].collect().toSet

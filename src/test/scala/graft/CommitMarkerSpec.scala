@@ -35,14 +35,14 @@ class CommitMarkerSpec extends AnyFunSuite with SparkSuite {
       "not listed, and are named by checkBackup; a re-take heals; " +
       "dropBackup clears the marker") {
     val t = s"cm_bm25_p$pid"
-    val all = famAll(t) ++ Seq(s"${t}_stats")
+    val all = famAll(t) ++ Seq(s"${t}_docs")
     drop(all: _*)
     try {
       val sp = spark
       import sp.implicits._
       TextOps.appendBm25Postings(
         Seq(1L -> "spark join window", 2L -> "hash scan merge")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       val written = TextOps.backupIndex(spark, t)
       assert(written.contains(s"${t}_bakok_bak"), written.toString)
       assert(spark.catalog.tableExists(s"${t}_bakok_bak"))
@@ -81,20 +81,18 @@ class CommitMarkerSpec extends AnyFunSuite with SparkSuite {
   test("re-taking a backup retires the marker before copying: a " +
       "re-run after any crash converges to a committed set") {
     val t = s"cm_retake_p$pid"
-    val all = famAll(t) ++ Seq(s"${t}_stats")
+    val all = famAll(t) ++ Seq(s"${t}_docs")
     drop(all: _*)
     try {
       val sp = spark
       import sp.implicits._
       TextOps.appendBm25Postings(
-        Seq(1L -> "spark join window").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(1L -> "spark join window").toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t)
       val snap = spark.table(s"${t}_bak_bak").count()
       // mutate, re-take: the new marker describes the NEW set
       TextOps.appendBm25Postings(
-        Seq(2L -> "hash scan merge data rows").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(2L -> "hash scan merge data rows").toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t)
       assert(spark.table(s"${t}_bak_bak").count() > snap)
       assert(TextOps.checkBackup(spark, t) === Nil)
@@ -107,14 +105,14 @@ class CommitMarkerSpec extends AnyFunSuite with SparkSuite {
       "by restore, audited by checkDocumentsBackup") {
     val base = s"cm_doc_p$pid"
     val t = s"${base}_bm25"
-    val all = famAll(t) ++ Seq(s"${t}_stats", s"${base}_dbakok_bak")
+    val all = famAll(t) ++ Seq(s"${t}_docs", s"${base}_dbakok_bak")
     drop(all: _*)
     try {
       val sp = spark
       import sp.implicits._
       TextOps.appendBm25Postings(
         Seq(1L -> "spark join window", 2L -> "hash scan merge")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       val e0 = intercept[IllegalArgumentException] {
         StreamingOps.restore(spark, IndexGroup.documents(base))
       }
@@ -141,21 +139,21 @@ class CommitMarkerSpec extends AnyFunSuite with SparkSuite {
   test("file-level integrity: a copy that loses a data file after " +
       "commit is flagged by checkBackup and refused by restore") {
     val t = s"cm_files_p$pid"
-    val all = famAll(t) ++ Seq(s"${t}_stats")
+    val all = famAll(t) ++ Seq(s"${t}_docs")
     drop(all: _*)
     try {
       val sp = spark
       import sp.implicits._
       TextOps.appendBm25Postings(
         Seq(1L -> "spark join window", 2L -> "hash scan merge")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t)
       assert(TextOps.checkBackup(spark, t) === Nil)
       // damage the committed copy: delete one data file from the
       // stats copy's location (the smallest member — one file)
       val loc = new org.apache.hadoop.fs.Path(
         spark.conf.get("spark.sql.warehouse.dir"),
-        s"${t}_stats_bak_bak".toLowerCase)
+        s"${t}_docs_bak_bak".toLowerCase)
       val fs = loc.getFileSystem(
         spark.sparkContext.hadoopConfiguration)
       val part = fs.listStatus(loc)

@@ -85,21 +85,20 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
     // probe must be unchanged pair-for-pair and score-for-score
     val pid = ProcessHandle.current().pid()
     val t = s"compact_bm25_p$pid"
-    val st = s"${t}_stats"
-    Seq(t, st, s"${t}_compact")
+    Seq(t, s"${t}_docs", s"${t}_compact")
       .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
     try {
       val docs = Tables(spark, sf, "documents")
       (0 to 2).foreach { m =>
         TextOps.appendBm25Postings(
-          docs.filter(pmod(col("doc_id"), lit(3)) === m), t, st)
+          docs.filter(pmod(col("doc_id"), lit(3)) === m), t)
       }
       val sp = spark
       import sp.implicits._
       val qt = Seq((0L, "the"), (0L, "of"), (1L, "data"))
         .toDF("q_id", "token")
       def probe() = TextOps.bm25ScoreIncr(qt, spark.table(t),
-        spark.table(st)).collect()
+        TextOps.liveBm25(spark, t, "")._2).collect()
         .map(r => ((r.getAs[Long]("q_id"), r.getAs[Long]("doc_id")),
           r.getAs[Double]("score"))).toMap
       val before = probe()
@@ -108,7 +107,7 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
       assert(probe() === before)
       assert(before.nonEmpty)
       assert(dataFiles(t).size === 8, s"was $filesBefore")
-    } finally Seq(t, st, s"${t}_compact")
+    } finally Seq(t, s"${t}_docs", s"${t}_compact")
       .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
   }
 

@@ -31,14 +31,13 @@ class CrashedSwapSpec extends AnyFunSuite with SparkSuite {
   }
 
   private def bm25All(t: String): Seq[String] =
-    Seq(t, s"${t}_stats", s"${t}_del", s"${t}_del_stage",
-      s"${t}_compact", s"${t}_old", s"${t}_swap",
-      s"${t}_del_compact", s"${t}_del_old")
+    Seq(t, s"${t}_docs", s"${t}_del", s"${t}_compact", s"${t}_old",
+      s"${t}_swap", s"${t}_del_compact", s"${t}_del_old")
 
   private def freshBm25(t: String): Unit =
     TextOps.appendBm25Postings(docsDf(Seq(
       1L -> "spark join window", 2L -> "hash scan merge",
-      3L -> "window fast data")), t, s"${t}_stats")
+      3L -> "window fast data")), t)
 
   test("mid-swap crash (member unbound, backup out): fsck names it, " +
       "one repair() re-binds and the probes return") {
@@ -79,8 +78,9 @@ class CrashedSwapSpec extends AnyFunSuite with SparkSuite {
       val v = TextOps.bm25Family(t).fsck(spark)
       assert(v.exists(_.contains(s"content survives in ${t}_compact")),
         v.toString)
-      // the stats now describe the OLD content — the crash MASKED a
-      // stats drift; the convergence loop heals both in ONE call
+      // the `_docs` rows now describe the OLD content — the crash
+      // MASKED a stats drift; the convergence loop heals both in ONE
+      // call
       val fixed = TextOps.bm25Family(t).repair(spark)
       assert(fixed.contains("recovered crashed swap renames") &&
         fixed.exists(_.contains("stats")), fixed.toString)
@@ -139,11 +139,12 @@ class CrashedSwapSpec extends AnyFunSuite with SparkSuite {
       // corruption 1: a lost barrier — doc 2's replacement landed at
       // gen 2 but the barrier entry never committed
       TextOps.appendBm25Postings(
-        docsDf(Seq(2L -> "stream order customer")), t, s"${t}_stats",
+        docsDf(Seq(2L -> "stream order customer")), t,
         gen = 2L)
-      // corruption 2: the stored stats lie
-      Seq((99L, 9999L)).toDF("n_docs", "sum_dl")
-        .write.mode("overwrite").saveAsTable(s"${t}_stats")
+      // corruption 2: the `_docs` rows the stats derive from lie
+      Seq((1L, 9999L, 0L)).toDF("doc_id", "dl", "gen").write
+        .mode("overwrite").bucketBy(8, "doc_id").sortBy("doc_id")
+        .saveAsTable(s"${t}_docs")
       // corruption 3: a swap crashed mid-rename on top of it all
       spark.sql(s"ALTER TABLE $t RENAME TO ${t}_old")
       // fsck sees ONLY the swap (content audits against a
@@ -160,11 +161,11 @@ class CrashedSwapSpec extends AnyFunSuite with SparkSuite {
       // the healed family equals a from-scratch build over the FINAL
       // content (doc 2 replaced — the newest generation survives)
       val t2 = s"cs_all_twin_p$pid"
-      drop(t2, s"${t2}_stats")
+      drop(t2, s"${t2}_docs")
       try {
         TextOps.appendBm25Postings(docsDf(Seq(
           1L -> "spark join window", 2L -> "stream order customer",
-          3L -> "window fast data")), t2, s"${t2}_stats")
+          3L -> "window fast data")), t2)
         val qt = Seq((1, "window"), (2, "stream"), (2, "order"))
           .toDF("q_id", "token")
         def scores(pt: org.apache.spark.sql.DataFrame,
@@ -172,11 +173,11 @@ class CrashedSwapSpec extends AnyFunSuite with SparkSuite {
           TextOps.bm25ScoreIncr(qt, pt, st).collect()
             .map(r => ((r.getInt(0), r.getLong(1)), r.getDouble(2)))
             .toMap
-        val (lp, ls) = TextOps.liveBm25(spark, t, s"${t}_stats")
-        val want = scores(spark.table(t2), spark.table(s"${t2}_stats"))
+        val (lp, ls) = TextOps.liveBm25(spark, t, "")
+        val want = scores(spark.table(t2), TextOps.liveBm25(spark, t2, "")._2)
         assert(want.nonEmpty)
         assert(scores(lp, ls) === want)
-      } finally drop(t2, s"${t2}_stats")
+      } finally drop(t2, s"${t2}_docs")
       assert(TextOps.bm25Family(t).repair(spark) === Nil)
     } finally drop(bm25All(t): _*)
   }

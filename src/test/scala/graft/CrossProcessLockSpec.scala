@@ -45,15 +45,14 @@ class CrossProcessLockSpec extends AnyFunSuite with SparkSuite {
       .createTempDirectory("graft_lock").toString + "/l1.lock"
     val t = s"xpl_stale_p$pid"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"DROP TABLE IF EXISTS ${t}_stats")
+    spark.sql(s"DROP TABLE IF EXISTS ${t}_docs")
     val s2 = lockSession(lock, 10000L)
     try {
       writeLock(lock, deadPid)
       val sp = s2
       import sp.implicits._
       TextOps.appendBm25Postings(
-        Seq(1L -> "spark join window").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(1L -> "spark join window").toDF("doc_id", "text"), t)
       assert(s2.table(t).count() > 0, "op did not proceed past the " +
         "stale lock")
       // the op's own release leaves no lock behind
@@ -61,7 +60,7 @@ class CrossProcessLockSpec extends AnyFunSuite with SparkSuite {
         .exists(new org.apache.hadoop.fs.Path(lock)))
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      spark.sql(s"DROP TABLE IF EXISTS ${t}_stats")
+      spark.sql(s"DROP TABLE IF EXISTS ${t}_docs")
     }
   }
 
@@ -70,7 +69,7 @@ class CrossProcessLockSpec extends AnyFunSuite with SparkSuite {
       .createTempDirectory("graft_lock").toString + "/l2.lock"
     val t = s"xpl_live_p$pid"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"DROP TABLE IF EXISTS ${t}_stats")
+    spark.sql(s"DROP TABLE IF EXISTS ${t}_docs")
     // a genuinely LIVE foreign process holds the lock
     val holder = new ProcessBuilder("sleep", "60").start()
     val s2 = lockSession(lock, 700L)
@@ -80,8 +79,7 @@ class CrossProcessLockSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       val e = intercept[IllegalStateException] {
         TextOps.appendBm25Postings(
-          Seq(1L -> "spark join window").toDF("doc_id", "text"),
-          t, s"${t}_stats")
+          Seq(1L -> "spark join window").toDF("doc_id", "text"), t)
       }
       assert(e.getMessage.contains(holder.pid().toString), e.getMessage)
       assert(e.getMessage.contains("refusing"), e.getMessage)
@@ -90,7 +88,7 @@ class CrossProcessLockSpec extends AnyFunSuite with SparkSuite {
     } finally {
       holder.destroyForcibly()
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      spark.sql(s"DROP TABLE IF EXISTS ${t}_stats")
+      spark.sql(s"DROP TABLE IF EXISTS ${t}_docs")
     }
   }
 
@@ -99,7 +97,7 @@ class CrossProcessLockSpec extends AnyFunSuite with SparkSuite {
       .createTempDirectory("graft_lock").toString + "/l3.lock"
     val t = s"xpl_wait_p$pid"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"DROP TABLE IF EXISTS ${t}_stats")
+    spark.sql(s"DROP TABLE IF EXISTS ${t}_docs")
     // the holder dies ~1s in; the op (15s budget) must then sweep the
     // now-stale lock and complete instead of refusing
     val holder = new ProcessBuilder("sleep", "1").start()
@@ -109,13 +107,12 @@ class CrossProcessLockSpec extends AnyFunSuite with SparkSuite {
       val sp = s2
       import sp.implicits._
       TextOps.appendBm25Postings(
-        Seq(1L -> "spark join window").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(1L -> "spark join window").toDF("doc_id", "text"), t)
       assert(s2.table(t).count() > 0)
     } finally {
       holder.destroyForcibly()
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      spark.sql(s"DROP TABLE IF EXISTS ${t}_stats")
+      spark.sql(s"DROP TABLE IF EXISTS ${t}_docs")
     }
   }
 
@@ -135,19 +132,18 @@ class CrossProcessLockSpec extends AnyFunSuite with SparkSuite {
           val p = new org.apache.hadoop.fs.Path(lock)
           fsOf(p).setTimes(p, System.currentTimeMillis() - 60000L, -1L)
           spark.sql(s"DROP TABLE IF EXISTS $t")
-          spark.sql(s"DROP TABLE IF EXISTS ${t}_stats")
+          spark.sql(s"DROP TABLE IF EXISTS ${t}_docs")
           val s2 = lockSession(lock, 10000L)
           val sp = s2
           import sp.implicits._
           TextOps.appendBm25Postings(
-            Seq(1L -> "spark join window").toDF("doc_id", "text"),
-            t, s"${t}_stats")
+            Seq(1L -> "spark join window").toDF("doc_id", "text"), t)
           assert(s2.table(t).count() > 0, body)
       }
     } finally {
       live.destroyForcibly()
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      spark.sql(s"DROP TABLE IF EXISTS ${t}_stats")
+      spark.sql(s"DROP TABLE IF EXISTS ${t}_docs")
     }
   }
 
@@ -166,7 +162,7 @@ class CrossProcessLockSpec extends AnyFunSuite with SparkSuite {
     val lock = dir + "/l5.lock"
     val t = s"xpl_host_p$pid"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"DROP TABLE IF EXISTS ${t}_stats")
+    spark.sql(s"DROP TABLE IF EXISTS ${t}_docs")
     val otherHost =
       if (TextOps.hostHash == "abc123") "def456" else "abc123"
     val dp = deadPid
@@ -189,8 +185,7 @@ class CrossProcessLockSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       val e = intercept[IllegalStateException] {
         TextOps.appendBm25Postings(
-          Seq(1L -> "spark join window").toDF("doc_id", "text"),
-          t, s"${t}_stats")
+          Seq(1L -> "spark join window").toDF("doc_id", "text"), t)
       }
       assert(e.getMessage.contains("refusing"), e.getMessage)
       assert(fsOf(new org.apache.hadoop.fs.Path(lock))
@@ -203,12 +198,11 @@ class CrossProcessLockSpec extends AnyFunSuite with SparkSuite {
       fsOf(p).setTimes(p,
         System.currentTimeMillis() - 7200L * 1000, -1L)
       TextOps.appendBm25Postings(
-        Seq(1L -> "spark join window").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(1L -> "spark join window").toDF("doc_id", "text"), t)
       assert(s2.table(t).count() > 0)
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      spark.sql(s"DROP TABLE IF EXISTS ${t}_stats")
+      spark.sql(s"DROP TABLE IF EXISTS ${t}_docs")
     }
   }
 
@@ -218,21 +212,20 @@ class CrossProcessLockSpec extends AnyFunSuite with SparkSuite {
       .createTempDirectory("graft_lock").toString + "/l6.lock"
     val t = s"xpl_host2_p$pid"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"DROP TABLE IF EXISTS ${t}_stats")
+    spark.sql(s"DROP TABLE IF EXISTS ${t}_docs")
     val s2 = lockSession(lock, 10000L)
     try {
       writeLockStr(lock, s"$deadPid@${TextOps.hostHash}")
       val sp = s2
       import sp.implicits._
       TextOps.appendBm25Postings(
-        Seq(1L -> "spark join window").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(1L -> "spark join window").toDF("doc_id", "text"), t)
       assert(s2.table(t).count() > 0)
       assert(!fsOf(new org.apache.hadoop.fs.Path(lock))
         .exists(new org.apache.hadoop.fs.Path(lock)))
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      spark.sql(s"DROP TABLE IF EXISTS ${t}_stats")
+      spark.sql(s"DROP TABLE IF EXISTS ${t}_docs")
     }
   }
 

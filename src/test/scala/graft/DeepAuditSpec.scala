@@ -57,11 +57,11 @@ class DeepAuditSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       TextOps.appendBm25Postings(
         (1L to 30L).map(i => i -> s"spark shuffle join token$i data")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t, "base")
       TextOps.appendBm25Postings(
         (31L to 33L).map(i => i -> s"spark shuffle join token$i data")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t, "d1", baseTag = Some("base"))
       // fresh chain: shallow AND deep green (deep walks borrowed
       // rows to the base copy holding the bytes)
@@ -164,7 +164,7 @@ class DeepAuditSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       TextOps.appendBm25Postings(
         (1L to 20L).map(i => i -> s"spark shuffle token$i")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       TextOps.snapshotIndex(spark, t, "s1")
       // an anchored fold copies the pinned postings aside (with
       // their md5 sidecar) and rewrites the live files
@@ -194,7 +194,7 @@ class DeepAuditSpec extends AnyFunSuite with SparkSuite {
     val all = (fams.flatMap(f =>
       (f +: TextOps.BackupSiblings.map(f + _)).flatMap(m =>
         Seq(m, s"${m}_bak_b0")) ++ Seq(s"${f}_bakok_b0")) ++
-      Seq(s"${base}_dbakok_b0", s"${base}_bm25_stats",
+      Seq(s"${base}_dbakok_b0", s"${base}_bm25_docs",
         s"${base}_hashes", s"${base}_hashes_bak_b0")).distinct
     drop(all: _*)
     try {
@@ -202,8 +202,7 @@ class DeepAuditSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       TextOps.appendBm25Postings(
         (1L to 20L).map(i => i -> s"spark shuffle token$i")
-          .toDF("doc_id", "text"), s"${base}_bm25",
-        s"${base}_bm25_stats")
+          .toDF("doc_id", "text"), s"${base}_bm25")
       TextOps.writeBandIndex(
         (1L to 20L).map(i => (i, s"spark shuffle token$i"))
           .toDF("doc_id", "text"), s"${base}_band")

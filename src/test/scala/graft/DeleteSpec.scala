@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * same probe against an index containing only the survivors — and
   * after `vacuum`, the tombstone list is gone, the files no longer
   * hold the deleted rows, and the probe is STILL identical. For BM25
-  * the stats adjustment must be exact (n_docs, sum_dl subtract the
+  * the derived stats must be exact (n_docs, sum_dl lose exactly the
   * victims' own contribution), making post-delete scores bit-equal to
   * a survivor-only index.
   */
@@ -36,26 +36,25 @@ class DeleteSpec extends AnyFunSuite with SparkSuite {
   test("BM25: delete equals a survivor-only index, bit for bit") {
     val t = s"del_bm25_p$pid"
     val t2 = s"del_bm25_scratch_p$pid"
-    val all = Seq(t, s"${t}_stats", s"${t}_del", s"${t}_compact",
-      s"${t}_old", t2, s"${t2}_stats")
+    val all = Seq(t, s"${t}_docs", s"${t}_del", s"${t}_compact",
+      s"${t}_old", t2, s"${t2}_docs")
     drop(all: _*)
     try {
       val sp = spark
       import sp.implicits._
       val victims = (10L until 30L).toDF("doc_id")
-      TextOps.appendBm25Postings(docs, t, s"${t}_stats")
-      TextOps.deleteBm25Docs(spark, t, s"${t}_stats", victims)
+      TextOps.appendBm25Postings(docs, t)
+      TextOps.deleteBm25Docs(spark, t, victims)
       // double delete + unknown ids: stats must not move again
-      val statsAfter = spark.table(s"${t}_stats").collect()(0)
-      TextOps.deleteBm25Docs(spark, t, s"${t}_stats",
+      val statsAfter = TextOps.liveBm25(spark, t, "")._2.collect()(0)
+      TextOps.deleteBm25Docs(spark, t,
         victims.unionByName(Seq(888888L).toDF("doc_id")))
-      assert(spark.table(s"${t}_stats").collect()(0) === statsAfter)
+      assert(TextOps.liveBm25(spark, t, "")._2.collect()(0) === statsAfter)
 
-      // scratch twin over the survivors only (compare the two counts
-      // by name: the delete-adjusted stats row carries its txn token)
+      // scratch twin over the survivors only
       TextOps.appendBm25Postings(
-        docs.join(victims, Seq("doc_id"), "left_anti"), t2, s"${t2}_stats")
-      assert(spark.table(s"${t2}_stats")
+        docs.join(victims, Seq("doc_id"), "left_anti"), t2)
+      assert(TextOps.liveBm25(spark, t2, "")._2
         .select("n_docs", "sum_dl").collect()(0) ===
         org.apache.spark.sql.Row(statsAfter.getLong(0),
           statsAfter.getLong(1)))
@@ -65,88 +64,122 @@ class DeleteSpec extends AnyFunSuite with SparkSuite {
       def score(pt: DataFrame, st: DataFrame) =
         TextOps.bm25ScoreIncr(qt, pt, st).collect()
           .map(r => ((r.getInt(0), r.getLong(1)), r.getDouble(2))).toMap
-      val (livePosts, liveStats) = TextOps.liveBm25(spark, t, s"${t}_stats")
+      val (livePosts, liveStats) = TextOps.liveBm25(spark, t, "")
       val got = score(livePosts, liveStats)
-      val want = score(spark.table(t2), spark.table(s"${t2}_stats"))
+      val want = score(spark.table(t2), TextOps.liveBm25(spark, t2, "")._2)
       assert(got === want)
       assert(got.nonEmpty)
       assert(!got.keys.exists { case (_, d) => d >= 10L && d < 30L })
 
       // vacuum folds: list gone, rows gone, scores unchanged
-      TextOps.vacuumIndex(spark, s"${t}_del", Seq(t), "doc_id")
+      TextOps.bm25Family(t).vacuum(spark)
       assert(!spark.catalog.tableExists(s"${t}_del"))
       assert(spark.table(t).filter(
         col("doc_id") >= 10L && col("doc_id") < 30L).isEmpty)
-      val (p2, s2) = TextOps.liveBm25(spark, t, s"${t}_stats")
+      val (p2, s2) = TextOps.liveBm25(spark, t, "")
       assert(score(p2, s2) === want)
     } finally drop(all: _*)
   }
 
-  test("BM25 delete crash states heal exactly-once (the staged WAL)") {
-    val t = s"del_wal_p$pid"
-    val t2 = s"del_wal_twin_p$pid"
-    val all = Seq(t, s"${t}_stats", s"${t}_del", s"${t}_del_stage",
-      t2, s"${t2}_stats", s"${t2}_del", s"${t2}_del_stage")
+  test("BM25 crash between the member writes: fsck names the stats " +
+      "drift, repair heals it") {
+    // the one crash window an append leaves: the postings landed, the
+    // `_docs` rows the stats derive from did not
+    val t = s"del_docs_p$pid"
+    val t2 = s"del_docs_batch_p$pid"
+    val t3 = s"del_docs_clean_p$pid"
+    val all = Seq(t, s"${t}_docs", s"${t}_del", t2, s"${t2}_docs",
+      t3, s"${t3}_docs")
     drop(all: _*)
     try {
       val sp = spark
       import sp.implicits._
-      val victims = (10L until 30L).toDF("doc_id")
-      TextOps.appendBm25Postings(docs, t, s"${t}_stats")
-      TextOps.appendBm25Postings(docs, t2, s"${t2}_stats")
-      val stageRows = spark.table(t).select("doc_id", "dl").distinct()
-        .join(victims, Seq("doc_id"))
-        .withColumn("gen", lit(TextOps.TerminalGen))
+      val a = docs.filter(col("doc_id") < 300)
+      val b = docs.filter(col("doc_id") >= 300 && col("doc_id") < 340)
+      TextOps.appendBm25Postings(a, t)
+      TextOps.appendBm25Postings(b, t2)
+      spark.table(t2).write.mode("append")
+        .bucketBy(8, "token").sortBy("token").saveAsTable(t)
+      TextOps.appendBm25Postings(a, t3)
+      TextOps.appendBm25Postings(b, t3)
+      val v = TextOps.bm25Family(t).fsck(spark)
+      assert(v.exists(_.contains("stats drift")), v.toString)
+      assert(TextOps.liveBm25(spark, t, "")._2.collect()(0) !==
+        TextOps.liveBm25(spark, t3, "")._2.collect()(0))
+      assert(TextOps.bm25Family(t).repair(spark) ===
+        Seq("recomputed stats: rewrote the docs member from the postings"))
+      assert(TextOps.bm25Family(t).fsck(spark).isEmpty)
+      val qt = Seq((1, "the"), (1, "data"), (2, "model"), (2, "learn"))
+        .toDF("q_id", "token")
+      def score(tbl: String) = {
+        val (p, st) = TextOps.liveBm25(spark, tbl, "")
+        (st.collect()(0), TextOps.bm25ScoreIncr(qt, p, st).collect()
+          .map(r => ((r.getInt(0), r.getLong(1)), r.getDouble(2))).toMap)
+      }
+      val got = score(t)
+      assert(got === score(t3))
+      assert(got._2.nonEmpty)
+    } finally drop(all: _*)
+  }
 
-      // crash state A: the stage committed, nothing applied (died
-      // right after the write-ahead). The next PROBE must heal it to
-      // exactly the state a clean delete produces.
-      stageRows.write.saveAsTable(s"${t}_del_stage")
-      val (pA, sA) = TextOps.liveBm25(spark, t, s"${t}_stats")
-      TextOps.deleteBm25Docs(spark, t2, s"${t2}_stats", victims)
-      val (pB, sB) = TextOps.liveBm25(spark, t2, s"${t2}_stats")
-      assert(!spark.catalog.tableExists(s"${t}_del_stage"))
-      assert(sA.select("n_docs", "sum_dl").collect()(0) ===
-        sB.select("n_docs", "sum_dl").collect()(0))
-      assert(pA.count() === pB.count())
+  /** Spark jobs `body` starts on this thread. A fence job run after it
+    * flushes the listener bus: its start arrives after every earlier
+    * job's. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"deletespec-${java.util.UUID.randomUUID}"
+    val fence = s"$group-fence"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`fence`) => fenced.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "delete job budget")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(fence, "listener fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
 
-      // crash state B: stats already adjusted (txn recorded) but the
-      // process died before the tombstone append finished + stage
-      // drop. Re-staging the SAME victims must NOT subtract again.
-      val statsHealthy = spark.table(s"${t}_stats")
-        .select("n_docs", "sum_dl").collect()(0)
-      stageRows.write.saveAsTable(s"${t}_del_stage")
-      // note: stats.txn still holds this stage's content hash
-      val (_, _) = TextOps.liveBm25(spark, t, s"${t}_stats")
-      assert(spark.table(s"${t}_stats")
-        .select("n_docs", "sum_dl").collect()(0) === statsHealthy)
-
-      // crash state A + an APPEND arriving before any probe: the
-      // append heals first, so its stats rewrite can't strand the
-      // in-flight delete's token
-      val extra = docs.filter(col("doc_id") >= 400 && col("doc_id") < 410)
-      val vic2 = (30L until 40L).toDF("doc_id")
-      val stage2 = spark.table(t).select("doc_id", "dl").distinct()
-        .join(vic2, Seq("doc_id"))
-        .withColumn("gen", lit(TextOps.TerminalGen)).persist()
-      val n2 = stage2.count()
-      stage2.write.saveAsTable(s"${t}_del_stage")
-      val before = spark.table(s"${t}_stats").collect()(0).getLong(0)
-      TextOps.appendBm25Postings(extra, t, s"${t}_stats")
-      assert(spark.table(s"${t}_stats").collect()(0).getLong(0) ===
-        before - n2 + extra.count())
-      stage2.unpersist()
+  test("job budget: a BM25 delete runs the jobs of a band delete " +
+      "(both one tombstone append)") {
+    val t = s"del_jobs_bm25_p$pid"
+    val b = s"del_jobs_band_p$pid"
+    val all = Seq(t, s"${t}_docs", s"${t}_del", b, s"${b}_del")
+    drop(all: _*)
+    try {
+      val sp = spark
+      import sp.implicits._
+      val corpus = docs.filter(col("doc_id") < 200)
+      TextOps.appendBm25Postings(corpus, t)
+      TextOps.appendBandIndex(corpus, b)
+      // the first delete creates each list, the second appends to it
+      Seq((10L until 20L), (20L until 25L)).foreach { r =>
+        val ids = r.toDF("doc_id")
+        val bm25 = jobsOf(TextOps.bm25Family(t).delete(spark, ids))
+        val band = jobsOf(TextOps.bandFamily(b).delete(spark, ids))
+        assert(bm25 === band, s"bm25 $bm25 jobs, band $band")
+      }
     } finally drop(all: _*)
   }
 
   test("BM25 reset replay: tombstones survive and rebuilt stats reconcile") {
-    // ADVICE r13: the ledgered ingest's member-loss reset dropped the
-    // data members but knew nothing of the tombstones — the replay
-    // re-ingested deleted docs and re-counted them into the rebuilt
-    // stats FOREVER (their ids stay tombstoned, so a re-delete
-    // intersects to zero victims and never re-subtracts). Gate: after
-    // delete → member loss → re-ingest, the family is bit-identical
-    // to a survivor-only index, including the stats row.
+    // ADVICE r13: the ledgered ingest's member-loss reset drops the
+    // data members and replays the source, re-ingesting deleted docs;
+    // the tombstone list survives the reset, so the replayed rows stay
+    // dead in the probe AND in the stats derived from `_docs`. Gate:
+    // after delete → member loss → re-ingest, the family is
+    // bit-identical to a survivor-only index, including the stats.
     val sp = spark
     import sp.implicits._
     val corpus = Seq(
@@ -160,17 +193,18 @@ class DeleteSpec extends AnyFunSuite with SparkSuite {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val t = s"del_reset_p$pid"
-    val st = s"${t}_stats"
     val t2 = s"del_reset_twin_p$pid"
-    val all = Seq(t, st, s"${t}_ledger", s"${t}_del", s"${t}_del_stage",
-      s"${t}_del_reconcile", t2, s"${t2}_stats", s"${t2}_del")
+    val all = Seq(t, s"${t}_docs", s"${t}_ledger", s"${t}_del", t2,
+      s"${t2}_docs", s"${t2}_del")
     drop(all: _*)
+    def stats(tbl: String) = TextOps.liveBm25(spark, tbl, "")._2
+      .select("n_docs", "sum_dl").collect()(0)
     def survivorStats(surviving: Seq[Long]): org.apache.spark.sql.Row = {
-      drop(t2, s"${t2}_stats")
+      drop(t2, s"${t2}_docs")
       TextOps.appendBm25Postings(
         spark.read.parquet(s"$dir/documents.parquet")
-          .filter(col("doc_id").isin(surviving: _*)), t2, s"${t2}_stats")
-      spark.table(s"${t2}_stats").select("n_docs", "sum_dl").collect()(0)
+          .filter(col("doc_id").isin(surviving: _*)), t2)
+      stats(t2)
     }
     val qt = Seq((1, "window"), (1, "spark"), (2, "data"), (2, "hash"))
       .toDF("q_id", "token")
@@ -178,42 +212,21 @@ class DeleteSpec extends AnyFunSuite with SparkSuite {
       TextOps.bm25ScoreIncr(qt, pt, stt).collect()
         .map(r => ((r.getInt(0), r.getLong(1)), r.getDouble(2))).toMap
     try {
-      streaming.StreamingOps.streamingBm25Ingest(spark, dir, t, st)
-      TextOps.deleteBm25Docs(spark, t, st, Seq(2L, 4L).toDF("doc_id"))
-      // MEMBER LOSS: the stats twin vanishes out from under the family
-      spark.sql(s"DROP TABLE $st")
-      streaming.StreamingOps.streamingBm25Ingest(spark, dir, t, st)
-      assert(!spark.catalog.tableExists(s"${t}_del_reconcile"),
-        "reconcile marker must retire with the replay")
+      streaming.StreamingOps.streamingBm25Ingest(spark, dir, t)
+      TextOps.deleteBm25Docs(spark, t, Seq(2L, 4L).toDF("doc_id"))
+      // MEMBER LOSS: the `_docs` twin vanishes out from under the family
+      spark.sql(s"DROP TABLE ${t}_docs")
+      streaming.StreamingOps.streamingBm25Ingest(spark, dir, t)
       val want = survivorStats(Seq(1L, 3L, 5L))
-      assert(spark.table(st).select("n_docs", "sum_dl").collect()(0)
-        === want, "rebuilt stats still count tombstoned docs")
-      val (lp, ls) = TextOps.liveBm25(spark, t, st)
+      assert(stats(t) === want, "rebuilt stats still count tombstoned docs")
+      val (lp, ls) = TextOps.liveBm25(spark, t, "")
       val got = scores(lp, ls)
-      assert(got === scores(spark.table(t2), spark.table(s"${t2}_stats")))
+      assert(got === scores(spark.table(t2),
+        TextOps.liveBm25(spark, t2, "")._2))
       assert(got.nonEmpty)
-      // a re-delete of the same ids must not move the reconciled stats
-      TextOps.deleteBm25Docs(spark, t, st, Seq(2L, 4L).toDF("doc_id"))
-      assert(spark.table(st).select("n_docs", "sum_dl").collect()(0)
-        === want)
-
-      // ORPHANED STAGE across a reset (the second ADVICE r13 leg): a
-      // delete that crashed right after its write-ahead, followed by
-      // a family reset, must not LOSE the deletion — the reset folds
-      // the staged ids into the tombstones and the replay reconciles
-      spark.table(t).select("doc_id", "dl").distinct()
-        .filter(col("doc_id") === 5L)
-        .withColumn("gen", lit(TextOps.TerminalGen))
-        .write.saveAsTable(s"${t}_del_stage")
-      spark.sql(s"DROP TABLE $st")
-      streaming.StreamingOps.streamingBm25Ingest(spark, dir, t, st)
-      val want2 = survivorStats(Seq(1L, 3L))
-      assert(spark.table(st).select("n_docs", "sum_dl").collect()(0)
-        === want2, "staged deletion lost across the reset")
-      val (lp2, ls2) = TextOps.liveBm25(spark, t, st)
-      val got2 = scores(lp2, ls2)
-      assert(got2 === scores(spark.table(t2), spark.table(s"${t2}_stats")))
-      assert(!got2.keys.exists { case (_, d) => d == 2L || d == 4L || d == 5L })
+      // a re-delete of the same ids must not move the stats
+      TextOps.deleteBm25Docs(spark, t, Seq(2L, 4L).toDF("doc_id"))
+      assert(stats(t) === want)
     } finally {
       drop(all: _*)
       val ck = new org.apache.hadoop.fs.Path(

@@ -25,8 +25,8 @@ class DiffBackupSpec extends AnyFunSuite with SparkSuite {
     (t +: TextOps.BackupSiblings.map(t + _)).flatMap(m =>
       Seq(m, s"${m}_bak_base", s"${m}_bak_d1", s"${m}_bak_d2")) ++
       Seq(s"${t}_bakok_base", s"${t}_bakok_d1", s"${t}_bakok_d2",
-        s"${t}_stats", s"${t}_stats_bak_base", s"${t}_stats_bak_d1",
-        s"${t}_stats_bak_d2")
+        s"${t}_docs", s"${t}_docs_bak_base", s"${t}_docs_bak_d1",
+        s"${t}_docs_bak_d2")
 
   /** Total data-file bytes physically under a copy table's own
     * location. */
@@ -50,14 +50,14 @@ class DiffBackupSpec extends AnyFunSuite with SparkSuite {
       // batch 1: the corpus (40 docs)
       TextOps.appendBm25Postings(
         (1L to 40L).map(i => i -> s"spark shuffle join token$i data")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t, "base")
       assert(TextOps.checkBackup(spark, t, "base") === Nil)
       val fullBytes = ownBytes(s"${t}_bak_base")
       // batch 2: a ~10% append window
       TextOps.appendBm25Postings(
         (41L to 44L).map(i => i -> s"spark shuffle join token$i data")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t, "d1", baseTag = Some("base"))
       assert(TextOps.checkBackup(spark, t, "d1") === Nil)
       val diffBytes = ownBytes(s"${t}_bak_d1")
@@ -74,8 +74,7 @@ class DiffBackupSpec extends AnyFunSuite with SparkSuite {
       val asOfD1 = postings(t)
       // mutate past the backup, then converge back to d1 exactly
       TextOps.appendBm25Postings(
-        Seq(99L -> "post backup mutation rows").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(99L -> "post backup mutation rows").toDF("doc_id", "text"), t)
       assert(postings(t) !== asOfD1)
       val out = TextOps.restoreIndex(spark, t, "d1")
       assert(out.exists(_.startsWith("restored ")), out.toString)
@@ -84,7 +83,7 @@ class DiffBackupSpec extends AnyFunSuite with SparkSuite {
       // (batch-1 files, recorded flat) and d1 (batch-2 file)
       TextOps.appendBm25Postings(
         (45L to 46L).map(i => i -> s"spark shuffle join token$i data")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t, "d2", baseTag = Some("d1"))
       assert(TextOps.checkBackup(spark, t, "d2") === Nil)
       val srcs = TextOps.readBackupMarker(spark, s"${t}_bakok_d2")
@@ -102,8 +101,7 @@ class DiffBackupSpec extends AnyFunSuite with SparkSuite {
       // the d2 chain restores bit-exact after another mutation
       val asOfD2 = postings(t)
       TextOps.appendBm25Postings(
-        Seq(100L -> "later mutation").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(100L -> "later mutation").toDF("doc_id", "text"), t)
       TextOps.restoreIndex(spark, t, "d2")
       assert(postings(t) === asOfD2)
       // dependents first, then the base drops clean
@@ -124,11 +122,10 @@ class DiffBackupSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       TextOps.appendBm25Postings(
         (1L to 20L).map(i => i -> s"spark shuffle token$i")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t, "base")
       TextOps.appendBm25Postings(
-        Seq(21L -> "appended window").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(21L -> "appended window").toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t, "d1", baseTag = Some("base"))
       assert(TextOps.checkBackup(spark, t, "d1") === Nil)
       // damage the BASE copy (delete one borrowed file's bytes)

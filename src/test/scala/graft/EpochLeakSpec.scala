@@ -41,7 +41,7 @@ class EpochLeakSpec extends AnyFunSuite with SparkSuite {
     import sp.implicits._
     TextOps.appendBm25Postings(
       (1L to n).map(i => i -> s"spark shuffle join token$i data")
-        .toDF("doc_id", "text"), t, s"${t}_stats")
+        .toDF("doc_id", "text"), t)
   }
 
   private def append(t: String, ids: Seq[Long]): Unit = {
@@ -49,7 +49,7 @@ class EpochLeakSpec extends AnyFunSuite with SparkSuite {
     import sp.implicits._
     TextOps.appendBm25Postings(
       ids.map(i => i -> s"spark shuffle join token$i data")
-        .toDF("doc_id", "text"), t, s"${t}_stats")
+        .toDF("doc_id", "text"), t)
   }
 
   private def epochTagFor(owner: Long): String =

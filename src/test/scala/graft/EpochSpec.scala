@@ -24,7 +24,7 @@ class EpochSpec extends AnyFunSuite with SparkSuite {
 
   private def famAll(t: String): Seq[String] =
     (t +: TextOps.BackupSiblings.map(t + _)) ++
-      Seq(s"${t}_compact", s"${t}_old", s"${t}_stats")
+      Seq(s"${t}_compact", s"${t}_old", s"${t}_docs")
 
   test("withIndexEpoch: probes inside one epoch agree across a " +
       "concurrent upsert, delete AND an anchored fold; the tag " +
@@ -37,7 +37,7 @@ class EpochSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       TextOps.appendBm25Postings(
         (1L to 20L).map(i => i -> s"spark shuffle join token$i epoch")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       val qt = Seq((1, "spark"), (1, "shuffle"), (2, "token7"))
         .toDF("q_id", "token")
       def scores(df: org.apache.spark.sql.DataFrame) =
@@ -49,10 +49,10 @@ class EpochSpec extends AnyFunSuite with SparkSuite {
         val first = scores(TextOps.scoreBm25AsOf(spark, t, tag, qt))
         assert(first.nonEmpty)
         // concurrent writers land mid-epoch...
-        TextOps.upsertBm25Docs(spark, t, s"${t}_stats",
+        TextOps.upsertBm25Docs(spark, t,
           Seq(7L -> "spark rewritten body", 21L -> "spark fresh doc")
             .toDF("doc_id", "text"))
-        TextOps.deleteBm25Docs(spark, t, s"${t}_stats",
+        TextOps.deleteBm25Docs(spark, t,
           Seq(2L).toDF("doc_id"))
         // ...and maintenance folds under Anchor (the unattended mode)
         TextOps.compactIndex(spark, t, FoldGuard.Anchor)
@@ -60,7 +60,7 @@ class EpochSpec extends AnyFunSuite with SparkSuite {
         assert(scores(TextOps.scoreBm25AsOf(spark, t, tag, qt))
           === first)
         // while the live index has genuinely moved
-        val (lp, ls) = TextOps.liveBm25(spark, t, s"${t}_stats")
+        val (lp, ls) = TextOps.liveBm25(spark, t, "")
         assert(scores(TextOps.bm25ScoreIncr(qt, lp, ls)) !== first)
       }
       // the ephemeral tag is fully retired: manifest gone, no anchors
@@ -79,8 +79,7 @@ class EpochSpec extends AnyFunSuite with SparkSuite {
       val sp = spark
       import sp.implicits._
       TextOps.appendBm25Postings(
-        Seq(1L -> "alpha beta").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(1L -> "alpha beta").toDF("doc_id", "text"), t)
       var tagSeen: String = null
       intercept[RuntimeException] {
         TextOps.withIndexEpoch(spark, t) { tag =>
@@ -97,8 +96,8 @@ class EpochSpec extends AnyFunSuite with SparkSuite {
       "state across a concurrent member upsert; tags retire on exit") {
     val base = s"epo_doc_p$pid"
     val members = Seq(s"${base}_band", s"${base}_band_del",
-      s"${base}_bm25", s"${base}_bm25_del", s"${base}_bm25_del_stage",
-      s"${base}_bm25_stats", s"${base}_hashes", s"${base}_ledger")
+      s"${base}_bm25", s"${base}_bm25_del", s"${base}_bm25_docs",
+      s"${base}_hashes", s"${base}_ledger")
     val dir = java.nio.file.Files
       .createTempDirectory("graft_epodoc").toString
     drop(members: _*)
@@ -130,7 +129,6 @@ class EpochSpec extends AnyFunSuite with SparkSuite {
         // a member-level writer lands mid-epoch (same doc rewritten —
         // would change BOTH families' live answers)
         TextOps.upsertBm25Docs(spark, s"${base}_bm25",
-          s"${base}_bm25_stats",
           Seq(1L -> "entirely new body of the document")
             .toDF("doc_id", "text"))
         TextOps.upsertBandDocs(spark, s"${base}_band",

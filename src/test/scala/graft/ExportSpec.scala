@@ -38,15 +38,14 @@ class ExportSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       TextOps.appendBm25Postings(
         Seq(1L -> "spark join window", 2L -> "hash scan merge",
-          3L -> "window fast data").toDF("doc_id", "text"),
-        src, s"${src}_stats")
-      TextOps.deleteBm25Docs(spark, src, s"${src}_stats",
+          3L -> "window fast data").toDF("doc_id", "text"), src)
+      TextOps.deleteBm25Docs(spark, src,
         Seq(2L).toDF("doc_id"))
       TextOps.bm25Family(src).hold(spark, Seq(7L).toDF("doc_id"))
       val qt = Seq((1, "window"), (1, "spark"), (2, "data"))
         .toDF("q_id", "token")
       def scores(t: String): Map[(Int, Long), Double] = {
-        val (p, st) = TextOps.liveBm25(spark, t, s"${t}_stats")
+        val (p, st) = TextOps.liveBm25(spark, t, "")
         TextOps.bm25ScoreIncr(qt, p, st).collect()
           .map(r => ((r.getInt(0), r.getLong(1)), r.getDouble(2))).toMap
       }
@@ -80,9 +79,8 @@ class ExportSpec extends AnyFunSuite with SparkSuite {
       assert(j.contains("Bucketed: true"), j)
       // the hold travelled: held content stays out of the NEW family
       TextOps.appendBm25Postings(
-        Seq(7L -> "held content arriving").toDF("doc_id", "text"),
-        dst, s"${dst}_stats")
-      val (p, _) = TextOps.liveBm25(spark, dst, s"${dst}_stats")
+        Seq(7L -> "held content arriving").toDF("doc_id", "text"), dst)
+      val (p, _) = TextOps.liveBm25(spark, dst, "")
       assert(p.filter(col("doc_id") === 7L).isEmpty,
         "a migrated family ingested held content")
       // the tombstone travelled too: doc 2 stays dead
@@ -132,8 +130,7 @@ class ExportSpec extends AnyFunSuite with SparkSuite {
         TextOps.exportIndex(spark, src, s"$dir/fam")
       }
       TextOps.appendBm25Postings(
-        Seq(1L -> "spark join window").toDF("doc_id", "text"),
-        src, s"${src}_stats")
+        Seq(1L -> "spark join window").toDF("doc_id", "text"), src)
       TextOps.exportIndex(spark, src, s"$dir/fam")
       val e = intercept[IllegalArgumentException] {
         TextOps.exportIndex(spark, src, s"$dir/fam")

@@ -33,7 +33,7 @@ class FoldGuardSpec extends AnyFunSuite with SparkSuite {
     import sp.implicits._
     TextOps.appendBm25Postings(
       (1L to n).map(i => i -> s"spark shuffle join token$i data")
-        .toDF("doc_id", "text"), t, s"${t}_stats")
+        .toDF("doc_id", "text"), t)
   }
 
   private def append(t: String, ids: Seq[Long]): Unit = {
@@ -41,7 +41,7 @@ class FoldGuardSpec extends AnyFunSuite with SparkSuite {
     import sp.implicits._
     TextOps.appendBm25Postings(
       ids.map(i => i -> s"spark shuffle join token$i data")
-        .toDF("doc_id", "text"), t, s"${t}_stats")
+        .toDF("doc_id", "text"), t)
   }
 
   private def postings(df: org.apache.spark.sql.DataFrame)
@@ -116,7 +116,7 @@ class FoldGuardSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       mkFam(t)
       // a tombstone so the snapshot manifests a `_del` member too
-      TextOps.deleteBm25Docs(spark, t, s"${t}_stats",
+      TextOps.deleteBm25Docs(spark, t,
         Seq(3L).toDF("doc_id"))
       TextOps.snapshotIndex(spark, t, "s1")
       val want = postings(TextOps.readSnapshot(spark, t, "s1"))
@@ -128,7 +128,8 @@ class FoldGuardSpec extends AnyFunSuite with SparkSuite {
       // TRUNCATE, not drop, while this snapshot records it as a
       // member (a drop would break the tag on a missing member)
       TextOps.compactIndex(spark, t, FoldGuard.Anchor)
-      TextOps.vacuumIndex(spark, s"${t}_del", Seq(t), "doc_id",
+      TextOps.vacuumIndex(spark, s"${t}_del",
+        Seq(t, s"${t}_docs"), "doc_id",
         FoldGuard.Anchor)
       assert(spark.catalog.tableExists(s"${t}_del"),
         "pinned tombstone list must truncate, not drop")
@@ -179,7 +180,8 @@ class FoldGuardSpec extends AnyFunSuite with SparkSuite {
       assert(TextOps.checkSnapshot(spark, t, "s1") === Nil)
       // a default-guard vacuum may proceed (no FILES are pinned) but
       // must not break the tag: the list truncates instead of drops
-      TextOps.vacuumIndex(spark, s"${t}_del", Seq(t), "doc_id")
+      TextOps.vacuumIndex(spark, s"${t}_del",
+        Seq(t, s"${t}_docs"), "doc_id")
       assert(spark.catalog.tableExists(s"${t}_del"))
       assert(TextOps.checkSnapshot(spark, t, "s1") === Nil)
       assert(TextOps.restoreSnapshot(spark, t, "s1")
@@ -191,7 +193,7 @@ class FoldGuardSpec extends AnyFunSuite with SparkSuite {
       // from the anchor. Member list kept empty so the drop path is
       // isolated (an Orphan member rewrite would knowingly orphan
       // the postings pin, which is the OTHER test's subject).
-      TextOps.deleteBm25Docs(spark, t, s"${t}_stats",
+      TextOps.deleteBm25Docs(spark, t,
         Seq(2L).toDF("doc_id"))
       TextOps.snapshotIndex(spark, t, "s2")
       TextOps.compactTombstones(spark, s"${t}_del",

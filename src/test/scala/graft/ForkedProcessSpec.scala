@@ -53,9 +53,9 @@ class ForkedProcessSpec extends AnyFunSuite with SparkSuite {
     val fs = childDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // pre-clean both families' locations (a previous crashed run of
     // this pid would wedge the child's CTAS)
-    Seq(childT, s"${childT}_stats", s"${childT}_del",
-      s"${childT}_del_stage", s"${childT}_compact", s"${childT}_old",
-      parentT, s"${parentT}_stats").foreach { t =>
+    Seq(childT, s"${childT}_docs", s"${childT}_del",
+      s"${childT}_compact", s"${childT}_old",
+      parentT, s"${parentT}_docs").foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
       val p = new org.apache.hadoop.fs.Path(wh, t.toLowerCase)
       if (fs.exists(p)) fs.delete(p, true)
@@ -88,7 +88,7 @@ class ForkedProcessSpec extends AnyFunSuite with SparkSuite {
         // the child's through the shared lock file
         TextOps.appendBm25Postings(
           Seq((i.toLong, s"parent batch $i alpha")).toDF("doc_id", "text"),
-          parentT, s"${parentT}_stats")
+          parentT)
         if (i % 3 == 0) TextOps.compactIndex(spark, parentT)
         parentOps += 1
         // path-based probe of the CHILD's family across its swaps,
@@ -131,11 +131,11 @@ class ForkedProcessSpec extends AnyFunSuite with SparkSuite {
       assert(lockGone, "build lock file still present 10s after the storm")
     } finally {
       if (child.isAlive) child.destroyForcibly()
-      Seq(parentT, s"${parentT}_stats").foreach(t =>
+      Seq(parentT, s"${parentT}_docs").foreach(t =>
         spark.sql(s"DROP TABLE IF EXISTS $t"))
       // the child's tables live in ITS dead catalog — reclaim files
-      Seq(childT, s"${childT}_stats", s"${childT}_del",
-        s"${childT}_del_stage", s"${childT}_compact",
+      Seq(childT, s"${childT}_docs", s"${childT}_del",
+        s"${childT}_compact",
         s"${childT}_old").foreach { t =>
         val p = new org.apache.hadoop.fs.Path(wh, t.toLowerCase)
         if (fs.exists(p)) fs.delete(p, true)

@@ -25,8 +25,8 @@ class FsckSpec extends AnyFunSuite with SparkSuite {
     val sq = s"fs_sq_p$pid"
     val p = s"fs_pq_p$pid"
     val iv = s"fs_ivf_p$pid"
-    val all = Seq(b, s"${b}_stats", s"${b}_del", s"${b}_del_stage",
-      a, s"${a}_vec", s"${a}_cfg", s"${a}_del",
+    val all = Seq(b, s"${b}_docs", s"${b}_del", a, s"${a}_vec", s"${a}_cfg",
+      s"${a}_del",
       q, s"${q}_cfg", s"${q}_del", sq, s"${sq}_cfg", s"${sq}_del",
       p, s"${p}_cb", s"${p}_del", iv, s"${iv}_cent", s"${iv}_del")
     drop(all: _*)
@@ -35,10 +35,10 @@ class FsckSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       val docs = Seq((1L, "spark join window"), (2L, "hash scan merge"),
         (3L, "window window fast")).toDF("doc_id", "text")
-      TextOps.appendBm25Postings(docs, b, s"${b}_stats")
-      // a real delete in the mix: the audit's recompute must agree
-      // with the WAL-adjusted stats over the survivors
-      TextOps.deleteBm25Docs(spark, b, s"${b}_stats",
+      TextOps.appendBm25Postings(docs, b)
+      // a real delete in the mix: the `_docs` rows must still match
+      // the postings over the survivors
+      TextOps.deleteBm25Docs(spark, b,
         Seq(3L).toDF("doc_id"))
       assert(TextOps.bm25Family(b).fsck(spark) === Nil)
 
@@ -63,24 +63,24 @@ class FsckSpec extends AnyFunSuite with SparkSuite {
       } finally drop(bd, s"${bd}_del")
       // a family that does not exist is silently healthy (nothing to
       // audit), not an error
-      assert(TextOps.bm25Family(s"fs_none_p$pid",
-        s"fs_none_p${pid}_stats").fsck(spark) === Nil)
+      assert(TextOps.bm25Family(s"fs_none_p$pid").fsck(spark) === Nil)
     } finally drop(all: _*)
   }
 
   test("BM25: stats drift and a failed supersession are each named") {
     val b = s"fs_bad_bm25_p$pid"
-    drop(b, s"${b}_stats", s"${b}_del")
+    drop(b, s"${b}_docs", s"${b}_del")
     try {
       val sp = spark
       import sp.implicits._
       val docs = Seq((1L, "spark join window"), (2L, "hash scan merge"))
         .toDF("doc_id", "text")
-      TextOps.appendBm25Postings(docs, b, s"${b}_stats")
-      // corrupt the stats row (the crash the reconcile/WAL machinery
-      // exists to prevent — fsck must catch it if it ever lands)
-      Seq((99L, 99L)).toDF("n_docs", "sum_dl")
-        .write.mode("overwrite").saveAsTable(s"${b}_stats")
+      TextOps.appendBm25Postings(docs, b)
+      // corrupt the `_docs` rows the stats derive from (a crash
+      // between the two member writes leaves this — fsck must name it)
+      Seq((1L, 99L, 0L)).toDF("doc_id", "dl", "gen").write
+        .mode("overwrite").bucketBy(8, "doc_id").sortBy("doc_id")
+        .saveAsTable(s"${b}_docs")
       val v1 = TextOps.bm25Family(b).fsck(spark)
       assert(v1.exists(_.contains("stats drift")), v1.toString)
 
@@ -88,10 +88,10 @@ class FsckSpec extends AnyFunSuite with SparkSuite {
       // the supersession invariant every gen family shares
       TextOps.appendBm25Postings(
         Seq((1L, "rewritten content entirely")).toDF("doc_id", "text"),
-        b, s"${b}_stats", gen = 1L)
+        b, gen = 1L)
       val v2 = TextOps.bm25Family(b).fsck(spark)
       assert(v2.exists(_.contains("live generations")), v2.toString)
-    } finally drop(b, s"${b}_stats", s"${b}_del")
+    } finally drop(b, s"${b}_docs", s"${b}_del")
   }
 
   test("ANN: a partial append's band-count violation is named") {

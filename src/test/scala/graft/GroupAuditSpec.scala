@@ -37,14 +37,14 @@ class GroupAuditSpec extends AnyFunSuite with SparkSuite {
     val base = s"ga_doc_p$pid"
     val t = s"${base}_bm25"
     val all = famAll(t) ++
-      Seq(s"${t}_stats", s"${base}_dbakok_bak", s"${base}_hashes_bak_bak")
+      Seq(s"${t}_docs", s"${base}_dbakok_bak", s"${base}_hashes_bak_bak")
     drop(all: _*)
     try {
       val sp = spark
       import sp.implicits._
       TextOps.appendBm25Postings(
         Seq(1L -> "spark join window", 2L -> "hash scan merge")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       StreamingOps.backup(spark, IndexGroup.documents(base))
       assert(StreamingOps.checkBackup(spark,
         IndexGroup.documents(base)) === Nil)
@@ -72,7 +72,7 @@ class GroupAuditSpec extends AnyFunSuite with SparkSuite {
       "staging tree") {
     val base = s"ga_stg_p$pid"
     val t = s"${base}_bm25"
-    val all = famAll(t) ++ Seq(s"${t}_stats", s"${base}_dbakok_bak")
+    val all = famAll(t) ++ Seq(s"${t}_docs", s"${base}_dbakok_bak")
     drop(all: _*)
     val wh = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"))
@@ -83,8 +83,7 @@ class GroupAuditSpec extends AnyFunSuite with SparkSuite {
       val sp = spark
       import sp.implicits._
       TextOps.appendBm25Postings(
-        Seq(1L -> "spark join window").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(1L -> "spark join window").toDF("doc_id", "text"), t)
       StreamingOps.backup(spark, IndexGroup.documents(base))
       // the crashed-backupCk residue: a staging tree under the tag
       fs.mkdirs(staging)

@@ -27,8 +27,8 @@ class HoldSpec extends AnyFunSuite with SparkSuite {
   test("BM25: held doc survives delete+vacuum+re-ingest excluded; " +
       "stats never count it; describe reports the hold") {
     val t = s"hold_bm25_p$pid"
-    val all = Seq(t, s"${t}_stats", s"${t}_del", s"${t}_del_stage",
-      s"${t}_hold", s"${t}_compact", s"${t}_old")
+    val all = Seq(t, s"${t}_docs", s"${t}_del", s"${t}_hold", s"${t}_compact",
+      s"${t}_old")
     drop(all: _*)
     try {
       val sp = spark
@@ -36,39 +36,39 @@ class HoldSpec extends AnyFunSuite with SparkSuite {
       def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
       TextOps.appendBm25Postings(
         docs(1L -> "spark join window", 2L -> "hash scan merge",
-          3L -> "window fast data"), t, s"${t}_stats")
+          3L -> "window fast data"), t)
       // hold + delete doc 2 (hold gates ingest; delete removes the
       // already-stored content)
       TextOps.bm25Family(t).hold(spark, Seq(2L).toDF("doc_id"))
-      TextOps.deleteBm25Docs(spark, t, s"${t}_stats",
+      TextOps.deleteBm25Docs(spark, t,
         Seq(2L).toDF("doc_id"))
       // VACUUM: terminal tombstones fold away — the exact hazard the
       // registry exists for
-      TextOps.vacuumIndex(spark, s"${t}_del", Seq(t), "doc_id")
+      TextOps.vacuumIndex(spark, s"${t}_del",
+        Seq(t, s"${t}_docs"), "doc_id")
       assert(!spark.catalog.tableExists(s"${t}_del"))
       // re-ingest the held id (a re-crawl, a replayed batch...)
       TextOps.appendBm25Postings(
-        docs(2L -> "resurrection attempt", 4L -> "new doc data"),
-        t, s"${t}_stats")
-      val (lp, _) = TextOps.liveBm25(spark, t, s"${t}_stats")
+        docs(2L -> "resurrection attempt", 4L -> "new doc data"), t)
+      val (lp, _) = TextOps.liveBm25(spark, t, "")
       assert(lp.filter(col("doc_id") === 2L).isEmpty,
         "held doc re-entered the index after vacuum")
       assert(!lp.filter(col("doc_id") === 4L).isEmpty)
       // stats equal a never-held-doc build: 1,3,4
       val tw = s"${t}_tw"
-      drop(tw, s"${tw}_stats")
+      drop(tw, s"${tw}_docs")
       TextOps.appendBm25Postings(
         docs(1L -> "spark join window", 3L -> "window fast data",
-          4L -> "new doc data"), tw, s"${tw}_stats")
-      assert(spark.table(s"${t}_stats")
+          4L -> "new doc data"), tw)
+      assert(TextOps.liveBm25(spark, t, "")._2
         .select("n_docs", "sum_dl").collect()(0) ===
-        spark.table(s"${tw}_stats")
+        TextOps.liveBm25(spark, tw, "")._2
           .select("n_docs", "sum_dl").collect()(0))
-      drop(tw, s"${tw}_stats")
+      drop(tw, s"${tw}_docs")
       // upsert cannot smuggle it back either
-      TextOps.upsertBm25Docs(spark, t, s"${t}_stats",
+      TextOps.upsertBm25Docs(spark, t,
         docs(2L -> "second attempt"))
-      val (lp2, _) = TextOps.liveBm25(spark, t, s"${t}_stats")
+      val (lp2, _) = TextOps.liveBm25(spark, t, "")
       assert(lp2.filter(col("doc_id") === 2L).isEmpty)
       // observability
       assert(TextOps.bm25Family(t).describe(spark).holds === 1L)
@@ -192,7 +192,7 @@ class HoldSpec extends AnyFunSuite with SparkSuite {
     val base = s"hold_sdoc_p${pid}"
     val members = Seq(s"${base}_band", s"${base}_band_del",
       s"${base}_band_hold", s"${base}_bm25", s"${base}_bm25_del",
-      s"${base}_bm25_del_stage", s"${base}_bm25_stats",
+      s"${base}_bm25_docs",
       s"${base}_bm25_hold", s"${base}_hashes", s"${base}_ledger",
       s"${base}_ups_ledger")
     val dir = java.nio.file.Files.createTempDirectory("graft_holdsdoc")

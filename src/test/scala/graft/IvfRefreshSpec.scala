@@ -129,11 +129,12 @@ class IvfRefreshSpec extends AnyFunSuite with SparkSuite {
       "graft_ivf_idx_0123456789_p42_cent_compact",
       "graft_ivf_idx_0123456789_p42_cent_old",
       "graft_ivf_idx_0123456789_p42_compact",
-      "graft_bm25_idx_0123456789_p42_stats",
+      // the BM25 `_docs` member and its compaction tmp
+      "graft_bm25_incr_0123456789_p42_docs",
+      "graft_bm25_incr_0123456789_p42_docs_compact",
       // the delete-lifecycle siblings (r13): tombstone lists, the
-      // staged BM25 delete WAL, the group-swap intent marker
+      // group-swap intent marker
       "graft_bm25_incr_0123456789_p42_del",
-      "graft_bm25_incr_0123456789_p42_del_stage",
       "graft_ann_idx_0123456789_p42_del",
       "graft_pq_idx_0123456789_p42_swap").foreach { n =>
       assert(owned.findFirstIn(n).isDefined, n)

@@ -42,16 +42,15 @@ class LifecycleSpec extends AnyFunSuite with SparkSuite {
     val base = s"lc_doc_p$pid"
     val bm25T = s"${base}_bm25"
     val bandT = s"${base}_band"
-    val statsT = s"${base}_bm25_stats"
     val twin = s"lc_twin_p$pid"
-    val all = Seq(bm25T, s"${bm25T}_del", s"${bm25T}_del_stage",
-      s"${bm25T}_del_compact", s"${bm25T}_del_old", s"${bm25T}_compact",
-      s"${bm25T}_old", s"${bm25T}_reconcile", statsT,
+    val all = Seq(bm25T, s"${bm25T}_del", s"${bm25T}_del_compact",
+      s"${bm25T}_del_old", s"${bm25T}_compact", s"${bm25T}_old",
+      s"${bm25T}_docs",
       bandT, s"${bandT}_del", s"${bandT}_del_compact",
       s"${bandT}_del_old", s"${bandT}_compact", s"${bandT}_old",
       s"${base}_hashes", s"${base}_ledger", s"${base}_ups_ledger",
       s"${base}_dels_ledger",
-      twin, s"${twin}_stats", s"${twin}_band")
+      twin, s"${twin}_docs", s"${twin}_band")
     def drop(): Unit = all.foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS $t"))
     drop()
@@ -75,20 +74,21 @@ class LifecycleSpec extends AnyFunSuite with SparkSuite {
       TextOps.bm25ScoreIncr(qt, pt, st).collect()
         .map(r => ((r.getInt(0), r.getLong(1)), r.getDouble(2))).toMap
     def stats(st: String): org.apache.spark.sql.Row =
-      spark.table(st).select("n_docs", "sum_dl").collect()(0)
+      TextOps.liveBm25(spark, st, "")._2
+        .select("n_docs", "sum_dl").collect()(0)
     /** The invariant: live probes and stats equal a from-scratch
       * batch build over `corpus` (rebuilt fresh per call). */
     def assertParity(corpus: DataFrame, leg: String): Unit = {
-      Seq(twin, s"${twin}_stats", s"${twin}_band").foreach(t =>
+      Seq(twin, s"${twin}_docs", s"${twin}_band").foreach(t =>
         spark.sql(s"DROP TABLE IF EXISTS $t"))
-      TextOps.appendBm25Postings(corpus, twin, s"${twin}_stats")
+      TextOps.appendBm25Postings(corpus, twin)
       TextOps.writeBandIndex(corpus, s"${twin}_band")
-      val (lp, ls) = TextOps.liveBm25(spark, bm25T, statsT)
+      val (lp, ls) = TextOps.liveBm25(spark, bm25T, "")
       val got = scores(lp, ls)
       assert(got === scores(spark.table(twin),
-        spark.table(s"${twin}_stats")), s"$leg: bm25 scores")
+        TextOps.liveBm25(spark, twin, "")._2), s"$leg: bm25 scores")
       assert(got.nonEmpty, s"$leg: empty probe")
-      assert(stats(statsT) === stats(s"${twin}_stats"), s"$leg: stats")
+      assert(stats(bm25T) === stats(twin), s"$leg: stats")
       // band parity: probe with the corpus itself under shifted ids —
       // identical text guarantees a hit for every live doc and none
       // for superseded/deleted content

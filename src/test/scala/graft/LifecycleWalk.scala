@@ -25,7 +25,7 @@ object LifecycleWalk {
 
   def famOf(x: String): Seq[String] =
     (x +: TextOps.BackupSiblings.map(x + _)) ++
-      Seq(s"${x}_compact", s"${x}_old", s"${x}_stats")
+      Seq(s"${x}_compact", s"${x}_old", s"${x}_docs")
 
   /** Every table a `steps`-step walk on `t` can mint — the caller's
     * cleanup list (the walk itself never drops on exit: the spec
@@ -35,8 +35,7 @@ object LifecycleWalk {
     val tags = (0 until steps).flatMap(i => Seq(s"s$i", s"b$i"))
     famOf(t) ++ famOf(ref) ++
       tags.flatMap(tg => Seq(s"${t}_mf_$tg", s"${t}_bakok_$tg",
-        s"${t}_bak_$tg", s"${t}_stats_bak_$tg", s"${t}_del_bak_$tg",
-        s"${t}_del_stage_bak_$tg") ++
+        s"${t}_bak_$tg", s"${t}_docs_bak_$tg", s"${t}_del_bak_$tg") ++
         TextOps.SnapshotCopySiblings.map(sf0 => s"$t${sf0}_bak_mf$tg"))
   }
 
@@ -75,11 +74,11 @@ object LifecycleWalk {
       (2, "common")).toDF("q_id", "token")
 
     def liveIds: Set[Long] = {
-      val (p, _) = TextOps.liveBm25(spark, t, s"${t}_stats")
+      val (p, _) = TextOps.liveBm25(spark, t, "")
       p.select("doc_id").distinct().as[Long].collect().toSet
     }
     def scores(tbl: String): Map[(Int, Long), Double] = {
-      val (p, s) = TextOps.liveBm25(spark, tbl, s"${tbl}_stats")
+      val (p, s) = TextOps.liveBm25(spark, tbl, "")
       TextOps.bm25ScoreIncr(qt, p, s).collect()
         .map(r => ((r.getInt(0), r.getLong(1)), r.getDouble(2))).toMap
     }
@@ -97,8 +96,7 @@ object LifecycleWalk {
     def checkScores(): Unit = {
       drop(famOf(ref): _*)
       if (model.nonEmpty) {
-        TextOps.appendBm25Postings(df(model.toSeq), ref,
-          s"${ref}_stats")
+        TextOps.appendBm25Postings(df(model.toSeq), ref)
         sameScores(scores(t), scores(ref), "live-vs-rebuilt")
         drop(famOf(ref): _*)
       }
@@ -117,7 +115,7 @@ object LifecycleWalk {
     // seed corpus
     val seedDocs = (1L to 12L).map { i => i -> text(i, 0) }
     nextId = 13L
-    TextOps.appendBm25Postings(df(seedDocs), t, s"${t}_stats")
+    TextOps.appendBm25Postings(df(seedDocs), t)
     model ++= seedDocs
 
     (0 until steps).foreach { step =>
@@ -128,7 +126,7 @@ object LifecycleWalk {
             val id = nextId; nextId += 1; id -> text(id, 0)
           }
           trace += s"append(${batch.map(_._1).mkString(",")})"
-          TextOps.appendBm25Postings(df(batch), t, s"${t}_stats")
+          TextOps.appendBm25Postings(df(batch), t)
           model ++= batch
         case 1 => // upsert: rewrite some existing + maybe one new
           rev += 1
@@ -139,13 +137,13 @@ object LifecycleWalk {
               Seq(id -> text(id, rev)) } else Nil
           val batch = existing.map(id => id -> text(id, rev)) ++ fresh
           trace += s"upsert(${batch.map(_._1).mkString(",")})"
-          TextOps.upsertBm25Docs(spark, t, s"${t}_stats", df(batch))
+          TextOps.upsertBm25Docs(spark, t, df(batch))
           model ++= batch
         case 2 => // delete some existing (and one never-present id)
           val victims = rng.shuffle(model.keys.toSeq)
             .take(1 + rng.nextInt(3)) :+ (nextId + 1000L)
           trace += s"delete(${victims.mkString(",")})"
-          TextOps.deleteBm25Docs(spark, t, s"${t}_stats",
+          TextOps.deleteBm25Docs(spark, t,
             victims.toDF("doc_id"))
           victims.foreach(model.remove)
         case 3 =>
@@ -153,7 +151,8 @@ object LifecycleWalk {
           TextOps.compactIndex(spark, t, FoldGuard.Anchor)
         case 4 =>
           trace += "vacuum"
-          TextOps.vacuumIndex(spark, s"${t}_del", Seq(t), "doc_id",
+          TextOps.vacuumIndex(spark, s"${t}_del",
+            Seq(t, s"${t}_docs"), "doc_id",
             FoldGuard.Anchor)
         case 5 =>
           val tg = s"s$step"

@@ -182,7 +182,7 @@ class MaintainSpec extends AnyFunSuite with SparkSuite {
   test("ingest hook: the loop maintains its own family as gauges trip") {
     val base = s"mnt_hook_p$pid"
     val bm25T = s"${base}_bm25"
-    val all = Seq(bm25T, s"${bm25T}_stats", s"${bm25T}_del",
+    val all = Seq(bm25T, s"${bm25T}_docs", s"${bm25T}_del",
       s"${bm25T}_del_compact", s"${bm25T}_del_old", s"${base}_band",
       s"${base}_band_del", s"${base}_hashes", s"${base}_ledger")
     drop(all: _*)
@@ -221,7 +221,7 @@ class MaintainSpec extends AnyFunSuite with SparkSuite {
       "snapshot keeps serving") {
     val base = s"mnt_ghook_p$pid"
     val bm25T = s"${base}_bm25"
-    val all = Seq(bm25T, s"${bm25T}_stats", s"${bm25T}_del",
+    val all = Seq(bm25T, s"${bm25T}_docs", s"${bm25T}_del",
       s"${bm25T}_del_compact", s"${bm25T}_del_old", s"${base}_band",
       s"${base}_band_del", s"${base}_ups_ledger",
       s"${bm25T}_mf_snap") ++
@@ -237,7 +237,7 @@ class MaintainSpec extends AnyFunSuite with SparkSuite {
       // delete-file pressure past the hook's threshold
       TextOps.appendBm25Postings(
         Seq((1L, "spark join window"), (2L, "hash scan merge"))
-          .toDF("doc_id", "text"), bm25T, s"${bm25T}_stats")
+          .toDF("doc_id", "text"), bm25T)
       TextOps.writeBandIndex(
         Seq((1L, "spark join window", "en", "s0", 17L),
           (2L, "hash scan merge", "en", "s0", 15L))
@@ -281,7 +281,7 @@ class MaintainSpec extends AnyFunSuite with SparkSuite {
   test("upsert-twin hook: the CDC upsert stream self-maintains too") {
     val base = s"mnt_uhook_p$pid"
     val bm25T = s"${base}_bm25"
-    val all = Seq(bm25T, s"${bm25T}_stats", s"${bm25T}_del",
+    val all = Seq(bm25T, s"${bm25T}_docs", s"${bm25T}_del",
       s"${bm25T}_del_compact", s"${bm25T}_del_old", s"${base}_band",
       s"${base}_band_del", s"${base}_ups_ledger")
     drop(all: _*)
@@ -294,7 +294,7 @@ class MaintainSpec extends AnyFunSuite with SparkSuite {
       // arriving upsert batch's hook must collapse
       TextOps.appendBm25Postings(
         Seq((1L, "spark join window"), (2L, "hash scan merge"))
-          .toDF("doc_id", "text"), bm25T, s"${bm25T}_stats")
+          .toDF("doc_id", "text"), bm25T)
       TextOps.writeBandIndex(
         Seq((1L, "spark join window", "en", "s0", 17L),
           (2L, "hash scan merge", "en", "s0", 15L))
@@ -359,17 +359,17 @@ class MaintainSpec extends AnyFunSuite with SparkSuite {
       assert(BqIndex.family(t).maintain(spark, p) === s2.due(p))
       assert(BqIndex.family(t).describe(spark).healthy(p))
 
-      // the BM25 describe carries the stats row's numeric fields
+      // the BM25 describe carries the stats derived from `_docs`
       val bt = s"mnt_desc_bm25_p$pid"
-      drop(bt, s"${bt}_stats", s"${bt}_del")
+      drop(bt, s"${bt}_docs", s"${bt}_del")
       try {
         TextOps.appendBm25Postings(
           Seq((1L, "spark window join"), (2L, "hash scan"))
-            .toDF("doc_id", "text"), bt, s"${bt}_stats")
+            .toDF("doc_id", "text"), bt)
         val b = TextOps.bm25Family(bt).describe(spark)
         assert(b.stats.get("n_docs").contains(2L))
         assert(b.stats.get("sum_dl").contains(5L))
-      } finally drop(bt, s"${bt}_stats", s"${bt}_del")
+      } finally drop(bt, s"${bt}_docs", s"${bt}_del")
     } finally drop(all: _*)
   }
 }

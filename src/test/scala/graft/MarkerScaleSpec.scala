@@ -23,7 +23,7 @@ class MarkerScaleSpec extends AnyFunSuite with SparkSuite {
 
   private def famAll(t: String): Seq[String] =
     (t +: TextOps.BackupSiblings.map(t + _)) ++
-      Seq(s"${t}_stats") ++
+      Seq(s"${t}_docs") ++
       Seq("b1", "b2").flatMap(tg =>
         (t +: TextOps.BackupSiblings.map(t + _))
           .map(m => s"${m}_bak_$tg") :+ s"${t}_bakok_$tg")
@@ -36,7 +36,7 @@ class MarkerScaleSpec extends AnyFunSuite with SparkSuite {
       TextOps.appendBm25Postings(
         (1L to 8L).map(i => (b * 100 + i).toLong ->
           s"spark shuffle join token$i batch$b data")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
     }
   }
 
@@ -52,8 +52,7 @@ class MarkerScaleSpec extends AnyFunSuite with SparkSuite {
       TextOps.backupIndex(spark, t, "b1")
       // grow, then a differential on b1 so borrow rows exist
       TextOps.appendBm25Postings(
-        Seq(900L -> "fresh delta content words").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(900L -> "fresh delta content words").toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t, "b2", Some("b1"))
 
       // healthy
@@ -102,8 +101,7 @@ class MarkerScaleSpec extends AnyFunSuite with SparkSuite {
       mkFam(t)
       TextOps.backupIndex(spark, t, "b1")
       TextOps.appendBm25Postings(
-        Seq(902L -> "deep delta content words").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(902L -> "deep delta content words").toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t, "b2", Some("b1"))
       def deep(): Seq[String] =
         TextOps.checkBackup(spark, t, "b2", deep = true)
@@ -165,8 +163,7 @@ class MarkerScaleSpec extends AnyFunSuite with SparkSuite {
       mkFam(t)
       TextOps.backupIndex(spark, t, "b1")
       TextOps.appendBm25Postings(
-        Seq(901L -> "delta two content words").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(901L -> "delta two content words").toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t, "b2", Some("b1"))
       // ground truth from the row-level read
       def truth(tag: String): Seq[(String, Long, Long)] =

@@ -209,7 +209,8 @@ class ProbeRetrySpec extends AnyFunSuite with SparkSuite {
         assert(out.count() > 0)
         out.queryExecution.analyzed match {
           case lr: org.apache.spark.sql.execution.LogicalRDD =>
-            lr.rdd.unpersist(true)
+            org.apache.spark.sql.graftbridge.GraftDatasetBridge
+              .unpersistRDD(lr.rdd)
           case other => fail(
             s"expected the materialized LogicalRDD, got $other")
         }

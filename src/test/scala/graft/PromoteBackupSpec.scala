@@ -27,8 +27,8 @@ class PromoteBackupSpec extends AnyFunSuite with SparkSuite {
     (t +: TextOps.BackupSiblings.map(t + _)).flatMap(m =>
       Seq(m, s"${m}_bak_base", s"${m}_bak_d1", s"${m}_bak_d2")) ++
       Seq(s"${t}_bakok_base", s"${t}_bakok_d1", s"${t}_bakok_d2",
-        s"${t}_stats", s"${t}_stats_bak_base", s"${t}_stats_bak_d1",
-        s"${t}_stats_bak_d2")
+        s"${t}_docs", s"${t}_docs_bak_base", s"${t}_docs_bak_d1",
+        s"${t}_docs_bak_d2")
 
   private def postings(t: String): Seq[(Long, String, Long)] =
     spark.table(t).selectExpr("doc_id", "token", "tf").collect()
@@ -50,15 +50,15 @@ class PromoteBackupSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       TextOps.appendBm25Postings(
         (1L to 30L).map(i => i -> s"spark shuffle join token$i data")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t, "base")
       TextOps.appendBm25Postings(
         (31L to 33L).map(i => i -> s"spark shuffle join token$i data")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t, "d1", baseTag = Some("base"))
       TextOps.appendBm25Postings(
         (34L to 35L).map(i => i -> s"spark shuffle join token$i data")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t, "d2", baseTag = Some("d1"))
       val asOfD2 = postings(t)
       assert(srcs(s"${t}_bakok_d2") === Seq("base", "d1"))
@@ -87,8 +87,7 @@ class PromoteBackupSpec extends AnyFunSuite with SparkSuite {
       assert(TextOps.listBackups(spark, t) === Seq("d2"))
       // promoted tag restores bit-exact with every base gone
       TextOps.appendBm25Postings(
-        Seq(99L -> "post promote mutation").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(99L -> "post promote mutation").toDF("doc_id", "text"), t)
       assert(postings(t) !== asOfD2)
       TextOps.restoreIndex(spark, t, "d2")
       assert(postings(t) === asOfD2)
@@ -108,11 +107,10 @@ class PromoteBackupSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       TextOps.appendBm25Postings(
         (1L to 20L).map(i => i -> s"spark shuffle token$i")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t, "base")
       TextOps.appendBm25Postings(
-        Seq(21L -> "window append").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(21L -> "window append").toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t, "d1", baseTag = Some("base"))
       val asOfD1 = postings(t)
       // simulate the crash: phase-2 copied ONE borrowed file into the
@@ -131,8 +129,7 @@ class PromoteBackupSpec extends AnyFunSuite with SparkSuite {
       // it still restores (marker still names d1 a dependent, so the
       // base is still protected — conservative and correct)
       TextOps.appendBm25Postings(
-        Seq(99L -> "mutation").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(99L -> "mutation").toDF("doc_id", "text"), t)
       TextOps.restoreIndex(spark, t, "d1")
       assert(postings(t) === asOfD1)
       assert(TextOps.dependentBackups(spark, t, "base") === Seq("d1"))
@@ -179,10 +176,10 @@ class PromoteBackupSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       TextOps.appendBm25Postings(
         (1L to 15L).map(i => i -> s"spark token$i")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t, "base")
       TextOps.appendBm25Postings(
-        Seq(16L -> "window").toDF("doc_id", "text"), t, s"${t}_stats")
+        Seq(16L -> "window").toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t, "d1", baseTag = Some("base"))
       // lose a borrowed file from the base copy BEFORE any promote
       val loc = TextOps.tableLocation(spark, s"${t}_bak_base")
@@ -214,14 +211,14 @@ class PromoteBackupSpec extends AnyFunSuite with SparkSuite {
       .flatMap(m => Seq(m, s"${m}_bak_b0", s"${m}_bak_d1")) ++
       fams.flatMap(f => Seq(s"${f}_bakok_b0", s"${f}_bakok_d1")) ++
       Seq(s"${base}_dbakok_b0", s"${base}_dbakok_d1",
-        s"${bm25T}_stats", s"${base}_hashes")).distinct
+        s"${bm25T}_docs", s"${base}_hashes")).distinct
     drop(tables: _*)
     try {
       val sp = spark
       import sp.implicits._
       TextOps.appendBm25Postings(
         (1L to 20L).map(i => i -> s"spark shuffle join token$i data")
-          .toDF("doc_id", "text"), bm25T, s"${bm25T}_stats")
+          .toDF("doc_id", "text"), bm25T)
       TextOps.writeBandIndex(
         (1L to 20L).map(i =>
           (i, s"spark shuffle join token$i data", "en", "s0", 25L))
@@ -230,7 +227,7 @@ class PromoteBackupSpec extends AnyFunSuite with SparkSuite {
       StreamingOps.backup(spark, IndexGroup.documents(base), "b0")
       TextOps.appendBm25Postings(
         (21L to 22L).map(i => i -> s"spark shuffle join token$i data")
-          .toDF("doc_id", "text"), bm25T, s"${bm25T}_stats")
+          .toDF("doc_id", "text"), bm25T)
       StreamingOps.backup(spark, IndexGroup.documents(base), "d1",
         baseTag = Some("b0"))
       val asOfD1 = postings(bm25T)
@@ -254,8 +251,7 @@ class PromoteBackupSpec extends AnyFunSuite with SparkSuite {
         Seq("d1"))
       // the promoted group restores with its base gone
       TextOps.appendBm25Postings(
-        Seq(99L -> "post mutation").toDF("doc_id", "text"),
-        bm25T, s"${bm25T}_stats")
+        Seq(99L -> "post mutation").toDF("doc_id", "text"), bm25T)
       StreamingOps.restore(spark, IndexGroup.documents(base), "d1")
       assert(postings(bm25T) === asOfD1)
     } finally drop(tables: _*)

@@ -50,14 +50,13 @@ class RemediationScaleSpec extends AnyFunSuite with SparkSuite {
       val base = s"remsc_${label.replace(".", "")}_p$pid"
       val all = Seq(s"${base}_band", s"${base}_band_del",
         s"${base}_bm25", s"${base}_bm25_del",
-        s"${base}_bm25_del_stage", s"${base}_bm25_stats",
+        s"${base}_bm25_docs",
         s"${base}_hashes", s"${base}_quarantine", s"${base}_admission")
       all.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       try {
         val docs = Tables(spark, dir, "documents")
         val (_, buildS) = timed {
-          TextOps.appendBm25Postings(docs, s"${base}_bm25",
-            s"${base}_bm25_stats")
+          TextOps.appendBm25Postings(docs, s"${base}_bm25")
           TextOps.appendBandIndex(docs, s"${base}_band")
           TextOps.clearOrphanLocation(spark, s"${base}_hashes")
           docs.select(md5(col("text")).as("content_hash"),
@@ -85,8 +84,7 @@ class RemediationScaleSpec extends AnyFunSuite with SparkSuite {
         val healed = summary.map(_.getLong(2)).sum
         assert(healed === 600L, s"$label healed $healed")
         assert(spark.table(s"${base}_quarantine").count() === 0L)
-        val (p, st) = TextOps.liveBm25(spark, s"${base}_bm25",
-          s"${base}_bm25_stats")
+        val (p, st) = TextOps.liveBm25(spark, s"${base}_bm25", "")
         val hits = TextOps.bm25ScoreIncr(
           Seq((1, "healme")).toDF("q_id", "token"), p, st).count()
         assert(hits === 600L, s"$label probe hits $hits")

@@ -26,8 +26,8 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
 
   private def famTables(base: String): Seq[String] = Seq(
     s"${base}_band", s"${base}_band_del", s"${base}_band_hold",
-    s"${base}_bm25", s"${base}_bm25_del", s"${base}_bm25_del_stage",
-    s"${base}_bm25_hold", s"${base}_bm25_stats", s"${base}_hashes",
+    s"${base}_bm25", s"${base}_bm25_del", s"${base}_bm25_hold",
+    s"${base}_bm25_docs", s"${base}_hashes",
     s"${base}_ledger", s"${base}_quarantine", s"${base}_admission",
     s"${base}_ups_ledger", s"${base}_ups_quarantine",
     s"${base}_ups_admission")
@@ -132,7 +132,7 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
       assert(indexed.contains(11L) && indexed.contains(12L))
       assert(!indexed.contains(31L) && !indexed.contains(21L))
       val (p, st) = graft.operators.TextOps.liveBm25(spark,
-        s"${base}_bm25", s"${base}_bm25_stats")
+        s"${base}_bm25", "")
       val hits = graft.operators.TextOps.bm25ScoreIncr(
         Seq((1, "eleven")).toDF("q_id", "token"), p, st)
         .select("doc_id").as[Long].collect().toSet
@@ -209,7 +209,7 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
 
       // the LATEST rewrite serves; the superseded one never indexed
       val (p, st) = graft.operators.TextOps.liveBm25(spark,
-        s"${base}_bm25", s"${base}_bm25_stats")
+        s"${base}_bm25", "")
       def hits(tok: String): Set[Long] =
         graft.operators.TextOps.bm25ScoreIncr(
           Seq((1, tok)).toDF("q_id", "token"), p, st)
@@ -327,7 +327,7 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
         .select("doc_id").as[Long].collect().toSet
       assert(q === Set(2L))
       val (p, st) = graft.operators.TextOps.liveBm25(spark,
-        s"${base}_bm25", s"${base}_bm25_stats")
+        s"${base}_bm25", "")
       val hits = graft.operators.TextOps.bm25ScoreIncr(
         Seq((1, "rewrite")).toDF("q_id", "token"), p, st)
         .select("doc_id").as[Long].collect().toSet
@@ -442,7 +442,7 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
       // the INDEX serves v2's content — the latest delivered version
       // healed, not the scoped batch's stale v1
       val (p, st) = graft.operators.TextOps.liveBm25(spark,
-        s"${base}_bm25", s"${base}_bm25_stats")
+        s"${base}_bm25", "")
       val qt = Seq((1, "tokennewword"), (2, "tokenoldword"))
         .toDF("q_id", "token")
       val hits = graft.operators.TextOps.bm25ScoreIncr(qt, p, st)
@@ -533,8 +533,7 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
       assert(spark.table(s"${base}_quarantine")
         .select("doc_id").as[Long].collect().toSet === Set(21L))
       def postingsOf(id: Long): Long =
-        graft.operators.TextOps.liveBm25(spark, s"${base}_bm25",
-          s"${base}_bm25_stats")._1
+        graft.operators.TextOps.liveBm25(spark, s"${base}_bm25", "")._1
           .where(col("doc_id") === id).count()
       val healedPostings = postingsOf(11L)
       assert(healedPostings > 0L)
@@ -623,7 +622,7 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
         (11L, enText("fixable eleven"), "en", "crawl", 150L))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
       graft.operators.TextOps.upsertBm25Docs(spark, s"${base}_bm25",
-        s"${base}_bm25_stats", healedByCrashedRun)
+        healedByCrashedRun)
       graft.operators.TextOps.upsertBandDocs(spark, s"${base}_band",
         healedByCrashedRun)
       assert(spark.table(s"${base}_quarantine")
@@ -641,7 +640,7 @@ class RemediationSpec extends AnyFunSuite with SparkSuite {
 
       // ONE served copy: no token of doc 11 carries duplicate postings
       val (p, st) = graft.operators.TextOps.liveBm25(spark,
-        s"${base}_bm25", s"${base}_bm25_stats")
+        s"${base}_bm25", "")
       val dup = p.where(col("doc_id") === 11L)
         .groupBy("token").count().where(col("count") > 1).count()
       assert(dup === 0L, "a healed doc is serving duplicate postings")

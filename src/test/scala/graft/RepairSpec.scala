@@ -32,24 +32,27 @@ class RepairSpec extends AnyFunSuite with SparkSuite {
 
   test("BM25: stats drift heals in one repair() call") {
     val t = s"rp_bm25_p$pid"
-    val all = Seq(t, s"${t}_stats", s"${t}_del", s"${t}_del_stage")
+    val all = Seq(t, s"${t}_docs", s"${t}_del")
     drop(all: _*)
     try {
       val sp = spark
       import sp.implicits._
       TextOps.appendBm25Postings(docsDf(Seq(
         1L -> "spark join window", 2L -> "hash scan merge",
-        3L -> "window fast data")), t, s"${t}_stats")
-      val good = spark.table(s"${t}_stats")
+        3L -> "window fast data")), t)
+      val good = TextOps.liveBm25(spark, t, "")._2
         .select("n_docs", "sum_dl").collect()(0)
-      // inject drift: the stored stats lie
-      Seq((99L, 9999L)).toDF("n_docs", "sum_dl")
-        .write.mode("overwrite").saveAsTable(s"${t}_stats")
+      // inject drift: the `_docs` rows the stats derive from lie
+      Seq((2L, 9999L, 0L)).toDF("doc_id", "dl", "gen").write
+        .mode("overwrite").bucketBy(8, "doc_id").sortBy("doc_id")
+        .saveAsTable(s"${t}_docs")
+      assert(TextOps.liveBm25(spark, t, "")._2
+        .select("n_docs", "sum_dl").collect()(0) !== good)
       assert(TextOps.bm25Family(t).fsck(spark).nonEmpty)
       val fixed = TextOps.bm25Family(t).repair(spark)
       assert(fixed.exists(_.contains("stats")), fixed.toString)
       assert(TextOps.bm25Family(t).fsck(spark) === Nil)
-      assert(spark.table(s"${t}_stats")
+      assert(TextOps.liveBm25(spark, t, "")._2
         .select("n_docs", "sum_dl").collect()(0) === good)
       // idempotent: the healed family is a clean no-op
       assert(TextOps.bm25Family(t).repair(spark) === Nil)
@@ -60,18 +63,17 @@ class RepairSpec extends AnyFunSuite with SparkSuite {
       "repair() — newest content survives, stats recomputed") {
     val t = s"rp_bm25g_p$pid"
     val t2 = s"rp_bm25g_twin_p$pid"
-    val all = Seq(t, s"${t}_stats", s"${t}_del", s"${t}_del_stage",
-      t2, s"${t2}_stats")
+    val all = Seq(t, s"${t}_docs", s"${t}_del", t2, s"${t2}_docs")
     drop(all: _*)
     try {
       val v1 = docsDf(Seq(1L -> "spark join window",
         2L -> "hash scan merge", 3L -> "window fast data"))
       val newer = docsDf(Seq(2L -> "stream order customer"))
-      TextOps.appendBm25Postings(v1, t, s"${t}_stats")
+      TextOps.appendBm25Postings(v1, t)
       // inject the lost-barrier state: doc 2's replacement rows landed
       // at gen 2 but the barrier entry never committed — TWO live
       // generations, and the stats double-count the doc
-      TextOps.appendBm25Postings(newer, t, s"${t}_stats", gen = 2L)
+      TextOps.appendBm25Postings(newer, t, gen = 2L)
       val v = TextOps.bm25Family(t).fsck(spark)
       assert(v.exists(_.contains("live generations")), v.toString)
       val fixed = TextOps.bm25Family(t).repair(spark)
@@ -80,7 +82,7 @@ class RepairSpec extends AnyFunSuite with SparkSuite {
       // the repaired family equals a from-scratch build over the
       // FINAL content (v1 with doc 2 replaced) — scores AND stats
       val fin = v1.filter(col("doc_id") =!= 2L).unionByName(newer)
-      TextOps.appendBm25Postings(fin, t2, s"${t2}_stats")
+      TextOps.appendBm25Postings(fin, t2)
       val sp = spark
       import sp.implicits._
       val qt = Seq((1, "window"), (1, "spark"), (2, "stream"))
@@ -88,13 +90,13 @@ class RepairSpec extends AnyFunSuite with SparkSuite {
       def scores(pt: DataFrame, st: DataFrame) =
         TextOps.bm25ScoreIncr(qt, pt, st).collect()
           .map(r => ((r.getInt(0), r.getLong(1)), r.getDouble(2))).toMap
-      val (lp, ls) = TextOps.liveBm25(spark, t, s"${t}_stats")
-      val want = scores(spark.table(t2), spark.table(s"${t2}_stats"))
+      val (lp, ls) = TextOps.liveBm25(spark, t, "")
+      val want = scores(spark.table(t2), TextOps.liveBm25(spark, t2, "")._2)
       assert(scores(lp, ls) === want)
       assert(want.nonEmpty)
-      assert(spark.table(s"${t}_stats")
+      assert(TextOps.liveBm25(spark, t, "")._2
         .select("n_docs", "sum_dl").collect()(0) ===
-        spark.table(s"${t2}_stats")
+        TextOps.liveBm25(spark, t2, "")._2
           .select("n_docs", "sum_dl").collect()(0))
       assert(TextOps.bm25Family(t).repair(spark) === Nil)
     } finally drop(all: _*)
@@ -225,12 +227,12 @@ class RepairSpec extends AnyFunSuite with SparkSuite {
         Some("_cent")),
       ("bq", BqIndex.write(emb, _), BqIndex.family, Some("_cfg")),
       ("sq", SqIndex.write(emb, _), SqIndex.family, Some("_cfg")),
-      ("bm25", t => TextOps.appendBm25Postings(docs, t, s"${t}_stats"),
+      ("bm25", t => TextOps.appendBm25Postings(docs, t),
         TextOps.bm25Family, None),
       ("band", TextOps.writeBandIndex(docs, _), TextOps.bandFamily, None))
     cases.foreach { case (kind, build, family, sidecar) =>
       val t = s"rp_ref_${kind}_p$pid"
-      val all = t +: Seq("_vec", "_cfg", "_cb", "_cent", "_stats", "_del")
+      val all = t +: Seq("_vec", "_cfg", "_cb", "_cent", "_docs", "_del")
         .map(t + _)
       drop(all: _*)
       try {

@@ -42,22 +42,22 @@ class RestoreAsSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       TextOps.appendBm25Postings(
         (1L to 40L).map(i => i -> s"spark shuffle join token$i data")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t, "base")
       TextOps.appendBm25Postings(
         (41L to 44L).map(i => i -> s"spark shuffle join token$i data")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t, "d1", baseTag = Some("base"))
       val asOfD1 = postings(t)
       // live moves on past the backup — the drill must not see it
       TextOps.appendBm25Postings(
         Seq(45L -> "spark fresh post-backup doc")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       val liveNow = postings(t)
 
       val out = TextOps.restoreIndexAs(spark, t, "d1", d)
       assert(out.exists(_ == s"restored $d"), out.toString)
-      assert(out.exists(_ == s"restored ${d}_stats"), out.toString)
+      assert(out.exists(_ == s"restored ${d}_docs"), out.toString)
       // bit-exact across the chain: d1's own copy holds only the
       // append window; the base tag's copy served the borrowed bytes
       assert(postings(d) === asOfD1,
@@ -70,7 +70,7 @@ class RestoreAsSpec extends AnyFunSuite with SparkSuite {
       // the scratch family SERVES — the bucketed probe path, not the
       // as-of plain-scan path
       val qt = Seq((1, "spark")).toDF("q_id", "token")
-      val (p, st) = TextOps.liveBm25(spark, d, s"${d}_stats")
+      val (p, st) = TextOps.liveBm25(spark, d, "")
       assert(TextOps.bm25ScoreIncr(qt, p, st).collect().nonEmpty)
 
       // a drill never clobbers: the target family now exists
@@ -100,16 +100,15 @@ class RestoreAsSpec extends AnyFunSuite with SparkSuite {
     val all = (fams.map(base + _) ++ fams.map(dr + _)).flatMap(f =>
       (f +: TextOps.BackupSiblings.map(f + _)).flatMap(m =>
         Seq(m, s"${m}_bak_b0")) ++ Seq(s"${f}_bakok_b0")) ++
-      Seq(s"${base}_dbakok_b0", s"${base}_bm25_stats",
-        s"${dr}_bm25_stats", s"${base}_hashes", s"${dr}_hashes")
+      Seq(s"${base}_dbakok_b0", s"${base}_bm25_docs",
+        s"${dr}_bm25_docs", s"${base}_hashes", s"${dr}_hashes")
     drop(all.distinct: _*)
     try {
       val sp = spark
       import sp.implicits._
       TextOps.appendBm25Postings(
         (1L to 30L).map(i => i -> s"spark shuffle join token$i data")
-          .toDF("doc_id", "text"), s"${base}_bm25",
-        s"${base}_bm25_stats")
+          .toDF("doc_id", "text"), s"${base}_bm25")
       TextOps.writeBandIndex(
         (1L to 30L).map(i => (i, s"spark shuffle join token$i data"))
           .toDF("doc_id", "text"), s"${base}_band")
@@ -122,8 +121,7 @@ class RestoreAsSpec extends AnyFunSuite with SparkSuite {
       // live moves past the group backup
       TextOps.appendBm25Postings(
         Seq(31L -> "spark fresh post-backup doc")
-          .toDF("doc_id", "text"), s"${base}_bm25",
-        s"${base}_bm25_stats")
+          .toDF("doc_id", "text"), s"${base}_bm25")
 
       val out = streaming.StreamingOps.restoreAs(spark,
         streaming.IndexGroup.documents(base), "b0", dr)

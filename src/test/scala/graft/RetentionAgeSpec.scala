@@ -29,14 +29,14 @@ class RetentionAgeSpec extends AnyFunSuite with SparkSuite {
       Seq("base", "d1", "f2").map(g => s"${t}_bakok_$g") ++
       Seq("s1", "s2").map(g => s"${t}_mf_$g") ++
       TextOps.SnapshotCopySiblings.flatMap(sf =>
-        Seq(s"$t${sf}_bak_mfs1", s"$t${sf}_bak_mfs2")) :+ s"${t}_stats"
+        Seq(s"$t${sf}_bak_mfs1", s"$t${sf}_bak_mfs2")) :+ s"${t}_docs"
 
   private def mk(t: String, ids: Seq[Long]): Unit = {
     val sp = spark
     import sp.implicits._
     TextOps.appendBm25Postings(
       ids.map(i => i -> s"spark shuffle join token$i")
-        .toDF("doc_id", "text"), t, s"${t}_stats")
+        .toDF("doc_id", "text"), t)
   }
 
   test("Retention refuses bad bounds when built; KeepNewest keeps the " +
@@ -117,7 +117,7 @@ class RetentionAgeSpec extends AnyFunSuite with SparkSuite {
     val t = s"${base}_bm25"
     val all = famAll(t) ++
       Seq("a", "b").flatMap(g => Seq(s"${base}_dbakok_$g",
-        s"${t}_bak_$g", s"${t}_stats_bak_$g", s"${t}_bakok_$g")) ++
+        s"${t}_bak_$g", s"${t}_docs_bak_$g", s"${t}_bakok_$g")) ++
       Seq(s"${base}_mf_s1", s"${base}_mf_s2")
     drop(all: _*)
     try {

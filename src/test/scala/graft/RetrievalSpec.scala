@@ -293,20 +293,20 @@ class RetrievalSpec extends AnyFunSuite with SparkSuite {
       4L -> "customer order data stream data")
     val dir = stage(docs)
     val pid = ProcessHandle.current().pid()
-    val (table, statsTable) =
-      (s"bm25_ingest_spec_p$pid", s"bm25_ingest_spec_p${pid}_stats")
+    val table = s"bm25_ingest_spec_p$pid"
     val ledger = table + "_ledger"
-    Seq(table, statsTable, ledger)
+    Seq(table, s"${table}_docs", ledger)
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     try {
-      streaming.StreamingOps.streamingBm25Ingest(spark, dir, table, statsTable)
+      streaming.StreamingOps.streamingBm25Ingest(spark, dir, table)
       val sp = spark
       import sp.implicits._
       val qt = graft.operators.TextOps.Bm25Queries.toDF("q_id", "qtext")
         .select($"q_id", org.apache.spark.sql.functions.explode(
           org.apache.spark.sql.functions.split($"qtext", " ")).as("token"))
       def scored() = graft.operators.TextOps
-        .bm25ScoreIncr(qt, spark.table(table), spark.table(statsTable))
+        .bm25ScoreIncr(qt, spark.table(table),
+          graft.operators.TextOps.liveBm25(spark, table, "")._2)
         .collect().map(r => ((r.getInt(0), r.getLong(1)), r.getDouble(2)))
         .toMap
       val batch = SparkEntry.queries("q_bm25")(spark, dir).collect()
@@ -317,7 +317,7 @@ class RetrievalSpec extends AnyFunSuite with SparkSuite {
       // checkpoint's file log remembers them) — nothing re-appends,
       // scores stay bit-identical. The ledger still guards genuine
       // at-least-once REDELIVERY within a run.
-      streaming.StreamingOps.streamingBm25Ingest(spark, dir, table, statsTable)
+      streaming.StreamingOps.streamingBm25Ingest(spark, dir, table)
       assert(scored() === batch, "re-run over unchanged data corrupted the index")
       // NEW DATA (the ADVICE r11 silent-loss case): documents appended
       // after the first invocation must be INGESTED by the next one —
@@ -330,7 +330,7 @@ class RetrievalSpec extends AnyFunSuite with SparkSuite {
       more.map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("append").parquet(s"$dir/documents.parquet")
-      streaming.StreamingOps.streamingBm25Ingest(spark, dir, table, statsTable)
+      streaming.StreamingOps.streamingBm25Ingest(spark, dir, table)
       val refTable = table + "_fullref"
       spark.sql(s"DROP TABLE IF EXISTS $refTable")
       try {
@@ -344,7 +344,7 @@ class RetrievalSpec extends AnyFunSuite with SparkSuite {
         assert(scored() !== batch, "new docs should have changed scores")
       } finally spark.sql(s"DROP TABLE IF EXISTS $refTable")
     } finally {
-      Seq(table, statsTable, ledger)
+      Seq(table, s"${table}_docs", ledger)
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       val ck = new org.apache.hadoop.fs.Path(
         spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase + "_ck")

@@ -40,11 +40,11 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
       def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
       TextOps.appendBm25Postings(
         docs(1L -> "spark join window", 2L -> "hash scan merge",
-          3L -> "window fast data"), t, s"${t}_stats")
+          3L -> "window fast data"), t)
       val qt = Seq((1, "window"), (1, "spark"), (2, "data"),
         (2, "hash")).toDF("q_id", "token")
       def scores(): Map[(Int, Long), Double] = {
-        val (p, st) = TextOps.liveBm25(spark, t, s"${t}_stats")
+        val (p, st) = TextOps.liveBm25(spark, t, "")
         TextOps.bm25ScoreIncr(qt, p, st).collect()
           .map(r => ((r.getInt(0), r.getLong(1)), r.getDouble(2))).toMap
       }
@@ -53,18 +53,19 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
       assert(written.exists(_.startsWith(s"manifest ${t}_mf_snap")),
         written.toString)
       // the payload members must NOT have been copied — that's the
-      // whole point; only the tiny metadata members ride as copies
+      // whole point; BM25's `_docs` member is manifested with them
       assert(!spark.catalog.tableExists(s"${t}_bak_mfsnap") &&
-        !spark.catalog.tableExists(s"${t}_bak_snap"))
-      assert(spark.catalog.tableExists(s"${t}_stats_bak_mfsnap"))
+        !spark.catalog.tableExists(s"${t}_bak_snap") &&
+        !spark.catalog.tableExists(s"${t}_docs_bak_mfsnap"))
+      assert(TextOps.readManifest(spark, s"${t}_mf_snap")
+        .contains(s"${t}_docs"))
 
       // an append-dominated window: append, upsert, terminal delete —
       // all of it part-file growth on the manifest members
-      TextOps.appendBm25Postings(docs(9L -> "brand new doc"), t,
-        s"${t}_stats")
-      TextOps.upsertBm25Docs(spark, t, s"${t}_stats",
+      TextOps.appendBm25Postings(docs(9L -> "brand new doc"), t)
+      TextOps.upsertBm25Docs(spark, t,
         docs(1L -> "totally different content now"))
-      TextOps.deleteBm25Docs(spark, t, s"${t}_stats",
+      TextOps.deleteBm25Docs(spark, t,
         Seq(2L).toDF("doc_id"))
       assert(scores() !== snap)
 
@@ -133,7 +134,7 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
       val qt = Seq((1, "window"), (1, "alpha"), (2, "merge"),
         (2, "round4")).toDF("q_id", "token")
       def scores(): Map[(Int, Long), Double] = {
-        val (p, st) = TextOps.liveBm25(spark, t, s"${t}_stats")
+        val (p, st) = TextOps.liveBm25(spark, t, "")
         TextOps.bm25ScoreIncr(qt, p, st).collect()
           .map(r => ((r.getInt(0), r.getLong(1)), r.getDouble(2))).toMap
       }
@@ -144,12 +145,11 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
       (1 to 6).foreach { r =>
         r % 3 match {
           case 1 => TextOps.appendBm25Postings(
-            docs((r * 10).toLong -> s"alpha window round$r merge"),
-            t, s"${t}_stats")
-          case 2 => TextOps.upsertBm25Docs(spark, t, s"${t}_stats",
+            docs((r * 10).toLong -> s"alpha window round$r merge"), t)
+          case 2 => TextOps.upsertBm25Docs(spark, t,
             docs(((r - 1) * 10).toLong ->
               s"rewritten in round$r alpha"))
-          case 0 => TextOps.deleteBm25Docs(spark, t, s"${t}_stats",
+          case 0 => TextOps.deleteBm25Docs(spark, t,
             Seq(((r - 2) * 10).toLong).toDF("doc_id"))
         }
         TextOps.snapshotIndex(spark, t, tag = s"t$r")
@@ -182,15 +182,13 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
       assert(TextOps.checkSnapshot(spark, t) ===
         Seq(s"no manifest ${t}_mf_snap"))
       TextOps.appendBm25Postings(
-        Seq(1L -> "spark join window").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(1L -> "spark join window").toDF("doc_id", "text"), t)
       TextOps.snapshotIndex(spark, t)
       assert(TextOps.checkSnapshot(spark, t).isEmpty,
         "a fresh snapshot must check clean")
       // appends keep it restorable...
       TextOps.appendBm25Postings(
-        Seq(2L -> "hash scan merge").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(2L -> "hash scan merge").toDF("doc_id", "text"), t)
       assert(TextOps.checkSnapshot(spark, t).isEmpty)
       // ...a fold does not — and the check says so WITHOUT mutating
       // (Orphan: the fold-time guard is FoldGuardSpec's subject; this
@@ -209,20 +207,17 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
       "drops manifest + meta copies, listBackups lists copy tags") {
     val t = s"snap_list_p$pid"
     val all = famAll(t) ++ Seq(s"${t}_mf_a", s"${t}_mf_b",
-      s"${t}_stats_bak_mfa", s"${t}_stats_bak_mfb",
-      s"${t}_bak_bak", s"${t}_stats_bak_bak")
+      s"${t}_bak_bak", s"${t}_docs_bak_bak")
     drop(all: _*)
     try {
       val sp = spark
       import sp.implicits._
       TextOps.appendBm25Postings(
-        Seq(1L -> "spark join window").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(1L -> "spark join window").toDF("doc_id", "text"), t)
       TextOps.snapshotIndex(spark, t, tag = "a")
       Thread.sleep(50) // mtime separates the tags
       TextOps.appendBm25Postings(
-        Seq(2L -> "hash scan merge").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(2L -> "hash scan merge").toDF("doc_id", "text"), t)
       TextOps.snapshotIndex(spark, t, tag = "b")
       assert(TextOps.listSnapshots(spark, t).map(_._1) === Seq("b", "a"))
       TextOps.backupIndex(spark, t)
@@ -231,14 +226,12 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
       val pruned = TextOps.pruneSnapshots(spark, t,
         TextOps.Retention.KeepNewest(1))
       assert(pruned === Seq("dropped snapshot a"), pruned.toString)
-      assert(!spark.catalog.tableExists(s"${t}_mf_a") &&
-        !spark.catalog.tableExists(s"${t}_stats_bak_mfa"))
+      assert(!spark.catalog.tableExists(s"${t}_mf_a"))
       // the kept snapshot still restores
       TextOps.appendBm25Postings(
-        Seq(9L -> "post snapshot doc").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(9L -> "post snapshot doc").toDF("doc_id", "text"), t)
       TextOps.restoreSnapshot(spark, t, tag = "b")
-      val (p, _) = TextOps.liveBm25(spark, t, s"${t}_stats")
+      val (p, _) = TextOps.liveBm25(spark, t, "")
       assert(p.select("doc_id").distinct().collect()
         .map(_.getLong(0)).toSet === Set(1L, 2L))
     } finally drop(all: _*)
@@ -254,15 +247,13 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       TextOps.appendBm25Postings(
         Seq(1L -> "spark join window", 2L -> "hash scan merge")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       val snapRows = spark.table(t).collect().map(_.toString).sorted
       TextOps.snapshotIndex(spark, t)
       TextOps.appendBm25Postings(
-        Seq(8L -> "first post snapshot doc").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(8L -> "first post snapshot doc").toDF("doc_id", "text"), t)
       TextOps.appendBm25Postings(
-        Seq(9L -> "second post snapshot doc").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(9L -> "second post snapshot doc").toDF("doc_id", "text"), t)
       // simulate the crash: a restore that died after deleting SOME
       // extras — by hand-deleting one post-snapshot file (an extra,
       // not a manifest member, so validation is unaffected)
@@ -294,13 +285,12 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       TextOps.appendBm25Postings(
         Seq(1L -> "spark join window", 2L -> "hash scan merge")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       TextOps.snapshotIndex(spark, t)
       // history rewrite: compact the postings member (same rows, new
       // files) — pruning can no longer reach the snapshot
       TextOps.appendBm25Postings(
-        Seq(9L -> "brand new doc").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(9L -> "brand new doc").toDF("doc_id", "text"), t)
       val rows = spark.table(t).collect().map(_.toString).sorted.toSeq
       TextOps.compactIndex(spark, t, TextOps.FoldGuard.Orphan)
       val e = intercept[IllegalArgumentException] {

@@ -29,9 +29,9 @@ class StorageBreakdownSpec extends AnyFunSuite with SparkSuite {
       "/ anchor / debris all accounted, and physical bytes reconcile") {
     val t = s"sb_bm25_p$pid"
     val all = (t +: TextOps.BackupSiblings.map(t + _)) ++
-      Seq(s"${t}_compact", s"${t}_old", s"${t}_stats",
-        s"${t}_bak_full", s"${t}_stats_bak_full", s"${t}_del_bak_full",
-        s"${t}_bak_diff", s"${t}_stats_bak_diff", s"${t}_del_bak_diff",
+      Seq(s"${t}_compact", s"${t}_old", s"${t}_docs",
+        s"${t}_bak_full", s"${t}_docs_bak_full", s"${t}_del_bak_full",
+        s"${t}_bak_diff", s"${t}_docs_bak_diff", s"${t}_del_bak_diff",
         s"${t}_bakok_full", s"${t}_bakok_diff", s"${t}_bak_orphan",
         s"${t}_mf_s1") ++
       TextOps.SnapshotCopySiblings.map(sf0 => s"$t${sf0}_bak_mfs1")
@@ -41,12 +41,12 @@ class StorageBreakdownSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       TextOps.appendBm25Postings(
         (1L to 40L).map(i => i -> s"spark shuffle join token$i body")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t, "full")
       // ~10% append, then a differential against the full tag
       TextOps.appendBm25Postings(
         (41L to 44L).map(i => i -> s"spark fresh token$i")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t, "diff", Some("full"))
       // a manifest snapshot, then an ANCHORED fold to leave anchor debt
       TextOps.snapshotIndex(spark, t, "s1")
@@ -105,8 +105,8 @@ class StorageBreakdownSpec extends AnyFunSuite with SparkSuite {
       "group-meta and member-family rows in one frame") {
     val base = s"sb_doc_p$pid"
     val members = Seq(s"${base}_band", s"${base}_band_del",
-      s"${base}_bm25", s"${base}_bm25_del", s"${base}_bm25_del_stage",
-      s"${base}_bm25_stats", s"${base}_hashes", s"${base}_ledger")
+      s"${base}_bm25", s"${base}_bm25_del", s"${base}_bm25_docs",
+      s"${base}_hashes", s"${base}_ledger")
     val copies = members.map(_ + "_bak_g1") ++
       Seq(s"${base}_dbakok_g1", s"${base}_ups_ledger_bak_g1",
         s"${base}_dels_ledger_bak_g1",

@@ -27,7 +27,7 @@ class StreamDiffBackupSpec extends AnyFunSuite with SparkSuite {
       .flatMap(m => Seq(m, s"${m}_bak_b0", s"${m}_bak_d1")) ++
       fams.flatMap(f => Seq(s"${f}_bakok_b0", s"${f}_bakok_d1")) ++
       Seq(s"${base}_dbakok_b0", s"${base}_dbakok_d1",
-        s"${base}_bm25_stats", s"${base}_hashes")).distinct
+        s"${base}_bm25_docs", s"${base}_hashes")).distinct
   }
 
   private def ownBytes(t: String): Long =
@@ -52,7 +52,7 @@ class StreamDiffBackupSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       TextOps.appendBm25Postings(
         (1L to 30L).map(i => i -> s"spark shuffle join token$i data")
-          .toDF("doc_id", "text"), bm25T, s"${bm25T}_stats")
+          .toDF("doc_id", "text"), bm25T)
       TextOps.writeBandIndex(
         (1L to 30L).map(i =>
           (i, s"spark shuffle join token$i data", "en", "s0", 25L))
@@ -66,7 +66,7 @@ class StreamDiffBackupSpec extends AnyFunSuite with SparkSuite {
       // the append window touches ONLY the bm25 member
       TextOps.appendBm25Postings(
         (31L to 33L).map(i => i -> s"spark shuffle join token$i data")
-          .toDF("doc_id", "text"), bm25T, s"${bm25T}_stats")
+          .toDF("doc_id", "text"), bm25T)
       StreamingOps.backup(spark, IndexGroup.documents(base), "d1",
         baseTag = Some("b0"))
       assert(StreamingOps.checkBackup(spark,
@@ -84,8 +84,7 @@ class StreamDiffBackupSpec extends AnyFunSuite with SparkSuite {
       // chain restore is bit-exact after further mutation
       val asOfD1 = postings(bm25T)
       TextOps.appendBm25Postings(
-        Seq(99L -> "post backup mutation").toDF("doc_id", "text"),
-        bm25T, s"${bm25T}_stats")
+        Seq(99L -> "post backup mutation").toDF("doc_id", "text"), bm25T)
       assert(postings(bm25T) !== asOfD1)
       val out = StreamingOps.restore(spark, IndexGroup.documents(base), "d1")
       assert(out.exists(_.startsWith("restored ")), out.toString)
@@ -124,11 +123,10 @@ class StreamDiffBackupSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       TextOps.appendBm25Postings(
         (1L to 12L).map(i => i -> s"spark token$i")
-          .toDF("doc_id", "text"), bm25T, s"${bm25T}_stats")
+          .toDF("doc_id", "text"), bm25T)
       StreamingOps.backup(spark, IndexGroup.documents(base), "b0")
       TextOps.appendBm25Postings(
-        Seq(13L -> "window append").toDF("doc_id", "text"),
-        bm25T, s"${bm25T}_stats")
+        Seq(13L -> "window append").toDF("doc_id", "text"), bm25T)
       StreamingOps.backup(spark, IndexGroup.documents(base), "d1",
         baseTag = Some("b0"))
       assert(StreamingOps.checkBackup(spark,

@@ -38,14 +38,13 @@ class StreamRaceSpec extends AnyFunSuite with SparkSuite {
     val rounds = 4
     val childBase = s"sr_child_p$pid"
     val parentT = s"sr_parent_p$pid"
-    val parentStats = parentT + "_stats"
+    val parentDocs = parentT + "_docs"
     val childTables = Seq(s"${childBase}_band", s"${childBase}_band_del",
       s"${childBase}_bm25", s"${childBase}_bm25_del",
-      s"${childBase}_bm25_del_stage", s"${childBase}_bm25_stats",
+      s"${childBase}_bm25_docs",
       s"${childBase}_hashes", s"${childBase}_ledger",
       s"${childBase}_quarantine", s"${childBase}_admission")
-    val parentTables = Seq(parentT, parentStats, s"${parentT}_del",
-      s"${parentT}_del_stage")
+    val parentTables = Seq(parentT, parentDocs, s"${parentT}_del")
     val wh = spark.conf.get("spark.sql.warehouse.dir")
     val fs = new org.apache.hadoop.fs.Path(wh)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -93,8 +92,7 @@ class StreamRaceSpec extends AnyFunSuite with SparkSuite {
           ((k * 1000 + i).toLong,
             s"tok${i % 7} tok${(i + 1) % 7} alpha beta storm$k"))
           .toDF("doc_id", "text")
-        graft.operators.TextOps.appendBm25Postings(docs, parentT,
-          parentStats)
+        graft.operators.TextOps.appendBm25Postings(docs, parentT)
         parentVerbs += System.currentTimeMillis()
         if (k % 2 == 0) {
           graft.operators.TextOps.compactIndex(spark, parentT)
@@ -102,7 +100,7 @@ class StreamRaceSpec extends AnyFunSuite with SparkSuite {
         }
         if (k % 3 == 0) {
           graft.operators.TextOps.deleteBm25Docs(spark, parentT,
-            parentStats, Seq((k * 1000 + 1).toLong).toDF("doc_id"))
+            Seq((k * 1000 + 1).toLong).toDF("doc_id"))
           parentVerbs += System.currentTimeMillis()
         }
       }
@@ -134,8 +132,7 @@ class StreamRaceSpec extends AnyFunSuite with SparkSuite {
           "fsck=0"), text.takeRight(2000))
 
       // the parent's own family audits clean after the contention
-      assert(graft.operators.TextOps.bm25Family(parentT,
-        parentStats).fsck(spark).isEmpty)
+      assert(graft.operators.TextOps.bm25Family(parentT).fsck(spark).isEmpty)
 
       // PROVEN overlap on the shared wall clock: child ingest stamps
       // inside the parent's verb span, parent verbs inside the

@@ -53,8 +53,8 @@ class StreamRestoreSpec extends AnyFunSuite with SparkSuite {
       "replay converges to the never-crashed state") {
     val base = s"sr_doc_p$pid"
     val members = Seq(s"${base}_band", s"${base}_band_del",
-      s"${base}_bm25", s"${base}_bm25_del", s"${base}_bm25_del_stage",
-      s"${base}_bm25_stats", s"${base}_hashes")
+      s"${base}_bm25", s"${base}_bm25_del", s"${base}_bm25_docs",
+      s"${base}_hashes")
     val ledgers = Seq(s"${base}_ledger", s"${base}_ups_ledger",
       s"${base}_dels_ledger")
     val baks = (members ++ ledgers).map(_ + "_bak_bak")
@@ -213,7 +213,7 @@ class StreamRestoreSpec extends AnyFunSuite with SparkSuite {
     val upsDir = java.nio.file.Files
       .createTempDirectory("graft_srrefu").toString
     val members = Seq(s"${base}_band", s"${base}_band_del",
-      s"${base}_bm25", s"${base}_bm25_del", s"${base}_bm25_stats",
+      s"${base}_bm25", s"${base}_bm25_del", s"${base}_bm25_docs",
       s"${base}_hashes")
     val ledgers = Seq(s"${base}_ledger", s"${base}_ups_ledger",
       s"${base}_dels_ledger")

@@ -24,7 +24,7 @@ class StreamRetentionSpec extends AnyFunSuite with SparkSuite {
 
   private def docArtifacts(base: String): Seq[String] = {
     val t = s"${base}_bm25"
-    Seq(t, s"${t}_stats", s"${t}_del") ++
+    Seq(t, s"${t}_docs", s"${t}_del") ++
       Seq("s1", "s2", "t1", "t2").flatMap { tag =>
         Seq(s"${base}_mf_$tag", s"${t}_mf_$tag",
           s"${base}_dbakok_$tag", s"${t}_bakok_$tag") ++
@@ -43,12 +43,11 @@ class StreamRetentionSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       TextOps.appendBm25Postings(
         Seq(1L -> "spark join window", 2L -> "hash scan merge")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       StreamingOps.snapshot(spark, IndexGroup.documents(base), "s1")
       Thread.sleep(1200L) // mtime ordering granularity
       TextOps.appendBm25Postings(
-        Seq(3L -> "window fast data").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(3L -> "window fast data").toDF("doc_id", "text"), t)
       StreamingOps.snapshot(spark, IndexGroup.documents(base), "s2")
       val tags = StreamingOps.listSnapshots(spark, IndexGroup.documents(base))
         .map(_._1)
@@ -63,10 +62,9 @@ class StreamRetentionSpec extends AnyFunSuite with SparkSuite {
         .map(_._1) === Seq("s2"))
       // the survivor still restores (and restores the s2 content)
       TextOps.appendBm25Postings(
-        Seq(9L -> "post snapshot junk").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(9L -> "post snapshot junk").toDF("doc_id", "text"), t)
       StreamingOps.restoreSnapshot(spark, IndexGroup.documents(base), "s2")
-      assert(spark.table(s"${t}_stats")
+      assert(TextOps.liveBm25(spark, t, "")._2
         .select("n_docs").head().getLong(0) === 3L)
     } finally drop(docArtifacts(base): _*)
   }
@@ -80,12 +78,10 @@ class StreamRetentionSpec extends AnyFunSuite with SparkSuite {
       val sp = spark
       import sp.implicits._
       TextOps.appendBm25Postings(
-        Seq(1L -> "spark join window").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(1L -> "spark join window").toDF("doc_id", "text"), t)
       StreamingOps.backup(spark, IndexGroup.documents(base), "t1")
       TextOps.appendBm25Postings(
-        Seq(2L -> "hash scan merge").toDF("doc_id", "text"),
-        t, s"${t}_stats")
+        Seq(2L -> "hash scan merge").toDF("doc_id", "text"), t)
       StreamingOps.backup(spark, IndexGroup.documents(base), "t2")
       assert(StreamingOps.listBackups(spark, IndexGroup.documents(base))
         === Seq("t1", "t2"))
@@ -94,9 +90,9 @@ class StreamRetentionSpec extends AnyFunSuite with SparkSuite {
         === Seq("t2"))
       assert(!spark.catalog.tableExists(s"${base}_dbakok_t1"))
       assert(!spark.catalog.tableExists(s"${t}_bak_t1"))
-      assert(!spark.catalog.tableExists(s"${t}_stats_bak_t1"))
+      assert(!spark.catalog.tableExists(s"${t}_docs_bak_t1"))
       StreamingOps.restore(spark, IndexGroup.documents(base), "t2")
-      assert(spark.table(s"${t}_stats")
+      assert(TextOps.liveBm25(spark, t, "")._2
         .select("n_docs").head().getLong(0) === 2L)
     } finally drop(docArtifacts(base): _*)
   }

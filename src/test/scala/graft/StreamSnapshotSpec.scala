@@ -43,8 +43,7 @@ class StreamSnapshotSpec extends AnyFunSuite with SparkSuite {
 
   private def docTables(base: String): Seq[String] = Seq(
     s"${base}_band", s"${base}_band_del", s"${base}_bm25",
-    s"${base}_bm25_del", s"${base}_bm25_del_stage",
-    s"${base}_bm25_stats", s"${base}_hashes")
+    s"${base}_bm25_del", s"${base}_bm25_docs", s"${base}_hashes")
 
   private def docArtifacts(base: String): Seq[String] =
     docTables(base) ++
@@ -87,11 +86,12 @@ class StreamSnapshotSpec extends AnyFunSuite with SparkSuite {
       assert(written.exists(_.startsWith(s"manifest ${base}_mf_snap")),
         written.toString)
       // the O(metadata) claim, structurally: NO copy of any payload
-      // member exists — only manifests and the tiny meta copies
+      // member exists — BM25's `_docs` is manifested with the postings
       assert(!spark.catalog.tableExists(s"${base}_bm25_bak_mfsnap") &&
-        !spark.catalog.tableExists(s"${base}_band_bak_mfsnap"))
-      assert(spark.catalog.tableExists(
-        s"${base}_bm25_stats_bak_mfsnap"))
+        !spark.catalog.tableExists(s"${base}_band_bak_mfsnap") &&
+        !spark.catalog.tableExists(s"${base}_bm25_docs_bak_mfsnap"))
+      assert(TextOps.readManifest(spark, s"${base}_bm25_mf_snap")
+        .contains(s"${base}_bm25_docs"))
 
       // post-snapshot life on every stream
       docs.filter(col("doc_id") >= 20 && col("doc_id") < 40)
@@ -140,8 +140,7 @@ class StreamSnapshotSpec extends AnyFunSuite with SparkSuite {
       assert(state(members) === snap,
         "manifest restore did not return the member snapshot")
       // ...and the as-of answers equal what the restored group serves
-      val (rp, rs) = TextOps.liveBm25(spark, s"${base}_bm25",
-        s"${base}_bm25_stats")
+      val (rp, rs) = TextOps.liveBm25(spark, s"${base}_bm25", "")
       assert(bmScores(TextOps.bm25ScoreIncr(qt, rp, rs)) === bmAsOf,
         "group-tag bm25 as-of diverged from the restored group")
       assert(ndPairs(TextOps.nearDupsAgainstIndex(probeDocs,

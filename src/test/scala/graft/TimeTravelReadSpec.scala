@@ -24,8 +24,7 @@ class TimeTravelReadSpec extends AnyFunSuite with SparkSuite {
     tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
 
   private def artifacts(t: String): Seq[String] =
-    Seq(t, s"${t}_stats", s"${t}_del", s"${t}_del_stage",
-      s"${t}_compact", s"${t}_old") ++
+    Seq(t, s"${t}_docs", s"${t}_del", s"${t}_compact", s"${t}_old") ++
       Seq("s1", "s2").flatMap(tag => Seq(s"${t}_mf_$tag") ++
         TextOps.SnapshotCopySiblings.map(c => s"$t${c}_bak_mf$tag"))
 
@@ -41,16 +40,15 @@ class TimeTravelReadSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       TextOps.appendBm25Postings(
         Seq(1L -> "spark join window", 2L -> "hash scan merge")
-          .toDF("doc_id", "text"), t, s"${t}_stats")
+          .toDF("doc_id", "text"), t)
       val asOfS1 = raw(spark.table(t))
-      val statsS1 = spark.table(s"${t}_stats")
+      val statsS1 = TextOps.liveBm25(spark, t, "")._2
         .select("n_docs").head().getLong(0)
       TextOps.snapshotIndex(spark, t, "s1")
       // the window accumulates: append + delete past the snapshot
       TextOps.appendBm25Postings(
-        Seq(3L -> "window fast data").toDF("doc_id", "text"),
-        t, s"${t}_stats")
-      TextOps.deleteBm25Docs(spark, t, s"${t}_stats",
+        Seq(3L -> "window fast data").toDF("doc_id", "text"), t)
+      TextOps.deleteBm25Docs(spark, t,
         Seq(1L).toDF("doc_id"))
       TextOps.snapshotIndex(spark, t, "s2")
       assert(raw(spark.table(t)) !== asOfS1,
@@ -59,8 +57,9 @@ class TimeTravelReadSpec extends AnyFunSuite with SparkSuite {
       assert(raw(TextOps.readSnapshot(spark, t, "s1")) === asOfS1)
       assert(raw(TextOps.readSnapshot(spark, t, "s2"))
         === raw(spark.table(t)))
-      assert(TextOps.readSnapshot(spark, t, "s1", "_stats")
-        .select("n_docs").head().getLong(0) === statsS1)
+      // the stats derive from the `_docs` member as of the tag
+      assert(TextOps.readSnapshot(spark, t, "s1", "_docs")
+        .select("doc_id").distinct().count() === statsS1)
       // the tombstone list did not exist at s1 — honest refusal
       val e0 = intercept[IllegalArgumentException] {
         TextOps.readSnapshot(spark, t, "s1", "_del")

@@ -34,9 +34,8 @@ class UnifiedIngestSpec extends AnyFunSuite with SparkSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_unidoc")
       .toString
     val members = Seq(s"${base}_band", s"${base}_bm25",
-      s"${base}_bm25_stats", s"${base}_hashes", s"${base}_ledger")
-    val indep = Seq(s"${base}_iband", s"${base}_ibm25",
-      s"${base}_ibm25_stats")
+      s"${base}_bm25_docs", s"${base}_hashes", s"${base}_ledger")
+    val indep = Seq(s"${base}_iband", s"${base}_ibm25", s"${base}_ibm25_docs")
     drop(members ++ indep: _*)
     try {
       def halfD(m: Int) = docs.filter(pmod(col("doc_id"), lit(2)) === m)
@@ -55,17 +54,15 @@ class UnifiedIngestSpec extends AnyFunSuite with SparkSuite {
       val g1 = TrainingData.curateGate(halfD(1))
       TextOps.appendBandIndex(g0, s"${base}_iband")
       TextOps.appendBandIndex(g1, s"${base}_iband")
-      TextOps.appendBm25Postings(g0, s"${base}_ibm25",
-        s"${base}_ibm25_stats")
-      TextOps.appendBm25Postings(g1, s"${base}_ibm25",
-        s"${base}_ibm25_stats")
+      TextOps.appendBm25Postings(g0, s"${base}_ibm25")
+      TextOps.appendBm25Postings(g1, s"${base}_ibm25")
 
       assert(strings(spark.table(s"${base}_band")) ===
         strings(spark.table(s"${base}_iband")))
       assert(strings(spark.table(s"${base}_bm25")) ===
         strings(spark.table(s"${base}_ibm25")))
-      assert(strings(spark.table(s"${base}_bm25_stats")) ===
-        strings(spark.table(s"${base}_ibm25_stats")))
+      assert(strings(TextOps.liveBm25(spark, s"${base}_bm25", "")._2) ===
+        strings(TextOps.liveBm25(spark, s"${base}_ibm25", "")._2))
       assert(spark.table(s"${base}_band").count() > 0)
       // the hash store holds exactly the gated corpus, once
       assert(spark.table(s"${base}_hashes").count() ===
@@ -83,7 +80,7 @@ class UnifiedIngestSpec extends AnyFunSuite with SparkSuite {
     val members = Seq(s"${base}_band", s"${base}_band_del",
       s"${base}_band_compact", s"${base}_band_old",
       s"${base}_bm25", s"${base}_bm25_del", s"${base}_bm25_compact",
-      s"${base}_bm25_old", s"${base}_bm25_stats", s"${base}_hashes",
+      s"${base}_bm25_old", s"${base}_bm25_docs", s"${base}_hashes",
       s"${base}_ledger")
     drop(members: _*)
     try {
@@ -101,8 +98,7 @@ class UnifiedIngestSpec extends AnyFunSuite with SparkSuite {
       def deadBand() = TextOps.liveBandIndex(spark, s"${base}_band")
         .filter(col("old_id") < 60L && col("old_id") % 2 === 0).count()
       def deadBm25() = {
-        val (p, _) = TextOps.liveBm25(spark, s"${base}_bm25",
-          s"${base}_bm25_stats")
+        val (p, _) = TextOps.liveBm25(spark, s"${base}_bm25", "")
         p.filter(col("doc_id") < 60L && col("doc_id") % 2 === 0).count()
       }
       assert(deadBand() === 0L)
@@ -111,7 +107,7 @@ class UnifiedIngestSpec extends AnyFunSuite with SparkSuite {
       // that were actually indexed
       val gated = TrainingData.curateGate(docs)
       val liveN = gated.join(victims, Seq("doc_id"), "left_anti").count()
-      assert(spark.table(s"${base}_bm25_stats").collect()(0)
+      assert(TextOps.liveBm25(spark, s"${base}_bm25", "")._2.collect()(0)
         .getLong(0) === liveN)
       // vacuum folds both lists; the probes see the same live corpus
       streaming.StreamingOps.vacuum(spark, streaming.IndexGroup.documents(base))
@@ -132,7 +128,7 @@ class UnifiedIngestSpec extends AnyFunSuite with SparkSuite {
     val delDir = java.nio.file.Files.createTempDirectory("graft_unicdcd")
       .toString
     val members = Seq(s"${base}_band", s"${base}_band_del",
-      s"${base}_bm25", s"${base}_bm25_del", s"${base}_bm25_stats",
+      s"${base}_bm25", s"${base}_bm25_del", s"${base}_bm25_docs",
       s"${base}_hashes", s"${base}_ledger", s"${base}_dels_ledger")
     drop(members: _*)
     try {
@@ -140,12 +136,14 @@ class UnifiedIngestSpec extends AnyFunSuite with SparkSuite {
       import sp.implicits._
       docs.write.mode("append").parquet(s"$dir/documents.parquet")
       streaming.StreamingOps.streamingDocumentIngest(spark, dir, base)
-      val statsFull = spark.table(s"${base}_bm25_stats").collect()(0)
+      val statsFull =
+        TextOps.liveBm25(spark, s"${base}_bm25", "")._2.collect()(0)
       (0L until 30L).toDF("doc_id").write.mode("append")
         .parquet(s"$delDir/dels.parquet")
       streaming.StreamingOps.streamingDeletes(spark,
         s"$delDir/dels.parquet", streaming.IndexGroup.documents(base))
-      val statsDel = spark.table(s"${base}_bm25_stats").collect()(0)
+      val statsDel =
+        TextOps.liveBm25(spark, s"${base}_bm25", "")._2.collect()(0)
       assert(statsDel.getLong(0) < statsFull.getLong(0))
       def dead() = TextOps.liveBandIndex(spark, s"${base}_band")
         .filter(col("old_id") < 30L).count()
@@ -154,7 +152,8 @@ class UnifiedIngestSpec extends AnyFunSuite with SparkSuite {
       // do not move (the double-subtract guard, stream-shaped)
       streaming.StreamingOps.streamingDeletes(spark,
         s"$delDir/dels.parquet", streaming.IndexGroup.documents(base))
-      assert(spark.table(s"${base}_bm25_stats").collect()(0) === statsDel)
+      assert(TextOps.liveBm25(spark, s"${base}_bm25", "")._2
+        .collect()(0) === statsDel)
       // a second batch of deletions arrives
       (30L until 40L).toDF("doc_id").write.mode("append")
         .parquet(s"$delDir/dels.parquet")
@@ -184,11 +183,10 @@ class UnifiedIngestSpec extends AnyFunSuite with SparkSuite {
     val upsDir = java.nio.file.Files.createTempDirectory("graft_unirstu")
       .toString
     val members = Seq(s"${base}_band", s"${base}_band_del",
-      s"${base}_bm25", s"${base}_bm25_del", s"${base}_bm25_del_stage",
-      s"${base}_bm25_stats", s"${base}_hashes", s"${base}_ledger",
+      s"${base}_bm25", s"${base}_bm25_del", s"${base}_bm25_docs",
+      s"${base}_hashes", s"${base}_ledger",
       s"${base}_ups_ledger")
-    val ref = Seq(s"${base}_rbm25", s"${base}_rbm25_stats",
-      s"${base}_rbm25_del", s"${base}_rbm25_del_stage")
+    val ref = Seq(s"${base}_rbm25", s"${base}_rbm25_docs", s"${base}_rbm25_del")
     drop(members ++ ref: _*)
     try {
       val sp = spark
@@ -218,26 +216,24 @@ class UnifiedIngestSpec extends AnyFunSuite with SparkSuite {
       // reference: independent build over the gated corpus + the same
       // upsert applied directly
       val gated = TrainingData.curateGate(docs).select("doc_id", "text")
-      TextOps.appendBm25Postings(gated, s"${base}_rbm25",
-        s"${base}_rbm25_stats")
-      TextOps.upsertBm25Docs(spark, s"${base}_rbm25",
-        s"${base}_rbm25_stats", batch)
+      TextOps.appendBm25Postings(gated, s"${base}_rbm25")
+      TextOps.upsertBm25Docs(spark, s"${base}_rbm25", batch)
       val qt = Seq((1, "the"), (2, "data"), (3, "a")).toDF("q_id", "token")
       def scores(t: String) = {
-        val (p, st) = TextOps.liveBm25(spark, t, s"${t}_stats")
+        val (p, st) = TextOps.liveBm25(spark, t, "")
         TextOps.bm25ScoreIncr(qt, p, st).collect()
           .map(r => ((r.getInt(0), r.getLong(1)), r.getDouble(2))).toMap
       }
       def stats(t: String) =
-        spark.table(t).select("n_docs", "sum_dl").collect()(0)
+        TextOps.liveBm25(spark, t, "")._2
+          .select("n_docs", "sum_dl").collect()(0)
       val got = scores(s"${base}_bm25")
       assert(got === scores(s"${base}_rbm25"))
       assert(got.nonEmpty)
-      assert(stats(s"${base}_bm25_stats") === stats(s"${base}_rbm25_stats"))
+      assert(stats(s"${base}_bm25") === stats(s"${base}_rbm25"))
       // the upserted + inserted docs ANSWER (the vanishing hazard):
       // their postings are live in the recovered index
-      val (lp, _) = TextOps.liveBm25(spark, s"${base}_bm25",
-        s"${base}_bm25_stats")
+      val (lp, _) = TextOps.liveBm25(spark, s"${base}_bm25", "")
       assert(lp.filter(col("doc_id") === 10L).count() > 0,
         "upserted doc vanished after member-loss recovery")
       assert(lp.filter(col("doc_id") === 9000L).count() > 0,

@@ -29,16 +29,14 @@ class UnifiedVerbsSpec extends AnyFunSuite with SparkSuite {
       "and heals in one unified repair") {
     val base = s"uv_doc_p$pid"
     val all = Seq(s"${base}_band", s"${base}_band_del",
-      s"${base}_bm25", s"${base}_bm25_del", s"${base}_bm25_del_stage",
-      s"${base}_bm25_stats")
+      s"${base}_bm25", s"${base}_bm25_del", s"${base}_bm25_docs")
     drop(all: _*)
     try {
       val sp = spark
       import sp.implicits._
       val docs = Seq((1L, "spark join window"), (2L, "hash scan merge"))
         .toDF("doc_id", "text")
-      TextOps.appendBm25Postings(docs, s"${base}_bm25",
-        s"${base}_bm25_stats")
+      TextOps.appendBm25Postings(docs, s"${base}_bm25")
       TextOps.appendBandIndex(docs, s"${base}_band")
 
       val st = streaming.StreamingOps.describe(spark,
@@ -57,9 +55,11 @@ class UnifiedVerbsSpec extends AnyFunSuite with SparkSuite {
       streaming.StreamingOps.maintain(spark,
         streaming.IndexGroup.documents(base))
 
-      // inject the crash-class corruption fsck exists to catch
-      Seq((99L, 99L)).toDF("n_docs", "sum_dl")
-        .write.mode("overwrite").saveAsTable(s"${base}_bm25_stats")
+      // inject the crash-class corruption fsck exists to catch: the
+      // `_docs` rows the stats derive from lie
+      Seq((1L, 99L, 0L)).toDF("doc_id", "dl", "gen").write
+        .mode("overwrite").bucketBy(8, "doc_id").sortBy("doc_id")
+        .saveAsTable(s"${base}_bm25_docs")
       val v = streaming.StreamingOps.fsck(spark,
         streaming.IndexGroup.documents(base))
       assert(v.nonEmpty && v.forall(_.startsWith(s"${base}_bm25: ")),

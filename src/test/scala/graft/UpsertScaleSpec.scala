@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** OPT-IN maintenance-scale audit (r14): the correctness specs prove
   * upsert SEMANTICS; this measures upsert COST against corpus size —
   * the 100 TB claim for the refresh path is that an upsert touches
-  * O(batch) data (tombstone append + staged stats delta + batch
-  * append), never O(corpus), so the same batch against a 10×-larger
+  * O(batch) data (tombstone append + batch append), never
+  * O(corpus), so the same batch against a 10×-larger
   * index should cost about the same. Timing assertions are
   * deliberately absent (machine load would make them flaky); the
   * audit PRINTS the seconds for SCALE_SF1.md and asserts only
@@ -38,12 +38,12 @@ class UpsertScaleSpec extends AnyFunSuite with SparkSuite {
       val emb = Tables(spark, dir, "embeddings")
       val bt = s"ua_bm25_${label.replace(".", "")}_p$pid"
       val at = s"ua_ann_${label.replace(".", "")}_p$pid"
-      val all = Seq(bt, s"${bt}_stats", s"${bt}_del", s"${bt}_del_stage",
-        at, s"${at}_vec", s"${at}_cfg", s"${at}_del")
+      val all = Seq(bt, s"${bt}_docs", s"${bt}_del", at, s"${at}_vec",
+        s"${at}_cfg", s"${at}_del")
       all.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       try {
         val (_, buildS) = timed {
-          TextOps.appendBm25Postings(docs, bt, s"${bt}_stats")
+          TextOps.appendBm25Postings(docs, bt)
           AnnIndex.write(emb, at)
         }
         // the SAME fixed-size batch for both scales: re-crawl 500
@@ -52,11 +52,11 @@ class UpsertScaleSpec extends AnyFunSuite with SparkSuite {
           .withColumn("text", concat(lit("refreshed "), col("text")))
         val vecBatch = emb.filter(col("vec_id") < 200)
         val (_, upsertS) = timed {
-          TextOps.upsertBm25Docs(spark, bt, s"${bt}_stats", docBatch)
+          TextOps.upsertBm25Docs(spark, bt, docBatch)
           AnnIndex.upsert(vecBatch, at)
         }
         // sanity: the refreshed content answers, stats moved
-        val (lp, ls) = TextOps.liveBm25(spark, bt, s"${bt}_stats")
+        val (lp, ls) = TextOps.liveBm25(spark, bt, "")
         val sp = spark
         import sp.implicits._
         val hits = TextOps.bm25ScoreIncr(

@@ -63,9 +63,9 @@ class UpsertSpec extends AnyFunSuite with SparkSuite {
     val t = s"ups_bm25_p$pid"
     val t2 = s"ups_bm25_twin_p$pid"
     val t3 = s"ups_bm25_surv_p$pid"
-    val all = Seq(t, s"${t}_stats", s"${t}_del", s"${t}_del_stage",
-      s"${t}_compact", s"${t}_old", t2, s"${t2}_stats",
-      t3, s"${t3}_stats")
+    val all = Seq(t, s"${t}_docs", s"${t}_del", s"${t}_compact", s"${t}_old",
+      t2, s"${t2}_docs",
+      t3, s"${t3}_docs")
     drop(all: _*)
     try {
       val sp = spark
@@ -85,9 +85,9 @@ class UpsertSpec extends AnyFunSuite with SparkSuite {
         6L -> "stream stream order customer fast"))
       val fin = v1.join(batch.select("doc_id"), Seq("doc_id"),
         "left_anti").unionByName(batch)
-      TextOps.appendBm25Postings(v1, t, s"${t}_stats")
-      TextOps.upsertBm25Docs(spark, t, s"${t}_stats", batch)
-      TextOps.appendBm25Postings(fin, t2, s"${t2}_stats")
+      TextOps.appendBm25Postings(v1, t)
+      TextOps.upsertBm25Docs(spark, t, batch)
+      TextOps.appendBm25Postings(fin, t2)
 
       val qt = Seq((1, "window"), (1, "spark"), (2, "data"),
         (2, "hash"), (3, "stream")).toDF("q_id", "token")
@@ -95,49 +95,50 @@ class UpsertSpec extends AnyFunSuite with SparkSuite {
         TextOps.bm25ScoreIncr(qt, pt, st).collect()
           .map(r => ((r.getInt(0), r.getLong(1)), r.getDouble(2))).toMap
       def stats(st: String) =
-        spark.table(st).select("n_docs", "sum_dl").collect()(0)
-      val (lp, ls) = TextOps.liveBm25(spark, t, s"${t}_stats")
-      val want = scores(spark.table(t2), spark.table(s"${t2}_stats"))
+        TextOps.liveBm25(spark, st, "")._2
+          .select("n_docs", "sum_dl").collect()(0)
+      val (lp, ls) = TextOps.liveBm25(spark, t, "")
+      val want = scores(spark.table(t2), TextOps.liveBm25(spark, t2, "")._2)
       assert(scores(lp, ls) === want)
       assert(want.nonEmpty)
-      assert(stats(s"${t}_stats") === stats(s"${t2}_stats"))
+      assert(stats(t) === stats(t2))
 
       // REPLAYED batch: a redelivered upsert re-supersedes at a higher
       // barrier — served content must not move
-      TextOps.upsertBm25Docs(spark, t, s"${t}_stats", batch)
-      val (lp2, ls2) = TextOps.liveBm25(spark, t, s"${t}_stats")
+      TextOps.upsertBm25Docs(spark, t, batch)
+      val (lp2, ls2) = TextOps.liveBm25(spark, t, "")
       assert(scores(lp2, ls2) === want)
-      assert(stats(s"${t}_stats") === stats(s"${t2}_stats"))
+      assert(stats(t) === stats(t2))
 
       // vacuum folds: superseded generations physically gone, list
       // dropped, probes unchanged, gens reset to 0 (byte-parity with
       // the from-scratch twin's layout)
-      TextOps.vacuumIndex(spark, s"${t}_del", Seq(t), "doc_id")
+      TextOps.vacuumIndex(spark, s"${t}_del",
+        Seq(t, s"${t}_docs"), "doc_id")
       assert(!spark.catalog.tableExists(s"${t}_del"))
-      val (lp3, ls3) = TextOps.liveBm25(spark, t, s"${t}_stats")
+      val (lp3, ls3) = TextOps.liveBm25(spark, t, "")
       assert(scores(lp3, ls3) === want)
       assert(spark.table(t).filter(col("gen") =!= 0L).isEmpty)
       // one physical row set per (token, doc): the old generations of
       // 2 and 4 are gone, not shadowed
       assert(spark.table(t).count() === spark.table(t2).count())
 
-      // terminal delete STAYS terminal through an upsert attempt —
-      // and the dead content is dropped at the door: its rows never
-      // land AND its (count, dl) never touch the stats, so scores and
-      // stats stay bit-identical to a from-scratch build over the
-      // survivors (letting the rows through would leave probes clean
-      // but inflate n_docs/sum_dl, skewing every IDF)
-      TextOps.deleteBm25Docs(spark, t, s"${t}_stats",
+      // terminal delete STAYS terminal through an upsert attempt: the
+      // new rows land below the terminal ceiling, so neither the probe
+      // nor the stats derived from the live `_docs` rows see them —
+      // scores and stats stay bit-identical to a from-scratch build
+      // over the survivors
+      TextOps.deleteBm25Docs(spark, t,
         Seq(6L).toDF("doc_id"))
-      TextOps.upsertBm25Docs(spark, t, s"${t}_stats",
+      TextOps.upsertBm25Docs(spark, t,
         docs(Seq(6L -> "resurrection attempt")))
-      val (lp4, ls4) = TextOps.liveBm25(spark, t, s"${t}_stats")
+      val (lp4, ls4) = TextOps.liveBm25(spark, t, "")
       assert(!scores(lp4, ls4).keys.exists(_._2 == 6L))
       TextOps.appendBm25Postings(
-        fin.filter(col("doc_id") =!= 6L), t3, s"${t3}_stats")
+        fin.filter(col("doc_id") =!= 6L), t3)
       assert(scores(lp4, ls4) ===
-        scores(spark.table(t3), spark.table(s"${t3}_stats")))
-      assert(stats(s"${t}_stats") === stats(s"${t3}_stats"))
+        scores(spark.table(t3), TextOps.liveBm25(spark, t3, "")._2))
+      assert(stats(t) === stats(t3))
     } finally drop(all: _*)
   }
 
@@ -337,8 +338,8 @@ class UpsertSpec extends AnyFunSuite with SparkSuite {
     val vbase = s"ups_vcdc_p$pid"
     val docT = s"${base}_bm25"
     val bandT = s"${base}_band"
-    val all = Seq(docT, s"${docT}_stats", s"${docT}_del",
-      s"${docT}_del_stage", bandT, s"${bandT}_del",
+    val all = Seq(docT, s"${docT}_docs", s"${docT}_del",
+      bandT, s"${bandT}_del",
       s"${base}_ups_ledger",
       s"${vbase}_ann", s"${vbase}_ann_vec", s"${vbase}_ann_cfg",
       s"${vbase}_ann_del", s"${vbase}_bq", s"${vbase}_bq_cfg",
@@ -365,7 +366,7 @@ class UpsertSpec extends AnyFunSuite with SparkSuite {
         1L -> "spark join window fast",
         2L -> "window window hash",
         3L -> "hash scan merge fast").toDF("doc_id", "text")
-      TextOps.appendBm25Postings(v1, docT, s"${docT}_stats")
+      TextOps.appendBm25Postings(v1, docT)
       TextOps.appendBandIndex(v1, bandT)
       // two CDC files, explicit mod-time order: file B supersedes
       // file A's version of doc 2
@@ -388,14 +389,14 @@ class UpsertSpec extends AnyFunSuite with SparkSuite {
         streaming.IndexGroup.documents(base))
       // batch reference: the same two upserts in the same order
       val refT = s"${base}_ref"
-      drop(refT, s"${refT}_stats", s"${refT}_del", s"${refT}_band")
-      TextOps.appendBm25Postings(v1, refT, s"${refT}_stats")
-      TextOps.upsertBm25Docs(spark, refT, s"${refT}_stats", fA)
-      TextOps.upsertBm25Docs(spark, refT, s"${refT}_stats", fB)
+      drop(refT, s"${refT}_docs", s"${refT}_del", s"${refT}_band")
+      TextOps.appendBm25Postings(v1, refT)
+      TextOps.upsertBm25Docs(spark, refT, fA)
+      TextOps.upsertBm25Docs(spark, refT, fB)
       val qt = Seq((1, "spark"), (1, "hash"), (2, "data"), (2, "stream"))
         .toDF("q_id", "token")
       def scores(t: String) = {
-        val (p, st) = TextOps.liveBm25(spark, t, s"${t}_stats")
+        val (p, st) = TextOps.liveBm25(spark, t, "")
         TextOps.bm25ScoreIncr(qt, p, st).collect()
           .map(r => ((r.getInt(0), r.getLong(1)), r.getDouble(2))).toMap
       }
@@ -405,7 +406,7 @@ class UpsertSpec extends AnyFunSuite with SparkSuite {
       streaming.StreamingOps.streamingUpserts(spark, dir,
         streaming.IndexGroup.documents(base))
       assert(scores(docT) === scores(refT))
-      drop(refT, s"${refT}_stats", s"${refT}_del")
+      drop(refT, s"${refT}_docs", s"${refT}_del")
 
       // ---- vectors ----
       val dim = 64
@@ -452,7 +453,7 @@ class UpsertSpec extends AnyFunSuite with SparkSuite {
       drop(tws: _*)
     } finally {
       drop(all: _*)
-      drop(s"${base}_ref", s"${base}_ref_stats", s"${base}_ref_del")
+      drop(s"${base}_ref", s"${base}_ref_docs", s"${base}_ref_del")
       Seq(s"${base}_ups", s"${vbase}_vups").foreach(cleanupCk)
     }
   }
