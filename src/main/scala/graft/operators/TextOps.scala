@@ -1180,7 +1180,7 @@ object TextOps {
     * need). Files are pre-checked for existence by the callers
     * (missing files are the SHALLOW pass's finding); a file that
     * disappears mid-audit surfaces as the task's IO error. */
-  private[graft] def hashFilesDistributed(
+  private def hashFilesDistributed(
       s: org.apache.spark.sql.SparkSession,
       files: Seq[(String, String)]): Map[(String, String), String] =
     if (files.isEmpty) Map.empty
@@ -1390,37 +1390,60 @@ object TextOps {
     // gather all work from these rows, member by member in name order
     val recorded = readBackupMarker(s, marker).groupBy(_._1)
       .toSeq.sortBy(_._1)
-    // each copy is listed at most once, shared by both passes
-    val listed = scala.collection.mutable.Map
-      .empty[String, Map[String, Long]]
-    val files = (c: String) =>
-      listed.getOrElseUpdate(c, listDataFiles(s, c).toMap)
-    val fileProblems = checkBackupFiles(s, tag, recorded, files)
-    val members = recorded.map(_._1).toSet
-    val extras = (table +: BackupSiblings.map(table + _))
-      .map(m => s"${m}_bak_$tag")
-      .filter(m => s.catalog.tableExists(m) && !members.contains(m))
-      .map(m => s"$m: copy exists but is not in the commit marker " +
-        "(restore would resurrect it as a member) — re-take the " +
-        "backup")
-    val deepProblems =
-      if (!deep) Nil else checkBackupDeep(s, tag, recorded, files)
-    fileProblems ++ extras ++ deepProblems
+    val listed = listedBy(s, locateTable(s))
+    checkBackupFiles(tag, "commit marker", recorded, listed) ++
+      unrecordedCopies("commit marker",
+        (table +: BackupSiblings.map(table + _)).map(m => s"${m}_bak_$tag"),
+        recorded.map(_._1).toSet, s.catalog.tableExists) ++
+      (if (deep) checkBackupDeep(s, tag, recorded, listed) else Nil)
   }
 
-  private type MarkerRow =
+  /** One audited marker row: (entry, file path, len, physical tag of
+    * a borrowed file, content md5) — [[readBackupMarker]]'s shape; a
+    * group marker's state-table and checkpoint rows take it with no
+    * `src` (they borrow nothing). */
+  private[graft] type MarkerRow =
     (String, Option[String], Long, Option[String], Option[String])
 
-  /** The shallow diff: each recorded member's rows against its copy's
-    * listing (`files`: relative path → length). */
-  private def checkBackupFiles(s: org.apache.spark.sql.SparkSession,
-      tag: String, recorded: Seq[(String, Seq[MarkerRow])],
-      files: String => Map[String, Long]): Seq[String] =
-    recorded.flatMap {
-      case (m, rows) =>
-        if (!s.catalog.tableExists(m))
-          Seq(s"$m: recorded in the commit marker but missing")
-        else {
+  /** An audited entry as it is now: its root and listing (relative
+    * path → length); None when the entry is gone. */
+  private[graft] type Listed =
+    String => Option[(org.apache.hadoop.fs.Path, Map[String, Long])]
+
+  /** The [[Listed]] view of the entries a `locate` finds (family
+    * copies: [[locateTable]]; a group marker's state tables and
+    * checkpoint trees: the group's own): each entry is located and
+    * listed at most once, and the shallow and deep passes share that
+    * listing. */
+  private[graft] def listedBy(s: org.apache.spark.sql.SparkSession,
+      locate: String => Option[org.apache.hadoop.fs.Path]): Listed = {
+    val memo = scala.collection.mutable.Map
+      .empty[String, Option[(org.apache.hadoop.fs.Path, Map[String, Long])]]
+    e => memo.getOrElseUpdate(e,
+      locate(e).map(loc => (loc, listFilesUnder(s, loc).toMap)))
+  }
+
+  /** The extras pass: a candidate copy under the tag that exists but
+    * is not among the marker's `recorded` entries — restore would
+    * resurrect it as a live member. `noun` names the marker. */
+  private[graft] def unrecordedCopies(noun: String,
+      candidates: Seq[String], recorded: Set[String],
+      exists: String => Boolean): Seq[String] = {
+    val rec = recorded.map(_.toLowerCase)
+    candidates.filter(c => !rec(c.toLowerCase) && exists(c))
+      .map(c => s"$c: copy exists but is not in the $noun (restore " +
+        "would resurrect it as a member) — re-take the backup")
+  }
+
+  /** The shallow diff: each recorded entry's rows against its
+    * listing. `noun` names the marker in the findings. */
+  private[graft] def checkBackupFiles(tag: String, noun: String,
+      recorded: Seq[(String, Seq[MarkerRow])],
+      listed: Listed): Seq[String] =
+    recorded.flatMap { case (m, rows) =>
+      listed(m) match {
+        case None => Seq(s"$m: recorded in the $noun but missing")
+        case Some((_, now)) =>
           // files this tag physically owns audit against the copy's
           // own location; borrowed files (differential references)
           // audit against the base tag's copy that holds the bytes —
@@ -1433,7 +1456,6 @@ object TextOps {
             case (_, Some(p), l, Some(b), _) => (p, l, b) }
           val borrowedSet =
             borrowed.map { case (p, l, _) => (p, l) }.toSet
-          val now = files(m)
           val lost = own.filterNot { case (p, l) => now.get(p).contains(l) }
             .toSeq.sorted.map { case (p, l) =>
               s"$m: committed file $p ($l bytes) lost or changed " +
@@ -1441,7 +1463,7 @@ object TextOps {
             }
           val unrecorded = (now.toSet -- own -- borrowedSet).toSeq.sorted
             .map { case (p, _) =>
-              s"$m: file $p not in the commit marker (written into " +
+              s"$m: file $p not in the $noun (written into " +
                 "the copy after commit?)"
             }
           val borrowProblems = borrowed
@@ -1450,21 +1472,21 @@ object TextOps {
             .sortBy(_._1).flatMap { case (b, fs3) =>
               val baseCopy =
                 m.stripSuffix(s"_bak_$tag") + s"_bak_$b"
-              if (!s.catalog.tableExists(baseCopy))
-                Seq(s"$m: borrows ${fs3.size} file(s) from base " +
-                  s"backup tag $b, but $baseCopy is missing (base " +
-                  "dropped out-of-band?)")
-              else {
-                val baseNow = files(baseCopy)
-                fs3.sortBy(_._1).collect {
-                  case (p, l, _) if !baseNow.get(p).contains(l) =>
-                    s"$m: borrowed file $p ($l bytes) lost or " +
-                      s"changed in base copy $baseCopy"
-                }
+              listed(baseCopy) match {
+                case None =>
+                  Seq(s"$m: borrows ${fs3.size} file(s) from base " +
+                    s"backup tag $b, but $baseCopy is missing (base " +
+                    "dropped out-of-band?)")
+                case Some((_, baseNow)) =>
+                  fs3.sortBy(_._1).collect {
+                    case (p, l, _) if !baseNow.get(p).contains(l) =>
+                      s"$m: borrowed file $p ($l bytes) lost or " +
+                        s"changed in base copy $baseCopy"
+                  }
               }
             }
           lost ++ unrecorded ++ borrowProblems
-        }
+      }
     }
 
   /** DEEP pass (opt-in, O(backup bytes) — the cadence check stays
@@ -1473,51 +1495,60 @@ object TextOps {
     * what (name, len) identity cannot see: same-length bit rot or
     * tamper inside a committed copy. A row without a hash is NAMED
     * as unverifiable — a silent skip would read as "verified".
-    * Holders resolve on the driver from the copy listings; the bytes
-    * are read by ONE distributed re-hash job
-    * ([[hashFilesDistributed]]) over the whole verifiable set. */
-  private def checkBackupDeep(s: org.apache.spark.sql.SparkSession,
+    * Holders resolve on the driver from the listings; the bytes are
+    * read by [[verifyPins]]' one re-hash job. */
+  private[graft] def checkBackupDeep(s: org.apache.spark.sql.SparkSession,
       tag: String, recorded: Seq[(String, Seq[MarkerRow])],
-      files: String => Map[String, Long]): Seq[String] = {
-    val gathered = recorded.flatMap { case (m, rows) =>
-      if (!s.catalog.tableExists(m)) Nil // shallow reported it
-      else {
-        val live = m.stripSuffix(s"_bak_$tag")
-        rows.collect { case (_, Some(p), l, src, sha) =>
-          (p, l, src, sha) }.sortBy(_._1).flatMap {
-          case (p, _, _, None) =>
-            Seq(Left(s"$m: $p has no recorded content hash " +
-              "— deep audit cannot verify it; re-take the " +
-              "backup"))
-          case (p, l, src, Some(sha)) =>
-            // resolve exactly like restore: the own copy when
-            // it physically holds the file (full rows, or
-            // borrowed rows a promote materialized), else the
-            // base copy
-            val holder =
-              if (src.isEmpty || files(m).get(p).contains(l))
-                Some(m)
-              else Some(s"${live}_bak_${src.get}")
-                .filter(s.catalog.tableExists)
-            // a holder without the file (by path) is the
-            // shallow pass's finding
-            holder.filter(files(_).contains(p))
-              .map(h => Right((m, p, h, sha))).toSeq
-        }
+      listed: Listed): Seq[String] =
+    verifyPins(s, recorded.flatMap { case (m, rows) =>
+      listed(m) match {
+        case None => Nil // shallow reported it
+        case Some((_, now)) =>
+          val live = m.stripSuffix(s"_bak_$tag")
+          rows.collect { case (_, Some(p), l, src, sha) =>
+            (p, l, src, sha) }.sortBy(_._1).flatMap {
+            case (p, _, _, None) =>
+              Seq(Left(s"$m: $p has no recorded content hash " +
+                "— deep audit cannot verify it; re-take the " +
+                "backup"))
+            case (p, l, src, Some(sha)) =>
+              // resolve exactly like restore: the own copy when it
+              // physically holds the file (full rows, or borrowed
+              // rows a promote materialized), else the base copy
+              val holder =
+                if (src.isEmpty || now.get(p).contains(l)) m
+                else s"${live}_bak_${src.get}"
+              // a holder without the file (by path) is the shallow
+              // pass's finding
+              listed(holder).collect { case (loc, files)
+                  if files.contains(p) =>
+                Right(Pin(loc.toString, p, sha, found =>
+                  s"$m: $p content mismatch in $holder (recorded md5 " +
+                    s"$sha, found $found — bit rot or tamper at " +
+                    "unchanged length); re-take the backup"))
+              }.toSeq
+          }
       }
-    }
-    val locs = gathered.collect { case Right((_, _, h, _)) => h }
-      .distinct.map(h => h -> tableLocation(s, h).toString).toMap
+    })
+
+  /** One file a deep audit re-hashes: its root, relative path and
+    * recorded md5, and the finding to name for the md5 found when
+    * they differ. */
+  private final case class Pin(loc: String, path: String, sha: String,
+      mismatch: String => String)
+
+  /** The deep audits' one re-hash-and-compare: findings already made
+    * pass through; every pin is re-hashed by ONE
+    * [[hashFilesDistributed]] job and named when its md5 differs. */
+  private def verifyPins(s: org.apache.spark.sql.SparkSession,
+      gathered: Seq[Either[String, Pin]]): Seq[String] = {
     val got = hashFilesDistributed(s,
-      gathered.collect { case Right((_, p, h, _)) => (locs(h), p) })
+      gathered.collect { case Right(p) => (p.loc, p.path) })
     gathered.flatMap {
       case Left(msg) => Seq(msg)
-      case Right((m, p, h, sha)) =>
-        val found = got((locs(h), p))
-        if (found == sha) Nil
-        else Seq(s"$m: $p content mismatch in $h (recorded md5 " +
-          s"$sha, found $found — bit rot or tamper at " +
-          "unchanged length); re-take the backup")
+      case Right(p) =>
+        val found = got((p.loc, p.path))
+        if (found == p.sha) Nil else Seq(p.mismatch(found))
     }
   }
 
@@ -2720,40 +2751,30 @@ object TextOps {
     // every (name, len) check green.
     val deepProblems =
       if (!deep) Nil
-      else {
-        val gathered = manifest.toSeq.sortBy(_._1).flatMap {
-          case (m, files) =>
-            val aDir = anchorDir(s, m, tag)
-            val anchored = listFilesUnder(s, aDir).toMap
-            if (anchored.isEmpty) Nil
-            else {
-              val shas = readAnchorShas(s, aDir)
-              files.sortBy(_._1)
-                .filter { case (p, l) => anchored.get(p).contains(l) }
-                .map { case (p, _) =>
-                  shas.get(p) match {
-                    case None => Left(s"$m/$p: anchored without a " +
-                      "recorded content hash (pre-hash anchor) — " +
-                      "deep audit cannot verify it")
-                    case Some(sha) =>
-                      Right((m, p, aDir.toString, sha))
-                  }
+      else verifyPins(s, manifest.toSeq.sortBy(_._1).flatMap {
+        case (m, files) =>
+          val aDir = anchorDir(s, m, tag)
+          val anchored = listFilesUnder(s, aDir).toMap
+          if (anchored.isEmpty) Nil
+          else {
+            val shas = readAnchorShas(s, aDir)
+            files.sortBy(_._1)
+              .filter { case (p, l) => anchored.get(p).contains(l) }
+              .map { case (p, _) =>
+                shas.get(p) match {
+                  case None => Left(s"$m/$p: anchored without a " +
+                    "recorded content hash (pre-hash anchor) — " +
+                    "deep audit cannot verify it")
+                  case Some(sha) =>
+                    Right(Pin(aDir.toString, p, sha, found =>
+                      s"$m/$p: anchor content mismatch (recorded md5 " +
+                        s"$sha, found $found — bit rot in the anchor, " +
+                        "possibly the pin's only copy); restore this " +
+                        "tag from a copy backup"))
                 }
-            }
-        }
-        // one distributed re-hash job over every anchored pin
-        val got = hashFilesDistributed(s,
-          gathered.collect { case Right((_, p, loc, _)) => (loc, p) })
-        gathered.flatMap {
-          case Left(msg) => Seq(msg)
-          case Right((m, p, loc, sha)) =>
-            if (got((loc, p)) == sha) Nil
-            else Seq(s"$m/$p: anchor content mismatch (recorded " +
-              s"md5 $sha, found ${got((loc, p))} — bit rot in the " +
-              "anchor, possibly the pin's only copy); restore this " +
-              "tag from a copy backup")
-        }
-      }
+              }
+          }
+      })
     fileProblems ++ copyProblems ++ deepProblems
   }
 

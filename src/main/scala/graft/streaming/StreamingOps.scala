@@ -1121,29 +1121,26 @@ object StreamingOps {
       .write.mode("overwrite").saveAsTable(marker)
   }
 
-  /** Where a group-marker entry lives now: a `table` row's table
-    * location, a `ck` row's directory; None when it is gone. */
-  private def entryRoot(spark: SparkSession, kind: String,
-      name: String): Option[org.apache.hadoop.fs.Path] =
-    if (kind == "table")
-      Some(name).filter(spark.catalog.tableExists)
-        .map(TextOps.tableLocation(spark, _))
-    else {
-      val path = new org.apache.hadoop.fs.Path(name)
-      Some(path).filter(_.getFileSystem(
-        spark.sparkContext.hadoopConfiguration).exists(path))
-    }
+  /** A checkpoint tree's root; None when it is gone. */
+  private def ckRoot(spark: SparkSession,
+      dir: String): Option[org.apache.hadoop.fs.Path] = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    Some(path).filter(_.getFileSystem(
+      spark.sparkContext.hadoopConfiguration).exists(path))
+  }
 
   /** READ-ONLY audit of a group copy backup: the group marker must
-    * exist, every state-table copy / checkpoint backup directory it
-    * records must still hold EXACTLY the files it committed with
-    * ((name, len) identity), every member family it records must
-    * still carry a family marker whose [[famFingerprint]] matches the
-    * committed one (src-insensitive, so a promote keeps the group
-    * green while an out-of-band family re-take under the tag is
-    * named), and no unrecorded copy may sit under the tag among the
-    * names the restore would resurrect as live members (ADVICE r16
-    * #1). All O(metadata), unless `deep`. Nil = restores as taken. */
+    * exist; its `table` and `ck` rows (state-table copies, checkpoint
+    * backup trees) take the family marker's row shape and go through
+    * the family audit's own shallow diff and deep re-hash
+    * ([[TextOps.checkBackupFiles]], [[TextOps.checkBackupDeep]]);
+    * every member family it records must still carry a family marker
+    * whose [[famFingerprint]] matches the committed one
+    * (src-insensitive, so a promote keeps the group green while an
+    * out-of-band family re-take under the tag is named), and no
+    * unrecorded copy may sit under the tag among the names the
+    * restore would resurrect as live members (ADVICE r16 #1). All
+    * O(metadata), unless `deep`. Nil = restores as taken. */
   private def checkGroupBackup(spark: SparkSession, g: IndexGroup,
       tag: String, deep: Boolean): Seq[String] = {
     val marker = g.marker(tag)
@@ -1154,19 +1151,23 @@ object StreamingOps {
           s"copies exist but no group marker $marker — the backup " +
             "crashed mid-group; re-take it"
         else s"no backup (no group marker $marker)")
-    val rawSha = spark.table(marker).collect()
-      .map(r => ((r.getString(0), r.getString(1)),
-        Option(r.getString(2)), r.getLong(3), r.getString(4)))
-    val fams = rawSha.collect { case (("fam", f), Some(hex), n, _) =>
-      (f, hex, n) }.toSeq
-    val recorded = rawSha.filterNot(_._1._1 == "fam")
-      .groupBy(_._1)
-      .map { case (k, rows) =>
-        k -> rows.flatMap(r => r._2.map(p => (p, r._3))).toSet
-      }
-    val recordedNames = recorded.keySet
-      .map { case (kind, n) => (kind, n.toLowerCase) } ++
-      fams.map { case (f, _, _) => ("fam", f.toLowerCase) }
+    val raw = spark.table(marker).collect().toSeq
+      .map(r => (r.getString(0), r.getString(1), Option(r.getString(2)),
+        r.getLong(3), Option(r.getString(4))))
+    val fams = raw.collect { case ("fam", f, Some(hex), n, _) =>
+      (f, hex, n) }
+    val entries = raw.filterNot(_._1 == "fam")
+    val recorded = entries
+      .map { case (_, n, p, l, sha) => (n, p, l, None, sha) }
+      .groupBy(_._1).toSeq.sortBy(_._1)
+    // a `ck` entry lives at its checkpoint tree, anything else at its
+    // table location — the group's `locate`, as in [[streamLocate]]
+    val ckCopies = g.streams.map(ckBak(spark, _, tag).toString)
+    val cks = (ckCopies ++ entries.collect { case ("ck", n, _, _, _) =>
+      n }).toSet
+    val locate = (n: String) =>
+      if (cks(n)) ckRoot(spark, n) else TextOps.locateTable(spark)(n)
+    val listed = TextOps.listedBy(spark, locate)
     val famProblems = fams.sortBy(_._1).flatMap { case (f, hex, n) =>
       val fm = s"${f}_bakok_$tag"
       if (!spark.catalog.tableExists(fm))
@@ -1182,76 +1183,20 @@ object StreamingOps {
           "the group")
       }
     }
-    val famExtras = g.families
-      .filterNot(f => recordedNames(("fam", f.toLowerCase)))
-      .flatMap { f =>
-        (f +: TextOps.BackupSiblings.map(f + _))
-          .map(m => s"${m}_bak_$tag")
-          .filter(spark.catalog.tableExists)
-          .map(c => s"$c: copy exists but its family is not in the " +
-            "group marker (restore would resurrect it as a member) — " +
-            "re-take the backup")
-      }
-    val tableExtras = g.stateTables.map(t => s"${t}_bak_$tag")
-      .filter(t => spark.catalog.tableExists(t) &&
-        !recordedNames(("table", t.toLowerCase)))
-      .map(t => s"$t: copy exists but is not in the group marker " +
-        "(restore would resurrect it as a member) — re-take the " +
-        "backup")
-    val ckExtras = g.streams.map(ckBak(spark, _, tag).toString)
-      .filter(p => entryRoot(spark, "ck", p).nonEmpty &&
-        !recordedNames(("ck", p.toLowerCase)))
-      .map(p => s"$p: checkpoint backup exists but is not in the " +
-        "group marker (restore would resurrect it) — re-take the " +
-        "backup")
-    // DEEP pass (opt-in, r17): re-hash every recorded state-table /
-    // checkpoint file against its take-time md5 — same-length bit
-    // rot inside a committed copy is invisible to the (name, len)
-    // identity above. Family members deep-audit via the per-family
-    // chain audit [[checkBackup]] appends. One distributed re-hash job
-    // ([[TextOps.hashFilesDistributed]] — the at-scale deep-read path).
-    val deepProblems =
-      if (!deep) Nil
-      else {
-        val gathered = rawSha.toSeq.filterNot(_._1._1 == "fam")
-          .collect { case ((kind, n), Some(p), _, sha) =>
-            (kind, n, p, sha) }
-          .sortBy(r => (r._2, r._3))
-          .flatMap { case (kind, n, p, sha) =>
-            entryRoot(spark, kind, n).toSeq
-              .filter(loc => loc.getFileSystem(
-                spark.sparkContext.hadoopConfiguration)
-                .exists(new org.apache.hadoop.fs.Path(loc, p)))
-              .map(loc => (n, p, loc.toString, sha))
-          }
-        val got = TextOps.hashFilesDistributed(spark,
-          gathered.map { case (_, p, loc, _) => (loc, p) })
-        gathered.flatMap { case (n, p, loc, h) =>
-          if (got((loc, p)) == h) Nil
-          else Seq(s"$n: $p content mismatch (recorded md5 $h, " +
-            s"found ${got((loc, p))} — bit rot or tamper at " +
-            "unchanged length); re-take the backup")
-        }
-      }
-    deepProblems ++ famProblems ++
-    recorded.toSeq.sortBy(_._1).flatMap { case ((kind, n), files) =>
-      entryRoot(spark, kind, n).map { loc =>
-        if (kind == "table") TextOps.listDataFiles(spark, n).toSet
-        else TextOps.listFilesUnder(spark, loc).toSet
-      } match {
-        case None =>
-          Seq(s"$n: recorded in the group marker but missing")
-        case Some(cur) =>
-          (files -- cur).toSeq.sorted.map { case (p, l) =>
-            s"$n: committed file $p ($l bytes) lost or changed " +
-              "since the backup"
-          } ++
-          (cur -- files).toSeq.sorted.map { case (p, _) =>
-            s"$n: file $p not in the group marker (written into " +
-              "the copy after commit?)"
-          }
-      }
-    } ++ famExtras ++ tableExtras ++ ckExtras
+    // the extras: copies of a family the marker does not record, and
+    // state-table / checkpoint copies it does not record
+    val recordedFams = fams.map(_._1.toLowerCase).toSet
+    val candidates = g.families
+      .filterNot(f => recordedFams(f.toLowerCase))
+      .flatMap(f => (f +: TextOps.BackupSiblings.map(f + _))
+        .map(m => s"${m}_bak_$tag")) ++
+      g.stateTables.map(t => s"${t}_bak_$tag") ++ ckCopies
+    TextOps.checkBackupFiles(tag, "group marker", recorded, listed) ++
+      famProblems ++
+      TextOps.unrecordedCopies("group marker", candidates,
+        recorded.map(_._1).toSet, locate(_).nonEmpty) ++
+      (if (deep) TextOps.checkBackupDeep(spark, tag, recorded, listed)
+      else Nil)
   }
 
   /** READ-ONLY audit of a group's `<tag>` copy backup
@@ -1375,7 +1320,7 @@ object StreamingOps {
       : String => Option[org.apache.hadoop.fs.Path] = {
     val cks = streams.map(n => ckDir(spark, n).getName -> n).toMap
     m => cks.get(m) match {
-      case Some(n) => entryRoot(spark, "ck", ckDir(spark, n).toString)
+      case Some(n) => ckRoot(spark, ckDir(spark, n).toString)
       case None => TextOps.locateTable(spark)(m)
     }
   }

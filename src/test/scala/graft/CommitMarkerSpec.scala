@@ -149,8 +149,8 @@ class CommitMarkerSpec extends AnyFunSuite with SparkSuite {
           .toDF("doc_id", "text"), t)
       TextOps.backupIndex(spark, t)
       assert(TextOps.checkBackup(spark, t) === Nil)
-      // damage the committed copy: delete one data file from the
-      // stats copy's location (the smallest member — one file)
+      // damage the committed copy: delete one data file (a bucket
+      // file) from the `_docs` copy's location
       val loc = new org.apache.hadoop.fs.Path(
         spark.conf.get("spark.sql.warehouse.dir"),
         s"${t}_docs_bak_bak".toLowerCase)

@@ -37,7 +37,13 @@ class GroupAuditSpec extends AnyFunSuite with SparkSuite {
     val base = s"ga_doc_p$pid"
     val t = s"${base}_bm25"
     val all = famAll(t) ++
-      Seq(s"${t}_docs", s"${base}_dbakok_bak", s"${base}_hashes_bak_bak")
+      Seq(s"${t}_docs", s"${base}_dbakok_bak", s"${base}_hashes_bak_bak",
+        s"${base}_ledger", s"${base}_ledger_bak_bak",
+        s"${base}_band_bak_bak")
+    val ckCopy = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"),
+      s"${base}_ck_bak_bak".toLowerCase)
+    val fs = ckCopy.getFileSystem(spark.sparkContext.hadoopConfiguration)
     drop(all: _*)
     try {
       val sp = spark
@@ -65,7 +71,44 @@ class GroupAuditSpec extends AnyFunSuite with SparkSuite {
         IndexGroup.documents(base)) === Nil)
       assert(StreamingOps.restore(spark, IndexGroup.documents(base))
         .exists(_.startsWith("restored ")))
-    } finally drop(all: _*)
+
+      // the group audit's other findings, one damage at a time, each
+      // named by its entry and healed before the next
+      val g = IndexGroup.documents(base)
+      def names(entry: String, finding: String): Unit = {
+        val v = StreamingOps.checkBackup(spark, g)
+        assert(v.exists(m => m.contains(entry) && m.contains(finding)),
+          v.toString)
+      }
+      // a recorded state-table copy dropped after commit
+      Seq(1L).toDF("batch_id").write.saveAsTable(s"${base}_ledger")
+      StreamingOps.backup(spark, g)
+      assert(StreamingOps.checkBackup(spark, g) === Nil)
+      drop(s"${base}_ledger_bak_bak")
+      names(s"${base}_ledger_bak_bak",
+        "recorded in the group marker but missing")
+      StreamingOps.backup(spark, g)
+      assert(StreamingOps.checkBackup(spark, g) === Nil)
+      // an unrecorded checkpoint backup tree (the stream never ran)
+      fs.mkdirs(ckCopy)
+      names(ckCopy.getName, "not in the group marker")
+      fs.delete(ckCopy, true)
+      // a copy of a family the group marker does not record (the
+      // band family did not exist at take time)
+      Seq(1L).toDF("doc_id").write.saveAsTable(s"${base}_band_bak_bak")
+      names(s"${base}_band_bak_bak", "not in the group marker")
+      drop(s"${base}_band_bak_bak")
+      // an out-of-band family re-take under the tag
+      TextOps.appendBm25Postings(
+        Seq(3L -> "late window join").toDF("doc_id", "text"), t)
+      TextOps.backupIndex(spark, t)
+      names(t, "family backup marker content changed")
+      StreamingOps.backup(spark, g)
+      assert(StreamingOps.checkBackup(spark, g) === Nil)
+    } finally {
+      if (fs.exists(ckCopy)) { fs.delete(ckCopy, true); () }
+      drop(all: _*)
+    }
   }
 
   test("dropping a stream backup tag sweeps a crashed backupCk " +

@@ -38,6 +38,17 @@ class StreamRestoreSpec extends AnyFunSuite with SparkSuite {
       .delete(ck, true)
   }
 
+  /** Flip the first byte of a file in place (same length). */
+  private def flipByte(p: org.apache.hadoop.fs.Path): Unit = {
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
+    val in = fs.open(p)
+    try in.readFully(0, bytes) finally in.close()
+    bytes(0) = (bytes(0) ^ 0x01).toByte
+    val out = fs.create(p, true)
+    try out.write(bytes) finally out.close()
+  }
+
   /** Full observable state of a table set: sorted row strings per
     * existing table, an ABSENT marker otherwise — so "member dropped
     * at restore" and "member identical after replay" are both one
@@ -86,6 +97,39 @@ class StreamRestoreSpec extends AnyFunSuite with SparkSuite {
         streaming.IndexGroup.documents(base))
       assert(written.exists(_.contains("_bm25_bak_bak")) &&
         written.exists(_.endsWith("_ck_bak_bak")), written.toString)
+
+      // checkpoint-row damage: a lost checkpoint file is named by the
+      // shallow audit and refused by restore; a same-length flip only
+      // by the deep audit. A fresh take heals each.
+      val g = streaming.IndexGroup.documents(base)
+      val ckCopy = new org.apache.hadoop.fs.Path(
+        written.find(_.endsWith(s"${base.toLowerCase}_ck_bak_bak")).get)
+      val fs = ckCopy.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def ckFile(): String = TextOps.listFilesUnder(spark, ckCopy)
+        .filter(_._2 > 0).map(_._1).sorted.head
+      val lost = ckFile()
+      fs.delete(new org.apache.hadoop.fs.Path(ckCopy, lost), false)
+      val shallow = streaming.StreamingOps.checkBackup(spark, g)
+      assert(shallow.exists(m => m.contains(ckCopy.getName) &&
+        m.contains(lost) && m.contains("lost or changed")),
+        shallow.toString)
+      val refused = intercept[IllegalArgumentException] {
+        streaming.StreamingOps.restore(spark, g)
+      }
+      assert(refused.getMessage.contains("integrity audit"),
+        refused.getMessage)
+      streaming.StreamingOps.backup(spark, g)
+      val flipped = ckFile()
+      flipByte(new org.apache.hadoop.fs.Path(ckCopy, flipped))
+      assert(streaming.StreamingOps.checkBackup(spark, g) === Nil,
+        "the shallow audit saw a same-length flip")
+      val deep = streaming.StreamingOps.checkBackup(spark, g, deep = true)
+      assert(deep.exists(m => m.contains(ckCopy.getName) &&
+        m.contains(flipped) && m.contains("content mismatch")),
+        deep.toString)
+      streaming.StreamingOps.backup(spark, g)
+      assert(streaming.StreamingOps.checkBackup(spark, g, deep = true)
+        === Nil)
 
       // post-snapshot life: second corpus file, a CDC upsert, a CDC
       // delete — every stream moves past the snapshot
